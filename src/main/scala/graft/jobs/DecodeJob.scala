@@ -5,6 +5,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.codec.{IntBlockCodec, StringBlockCodec}
 import graft.sources.{SnapshotStore, WebPage}
@@ -232,6 +233,15 @@ object DecodeJob {
   private def matchingKeysOf(blocksDf: org.apache.spark.sql.DataFrame,
                              predicates: Seq[BlockPredicate],
                              allowed: Option[Set[String]] = None): org.apache.spark.sql.DataFrame = {
+    requireValidPredicates(predicates, allowed)
+    predicates.map { p =>
+      blocksDf.where(col("column") === p.column && metaCond(p))
+        .select(col("part_id"), col("block_seq"))
+    }.reduce((a, c) => a.join(c, Seq("part_id", "block_seq")))
+  }
+
+  private def requireValidPredicates(predicates: Seq[BlockPredicate],
+                                     allowed: Option[Set[String]]): Unit = {
     require(predicates.nonEmpty, "no predicates")
     // a predicate naming a column the store does not have matches ZERO block
     // rows — the intersection would prune EVERYTHING and silently return
@@ -252,11 +262,68 @@ object DecodeJob {
           case p => p.column != "warc_ts" // string bounds are meaningless on an i64 column
         }, "warc_ts predicates must be TsRange")
     }
-    predicates.map { p =>
-      blocksDf.where(col("column") === p.column && metaCond(p))
-        .select(col("part_id"), col("block_seq"))
-    }.reduce((a, c) => a.join(c, Seq("part_id", "block_seq")))
   }
+
+  // ---------------- level 1: manifest part stats, on the driver ----------------
+
+  private def u8(s: String): UTF8String = UTF8String.fromString(s)
+
+  /** [[metaCond]] as a test of a part's rolled-up column stats (min of the
+    * blocks' mins, max of their maxes, dict union) instead of one block's
+    * metadata, with the same null-means-pass rule and Spark's string order
+    * (UTF-8 bytes). A part passes whenever ANY of its blocks could, because
+    * every part bound is no tighter than each block's — so level 1 never
+    * prunes a part holding a block that [[metaCond]] keeps. Literals are
+    * converted once per predicate: a runtime In-filter can carry thousands
+    * of values and the test runs once per part. */
+  private def statsTest(p: BlockPredicate): SnapshotStore.ColumnStats => Boolean = {
+    def le(a: Option[String], b: UTF8String) = a.forall(x => u8(x).compareTo(b) <= 0)
+    def ge(a: Option[String], b: UTF8String) = a.forall(x => u8(x).compareTo(b) >= 0)
+    def dictHas(s: SnapshotStore.ColumnStats)(f: UTF8String => Boolean) =
+      s.dict.forall(_.exists(v => f(u8(v))))
+    p match {
+      case StrEq(_, v) =>
+        val x = u8(v)
+        s => le(s.strMin, x) && ge(s.strMax, x) && dictHas(s)(_ == x)
+      case StrIn(_, vs) =>
+        val us = vs.map(u8)
+        val (lo, hi, set) = (us.min, us.max, us.toSet)
+        s => le(s.strMin, hi) && ge(s.strMax, lo) && dictHas(s)(set)
+      case StrPrefix(_, pre) =>
+        val x = u8(pre)
+        val succ = prefixSuccessor(pre).map(u8)
+        s => ge(s.strMax, x) && succ.forall(su => s.strMin.forall(u8(_).compareTo(su) < 0)) &&
+          dictHas(s)(_.startsWith(x))
+      case StrRange(_, lo, hi) =>
+        val (l, h) = (lo.map(u8), hi.map(u8))
+        s => h.forall(le(s.strMin, _)) && l.forall(ge(s.strMax, _)) &&
+          dictHas(s)(v => l.forall(v.compareTo(_) >= 0) && h.forall(v.compareTo(_) <= 0))
+      case TsRange(lo, hi) => s => s.min.forall(_ <= hi) && s.max.forall(_ >= lo)
+      case IntRange(_, lo, hi) => s => s.min.forall(_ <= hi) && s.max.forall(_ >= lo)
+    }
+  }
+
+  /** Level-1 survivors: the parts whose manifest stats admit ALL predicates
+    * (parts without stats, or without stats for a predicate's column, are
+    * unbounded and always survive). */
+  private[graft] def partsMayMatch(entries: Seq[SnapshotStore.PartEntry],
+      predicates: Seq[BlockPredicate]): Seq[SnapshotStore.PartEntry] = {
+    val tests = predicates.map(p => (p.column, statsTest(p)))
+    entries.filter(e => tests.forall { case (c, t) =>
+      e.stats.flatMap(_.columns.get(c)).forall(t) })
+  }
+
+  /** Level 1 is exact when every survivor is ONE block group with stats: its
+    * part stats are then that group's block metadata, so the survivors'
+    * `(part_id, 0)` are exactly the keys level 2 would collect — through the
+    * same gate, with no Spark job. Otherwise `level2` (the block-metadata
+    * job over the survivors only) plans the keys. */
+  private def twoLevelKeys(survivors: Seq[SnapshotStore.PartEntry],
+      totalGroupsEstimate: Long)(level2: => Option[Array[(Int, Int)]])
+      : Option[Array[(Int, Int)]] =
+    if (!survivors.forall(_.stats.exists(_.nGroups == 1))) level2
+    else if (survivors.size > keyCollectThreshold(totalGroupsEstimate)) None
+    else Some(survivors.iterator.map(e => (e.partId, 0)).toArray)
 
   /** Restrict a blocks scan to collected group keys: few → pushed part/seq
     * In-filters + codegen'd packed-key isin (row groups of pruned blocks are
@@ -301,7 +368,7 @@ object DecodeJob {
    * paying — the collect itself (and the broadcast built from it) becomes the
    * bottleneck. `private[jobs]` var so tests can force the ungated branch.
    */
-  private[graft] var MaxPrunedKeyCollect = 1000000 // private[graft]: part of the V2 key-plan memo key
+  private[graft] var MaxPrunedKeyCollect = 1000000
 
   /** Fraction of total groups above which pruning is skipped: past half the
     * groups the key filters buy little IO (survivors sit in ~every file) while
@@ -323,32 +390,45 @@ object DecodeJob {
     entries.map(e => math.max(1L, (e.nRows + EncodeJob.BlockSize - 1) / EncodeJob.BlockSize)).sum
 
   /**
-   * GATED planning of the pruned-group key set. The store is sized from the
-   * MANIFEST (one estimate, no extra Spark job); surviving keys are then
-   * fetched with `take(threshold + 1)`, so a NON-selective predicate never
-   * materializes an unbounded key list on the driver: past
-   * min([[MaxPrunedKeyCollect]], [[PruneFractionCutoff]]·total) the caller gets
-   * None and falls back to decode-everything + exact filter — identical rows by
-   * construction, no driver bottleneck at any table size. One metadata-only
-   * Spark job total.
+   * GATED two-level planning of the pruned-group key set over ONE pinned
+   * manifest read (`entries`). Level 1 runs on the driver: each part's
+   * manifest stats ([[SnapshotStore.PartStats]]) are tested against every
+   * predicate ([[partsMayMatch]]), and when every survivor is a single block
+   * group the survivors ARE the keys — no Spark job. Otherwise level 2 runs
+   * the column-pruned block-metadata job over the surviving parts only (parts
+   * committed without stats always survive, so pre-stats stores plan exactly
+   * as before). Either way the keys pass one gate: the store is sized from
+   * the MANIFEST, and past min([[MaxPrunedKeyCollect]],
+   * [[PruneFractionCutoff]]·total) surviving groups the caller gets None and
+   * falls back to decode-everything + exact filter — identical rows by
+   * construction, no unbounded driver collect at any table size.
    */
-  private[graft] def planPrunedKeys(blocksDf: org.apache.spark.sql.DataFrame,
+  private[graft] def planPrunedKeys(spark: SparkSession, root: String,
+                                    entries: Seq[SnapshotStore.PartEntry],
                                     predicates: Seq[BlockPredicate],
-                                    totalGroupsEstimate: Long,
-                                    allowed: Option[Set[String]] = None): Option[Array[(Int, Int)]] =
-    gatedKeyCollect(matchingKeysOf(blocksDf, predicates, allowed), totalGroupsEstimate)
+                                    allowed: Option[Set[String]] = None): Option[Array[(Int, Int)]] = {
+    requireValidPredicates(predicates, allowed)
+    val survivors = partsMayMatch(entries, predicates)
+    val total = estimatedGroups(entries)
+    twoLevelKeys(survivors, total)(gatedKeyCollect(
+      matchingKeysOf(fromEntries(spark, root, survivors), predicates, allowed),
+      keyCollectThreshold(total)))
+  }
 
-  /** The ONE driver-collect gate for every group-key planner ([[planPrunedKeys]],
-    * [[planTopNKeys]]): `take(threshold + 1)` so a non-selective plan never
-    * materializes an unbounded key list, None past
+  /** Surviving-group ceiling of the ONE driver-collect gate shared by every
+    * group-key planner ([[planPrunedKeys]], [[planTopNKeys]], both levels):
     * min([[MaxPrunedKeyCollect]], [[PruneFractionCutoff]]·total). Shared so a
     * future tuning cannot give the planners different pruning ceilings. */
+  private def keyCollectThreshold(totalGroupsEstimate: Long): Int =
+    math.min(MaxPrunedKeyCollect.toLong,
+      math.max(1L, (totalGroupsEstimate * PruneFractionCutoff).toLong)).toInt
+
+  /** Level-2 collect: `take(threshold + 1)` so a non-selective plan never
+    * materializes an unbounded key list; None past the threshold. */
   private def gatedKeyCollect(survivors: org.apache.spark.sql.DataFrame,
-                              totalGroupsEstimate: Long): Option[Array[(Int, Int)]] = {
+                              threshold: Int): Option[Array[(Int, Int)]] = {
     val spark = survivors.sparkSession
     import spark.implicits._
-    val threshold = math.min(MaxPrunedKeyCollect.toLong,
-      math.max(1L, (totalGroupsEstimate * PruneFractionCutoff).toLong)).toInt
     val keys = survivors.select($"part_id", $"block_seq").as[(Int, Int)]
       .take(threshold + 1)
     if (keys.length > threshold) None else Some(keys)
@@ -365,36 +445,90 @@ object DecodeJob {
    * via block_str_min/max, `warc_ts` via the exact int block_min/max): the
    * (part_id, block_seq) groups that can contain a row of the global
    * top-`limit` under the given ordering — an ordered PREFIX of the store's
-   * groups, found from block metadata alone. Sound with nulls: groups that may
+   * groups, found from metadata alone. Sound with nulls: groups that may
    * hold nulls (`n_nulls` > 0, or unknown on stores written before that column
    * existed) always survive when nulls sort first, and never count toward the
    * prefix quota when nulls sort last (their null rows cannot push a non-null
    * row out of the top-n).
    *
-   * Mechanics: a DISTRIBUTED sort of the manifest-scale block metadata by
-   * the prefix-establishing bound (far bound: max for ASC, min for DESC — a
-   * group's rows are all within the prefix ending at its far bound);
-   * the driver streams the sorted pairs partition-by-partition
-   * (`toLocalIterator`, so only the needed prefix is ever fetched) until the
-   * guaranteed-in-prefix row count reaches `limit`, yielding the threshold
-   * value `u`; survivors are then collected through the same gate as
-   * [[planPrunedKeys]]. None (caller scans everything — always sound) when the
-   * quota is unreachable from bounded groups, the threshold search exceeds
-   * [[MaxPrunedKeyCollect]] groups, or the survivor set does.
+   * Two levels, like [[planPrunedKeys]]: level 1 runs the prefix search below
+   * over the manifest's part stats on the driver and keeps the parts that can
+   * reach the prefix; if they are all single-group parts with stats those are
+   * the keys, else level 2 runs the same search over the survivors' block
+   * metadata ([[topNKeysOf]]). The part-level threshold is never below the
+   * block-level one (a part's far bound bounds all its blocks'), so level 1
+   * only drops parts level 2 would drop too. None (caller scans everything —
+   * always sound) when the quota is unreachable from bounded groups, the
+   * threshold search exceeds [[MaxPrunedKeyCollect]] groups, or the survivor
+   * set exceeds the collect gate.
    */
-  private[graft] def planTopNKeys(blocksDf: org.apache.spark.sql.DataFrame,
+  private[graft] def planTopNKeys(spark: SparkSession, root: String,
+                                  entries: Seq[SnapshotStore.PartEntry],
                                   column: String,
                                   asc: Boolean, nullsFirst: Boolean, limit: Int,
-                                  totalGroupsEstimate: Long,
                                   intBounds: Option[Boolean] = None): Option[Array[(Int, Int)]] = {
     require(limit > 0, s"pushed top-n limit must be positive, got $limit")
+    val isTs = topNIsInt(column, intBounds)
+    // a part's near and far bound in the query's order (None = unbounded):
+    // min/max for ASC, max/min for DESC, over the column's int or string stats
+    val ord: Ordering[Any] =
+      if (isTs) Ordering.Long.asInstanceOf[Ordering[Any]]
+      else Ordering.by[Any, UTF8String](v => u8(v.asInstanceOf[String]))
+    val dir = if (asc) ord else ord.reverse
+    def lo(s: SnapshotStore.ColumnStats): Option[Any] = if (isTs) s.min else s.strMin
+    def hi(s: SnapshotStore.ColumnStats): Option[Any] = if (isTs) s.max else s.strMax
+    def near(s: SnapshotStore.ColumnStats) = if (asc) lo(s) else hi(s)
+    def far(s: SnapshotStore.ColumnStats) = if (asc) hi(s) else lo(s)
+    val colStats = entries.map(e => e -> e.stats.flatMap(_.columns.get(column)))
+    // a part's rows guaranteed to sort within the prefix ending at its far
+    // bound (see topNKeysOf); part stats always carry the exact null count
+    val ordered = colStats.iterator.flatMap { case (e, so) =>
+      so.flatMap(s => far(s).map(_ -> (if (nullsFirst) e.nRows else e.nRows - s.nNulls)))
+    }.toSeq.sortBy(_._1)(dir)
+    var u: Any = null
+    var acc = 0L
+    val it = ordered.iterator.take(MaxPrunedKeyCollect)
+    while (u == null && it.hasNext) {
+      val (b, c) = it.next()
+      acc += c
+      if (acc >= limit) u = b
+    }
+    val survivors =
+      if (u == null) entries // quota unreachable from part stats: level 2 decides
+      else colStats.collect {
+        case (e, so) if so.flatMap(near).forall(dir.lteq(_, u)) ||
+            (nullsFirst && so.forall(_.nNulls > 0)) => e
+      }
+    val total = estimatedGroups(entries)
+    twoLevelKeys(survivors, total)(topNKeysOf(fromEntries(spark, root, survivors),
+      column, asc, nullsFirst, limit, total, Some(isTs)))
+  }
+
+  private def topNIsInt(column: String, intBounds: Option[Boolean]): Boolean =
     // webtext callers omit intBounds (derived from the fixed schema);
     // generalized-schema callers pass the column's kind explicitly
-    val isTs = intBounds.getOrElse {
+    intBounds.getOrElse {
       require(TopNColumns(column),
         s"top-n planning needs a metadata-bounded column ($TopNColumns), got $column")
       column == "warc_ts"
     }
+
+  /**
+   * Level 2 of [[planTopNKeys]] over a blocks scan. Mechanics: a DISTRIBUTED
+   * sort of the manifest-scale block metadata by the prefix-establishing
+   * bound (far bound: max for ASC, min for DESC — a group's rows are all
+   * within the prefix ending at its far bound); the driver streams the sorted
+   * pairs partition-by-partition (`toLocalIterator`, so only the needed prefix
+   * is ever fetched) until the guaranteed-in-prefix row count reaches
+   * `limit`, yielding the threshold value `u`; survivors are then collected
+   * through the planners' shared gate.
+   */
+  private[graft] def topNKeysOf(blocksDf: org.apache.spark.sql.DataFrame,
+                                column: String,
+                                asc: Boolean, nullsFirst: Boolean, limit: Int,
+                                totalGroupsEstimate: Long,
+                                intBounds: Option[Boolean] = None): Option[Array[(Int, Int)]] = {
+    val isTs = topNIsInt(column, intBounds)
     val spark = blocksDf.sparkSession
     import spark.implicits._
     val nn = if (blocksDf.columns.contains("n_nulls")) col("n_nulls").cast("long")
@@ -431,7 +565,7 @@ object DecodeJob {
       if (asc) col("mn").isNull || col("mn") <= lit(u)
       else col("mx").isNull || col("mx") >= lit(u)
     val survivor = if (nullsFirst) within || col("nn").isNull || col("nn") > 0 else within
-    gatedKeyCollect(meta.where(survivor), totalGroupsEstimate)
+    gatedKeyCollect(meta.where(survivor), keyCollectThreshold(totalGroupsEstimate))
   }
 
   /**
@@ -454,7 +588,7 @@ object DecodeJob {
     val entries = SnapshotStore.currentEntries(root)
     val blocksDf = fromEntries(spark, root, entries)
     val exact = predicates.map(rowCond).reduce(_ && _)
-    planPrunedKeys(blocksDf, predicates, estimatedGroups(entries)) match {
+    planPrunedKeys(spark, root, entries, predicates) match {
       case Some(keys) => reassemble(spark, keysOnly(blocksDf, keys)).filter(exact)
       // non-selective predicate: pruning can't pay — decode everything and
       // filter exactly (identical rows; no driver-side key materialization)
@@ -482,7 +616,7 @@ object DecodeJob {
     val blocksDf = fromEntries(spark, root, entries)
     val effective = (wanted ++ predicates.map(_.column)).distinct
     val colFiltered = blocksDf.where(col("column").isin(effective: _*))
-    val filtered = planPrunedKeys(blocksDf, predicates, estimatedGroups(entries)) match {
+    val filtered = planPrunedKeys(spark, root, entries, predicates) match {
       case Some(keys) => keysOnly(colFiltered, keys)
       case None => colFiltered // non-selective: column pruning only (see decodeWhere)
     }

@@ -171,23 +171,35 @@ object EncodeJob {
         sample.foreach(u => candidates += ((u, w)))
       }
     }
-    val sorted = candidates.sortBy(_._1)
-    val step = eligibleTotal.toDouble / parts
-    val bounds = new scala.collection.mutable.ArrayBuffer[String](parts - 1)
+    (total, parts, weightedQuantiles(candidates.sortBy(_._1).toArray,
+      eligibleTotal.toDouble, parts))
+  }
+
+  /** The `parts - 1` weighted quantiles of url-sorted (url, weight)
+    * candidates: for each target `j * total / parts`, the first candidate
+    * whose cumulative weight reaches it. A heavy candidate can cross several
+    * targets at once; all of them are consumed by that one boundary, so the
+    * next boundary lands at the next unreached quantile instead of on the
+    * following candidates (which would bunch boundaries and leave the last
+    * bucket holding the rest). Equal urls yield one boundary. */
+  private[graft] def weightedQuantiles(sorted: Array[(String, Double)], total: Double,
+                                       parts: Int): Array[String] = {
+    val step = total / parts
+    val bounds = new scala.collection.mutable.ArrayBuffer[String](math.max(parts - 1, 0))
     var cum = 0.0
-    var target = step
+    var j = 1 // next unreached quantile: target j * step, j < parts
     var last: String = null
     var i = 0
-    while (i < sorted.length && bounds.length < parts - 1) {
+    while (i < sorted.length && j < parts) {
       cum += sorted(i)._2
-      if (cum >= target) {
+      if (cum >= j * step) {
         val u = sorted(i)._1
         if (last == null || u.compareTo(last) > 0) { bounds += u; last = u }
-        target += step
+        while (j < parts && cum >= j * step) j += 1
       }
       i += 1
     }
-    (total, parts, bounds.toArray)
+    bounds.toArray
   }
 
   /** Boundary computation over a bare url column — shared by the batch job
@@ -484,27 +496,15 @@ object EncodeJob {
       .option("compression", "uncompressed").parquet(absDir)
     val secs = (System.nanoTime() - jt0) / 1e9
 
-    // lineage + metrics rollup from the staged files (no recompute, no driver
-    // loops). Two-level: first per (part_id, column) — a multi-block part can
-    // pick DIFFERENT codecs for the same column per block, so codecs must be
-    // deduped per column BEFORE map_from_entries (a duplicate map key throws
-    // DUPLICATED_MAP_KEY at runtime and would abort the wave after staging)
+    // lineage + metrics + planning-stats rollup from the staged files' block
+    // metadata (`encoded` is never read): one job, no shuffle — each split
+    // folds its blocks per part through the writers' shared fold, and the
+    // driver merges a part's partials when its blocks span splits
     val staged = spark.read.parquet(absDir)
-    val perColumn = staged.groupBy($"part_id", $"column").agg(
-      sum($"n").as("col_n"),
-      sum($"orig_bytes").as("col_orig"),
-      sum($"enc_bytes").as("col_enc"),
-      array_join(array_sort(collect_set($"codec")), "+").as("codec"))
-    val perPart = perColumn.groupBy($"part_id").agg(
-      max(when($"column" === "url", $"col_n").otherwise(0L)).as("n_rows"),
-      sum($"col_orig").as("orig_bytes"),
-      sum($"col_enc").as("enc_bytes"),
-      to_json(map_from_entries(collect_list(struct($"column", $"codec")))).as("codecs"))
-      .collect()
-    val entries = perPart.map { r =>
-      SnapshotStore.PartEntry(r.getAs[Int]("part_id"), relDir, r.getAs[Long]("n_rows"),
-        r.getAs[Long]("orig_bytes"), r.getAs[Long]("enc_bytes"), r.getAs[String]("codecs"))
-    }.toSeq
+      .withColumn("encoded", lit(null).cast("binary")).as[BlockRow]
+    val entries = staged.rdd.mapPartitions(PartRollup.foldByPart).collect()
+      .groupMapReduce(_._1)(_._2)(_ merge _)
+      .toSeq.sortBy(_._1).map { case (pid, r) => r.entry(pid, relDir) }
     (relDir, entries, secs)
   }
 

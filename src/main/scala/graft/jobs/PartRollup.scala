@@ -1,0 +1,101 @@
+package graft.jobs
+
+import scala.collection.immutable.TreeSet
+
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.sources.SnapshotStore.{ColumnStats, PartEntry, PartStats}
+
+/**
+ * THE fold from one part's block metadata to its manifest entry: row count,
+ * original/encoded bytes, per-column codec names, and the per-part planning
+ * [[PartStats]] (block-group count; per column min of `block_min`, max of
+ * `block_max`, the same over `block_str_min/max`, summed `n_nulls`, and the
+ * union of `block_str_dict`). Both writers commit through it: the V2 writer
+ * task folds its own blocks as it flushes them and ships the resulting entry
+ * in its commit message, and [[EncodeJob.stageEncode]] folds the staged block
+ * metadata per file split, merging the partial rollups on the driver. The
+ * fold is a commutative monoid, so split boundaries cannot change the result.
+ */
+final class PartRollup extends Serializable {
+  private var cols = Map.empty[String, PartRollup.ColFold]
+
+  def add(b: BlockRow): this.type = {
+    val f = PartRollup.ColFold.of(b)
+    cols = cols.updated(b.column, cols.get(b.column).fold(f)(_ ++ f))
+    this
+  }
+
+  def merge(o: PartRollup): this.type = {
+    o.cols.foreach { case (c, f) => cols = cols.updated(c, cols.get(c).fold(f)(_ ++ f)) }
+    this
+  }
+
+  /** Every column carries every row of the part, one block per group. */
+  def nRows: Long = cols.valuesIterator.map(_.rows).maxOption.getOrElse(0L)
+
+  def entry(partId: Int, dataDir: String): PartEntry = {
+    val codecs = new java.util.TreeMap[String, String]()
+    cols.foreach { case (c, f) => codecs.put(c, f.codecs.mkString("+")) }
+    PartEntry(partId, dataDir, nRows,
+      cols.valuesIterator.map(_.orig).sum, cols.valuesIterator.map(_.enc).sum,
+      PartRollup.Json.writeValueAsString(codecs),
+      Some(PartStats(cols.valuesIterator.map(_.blocks).maxOption.getOrElse(0L).toInt,
+        cols.flatMap { case (c, f) => f.stats.map(c -> _) })))
+  }
+}
+
+object PartRollup {
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Spark's string order (unsigned UTF-8 bytes), which block bounds and
+    * the block-metadata predicates use — not String.compareTo's UTF-16 order. */
+  private val Utf8Order: Ordering[String] =
+    (a: String, b: String) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+
+  /** Both sides known, else unknown: one block without a bound makes the
+    * part's bound absent. */
+  private def both[T](a: Option[T], b: Option[T])(f: (T, T) => T): Option[T] =
+    for (x <- a; y <- b) yield f(x, y)
+
+  private[jobs] final case class ColFold(
+      blocks: Long, rows: Long, nulls: Long, orig: Long, enc: Long,
+      codecs: TreeSet[String],
+      min: Option[Long], max: Option[Long],
+      strMin: Option[String], strMax: Option[String],
+      dict: Option[TreeSet[String]]) {
+
+    def ++(o: ColFold): ColFold = ColFold(
+      blocks + o.blocks, rows + o.rows, nulls + o.nulls, orig + o.orig, enc + o.enc,
+      codecs ++ o.codecs,
+      both(min, o.min)(math.min), both(max, o.max)(math.max),
+      both(strMin, o.strMin)(Utf8Order.min), both(strMax, o.strMax)(Utf8Order.max),
+      both(dict, o.dict)(_ ++ _).filter(_.size <= PartStats.MaxDictValues))
+
+    /** None when no bound of any kind survived: the column is unbounded. */
+    def stats: Option[ColumnStats] = {
+      def short(s: Option[String]) = s.filter(_.length <= PartStats.MaxStringBound)
+      val cs = ColumnStats(min, max, short(strMin), short(strMax), nulls,
+        dict.filter(_.forall(_.length <= PartStats.MaxStringBound)).map(_.toVector))
+      if (cs.min.isEmpty && cs.max.isEmpty && cs.strMin.isEmpty && cs.strMax.isEmpty &&
+          cs.dict.isEmpty) None
+      else Some(cs)
+    }
+  }
+
+  private[jobs] object ColFold {
+    def of(b: BlockRow): ColFold = ColFold(1L, b.n.toLong, b.n_nulls.toLong,
+      b.orig_bytes, b.enc_bytes, TreeSet(b.codec.split('+').toSeq: _*),
+      b.block_min, b.block_max, b.block_str_min, b.block_str_max,
+      b.block_str_dict.map(vs => TreeSet(vs.toSeq: _*)(Utf8Order))
+        .filter(_.size <= PartStats.MaxDictValues))
+  }
+
+  /** Fold one stream of blocks into per-part rollups (a file split's worth:
+    * a part may span splits, callers [[merge]] the partials by part id). */
+  def foldByPart(blocks: Iterator[BlockRow]): Iterator[(Int, PartRollup)] = {
+    val byPart = scala.collection.mutable.HashMap.empty[Int, PartRollup]
+    blocks.foreach(b => byPart.getOrElseUpdate(b.part_id, new PartRollup).add(b))
+    byPart.iterator
+  }
+}

@@ -15,78 +15,135 @@ import scala.jdk.CollectionConverters._
  *   manifests/<snapshotId>.jsonl       — full manifest: one line per committed part
  *   SNAPSHOT                           — pointer file, swapped atomically (tmp+rename)
  *
+ * A manifest line is one JSON object ([[PartEntry]]):
+ * {{{
+ * {"part_id":3,"data_dir":"data/<uuid>","n_rows":2500,"orig_bytes":..,"enc_bytes":..,
+ *  "stats":{"n_groups":1,"columns":{
+ *     "url":{"n_nulls":0,"str_min":"https://a/","str_max":"https://b/"},
+ *     "warc_ts":{"n_nulls":0,"min":1700000000000000,"max":1700000999000000},
+ *     "lang":{"n_nulls":0,"str_min":"de","str_max":"ru","str_dict":["de","en","ru"]}}},
+ *  "codecs":{"url":"str_fsst","warc_ts":"delta(eg(k=3))"}}
+ * }}}
+ * `stats` ([[PartStats]]) is optional: lines written before it existed parse
+ * to `stats = None`, which planning reads as unbounded. Inside it every
+ * bound, `str_dict`, and a whole column may be absent, each meaning
+ * unbounded. Strings are JSON-escaped, so bounds may hold any text.
+ *
  * A killed job leaves at most an orphaned data dir (never referenced by any
  * manifest): re-running resumes from the last committed snapshot's part set.
  */
 object SnapshotStore {
 
-  /** Per-partition lineage row (one work unit == one part_id). */
+  /** Manifest rollup of one column's block metadata over a part (see
+    * [[PartStats]]). Each bound is None when ANY block of the part lacks it
+    * (or a string bound is longer than [[PartStats.MaxStringBound]]), and
+    * None always reads as unbounded. `nNulls` is the exact sum of the
+    * blocks' `n_nulls`; `dict` the union of the blocks' `block_str_dict`,
+    * kept only while it has at most [[PartStats.MaxDictValues]] values. */
+  final case class ColumnStats(
+      min: Option[Long] = None,
+      max: Option[Long] = None,
+      strMin: Option[String] = None,
+      strMax: Option[String] = None,
+      nNulls: Long = 0L,
+      dict: Option[Seq[String]] = None)
+
+  /** Per-part planning stats rolled up at commit time from the part's block
+    * metadata ([[graft.jobs.PartRollup]]): the part's block-group count and,
+    * per column whose blocks carry bounds, the [[ColumnStats]]. Lets the
+    * driver prune whole parts from the manifest before any block file is
+    * read (level 1 of [[graft.jobs.DecodeJob.planPrunedKeys]]). */
+  final case class PartStats(nGroups: Int, columns: Map[String, ColumnStats])
+
+  object PartStats {
+    /** Longer string bounds are not stored: long `text` never enters the
+      * manifest, and an absent bound reads as unbounded (sound). */
+    val MaxStringBound = 256
+    val MaxDictValues = 64
+  }
+
+  /** Per-partition lineage row (one work unit == one part_id). `stats` is
+    * None on entries committed before per-part stats existed: no stats =
+    * unbounded, so such parts always survive manifest-level pruning. */
   final case class PartEntry(
       partId: Int,
       dataDir: String, // relative to root
       nRows: Long,
       origBytes: Long,
       encBytes: Long,
-      codecsJson: String)
+      codecsJson: String,
+      stats: Option[PartStats] = None)
 
-  private def q(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  /** Exact inverse of [[q]]'s escaping (\" \\ \n \uXXXX). */
-  private def unescape(v: String): String = {
-    if (v.indexOf('\\') < 0) return v
-    val sb = new StringBuilder(v.length)
-    var i = 0
-    while (i < v.length) {
-      val c = v.charAt(i)
-      if (c == '\\' && i + 1 < v.length) {
-        v.charAt(i + 1) match {
-          case 'n' => sb.append('\n'); i += 2
-          case 'u' if i + 5 < v.length =>
-            sb.append(Integer.parseInt(v.substring(i + 2, i + 6), 16).toChar); i += 6
-          case other => sb.append(other); i += 2 // \" and \\
+  /** One manifest line (format: see the object doc). */
+  private def entryToJson(e: PartEntry): String = {
+    val w = new java.io.StringWriter(256)
+    val g = Json.getFactory.createGenerator(w)
+    g.writeStartObject()
+    g.writeNumberField("part_id", e.partId)
+    g.writeStringField("data_dir", e.dataDir)
+    g.writeNumberField("n_rows", e.nRows)
+    g.writeNumberField("orig_bytes", e.origBytes)
+    g.writeNumberField("enc_bytes", e.encBytes)
+    e.stats.foreach { s =>
+      g.writeObjectFieldStart("stats")
+      g.writeNumberField("n_groups", s.nGroups)
+      g.writeObjectFieldStart("columns")
+      s.columns.toSeq.sortBy(_._1).foreach { case (c, cs) =>
+        g.writeObjectFieldStart(c)
+        g.writeNumberField("n_nulls", cs.nNulls)
+        cs.min.foreach(g.writeNumberField("min", _))
+        cs.max.foreach(g.writeNumberField("max", _))
+        cs.strMin.foreach(g.writeStringField("str_min", _))
+        cs.strMax.foreach(g.writeStringField("str_max", _))
+        cs.dict.foreach { vs =>
+          g.writeArrayFieldStart("str_dict")
+          vs.foreach(g.writeString)
+          g.writeEndArray()
         }
-      } else { sb.append(c); i += 1 }
+        g.writeEndObject()
+      }
+      g.writeEndObject()
+      g.writeEndObject()
     }
-    sb.toString
+    g.writeFieldName("codecs")
+    g.writeRawValue(e.codecsJson)
+    g.writeEndObject()
+    g.close()
+    w.toString
   }
 
-  private def entryToJson(e: PartEntry): String =
-    s"""{"part_id":${e.partId},"data_dir":${q(e.dataDir)},"n_rows":${e.nRows},""" +
-    s""""orig_bytes":${e.origBytes},"enc_bytes":${e.encBytes},"codecs":${e.codecsJson}}"""
-
-  // precompiled per-field patterns: parseEntry runs once per manifest LINE,
-  // and manifests are re-parsed on every commit/plan/stream batch/expiry — a
-  // 100k-part manifest must not pay 500k Pattern.compile calls per read
-  private val PartIdRe = "\"part_id\":(-?\\d+)".r
-  private val NRowsRe = "\"n_rows\":(-?\\d+)".r
-  private val OrigBytesRe = "\"orig_bytes\":(-?\\d+)".r
-  private val EncBytesRe = "\"enc_bytes\":(-?\\d+)".r
-  private val DataDirRe = "\"data_dir\":\"((?:[^\"\\\\]|\\\\.)*)\"".r
+  private def parseStats(n: com.fasterxml.jackson.databind.JsonNode): PartStats = {
+    val columns = n.path("columns").properties().asScala.iterator.map { c =>
+      val v = c.getValue
+      def long(k: String) = Option(v.get(k)).filter(_.isIntegralNumber).map(_.asLong)
+      def str(k: String) = Option(v.get(k)).filter(_.isTextual).map(_.asText)
+      c.getKey -> ColumnStats(long("min"), long("max"), str("str_min"), str("str_max"),
+        v.path("n_nulls").asLong(0L),
+        Option(v.get("str_dict")).filter(_.isArray)
+          .map(_.elements().asScala.map(_.asText).toVector))
+    }.toMap
+    PartStats(n.path("n_groups").asInt(0), columns)
+  }
 
   private def parseEntry(line: String): PartEntry = {
     // fields are writer-controlled; the one corruption shape worth guarding is
     // a TRUNCATED line (partial write by a pre-atomic-manifest version, or
     // filesystem damage): defaulting its missing fields to 0/"" would read the
-    // store ROOT as a data dir and return silently wrong rows — fail loudly
-    require(line.contains("\"part_id\"") && line.contains("\"data_dir\""),
-      s"corrupt manifest line (truncated write?): '${line.take(200)}'")
-    def longField(re: scala.util.matching.Regex): Long =
-      re.findFirstMatchIn(line).map(_.group(1).toLong).getOrElse(0L)
-    val dataDir = DataDirRe.findFirstMatchIn(line)
-      .map(g => unescape(g.group(1))).getOrElse("")
-    val codecs = {
-      val i = line.indexOf("\"codecs\":")
-      if (i < 0) "{}" else line.substring(i + 9, line.length - 1)
-    }
-    PartEntry(longField(PartIdRe).toInt, dataDir, longField(NRowsRe),
-      longField(OrigBytesRe), longField(EncBytesRe), codecs)
+    // store ROOT as a data dir and return silently wrong rows — fail loudly.
+    // A real JSON parse: string content (bounds, dirs) may hold quotes,
+    // backslashes, or a literal `"codecs":`
+    def corrupt(cause: Throwable) = new IllegalArgumentException(
+      s"corrupt manifest line (truncated write?): '${line.take(200)}'", cause)
+    val n = try Json.readTree(line)
+      catch { case e: com.fasterxml.jackson.core.JsonProcessingException => throw corrupt(e) }
+    if (n == null || !n.isObject || !n.has("part_id") || !n.has("data_dir")) throw corrupt(null)
+    PartEntry(n.path("part_id").asInt, n.path("data_dir").asText,
+      n.path("n_rows").asLong(0L), n.path("orig_bytes").asLong(0L),
+      n.path("enc_bytes").asLong(0L),
+      Option(n.get("codecs")).map(_.toString).getOrElse("{}"),
+      Option(n.get("stats")).filter(_.isObject).map(parseStats))
   }
 
   def snapshotPointer(root: String): Path = Paths.get(root, "SNAPSHOT")
@@ -286,7 +343,9 @@ object SnapshotStore {
     * partId, dataDir, nRows, origBytes, encBytes, codecsJson. Manifest-sized —
     * one row per committed work unit. */
   def lineage(spark: org.apache.spark.sql.SparkSession, root: String): org.apache.spark.sql.DataFrame =
-    spark.createDataFrame(currentEntries(root))
+    spark.createDataFrame(currentEntries(root).map(e =>
+      (e.partId, e.dataDir, e.nRows, e.origBytes, e.encBytes, e.codecsJson)))
+      .toDF("partId", "dataDir", "nRows", "origBytes", "encBytes", "codecsJson")
 
   final case class ExpireResult(kept: Seq[Long], removedSnapshots: Seq[Long],
       removedDataDirs: Seq[String], removedBytes: Long)

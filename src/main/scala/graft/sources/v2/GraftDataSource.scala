@@ -52,9 +52,12 @@ import graft.sources.SnapshotStore
  *    evaluate on the decoded rows: results are exact regardless of metadata.
  *
  * Planning runs on the driver (Iceberg-style): one manifest read pins the
- *  snapshot, a metadata-only Spark scan sizes the surviving group-key set, and
- *  the selectivity gate of [[DecodeJob.planPrunedKeys]] drops pruning entirely
- *  when the predicate is not selective — no unbounded driver collect. Each
+ *  snapshot, then [[DecodeJob.planPrunedKeys]] / [[DecodeJob.planTopNKeys]]
+ *  prune in two levels — level 1 tests the manifest's per-part stats on the
+ *  driver (single-group survivors are the keys, with no Spark job), level 2
+ *  runs the block-metadata job over the surviving parts only when it can
+ *  prune more — and their selectivity gate drops pruning entirely when the
+ *  predicate is not selective — no unbounded driver collect. Each
  *  [[InputPartition]] is one block parquet file; groups never straddle files
  *  (each encode task writes its groups whole), so the reader assembles
  *  consecutive records with zero shuffle — the same layout invariant as
@@ -189,28 +192,6 @@ object GraftDataSource {
       val token = mtime * 1000003L ^ (if (fk == null) 0L else fk.hashCode().toLong << 21)
       if (token == -1L) -2L else token // keep -1 reserved for "no pointer"
     } catch { case _: java.io.IOException => -1L }
-
-  /** Snapshot-immutable key-plan memo (r7): the pruned/top-n group-key
-    * computation ([[DecodeJob.planPrunedKeys]] / [[DecodeJob.planTopNKeys]])
-    * is a pure function of (store snapshot, predicates, top-n), yet each new
-    * scan re-ran its metadata Spark job (a per-invocation planning cost on
-    * every selective or top-n query). Keyed by (root, identity token,
-    * snapshot/incremental scope, predicates, top-n); bounded LRU. The
-    * per-scan broadcast lifecycle is unchanged — only the driver-side key
-    * ARRAY is shared. */
-  private val keyPlanMemo =
-    new java.util.LinkedHashMap[AnyRef, Option[Array[(Int, Int)]]](32, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[AnyRef, Option[Array[(Int, Int)]]]): Boolean = size > 256
-    }
-
-  private[v2] def memoizedKeyPlan(key: AnyRef)(
-      compute: => Option[Array[(Int, Int)]]): Option[Array[(Int, Int)]] = {
-    keyPlanMemo.synchronized { if (keyPlanMemo.containsKey(key)) return keyPlanMemo.get(key) }
-    val computed = compute // outside the lock: the metadata scan is a Spark job
-    keyPlanMemo.synchronized { keyPlanMemo.put(key, computed); () }
-    computed
-  }
 
   /** Per-task parquet In-filter value budget: row-group stats evaluation of an
     * In probes the value set per row group, so a huge set costs more than the
@@ -823,6 +804,21 @@ object GraftAggReaderFactory extends PartitionReaderFactory {
     }
 }
 
+/**
+ * The batch scan. It reads the manifest ONCE and pins those entries for
+ * statistics, planning and execution. Pruning is planned in two levels from
+ * the pinned entries ([[DecodeJob.planPrunedKeys]] for pushed and runtime
+ * predicates, [[DecodeJob.planTopNKeys]] for a filterless top-n):
+ *  1. on the driver, each part's manifest stats (per-column bounds, null
+ *     count, small dict) drop the parts no predicate can match; when every
+ *     survivor is one block group, its `(part_id, 0)` are the keys and no
+ *     Spark job runs;
+ *  2. otherwise a column-pruned block-metadata job over the surviving parts
+ *     only picks the surviving groups.
+ * Parts committed before per-part stats existed are unbounded at level 1, so
+ * such stores plan through level 2 exactly as before. The keys ride one
+ * broadcast; every file bin reads only its own parts' keys.
+ */
 final class GraftScan(root: String, snapshotId: Option[Long],
                       requiredSchema: StructType,
                       initialPredicates: Seq[DecodeJob.BlockPredicate],
@@ -879,15 +875,10 @@ final class GraftScan(root: String, snapshotId: Option[Long],
     * planInputPartitions (execution, possibly twice around runtime filters)
     * must all describe the SAME snapshot — re-reading let a commit landing
     * between them skew the optimizer's stats against the scanned data, and
-    * re-parsed a 100k-part manifest per call. */
-  private lazy val pinnedEntriesAndToken: (Seq[SnapshotStore.PartEntry], Long) = {
-    // the identity token is read BEFORE and AFTER the manifest walk: a commit
-    // landing between them means the entries may not belong to the token, so
-    // the scan marks itself non-memoizable (-1) rather than cache a plan
-    // computed from one snapshot's entries under another snapshot's key
-    // (review finding: pin-time vs plan-time token race -> silent stale keys)
-    val t0 = GraftDataSource.storeIdentityToken(root)
-    val entries: Seq[SnapshotStore.PartEntry] = incremental match {
+    * re-parsed a 100k-part manifest per call. The pinned entries carry the
+    * per-part stats level-1 planning prunes with. */
+  private lazy val pinnedEntries: Seq[SnapshotStore.PartEntry] =
+    incremental match {
       // incremental read: the parts ADDED in (from, to] — the same additions-
       // changelog walk as the streaming reader, planned once per scan; every
       // downstream stage (pruning, projection, limit/top-n, runtime filtering)
@@ -903,11 +894,6 @@ final class GraftScan(root: String, snapshotId: Option[Long],
         case None => SnapshotStore.currentEntries(root)
       }
     }
-    val t1 = GraftDataSource.storeIdentityToken(root)
-    (entries, if (t0 == t1) t0 else -1L)
-  }
-
-  private lazy val pinnedEntries: Seq[SnapshotStore.PartEntry] = pinnedEntriesAndToken._1
 
   private def snapshotEntries(): Seq[SnapshotStore.PartEntry] = pinnedEntries
 
@@ -929,33 +915,19 @@ final class GraftScan(root: String, snapshotId: Option[Long],
       : (Option[Array[(Int, Int)]], org.apache.spark.broadcast.Broadcast[Array[Long]]) =
     planLock.synchronized {
       if (cachedPreds != null && cachedPreds == preds) return (cachedKeys, cachedKeysBc)
-      // r7: the key plan is a pure function of the (immutable) snapshot +
-      // predicates + top-n — memoized across SCANS, not just within one, so a
-      // re-planned or re-run query skips the metadata Spark job entirely.
-      // The token is the one captured WITH the pinned entries (a commit racing
-      // the pin marks it -1 = compute without caching); the two planning gates
-      // are test-mutable vars, included so a key computed under altered gates
-      // can never serve a default-gate scan.
-      val pinnedToken = pinnedEntriesAndToken._2
-      def compute(): Option[Array[(Int, Int)]] =
+      val keysOpt: Option[Array[(Int, Int)]] =
         if (preds.nonEmpty)
-          DecodeJob.planPrunedKeys(DecodeJob.fromEntries(spark, root, entries), preds,
-            DecodeJob.estimatedGroups(entries), Some(tableSchema.fieldNames.toSet))
+          DecodeJob.planPrunedKeys(spark, root, entries, preds,
+            Some(tableSchema.fieldNames.toSet))
         // top-n prefix pruning only when NO predicate of any kind arrived (a
         // runtime filter landing via filter() makes per-group row counts stop
         // bounding the MATCHING rows — same reason pushTopN refuses filters)
         else pushedTopN.flatMap { t =>
           val intBounds = tableSchema.fields.find(_.name == t.column)
             .map(_.dataType != StringType)
-          DecodeJob.planTopNKeys(DecodeJob.fromEntries(spark, root, entries),
-            t.column, t.asc, t.nullsFirst, t.limit, DecodeJob.estimatedGroups(entries),
-            intBounds)
+          DecodeJob.planTopNKeys(spark, root, entries,
+            t.column, t.asc, t.nullsFirst, t.limit, intBounds)
         }
-      val keysOpt: Option[Array[(Int, Int)]] =
-        if (pinnedToken == -1L) compute()
-        else GraftDataSource.memoizedKeyPlan((root, pinnedToken, snapshotId,
-          incremental, preds, if (preds.nonEmpty) None else pushedTopN,
-          DecodeJob.MaxPrunedKeyCollect, DecodeJob.PruneFractionCutoff))(compute())
       if (cachedKeysBc != null) cachedKeysBc.destroy()
       cachedPreds = preds
       cachedKeys = keysOpt
@@ -1004,16 +976,17 @@ final class GraftScan(root: String, snapshotId: Option[Long],
       return Array.empty
     }
 
-    // gated Iceberg-style planning: a metadata-only scan yields the surviving
-    // group keys, or None when the predicate is not selective (past the
-    // MaxPrunedKeyCollect / half-the-groups gate — the residuals still make
-    // results exact). The key set ships as a BROADCAST and each task slices
-    // out its own dir's contiguous runs, so the per-task payload no longer
+    // gated two-level Iceberg-style planning: manifest part stats, then (only
+    // if it can prune more) a metadata-only scan of the surviving parts, yield
+    // the surviving group keys, or None when the predicate is not selective
+    // (past the MaxPrunedKeyCollect / half-the-groups gate — the residuals
+    // still make results exact). The key set ships as a BROADCAST and each
+    // task slices out its own dir's contiguous runs, so the per-task payload no longer
     // bounds pruning depth: the SQL surface now prunes as deep as the
     // decodeWhere API (10^6 keys), where r4 silently dropped ALL pruning past
     // 4096 surviving groups because the whole array rode every InputPartition.
-    // Memoized per predicate set (see plannedKeys): the double planning around
-    // runtime filters neither re-runs the metadata scan nor leaks broadcasts.
+    // Cached per predicate set (see plannedKeys): the double planning around
+    // runtime filters neither re-plans nor leaks broadcasts.
     val (keysOpt, keysBc) = plannedKeys(spark, predicates, entries)
     val keyParts: Option[Set[Int]] = keysOpt.map(_.map(_._1).toSet)
     val columnar = spark.conf.getOption("spark.graft.v2.columnar") match {

@@ -180,7 +180,7 @@ final class GraftMicroBatchStream(root: String,
       if (lastRange == rangeKey) return lastPlan
       val entries = emitEntries(s, e)
       // pushed predicates prune THIS BATCH's delta groups through the same
-      // gated metadata planning as the batch scan (planPrunedKeys over the
+      // gated two-level planning as the batch scan (planPrunedKeys over the
       // emitted entries only) — the normal incremental-consumer shape (new
       // crawl snapshots -> filter lang -> dedup) decodes only matching groups
       // instead of every new part. Residual filters keep results exact; a
@@ -188,8 +188,7 @@ final class GraftMicroBatchStream(root: String,
       import graft.jobs.DecodeJob
       val keysOpt: Option[Array[(Int, Int)]] =
         if (predicates.isEmpty || entries.isEmpty) None
-        else DecodeJob.planPrunedKeys(DecodeJob.fromEntries(spark, root, entries),
-          predicates, DecodeJob.estimatedGroups(entries),
+        else DecodeJob.planPrunedKeys(spark, root, entries, predicates,
           Some(GraftDataSource.storeSchema(root).fieldNames.toSet))
       val keyParts = keysOpt.map(_.map(_._1).toSet)
       val newBc = keysOpt.map(ks => spark.sparkContext.broadcast(

@@ -37,7 +37,8 @@ import graft.sources.SnapshotStore
  *    and the task writes its own block parquet file (same schema as the batch
  *    writer's, one file per task) straight into a staged data dir. Commit
  *    messages carry the per-part lineage rollup (rows, orig/enc bytes, per-
- *    column codecs) computed in-task — no post-write metrics job.
+ *    column codecs, planning stats) folded in-task by [[graft.jobs.PartRollup]]
+ *    — no post-write metrics job.
  *  - **Exactly-once commit**: tasks stage attempt-unique files under a
  *    dot-prefixed in-progress name (invisible to all readers) and atomically
  *    rename at task commit — a zombie attempt flushing bytes after the fact
@@ -141,10 +142,7 @@ private[graft] object GraftWriteLayout {
   /** Manifest entries from the tasks' commit messages (empty tasks dropped). */
   def entriesFrom(msgs: Array[GraftWriterCommitMessage],
                   relDir: String): Seq[SnapshotStore.PartEntry] =
-    msgs.iterator.filter(_.nRows > 0).map { m =>
-      SnapshotStore.PartEntry(m.partId, relDir, m.nRows, m.origBytes, m.encBytes,
-        m.codecsJson)
-    }.toSeq
+    msgs.iterator.filter(_.entry.nRows > 0).map(_.entry.copy(dataDir = relDir)).toSeq
 }
 
 final class GraftWrite(root: String, replaceAll: Boolean, arranged: Boolean = false,
@@ -217,13 +215,11 @@ final class GraftWrite(root: String, replaceAll: Boolean, arranged: Boolean = fa
     s"GraftStore root=$root mode=${if (replaceAll) "truncate" else "append"}"
 }
 
+/** A writer task's file and its part's manifest entry (the driver sets the
+  * entry's data dir at commit). */
 final case class GraftWriterCommitMessage(
-    partId: Int,
     fileName: String, // null when the task saw no rows (no file written)
-    nRows: Long,
-    origBytes: Long,
-    encBytes: Long,
-    codecsJson: String) extends WriterCommitMessage
+    entry: SnapshotStore.PartEntry) extends WriterCommitMessage
 
 final class GraftBatchWrite(root: String, replaceAll: Boolean,
     schema: StructType = GraftDataSource.PageSchema) extends BatchWrite {
@@ -583,12 +579,8 @@ final class GraftDataWriter(absDir: String, partId: Int, partitionId: Int, taskI
   private var n = 0
   private var bufBytes = 0L
 
-  // ---- per-part lineage rollup (computed in-task; no metrics job) ----
-  private var rows = 0L
-  private var origBytes = 0L
-  private var encBytes = 0L
-  private val codecsByColumn = scala.collection.mutable.Map.empty[String,
-    scala.collection.mutable.TreeSet[String]]
+  // per-part lineage + stats rollup, folded in-task (no metrics job)
+  private val rollup = new graft.jobs.PartRollup
 
   @inline private def lenOf(b: Array[Byte]): Int = if (b == null) 0 else b.length
 
@@ -654,14 +646,10 @@ final class GraftDataWriter(absDir: String, partId: Int, partitionId: Int, taskI
           EncodeJob.intBlockRow(partId, blockSeq, fields(i).name,
             longBufs(i), validBufs(i), n, intKind(i))
       writer.write(toGroup(b))
-      origBytes += b.orig_bytes
-      encBytes += b.enc_bytes
-      codecsByColumn.getOrElseUpdate(b.column,
-        scala.collection.mutable.TreeSet.empty[String]) ++= b.codec.split('+')
+      rollup.add(b)
       if (strBufs(i) != null) strBufs(i).clear()
       i += 1
     }
-    rows += n
     n = 0; bufBytes = 0L; blockSeq += 1
   }
 
@@ -702,14 +690,11 @@ final class GraftDataWriter(absDir: String, partId: Int, partitionId: Int, taskI
   override def commit(): WriterCommitMessage = {
     flush()
     if (writer != null) { writer.close(); writer = null }
-    if (rows > 0) // task commit = atomic promote to the readable name
+    val e = rollup.entry(partId, dataDir = "")
+    if (e.nRows > 0) // task commit = atomic promote to the readable name
       Files.move(Paths.get(absDir, inProgressName), Paths.get(absDir, fileName),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    val codecsJson = codecsByColumn.toSeq.sortBy(_._1)
-      .map { case (c, s) => s""""$c":"${s.mkString("+")}"""" }
-      .mkString("{", ",", "}")
-    GraftWriterCommitMessage(partId, if (rows > 0) fileName else null,
-      rows, origBytes, encBytes, codecsJson)
+    GraftWriterCommitMessage(if (e.nRows > 0) fileName else null, e)
   }
 
   override def abort(): Unit = {

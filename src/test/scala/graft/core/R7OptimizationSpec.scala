@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
  *  - the word-packed BitWriter against a trivial bit-at-a-time reference
  *  - decodeRange's bulk-load refill across ragged input tails
  *  - the stratified-sampling threshold clamp at the 2^32 grid point
- *  - countAndUrlBoundaries (the arranged write's one-pass count+sample)
+ *  - countAndUrlBoundaries (the arranged write's one-pass count+sample) and
+ *    its weighted-quantile step
  */
 class R7OptimizationSpec extends AnyFunSuite {
 
@@ -156,5 +157,33 @@ class R7OptimizationSpec extends AnyFunSuite {
       val (dTotal, _, dBounds) = graft.jobs.EncodeJob.countAndUrlBoundaries(dirty, _ => 8)
       assert(dTotal == 100 && dBounds.isEmpty)
     } finally spark.stop()
+  }
+
+  test("weightedQuantiles: a heavy reservoir candidate consumes every quantile it crosses") {
+    import graft.jobs.EncodeJob.weightedQuantiles
+    def light(prefix: String, n: Int) = Seq.tabulate(n)(i => (f"$prefix$i%04d", 1.0))
+    // skewed but every weight below one step: exactly parts - 1 boundaries,
+    // each at its own quantile
+    val rnd = new java.util.Random(7L)
+    val skewed = Seq.tabulate(5000)(i => (f"u$i%05d", if (rnd.nextInt(10) == 0) 40.0 else 1.0))
+    val total = skewed.map(_._2).sum
+    val bs = weightedQuantiles(skewed.toArray, total, 16)
+    assert(bs.length == 15 && bs.toSeq == bs.toSeq.sorted.distinct)
+    val cum = skewed.scanLeft(0.0)(_ + _._2).tail
+    bs.zipWithIndex.foreach { case (b, j) =>
+      val first = skewed.indices.find(i => cum(i) >= (j + 1) * total / 16).get
+      assert(skewed(first)._1 == b, s"boundary $j")
+    }
+    // one url carrying 40% of the weight (a huge partition sampled into a
+    // reservoir of identical urls, as one candidate or as many equal ones):
+    // it crosses four targets and yields ONE boundary; the rest still sit
+    // at their own quantiles instead of bunching onto the urls right after it
+    val expected = Seq("a0999", "a1999", "a2999", "m", "z0999", "z1999")
+    for (atom <- Seq(Seq(("m", 4000.0)), Seq.fill(40)(("m", 100.0)))) {
+      val cands = light("a", 3000) ++ atom ++ light("z", 3000)
+      assert(weightedQuantiles(cands.toArray, 10000.0, 10).toSeq == expected)
+    }
+    // fewer distinct urls than parts: one boundary per distinct url at most
+    assert(weightedQuantiles(Array(("a", 5.0), ("b", 5.0)), 10.0, 8).toSeq == Seq("a", "b"))
   }
 }

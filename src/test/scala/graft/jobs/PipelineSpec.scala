@@ -607,11 +607,11 @@ class PipelineSpec extends AnyFunSuite {
     val n = 8000L
     EncodeJob.run(spark, Webtext.generate(spark, n, 8), root, parts = 8)
     val blocksDf = DecodeJob.blocks(spark, root)
-    val est = DecodeJob.estimatedGroups(SnapshotStore.currentEntries(root))
+    val entries = SnapshotStore.currentEntries(root)
 
     // an all-matching predicate must NOT materialize keys on the driver
-    assert(DecodeJob.planPrunedKeys(blocksDf,
-      Seq(DecodeJob.TsRange(Long.MinValue, Long.MaxValue)), est).isEmpty,
+    assert(DecodeJob.planPrunedKeys(spark, root, entries,
+      Seq(DecodeJob.TsRange(Long.MinValue, Long.MaxValue))).isEmpty,
       "all-matching predicate must be gated (None), not collected")
     // ... and decodeWhere through the gate still returns the exact row set
     assert(DecodeJob.decodeWhere(spark, root,
@@ -619,7 +619,7 @@ class PipelineSpec extends AnyFunSuite {
 
     // a selective predicate still collects (Some) and prunes
     val someUrl = Webtext.page(7L).url
-    val keys = DecodeJob.planPrunedKeys(blocksDf, Seq(DecodeJob.StrEq("url", someUrl)), est)
+    val keys = DecodeJob.planPrunedKeys(spark, root, entries, Seq(DecodeJob.StrEq("url", someUrl)))
     assert(keys.exists(_.length >= 1))
     val total = blocksDf.where($"column" === "url").count()
     assert(keys.get.length < total)
@@ -628,8 +628,8 @@ class PipelineSpec extends AnyFunSuite {
     val saved = DecodeJob.MaxPrunedKeyCollect
     try {
       DecodeJob.MaxPrunedKeyCollect = 0
-      assert(DecodeJob.planPrunedKeys(blocksDf,
-        Seq(DecodeJob.StrEq("url", someUrl)), est).isEmpty)
+      assert(DecodeJob.planPrunedKeys(spark, root, entries,
+        Seq(DecodeJob.StrEq("url", someUrl))).isEmpty)
       assert(DecodeJob.decodeWhere(spark, root,
         Seq(DecodeJob.StrEq("url", someUrl))).count() == 1L, "gated path stays exact")
     } finally DecodeJob.MaxPrunedKeyCollect = saved

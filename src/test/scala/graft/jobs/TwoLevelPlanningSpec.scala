@@ -1,0 +1,238 @@
+package graft.jobs
+
+import java.nio.file.Files
+import java.sql.Timestamp
+
+import org.apache.spark.sql.SparkSession
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.sources.{SnapshotStore, WebPage}
+import graft.sources.SnapshotStore.{ColumnStats, PartEntry, PartStats}
+
+/**
+ * Per-part manifest stats and the two-level planning built on them:
+ *  - the shared fold ([[PartRollup]]): absent bounds absorb, the dict union
+ *    and long string bounds are capped;
+ *  - property: level 1 (manifest part stats) never prunes a part that level 2
+ *    (the block-metadata job, [[DecodeJob.matchingGroupKeys]]) keeps, and the
+ *    two-level key plan equals the block-level one, on random small stores
+ *    written by both writers;
+ *  - property: part stats survive manifest serialise -> parse -> carry-forward
+ *    commit unchanged, whatever their strings hold.
+ * Properties run with fixed seeds.
+ */
+class TwoLevelPlanningSpec extends AnyFunSuite {
+
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .appName("two-level-planning-spec")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  private def check(name: String, p: Prop, cases: Int): Unit = {
+    val params = Test.Parameters.default
+      .withMinSuccessfulTests(cases)
+      .withInitialSeed(Seed(20261017L))
+      .withWorkers(1)
+    val res = Test.check(params, p)
+    assert(res.passed, s"$name: ${org.scalacheck.util.Pretty.pretty(res)}")
+  }
+
+  private def block(column: String, n: Int = 10, nulls: Int = 0,
+      min: Option[Long] = None, max: Option[Long] = None,
+      smin: Option[String] = None, smax: Option[String] = None,
+      dict: Option[Seq[String]] = None, seq: Int = 0): BlockRow =
+    BlockRow(1, seq, column, "str", "str_plain", n, nulls, min, max, None, None,
+      smin, smax, dict.map(_.toArray), None, 100L, 50L, null)
+
+  test("PartRollup: bounds fold to min/max, absent bounds absorb, dict and long bounds cap") {
+    val r = new PartRollup()
+      .add(block("url", smin = Some("b"), smax = Some("d"), dict = Some(Seq("b", "d"))))
+      .add(block("url", smin = Some("a"), smax = Some("c"), dict = Some(Seq("a")), seq = 1,
+        nulls = 2))
+      .add(block("ts", min = Some(5L), max = Some(9L)))
+      .add(block("ts", seq = 1)) // an all-null block: no bounds
+      .add(block("long", smin = Some("x" * 300), smax = Some("y")))
+    val e = r.entry(1, "data/x")
+    val s = e.stats.get
+    assert(s.nGroups == 2 && e.nRows == 20)
+    assert(s.columns("url") == ColumnStats(None, None, Some("a"), Some("d"), 2L,
+      Some(Vector("a", "b", "d"))))
+    assert(!s.columns.contains("ts"), "one bound-less block makes the part unbounded")
+    assert(s.columns("long") == ColumnStats(None, None, None, Some("y"), 0L, None),
+      "string bounds over 256 chars are not stored")
+    // UTF-8 byte order, not UTF-16: U+1D11E (a surrogate pair) sorts ABOVE U+FFFD
+    val u = new PartRollup()
+      .add(block("c", smin = Some("�"), smax = Some("�")))
+      .add(block("c", smin = Some("𝄞"), smax = Some("𝄞"), seq = 1))
+      .entry(1, "d").stats.get.columns("c")
+    assert(u.strMin.contains("�") && u.strMax.contains("𝄞"))
+    // the dict union is dropped once it passes 64 values
+    val wide = (0 until 70).foldLeft(new PartRollup) { (acc, i) =>
+      acc.add(block("lang", smin = Some("a"), smax = Some("z"), dict = Some(Seq(s"v$i")), seq = i))
+    }
+    assert(wide.entry(1, "d").stats.get.columns("lang").dict.isEmpty)
+    // merging partial rollups equals folding everything in one pass
+    val bs = Seq(block("url", smin = Some("k"), smax = Some("m")),
+      block("url", smin = Some("j"), smax = Some("l"), seq = 1))
+    val whole = bs.foldLeft(new PartRollup)(_ add _).entry(1, "d")
+    val split = new PartRollup().add(bs(0)).merge(new PartRollup().add(bs(1))).entry(1, "d")
+    assert(whole == split)
+  }
+
+  // ---------------- property (a): level 1 is a superset of level 2 ----------------
+
+  private val hosts = Seq("https://a.example/", "https://b.example/\"q/", "http://c\\d/",
+    "https://e/𝄞/", "https://f//", "https://a.example/deep/")
+  private val langs = Seq("en", "de", "fr", "ja", null, "x" * 80)
+
+  private val pageGen: Gen[WebPage] = for {
+    host <- Gen.oneOf(hosts)
+    path <- Gen.stringOfN(3, Gen.alphaNumChar)
+    nullUrl <- Gen.frequency(19 -> false, 1 -> true)
+    ts <- Gen.frequency(9 -> Gen.choose(0L, 5000000000L).map(Some(_)), 1 -> Gen.const(None))
+    lang <- Gen.oneOf(langs)
+    // a value over 128 bytes drops its block's dict, so parts mix blocks
+    // with and without dicts
+    text <- Gen.frequency(6 -> Gen.alphaStr.map(_.take(20)), 2 -> Gen.const("t" * 100),
+      1 -> Gen.const("u" * 200), 1 -> Gen.const(null))
+  } yield WebPage(if (nullUrl) null else host + path,
+    ts.map(us => new Timestamp(us / 1000L)).orNull, Array[Byte](1, 2), text, lang)
+
+  /** A store spec: rows for the batch encode job, its part count and block
+    * byte bound (small bounds split parts into several groups), and rows for
+    * one V2 append (the other writer). */
+  private final case class StoreSpec(batch: Seq[WebPage], parts: Int, blockBytes: Long,
+      appended: Seq[WebPage])
+
+  private val storeGen: Gen[StoreSpec] = for {
+    n <- Gen.choose(40, 300)
+    batch <- Gen.listOfN(n, pageGen)
+    parts <- Gen.choose(1, 4)
+    blockBytes <- Gen.oneOf(600L, 4000L, EncodeJob.MaxBlockBytes)
+    m <- Gen.choose(0, 60)
+    appended <- Gen.listOfN(m, pageGen)
+  } yield StoreSpec(batch, parts, blockBytes, appended)
+
+  private def predicateGen(s: StoreSpec): Gen[DecodeJob.BlockPredicate] = {
+    val pages = s.batch ++ s.appended
+    def valueOf(c: String): Gen[String] = {
+      val seen = pages.flatMap(p => Option(c match {
+        case "url" => p.url
+        case "lang" => p.lang
+        case _ => p.text
+      }))
+      val fresh = Gen.oneOf(Gen.alphaStr.map(_.take(6)), Gen.oneOf(hosts),
+        Gen.const("￿"), Gen.const(""))
+      if (seen.isEmpty) fresh else Gen.frequency(3 -> Gen.oneOf(seen), 1 -> fresh)
+    }
+    val strCol = Gen.oneOf("url", "lang", "text")
+    val tsVals = pages.flatMap(p => Option(p.warc_ts)).map(_.getTime * 1000L)
+    val tsGen = if (tsVals.isEmpty) Gen.choose(0L, 5000000000L)
+      else Gen.frequency(3 -> Gen.oneOf(tsVals), 1 -> Gen.choose(0L, 5000000000L))
+    Gen.oneOf(
+      for (c <- strCol; v <- valueOf(c)) yield DecodeJob.StrEq(c, v),
+      for (c <- strCol; vs <- Gen.nonEmptyListOf(valueOf(c)).map(_.take(4)))
+        yield DecodeJob.StrIn(c, vs),
+      for (c <- strCol; v <- valueOf(c); k <- Gen.choose(0, 12))
+        yield DecodeJob.StrPrefix(c, v.take(k)),
+      for (c <- strCol; lo <- Gen.option(valueOf(c)); hi <- Gen.option(valueOf(c)))
+        yield DecodeJob.StrRange(c, lo, hi),
+      for (a <- tsGen; b <- tsGen) yield DecodeJob.TsRange(math.min(a, b), math.max(a, b)))
+  }
+
+  private def writeStore(s: StoreSpec): String = {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-two-level-").toString
+    EncodeJob.run(spark, spark.createDataset(s.batch).repartition(2), root, s.parts,
+      maxBlockBytes = s.blockBytes)
+    if (s.appended.nonEmpty)
+      spark.createDataset(s.appended).toDF().write.format("graft").mode("append").save(root)
+    root
+  }
+
+  test("property: level-1 survivors cover every part level 2 keeps; two-level keys equal block keys") {
+    val savedCutoff = DecodeJob.PruneFractionCutoff
+    DecodeJob.PruneFractionCutoff = 1e6 // compare the key sets, not the gate
+    try check("level 1 superset", Prop.forAllNoShrink(
+        storeGen.flatMap(s => Gen.listOfN(12, Gen.nonEmptyListOf(predicateGen(s)).map(_.take(2)))
+          .map(ps => (s, ps)))) { case (s, predLists) =>
+        val root = writeStore(s)
+        val entries = SnapshotStore.currentEntries(root)
+        assert(entries.forall(_.stats.isDefined), "both writers commit part stats")
+        predLists.forall { preds =>
+          import spark.implicits._
+          val level2 = DecodeJob.matchingGroupKeys(spark, root, preds)
+            .as[(Int, Int)].collect().toSet
+          val level1 = DecodeJob.partsMayMatch(entries, preds).map(_.partId).toSet
+          val planned = DecodeJob.planPrunedKeys(spark, root, entries, preds)
+          val ok = level2.map(_._1).subsetOf(level1) && planned.map(_.toSet).contains(level2)
+          if (!ok) println(s"counterexample $root $preds: level1=$level1 level2=$level2 " +
+            s"planned=${planned.map(_.toSeq)}")
+          ok
+        }
+      }, cases = 4)
+    finally DecodeJob.PruneFractionCutoff = savedCutoff
+  }
+
+  // ------------- property (b): stats survive the manifest round trip -------------
+
+  private val nastyString: Gen[String] = Gen.oneOf(
+    Gen.const("\""), Gen.const("\\"), Gen.const("\"codecs\":"),
+    Gen.const("a\",\"codecs\":{\"x\":\"y\"}}"), Gen.const("𝄞"),
+    Gen.const("😀 x"), Gen.const("\n\t\u0000 "), Gen.const(""),
+    org.scalacheck.Arbitrary.arbitrary[String])
+  private val strGen: Gen[String] = Gen.listOfN(3, nastyString).map(_.mkString)
+  private val longGen: Gen[Long] =
+    Gen.oneOf(Gen.const(Long.MinValue), Gen.const(Long.MaxValue), Gen.choose(-1000L, 1000L))
+
+  private val columnStatsGen: Gen[ColumnStats] = for {
+    mn <- Gen.option(longGen); mx <- Gen.option(longGen)
+    smin <- Gen.option(strGen); smax <- Gen.option(strGen)
+    nulls <- Gen.choose(0L, Long.MaxValue)
+    dict <- Gen.option(Gen.listOf(strGen).map(_.take(5)))
+  } yield ColumnStats(mn, mx, smin, smax, nulls, dict)
+
+  private val entryGen: Gen[PartEntry] = for {
+    dir <- strGen
+    cols <- Gen.mapOf(Gen.zip(strGen, columnStatsGen)).map(_.take(4))
+    groups <- Gen.choose(0, 1000)
+    stats <- Gen.option(Gen.const(PartStats(groups, cols)))
+    codecCols <- Gen.listOf(strGen).map(_.take(3))
+  } yield {
+    val codecs = new java.util.TreeMap[String, String]()
+    codecCols.foreach(c => codecs.put(c, "str_fsst+str_plain"))
+    PartEntry(0, "data/" + dir, 7L, 70L, 20L,
+      new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(codecs), stats)
+  }
+
+  test("property: part stats survive serialise -> parse -> carry-forward commit unchanged") {
+    check("manifest round trip", Prop.forAllNoShrink(entryGen, entryGen) { (a0, b0) =>
+      val a = a0.copy(partId = 1)
+      val b = b0.copy(partId = 2)
+      val root = Files.createTempDirectory("graft-manifest-prop-").toString
+      val first = SnapshotStore.commit(root, Seq(a))
+      val second = SnapshotStore.commit(root, Seq(b)) // carries `a` forward
+      SnapshotStore.entriesAt(root, first) == Seq(a) &&
+        SnapshotStore.entriesAt(root, second) == Seq(a, b)
+    }, cases = 200)
+  }
+
+  test("a truncated manifest line still fails loudly") {
+    val root = Files.createTempDirectory("graft-manifest-trunc-").toString
+    val e = PartEntry(1, "data/d", 1L, 1L, 1L, "{}",
+      Some(PartStats(1, Map("url" -> ColumnStats(strMin = Some("a"), strMax = Some("b"))))))
+    val id = SnapshotStore.commit(root, Seq(e))
+    val mf = java.nio.file.Paths.get(root, "manifests", s"$id.jsonl")
+    val line = new String(Files.readAllBytes(mf), java.nio.charset.StandardCharsets.UTF_8).trim
+    Seq(line.length / 2, line.length - 1, 20).foreach { cut =>
+      Files.write(mf, line.take(cut).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      val err = intercept[IllegalArgumentException](SnapshotStore.entriesAt(root, id))
+      assert(err.getMessage.contains("corrupt manifest line"), s"cut at $cut")
+    }
+  }
+}

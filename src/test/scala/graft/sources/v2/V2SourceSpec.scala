@@ -716,17 +716,17 @@ class V2SourceSpec extends AnyFunSuite {
     // unsoundly: nulls-first keeps every possibly-null group (gate -> None),
     // nulls-last can never establish the quota (countable rows are 0) -> None
     val legacy = DecodeJob.blocks(spark, r2).drop("n_nulls")
-    assert(DecodeJob.planTopNKeys(legacy, "url", asc = true, nullsFirst = false, 15, 4L).isEmpty,
+    assert(DecodeJob.topNKeysOf(legacy, "url", asc = true, nullsFirst = false, 15, 4L).isEmpty,
       "unknown null counts must yield no nulls-last pruning")
     // nulls-first on a legacy store keeps EVERY group (each may hold nulls):
     // a wide gate (estimate 1000 -> threshold 500) proves the survivor set is
     // genuinely all 4 url groups, not a coincidence of the gate tripping...
-    val legacyKeys = DecodeJob.planTopNKeys(legacy, "url", asc = true, nullsFirst = true, 15, 1000L)
+    val legacyKeys = DecodeJob.topNKeysOf(legacy, "url", asc = true, nullsFirst = true, 15, 1000L)
     assert(legacyKeys.exists(_.length == 4), s"legacy nulls-first must keep ALL groups: " +
       s"${legacyKeys.map(_.length)}")
     // ...and at the store's REAL size the 4-of-4 survivor set trips the
     // fraction gate (threshold 2), so the caller scans everything — sound
-    assert(DecodeJob.planTopNKeys(legacy, "url", asc = true, nullsFirst = true, 15, 4L).isEmpty,
+    assert(DecodeJob.topNKeysOf(legacy, "url", asc = true, nullsFirst = true, 15, 4L).isEmpty,
       "an all-groups survivor set must trip the fraction gate")
   }
 
@@ -752,5 +752,152 @@ class V2SourceSpec extends AnyFunSuite {
     val st = scan.estimateStatistics()
     assert(st.numRows().getAsLong == N)
     assert(st.sizeInBytes().getAsLong > 0)
+  }
+
+  /** Spark jobs submitted while `body` runs: job ids are assigned at
+    * submission, so the jobs of `body` are exactly those between two marker
+    * jobs run just before and just after it (listener delivery is
+    * asynchronous, so the markers' ids are awaited, the body's need not be). */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val markers = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("graft.test.marker")))
+          .foreach(m => markers.put(m, e.jobId))
+    }
+    sc.addSparkListener(l)
+    def marker(name: String): Unit = {
+      sc.setLocalProperty("graft.test.marker", name)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.test.marker", null)
+    }
+    try {
+      marker("before")
+      val out = body
+      marker("after")
+      val deadline = System.currentTimeMillis() + 30000L
+      while (markers.size < 2 && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(markers.size == 2, "marker job events never arrived")
+      (out, markers.get("after") - markers.get("before") - 1)
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** Rows of `df` plus the Spark jobs its PLANNING ran: the window opens once
+    * the optimized plan exists and closes once the scan's input partitions
+    * are planned — the part of a query the manifest stats serve. */
+  private def planJobs(df: DataFrame): (Seq[String], Int) = {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    df.queryExecution.optimizedPlan
+    val (_, jobs) = jobsDuring {
+      df.queryExecution.executedPlan
+      val scans = df.queryExecution.sparkPlan.collect { case b: BatchScanExec => b }
+      assert(scans.nonEmpty, s"no graft scan in:\n${df.queryExecution.sparkPlan}")
+      scans.foreach(_.inputPartitions)
+    }
+    (sortedRows(df), jobs)
+  }
+
+  /** A byte-for-byte copy of a store whose manifest lines lack `stats` — what
+    * every store committed before per-part stats existed looks like. */
+  private def statsStrippedCopy(src: String): String = {
+    import scala.jdk.CollectionConverters._
+    val dst = Files.createTempDirectory("graft-v2-nostats-")
+    val srcPath = java.nio.file.Paths.get(src)
+    val walk = Files.walk(srcPath)
+    try walk.iterator().asScala.toSeq.foreach { p =>
+      val t = dst.resolve(srcPath.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(t)
+      else Files.copy(p, t, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    } finally walk.close()
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val mfs = Files.list(dst.resolve("manifests"))
+    try mfs.iterator().asScala.filter(_.toString.endsWith(".jsonl")).foreach { mf =>
+      val lines = Files.readAllLines(mf).asScala.filter(_.nonEmpty).map { line =>
+        val node = json.readTree(line).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+        assert(node.has("stats"), s"fresh stores must carry part stats: $line")
+        node.remove("stats")
+        json.writeValueAsString(node)
+      }
+      Files.write(mf, lines.asJava)
+    } finally mfs.close()
+    dst.toString
+  }
+
+  test("cold selective planning runs no Spark job; a stats-less copy prunes via block metadata") {
+    val fresh = Files.createTempDirectory("graft-v2-cold-").toString
+    EncodeJob.run(spark, Webtext.generate(spark, 16000L, 8), fresh, parts = 16)
+    val entries = graft.sources.SnapshotStore.currentEntries(fresh)
+    assert(entries.forall(_.stats.exists(_.nGroups == 1)), "one block group per part")
+    val legacy = statsStrippedCopy(fresh)
+    assert(graft.sources.SnapshotStore.currentEntries(legacy).forall(_.stats.isEmpty))
+    val base = 1735689600000000L // Webtext's warc_ts origin
+    val queries: Seq[String => DataFrame] = Seq(
+      r => spark.read.format("graft").load(r)
+        .where(col("url").startsWith("https://host-1.example.com/") && col("lang") === "en")
+        .select(col("url"), col("lang")),
+      r => spark.read.format("graft").load(r)
+        // host h's pages start at base + h hours: only host-0, whose urls
+        // sort first, reaches below base + 30 min
+        .where(col("warc_ts").between(new java.sql.Timestamp(base / 1000L),
+          new java.sql.Timestamp((base + 1800000000L) / 1000L)))
+        .select(col("url"), unix_micros(col("warc_ts"))),
+      r => spark.read.format("graft").load(r).orderBy(col("url")).limit(40)
+        .select(col("url"), col("lang")))
+    queries.zipWithIndex.foreach { case (q, i) =>
+      val (rows, jobs) = planJobs(q(fresh))
+      assert(jobs == 0, s"query $i: cold planning on a stats-carrying store ran $jobs jobs")
+      val kept = GraftDataSource.planStatsFor(fresh).get.prunedGroupKeys
+      assert(kept.exists(k => k >= 1 && k < entries.size),
+        s"query $i must prune through level 1: $kept of ${entries.size}")
+      // no stats: the same rows and the same pruning, planned by level 2
+      val (legacyRows, legacyJobs) = planJobs(q(legacy))
+      assert(legacyRows == rows && rows.nonEmpty, s"query $i: stats-less copy differs")
+      assert(legacyJobs > 0, s"query $i: a stats-less store plans through the block job")
+      assert(GraftDataSource.planStatsFor(legacy).get.prunedGroupKeys == kept,
+        s"query $i: level 2 must keep the groups level 1 kept")
+    }
+  }
+
+  test("scan, append, scan, DELETE, scan: every scan sees its snapshot's rows and parts") {
+    import graft.sources.SnapshotStore
+    val r = Files.createTempDirectory("graft-v2-replan-").toString
+    EncodeJob.run(spark, Webtext.generate(spark, 6000L, 8), r, parts = 8)
+    val prefix = "https://host-1.example.com/"
+    val pred = Seq(DecodeJob.StrPrefix("url", prefix))
+    def scan(): Seq[String] = sortedRows(spark.read.format("graft").load(r)
+      .where(col("url").startsWith(prefix)).select(col("url"), col("lang")))
+    def expected(): Seq[String] = sortedRows(DecodeJob.decode(spark, r).toDF()
+      .where(col("url").startsWith(prefix)).select(col("url"), col("lang")))
+    // the plan was made from the CURRENT manifest: its kept groups are the
+    // block-metadata matches of exactly the live parts
+    def assertFreshPlan(step: String): Unit = {
+      val kept = GraftDataSource.planStatsFor(r).get.prunedGroupKeys
+      val live = DecodeJob.matchingGroupKeys(spark, r, pred).count().toInt
+      assert(kept.contains(live), s"$step: plan kept $kept groups, live store has $live")
+    }
+
+    val first = scan()
+    assert(first == expected() && first.nonEmpty)
+    assertFreshPlan("initial scan")
+
+    // V2 append of matching rows: new parts, new rows
+    spark.createDataFrame(Seq.tabulate(50)(i =>
+        graft.sources.WebPage(s"${prefix}appended/$i", new java.sql.Timestamp(0L),
+          Array[Byte](1), s"t$i", "en")))
+      .write.format("graft").mode("append").save(r)
+    val appended = scan()
+    assert(appended.size == first.size + 50 && appended == expected())
+    assertFreshPlan("after append")
+
+    // DELETE WHERE (rewrites the affected parts under new ids)
+    val before = SnapshotStore.currentEntries(r).map(_.partId).toSet
+    spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW graft_replan USING graft OPTIONS (path '$r')")
+    spark.sql(s"DELETE FROM graft_replan WHERE url LIKE '${prefix}appended/%'")
+    assert(SnapshotStore.currentEntries(r).map(_.partId).toSet != before, "delete rewrote parts")
+    val deleted = scan()
+    assert(deleted == first && deleted == expected())
+    assertFreshPlan("after delete")
   }
 }
