@@ -801,8 +801,10 @@ object DecodeJob {
           e: java.util.Map.Entry[AnyRef, Option[Array[(Int, Int)]]]): Boolean = size > 128
     }
 
-  /** Pre-scan memo key for a whole-snapshot read of `root`: the store identity
-    * token pins the snapshot bytes, the conf values pin Spark's deterministic
+  /** Pre-scan memo key for a whole-snapshot read of `root`: the RESOLVED
+    * snapshot id (the requested one, else the current pointer's) and the
+    * store identity token pin the snapshot bytes, so a token collision alone
+    * cannot alias two snapshots; the conf values pin Spark's deterministic
     * file-split planning (the invariant [[fastPathGroup]] documents).
     * `tokenBefore` is the token the CALLER read before walking the manifest;
     * None (= don't memoize) when the store has no pointer or a commit raced
@@ -810,11 +812,14 @@ object DecodeJob {
   private[jobs] def preScanKey(spark: SparkSession, root: String,
       snapshotId: Option[Long], expected: Set[String],
       tokenBefore: Long): Option[AnyRef] = {
-    if (tokenBefore == -1L ||
+    // resolved BEFORE the race re-check, so an unchanged token also vouches
+    // that the pointer read here is the one the caller's entries came from
+    val resolved = snapshotId.orElse(SnapshotStore.currentSnapshotId(root))
+    if (tokenBefore == -1L || resolved.isEmpty ||
         graft.sources.v2.GraftDataSource.storeIdentityToken(root) != tokenBefore)
       return None
     val c = spark.sessionState.conf
-    Some((root, tokenBefore, snapshotId,
+    Some((root, tokenBefore, resolved.get,
       expected.toSeq.sorted, c.filesMaxPartitionBytes, c.filesOpenCostInBytes,
       c.filesMinPartitionNum, spark.sparkContext.defaultParallelism,
       MaxFallbackGroups)) // test-mutable gate: never serve across altered gates

@@ -61,10 +61,9 @@ object DeleteJob {
       .where(!coalesce(cond, lit(false)))
       .as(Encoders.product[WebPage])
 
-    // all-deleted fast path: an empty re-encode would stage a zero-file dir
-    // the metrics read-back cannot infer a schema from — commit the removal
-    // directly (isEmpty stops at the first surviving row; only the rare
-    // everything-matched case pays a full scan of the affected parts)
+    // all-deleted fast path: commit the removal directly instead of running
+    // an empty re-encode (isEmpty stops at the first surviving row; only the
+    // rare everything-matched case pays a full scan of the affected parts)
     if (survivors.isEmpty) {
       val snap = SnapshotStore.commitReplacing(root, Seq.empty, affectedSet,
         rowsRehomed = true)

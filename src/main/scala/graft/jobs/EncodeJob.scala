@@ -1,14 +1,22 @@
 package graft.jobs
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{DirectShufflePartitionID, GenericInternalRow}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.codec.{IntBlockCodec, StringBlockCodec}
 import graft.core.PhysicalIntType
 import graft.sources.{SnapshotStore, WebPage, Webtext}
+import graft.sources.v2.{GraftDataWriter, GraftWriteLayout, GraftWriterCommitMessage}
+import graft.sources.v2.GraftDataSource.PageSchema
 
 /**
  * One encoded block of one column of one work unit, with pruning metadata:
@@ -63,20 +71,26 @@ final case class BlockRow(
 /**
  * Columnar encode job (SURVEY.md §3.4 lifecycle):
  *
- *  1. PLAN    — read input snapshot; left-anti join against committed part manifest
+ *  1. PLAN    — read input snapshot; keep only pending work units, a narrow
+ *               `part_id IN (…)` filter against the committed part manifest
  *               (resume from last checkpoint, north_rule).
  *  2. PARTITION — explicit range partitioning on `url` via deterministic sampled
- *               boundaries persisted next to the store (same work units on re-run).
- *  3. ENCODE  — `Dataset.mapPartitions` kernel: per column slice, stats → codec
- *               auto-choice → self-describing block rows. Single pass, bounded
- *               memory (64Ki rows per block).
- *  4. COMMIT  — stage parquet to a fresh data dir, roll up per-part lineage +
- *               metrics, atomic manifest swap. Each commit is a checkpoint.
+ *               boundaries persisted next to the store (same work units on re-run),
+ *               then a pass-through exchange: each task owns exactly one part.
+ *  3. ENCODE  — each task sorts its part on url and runs the V2 writer's task
+ *               kernel ([[graft.sources.v2.GraftDataWriter]] over [[BlockEncoder]]):
+ *               per column slice, stats → codec auto-choice → self-describing block
+ *               rows, written to the task's own staged block file while
+ *               [[PartRollup]] folds the part's manifest entry. Single pass,
+ *               bounded memory (64Ki rows per block).
+ *  4. COMMIT  — the driver collects one (file, entry) per task, promotes exactly
+ *               those files, and swaps the manifest atomically. Each commit is a
+ *               checkpoint.
  *
- * Scale notes: the only wide exchange is the one repartition by part_id; encode and
- * metric rollup are map-side; the committed-parts side of the anti-join is broadcast
- * (manifest rows ≪ data). Work units are a pure function of (url, boundaries), so
- * skew in `lang`/`host` cannot skew tasks — urls are ~unique. Group-level skew is
+ * Scale notes: the only wide exchange is the one by part id; encode, file write
+ * and lineage/stats rollup all happen in the writing task, so no job runs after
+ * the write. Work units are a pure function of (url, boundaries), so skew in
+ * `lang`/`host` cannot skew tasks — urls are ~unique. Group-level skew is
  * handled where grouping happens (salted two-phase rollups in metrics queries).
  */
 object EncodeJob {
@@ -226,7 +240,7 @@ object EncodeJob {
     // still bucket fine as data): a "" boundary vanishes in the persisted
     // file's split/filter round-trip and an embedded newline splits into two
     // bogus boundaries — a resumed run would re-bucket rows under a DIFFERENT
-    // layout than the one committed, which the anti-join then turns into
+    // layout than the one committed, which the resume filter then turns into
     // silently dropped or duplicated rows. Any sampled url is just a split
     // point, so narrowing the sample never hurts correctness.
     val urls = urlsCol
@@ -250,12 +264,18 @@ object EncodeJob {
       // input before the encode itself, a fixed per-run cost at every
       // parallelism level. Resume determinism is unchanged: boundaries are
       // persisted below and re-read, never recomputed.
+      // Assumes deterministic upstream row order: the reservoir is seeded per
+      // input partition index, so the same input yields the same boundaries
+      // only when each partition delivers its rows in a fixed order (a file
+      // scan does; rows fresh out of a shuffle need not). Other orders only
+      // move split points — any boundaries bucket every row — and resume
+      // reads the persisted file, so this bears on reproducibility only.
       val spark = pages.sparkSession
       import spark.implicits._
       val (_, _, bs) = countAndUrlBoundaries(pages.select($"url").as[String], _ => parts)
       SnapshotStore.writeSidecar(root, boundariesFile, bs.mkString("\n"))
       // return what a RESUMED run will parse back, not the in-memory array:
-      // create and resume must bucket identically or the resume anti-join
+      // create and resume must bucket identically or the resume filter
       // drops/duplicates rows (the sample filter above makes the round-trip
       // lossless; this is belt and braces against future boundary sources)
       new String(Files.readAllBytes(p), StandardCharsets.UTF_8).split("\n").filter(_.nonEmpty)
@@ -380,74 +400,41 @@ object EncodeJob {
       None, None, None, None, n.toLong * (t.width / 8), enc.length.toLong, enc)
   }
 
-  /** Encode one buffered block (all 5 webtext columns) into BlockRows.
-    * `private[graft]`: the V2 write path runs the same kernel push-style
-    * inside each DataWriter task. */
-  private[graft] def flushBlock(partId: Int, seq: Int,
-      urls: java.util.ArrayList[Array[Byte]],
-      ts: Array[Long], tsValid: Array[Boolean], tsN: Int,
-      htmls: java.util.ArrayList[Array[Byte]],
-      texts: java.util.ArrayList[Array[Byte]],
-      langs: java.util.ArrayList[Array[Byte]]): Seq[BlockRow] =
-    Seq(
-      strBlockRow(partId, seq, "url", urls, textual = true),
-      intBlockRow(partId, seq, "warc_ts", ts, tsValid, tsN, PhysicalIntType.I64),
-      strBlockRow(partId, seq, "html", htmls, textual = false),
-      strBlockRow(partId, seq, "text", texts, textual = true),
-      strBlockRow(partId, seq, "lang", langs, textual = true))
-
-  /** Kernel row: raw UTF-8 bytes and epoch micros (+ validity for null warc_ts) —
-    * no Timestamp, no String re-materialization (UTF8String -> String -> getBytes
-    * showed up hot). Null byte arrays stay null end-to-end (null != ""). */
+  /** Kernel row: raw UTF-8 bytes and epoch micros (+ validity for null warc_ts),
+    * nulls as null arrays (null != ""). */
   type EncRow = (Int, Array[Byte], Long, Boolean, Array[Byte], Array[Byte], Array[Byte])
 
-  /** The mapPartitions kernel: rows arrive sorted by (part_id, url). */
+  /** The [[BlockEncoder]] over rows sorted by (part_id, url): each part's
+    * blocks number from 0, and a block never spans two parts. */
   def encodePartition(rows: Iterator[EncRow],
                       maxBlockBytes: Long = MaxBlockBytes): Iterator[BlockRow] = new Iterator[BlockRow] {
-    private var out: Iterator[BlockRow] = Iterator.empty
-    private var curPart = -1
-    private var blockSeq = 0
-    private val urls = new java.util.ArrayList[Array[Byte]](BlockSize)
-    private val htmls = new java.util.ArrayList[Array[Byte]](BlockSize)
-    private val texts = new java.util.ArrayList[Array[Byte]](BlockSize)
-    private val langs = new java.util.ArrayList[Array[Byte]](BlockSize)
-    private val ts = new Array[Long](BlockSize)
-    private val tsValid = new Array[Boolean](BlockSize)
-    private var n = 0
-    private var bufBytes = 0L
+    private val out = new java.util.ArrayDeque[BlockRow]()
+    private var enc: BlockEncoder = _
+    private var curPart = 0
+    private val row = new GenericInternalRow(5)
 
-    @inline private def lenOf(bs: Array[Byte]): Int = if (bs == null) 0 else bs.length
-
-    private def flush(): Seq[BlockRow] = {
-      if (n == 0) Seq.empty
-      else {
-        val res = flushBlock(curPart, blockSeq, urls, ts, tsValid, n, htmls, texts, langs)
-        urls.clear(); htmls.clear(); texts.clear(); langs.clear()
-        n = 0; bufBytes = 0L; blockSeq += 1
-        res
-      }
-    }
+    @inline private def utf8(bs: Array[Byte]): UTF8String =
+      if (bs == null) null else UTF8String.fromBytes(bs)
 
     override def hasNext: Boolean = {
-      while (!out.hasNext && rows.hasNext) {
+      while (out.isEmpty && rows.hasNext) {
         val (pid, url, tsUs, tsOk, html, text, lang) = rows.next()
-        var flushed: Seq[BlockRow] = Seq.empty
-        if (pid != curPart) { flushed = flush(); curPart = pid; blockSeq = 0 }
-        else if (n == BlockSize || bufBytes >= maxBlockBytes) flushed = flush()
-        urls.add(url)
-        htmls.add(html)
-        texts.add(text)
-        langs.add(lang)
-        ts(n) = tsUs
-        tsValid(n) = tsOk
-        n += 1
-        bufBytes += lenOf(url) + lenOf(html) + lenOf(text) + lenOf(lang) + 16L
-        if (flushed.nonEmpty) out = flushed.iterator
+        if (enc == null || pid != curPart) {
+          if (enc != null) enc.flush()
+          enc = new BlockEncoder(PageSchema, pid, maxBlockBytes)(out.add(_))
+          curPart = pid
+        }
+        row.update(0, utf8(url))
+        row.update(1, if (tsOk) tsUs else null)
+        row.update(2, html)
+        row.update(3, utf8(text))
+        row.update(4, utf8(lang))
+        enc.add(row)
       }
-      if (!out.hasNext && !rows.hasNext && n > 0) out = flush().iterator
-      out.hasNext
+      if (out.isEmpty && enc != null) { enc.flush(); enc = null }
+      !out.isEmpty
     }
-    override def next(): BlockRow = { if (!hasNext) throw new NoSuchElementException; out.next() }
+    override def next(): BlockRow = { if (!hasNext) throw new NoSuchElementException; out.poll() }
   }
 
   // ---------------- job ----------------
@@ -455,57 +442,75 @@ object EncodeJob {
   final case class RunResult(snapshotId: Long, partsEncoded: Int, nRows: Long,
       origBytes: Long, encBytes: Long, jobSecs: Double)
 
-  /** Narrow pre-shuffle projection with codegen'd range-bucket part ids: epoch
-    * micros instead of Timestamp, no case-class re-materialization — less shuffle
-    * IO and no per-row boxing (a Scala UDF here broke whole-stage codegen). */
+  /** Narrow pre-shuffle projection with codegen'd range-bucket part ids and
+    * the store's page columns, no case-class re-materialization (a Scala UDF
+    * here broke whole-stage codegen). */
   def withPartIds(pages: DataFrame, boundaries: Array[String], offset: Int): DataFrame = {
-    val partIdCol = org.apache.spark.sql.graftshim.Shim.column(
-      graft.functions.RangeBucketId(
-        org.apache.spark.sql.graftshim.Shim.expression(col("url")), boundaries, offset))
+    val partIdCol = Shim.column(
+      graft.functions.RangeBucketId(Shim.expression(col("url")), boundaries, offset))
     pages.select(partIdCol.as("part_id"), col("url"),
-      coalesce(unix_micros(col("warc_ts").cast("timestamp")), lit(0L)).as("ts_us"),
-      col("warc_ts").isNotNull.as("ts_valid"),
+      col("warc_ts").cast("timestamp").as("warc_ts"),
       col("html"), col("text"), col("lang"))
   }
 
   /**
-   * Shuffle-once encode of a prepared narrow frame (part_id, url, ts_us, ts_valid,
-   * html, text, lang) into a fresh STAGED data dir plus per-part lineage entries —
+   * Shuffle-once encode of a prepared narrow frame (part_id, url, warc_ts, html,
+   * text, lang) into a fresh STAGED data dir plus per-part lineage entries —
    * no commit; callers commit (append for waves, replace for compaction).
+   * The frame's part ids must lie within `numParts` consecutive ids: a task's
+   * partition index is its part id mod `numParts`, so each task writes exactly
+   * one part (ids missing from the window leave empty tasks).
    * Returns (relative data dir, entries, seconds in the distributed write).
    */
   def stageEncode(spark: SparkSession, prepared: DataFrame, numParts: Int,
                   root: String,
                   maxBlockBytes: Long = MaxBlockBytes): (String, Seq[SnapshotStore.PartEntry], Double) = {
-    import spark.implicits._
-    // one exchange: co-locate each work unit, order inside for block locality
-    val blocks = prepared
-      .repartition(math.max(numParts, 1), $"part_id")
-      .sortWithinPartitions($"part_id", $"url")
-      .select(col("part_id"), col("url").cast("binary").as("url"), col("ts_us"),
-        col("ts_valid"), col("html"), col("text").cast("binary").as("text"),
-        col("lang").cast("binary").as("lang"))
-      .as[EncRow]
-      .mapPartitions(it => encodePartition(it, maxBlockBytes))
-
+    val width = math.max(numParts, 1)
+    val slot = Shim.column(DirectShufflePartitionID(
+      Shim.expression(pmod(col("part_id"), lit(width)))))
+    val rows = prepared.repartition(width, slot).sortWithinPartitions(col("url"))
+      .select((PageSchema.fieldNames.map(col) :+ col("part_id")).toIndexedSeq: _*)
     val (relDir, absDir) = SnapshotStore.newDataDir(root)
+    val conf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
     val jt0 = System.nanoTime()
-    // the dominant column is `encoded` — already codec-compressed, high-entropy
-    // bytes; running snappy over it again costs CPU in every task for ~0 size win
-    blocks.write.mode(SaveMode.Overwrite)
-      .option("compression", "uncompressed").parquet(absDir)
+    val msgs = rows.queryExecution.toRdd.mapPartitionsWithIndex { (i, it) =>
+      encodeTask(absDir, conf, maxBlockBytes, i, TaskContext.get().taskAttemptId(), it)
+    }.collect()
     val secs = (System.nanoTime() - jt0) / 1e9
+    GraftWriteLayout.publish(absDir, msgs)
+    (relDir, GraftWriteLayout.entriesFrom(msgs, relDir), secs)
+  }
 
-    // lineage + metrics + planning-stats rollup from the staged files' block
-    // metadata (`encoded` is never read): one job, no shuffle — each split
-    // folds its blocks per part through the writers' shared fold, and the
-    // driver merges a part's partials when its blocks span splits
-    val staged = spark.read.parquet(absDir)
-      .withColumn("encoded", lit(null).cast("binary")).as[BlockRow]
-    val entries = staged.rdd.mapPartitions(PartRollup.foldByPart).collect()
-      .groupMapReduce(_._1)(_._2)(_ merge _)
-      .toSeq.sortBy(_._1).map { case (pid, r) => r.entry(pid, relDir) }
-    (relDir, entries, secs)
+  /** Ordinal of `part_id` in [[stageEncode]]'s task rows, after the page columns. */
+  private val PartIdOrdinal = PageSchema.length
+
+  /** One [[stageEncode]] task: its url-sorted rows (the page columns, then
+    * `part_id`) all belong to one part and go through the V2 writer's task
+    * kernel into one staged file. Returns that file's commit message, or
+    * nothing for an empty task. A failed attempt deletes its staging; an
+    * attempt whose result the driver drops never becomes readable, because
+    * only the driver promotes staged files. */
+  private[graft] def encodeTask(absDir: String, conf: SerializableConfiguration,
+      maxBlockBytes: Long, partitionId: Int, attemptId: Long,
+      rows: Iterator[InternalRow]): Iterator[GraftWriterCommitMessage] = {
+    if (!rows.hasNext) return Iterator.empty
+    val first = rows.next()
+    val partId = first.getInt(PartIdOrdinal)
+    val w = new GraftDataWriter(absDir, partId, partitionId, attemptId,
+      conf, PageSchema, maxBlockBytes)
+    try {
+      w.write(first)
+      // a frame whose ids span more than `numParts` would mix parts here
+      rows.foreach { r =>
+        require(r.getInt(PartIdOrdinal) == partId,
+          s"encode task $partitionId got parts $partId and ${r.getInt(PartIdOrdinal)}: " +
+          "the frame's part ids must lie within numParts consecutive ids")
+        w.write(r)
+      }
+      Iterator.single(w.commit())
+    } catch {
+      case t: Throwable => w.abort(); throw t
+    } finally w.close()
   }
 
   /**
@@ -520,10 +525,9 @@ object EncodeJob {
           boundariesFile: String = "BOUNDARIES"): RunResult = {
     // part ids are Int: a streaming batchId*parts namespace past Int.MaxValue
     // would wrap NEGATIVE (colliding with the compaction namespace and earlier
-    // batches) and silently drop work in the resume anti-join — fail fast
+    // batches) and silently drop work in the resume filter — fail fast
     require(partOffset >= 0 && partOffset + parts <= Int.MaxValue.toLong,
       s"part-id namespace [$partOffset, ${partOffset + parts}) exceeds the Int range")
-    import spark.implicits._
     Files.createDirectories(Paths.get(root))
     val boundaries = loadOrCreateBoundaries(root, pages, parts, boundariesFile)
     // a smaller `parts` than the persisted range layout would leave buckets
@@ -538,8 +542,8 @@ object EncodeJob {
 
     val withPart = withPartIds(pages.toDF(), boundaries, partOffset.toInt)
 
-    // RESUME: drop work units already committed (anti-join against the manifest —
-    // broadcast; manifest rows ≪ data at any scale). Only REACHABLE ids can
+    // RESUME: drop work units already committed (a narrow part-id filter per
+    // wave; manifest rows ≪ data at any scale). Only REACHABLE ids can
     // pend: the bucket function yields 0..boundaries.length, so when a skewed
     // sample left fewer distinct boundaries than parts-1, ids past the bucket
     // count can never produce a row — treating them as pending would re-scan
@@ -558,10 +562,10 @@ object EncodeJob {
       // the wave's group already excludes committed ids; a CONCURRENT writer
       // racing the same ids is refused loudly by commitReplacing's uniqueness
       // guard at commit time (a re-filter here would hide the race silently)
-      val pending = withPart
-        .join(broadcast(group.toDF("part_id")), Seq("part_id"), "left_semi")
-
-      val (_, entries, secs) = stageEncode(spark, pending, group.size, root, maxBlockBytes)
+      val pending = withPart.where(col("part_id").isin(group: _*))
+      // ids are ascending: the wave's window runs from its first to its last id
+      val (_, entries, secs) =
+        stageEncode(spark, pending, group.last - group.head + 1, root, maxBlockBytes)
       jobSecs += secs
       // a wave of genuinely empty ranges stages nothing: committing would bump
       // an identical empty snapshot per call (manifest churn, never converges)

@@ -11,23 +11,19 @@ import graft.sources.SnapshotStore.{ColumnStats, PartEntry, PartStats}
  * original/encoded bytes, per-column codec names, and the per-part planning
  * [[PartStats]] (block-group count; per column min of `block_min`, max of
  * `block_max`, the same over `block_str_min/max`, summed `n_nulls`, and the
- * union of `block_str_dict`). Both writers commit through it: the V2 writer
- * task folds its own blocks as it flushes them and ships the resulting entry
- * in its commit message, and [[EncodeJob.stageEncode]] folds the staged block
- * metadata per file split, merging the partial rollups on the driver. The
- * fold is a commutative monoid, so split boundaries cannot change the result.
+ * union of `block_str_dict`). Every writer commits through it: the writer
+ * task ([[graft.sources.v2.GraftDataWriter]], which the V2 write and
+ * [[EncodeJob.stageEncode]] both run) folds its own blocks as it flushes them
+ * and ships the resulting entry in its commit message. The fold is a
+ * commutative monoid, so [[foldByPart]] over a store's blocks, in any order,
+ * yields the committed entries again.
  */
-final class PartRollup extends Serializable {
+final class PartRollup {
   private var cols = Map.empty[String, PartRollup.ColFold]
 
   def add(b: BlockRow): this.type = {
     val f = PartRollup.ColFold.of(b)
     cols = cols.updated(b.column, cols.get(b.column).fold(f)(_ ++ f))
-    this
-  }
-
-  def merge(o: PartRollup): this.type = {
-    o.cols.foreach { case (c, f) => cols = cols.updated(c, cols.get(c).fold(f)(_ ++ f)) }
     this
   }
 
@@ -91,8 +87,7 @@ object PartRollup {
         .filter(_.size <= PartStats.MaxDictValues))
   }
 
-  /** Fold one stream of blocks into per-part rollups (a file split's worth:
-    * a part may span splits, callers [[merge]] the partials by part id). */
+  /** Fold a stream of blocks, in any order, into per-part rollups. */
   def foldByPart(blocks: Iterator[BlockRow]): Iterator[(Int, PartRollup)] = {
     val byPart = scala.collection.mutable.HashMap.empty[Int, PartRollup]
     blocks.foreach(b => byPart.getOrElseUpdate(b.part_id, new PartRollup).add(b))

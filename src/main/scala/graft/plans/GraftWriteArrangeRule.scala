@@ -28,8 +28,7 @@ import org.apache.spark.sql.types.StringType
  *     the full rows);
  *  2. a pass-through exchange — `DirectShufflePartitionID(RangeBucketId(url))`
  *     makes the partition id BE the bucket id, so each task owns exactly one
- *     contiguous url range (the batch job's layout, minus even its
- *     hash-collision task skew);
+ *     contiguous url range (the batch job's layout);
  *  3. an in-partition sort on url — identical to the job's
  *     `sortWithinPartitions(part_id, url)` since a task holds one bucket.
  *
@@ -117,8 +116,7 @@ case class GraftWriteArrangeRule(spark: SparkSession) extends Rule[LogicalPlan] 
   }
 
   private def arrange(query: LogicalPlan, keyName: Option[String]): Option[LogicalPlan] = {
-    // operational kill switch (also the A/B lever: WriteAB measures both paths
-    // in one JVM with it)
+    // operational kill switch
     if (spark.conf.get("spark.graft.write.arrange", "true") == "false") return None
     val url = keyName.flatMap(k => query.output.find(_.name.equalsIgnoreCase(k)))
       .filter(_.dataType == StringType)
@@ -139,7 +137,13 @@ case class GraftWriteArrangeRule(spark: SparkSession) extends Rule[LogicalPlan] 
       // shuffle-partition-many shards. r7: count and boundary sample are ONE
       // url-only pass (EncodeJob.countAndUrlBoundaries) — the separate
       // count() job computed the child a second time, and for a child whose
-      // url projection column pruning cannot cheapen, a third.
+      // url projection column pruning cannot cheapen, a third. The sampler
+      // assumes deterministic upstream row order (its reservoir is seeded
+      // per input partition): a child whose partitions deliver rows in a
+      // varying order (e.g. straight out of a shuffle) gets different split
+      // points per run. The write stays correct — the exchange buckets
+      // every row by whatever boundaries this pass chose — but block
+      // layout is then not reproducible across runs.
       val width = spark.sessionState.conf.numShufflePartitions.toLong
       val (_, parts, boundaries) = graft.jobs.EncodeJob.countAndUrlBoundaries(
         urlsDs, total =>

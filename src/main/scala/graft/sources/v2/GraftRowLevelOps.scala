@@ -246,11 +246,9 @@ final class GraftCowBatchWrite(root: String, op: GraftRowLevelOperation)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val msgs = messages.map(_.asInstanceOf[GraftWriterCommitMessage])
-    // exactly-once: a crashed/zombie attempt may have left a file no commit
-    // message names — sweep it before the manifest can see the dir
-    GraftWriteLayout.sweepStrays(absDir,
-      msgs.iterator.filter(_.fileName != null).map(_.fileName).toSet)
+    val msgs = messages.toSeq.map(_.asInstanceOf[GraftWriterCommitMessage])
+    // exactly-once: only the accepted attempts' files become readable
+    GraftWriteLayout.publish(absDir, msgs)
     val entries = GraftWriteLayout.entriesFrom(msgs, relDir)
     val replaced = op.scannedPartIds
     if (entries.isEmpty && replaced.isEmpty) {

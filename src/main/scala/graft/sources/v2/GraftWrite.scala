@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.example.data.Group
@@ -32,22 +32,23 @@ import graft.sources.SnapshotStore
  *    boundaries + sortWithinPartitions. Blocks therefore carry tight
  *    url min/max metadata, so the prefix/range pruning the read paths rely on
  *    works identically on SQL-written data.
- *  - **Each task IS an encode kernel**: the partition's rows stream through the
- *    same per-block buffering and [[EncodeJob.flushBlock]] codec auto-selection,
- *    and the task writes its own block parquet file (same schema as the batch
- *    writer's, one file per task) straight into a staged data dir. Commit
- *    messages carry the per-part lineage rollup (rows, orig/enc bytes, per-
- *    column codecs, planning stats) folded in-task by [[graft.jobs.PartRollup]]
- *    — no post-write metrics job.
+ *  - **Each task IS an encode kernel** ([[GraftDataWriter]], which the batch
+ *    job's tasks run too): the partition's rows stream through the shared
+ *    [[graft.jobs.BlockEncoder]] block buffering and codec auto-selection,
+ *    and the task writes its own block parquet file (one file per task)
+ *    straight into a staged data dir. Commit messages carry the per-part
+ *    lineage rollup (rows, orig/enc bytes, per-column codecs, planning stats)
+ *    folded in-task by [[graft.jobs.PartRollup]] — no post-write metrics job.
  *  - **Exactly-once commit**: tasks stage attempt-unique files under a
- *    dot-prefixed in-progress name (invisible to all readers) and atomically
- *    rename at task commit — a zombie attempt flushing bytes after the fact
- *    can never surface in a live dir. The driver's [[GraftBatchWrite.commit]]
- *    additionally deletes any staged file NOT named in a commit message, then
+ *    dot-prefixed in-progress name (invisible to all readers) and never
+ *    rename them. The driver's [[GraftBatchWrite.commit]] promotes exactly
+ *    the files its accepted commit messages name
+ *    ([[GraftWriteLayout.publish]]) and deletes every other staged file, then
  *    atomically commits the manifest (append, or replace-all for
- *    `mode("overwrite")` via [[SupportsTruncate]]). A crash before commit
- *    leaves only an orphaned staging dir for the expiry sweep — the store
- *    never sees partial writes.
+ *    `mode("overwrite")` via [[SupportsTruncate]]). A zombie attempt
+ *    flushing bytes after the fact only ever leaves a dot-file; a crash
+ *    before commit leaves only an orphaned staging dir for the expiry sweep —
+ *    the store never sees partial writes.
  *
  * Part-id namespace: each SQL write allocates fresh part ids above every
  * committed (and tombstoned) id — appends never collide with prior work
@@ -116,9 +117,27 @@ private[graft] object GraftWriteLayout {
         n
       }.getOrElse(0)
 
-  /** Exactly-once commit sweep: delete any staged file no commit message
-    * names (crashed/zombie attempts), then — if the whole staging is unused —
-    * the empty dir itself when `dropDirIfEmpty`. */
+  /** Exactly-once commit: promote the staged file of each attempt the driver
+    * accepted (its commit message names it) to its readable name, then delete
+    * every other file in the staging dir — crashed, aborted and zombie
+    * attempts' staging. Tasks never rename, so an attempt whose result was
+    * dropped can leave at most an unreadable dot-file, even when it finishes
+    * after this call (the expiry sweep reclaims those). */
+  def publish(absDir: String, msgs: Seq[GraftWriterCommitMessage]): Unit = {
+    val dir = Paths.get(absDir)
+    val names = msgs.iterator.map(_.fileName).filter(_ != null).toSet
+    names.foreach { f =>
+      val staged = dir.resolve(GraftDataWriter.stagedName(f))
+      // a re-run commit (same messages) finds the file already promoted
+      if (Files.exists(staged))
+        Files.move(staged, dir.resolve(f), java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      else require(Files.exists(dir.resolve(f)), s"staged block file for $f is missing")
+    }
+    sweepStrays(absDir, names)
+  }
+
+  /** Delete any file in the staging dir not in `committedNames`, then — if
+    * the whole staging is unused — the empty dir itself when `dropDirIfEmpty`. */
   def sweepStrays(absDir: String, committedNames: Set[String],
                   dropDirIfEmpty: Boolean = false): Unit = {
     val dir = Paths.get(absDir)
@@ -140,7 +159,7 @@ private[graft] object GraftWriteLayout {
   }
 
   /** Manifest entries from the tasks' commit messages (empty tasks dropped). */
-  def entriesFrom(msgs: Array[GraftWriterCommitMessage],
+  def entriesFrom(msgs: Seq[GraftWriterCommitMessage],
                   relDir: String): Seq[SnapshotStore.PartEntry] =
     msgs.iterator.filter(_.entry.nRows > 0).map(_.entry.copy(dataDir = relDir)).toSeq
 }
@@ -254,11 +273,9 @@ final class GraftBatchWrite(root: String, replaceAll: Boolean,
     // the webtext default, so persisting it for webtext too is just explicit)
     if (GraftDataSource.persistedSchema(root).isEmpty)
       GraftDataSource.writeSchemaSidecar(root, schema)
-    val msgs = messages.map(_.asInstanceOf[GraftWriterCommitMessage])
-    // exactly-once: a crashed/zombie attempt may have left a file no commit
-    // message names — it must not be readable through the manifest's dir scan
-    GraftWriteLayout.sweepStrays(absDir,
-      msgs.iterator.filter(_.fileName != null).map(_.fileName).toSet)
+    val msgs = messages.toSeq.map(_.asInstanceOf[GraftWriterCommitMessage])
+    // exactly-once: only the accepted attempts' files become readable
+    GraftWriteLayout.publish(absDir, msgs)
     val entries = GraftWriteLayout.entriesFrom(msgs, relDir)
     if (entries.isEmpty && !replaceAll) {
       // empty append: nothing to commit, drop the unused staging dir
@@ -295,9 +312,9 @@ final case class GraftDataWriterFactory(absDir: String, partOffset: Int,
  *  - A REPLAYED epoch (engine restart after a commit) re-stages into a fresh
  *    dir, and [[GraftStreamingWrite.commit]] detects its part ids already in
  *    the manifest — the duplicate staging is dropped, nothing double-commits.
- *  - Task attempts stage dot-named `.inprogress` files renamed at task commit
- *    (the batch writer's zombie discipline), and the epoch commit sweeps
- *    unnamed strays before the manifest swap.
+ *  - Task attempts stage dot-named `.inprogress` files, and the epoch commit
+ *    promotes only the files its messages name (the batch writer's zombie
+ *    discipline), sweeping the rest before the manifest swap.
  */
 /** Per-epoch original row totals, persisted at commit (`EPOCH_ROWS` sidecar:
   * one `"<epochId> <rows>"` line per committed epoch). This is what keeps
@@ -381,9 +398,8 @@ final class GraftStreamingWrite(root: String,
   private def absDir(epochId: Long): String = Paths.get(root, relDir(epochId)).toString
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val msgs = messages.map(_.asInstanceOf[GraftWriterCommitMessage])
-    GraftWriteLayout.sweepStrays(absDir(epochId),
-      msgs.iterator.filter(_.fileName != null).map(_.fileName).toSet)
+    val msgs = messages.toSeq.map(_.asInstanceOf[GraftWriterCommitMessage])
+    GraftWriteLayout.publish(absDir(epochId), msgs)
     val entries = GraftWriteLayout.entriesFrom(msgs, relDir(epochId))
     if (entries.isEmpty) { // empty epoch: nothing to commit
       GraftWriteLayout.sweepStrays(absDir(epochId), Set.empty, dropDirIfEmpty = true)
@@ -472,11 +488,14 @@ object GraftDataWriter {
   /** Test hook (single-JVM/local only): when set, exactly ONE writer task
     * throws mid-write after staging a partial file — drives the task-retry
     * abort/cleanup path deterministically. */
-  private[v2] val failNextWriteOnce = new java.util.concurrent.atomic.AtomicBoolean(false)
+  private[graft] val failNextWriteOnce = new java.util.concurrent.atomic.AtomicBoolean(false)
 
-  /** The block-file schema, byte-compatible with what Spark writes for
-    * `Dataset[BlockRow]` in [[EncodeJob.stageEncode]] (standard 3-level lists,
-    * UTF8-annotated strings) — verified against a staged file's footer. */
+  /** The dot-prefixed in-progress name a task stages `fileName` under;
+    * readers skip it (packPartitions and spark.read both ignore "."-files). */
+  def stagedName(fileName: String): String = s".$fileName.inprogress"
+
+  /** The block-file schema: the [[BlockRow]] columns as Spark would write
+    * them (standard 3-level lists, UTF8-annotated strings). */
   private[v2] val BlockFileSchema: MessageType = MessageTypeParser.parseMessageType(
     """message spark_schema {
       |  required int32 part_id;
@@ -513,92 +532,64 @@ object GraftDataWriter {
 }
 
 /**
- * One task's encode kernel: buffers the (sort-key-ordered) partition rows into
- * bounded blocks — the same 64Ki-row / [[EncodeJob.MaxBlockBytes]] flush rule
- * as [[EncodeJob.encodePartition]], push-style — and appends each flushed
- * block's column rows to this task's own parquet file. Memory is one block
- * in flight; the file is attempt-unique so speculative twins cannot collide.
- * Columns are SCHEMA-DRIVEN: strings get textual bounds/dict metadata, binary
- * is opaque, timestamps ride as epoch micros, and the integer family encodes
- * through the width-matched physical codec (i64/i32/i16/i8).
+ * One task's encode kernel, run by every V2 write task and by each
+ * [[EncodeJob.stageEncode]] task: the partition's rows (all of part `partId`,
+ * sort-key ordered) go through a [[graft.jobs.BlockEncoder]], and each block's
+ * column rows are appended to this task's own parquet file as they leave it,
+ * while [[graft.jobs.PartRollup]] folds the part's manifest entry. The file
+ * is staged under an attempt-unique dot-name and never renamed here: only
+ * the driver promotes the files of the results it accepts
+ * ([[GraftWriteLayout.publish]]).
  */
 final class GraftDataWriter(absDir: String, partId: Int, partitionId: Int, taskId: Long,
     conf: org.apache.spark.util.SerializableConfiguration =
       new org.apache.spark.util.SerializableConfiguration(
         new org.apache.hadoop.conf.Configuration()),
-    schema: StructType = GraftDataSource.PageSchema)
+    schema: StructType = GraftDataSource.PageSchema,
+    maxBlockBytes: Long = EncodeJob.MaxBlockBytes)
     extends DataWriter[InternalRow] {
-  import graft.jobs.EncodeJob.{BlockSize, MaxBlockBytes}
 
   // attempt-unique name: partitionId for human mapping, taskId disambiguates
-  // retries/speculation (the driver keeps only files named in commit messages)
+  // retries/speculation (the driver promotes only files named in the
+  // messages it accepts)
   private val fileName = s"part-$partitionId-task-$taskId.parquet"
-  // staged under a dot-prefixed in-progress name, renamed at task commit: a
-  // ZOMBIE attempt (stalled task whose executor dies without abort) can flush
-  // parquet bytes AFTER the driver's stray-file sweep — under the final name
-  // that file would sit in a now-live dir and decode as duplicate groups; a
-  // dot-file is invisible to every reader (packPartitions and spark.read both
-  // skip "."-prefixed files), and only a coordinator-approved task commit ever
-  // renames (the same _temporary-then-rename discipline as Spark's committers)
-  private val inProgressName = s".$fileName.inprogress"
+  // a dot-file is invisible to every reader, so a ZOMBIE attempt (stalled
+  // task whose executor dies without abort) flushing parquet bytes after the
+  // driver's commit can never surface as duplicate groups in a live dir
+  private val stagedPath = Paths.get(absDir, GraftDataWriter.stagedName(fileName))
 
   private var writer: ParquetWriter[Group] = _
   private val factory = new SimpleGroupFactory(GraftDataWriter.BlockFileSchema)
-
-  // ---- schema-driven block buffers (mirrors EncodeJob.encodePartition) ----
-  private val fields = schema.fields
-  // per field: a byte-array buffer (string/binary) OR a long+valid buffer (ints)
-  private val strBufs = new Array[java.util.ArrayList[Array[Byte]]](fields.length)
-  private val textual = new Array[Boolean](fields.length)
-  private val longBufs = new Array[Array[Long]](fields.length)
-  private val validBufs = new Array[Array[Boolean]](fields.length)
-  private val intKind = new Array[graft.core.PhysicalIntType](fields.length)
-  fields.zipWithIndex.foreach { case (f, i) =>
-    f.dataType match {
-      case org.apache.spark.sql.types.StringType =>
-        strBufs(i) = new java.util.ArrayList[Array[Byte]](BlockSize); textual(i) = true
-      case org.apache.spark.sql.types.BinaryType =>
-        strBufs(i) = new java.util.ArrayList[Array[Byte]](BlockSize)
-      case org.apache.spark.sql.types.TimestampType | org.apache.spark.sql.types.LongType =>
-        longBufs(i) = new Array[Long](BlockSize); validBufs(i) = new Array[Boolean](BlockSize)
-        intKind(i) = graft.core.PhysicalIntType.I64
-      case org.apache.spark.sql.types.IntegerType =>
-        longBufs(i) = new Array[Long](BlockSize); validBufs(i) = new Array[Boolean](BlockSize)
-        intKind(i) = graft.core.PhysicalIntType.I32
-      case org.apache.spark.sql.types.ShortType =>
-        longBufs(i) = new Array[Long](BlockSize); validBufs(i) = new Array[Boolean](BlockSize)
-        intKind(i) = graft.core.PhysicalIntType.I16
-      case org.apache.spark.sql.types.ByteType =>
-        longBufs(i) = new Array[Long](BlockSize); validBufs(i) = new Array[Boolean](BlockSize)
-        intKind(i) = graft.core.PhysicalIntType.I8
-      case other => throw new IllegalArgumentException(
-        s"unsupported graft column type ${f.name} ${other.simpleString}")
-    }
-  }
-  private var blockSeq = 0
-  private var n = 0
-  private var bufBytes = 0L
+  private var rows = 0L
 
   // per-part lineage + stats rollup, folded in-task (no metrics job)
   private val rollup = new graft.jobs.PartRollup
 
-  @inline private def lenOf(b: Array[Byte]): Int = if (b == null) 0 else b.length
+  private val encoder = new graft.jobs.BlockEncoder(schema, partId, maxBlockBytes)({ b =>
+    if (writer == null) openWriter()
+    writer.write(toGroup(b))
+    rollup.add(b)
+  })
 
   private def openWriter(): Unit = {
-    val path = new Path(new Path(absDir), inProgressName)
+    val c = conf.value
     writer = ExampleParquetWriter.builder(
-        org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(path, conf.value))
+        org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+          new Path(stagedPath.toString), c))
       .withType(GraftDataWriter.BlockFileSchema)
       // `encoded` dominates and is already codec-compressed high-entropy bytes;
-      // snappy over it costs CPU for ~0 size win (same choice as stageEncode)
+      // snappy over it costs CPU for ~0 size win
       .withCompressionCodec(CompressionCodecName.UNCOMPRESSED)
       // bound per-task memory: parquet buffers a whole row group in heap
       // (uncompressed), and this writer already holds a MaxBlockBytes block
       // buffer — the 128MB default × many concurrent tasks OOMs a default
       // executor at web-page row sizes (measured at the 5M-page checkpoint).
       // Smaller row groups also TIGHTEN read-side pruning: the part/seq
-      // In-filters skip at row-group granularity
-      .withRowGroupSize(32L << 20)
+      // In-filters skip at row-group granularity. Parquet's own
+      // `parquet.block.size` and page-size-check settings still apply when set.
+      .withRowGroupSize(c.getLong(ParquetOutputFormat.BLOCK_SIZE, 32L << 20))
+      .withMinRowCountForPageSizeCheck(ParquetOutputFormat.getMinRowCountForPageSizeCheck(c))
+      .withMaxRowCountForPageSizeCheck(ParquetOutputFormat.getMaxRowCountForPageSizeCheck(c))
       .build()
   }
 
@@ -634,73 +625,27 @@ final class GraftDataWriter(absDir: String, partId: Int, partitionId: Int, taskI
     g
   }
 
-  private def flush(): Unit = {
-    if (n == 0) return
-    if (writer == null) openWriter()
-    var i = 0
-    while (i < fields.length) {
-      val b =
-        if (strBufs(i) != null)
-          EncodeJob.strBlockRow(partId, blockSeq, fields(i).name, strBufs(i), textual(i))
-        else
-          EncodeJob.intBlockRow(partId, blockSeq, fields(i).name,
-            longBufs(i), validBufs(i), n, intKind(i))
-      writer.write(toGroup(b))
-      rollup.add(b)
-      if (strBufs(i) != null) strBufs(i).clear()
-      i += 1
-    }
-    n = 0; bufBytes = 0L; blockSeq += 1
-  }
-
   override def write(row: InternalRow): Unit = {
-    var i = 0
-    while (i < fields.length) {
-      if (strBufs(i) != null) {
-        val v =
-          if (row.isNullAt(i)) null
-          else if (textual(i)) row.getUTF8String(i).getBytes
-          else row.getBinary(i)
-        strBufs(i).add(v)
-        bufBytes += lenOf(v)
-      } else {
-        if (row.isNullAt(i)) { longBufs(i)(n) = 0L; validBufs(i)(n) = false }
-        else {
-          longBufs(i)(n) = fields(i).dataType match {
-            case org.apache.spark.sql.types.IntegerType => row.getInt(i).toLong
-            case org.apache.spark.sql.types.ShortType => row.getShort(i).toLong
-            case org.apache.spark.sql.types.ByteType => row.getByte(i).toLong
-            case _ => row.getLong(i) // timestamp micros / bigint
-          }
-          validBufs(i)(n) = true
-        }
-        bufBytes += 8L
-      }
-      i += 1
-    }
-    n += 1
-    bufBytes += 8L
-    if (n == 50 && GraftDataWriter.failNextWriteOnce.compareAndSet(true, false)) {
-      flush() // leave a partial staged file so abort/cleanup is actually exercised
+    encoder.add(row)
+    rows += 1
+    if (rows == 50 && GraftDataWriter.failNextWriteOnce.compareAndSet(true, false)) {
+      encoder.flush() // leave a partial staged file so abort/cleanup is actually exercised
       throw new RuntimeException("graft test hook: injected write failure")
     }
-    if (n == BlockSize || bufBytes >= MaxBlockBytes) flush()
   }
 
-  override def commit(): WriterCommitMessage = {
-    flush()
+  /** Flush and close the staged file; the message names it (null when the
+    * task saw no rows) for the driver to promote. */
+  override def commit(): GraftWriterCommitMessage = {
+    encoder.flush()
     if (writer != null) { writer.close(); writer = null }
     val e = rollup.entry(partId, dataDir = "")
-    if (e.nRows > 0) // task commit = atomic promote to the readable name
-      Files.move(Paths.get(absDir, inProgressName), Paths.get(absDir, fileName),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     GraftWriterCommitMessage(if (e.nRows > 0) fileName else null, e)
   }
 
   override def abort(): Unit = {
     if (writer != null) { writer.close(); writer = null }
-    Files.deleteIfExists(Paths.get(absDir, inProgressName))
-    Files.deleteIfExists(Paths.get(absDir, fileName))
+    Files.deleteIfExists(stagedPath)
   }
 
   override def close(): Unit =
