@@ -38,9 +38,12 @@ object CompactJob {
           minRows: Long = EncodeJob.BlockSize / 2,
           targetRowsPerPart: Long = EncodeJob.BlockSize): CompactResult = {
     DecodeJob.requireWebtext(root) // the rewrite decodes/re-encodes WebPage rows
-    val entries = SnapshotStore.currentEntries(root)
+    // ONE pointer read: the parts are chosen from, and decoded at, this
+    // snapshot's immutable manifest (a concurrent commit cannot slip between)
+    val pinned = SnapshotStore.currentSnapshotId(root)
+    val entries = pinned.fold(Seq.empty[SnapshotStore.PartEntry])(SnapshotStore.entriesAt(root, _))
+    val curSnap = pinned.getOrElse(0L)
     val small = entries.filter(_.nRows < minRows)
-    val curSnap = SnapshotStore.currentSnapshotId(root).getOrElse(0L)
     if (small.size < 2)
       return CompactResult(curSnap, 0, 0, 0L)
 
@@ -50,9 +53,7 @@ object CompactJob {
 
     val base = SnapshotStore.nextRehomeBase(root, newParts)
 
-    // decode through the SAME entry list that chose the ids (a manifest
-    // re-read could race a concurrent commit — see DecodeJob.decodePartsOf)
-    val pages = DecodeJob.decodePartsOf(spark, root, entries, smallIds)
+    val pages = DecodeJob.decodePartsOf(spark, root, curSnap, smallIds)
     // fresh boundaries for the compacted subset; the store-level BOUNDARIES file
     // (the batch job's work-unit definition) is deliberately left untouched.
     // totalRows comes from the manifest: pages is a full DECODE, so the

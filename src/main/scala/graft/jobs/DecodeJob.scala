@@ -1,25 +1,22 @@
 package graft.jobs
 
-import java.nio.charset.StandardCharsets
-import java.sql.Timestamp
-
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.codec.{IntBlockCodec, StringBlockCodec}
 import graft.sources.{SnapshotStore, WebPage}
 
 /**
- * Decode job: read the committed snapshot's block files, reassemble pages, and verify
- * the per-url byte-identical `text` invariant (BASELINE.json input_hint).
+ * Decode job: the typed and projected decode API over a committed snapshot,
+ * and the per-url byte-identical `text` check (BASELINE.json input_hint).
  *
- * Reassembly is SHUFFLE-FREE on the primary path: a group's 5 column blocks are
- * co-written consecutively by one encode task, so a mapPartitions kernel groups
- * consecutive rows in place ([[hybridReassemble]]); only groups that straddle a
- * file-split boundary (detected by a column-pruned key pre-scan) are repaired via
- * a groupByKey shuffle. Each group is one bounded block (≤64Ki rows × 5 columns),
- * so executor memory stays flat at any table size.
+ * Every decode here is the V2 scan (`spark.read.format("graft")`,
+ * [[graft.sources.v2.GraftScan]]): each task reads whole block files, so a
+ * block group never straddles a task and the scan needs no shuffle and no
+ * split repair. Block predicates become exact row filters; the scan pushes
+ * them down and prunes groups with [[planPrunedKeys]], and Spark still runs
+ * them on the decoded rows. Building a decode runs no Spark job; the scan is
+ * planned at the first action.
  */
 object DecodeJob {
 
@@ -43,7 +40,7 @@ object DecodeJob {
     if (entries.isEmpty) {
       // legal empty-ENTRIES snapshot (created-but-unloaded table, truncate,
       // all-matched DELETE): a correctly-typed empty blocks scan lets every
-      // downstream path (reassembly, metadata scans, stats) yield its natural
+      // downstream path (metadata scans, stats) yield its natural
       // zero-row/zero-count result (spark.read.parquet cannot take zero paths)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.Encoders.product[BlockRow].schema)
@@ -75,10 +72,10 @@ object DecodeJob {
     require(SnapshotStore.currentSnapshotId(root).isDefined,
       s"no committed snapshot under $root")
 
-  /** The typed decode API reassembles WebPage rows — a generalized-schema
-    * store (SCHEMA sidecar, r6) would fail deep inside reassembly with a
-    * confusing column-set error; name the problem at the entry point. The V2
-    * SQL surface reads every schema. */
+  /** The typed decode API reads WebPage rows — a generalized-schema store
+    * (SCHEMA sidecar, r6) would fail at `.as[WebPage]` with a confusing
+    * column error; name the problem at the entry point. The V2 SQL surface
+    * reads every schema. */
   private[graft] def requireWebtext(root: String): Unit = {
     val s = graft.sources.v2.GraftDataSource.storeSchema(root)
     require(s == graft.sources.v2.GraftDataSource.PageSchema,
@@ -86,24 +83,11 @@ object DecodeJob {
       s"${s.simpleString} — read it via spark.read.format(\"graft\").load(...)")
   }
 
-  /** Time travel: read the blocks visible at a specific committed snapshot
-    * (entriesAt fails loudly when no such manifest exists; an empty manifest
-    * reads as empty). */
-  def blocksAt(spark: SparkSession, root: String, snapshotId: Long) =
-    fromEntries(spark, root, SnapshotStore.entriesAt(root, snapshotId))
-
-  private def tsFromMicros(us: Long): Timestamp = {
-    val t = new Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
-    t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-    t
-  }
-
   /** Decode the full snapshot back into pages. */
   def decode(spark: SparkSession, root: String): Dataset[WebPage] = {
     requireWebtext(root)
-    val t0 = graft.sources.v2.GraftDataSource.storeIdentityToken(root)
-    val df = blocks(spark, root)
-    reassemble(spark, df, preScanKey(spark, root, None, PageColumns, t0))
+    requireStore(root)
+    spark.read.format("graft").load(root).as(Encoders.product[WebPage])
   }
 
   // ---------------- predicate-pushed decode (decoded-view API) ----------------
@@ -196,6 +180,9 @@ object DecodeJob {
       (col("block_max").isNull || col("block_max") >= lo)
   }
 
+  /** 1900-01-01T00:00:00Z in epoch micros. */
+  private val PushableTsFloorMicros = -2208988800L * 1000000L
+
   /** Exact row-level form of a predicate over decoded pages. */
   private def rowCond(p: BlockPredicate): org.apache.spark.sql.Column = p match {
     case StrEq(c, v) => col(c) === v
@@ -203,7 +190,16 @@ object DecodeJob {
     case StrPrefix(c, p) => col(c).startsWith(p)
     case StrRange(c, lo, hi) =>
       lo.map(col(c) >= _).getOrElse(lit(true)) && hi.map(col(c) <= _).getOrElse(lit(true))
-    case TsRange(lo, hi) => unix_micros(col("warc_ts")).between(lo, hi)
+    // exact on micros; the timestamp comparisons are what the V2 scan can
+    // push. They are kept to bounds Spark hands the scan unchanged: before
+    // 1900 it may rebase a timestamp literal between calendars, and near the
+    // Long extremes that conversion overflows
+    case TsRange(lo, hi) =>
+      def pushable(us: Long) = us >= PushableTsFloorMicros
+      val ts = col("warc_ts")
+      unix_micros(ts).between(lo, hi) &&
+        (if (pushable(lo)) ts >= timestamp_micros(lit(lo)) else lit(true)) &&
+        (if (pushable(hi)) ts <= timestamp_micros(lit(hi)) else lit(true))
     // raw stored value (timestamp columns of generalized stores decode as
     // epoch-micros longs on the V2 surface, where residuals are Spark-side
     // anyway; this row form serves the int-typed decode API columns)
@@ -325,42 +321,12 @@ object DecodeJob {
     else if (survivors.size > keyCollectThreshold(totalGroupsEstimate)) None
     else Some(survivors.iterator.map(e => (e.partId, 0)).toArray)
 
-  /** Restrict a blocks scan to collected group keys: few → pushed part/seq
-    * In-filters + codegen'd packed-key isin (row groups of pruned blocks are
-    * skipped by parquet statistics — no IO, and derived scans keep column
-    * pruning); many → broadcast semi-join of the already-collected keys. */
-  /** One packed block-group key: `(part_id << 32) | block_seq` — THE key
-    * format shared by the decode API's pushed filters and the V2 scan's
-    * broadcast key arrays ([[graft.sources.v2.GraftDataSource]]); a single
+  /** One packed block-group key: `(part_id << 32) | block_seq` — the V2
+    * scan's broadcast key format ([[graft.sources.v2.GraftDataSource]]); one
     * definition so sign/width handling (negative rehomed part ids!) cannot
-    * silently diverge between the two surfaces. */
+    * diverge between the planner and the reader. */
   private[graft] def packKey(pid: Int, seq: Int): Long =
     (pid.toLong << 32) | (seq.toLong & 0xffffffffL)
-
-  /** In-literal planning cutoff for [[keysOnly]]: past this many keys the
-    * pushed isin trees stop paying (driver expression-tree + codegen blowup)
-    * and the broadcast semi-join takes over. Deliberately NOT
-    * [[MaxFallbackGroups]] — that is a reassembly-fallback test lever, and
-    * moving it must not flip pruning plans in an unrelated component. */
-  private val MaxInListKeys = 4096
-
-  private def keysOnly(blocksDf: org.apache.spark.sql.DataFrame,
-                       keys: Array[(Int, Int)]): org.apache.spark.sql.DataFrame = {
-    val spark = blocksDf.sparkSession
-    import spark.implicits._
-    if (keys.length <= MaxInListKeys) {
-      val pids = keys.map(_._1).distinct.toSeq.map(Int.box)
-      val seqs = keys.map(_._2).distinct.toSeq.map(Int.box)
-      val packed = keys.map(k => Long.box(packKey(k._1, k._2))).toSeq
-      val packedCol = shiftleft(col("part_id").cast("long"), 32)
-        .bitwiseOR(col("block_seq").cast("long").bitwiseAND(lit(0xffffffffL)))
-      blocksDf.where(col("part_id").isin(pids: _*) && col("block_seq").isin(seqs: _*) &&
-        packedCol.isin(packed: _*))
-    } else {
-      blocksDf.join(broadcast(keys.toSeq.toDF("part_id", "block_seq")),
-        Seq("part_id", "block_seq"), "left_semi")
-    }
-  }
 
   /**
    * Driver-side key-collect ceiling: above this many surviving groups the
@@ -573,62 +539,32 @@ object DecodeJob {
    * metadata (block_min/block_max for warc_ts, block_str_min/max/dict for string
    * columns) excludes every predicate value are pruned BEFORE decompression —
    * the north-star "predicate-push onto dictionary and FoR metadata" surfaced on
-   * the decoded-view API users actually write. Exact row filters still apply
-   * after decode, so results equal `decode(...).filter(...)`. Plan shape: see
-   * [[keysOnly]]; reassembly stays on the shuffle-free fast path either way.
+   * the decoded-view API users actually write. The predicates' exact row forms
+   * ([[rowCond]]) push into the V2 scan, which plans the surviving groups from
+   * one pinned manifest read and keeps every filter as a residual, so results
+   * equal `decode(...).filter(...)`.
    */
   def decodeWhere(spark: SparkSession, root: String,
                   predicates: Seq[BlockPredicate]): Dataset[WebPage] = {
     if (predicates.isEmpty) return decode(spark, root) // no filter = plain decode
-    requireWebtext(root)
-    // ONE manifest read feeds both the metadata scan and the data scan: a
-    // compaction (StoreMaintenance) committing between two reads would re-home
-    // rows into part ids the collected keys no longer match — silent row loss
-    requireStore(root)
-    val entries = SnapshotStore.currentEntries(root)
-    val blocksDf = fromEntries(spark, root, entries)
-    val exact = predicates.map(rowCond).reduce(_ && _)
-    planPrunedKeys(spark, root, entries, predicates) match {
-      case Some(keys) => reassemble(spark, keysOnly(blocksDf, keys)).filter(exact)
-      // non-selective predicate: pruning can't pay — decode everything and
-      // filter exactly (identical rows; no driver-side key materialization)
-      case None => reassemble(spark, blocksDf).filter(exact)
-    }
+    requireValidPredicates(predicates, None)
+    decode(spark, root).where(predicates.map(rowCond).reduce(_ && _))
   }
 
   /**
    * Projected AND predicate-pushed decode — the everyday read shape ("url, lang
    * where lang = 'en' and warc_ts in range"): block groups prune via metadata
-   * ([[decodeWhere]]), the `column` In-filter prunes unwanted columns' blocks
-   * ([[decodeColumns]]), predicate columns not in `wanted` are decoded for the
-   * exact filter and then dropped. Output schema follows [[decodeColumns]]
-   * (warc_ts as epoch-micros LongType, html as BinaryType).
+   * ([[decodeWhere]]), the scan reads only the blocks of `wanted` and the
+   * predicate columns, which are dropped after the exact filter. Output schema
+   * follows [[decodeColumns]] (warc_ts as epoch-micros LongType, html as
+   * BinaryType).
    */
   def decodeColumnsWhere(spark: SparkSession, root: String, wanted: Seq[String],
                          predicates: Seq[BlockPredicate]): org.apache.spark.sql.DataFrame = {
-    require(wanted.nonEmpty, "no columns requested")
-    require(wanted.forall(PageColumns), // fail fast: a typo'd name would silently yield nulls
-      s"unknown columns ${wanted.filterNot(PageColumns)}; available: $PageColumns")
+    requireColumns(wanted)
     if (predicates.isEmpty) return decodeColumns(spark, root, wanted) // projection-only
-    requireStore(root)
-    requireWebtext(root)
-    val entries = SnapshotStore.currentEntries(root) // ONE manifest read for both scans (see decodeWhere)
-    val blocksDf = fromEntries(spark, root, entries)
-    val effective = (wanted ++ predicates.map(_.column)).distinct
-    val colFiltered = blocksDf.where(col("column").isin(effective: _*))
-    val filtered = planPrunedKeys(spark, root, entries, predicates) match {
-      case Some(keys) => keysOnly(colFiltered, keys)
-      case None => colFiltered // non-selective: column pruning only (see decodeWhere)
-    }
-    val exact = predicates.map {
-      // only the TsRange arm differs from rowCond: the projected form carries
-      // warc_ts AS raw micros, so no unix_micros conversion applies
-      case TsRange(lo, hi) => col("warc_ts").between(lo, hi)
-      case p => rowCond(p)
-    }.reduce(_ && _)
-    projectedReassemble(spark, filtered, effective)
-      .where(exact)
-      .select(wanted.map(col): _*)
+    requireValidPredicates(predicates, None)
+    projected(decode(spark, root).where(predicates.map(rowCond).reduce(_ && _)), wanted)
   }
 
   /**
@@ -661,323 +597,51 @@ object DecodeJob {
   /** Time travel: decode the pages visible at a specific committed snapshot. */
   def decodeAt(spark: SparkSession, root: String, snapshotId: Long): Dataset[WebPage] = {
     requireWebtext(root)
-    val t0 = graft.sources.v2.GraftDataSource.storeIdentityToken(root)
-    val df = blocksAt(spark, root, snapshotId)
-    reassemble(spark, df, preScanKey(spark, root, Some(snapshotId), PageColumns, t0))
+    spark.read.format("graft").option("snapshotId", snapshotId).load(root)
+      .as(Encoders.product[WebPage])
   }
 
-  /** Decode only the given parts (compaction input). Small lists become an `isin`
-    * (pushed to parquet as an In filter); large ones — a year of streaming batches
-    * can leave 100k+ small parts — use a broadcast semi-join instead of a
-    * 100k-literal expression tree. */
-  def decodeParts(spark: SparkSession, root: String, partIds: Seq[Int]): Dataset[WebPage] = {
-    requireWebtext(root)
-    reassemble(spark, partsOnly(blocks(spark, root), partIds))
-  }
-
-  /** [[decodeParts]] over a PINNED entry set (see [[matchingGroupKeysOf]]):
-    * the rewrite jobs must decode through the SAME manifest read that chose
-    * the parts, or a compaction between the reads re-homes the rows out from
-    * under the chosen ids. */
+  /** The pages of `partIds` in snapshot `snapshotId` — the CompactJob and
+    * DeleteJob rewrite input. Callers choose the ids from
+    * `SnapshotStore.entriesAt(root, snapshotId)`, so the choice and the read
+    * come from one immutable manifest: a compaction committing in between
+    * cannot re-home the chosen rows. The `_part_id` filter reaches the scan,
+    * which plans only those parts and never opens a file named by another
+    * part ([[graft.sources.v2.GraftDataWriter.partIdOf]]). */
   private[graft] def decodePartsOf(spark: SparkSession, root: String,
-      entries: Seq[SnapshotStore.PartEntry], partIds: Seq[Int]): Dataset[WebPage] =
-    reassemble(spark, partsOnly(fromEntries(spark, root, entries), partIds))
+      snapshotId: Long, partIds: Seq[Int]): Dataset[WebPage] =
+    spark.read.format("graft").option("snapshotId", snapshotId).load(root)
+      .where(col("_part_id").isin(partIds.map(Int.box): _*))
+      .as(Encoders.product[WebPage])
 
-  // ---------------- reassembly (shuffle-free fast path + shuffle fallback) ----------------
-
-  private type RawBlock = (Int, Int, String, Array[Byte])
   private val PageColumns = Set("url", "warc_ts", "html", "text", "lang")
 
-  /**
-   * When more than this many block groups need the shuffle fallback, the input is
-   * not grouped on disk (foreign/unsorted store) — reassemble everything through
-   * the shuffle instead of collecting an unbounded key list to the driver.
-   * `private[jobs]` var so tests can force the full-fallback branch.
-   */
-  private[graft] var MaxFallbackGroups = 4096
-
-  /** Iterate consecutive same-(part_id, block_seq) runs as (pid, seq, column -> bytes). */
-  private def consecutiveRuns(it: Iterator[RawBlock])
-      : Iterator[(Int, Int, Map[String, Array[Byte]])] =
-    new Iterator[(Int, Int, Map[String, Array[Byte]])] {
-      private val buf = it.buffered
-      override def hasNext: Boolean = buf.hasNext
-      override def next(): (Int, Int, Map[String, Array[Byte]]) = {
-        val (pid, seq, _, _) = buf.head
-        var m = Map.empty[String, Array[Byte]]
-        while (buf.hasNext && buf.head._1 == pid && buf.head._2 == seq) {
-          val r = buf.next()
-          m = m.updated(r._3, r._4)
-        }
-        (pid, seq, m)
-      }
-    }
-
-  /** Keys of consecutive runs whose column set is NOT exactly `expected`. */
-  private def incompleteRunKeys(it: Iterator[(Int, Int, String)],
-                                expected: Set[String]): Iterator[(Int, Int)] =
-    new Iterator[(Int, Int)] {
-      private val buf = it.buffered
-      private var pending: (Int, Int) = _
-      private def advance(): Unit =
-        while (pending == null && buf.hasNext) {
-          val (pid, seq, _) = buf.head
-          var cols = Set.empty[String]
-          while (buf.hasNext && buf.head._1 == pid && buf.head._2 == seq)
-            cols += buf.next()._3
-          if (cols != expected) pending = (pid, seq)
-        }
-      override def hasNext: Boolean = { advance(); pending != null }
-      override def next(): (Int, Int) = {
-        advance()
-        val r = pending; pending = null
-        if (r == null) throw new NoSuchElementException
-        r
-      }
-    }
-
-  /**
-   * Fast-path decision for one consecutive run. Correctness of the split repair
-   * rests on the key pre-scan and the data scan planning IDENTICAL file-split
-   * boundaries (both derive from one `blocksDf`, and split planning is a pure
-   * function of file sizes + session confs). If that invariant ever breaks —
-   * e.g. `spark.sql.files.maxPartitionBytes` changed between the eager pre-scan
-   * and a later action, or dynamic parallelism shifted `bytesPerCore` — a group
-   * can straddle a NEW boundary the pre-scan never saw. Silently returning empty
-   * there would lose the whole group's rows; instead the misalignment fails
-   * loudly with the remediation in the message.
-   */
-  private[jobs] def fastPathGroup[T](pid: Int, seq: Int, cols: Map[String, Array[Byte]],
-      expected: Set[String], badSet: Set[(Int, Int)])(
-      decodeGroup: Map[String, Array[Byte]] => Iterator[T]): Iterator[T] =
-    if (badSet((pid, seq))) Iterator.empty // straddling group: the fallback owns it
-    else if (cols.keySet == expected) decodeGroup(cols)
-    else throw new IllegalStateException(
-      s"block group (part_id=$pid, block_seq=$seq) is incomplete in the data scan " +
-      s"(saw columns ${cols.keySet.toSeq.sorted.mkString(",")}, expected " +
-      s"${expected.toSeq.sorted.mkString(",")}) but the key pre-scan did not flag it: " +
-      "file-split boundaries drifted between the two plannings (split-relevant confs " +
-      "or parallelism changed mid-query). Re-run the decode; set " +
-      "GRAFT_DECODE_FORCE_SHUFFLE=1 to force the always-correct shuffle path.")
-
-  /** The always-correct path: one wide exchange grouping every block by key. */
-  private def shuffleReassemble[T](raw: Dataset[RawBlock],
-      enc: org.apache.spark.sql.Encoder[T])(
-      decodeGroup: Map[String, Array[Byte]] => Iterator[T]): Dataset[T] =
-    raw.groupByKey { case (pid, seq, _, _) => (pid, seq) }(
-        org.apache.spark.sql.Encoders.tuple(Encoders.scalaInt, Encoders.scalaInt))
-      .flatMapGroups { (_: (Int, Int), it: Iterator[RawBlock]) =>
-        decodeGroup(it.map(r => r._3 -> r._4).toMap)
-      }(enc)
-
-  /**
-   * Shuffle-free reassembly of co-written block groups. The encode kernel emits
-   * one group's column blocks consecutively into one task's parquet file, so at
-   * read time groups are already contiguous: a mapPartitions kernel groups
-   * consecutive rows with ZERO exchange — at table scale that removes a
-   * full-dataset shuffle (every encoded byte through disk+network) from the
-   * primary read path.
-   *
-   * Robustness: a parquet file bigger than `spark.sql.files.maxPartitionBytes`
-   * can be split mid-group. A column-pruned key-only pre-scan (parquet reads just
-   * part_id/block_seq/column — the multi-MB `encoded` column is never touched)
-   * finds groups that are not contiguous-and-complete within a partition; those
-   * few are re-read via a pushed-filter scan and repaired through the shuffle
-   * path. More than [[MaxFallbackGroups]] of them means the input simply is not
-   * grouped (foreign store) — everything falls back to the shuffle. Both scans
-   * derive from the same `blocksDf`, so Spark's deterministic size-based file
-   * partitioning gives them identical partition boundaries.
-   */
-  /** Memoized straddling-group pre-scan results (r7): for an immutable
-    * snapshot + column set + the split-relevant session confs, the pre-scan's
-    * bad-key set is a constant, yet it ran a Spark job on EVERY decode call.
-    * None = over [[MaxFallbackGroups]] (callers take the full shuffle path).
-    * A stale hit cannot corrupt: a wrongly-EMPTY set trips fastPathGroup's
-    * loud misalignment error, a wrongly-extra key just re-reads that group
-    * through the always-correct shuffle repair. Bounded LRU. */
-  private val badKeysMemo =
-    new java.util.LinkedHashMap[AnyRef, Option[Array[(Int, Int)]]](32, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[AnyRef, Option[Array[(Int, Int)]]]): Boolean = size > 128
-    }
-
-  /** Pre-scan memo key for a whole-snapshot read of `root`: the RESOLVED
-    * snapshot id (the requested one, else the current pointer's) and the
-    * store identity token pin the snapshot bytes, so a token collision alone
-    * cannot alias two snapshots; the conf values pin Spark's deterministic
-    * file-split planning (the invariant [[fastPathGroup]] documents).
-    * `tokenBefore` is the token the CALLER read before walking the manifest;
-    * None (= don't memoize) when the store has no pointer or a commit raced
-    * the manifest read — the entries might not belong to the token. */
-  private[jobs] def preScanKey(spark: SparkSession, root: String,
-      snapshotId: Option[Long], expected: Set[String],
-      tokenBefore: Long): Option[AnyRef] = {
-    // resolved BEFORE the race re-check, so an unchanged token also vouches
-    // that the pointer read here is the one the caller's entries came from
-    val resolved = snapshotId.orElse(SnapshotStore.currentSnapshotId(root))
-    if (tokenBefore == -1L || resolved.isEmpty ||
-        graft.sources.v2.GraftDataSource.storeIdentityToken(root) != tokenBefore)
-      return None
-    val c = spark.sessionState.conf
-    Some((root, tokenBefore, resolved.get,
-      expected.toSeq.sorted, c.filesMaxPartitionBytes, c.filesOpenCostInBytes,
-      c.filesMinPartitionNum, spark.sparkContext.defaultParallelism,
-      MaxFallbackGroups)) // test-mutable gate: never serve across altered gates
+  private def requireColumns(wanted: Seq[String]): Unit = {
+    require(wanted.nonEmpty, "no columns requested")
+    require(wanted.forall(PageColumns), // fail fast: a typo'd name would silently yield nulls
+      s"unknown columns ${wanted.filterNot(PageColumns)}; available: $PageColumns")
   }
 
-  private def hybridReassemble[T](spark: SparkSession,
-      blocksDf: org.apache.spark.sql.DataFrame, expected: Set[String],
-      enc: org.apache.spark.sql.Encoder[T],
-      memoKey: Option[AnyRef] = None)(
-      decodeGroup: Map[String, Array[Byte]] => Iterator[T]): Dataset[T] = {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    val raw = blocksDf.select(col("part_id"), col("block_seq"), col("column"), col("encoded"))
-      .as[RawBlock]
-    // operational escape hatch (and the bench's A/B lever): force the
-    // always-correct shuffle path regardless of layout
-    if (sys.env.get("GRAFT_DECODE_FORCE_SHUFFLE").contains("1"))
-      return shuffleReassemble(raw, enc)(decodeGroup)
-    val exp = expected
-    def computeBadKeys(): Option[Array[(Int, Int)]] = {
-      val badRaw = blocksDf.select(col("part_id"), col("block_seq"), col("column"))
-        .as[(Int, Int, String)]
-        .mapPartitions(it => incompleteRunKeys(it, exp))
-        .take(MaxFallbackGroups + 1)
-      // truncation check on the RAW row count: a fragmented key can surface from
-      // two partitions, so deduping a truncated sample would undercount and let
-      // the partial-fallback path run with an incomplete badSet (dropped groups)
-      if (badRaw.length > MaxFallbackGroups) None else Some(badRaw.distinct)
-    }
-    val badKeysOpt = memoKey match {
-      case Some(key) =>
-        badKeysMemo.synchronized { if (badKeysMemo.containsKey(key)) badKeysMemo.get(key) else null } match {
-          case null =>
-            val computed = computeBadKeys() // outside the lock: it is a Spark job
-            badKeysMemo.synchronized { badKeysMemo.put(key, computed); () }
-            computed
-          case hit => hit
-        }
-      case None => computeBadKeys()
-    }
-    if (badKeysOpt.isEmpty) return shuffleReassemble(raw, enc)(decodeGroup)
-    val badKeys = badKeysOpt.get
-    val badSet = badKeys.toSet
-    val fast = raw.mapPartitions { it =>
-      consecutiveRuns(it).flatMap { case (pid, seq, cols) =>
-        fastPathGroup(pid, seq, cols, exp, badSet)(decodeGroup)
-      }
-    }(enc)
-    if (badSet.isEmpty) fast
-    else {
-      // re-fetch just the straddling groups: part_id/block_seq In-filters reach
-      // parquet (row-group pruning), the exact pair filter runs on what's left
-      val pids = badSet.map(_._1).toSeq.map(Int.box)
-      val seqs = badSet.map(_._2).toSeq.map(Int.box)
-      val leftover = blocksDf
-        .where(col("part_id").isin(pids: _*) && col("block_seq").isin(seqs: _*))
-        .select(col("part_id"), col("block_seq"), col("column"), col("encoded"))
-        .as[RawBlock]
-        .filter(r => badSet((r._1, r._2)))
-      fast.union(shuffleReassemble(leftover, enc)(decodeGroup))
-    }
-  }
-
-  /** Decode one complete 5-column group into pages. */
-  private def decodePageGroup(cols: Map[String, Array[Byte]]): Iterator[WebPage] = {
-    def str(bs: Array[Byte]): String =
-      if (bs == null) null else new String(bs, StandardCharsets.UTF_8)
-    val urls = StringBlockCodec.decode(cols("url"))
-    val (ts, tsValid) = IntBlockCodec.decodeNullable(cols("warc_ts"))
-    val htmls = StringBlockCodec.decode(cols("html"))
-    val texts = StringBlockCodec.decode(cols("text"))
-    val langs = StringBlockCodec.decode(cols("lang"))
-    urls.indices.iterator.map { i =>
-      WebPage(
-        str(urls(i)),
-        if (tsValid(i)) tsFromMicros(ts(i)) else null,
-        htmls(i),
-        str(texts(i)),
-        str(langs(i)))
-    }
-  }
-
-  private[jobs] def reassemble(spark: SparkSession,
-                               blocksDf: org.apache.spark.sql.DataFrame,
-                               memoKey: Option[AnyRef] = None): Dataset[WebPage] =
-    hybridReassemble(spark, blocksDf, PageColumns,
-      Encoders.product[WebPage], memoKey)(decodePageGroup)
+  /** The requested page columns in request order, `warc_ts` as epoch micros. */
+  private def projected(pages: Dataset[_], wanted: Seq[String]): org.apache.spark.sql.DataFrame =
+    pages.select(wanted.map {
+      case "warc_ts" => unix_micros(col("warc_ts")).as("warc_ts")
+      case c => col(c)
+    }: _*)
 
   /**
-   * Projected decode: reassemble ONLY the requested columns. The blocks scan
-   * filters on `column`, which reaches parquet as a pushed `In` filter — row
-   * groups holding unwanted columns (e.g. multi-KB text/html blocks when only
-   * url+lang are asked for) are skipped by statistics before any IO-decompression,
-   * the columnar-store read-path benefit at 100-TB scale.
+   * Projected decode: decode ONLY the requested columns. The V2 scan prunes
+   * to these columns, so blocks of the others (e.g. multi-KB text/html blocks
+   * when only url+lang are asked for) are skipped by parquet row-group
+   * statistics before any IO or decompression.
    *
    * Output schema: one field per requested column in request order — `warc_ts`
    * as nullable epoch-micros LongType, `html` as BinaryType (opaque bytes, no
    * UTF-8 re-interpretation), everything else StringType.
    */
   def decodeColumns(spark: SparkSession, root: String, wanted: Seq[String]): org.apache.spark.sql.DataFrame = {
-    require(wanted.nonEmpty, "no columns requested")
-    require(wanted.forall(PageColumns),
-      s"unknown columns ${wanted.filterNot(PageColumns)}; available: $PageColumns")
-    requireWebtext(root)
-    // memoizable: the pre-scan's input is fully determined by (snapshot,
-    // wanted column set, split confs) — all in the key
-    val t0 = graft.sources.v2.GraftDataSource.storeIdentityToken(root)
-    val df = blocks(spark, root).where(col("column").isin(wanted: _*))
-    projectedReassemble(spark, df, wanted,
-      preScanKey(spark, root, None, wanted.toSet, t0))
-  }
-
-  /** Column-projected hybrid reassembly of a (possibly pre-pruned) blocks scan. */
-  private def projectedReassemble(spark: SparkSession,
-      filteredBlocks: org.apache.spark.sql.DataFrame,
-      wanted: Seq[String],
-      memoKey: Option[AnyRef] = None): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.types._
-    import org.apache.spark.sql.Row
-    val schema = StructType(wanted.map {
-      case "warc_ts" => StructField("warc_ts", LongType, nullable = true)
-      case "html" => StructField("html", BinaryType, nullable = true)
-      case c => StructField(c, StringType, nullable = true)
-    })
-    val rowEnc = Encoders.row(schema)
-    val order = wanted.toArray
-    def decodeGroup(cols: Map[String, Array[Byte]]): Iterator[Row] = {
-      // resolve every column to a positional extractor ONCE per 64Ki-row
-      // group — the per-row loop then only indexes arrays (the naive per-cell
-      // form paid a Seq allocation plus ~order.length hash probes and string
-      // name-matches PER ROW on the primary projected-read path)
-      val ts: (Array[Long], Array[Boolean]) =
-        if (cols.contains("warc_ts")) IntBlockCodec.decodeNullable(cols("warc_ts")) else null
-      var n = if (ts != null) ts._1.length else 0
-      val extractors: Array[Int => AnyRef] = order.map {
-        case "warc_ts" =>
-          if (ts == null) (_: Int) => null
-          else (i: Int) => if (ts._2(i)) java.lang.Long.valueOf(ts._1(i)) else null
-        case c =>
-          if (!cols.contains(c)) (_: Int) => null
-          else {
-            val vs = StringBlockCodec.decode(cols(c))
-            n = vs.length
-            if (c == "html") (i: Int) => vs(i) // opaque binary: lossless
-            else (i: Int) => {
-              val b = vs(i)
-              if (b == null) null else new String(b, StandardCharsets.UTF_8)
-            }
-          }
-      }
-      (0 until n).iterator.map { i =>
-        val vals = new Array[Any](extractors.length)
-        var j = 0
-        while (j < extractors.length) { vals(j) = extractors(j)(i); j += 1 }
-        new org.apache.spark.sql.catalyst.expressions.GenericRow(vals): Row
-      }
-    }
-    hybridReassemble(spark, filteredBlocks, wanted.toSet, rowEnc, memoKey)(decodeGroup).toDF()
+    requireColumns(wanted)
+    projected(decode(spark, root), wanted)
   }
 
   /**
@@ -1011,8 +675,8 @@ object DecodeJob {
         !(col("d_html") <=> col("html")))
       .count()
     // the count delta catches dropped/extra rows (the double-decode failure
-    // mode the live-part filtering and the reassembly fallback exist to
-    // prevent); dupDelta covers the drop+duplicate offset the delta misses
+    // mode the live-part filtering exists to prevent); dupDelta covers the
+    // drop+duplicate offset the delta misses
     columnMismatches + dupDelta + math.abs(oCnt - dCnt)
   }
 

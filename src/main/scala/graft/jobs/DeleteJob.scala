@@ -38,8 +38,11 @@ object DeleteJob {
                   prunePredicates: Seq[DecodeJob.BlockPredicate]): DeleteResult = {
     DecodeJob.requireWebtext(root) // the COW rewrite decodes/re-encodes WebPage rows
     import spark.implicits._
-    val entries = SnapshotStore.currentEntries(root)
-    val curSnap = SnapshotStore.currentSnapshotId(root).getOrElse(0L)
+    // ONE pointer read: the affected parts are chosen from, and decoded at,
+    // this snapshot's immutable manifest
+    val pinned = SnapshotStore.currentSnapshotId(root)
+    val entries = pinned.fold(Seq.empty[SnapshotStore.PartEntry])(SnapshotStore.entriesAt(root, _))
+    val curSnap = pinned.getOrElse(0L)
     if (entries.isEmpty) return DeleteResult(curSnap, 0, 0, 0L, 0L)
 
     // part-level pruning via the metadata-only group scan (manifest-scale
@@ -56,7 +59,7 @@ object DeleteJob {
 
     val affectedSet = affectedIds.toSet
     val affectedRows = entries.filter(e => affectedSet(e.partId)).map(_.nRows).sum
-    val survivors = DecodeJob.decodePartsOf(spark, root, entries, affectedIds)
+    val survivors = DecodeJob.decodePartsOf(spark, root, curSnap, affectedIds)
       .toDF()
       .where(!coalesce(cond, lit(false)))
       .as(Encoders.product[WebPage])

@@ -496,7 +496,7 @@ object EncodeJob {
     if (!rows.hasNext) return Iterator.empty
     val first = rows.next()
     val partId = first.getInt(PartIdOrdinal)
-    val w = new GraftDataWriter(absDir, partId, partitionId, attemptId,
+    val w = new GraftDataWriter(absDir, partId, attemptId,
       conf, PageSchema, maxBlockBytes)
     try {
       w.write(first)

@@ -58,11 +58,12 @@ import graft.sources.SnapshotStore
  *  runs the block-metadata job over the surviving parts only when it can
  *  prune more — and their selectivity gate drops pruning entirely when the
  *  predicate is not selective — no unbounded driver collect. Each
- *  [[InputPartition]] is one block parquet file; groups never straddle files
- *  (each encode task writes its groups whole), so the reader assembles
- *  consecutive records with zero shuffle — the same layout invariant as
- *  [[DecodeJob.hybridReassemble]], with file granularity making split repair
- *  unnecessary by construction.
+ *  [[InputPartition]] is a bin of whole block parquet files; groups never
+ *  straddle files (each write task writes its one part's groups whole), so
+ *  the reader assembles consecutive records with zero shuffle and no split
+ *  repair, and fails loudly on a group that is not whole
+ *  ([[BlockGroupStream]]). The [[DecodeJob]] API is a thin wrapper over this
+ *  scan.
  */
 class GraftDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft"
@@ -175,13 +176,15 @@ object GraftDataSource {
     planStatsByRoot.synchronized(Option(planStatsByRoot.get(root)))
 
   /** Store-identity token: the SNAPSHOT pointer file's (inode fileKey, mtime)
-    * folded into one long. A store dropped and recreated at the same path
-    * restarts snapshot ids at 1, so (root, id) alone could serve a PREVIOUS
-    * store's cached plan — every commit rewrites the pointer via a fresh tmp
-    * file + ATOMIC_MOVE, which allocates a NEW inode, so the fileKey changes
-    * per commit even when the kernel's coarse mtime clock has not ticked
-    * (mtime alone was review-flagged: ns UNITS are not ns RESOLUTION).
-    * -1 = no pointer — callers must BYPASS their memo for it, never cache. */
+    * folded into one long; it keys the memo of
+    * [[graft.plans.GroupedAggMetadataRule]], its only user. A store dropped
+    * and recreated at the same path restarts snapshot ids at 1, so (root, id)
+    * alone could serve a PREVIOUS store's cached answer — every commit
+    * rewrites the pointer via a fresh tmp file + ATOMIC_MOVE, which allocates
+    * a NEW inode, so the fileKey changes per commit even when the kernel's
+    * coarse mtime clock has not ticked (mtime alone was review-flagged: ns
+    * UNITS are not ns RESOLUTION). -1 = no pointer — the memo must BYPASS it,
+    * never cache. */
   private[graft] def storeIdentityToken(root: String): Long =
     try {
       val p = graft.sources.SnapshotStore.snapshotPointer(root)
@@ -218,6 +221,8 @@ object GraftDataSource {
       columnar: Boolean, limit: Int): (Array[InputPartition], Int) = {
     val liveByDir: Map[String, Array[Int]] = entries.groupBy(_.dataDir)
       .map { case (d, es) => d -> es.map(_.partId).sorted.toArray }
+    def wanted(d: String, pid: Int): Boolean =
+      java.util.Arrays.binarySearch(liveByDir(d), pid) >= 0 && keyParts.forall(_(pid))
     // manifest-level file pruning: skip whole data dirs owning no surviving part
     val dirs = entries.map(_.dataDir).distinct
       .filter(d => keyParts.forall(kp => liveByDir(d).exists(kp)))
@@ -234,9 +239,12 @@ object GraftDataSource {
       def list(d: String): Array[(String, Long)] = {
         val dirPath = new Path(new Path(root), d)
         val fs = dirPath.getFileSystem(conf.value)
+        // a file whose name carries its part id is skipped unopened when this
+        // scan reads no group of that part
         fs.listStatus(dirPath)
           .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet") &&
-            !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
+            !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".") &&
+            GraftDataWriter.partIdOf(st.getPath.getName).forall(wanted(d, _)))
           .map(st => (st.getPath.toString, st.getLen))
       }
       if (dirs.size <= 1) dirs.map(d => d -> list(d))
@@ -499,6 +507,15 @@ private[graft] object FilterConversion {
     }
   }
 
+  /** The part ids a filter on the `_part_id` metadata column admits; None
+    * for any other filter (or one whose values are not all ints). */
+  def partIdsOf(f: Filter): Option[Set[Int]] = f match {
+    case sources.In("_part_id", vs) if vs.forall(_.isInstanceOf[java.lang.Integer]) =>
+      Some(vs.iterator.map(_.asInstanceOf[java.lang.Integer].intValue).toSet)
+    case sources.EqualTo("_part_id", v: java.lang.Integer) => Some(Set(v.intValue))
+    case _ => None
+  }
+
   /** EXACT Column form of a filter over the decoded view, or None when
     * not expressible (the DELETE path then refuses the whole statement —
     * unlike pruning, an inexact condition here would delete wrong rows). */
@@ -545,6 +562,7 @@ final class GraftScanBuilder(root: String, snapshotId: Option[Long],
   private var sawFilters = false
   private var pushedLimit: Option[Int] = None
   private var pushedTopN: Option[GraftDataSource.TopN] = None
+  private var partIds: Option[Set[Int]] = None
 
   /** PARTIAL limit pushdown (isPartiallyPushed stays true): each task stops
     * pulling and decoding block groups once it has produced `limit` rows —
@@ -585,7 +603,10 @@ final class GraftScanBuilder(root: String, snapshotId: Option[Long],
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val converted = filters.map(f => f -> FilterConversion.toBlockPredicates(f, tableSchema))
-    pushed = converted.collect { case (f, ps) if ps.nonEmpty => f }
+    // `_part_id` filters restrict the scan to those parts' manifest entries
+    val partFilters = filters.flatMap(f => FilterConversion.partIdsOf(f).map(f -> _))
+    partIds = partFilters.map(_._2).reduceOption(_ intersect _)
+    pushed = converted.collect { case (f, ps) if ps.nonEmpty => f } ++ partFilters.map(_._1)
     predicates = converted.flatMap(_._2).toSeq
     sawFilters = filters.nonEmpty
     // block pruning is inexact (a surviving block still holds non-matching
@@ -726,7 +747,7 @@ final class GraftScanBuilder(root: String, snapshotId: Option[Long],
         // truncating its url-ordered duty under top-n could drop true top-n rows)
         new GraftScan(root, snapshotId, requiredSchema, predicates,
           if (pushedTopN.isDefined) None else pushedLimit, pushedTopN, tableSchema,
-          incremental)
+          incremental, partIds)
     }
   }
 }
@@ -825,16 +846,18 @@ final class GraftScan(root: String, snapshotId: Option[Long],
                       pushedLimit: Option[Int] = None,
                       pushedTopN: Option[GraftDataSource.TopN] = None,
                       tableSchema: StructType = GraftDataSource.PageSchema,
-                      incremental: Option[(Long, Long)] = None)
+                      incremental: Option[(Long, Long)] = None,
+                      partIds: Option[Set[Int]] = None)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering {
 
   /** Metadata-answer scope for plan-level rules
     * ([[graft.plans.GroupedAggMetadataRule]]): (root, snapshotId) when this
     * scan reads ONE snapshot's full state — the state block metadata
-    * describes; None for incremental scans (a range delta is not that). */
+    * describes; None for incremental scans (a range delta is not that) and
+    * for scans restricted to some parts. */
   private[graft] def metadataScope: Option[(String, Option[Long])] =
-    if (incremental.isDefined) None else Some((root, snapshotId))
+    if (incremental.isDefined || partIds.isDefined) None else Some((root, snapshotId))
 
   /** Compile-time predicates + any runtime (DPP-style) In-filters Spark
     * delivers just before execution. */
@@ -877,8 +900,8 @@ final class GraftScan(root: String, snapshotId: Option[Long],
     * between them skew the optimizer's stats against the scanned data, and
     * re-parsed a 100k-part manifest per call. The pinned entries carry the
     * per-part stats level-1 planning prunes with. */
-  private lazy val pinnedEntries: Seq[SnapshotStore.PartEntry] =
-    incremental match {
+  private lazy val pinnedEntries: Seq[SnapshotStore.PartEntry] = {
+    val all = incremental match {
       // incremental read: the parts ADDED in (from, to] — the same additions-
       // changelog walk as the streaming reader, planned once per scan; every
       // downstream stage (pruning, projection, limit/top-n, runtime filtering)
@@ -894,6 +917,8 @@ final class GraftScan(root: String, snapshotId: Option[Long],
         case None => SnapshotStore.currentEntries(root)
       }
     }
+    partIds.fold(all)(ids => all.filter(e => ids(e.partId)))
+  }
 
   private def snapshotEntries(): Seq[SnapshotStore.PartEntry] = pinnedEntries
 
@@ -945,7 +970,8 @@ final class GraftScan(root: String, snapshotId: Option[Long],
     val inc = incremental.map { case (f, t) => s" incremental=($f,$t]" }.getOrElse("")
     val lim = pushedLimit.map(n => s" PushedLimit: $n").getOrElse("")
     val topn = pushedTopN.map(t => s" PushedTopN: [$t] (partial)").getOrElse("")
-    s"GraftStore root=$root$snap$inc columns=[$cols] PushedBlockPredicates: [$preds]$lim$topn"
+    val parts = partIds.map(p => s" PushedPartIds: ${p.size}").getOrElse("")
+    s"GraftStore root=$root$snap$inc columns=[$cols] PushedBlockPredicates: [$preds]$lim$topn$parts"
   }
 
   override def toBatch: Batch = this

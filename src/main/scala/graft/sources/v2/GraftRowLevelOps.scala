@@ -147,17 +147,11 @@ final class GraftCowScan(root: String, op: GraftRowLevelOperation,
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
     Array(org.apache.spark.sql.connector.expressions.Expressions.column("_part_id"))
 
+  // a filter shape other than int In/EqualTo on _part_id is ignored (a
+  // superset rewrite is sound)
   override def filter(filters: Array[Filter]): Unit =
-    filters.foreach {
-      case org.apache.spark.sql.sources.In("_part_id", vs) =>
-        // _part_id is non-nullable; anything but Integer values means a filter
-        // shape we don't understand — ignore it (a superset rewrite is sound)
-        val ids = vs.iterator.collect { case i: java.lang.Integer => i.intValue }.toSet
-        if (ids.size == vs.length)
-          runtimeParts = Some(runtimeParts.fold(ids)(_ intersect ids))
-      case org.apache.spark.sql.sources.EqualTo("_part_id", v: java.lang.Integer) =>
-        runtimeParts = Some(runtimeParts.fold(Set(v.intValue))(_ intersect Set(v.intValue)))
-      case _ => ()
+    filters.flatMap(FilterConversion.partIdsOf).foreach { ids =>
+      runtimeParts = Some(runtimeParts.fold(ids)(_ intersect ids))
     }
 
   override def readSchema(): StructType = requiredSchema

@@ -297,7 +297,7 @@ final case class GraftDataWriterFactory(absDir: String, partOffset: Int,
     schema: StructType = GraftDataSource.PageSchema)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GraftDataWriter(absDir, partOffset + partitionId, partitionId, taskId, conf, schema)
+    new GraftDataWriter(absDir, partOffset + partitionId, taskId, conf, schema)
 }
 
 /**
@@ -479,7 +479,7 @@ final case class GraftStreamingDataWriterFactory(root: String, runUuid: String,
     require(partitionId < parts,
       s"writer partition $partitionId exceeds the pinned stream width $parts")
     val absDir = Paths.get(root, s"data/stream-$runUuid-e$epochId").toString
-    new GraftDataWriter(absDir, offset.toInt + partitionId, partitionId, taskId, conf,
+    new GraftDataWriter(absDir, offset.toInt + partitionId, taskId, conf,
       schema)
   }
 }
@@ -493,6 +493,20 @@ object GraftDataWriter {
   /** The dot-prefixed in-progress name a task stages `fileName` under;
     * readers skip it (packPartitions and spark.read both ignore "."-files). */
   def stagedName(fileName: String): String = s".$fileName.inprogress"
+
+  /** A block file's readable name. It leads with the file's one part id, so
+    * a scan can drop the files of parts it does not read without opening
+    * them ([[partIdOf]]). */
+  def fileNameFor(partId: Int, taskId: Long): String = s"p$partId-task-$taskId.parquet"
+
+  private val PartFileName = """p(-?\d+)-task-\d+\.parquet""".r
+
+  /** The part id a block file's name carries; None for a file named before
+    * names carried it, which may hold several parts. */
+  def partIdOf(fileName: String): Option[Int] = fileName match {
+    case PartFileName(pid) => pid.toIntOption
+    case _ => None
+  }
 
   /** The block-file schema: the [[BlockRow]] columns as Spark would write
     * them (standard 3-level lists, UTF8-annotated strings). */
@@ -541,7 +555,7 @@ object GraftDataWriter {
  * the driver promotes the files of the results it accepts
  * ([[GraftWriteLayout.publish]]).
  */
-final class GraftDataWriter(absDir: String, partId: Int, partitionId: Int, taskId: Long,
+final class GraftDataWriter(absDir: String, partId: Int, taskId: Long,
     conf: org.apache.spark.util.SerializableConfiguration =
       new org.apache.spark.util.SerializableConfiguration(
         new org.apache.hadoop.conf.Configuration()),
@@ -549,10 +563,9 @@ final class GraftDataWriter(absDir: String, partId: Int, partitionId: Int, taskI
     maxBlockBytes: Long = EncodeJob.MaxBlockBytes)
     extends DataWriter[InternalRow] {
 
-  // attempt-unique name: partitionId for human mapping, taskId disambiguates
-  // retries/speculation (the driver promotes only files named in the
-  // messages it accepts)
-  private val fileName = s"part-$partitionId-task-$taskId.parquet"
+  // attempt-unique name: taskId disambiguates retries/speculation (the
+  // driver promotes only files named in the messages it accepts)
+  private val fileName = GraftDataWriter.fileNameFor(partId, taskId)
   // a dot-file is invisible to every reader, so a ZOMBIE attempt (stalled
   // task whose executor dies without abort) flushing parquet bytes after the
   // driver's commit can never surface as duplicate groups in a live dir

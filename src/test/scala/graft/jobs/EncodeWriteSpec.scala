@@ -136,7 +136,8 @@ class EncodeWriteSpec extends AnyFunSuite {
     val mixed = intercept[IllegalArgumentException](
       task(3, 107L, rows(0, 0 until 10) ++ rows(1, 300 until 310)))
     assert(mixed.getMessage.contains("got parts 0 and 1"))
-    assert(!Files.exists(Paths.get(absDir, GraftDataWriter.stagedName("part-3-task-107.parquet"))))
+    assert(!Files.exists(Paths.get(absDir,
+      GraftDataWriter.stagedName(GraftDataWriter.fileNameFor(0, 107L)))))
 
     val msgs = m0 ++ m1
     GraftWriteLayout.publish(absDir, msgs)

@@ -184,6 +184,13 @@ class PipelineSpec extends AnyFunSuite {
     val n = 8000L
     val pages = Webtext.generate(spark, n, 8)
     EncodeJob.run(spark, pages, root, parts = 8) // one wave -> one shared dir
+    // the rewrite input reads just the chosen parts: the scan never lists the
+    // other parts' files of the shared dir as input
+    val snap = SnapshotStore.currentSnapshotId(root).get
+    val chosen = SnapshotStore.entriesAt(root, snap).sortBy(_.nRows).take(2)
+    val picked = DecodeJob.decodePartsOf(spark, root, snap, chosen.map(_.partId))
+    assert(picked.select("url").distinct().count() == chosen.map(_.nRows).sum)
+    assert(graft.sources.v2.GraftDataSource.planStatsFor(root).map(_.files).contains(2))
     val sizes = SnapshotStore.currentEntries(root).map(_.nRows)
     val res = CompactJob.run(spark, root, minRows = sizes.max, targetRowsPerPart = n)
     assert(res.partsCompacted >= 2, s"need a real partial compaction, sizes=$sizes")
@@ -243,12 +250,39 @@ class PipelineSpec extends AnyFunSuite {
       DecodeJob.decode(spark, root)) == 0L)
   }
 
-  test("decode reassembly is shuffle-free on a store; forced file splits fall back exactly") {
+  /** Spark jobs started while `body` runs, bracketed by two marker jobs. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.add(e.jobId)
+    }
+    def marker(): Int = {
+      val group = java.util.UUID.randomUUID().toString
+      sc.setJobGroup(group, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      sc.statusTracker.getJobIdsForGroup(group).head
+    }
+    sc.addSparkListener(l)
+    try {
+      val before = marker()
+      val out = body
+      val after = marker()
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!started.contains(after) && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(started.contains(before) && started.contains(after), "marker jobs not observed")
+      (out, started.toArray.count { case id: Int => id > before && id < after })
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("decode has no Exchange, no job before an action; exact under splits") {
     val root = freshRoot()
     val n = 20000L
     val pages = Webtext.generate(spark, n, 8)
-    // small logical blocks + tiny parquet row groups, so the read side CAN split
-    // files mid-group when maxPartitionBytes shrinks below the file size
+    // small logical blocks + tiny parquet row groups: many groups and row
+    // groups per file, so a reader planning Spark file splits would cut files
+    // mid-group once maxPartitionBytes shrinks below the file size
     val hc = spark.sparkContext.hadoopConfiguration
     hc.setInt("parquet.block.size", 4096)
     hc.setInt("parquet.page.size.row.check.min", 2)
@@ -262,79 +296,55 @@ class PipelineSpec extends AnyFunSuite {
     assert(DecodeJob.blocks(spark, root).select("part_id", "block_seq").distinct().count() > 20,
       "need many groups per file for the split scenario")
 
-    // primary path: consecutive-run grouping, ZERO exchange in the plan. Splits
-    // are disabled explicitly — the small-file test store otherwise splits at
-    // bytesPerCore (totalBytes/parallelism), which is exactly the scenario the
-    // fallback phase below covers.
-    spark.conf.set("spark.sql.files.openCostInBytes", (64L << 20).toString)
-    try {
-      val fast = DecodeJob.decode(spark, root)
-      val plan = fast.queryExecution.executedPlan.toString()
-      assert(!plan.contains("Exchange"), s"decode must not shuffle on a grouped store:\n$plan")
-      assert(fast.count() == n)
-      assert(DecodeJob.verifyAgainst(Webtext.generate(spark, n, 8), fast) == 0L)
-    } finally spark.conf.unset("spark.sql.files.openCostInBytes")
+    // building a decode runs no Spark job: the scan is planned at the first action
+    val snap = SnapshotStore.currentSnapshotId(root).get
+    val ((full, at, cols), jobs) = jobsDuring((DecodeJob.decode(spark, root),
+      DecodeJob.decodeAt(spark, root, snap), DecodeJob.decodeColumns(spark, root, Seq("url", "lang"))))
+    assert(jobs == 0, s"decode, decodeAt and decodeColumns ran $jobs Spark jobs before an action")
 
-    // forced splits: groups straddle partition boundaries; the key pre-scan must
-    // route exactly those through the shuffle fallback — same rows, no dupes/gaps
+    // forced splits: the scan bins whole files whatever maxPartitionBytes says,
+    // so no group straddles a task — no Exchange, same rows, no dupes or gaps
     spark.conf.set("spark.sql.files.maxPartitionBytes", "16384")
     spark.conf.set("spark.sql.files.openCostInBytes", "0")
     try {
-      val split = DecodeJob.decode(spark, root)
-      assert(split.count() == n, "straddling groups must be repaired, not dropped")
-      assert(split.select("url").distinct().count() == n, "and not duplicated")
-      assert(DecodeJob.verifyAgainst(Webtext.generate(spark, n, 8), split) == 0L)
+      val plan = full.queryExecution.executedPlan.toString()
+      assert(!plan.contains("Exchange"), s"decode must not shuffle:\n$plan")
+      assert(full.select("url").distinct().count() == n, "no group dropped or duplicated")
+      assert(DecodeJob.verifyAgainst(Webtext.generate(spark, n, 8), full) == 0L)
+      assert(DecodeJob.verifyAgainst(Webtext.generate(spark, n, 8), at) == 0L)
+      assert(cols.columns.toSeq == Seq("url", "lang") && cols.distinct().count() == n)
     } finally {
       spark.conf.unset("spark.sql.files.maxPartitionBytes")
       spark.conf.unset("spark.sql.files.openCostInBytes")
     }
   }
 
-  test("reassembly of scattered/unsorted block inputs falls back to the shuffle") {
+  test("a block group that is not whole in its file fails both read surfaces") {
     import spark.implicits._
-    // well-formed 2-row groups, then round-robin scattered so runs are fragmented
-    val groups = (0 until 60).map { g =>
-      val urls = Array(s"u$g-0".getBytes("UTF-8"), s"u$g-1".getBytes("UTF-8"))
-      val texts = Array(s"text $g zero".getBytes("UTF-8"), s"text $g one".getBytes("UTF-8"))
-      val langs = Array("en".getBytes("UTF-8"), "de".getBytes("UTF-8"))
-      val ts = graft.codec.IntBlockCodec.encodeNullable(
-        Array(1000000L * g, 1000000L * g + 1), Array(true, true), graft.core.PhysicalIntType.I64)
-      Seq(
-        (g, 0, "url", graft.codec.StringBlockCodec.encode(urls)),
-        (g, 0, "warc_ts", ts),
-        (g, 0, "html", graft.codec.StringBlockCodec.encode(texts)),
-        (g, 0, "text", graft.codec.StringBlockCodec.encode(texts)),
-        (g, 0, "lang", graft.codec.StringBlockCodec.encode(langs)))
+    val root = freshRoot()
+    EncodeJob.run(spark, Webtext.generate(spark, 300, 4), root, parts = 1)
+    val dir = java.nio.file.Paths.get(root, SnapshotStore.currentEntries(root).head.dataDir)
+    val Seq(file) = SnapshotStore.listFileNames(dir).filter(_.endsWith(".parquet"))
+    // rewrite the part's one file without the html block of group 0
+    val tmp = java.nio.file.Paths.get(freshRoot(), "rewritten").toString
+    spark.read.parquet(dir.resolve(file).toString)
+      .where(!($"block_seq" === 0 && $"column" === "html"))
+      .coalesce(1).write.parquet(tmp)
+    val Seq(rewritten) = SnapshotStore.listFileNames(java.nio.file.Paths.get(tmp))
+      .filter(f => f.endsWith(".parquet") && !f.startsWith("."))
+    Files.delete(dir.resolve(file))
+    Files.move(java.nio.file.Paths.get(tmp, rewritten), dir.resolve("rewritten.parquet"))
+
+    def layoutError(read: => Any): Unit = {
+      val e = intercept[Exception](read)
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => t.isInstanceOf[java.io.IOException] &&
+          t.getMessage.contains("corrupt or foreign store layout")), s"not the layout error: $e")
     }
-    val scattered = groups.flatten
-      .toDF("part_id", "block_seq", "column", "encoded")
-      .repartition(7) // round-robin: group rows land in different partitions
-    val decoded = DecodeJob.reassemble(spark, scattered)
-    assert(decoded.count() == 120)
-    assert(decoded.map(_.url).collect().sorted.toSeq ==
-      (0 until 60).flatMap(g => Seq(s"u$g-0", s"u$g-1")).sorted)
-
-    // full-fallback branch: cap at 0 forces the everything-through-shuffle path
-    val saved = DecodeJob.MaxFallbackGroups
-    DecodeJob.MaxFallbackGroups = 0
-    try {
-      val viaShuffle = DecodeJob.reassemble(spark, scattered)
-      assert(viaShuffle.count() == 120)
-      assert(viaShuffle.select("url").distinct().count() == 120)
-    } finally DecodeJob.MaxFallbackGroups = saved
-
-    // partial-fallback branch: most groups contiguous in one partition, ONE
-    // group fragmented across two — exactly that group goes through the repair
-    // join while the rest take the fast path
-    val sortedPart = groups.take(59).flatten
-      .toDF("part_id", "block_seq", "column", "encoded").coalesce(1)
-    val fragged = groups.last
-      .toDF("part_id", "block_seq", "column", "encoded").repartition(2)
-    val mixed = sortedPart.union(fragged)
-    val repaired = DecodeJob.reassemble(spark, mixed)
-    assert(repaired.count() == 120)
-    assert(repaired.map(_.url).collect().sorted.toSeq ==
-      (0 until 60).flatMap(g => Seq(s"u$g-0", s"u$g-1")).sorted)
+    layoutError(DecodeJob.decode(spark, root).collect())
+    layoutError(spark.read.format("graft").load(root).collect())
+    // a count is answered from the manifest: never fewer rows than were written
+    assert(DecodeJob.decode(spark, root).count() == 300L)
   }
 
   test("decodeWhere prunes block groups via metadata before any decompression") {
@@ -353,12 +363,16 @@ class PipelineSpec extends AnyFunSuite {
     assert(urlKeys < totalGroups && urlKeys >= 1,
       s"url bounds must prune groups: $urlKeys of $totalGroups")
     val hit = DecodeJob.decodeWhere(spark, root, urlPred)
-    // pruned scan still pushes the key filters to parquet and stays shuffle-free
+    // the predicate reaches the scan, which reads only the surviving groups
+    // and stays shuffle-free
     val plan = hit.queryExecution.executedPlan.toString()
-    assert(plan.contains("In(part_id") && !plan.contains("Exchange"),
-      s"pruned decode must push key filters and not shuffle:\n$plan")
+    assert(plan.contains("PushedBlockPredicates: [StrEq(url,") && !plan.contains("Exchange"),
+      s"pruned decode must push its predicate to the scan and not shuffle:\n$plan")
     val rows = hit.collect()
     assert(rows.length == 1 && rows.head.url == someUrl)
+    val planned = graft.sources.v2.GraftDataSource.planStatsFor(root).flatMap(_.prunedGroupKeys)
+    assert(planned.exists(k => k >= 1 && k < totalGroups),
+      s"the scan must read only the url's groups: $planned of $totalGroups")
 
     // warc_ts range: the single global-max timestamp can live in few blocks
     // (webtext ts ranges of different parts otherwise overlap — pruning is
@@ -388,12 +402,11 @@ class PipelineSpec extends AnyFunSuite {
     assert(both.count() == 1L)
 
     // projected + predicate-pushed: predicate column decoded for the filter
-    // then dropped; equals the unpruned projected decode + filter
+    // then dropped; equals the written pages + filter
     val cw = DecodeJob.decodeColumnsWhere(spark, root, Seq("url"),
       Seq(DecodeJob.StrEq("lang", "de")))
     assert(cw.columns.toSeq == Seq("url"))
-    val expected = DecodeJob.decodeColumns(spark, root, Seq("url", "lang"))
-      .where($"lang" === "de").select($"url")
+    val expected = pages.toDF().where($"lang" === "de").select($"url")
     assert(cw.exceptAll(expected).count() == 0 && expected.exceptAll(cw).count() == 0)
     // TsRange over the projected micros form
     val cwTs = DecodeJob.decodeColumnsWhere(spark, root, Seq("url", "warc_ts"),
@@ -464,11 +477,11 @@ class PipelineSpec extends AnyFunSuite {
     EncodeJob.run(spark, pages, root, parts = 4)
 
     val proj = DecodeJob.decodeColumns(spark, root, Seq("url", "lang", "warc_ts"))
-    // the column filter must reach the parquet scan so unwanted (text/html) blocks
-    // are pruned by row-group stats before any decompression
+    // the projection must reach the block scan, whose parquet column filter
+    // skips unwanted (text/html) blocks by row-group stats before any decompression
     val physical = proj.queryExecution.executedPlan.toString()
-    assert(physical.contains("PushedFilters: [") && physical.contains("In(column"),
-      s"column projection filter not pushed to the blocks scan:\n$physical")
+    assert(physical.contains("columns=[url,warc_ts,lang]"),
+      s"column projection not pushed to the block scan:\n$physical")
 
     assert(proj.count() == n)
     // values match the full decode on every projected column (micros == timestamp)
@@ -650,7 +663,10 @@ class PipelineSpec extends AnyFunSuite {
       s"prefix must prune groups: $pKeys of $totalGroups")
     val got = DecodeJob.decodeWhere(spark, root, Seq(DecodeJob.StrPrefix("url", prefix)))
       .toDF().select($"url").as[String].collect().sorted.toSeq
-    val want = DecodeJob.decode(spark, root).toDF()
+    // expected sides from the written pages: a decode of the store would push
+    // the same filter into the same scan
+    val written = Webtext.generate(spark, 20000L, 8).toDF()
+    val want = written
       .where($"url".startsWith(prefix)).select($"url").as[String].collect().sorted.toSeq
     assert(got == want && got.nonEmpty)
 
@@ -662,7 +678,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(rKeys >= 1 && rKeys < totalGroups)
     val gotR = DecodeJob.decodeWhere(spark, root, Seq(DecodeJob.StrRange("url", lo, hi)))
       .toDF().select($"url").as[String].collect().sorted.toSeq
-    val wantR = DecodeJob.decode(spark, root).toDF()
+    val wantR = written
       .where($"url".between(lo, hi)).select($"url").as[String].collect().sorted.toSeq
     assert(gotR == wantR && gotR.nonEmpty)
 
@@ -716,21 +732,6 @@ class PipelineSpec extends AnyFunSuite {
       .agg(count(lit(1)), min(unix_micros($"warc_ts")), max(unix_micros($"warc_ts")))
       .as[(Long, Long, Long)].head()
     assert((cnt, mn, mx) == want, s"statsFast $cnt/$mn/$mx != decoded $want")
-  }
-
-  test("fast-path reassembly fails LOUDLY on pre-scan/data-scan misalignment") {
-    val cols = Map("url" -> Array[Byte](1), "lang" -> Array[Byte](2))
-    val exp = Set("url", "lang", "text")
-    // aligned: incomplete group flagged by the pre-scan is left to the fallback
-    assert(DecodeJob.fastPathGroup(1, 2, cols, exp, Set((1, 2)))(_ => Iterator.single("x")).isEmpty)
-    // complete group decodes
-    val full = cols + ("text" -> Array[Byte](3))
-    assert(DecodeJob.fastPathGroup(1, 2, full, exp, Set.empty)(_ => Iterator.single("x")).toSeq == Seq("x"))
-    // MISALIGNED: incomplete and not flagged -> must throw, never drop rows
-    val e = intercept[IllegalStateException] {
-      DecodeJob.fastPathGroup(1, 2, cols, exp, Set.empty)(_ => Iterator.single("x"))
-    }
-    assert(e.getMessage.contains("pre-scan"))
   }
 
   test("tombstone sidecars are range-compressed and survive legacy format") {

@@ -11,8 +11,11 @@ import graft.sources.Webtext
 
 /**
  * DataSource V2 surface: `spark.read.format("graft").load(root)` must equal the
- * DecodeJob view, prune columns down to the block scan, prune block groups via
- * pushed filters, and answer empty-projection counts without touching `encoded`.
+ * pages the store was written from, prune columns down to the block scan, prune
+ * block groups via pushed filters, and answer empty-projection counts without
+ * touching `encoded`. Expected sides come from those pages, never from a read
+ * of the store: the DecodeJob API is the same V2 scan, so it would push the
+ * same filters and aggregates.
  */
 class V2SourceSpec extends AnyFunSuite {
 
@@ -38,15 +41,19 @@ class V2SourceSpec extends AnyFunSuite {
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
+  /** The pages the shared store was written from. */
+  private def written: DataFrame = Webtext.generate(spark, N, 8).toDF()
+
   test("full scan equals the DecodeJob view (count + content)") {
-    val viaV2 = graftTable
-      .select(col("url"), unix_micros(col("warc_ts")).as("ts"), col("text"), col("lang"),
+    def content(df: DataFrame): DataFrame =
+      df.select(col("url"), unix_micros(col("warc_ts")).as("ts"), col("text"), col("lang"),
         md5(col("html")).as("h"))
-    val viaJob = DecodeJob.decode(spark, root).toDF()
-      .select(col("url"), unix_micros(col("warc_ts")).as("ts"), col("text"), col("lang"),
-        md5(col("html")).as("h"))
+    val viaV2 = content(graftTable)
     assert(viaV2.count() == N)
-    assert(sortedRows(viaV2) == sortedRows(viaJob))
+    // both read paths are the one V2 reader: each must equal the written pages
+    val want = sortedRows(content(written))
+    assert(sortedRows(viaV2) == want)
+    assert(sortedRows(content(DecodeJob.decode(spark, root).toDF())) == want)
   }
 
   test("SQL over the registered view works with pushed filters") {
@@ -66,8 +73,7 @@ class V2SourceSpec extends AnyFunSuite {
     val df = graftTable.select(col("url"), col("lang"))
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("columns=[url,lang]"), s"scan must carry pruned columns:\n$plan")
-    val expected = DecodeJob.decodeColumns(spark, root, Seq("url", "lang"))
-    assert(sortedRows(df) == sortedRows(expected))
+    assert(sortedRows(df) == sortedRows(written.select(col("url"), col("lang"))))
   }
 
   test("url prefix filter prunes block groups and returns exact rows") {
@@ -75,7 +81,7 @@ class V2SourceSpec extends AnyFunSuite {
     val df = graftTable.where(col("url").startsWith(prefix)).select(col("url"))
     val got = sortedRows(df)
     val want = sortedRows(
-      DecodeJob.decode(spark, root).toDF().where(col("url").startsWith(prefix))
+      written.where(col("url").startsWith(prefix))
         .select(col("url")))
     assert(got == want && got.nonEmpty)
     val stats = GraftDataSource.lastPlanStats.get
@@ -90,7 +96,7 @@ class V2SourceSpec extends AnyFunSuite {
     // host-0 pages sit at the very bottom of the ts domain (base + 0*3600s)
     val hi = new java.sql.Timestamp(1735689600000L + 3600L * 1000L)
     val df = graftTable.where(col("warc_ts") <= hi).select(col("url"))
-    val want = sortedRows(DecodeJob.decode(spark, root).toDF()
+    val want = sortedRows(written
       .where(col("warc_ts") <= hi).select(col("url")))
     assert(sortedRows(df) == want && want.nonEmpty)
     assert(GraftDataSource.lastPlanStats.get.predicates >= 1)
@@ -100,7 +106,7 @@ class V2SourceSpec extends AnyFunSuite {
     assert(graftTable.count() == N)
     // non-selective residual-only filter: still exact
     assert(graftTable.where(col("lang").isNotNull).count() ==
-      DecodeJob.decode(spark, root).toDF().where(col("lang").isNotNull).count())
+      written.where(col("lang").isNotNull).count())
   }
 
   test("non-selective pushed filter falls back to no pruning but stays exact") {
@@ -108,7 +114,7 @@ class V2SourceSpec extends AnyFunSuite {
     // to prune (None) and the residual filter must still produce exact rows
     val df = graftTable.where(col("lang") === "en").select(col("url"))
     val got = df.count()
-    val want = DecodeJob.decode(spark, root).toDF().where(col("lang") === "en").count()
+    val want = written.where(col("lang") === "en").count()
     assert(got == want)
     val stats = GraftDataSource.lastPlanStats.get
     assert(stats.prunedGroupKeys.isEmpty,
@@ -121,13 +127,13 @@ class V2SourceSpec extends AnyFunSuite {
     // StrRange keeps every url >= lo, including ones above any finite bound.
     val lo = "https://host-3"
     val df = graftTable.where(col("url") >= lo).select(col("url"))
-    val want = sortedRows(DecodeJob.decode(spark, root).toDF()
+    val want = sortedRows(written
       .where(col("url") >= lo).select(col("url")))
     assert(sortedRows(df) == want && want.nonEmpty)
     assert(df.queryExecution.executedPlan.toString.contains("StrRange"),
       "string range must be pushed as a block predicate")
     val strict = graftTable.where(col("url") < lo).select(col("url"))
-    val wantStrict = sortedRows(DecodeJob.decode(spark, root).toDF()
+    val wantStrict = sortedRows(written
       .where(col("url") < lo).select(col("url")))
     assert(sortedRows(strict) == wantStrict && wantStrict.nonEmpty)
   }
@@ -139,7 +145,7 @@ class V2SourceSpec extends AnyFunSuite {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("PushedAggregates"), s"aggregates must push to the scan:\n$plan")
     val row = df.collect()(0)
-    val want = DecodeJob.decode(spark, root).toDF()
+    val want = written
       .agg(count(lit(1)), min(col("warc_ts")), max(col("warc_ts"))).collect()(0)
     assert(row.getLong(0) == want.getLong(0))
     assert(row.getTimestamp(1) == want.getTimestamp(1))
@@ -148,11 +154,11 @@ class V2SourceSpec extends AnyFunSuite {
     val filtered = spark.sql("SELECT count(*) AS c FROM graft_agg_v2 WHERE lang = 'en'")
     assert(!filtered.queryExecution.executedPlan.toString.contains("PushedAggregates"))
     assert(filtered.collect()(0).getLong(0) ==
-      DecodeJob.decode(spark, root).toDF().where(col("lang") === "en").count())
+      written.where(col("lang") === "en").count())
     // grouped aggregates now push too — via the dict-metadata path (r6)
     val grouped = spark.sql("SELECT lang, count(*) FROM graft_agg_v2 GROUP BY lang")
     assert(grouped.queryExecution.executedPlan.toString.contains("group by lang"))
-    assert(grouped.count() == DecodeJob.decode(spark, root).toDF()
+    assert(grouped.count() == written
       .select(col("lang")).distinct().count())
   }
 
@@ -166,26 +172,26 @@ class V2SourceSpec extends AnyFunSuite {
       s"generalized aggregates must push completely:\n$plan")
     assert(!plan.contains("HashAggregate") && !plan.contains("SortAggregate"),
       s"complete pushdown must leave no aggregate exec:\n$plan")
-    val want = DecodeJob.decode(spark, root).toDF().agg(
+    val want = written.agg(
       count(col("lang")), min(col("url")), max(col("url")),
       min(col("lang")), max(col("warc_ts"))).collect()(0)
     val got = df.collect()(0)
     assert(got == want, s"metadata answer must equal the decode: $got vs $want")
     // null counting: planted null langs make count(lang) < count(*)
     val r2 = Files.createTempDirectory("graft-v2-aggany-nulls-").toString
-    locally {
+    val withNulls = locally {
       import spark.implicits._
-      EncodeJob.run(spark, Webtext.generate(spark, 2000L, 4).map(p =>
-        if (p.url.endsWith("1")) p.copy(lang = null) else p), r2, parts = 2)
+      Webtext.generate(spark, 2000L, 4).map(p =>
+        if (p.url.endsWith("1")) p.copy(lang = null) else p)
     }
+    EncodeJob.run(spark, withNulls, r2, parts = 2)
     spark.read.format("graft").load(r2).createOrReplaceTempView("graft_agg_any_n")
     val nulls = spark.sql(
       "SELECT count(*) AS c, count(lang) AS cl FROM graft_agg_any_n")
     assert(nulls.queryExecution.executedPlan.toString.contains("PushedAggregates"))
     val nRow = nulls.collect()(0)
     assert(nRow.getLong(0) == 2000L && nRow.getLong(1) < 2000L &&
-      nRow.getLong(1) == DecodeJob.decode(spark, r2).toDF()
-        .where(col("lang").isNotNull).count())
+      nRow.getLong(1) == withNulls.where(col("lang").isNotNull).count())
     // min/max over an opaque BINARY column has no metadata bounds: shape-decline
     val onHtml = spark.sql("SELECT min(html) AS h FROM graft_agg_any")
     assert(!onHtml.queryExecution.executedPlan.toString.contains("PushedAggregates"),
@@ -194,7 +200,7 @@ class V2SourceSpec extends AnyFunSuite {
     val distinctCount = spark.sql("SELECT count(DISTINCT lang) AS d FROM graft_agg_any")
     assert(!distinctCount.queryExecution.executedPlan.toString.contains("(metadata-only)"))
     assert(distinctCount.collect()(0).getLong(0) ==
-      DecodeJob.decode(spark, root).toDF().select(col("lang")).distinct().count())
+      written.select(col("lang")).distinct().count())
   }
 
   test("GROUPED aggregate pushdown: count(*) GROUP BY lang answers from dict metadata") {
@@ -205,7 +211,7 @@ class V2SourceSpec extends AnyFunSuite {
     assert(plan.contains("PushedAggregates") && plan.contains("group by lang") &&
       plan.contains("(metadata-only)"),
       s"grouped agg must push completely:\n$plan")
-    val want = DecodeJob.decode(spark, root).toDF()
+    val want = written
       .groupBy(col("lang")).agg(count(lit(1)).as("cnt"), count(col("lang")).as("cl"))
     assert(sortedRows(df) == sortedRows(want))
 
@@ -219,7 +225,7 @@ class V2SourceSpec extends AnyFunSuite {
     val dfn = spark.sql(
       "SELECT lang, count(*) AS cnt, count(lang) AS cl FROM graft_gagg_n GROUP BY lang")
     assert(dfn.queryExecution.executedPlan.toString.contains("(metadata-only)"))
-    val wantN = DecodeJob.decode(spark, r2).toDF()
+    val wantN = pages.toDF()
       .groupBy(col("lang")).agg(count(lit(1)).as("cnt"), count(col("lang")).as("cl"))
     assert(sortedRows(dfn) == sortedRows(wantN))
     val nullRow = dfn.collect().find(_.isNullAt(0))
@@ -234,14 +240,14 @@ class V2SourceSpec extends AnyFunSuite {
       "SELECT text, count(*) AS cnt FROM graft_gagg_d GROUP BY text")
     assert(!onText.queryExecution.executedPlan.toString.contains("(metadata-only)"),
       "text grouping must fall back (no dict coverage)")
-    assert(onText.count() == DecodeJob.decode(spark, root).toDF()
+    assert(onText.count() == written
       .groupBy(col("text")).count().count())
 
     // a filter blocks the pushdown (metadata reflects the unfiltered table)
     val filtered = spark.sql(
       "SELECT lang, count(*) AS cnt FROM graft_gagg_d WHERE lang <> 'en' GROUP BY lang")
     assert(!filtered.queryExecution.executedPlan.toString.contains("(metadata-only)"))
-    val wantF = DecodeJob.decode(spark, root).toDF().where(col("lang") =!= "en")
+    val wantF = written.where(col("lang") =!= "en")
       .groupBy(col("lang")).agg(count(lit(1)).as("cnt"))
     assert(sortedRows(filtered) == sortedRows(wantF))
 
@@ -257,7 +263,7 @@ class V2SourceSpec extends AnyFunSuite {
     // and a store answering normally yields the same counts as the decode
     val viaMeta = GraftGroupedAgg.fromBlocks(DecodeJob.blocks(spark, root), "lang")
     assert(viaMeta.isDefined)
-    val wantMap = DecodeJob.decode(spark, root).toDF().groupBy(col("lang")).count()
+    val wantMap = written.groupBy(col("lang")).count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(viaMeta.get.map(g => g.value -> g.countStar).toMap == wantMap)
   }
@@ -272,7 +278,7 @@ class V2SourceSpec extends AnyFunSuite {
     assert(plan.contains("LocalTableScan") && !plan.contains("GraftStore"),
       s"filtered grouped agg must become a local relation:\n$plan")
     assert(graft.plans.GroupedAggMetadataRule.fired.get() > n0, "rule did not fire")
-    val want = DecodeJob.decode(spark, root).toDF()
+    val want = written
       .where(col("lang") =!= "en" && col("lang").like("__"))
       .groupBy(col("lang")).agg(count(lit(1)).as("cnt"), count(col("lang")).as("cl"))
     assert(sortedRows(df) == sortedRows(want))
@@ -288,7 +294,7 @@ class V2SourceSpec extends AnyFunSuite {
       "SELECT lang, count(*) AS cnt FROM graft_gaggf_n WHERE lang <> 'zz' GROUP BY lang")
     assert(neq.queryExecution.executedPlan.toString.contains("LocalTableScan"))
     assert(neq.collect().forall(!_.isNullAt(0)), "<> must drop the NULL group")
-    val wantNeq = DecodeJob.decode(spark, r2).toDF().where(col("lang") =!= "zz")
+    val wantNeq = pages.toDF().where(col("lang") =!= "zz")
       .groupBy(col("lang")).agg(count(lit(1)).as("cnt"))
     assert(sortedRows(neq) == sortedRows(wantNeq))
     val isNull = spark.sql(
@@ -299,7 +305,7 @@ class V2SourceSpec extends AnyFunSuite {
     assert(rows.length == 1 && rows(0).isNullAt(0) && rows(0).getLong(1) > 0 &&
       rows(0).getLong(2) == 0L, s"IS NULL must keep exactly the NULL group: ${rows.toSeq}")
     assert(rows(0).getLong(1) ==
-      DecodeJob.decode(spark, r2).toDF().where(col("lang").isNull).count())
+      pages.toDF().where(col("lang").isNull).count())
 
     // declines, each falling back to an exact scan: a condition on ANOTHER
     // column; count of another column; a high-cardinality group column
@@ -314,7 +320,7 @@ class V2SourceSpec extends AnyFunSuite {
       "WHERE text <> 'x' GROUP BY text")
     assert(!onText.queryExecution.executedPlan.toString.contains("LocalTableScan"),
       "no dict coverage must decline")
-    val wantText = DecodeJob.decode(spark, root).toDF().where(col("text") =!= "x")
+    val wantText = written.where(col("text") =!= "x")
       .groupBy(col("text")).agg(count(lit(1)).as("c"))
     assert(onText.count() == wantText.count())
 
@@ -433,7 +439,7 @@ class V2SourceSpec extends AnyFunSuite {
       val stats = GraftDataSource.lastPlanStats.get
       assert(stats.partitions < stats.files && stats.files >= 2,
         s"bins must pack multiple files under minPartitionNum=1: $stats")
-      val want = sortedRows(DecodeJob.decode(spark, root).toDF()
+      val want = sortedRows(written
         .select(col("url"), unix_micros(col("warc_ts")).as("ts"), col("lang")))
       assert(got.length == N && got == want, "no dropped/duplicated boundary groups")
     } finally spark.conf.unset("spark.sql.files.minPartitionNum")
@@ -461,7 +467,7 @@ class V2SourceSpec extends AnyFunSuite {
     import spark.implicits._
     val small = urls.toDF("url")
     val joined = graftTable.join(broadcast(small), Seq("url")).select(col("url"), col("lang"))
-    val want = DecodeJob.decode(spark, root).toDF()
+    val want = written
       .join(broadcast(small), Seq("url")).select(col("url"), col("lang"))
     assert(sortedRows(joined) == sortedRows(want) && joined.count() == 2)
   }
@@ -489,7 +495,7 @@ class V2SourceSpec extends AnyFunSuite {
       // equality through the columnar path incl. nullable warc_ts + binary html
       val full = graftTable.select(col("url"), unix_micros(col("warc_ts")).as("ts"),
         md5(col("html")).as("h"), col("text"))
-      val want = sortedRows(DecodeJob.decode(spark, root).toDF()
+      val want = sortedRows(written
         .select(col("url"), unix_micros(col("warc_ts")).as("ts"),
           md5(col("html")).as("h"), col("text")))
       assert(sortedRows(full) == want)
@@ -512,28 +518,29 @@ class V2SourceSpec extends AnyFunSuite {
   }
 
   test("pruning survives >4096 surviving groups (broadcast keys, per-bin slicing)") {
-    // r4 regression: the scan dropped ALL pruning past DecodeJob.MaxFallbackGroups
-    // (4096) because the whole packed-key array rode every InputPartition. With
+    // r4 regression: the scan dropped ALL pruning past 4096 surviving groups
+    // because the whole packed-key array rode every InputPartition. With
     // broadcast + per-dir slicing the SQL surface must prune as deep as the
     // decodeWhere API. Fixture: 1-row block groups (maxBlockBytes=1) make 12k
     // groups from 12k rows; the byte-bound store under-estimates the manifest
     // group count, so the break-even FRACTION heuristic (not the mechanism under
     // test) is widened for the duration.
     val r2 = Files.createTempDirectory("graft-v2-manykeys-").toString
-    EncodeJob.run(spark, Webtext.generate(spark, 12000L, 8), r2, parts = 8,
-      maxBlockBytes = 1L)
+    val input = Webtext.generate(spark, 12000L, 8)
+    EncodeJob.run(spark, input, r2, parts = 8, maxBlockBytes = 1L)
+    val R4TaskKeyCeiling = 4096
     val savedCutoff = DecodeJob.PruneFractionCutoff
     try {
       DecodeJob.PruneFractionCutoff = 1e9
       val pred = col("url") < "https://host-2" // ~37% of zipf-hosted urls
-      val want = sortedRows(DecodeJob.decode(spark, r2).toDF()
+      val want = sortedRows(input.toDF()
         .where(pred).select(col("url")))
-      assert(want.length > DecodeJob.MaxFallbackGroups,
+      assert(want.length > R4TaskKeyCeiling,
         s"fixture must survive in >4096 groups, got ${want.length}")
       val df = spark.read.format("graft").load(r2).where(pred).select(col("url"))
       assert(sortedRows(df) == want)
       val stats = GraftDataSource.planStatsFor(r2).get
-      assert(stats.prunedGroupKeys.exists(_ > DecodeJob.MaxFallbackGroups),
+      assert(stats.prunedGroupKeys.exists(_ > R4TaskKeyCeiling),
         s"scan must prune past the old 4096 ceiling: $stats")
       // over the per-task In-filter budget: only part_id pushes to parquet, the
       // exact liveGroup check keeps rows identical
@@ -569,7 +576,7 @@ class V2SourceSpec extends AnyFunSuite {
 
   test("top-n pushdown: ORDER BY url LIMIT n prunes to a url-prefix of groups") {
     val df = graftTable.orderBy(col("url")).limit(40).select(col("url"), col("lang"))
-    val want = DecodeJob.decode(spark, root).toDF().orderBy(col("url")).limit(40)
+    val want = written.orderBy(col("url")).limit(40)
       .select(col("url"), col("lang")).collect().map(_.toString).toSeq
     assert(df.collect().map(_.toString).toSeq == want)
     val stats = GraftDataSource.planStatsFor(root).get
@@ -581,7 +588,7 @@ class V2SourceSpec extends AnyFunSuite {
       "pushed top-n must be visible in the scan description")
 
     // DESC reads the url-SUFFIX groups instead
-    val wantDesc = DecodeJob.decode(spark, root).toDF().orderBy(col("url").desc).limit(40)
+    val wantDesc = written.orderBy(col("url").desc).limit(40)
       .select(col("url")).collect().map(_.toString).toSeq
     assert(graftTable.orderBy(col("url").desc).limit(40).select(col("url"))
       .collect().map(_.toString).toSeq == wantDesc)
@@ -617,7 +624,7 @@ class V2SourceSpec extends AnyFunSuite {
       .as[graft.sources.WebPage]
     EncodeJob.run(spark, pages, r2, parts = 8)
     val v2 = spark.read.format("graft").load(r2)
-    val full = DecodeJob.decode(spark, r2).toDF()
+    val full = pages.toDF()
 
     val got = v2.orderBy(col("warc_ts")).limit(40).select(col("url"), col("warc_ts"))
       .collect().map(_.toString).sorted.toSeq
@@ -645,7 +652,7 @@ class V2SourceSpec extends AnyFunSuite {
     // multiset is deterministic even with ties at the cut)
     val gotShared = graftTable.orderBy(col("warc_ts")).limit(40).select(col("warc_ts"))
       .collect().map(_.toString).sorted.toSeq
-    val wantShared = DecodeJob.decode(spark, root).toDF().orderBy(col("warc_ts"))
+    val wantShared = written.orderBy(col("warc_ts"))
       .limit(40).select(col("warc_ts")).collect().map(_.toString).sorted.toSeq
     assert(gotShared == wantShared)
     val sharedStats = GraftDataSource.planStatsFor(root).get
@@ -665,7 +672,7 @@ class V2SourceSpec extends AnyFunSuite {
     }
     EncodeJob.run(spark, pages, r2, parts = 4)
     val v2 = spark.read.format("graft").load(r2)
-    val full = DecodeJob.decode(spark, r2).toDF()
+    val full = pages.toDF()
     def tss(df: DataFrame): Seq[String] =
       df.collect().map(r => if (r.isNullAt(0)) "null" else r.get(0).toString).sorted.toSeq
 
@@ -694,7 +701,7 @@ class V2SourceSpec extends AnyFunSuite {
     }
     EncodeJob.run(spark, pages, r2, parts = 4)
     val v2 = spark.read.format("graft").load(r2)
-    val full = DecodeJob.decode(spark, r2).toDF()
+    val full = pages.toDF()
 
     // Spark's default asc = NULLS FIRST: all 5 null-url rows are IN the top-20,
     // so the group holding them must survive pruning via its n_nulls metadata
@@ -735,13 +742,14 @@ class V2SourceSpec extends AnyFunSuite {
     // empty sentinel — compacted parts live in a NEGATIVE id namespace, so
     // every compacted group silently vanished from the V2 surface
     val r2 = Files.createTempDirectory("graft-v2-compacted-").toString
-    EncodeJob.run(spark, Webtext.generate(spark, 3000L, 8), r2, parts = 8)
+    val input = Webtext.generate(spark, 3000L, 8)
+    EncodeJob.run(spark, input, r2, parts = 8)
     val cr = graft.jobs.CompactJob.run(spark, r2)
     assert(cr.partsCompacted > 0 && cr.partsCreated > 0)
     assert(graft.sources.SnapshotStore.currentEntries(r2).exists(_.partId < 0))
     val viaV2 = spark.read.format("graft").load(r2)
       .select(col("url"), md5(col("html")).as("h"), col("lang"))
-    val want = sortedRows(DecodeJob.decode(spark, r2).toDF()
+    val want = sortedRows(input.toDF()
       .select(col("url"), md5(col("html")).as("h"), col("lang")))
     assert(viaV2.count() == 3000L, "compacted groups must not vanish from the V2 scan")
     assert(sortedRows(viaV2) == want)
@@ -863,13 +871,13 @@ class V2SourceSpec extends AnyFunSuite {
   test("scan, append, scan, DELETE, scan: every scan sees its snapshot's rows and parts") {
     import graft.sources.SnapshotStore
     val r = Files.createTempDirectory("graft-v2-replan-").toString
-    EncodeJob.run(spark, Webtext.generate(spark, 6000L, 8), r, parts = 8)
+    val input = Webtext.generate(spark, 6000L, 8)
+    EncodeJob.run(spark, input, r, parts = 8)
     val prefix = "https://host-1.example.com/"
     val pred = Seq(DecodeJob.StrPrefix("url", prefix))
-    def scan(): Seq[String] = sortedRows(spark.read.format("graft").load(r)
-      .where(col("url").startsWith(prefix)).select(col("url"), col("lang")))
-    def expected(): Seq[String] = sortedRows(DecodeJob.decode(spark, r).toDF()
-      .where(col("url").startsWith(prefix)).select(col("url"), col("lang")))
+    def matching(df: DataFrame): Seq[String] =
+      sortedRows(df.where(col("url").startsWith(prefix)).select(col("url"), col("lang")))
+    def scan(): Seq[String] = matching(spark.read.format("graft").load(r))
     // the plan was made from the CURRENT manifest: its kept groups are the
     // block-metadata matches of exactly the live parts
     def assertFreshPlan(step: String): Unit = {
@@ -879,16 +887,16 @@ class V2SourceSpec extends AnyFunSuite {
     }
 
     val first = scan()
-    assert(first == expected() && first.nonEmpty)
+    assert(first == matching(input.toDF()) && first.nonEmpty)
     assertFreshPlan("initial scan")
 
     // V2 append of matching rows: new parts, new rows
-    spark.createDataFrame(Seq.tabulate(50)(i =>
+    val extra = spark.createDataFrame(Seq.tabulate(50)(i =>
         graft.sources.WebPage(s"${prefix}appended/$i", new java.sql.Timestamp(0L),
           Array[Byte](1), s"t$i", "en")))
-      .write.format("graft").mode("append").save(r)
+    extra.write.format("graft").mode("append").save(r)
     val appended = scan()
-    assert(appended.size == first.size + 50 && appended == expected())
+    assert(appended.size == first.size + 50 && appended == matching(input.toDF().union(extra)))
     assertFreshPlan("after append")
 
     // DELETE WHERE (rewrites the affected parts under new ids)
@@ -897,7 +905,7 @@ class V2SourceSpec extends AnyFunSuite {
     spark.sql(s"DELETE FROM graft_replan WHERE url LIKE '${prefix}appended/%'")
     assert(SnapshotStore.currentEntries(r).map(_.partId).toSet != before, "delete rewrote parts")
     val deleted = scan()
-    assert(deleted == first && deleted == expected())
+    assert(deleted == first)
     assertFreshPlan("after delete")
   }
 }
