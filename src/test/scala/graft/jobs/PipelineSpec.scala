@@ -44,7 +44,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(res.encBytes < res.origBytes, "must actually compress")
 
     val decoded = DecodeJob.decode(spark, root)
-    assert(decoded.count() == n)
+    assert(DecodeJob.decodedRows(decoded) == n)
     assert(DecodeJob.verifyAgainst(Webtext.generate(spark, n, 8), decoded) == 0L)
 
     // sampled range boundaries must yield balanced work units (skew guard)
@@ -71,7 +71,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(SnapshotStore.committedPartIds(root) == (0 until 8).toSet)
 
     val decoded = DecodeJob.decode(spark, root)
-    assert(decoded.count() == n, "no dupes, no gaps")
+    assert(DecodeJob.decodedRows(decoded) == n, "no dupes, no gaps")
     assert(decoded.select("url").distinct().count() == n)
     assert(DecodeJob.verifyAgainst(Webtext.generate(spark, n, 8), decoded) == 0L)
   }
@@ -90,7 +90,7 @@ class PipelineSpec extends AnyFunSuite {
     }
     EncodeJob.run(spark, withNulls, root, parts = 4)
     val decoded = DecodeJob.decode(spark, root)
-    assert(decoded.count() == 3000)
+    assert(DecodeJob.decodedRows(decoded) == 3000)
     // exact field-level comparison including nulls and empty-vs-null distinction
     val mismatches = withNulls.toDF("url", "warc_ts", "html", "text", "lang")
       .join(decoded.toDF("url", "d_ts", "d_html", "d_text", "d_lang"), Seq("url"))
@@ -147,7 +147,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(ids.size == 4, s"4 waves -> 4 snapshots, got $ids")
     assert(SnapshotStore.currentSnapshotId(root).contains(ids.last))
     // monotone growth + old snapshots still decodable
-    val counts = ids.map(id => DecodeJob.decodeAt(spark, root, id).count())
+    val counts = ids.map(id => DecodeJob.decodedRows(DecodeJob.decodeAt(spark, root, id)))
     assert(counts == counts.sorted && counts.distinct == counts, s"not monotone: $counts")
     assert(counts.last == 6000L)
     // each snapshot's urls are a subset of the next (append-only isolation)
@@ -167,10 +167,10 @@ class PipelineSpec extends AnyFunSuite {
     assert(entries.size == 1 && entries.head.partId < 0,
       s"compacted part must live in the negative namespace: $entries")
     val decoded = DecodeJob.decode(spark, root)
-    assert(decoded.count() == 6000)
+    assert(DecodeJob.decodedRows(decoded) == 6000)
     assert(DecodeJob.verifyAgainst(Webtext.generate(spark, 6000, 8), decoded) == 0L)
     // pre-compaction snapshot still readable (time travel across compaction)
-    assert(DecodeJob.decodeAt(spark, root, preSnap).count() == 6000)
+    assert(DecodeJob.decodedRows(DecodeJob.decodeAt(spark, root, preSnap)) == 6000)
     // second run is a no-op: nothing small remains to merge
     assert(CompactJob.run(spark, root).partsCompacted == 0)
   }
@@ -198,12 +198,12 @@ class PipelineSpec extends AnyFunSuite {
     assert(kept.exists(_.partId >= 0) && kept.exists(_.partId < 0),
       s"dir must be SHARED between kept and compacted parts: $kept")
     val decoded = DecodeJob.decode(spark, root)
-    assert(decoded.count() == n, "replaced parts must not be decoded twice")
+    assert(DecodeJob.decodedRows(decoded) == n, "replaced parts must not be decoded twice")
     assert(decoded.select("url").distinct().count() == n)
     assert(DecodeJob.verifyAgainst(Webtext.generate(spark, n, 8), decoded) == 0L)
     // pre-compaction snapshot unaffected (time travel still exact)
     val preSnap = SnapshotStore.snapshotIds(root).head
-    assert(DecodeJob.decodeAt(spark, root, preSnap).count() == n)
+    assert(DecodeJob.decodedRows(DecodeJob.decodeAt(spark, root, preSnap)) == n)
   }
 
   test("a batch replayed AFTER compaction is still dropped (tombstone lineage)") {
@@ -220,7 +220,7 @@ class PipelineSpec extends AnyFunSuite {
     val replay = EncodeJob.run(spark, pages, root, parts = 4)
     assert(replay.partsEncoded == 0, "replay after compaction must be a no-op")
     val decoded = DecodeJob.decode(spark, root)
-    assert(decoded.count() == n)
+    assert(DecodeJob.decodedRows(decoded) == n)
     assert(decoded.select("url").distinct().count() == n)
   }
 
@@ -237,7 +237,7 @@ class PipelineSpec extends AnyFunSuite {
     val pre = SnapshotStore.expireSnapshots(root, keepLast = 1, orphanGraceMs = Long.MaxValue)
     assert(pre.removedSnapshots == Seq(1L) && pre.removedDataDirs.isEmpty,
       s"append-only dirs are shared with the kept snapshot: $pre")
-    assert(DecodeJob.decode(spark, root).count() == 4000)
+    assert(DecodeJob.decodedRows(DecodeJob.decode(spark, root)) == 4000)
 
     // compaction strands the pre-compaction dirs; expire + orphan sweep reclaims
     assert(CompactJob.run(spark, root).partsCompacted == 8)
@@ -245,7 +245,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(res.removedDataDirs.size == 3, s"2 stranded wave dirs + 1 orphan: $res")
     assert(res.removedBytes > 0)
     assert(SnapshotStore.snapshotIds(root).size == 1)
-    assert(DecodeJob.decode(spark, root).count() == 4000)
+    assert(DecodeJob.decodedRows(DecodeJob.decode(spark, root)) == 4000)
     assert(DecodeJob.verifyAgainst(Webtext.generate(spark, 4000, 8),
       DecodeJob.decode(spark, root)) == 0L)
   }
@@ -309,7 +309,8 @@ class PipelineSpec extends AnyFunSuite {
     try {
       val plan = full.queryExecution.executedPlan.toString()
       assert(!plan.contains("Exchange"), s"decode must not shuffle:\n$plan")
-      assert(full.select("url").distinct().count() == n, "no group dropped or duplicated")
+      assert(DecodeJob.decodedRows(full) == n, "no group dropped or duplicated")
+      assert(full.select("url").distinct().count() == n)
       assert(DecodeJob.verifyAgainst(Webtext.generate(spark, n, 8), full) == 0L)
       assert(DecodeJob.verifyAgainst(Webtext.generate(spark, n, 8), at) == 0L)
       assert(cols.columns.toSeq == Seq("url", "lang") && cols.distinct().count() == n)
@@ -342,9 +343,9 @@ class PipelineSpec extends AnyFunSuite {
           t.getMessage.contains("corrupt or foreign store layout")), s"not the layout error: $e")
     }
     layoutError(DecodeJob.decode(spark, root).collect())
+    layoutError(DecodeJob.decodedRows(DecodeJob.decode(spark, root)))
     layoutError(spark.read.format("graft").load(root).collect())
-    // a count is answered from the manifest: never fewer rows than were written
-    assert(DecodeJob.decode(spark, root).count() == 300L)
+    layoutError(DecodeJob.decodedRows(spark.read.format("graft").load(root)))
   }
 
   test("decodeWhere prunes block groups via metadata before any decompression") {
@@ -393,13 +394,13 @@ class PipelineSpec extends AnyFunSuite {
       "pruned result must equal decode+filter")
 
     // a value no metadata admits -> zero groups, zero rows, no crash
-    assert(DecodeJob.decodeWhere(spark, root,
-      Seq(DecodeJob.StrEq("lang", "zz"))).count() == 0L)
+    assert(DecodeJob.decodedRows(DecodeJob.decodeWhere(spark, root,
+      Seq(DecodeJob.StrEq("lang", "zz")))) == 0L)
 
     // conjunction across columns intersects key sets
     val both = DecodeJob.decodeWhere(spark, root,
       Seq(DecodeJob.StrEq("url", someUrl), DecodeJob.TsRange(Long.MinValue, Long.MaxValue)))
-    assert(both.count() == 1L)
+    assert(DecodeJob.decodedRows(both) == 1L)
 
     // projected + predicate-pushed: predicate column decoded for the filter
     // then dropped; equals the written pages + filter
@@ -412,7 +413,7 @@ class PipelineSpec extends AnyFunSuite {
     val cwTs = DecodeJob.decodeColumnsWhere(spark, root, Seq("url", "warc_ts"),
       Seq(DecodeJob.TsRange(hiTs, hiTs)))
     assert(cwTs.collect().forall(_.getLong(1) == hiTs))
-    assert(cwTs.count() == full.length)
+    assert(DecodeJob.decodedRows(cwTs) == full.length)
   }
 
   test("property: decodeWhere equals decode+filter for randomized predicates") {
@@ -483,7 +484,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(physical.contains("columns=[url,warc_ts,lang]"),
       s"column projection not pushed to the block scan:\n$physical")
 
-    assert(proj.count() == n)
+    assert(DecodeJob.decodedRows(proj) == n)
     // values match the full decode on every projected column (micros == timestamp)
     val full = DecodeJob.decode(spark, root).toDF()
       .select($"url", $"lang", unix_micros($"warc_ts").as("warc_ts"))
@@ -627,8 +628,8 @@ class PipelineSpec extends AnyFunSuite {
       Seq(DecodeJob.TsRange(Long.MinValue, Long.MaxValue))).isEmpty,
       "all-matching predicate must be gated (None), not collected")
     // ... and decodeWhere through the gate still returns the exact row set
-    assert(DecodeJob.decodeWhere(spark, root,
-      Seq(DecodeJob.TsRange(Long.MinValue, Long.MaxValue))).count() == n)
+    assert(DecodeJob.decodedRows(DecodeJob.decodeWhere(spark, root,
+      Seq(DecodeJob.TsRange(Long.MinValue, Long.MaxValue)))) == n)
 
     // a selective predicate still collects (Some) and prunes
     val someUrl = Webtext.page(7L).url
@@ -643,8 +644,8 @@ class PipelineSpec extends AnyFunSuite {
       DecodeJob.MaxPrunedKeyCollect = 0
       assert(DecodeJob.planPrunedKeys(spark, root, entries,
         Seq(DecodeJob.StrEq("url", someUrl))).isEmpty)
-      assert(DecodeJob.decodeWhere(spark, root,
-        Seq(DecodeJob.StrEq("url", someUrl))).count() == 1L, "gated path stays exact")
+      assert(DecodeJob.decodedRows(DecodeJob.decodeWhere(spark, root,
+        Seq(DecodeJob.StrEq("url", someUrl)))) == 1L, "gated path stays exact")
     } finally DecodeJob.MaxPrunedKeyCollect = saved
   }
 
@@ -906,9 +907,9 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     val root = freshRoot()
     EncodeJob.run(spark, Webtext.generate(spark, 2000, 4), root, parts = 4)
-    assert(DecodeJob.decodeWhere(spark, root, Seq.empty).count() == 2000L)
+    assert(DecodeJob.decodedRows(DecodeJob.decodeWhere(spark, root, Seq.empty)) == 2000L)
     val cols = DecodeJob.decodeColumnsWhere(spark, root, Seq("url", "lang"), Seq.empty)
-    assert(cols.columns.toSeq == Seq("url", "lang") && cols.count() == 2000L)
+    assert(cols.columns.toSeq == Seq("url", "lang") && DecodeJob.decodedRows(cols) == 2000L)
   }
 
   test("manifest string escaping round-trips control characters") {
@@ -939,6 +940,6 @@ class PipelineSpec extends AnyFunSuite {
     val res = SnapshotStore.expireSnapshots(root, keepLast = 1, orphanGraceMs = 0L)
     assert(res.removedSnapshots == Seq(1L), s"re-run must finish the interrupted expiry: $res")
     assert(SnapshotStore.snapshotIds(root) == Seq(2L))
-    assert(DecodeJob.decode(spark, root).count() == 400L, "current snapshot intact")
+    assert(DecodeJob.decodedRows(DecodeJob.decode(spark, root)) == 400L, "current snapshot intact")
   }
 }

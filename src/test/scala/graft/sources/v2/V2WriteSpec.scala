@@ -72,12 +72,12 @@ class V2WriteSpec extends AnyFunSuite {
     assert(all.map(_.partId).toSet.size == all.size, "part ids must stay unique")
     assert((all.map(_.partId).toSet -- firstParts).forall(_ > firstParts.max),
       "append ids must sit above every committed id")
-    assert(DecodeJob.decode(spark, root).count() == 4000L)
+    assert(DecodeJob.decodedRows(DecodeJob.decode(spark, root)) == 4000L)
     pages(300L).write.format("graft").mode("overwrite").save(root)
-    assert(DecodeJob.decode(spark, root).count() == 300L)
+    assert(DecodeJob.decodedRows(DecodeJob.decode(spark, root)) == 300L)
     val ids = SnapshotStore.snapshotIds(root)
     assert(ids.size == 3)
-    assert(DecodeJob.decodeAt(spark, root, ids.head).count() == 3000L,
+    assert(DecodeJob.decodedRows(DecodeJob.decodeAt(spark, root, ids.head)) == 3000L,
       "pre-overwrite snapshots stay readable (nothing deleted at commit)")
   }
 
@@ -149,7 +149,7 @@ class V2WriteSpec extends AnyFunSuite {
     val files = SnapshotStore.listFileNames(dir).filter(_.endsWith(".parquet"))
     assert(files.size == 2,
       s"crash/zombie staged files must not survive the commit: $files")
-    assert(DecodeJob.decode(spark, root).count() == 200L)
+    assert(DecodeJob.decodedRows(DecodeJob.decode(spark, root)) == 200L)
     assert(DecodeJob.decode(spark, root).toDF()
       .agg(countDistinct(col("url"))).collect()(0).getLong(0) == 200L,
       "no duplicated rows from zombie attempts")
@@ -188,7 +188,7 @@ class V2WriteSpec extends AnyFunSuite {
     finally spark.conf.unset("spark.graft.write.partitions")
     assert(SnapshotStore.currentEntries(root).size == 7,
       "each range partition becomes one part entry")
-    assert(DecodeJob.decode(spark, root).count() == 2000L)
+    assert(DecodeJob.decodedRows(DecodeJob.decode(spark, root)) == 2000L)
     val bad = intercept[Exception] {
       spark.conf.set("spark.graft.write.partitions", "zero")
       try pages(10L).write.format("graft").mode("append").save(freshRoot())
@@ -225,7 +225,7 @@ class V2WriteSpec extends AnyFunSuite {
       .collect().map(_.toString).sorted.toSeq
     assert(got == want, "survivors must be exactly the non-matching rows")
     // pre-delete snapshot stays readable (copy-on-write)
-    assert(DecodeJob.decodeAt(spark, root, preIds.last).count() == 4000L)
+    assert(DecodeJob.decodedRows(DecodeJob.decodeAt(spark, root, preIds.last)) == 4000L)
     // the delete commit is rows-rehomed: a caught-up stream must emit nothing
     assert(SnapshotStore.isRehomedCommit(root, SnapshotStore.snapshotIds(root).last))
     // a provably match-free predicate rewrites nothing (no new snapshot)

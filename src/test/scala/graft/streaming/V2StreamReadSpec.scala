@@ -201,7 +201,7 @@ class V2StreamReadSpec extends AnyFunSuite {
     run(src, root, tmp())
     assert(SnapshotStore.snapshotIds(root) == snapsBefore,
       "replayed epochs must not commit")
-    assert(DecodeJob.decode(spark, root).count() == 3000L, "no duplicate rows")
+    assert(DecodeJob.decodedRows(DecodeJob.decode(spark, root)) == 3000L, "no duplicate rows")
     // restart with the ORIGINAL checkpoint + new source data: only new rows
     Webtext.generate(spark, 500L, 1).toDF()
       .select(concat(lit("nw-"), col("url")).as("url"), col("warc_ts"),
@@ -209,7 +209,7 @@ class V2StreamReadSpec extends AnyFunSuite {
       .write.mode("append").parquet(src)
     val ckpt2 = tmp()
     run(src, root, ckpt2) // fresh ckpt: epochs 0-2 replay (dropped), 3 commits
-    assert(DecodeJob.decode(spark, root).count() == 3500L)
+    assert(DecodeJob.decodedRows(DecodeJob.decode(spark, root)) == 3500L)
     assert(DecodeJob.decode(spark, root).toDF()
       .where(col("url").startsWith("nw-")).count() == 500L)
     // batch SQL append onto the (now streamed) store stays refused
@@ -236,7 +236,7 @@ class V2StreamReadSpec extends AnyFunSuite {
     val src = tmp(); val root = tmp()
     Webtext.generate(spark, 900L, 3).write.parquet(src)
     run(src, root, tmp(), onePerTrigger = true) // 3 files → epochs 0..2 commit
-    val committedRows = DecodeJob.decode(spark, root).count()
+    val committedRows = DecodeJob.decodedRows(DecodeJob.decode(spark, root))
     assert(committedRows == 900L)
     // a 4th file lands, then a FRESH checkpoint with no per-trigger cap packs
     // ALL files into epoch 0 — its ids are committed but it carries NEW rows;
@@ -250,7 +250,7 @@ class V2StreamReadSpec extends AnyFunSuite {
     val e = intercept[Exception] { run(src, root, tmp(), onePerTrigger = false) }
     assert(messages(e).exists(_.contains("does not match the store")),
       s"mixed epoch must fail with the remediation message, got: ${messages(e)}")
-    assert(DecodeJob.decode(spark, root).count() == committedRows,
+    assert(DecodeJob.decodedRows(DecodeJob.decode(spark, root)) == committedRows,
       "the failed epoch must not have committed anything")
   }
 
@@ -278,7 +278,7 @@ class V2StreamReadSpec extends AnyFunSuite {
     // GENUINE replay (fresh checkpoint, unchanged source): the sidecar totals
     // verify each epoch exactly — staging drops, nothing duplicates
     run(src, root, tmp(), onePerTrigger = true)
-    assert(DecodeJob.decode(spark, root).count() == 900L, "replays dropped post-expiry")
+    assert(DecodeJob.decodedRows(DecodeJob.decode(spark, root)) == 900L, "replays dropped post-expiry")
     // MIXED epoch (new rows packed into a committed epoch namespace) must
     // still fail loudly — before the sidecar this was a silent WARN+drop that
     // lost the new rows forever
@@ -291,7 +291,7 @@ class V2StreamReadSpec extends AnyFunSuite {
     val e = intercept[Exception] { run(src, root, tmp(), onePerTrigger = false) }
     assert(messages(e).exists(_.contains("does not match the store")),
       s"post-expiry mixed epoch must fail, got: ${messages(e)}")
-    assert(DecodeJob.decode(spark, root).count() == 900L)
+    assert(DecodeJob.decodedRows(DecodeJob.decode(spark, root)) == 900L)
   }
 
   test("empty-store stream start survives later commits + expiry (offset 0 re-bases as fresh)") {
@@ -340,7 +340,7 @@ class V2StreamReadSpec extends AnyFunSuite {
     try run(src, root, ckpt)
     finally spark.conf.unset("spark.graft.write.partitions")
     assert(StreamingEncode.pinnedStreamParts(root) == pinned, "width unchanged")
-    assert(DecodeJob.decode(spark, root).count() == 1300L)
+    assert(DecodeJob.decodedRows(DecodeJob.decode(spark, root)) == 1300L)
     assert(DecodeJob.decode(spark, root).toDF()
       .where(col("url").startsWith("nw-")).count() == 300L)
   }
