@@ -6,15 +6,21 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.Group
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.InputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.MessageType
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.aggregate
@@ -24,6 +30,7 @@ import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.codec.{IntBlockCodec, StringBlockCodec}
 import graft.jobs.DecodeJob
@@ -209,9 +216,12 @@ object GraftDataSource {
    * Spark's own file-partition formula (maxSplitBytes/openCost/minPartitionNum
    * — one task per file measured 3× slower on many-file stores). Bins stay
    * within one dir, whose sorted live part ids gate the reader exactly.
-   * Shared by the batch [[GraftScan]] and the [[GraftMicroBatchStream]] (which
-   * passes only the parts NEW in its offset range). Returns (partitions,
-   * total file count).
+   * Shared by the batch [[GraftScan]], the copy-on-write [[GraftCowScan]] and
+   * the [[GraftMicroBatchStream]] (which passes only the parts NEW in its
+   * offset range). Listing runs at planning time with a plain session
+   * Hadoop conf; the partitions carry no conf, since the readers get theirs
+   * from the scan's one broadcast ([[GraftReaderFactory]]). Returns
+   * (partitions, total file count).
    */
   private[v2] def packPartitions(spark: SparkSession, root: String,
       entries: Seq[SnapshotStore.PartEntry], readSchema: StructType,
@@ -226,8 +236,7 @@ object GraftDataSource {
     // manifest-level file pruning: skip whole data dirs owning no surviving part
     val dirs = entries.map(_.dataDir).distinct
       .filter(d => keyParts.forall(kp => liveByDir(d).exists(kp)))
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
+    val conf = spark.sessionState.newHadoopConf()
     val sqlConf = spark.sessionState.conf
     val maxBytes = sqlConf.filesMaxPartitionBytes
     val openCost = sqlConf.filesOpenCostInBytes
@@ -238,7 +247,7 @@ object GraftDataSource {
     val allFiles: Seq[(String, Array[(String, Long)])] = {
       def list(d: String): Array[(String, Long)] = {
         val dirPath = new Path(new Path(root), d)
-        val fs = dirPath.getFileSystem(conf.value)
+        val fs = dirPath.getFileSystem(conf)
         // a file whose name carries its part id is skipped unopened when this
         // scan reads no group of that part
         fs.listStatus(dirPath)
@@ -276,7 +285,7 @@ object GraftDataSource {
       }
       if (bin.nonEmpty) bins += bin
       bins.map(b => GraftInputPartition(b.toArray, readSchema, refColumn,
-        liveByDir(d), keysBc, conf, columnar, limit): InputPartition)
+        liveByDir(d), keysBc, columnar, limit): InputPartition)
     }.toArray
     (partitions, allFiles.iterator.map(_._2.length).sum)
   }
@@ -439,12 +448,13 @@ final class GraftTable(root: String) extends Table with SupportsRead
   * DELETE path (pruning + EXACT row conditions). */
 private[graft] object FilterConversion {
 
-  /** Epoch micros of a pushed-down timestamp literal (either external form). */
+  /** Epoch micros of a pushed-down timestamp literal (either external form),
+    * converted back the way Spark made it: a `java.sql.Timestamp` is in the
+    * hybrid Julian/Gregorian calendar, so a literal before 1582 is rebased to
+    * the proleptic Gregorian micros the store holds. */
   private def tsMicros(v: Any): Option[Long] = v match {
-    case t: java.sql.Timestamp =>
-      Some(Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L)
-    case i: java.time.Instant =>
-      Some(Math.floorDiv(i.getEpochSecond, 1L) * 1000000L + i.getNano / 1000L)
+    case t: java.sql.Timestamp => Some(DateTimeUtils.fromJavaTimestamp(t))
+    case i: java.time.Instant => Some(DateTimeUtils.instantToMicros(i))
     case _ => None
   }
 
@@ -1031,7 +1041,12 @@ final class GraftScan(root: String, snapshotId: Option[Long],
     partitions
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = GraftReaderFactory
+  /** One conf broadcast per scan, made on first use: a scan planned twice
+    * around runtime filters, or asked for its factory more than once, reuses
+    * it. */
+  private lazy val readerFactory = GraftReaderFactory(SparkSession.active)
+
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
   /** Micro-batch streaming read over the snapshot-id sequence (see
     * [[GraftMicroBatchStream]]); pushed predicates prune each batch's delta
@@ -1051,7 +1066,10 @@ final class GraftScan(root: String, snapshotId: Option[Long],
 }
 
 /** A bin of whole block parquet files from ONE data dir; groups are whole
-  * within each file by construction. */
+  * within each file by construction. It carries no Hadoop conf: Spark
+  * serializes every partition once per task, and the session conf is
+  * ~110 KB, so the conf rides the scan's one broadcast in the
+  * [[GraftReaderFactory]] instead. */
 final case class GraftInputPartition(
     files: Array[String],
     readSchema: StructType,          // required output columns + types, in order
@@ -1060,7 +1078,6 @@ final case class GraftInputPartition(
     // broadcast of ALL surviving sorted (part_id<<32|seq) keys, or null = no
     // pruning; each task slices its dir's runs out (bounded per-task payload)
     keysBc: org.apache.spark.broadcast.Broadcast[Array[Long]],
-    conf: org.apache.spark.util.SerializableConfiguration,
     columnar: Boolean,
     limit: Int = -1) extends InputPartition { // pushed per-task row cap; -1 = none
   def columns: Array[String] = readSchema.fieldNames
@@ -1071,17 +1088,34 @@ final case class GraftInputPartition(
 private final class ProjectingGroupReadSupport(cols: Seq[String]) extends GroupReadSupport {
   override def init(conf: Configuration,
       keyValueMetaData: java.util.Map[String, String],
-      fileSchema: MessageType): org.apache.parquet.hadoop.api.ReadSupport.ReadContext = {
+      fileSchema: MessageType): ReadSupport.ReadContext = {
     val fields: Array[org.apache.parquet.schema.Type] =
       cols.map(n => fileSchema.getType(Array(n): _*)).toArray
-    new org.apache.parquet.hadoop.api.ReadSupport.ReadContext(
+    new ReadSupport.ReadContext(
       new MessageType(fileSchema.getName, fields: _*))
   }
 }
 
-object GraftReaderFactory extends PartitionReaderFactory {
+/** Reads one block file, projected by [[ProjectingGroupReadSupport]], with
+  * the conf of the [[InputFile]] it opens. The `Builder(InputFile)`
+  * constructor takes that conf as is; the path-based builder builds and reads
+  * a default `Configuration` (a classpath scan and XML parse of
+  * `core-default.xml`) for every file before `withConf` replaces it. */
+private final class BlockFileReaderBuilder(file: InputFile, cols: Seq[String])
+    extends ParquetReader.Builder[Group](file) {
+  override protected def getReadSupport(): ReadSupport[Group] =
+    new ProjectingGroupReadSupport(cols)
+}
+
+/** The reader factory of every block-file scan ([[GraftScan]],
+  * [[GraftCowScan]], [[GraftMicroBatchStream]]). It holds the session Hadoop
+  * conf as ONE broadcast per scan, the way Spark's `ParquetScan` does: each
+  * executor fetches it once, tasks share it, and every block file opens from
+  * it ([[BlockFileReaderBuilder]]). */
+final case class GraftReaderFactory(conf: Broadcast[SerializableConfiguration])
+    extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new GraftPartitionReader(partition.asInstanceOf[GraftInputPartition])
+    new GraftPartitionReader(partition.asInstanceOf[GraftInputPartition], conf.value.value)
 
   // columnar is a per-scan choice (spark.graft.v2.columnar): copying multi-KB
   // text/html blobs into ColumnVectors measurably LOSES to the row path's
@@ -1096,7 +1130,13 @@ object GraftReaderFactory extends PartitionReaderFactory {
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new GraftColumnarReader(partition.asInstanceOf[GraftInputPartition])
+    new GraftColumnarReader(partition.asInstanceOf[GraftInputPartition], conf.value.value)
+}
+
+object GraftReaderFactory {
+  /** A factory over a fresh broadcast of the session's Hadoop conf. */
+  def apply(spark: SparkSession): GraftReaderFactory = GraftReaderFactory(
+    spark.sparkContext.broadcast(new SerializableConfiguration(spark.sessionState.newHadoopConf())))
 }
 
 /**
@@ -1106,8 +1146,8 @@ object GraftReaderFactory extends PartitionReaderFactory {
  * buffer flushes at file boundaries (groups are whole per file). Bounded
  * memory: one 64Ki-row group in flight.
  */
-private final class BlockGroupStream(p: GraftInputPartition, readCols: Array[String],
-                                     countOnly: Boolean) {
+private final class BlockGroupStream(p: GraftInputPartition, conf: Configuration,
+                                     readCols: Array[String], countOnly: Boolean) {
   /** One live, complete block group (encoded bytes per requested column). */
   final case class GroupData(cols: Map[String, Array[Byte]], n: Int, pid: Int)
 
@@ -1193,16 +1233,15 @@ private final class BlockGroupStream(p: GraftInputPartition, readCols: Array[Str
 
   private val fileQueue = p.files.iterator
   private var curFile: String = _
-  private var reader: ParquetReader[org.apache.parquet.example.data.Group] = _
+  private var reader: ParquetReader[Group] = _
 
   private def openNext(): Boolean = {
     if (reader != null) { reader.close(); reader = null }
     if (!fileQueue.hasNext) false
     else {
       curFile = fileQueue.next()
-      reader = ParquetReader.builder(new ProjectingGroupReadSupport(projNames),
-          new Path(curFile))
-        .withConf(p.conf.value)
+      reader = new BlockFileReaderBuilder(HadoopInputFile.fromPath(new Path(curFile), conf),
+          projNames)
         .withFilter(filter)
         .build()
       true
@@ -1285,7 +1324,7 @@ private final class BlockGroupStream(p: GraftInputPartition, readCols: Array[Str
 /** Row-based reader over [[BlockGroupStream]] — the DEFAULT path (measured
   * 2× faster than columnar on blob-heavy scans via zero-copy UTF8String;
   * [[GraftColumnarReader]] is the opt-in alternative). */
-final class GraftPartitionReader(p: GraftInputPartition)
+final class GraftPartitionReader(p: GraftInputPartition, conf: Configuration)
     extends PartitionReader[InternalRow] {
 
   // `_part_id` is a METADATA column (constant per block group, known from the
@@ -1297,7 +1336,7 @@ final class GraftPartitionReader(p: GraftInputPartition)
   // column (the store's first column, present in every group) never leave disk
   private val metaOnly = dataCols.isEmpty
   private val readCols: Array[String] = if (metaOnly) Array(p.refColumn) else dataCols
-  private val stream = new BlockGroupStream(p, readCols, countOnly = metaOnly)
+  private val stream = new BlockGroupStream(p, conf, readCols, countOnly = metaOnly)
 
   private var current: InternalRow = _
   private var pending: Iterator[InternalRow] = Iterator.empty
@@ -1377,14 +1416,14 @@ object GraftColumnarReader {
   private[v2] var MaxBatchColumnBytes: Long = 256L << 20
 }
 
-final class GraftColumnarReader(p: GraftInputPartition)
+final class GraftColumnarReader(p: GraftInputPartition, conf: Configuration)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
   import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 
   private val countOnly = p.columns.isEmpty
   private val readCols: Array[String] = if (countOnly) Array(p.refColumn) else p.columns
-  private val stream = new BlockGroupStream(p, readCols, countOnly)
+  private val stream = new BlockGroupStream(p, conf, readCols, countOnly)
   // single source of truth for field types: the scan's read schema (pruned
   // from the store's persisted schema)
   private val schema: StructType = p.readSchema

@@ -221,5 +221,8 @@ final class GraftMicroBatchStream(root: String,
   private var lastPlan: Array[InputPartition] = null
   private var lastKeysBc: org.apache.spark.broadcast.Broadcast[Array[Long]] = null
 
-  override def createReaderFactory(): PartitionReaderFactory = GraftReaderFactory
+  // one conf broadcast for the life of the stream, shared by every batch
+  private lazy val readerFactory = GraftReaderFactory(SparkSession.active)
+
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 }

@@ -201,7 +201,10 @@ final class GraftCowScan(root: String, op: GraftRowLevelOperation,
       requiredSchema, "url", None, null, columnar = false, limit = -1)._1
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = GraftReaderFactory
+  // one conf broadcast per statement, however often Spark plans this scan
+  private lazy val readerFactory = GraftReaderFactory(SparkSession.active)
+
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 }
 
 /** Same physical layout contract as [[GraftWrite]] (url range distribution +

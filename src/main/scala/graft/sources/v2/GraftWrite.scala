@@ -556,9 +556,7 @@ object GraftDataWriter {
  * ([[GraftWriteLayout.publish]]).
  */
 final class GraftDataWriter(absDir: String, partId: Int, taskId: Long,
-    conf: org.apache.spark.util.SerializableConfiguration =
-      new org.apache.spark.util.SerializableConfiguration(
-        new org.apache.hadoop.conf.Configuration()),
+    conf: org.apache.spark.util.SerializableConfiguration,
     schema: StructType = GraftDataSource.PageSchema,
     maxBlockBytes: Long = EncodeJob.MaxBlockBytes)
     extends DataWriter[InternalRow] {
@@ -589,6 +587,9 @@ final class GraftDataWriter(absDir: String, partId: Int, taskId: Long,
     writer = ExampleParquetWriter.builder(
         org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
           new Path(stagedPath.toString), c))
+      // the task conf: without it the builder loads a default Configuration
+      // (classpath scan and XML parse) for every file
+      .withConf(c)
       .withType(GraftDataWriter.BlockFileSchema)
       // `encoded` dominates and is already codec-compressed high-entropy bytes;
       // snappy over it costs CPU for ~0 size win

@@ -908,4 +908,108 @@ class V2SourceSpec extends AnyFunSuite {
     assert(deleted == first)
     assertFreshPlan("after delete")
   }
+
+  test("input partitions stay small: the Hadoop conf rides the factory, not each task") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    def partitions(df: DataFrame): Seq[GraftInputPartition] =
+      df.queryExecution.sparkPlan.collect { case b: BatchScanExec => b.inputPartitions }
+        .flatten.map(_.asInstanceOf[GraftInputPartition])
+    def javaBytes(o: AnyRef): Int = {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(o); out.close()
+      bytes.size()
+    }
+    val selective = partitions(graftTable
+      .where(col("url").startsWith("https://host-1.example.com/")).select(col("url")))
+    assert(selective.forall(_.keysBc != null), "selective scan must prune")
+    val full = partitions(
+      graftTable.select(col("url"), col("warc_ts"), col("html"), col("text"), col("lang")))
+    Seq("selective" -> selective, "full" -> full).foreach { case (name, ps) =>
+      assert(ps.nonEmpty, s"$name scan planned no graft partitions")
+      ps.foreach { p =>
+        val n = javaBytes(p)
+        assert(n < 4096, s"$name scan: a ${p.files.length}-file partition serializes to $n bytes")
+      }
+    }
+  }
+
+  test("the session's Hadoop conf reaches the executor-side reader") {
+    val r = Files.createTempDirectory("graft-v2-conf-").toString
+    EncodeJob.run(spark, Webtext.generate(spark, 4000L, 8), r, parts = 8)
+    def opensDuring(df: DataFrame): (Int, Int) = {
+      CountingLocalFileSystem.opened.clear()
+      df.collect()
+      val storeOpens = CountingLocalFileSystem.opened.toArray.count(_.toString.contains(r))
+      (storeOpens, GraftDataSource.planStatsFor(r).get.files)
+    }
+    spark.conf.set("fs.file.impl", classOf[CountingLocalFileSystem].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    try {
+      val (fullOpens, fullFiles) = opensDuring(
+        spark.read.format("graft").load(r).select(col("url"), col("lang")))
+      assert(fullFiles == 8 && fullOpens == fullFiles,
+        s"full scan opened $fullOpens block files through the session's file system, " +
+        s"planned $fullFiles")
+      // planned from part stats (no Spark job), so every counted open is the reader's
+      val (selOpens, selFiles) = opensDuring(spark.read.format("graft").load(r)
+        .where(col("url").startsWith("https://host-1.example.com/") && col("lang") === "en")
+        .select(col("url")))
+      assert(selFiles >= 1 && selFiles < 8 && selOpens == selFiles,
+        s"selective scan opened $selOpens block files, planned $selFiles")
+    } finally {
+      spark.conf.unset("fs.file.impl")
+      spark.conf.unset("fs.file.impl.disable.cache")
+    }
+  }
+
+  test("pre-1582 timestamp literals prune on the store's proleptic Gregorian micros") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    // warc_ts rises with the url layout, one hour per page from 1500-05-01, so
+    // each part covers a few days of May 1500. A pushed java.sql.Timestamp is
+    // a hybrid-calendar value: read without the Julian -> Gregorian rebase,
+    // its bound lands 10 days late and prunes parts holding matching rows.
+    val r2 = Files.createTempDirectory("graft-v2-ts-1500-").toString
+    val pages = Webtext.generate(spark, 800L, 8).toDF()
+      .withColumn("rk", row_number().over(Window.orderBy(col("url"))))
+      .withColumn("warc_ts", expr("timestampadd(HOUR, rk, timestamp'1500-05-01 00:00:00')"))
+      .select(col("url"), col("warc_ts"), col("html"), col("text"), col("lang"))
+      .as[graft.sources.WebPage]
+    EncodeJob.run(spark, pages, r2, parts = 8)
+    spark.read.format("graft").load(r2).createOrReplaceTempView("graft_ts_1500")
+    val range = "warc_ts BETWEEN TIMESTAMP'1500-05-25 00:00:00' AND TIMESTAMP'1500-05-30 00:00:00'"
+    val query = s"SELECT url, unix_micros(warc_ts) FROM graft_ts_1500 WHERE $range"
+    // the unpruned residual: the same range evaluated by Spark over the written pages
+    val want = sortedRows(pages.toDF().where(expr(range))
+      .select(col("url"), unix_micros(col("warc_ts"))))
+    assert(want.nonEmpty)
+    def checkPruned(label: String): Unit = {
+      val got = sortedRows(spark.sql(query))
+      val same = got == want
+      assert(same, s"$label: ${got.size} rows, the residual keeps ${want.size}")
+      val stats = GraftDataSource.planStatsFor(r2).get
+      assert(stats.predicates >= 1 && stats.prunedGroupKeys.exists(k => k >= 1 && k < 8),
+        s"$label: the range must prune some groups and keep the matching ones: $stats")
+    }
+    checkPruned("java.sql.Timestamp literal")
+    spark.conf.set("spark.sql.datetime.java8API.enabled", "true")
+    try checkPruned("java.time.Instant literal")
+    finally spark.conf.unset("spark.sql.datetime.java8API.enabled")
+  }
+}
+
+/** A local file system that records every path opened through it. Registered
+  * as `fs.file.impl` with the cache disabled, it shows which conf a reader
+  * opened its files with. */
+class CountingLocalFileSystem extends org.apache.hadoop.fs.LocalFileSystem {
+  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int)
+      : org.apache.hadoop.fs.FSDataInputStream = {
+    if (f.getName.endsWith(".parquet")) CountingLocalFileSystem.opened.add(f.toString)
+    super.open(f, bufferSize)
+  }
+}
+
+object CountingLocalFileSystem {
+  val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
