@@ -218,15 +218,29 @@ object DecodeJob {
                         predicates: Seq[BlockPredicate]): org.apache.spark.sql.DataFrame =
     matchingKeysOf(blocks(spark, root), predicates)
 
-  /** [[matchingGroupKeys]] over a PINNED entry set — for callers that must
-    * keep planning AND the later rewrite/commit on ONE manifest read: deriving
-    * affected parts from a re-read manifest while holding an older entry list
-    * lets a concurrent compaction slip between the two, and a commit that then
+  /** The parts of the PINNED `entries` that may hold a row matching all
+    * `predicates` (every part when there are none) — the parts a
+    * copy-on-write DELETE or MERGE rewrites. Level 1 first
+    * ([[partsMayMatch]]); when every survivor is one block group with stats
+    * the survivors are the answer and no Spark job runs, otherwise the
+    * block-metadata job runs over the survivors only. Callers keep planning
+    * AND the later rewrite/commit on ONE manifest read: deriving affected
+    * parts from a re-read manifest while holding an older entry list lets a
+    * concurrent compaction slip between the two, and a commit that then
     * tombstones parts it never rewrote is silent row loss. */
-  private[graft] def matchingGroupKeysOf(spark: SparkSession, root: String,
+  private[graft] def affectedParts(spark: SparkSession, root: String,
       entries: Seq[SnapshotStore.PartEntry],
-      predicates: Seq[BlockPredicate]): org.apache.spark.sql.DataFrame =
-    matchingKeysOf(fromEntries(spark, root, entries), predicates)
+      predicates: Seq[BlockPredicate]): Set[Int] = {
+    if (predicates.isEmpty || entries.isEmpty) return entries.map(_.partId).toSet
+    requireValidPredicates(predicates, None)
+    val survivors = partsMayMatch(entries, predicates)
+    if (survivors.forall(_.stats.exists(_.nGroups == 1))) survivors.map(_.partId).toSet
+    else {
+      import spark.implicits._
+      matchingKeysOf(fromEntries(spark, root, survivors), predicates)
+        .select($"part_id").distinct().as[Int].collect().toSet
+    }
+  }
 
   private def matchingKeysOf(blocksDf: org.apache.spark.sql.DataFrame,
                              predicates: Seq[BlockPredicate],

@@ -45,16 +45,14 @@ object DeleteJob {
     val curSnap = pinned.getOrElse(0L)
     if (entries.isEmpty) return DeleteResult(curSnap, 0, 0, 0L, 0L)
 
-    // part-level pruning via the metadata-only group scan (manifest-scale
-    // output; a part with zero admitting groups cannot hold a matching row).
-    // Both the key scan and the survivor decode below ride the SAME entry
-    // list read above — a concurrent compaction between manifest re-reads
-    // could otherwise return re-homed ids this list doesn't hold, and the
-    // replacing commit would tombstone parts whose rows were never rewritten
+    // part-level pruning (a part with no admitting group cannot hold a matching
+    // row). Both the pruning and the survivor decode below ride the SAME
+    // entry list read above — a concurrent compaction between manifest
+    // re-reads could otherwise return re-homed ids this list doesn't hold,
+    // and the replacing commit would tombstone parts whose rows were never
+    // rewritten
     val affectedIds: Seq[Int] =
-      if (prunePredicates.isEmpty) entries.map(_.partId)
-      else DecodeJob.matchingGroupKeysOf(spark, root, entries, prunePredicates)
-        .select($"part_id").distinct().as[Int].collect().toSeq
+      DecodeJob.affectedParts(spark, root, entries, prunePredicates).toSeq
     if (affectedIds.isEmpty) return DeleteResult(curSnap, 0, 0, 0L, 0L)
 
     val affectedSet = affectedIds.toSet

@@ -22,7 +22,7 @@ object LocalSession {
 
   /** Fresh tmpfs-backed scratch dir (falls back to /tmp when /dev/shm is not
     * writable) so measurements reflect compute, not sandbox disk noise.
-    * Shared by the measurement mains (Bench / WriteScaleCheck). */
+    * Used by the `Bench` measurement main. */
   def tmpfsScratchDir(prefix: String): String = {
     val base = if (java.nio.file.Files.isWritable(java.nio.file.Paths.get("/dev/shm")))
       "/dev/shm" else "/tmp"

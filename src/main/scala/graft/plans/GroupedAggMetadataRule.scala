@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count}
@@ -10,45 +9,51 @@ import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, Data
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.sources.SnapshotStore
 import graft.sources.v2.{GraftGroupedAgg, GraftScan, GraftTable}
 
 /**
- * FILTERED grouped-aggregate answering from dictionary metadata — the shape
- * the DataSource V2 pushdown contract cannot express: Spark only attempts
+ * FILTERED grouped-aggregate answering from the manifest — the shape the
+ * DataSource V2 pushdown contract cannot express: Spark only attempts
  * aggregate pushdown when NO post-scan filters remain, and this source keeps
  * every filter as a residual (block pruning is inexact), so
  * `SELECT lang, count(*) FROM graft WHERE lang <> 'en' GROUP BY lang` always
- * decoded the store even though the unfiltered variant answers from metadata
- * ([[graft.sources.v2.GraftGroupedAgg]], the V2 complete pushdown).
+ * decoded the store even though the unfiltered variant answers from the
+ * manifest ([[graft.sources.v2.GraftGroupedAgg]], the V2 complete pushdown).
  *
  * This optimizer rule closes that gap one level up, where the whole subtree
  * is visible: an `Aggregate(group = c)(Filter(cond)(graft relation))` whose
  * condition references ONLY the group column is replaced by a
- * [[LocalRelation]] of the metadata answer with `cond` evaluated EXACTLY per
+ * [[LocalRelation]] of the manifest answer with `cond` evaluated EXACTLY per
  * group value on the driver (Catalyst expression eval over each dict value —
  * null three-valued logic, LIKE, IN, everything cond can say about one
- * string, for free). Zero file IO, zero tasks: the plan becomes a local scan.
+ * string, for free). Zero file IO, zero Spark jobs: the plan becomes a local
+ * scan. The answer is driver arithmetic over one manifest read, so the rule
+ * recomputes it on every run of the fixed-point optimizer batches instead of
+ * caching it — nothing can serve another snapshot's, or another store's,
+ * counts.
  *
  * Exactness gates (any miss -> plan unchanged, Spark computes normally):
- *  - the store's metadata can answer at all (same dict+counts coverage gate
- *    as the unfiltered pushdown — [[GraftGroupedAgg.compute]] returns None
- *    otherwise);
+ *  - the store's manifest can answer at all (same dict + counts coverage
+ *    gate as the unfiltered pushdown — [[GraftGroupedAgg.compute]] returns
+ *    None otherwise);
  *  - single string group column, aggregates only count(*) / count(c)
  *    (non-distinct, unfiltered);
  *  - cond is deterministic, subquery-free, and references no column but c —
- *    a predicate on any OTHER column changes per-group counts in ways block
- *    metadata cannot attribute;
+ *    a predicate on any OTHER column changes per-group counts in ways the
+ *    per-value counts cannot attribute;
  *  - cond evaluation itself throws nothing (an ANSI cast error declines and
  *    surfaces through the normal scan instead).
  *
  * Matches BOTH relation stages, because the rule is registered both as an
  * extension optimizer rule (runs before V2 scan building — sees
- * [[DataSourceV2Relation]]) and in `experimental.extraOptimizations` (runs
- * last — sees the built [[DataSourceV2ScanRelation]]). Incremental
- * (fromSnapshot) scans are excluded in both forms: a range delta is not the
- * state the metadata describes. The unfiltered shape is deliberately NOT
- * matched here — it already rides the V2 complete pushdown with its
- * plan-visible `PushedAggregates`.
+ * [[DataSourceV2Relation]], and reads the manifest of the relation's
+ * snapshot) and in `experimental.extraOptimizations` (runs last — sees the
+ * built [[DataSourceV2ScanRelation]], and answers from the scan's pinned
+ * entries). Incremental (fromSnapshot) scans are excluded in both forms: a
+ * range delta is not the state the manifest describes. The unfiltered shape
+ * is deliberately NOT matched here — it already rides the V2 complete
+ * pushdown with its plan-visible `PushedAggregates`.
  */
 object GroupedAggMetadataRule extends Rule[LogicalPlan] {
 
@@ -57,9 +62,11 @@ object GroupedAggMetadataRule extends Rule[LogicalPlan] {
       rewrite(a, g).getOrElse(a)
   }
 
-  /** (store root, pinned snapshot, table schema) when `p` is a graft relation
-    * whose metadata describes the scanned state. */
-  private def graftScope(p: LogicalPlan): Option[(String, Option[Long], StructType)] =
+  /** (table schema, the manifest entries its answer reads) when `p` is a
+    * graft relation whose manifest describes the scanned state. The entries
+    * are read only once the rest of the shape has matched. */
+  private def graftScope(p: LogicalPlan)
+      : Option[(StructType, () => Option[Seq[SnapshotStore.PartEntry]])] =
     p match {
       case r: DataSourceV2Relation => r.table match {
         // decline on ANY incremental option (also a lone toSnapshot — the
@@ -69,17 +76,14 @@ object GroupedAggMetadataRule extends Rule[LogicalPlan] {
         // answer the wrong snapshot)
         case t: GraftTable if !r.options.containsKey("fromSnapshot") &&
             !r.options.containsKey("toSnapshot") =>
-          Option(r.options.get("snapshotId")) match {
-            case None => Some((t.storeRoot, None, t.schema()))
-            case Some(v) =>
-              try Some((t.storeRoot, Some(v.toLong), t.schema()))
-              catch { case _: NumberFormatException => None }
-          }
+          try {
+            val id = Option(r.options.get("snapshotId")).map(_.toLong)
+            Some((t.schema(), () => SnapshotStore.entriesOf(t.storeRoot, id)))
+          } catch { case _: NumberFormatException => None }
         case _ => None
       }
       case r: DataSourceV2ScanRelation => r.scan match {
-        case s: GraftScan =>
-          s.metadataScope.map { case (root, snap) => (root, snap, r.relation.table.schema()) }
+        case s: GraftScan => Some((r.relation.table.schema(), () => s.metadataEntries))
         case _ => None
       }
       case _ => None
@@ -105,7 +109,7 @@ object GroupedAggMetadataRule extends Rule[LogicalPlan] {
       }
       case _ => return None // unfiltered: the V2 complete pushdown's job
     }
-    val (root, snapshotId, schema) = graftScope(rel).getOrElse(return None)
+    val (schema, entries) = graftScope(rel).getOrElse(return None)
     // the group attribute must BE the relation's column (same exprId), typed
     // string in the store schema
     if (!rel.output.exists(o => o.exprId == g.exprId && o.dataType == StringType))
@@ -125,7 +129,7 @@ object GroupedAggMetadataRule extends Rule[LogicalPlan] {
         }
       case _ => return None
     }
-    val rows = cachedCompute(root, snapshotId, g.name).getOrElse(return None)
+    val rows = entries().flatMap(GraftGroupedAgg.compute(_, g.name)).getOrElse(return None)
     // exact per-value filter: bind cond to a one-column row and evaluate with
     // full Catalyst semantics (three-valued null logic included — the SQL NULL
     // group passes iff cond(NULL) is TRUE, exactly like the row filter would)
@@ -153,45 +157,4 @@ object GroupedAggMetadataRule extends Rule[LogicalPlan] {
 
   /** Test hook: metadata-answered filtered grouped aggregates in this JVM. */
   val fired = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Memoized [[GraftGroupedAgg.compute]] — both negative and positive
-    * results. The rule sits in FIXED-POINT optimizer batches (the operator
-    * batch runs before AND after filter inference, plus extraOptimizations),
-    * so one query would otherwise re-run the metadata jobs 4-8 times; and a
-    * decline (e.g. GROUP BY text) re-matches on every iteration. Keyed by the
-    * RESOLVED snapshot id: explicit ids are immutable forever, and the
-    * current-state key changes with every commit (one tiny pointer read), so
-    * a write between queries can never serve stale counts. Bounded LRU. */
-  private val MaxCached = 64
-  private val cache = new java.util.LinkedHashMap[(String, Long, Long, String),
-      Option[Seq[GraftGroupedAgg.GroupRow]]](MaxCached, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[(String, Long, Long, String),
-          Option[Seq[GraftGroupedAgg.GroupRow]]]): Boolean = size() > MaxCached
-  }
-
-  private def cachedCompute(root: String, snapshotId: Option[Long],
-      column: String): Option[Seq[GraftGroupedAgg.GroupRow]] = {
-    // the identity token guards the same-path-recreated-store case: a store
-    // dropped and recreated restarts snapshot ids at 1, and (root, id) alone
-    // could serve the OLD store's counts (r7 correctness fix, ADVICE). Token
-    // read BEFORE resolving/computing and re-checked after: a commit racing
-    // the compute means the result may not belong to the token, so it is
-    // returned but NOT cached (and a missing pointer, -1, never caches).
-    val t0 = graft.sources.v2.GraftDataSource.storeIdentityToken(root)
-    val resolved = snapshotId.orElse(
-      graft.sources.SnapshotStore.currentSnapshotId(root)).getOrElse(return None)
-    cache.synchronized {
-      val key = (root, t0, resolved, column)
-      val hit = if (t0 == -1L) null else cache.get(key)
-      if (hit != null) return hit
-      // compute under the lock: concurrent planners of the same store would
-      // otherwise race the same two metadata jobs (compute is driver-side)
-      val res = GraftGroupedAgg.compute(SparkSession.active, root, Some(resolved), column)
-      if (t0 != -1L &&
-          graft.sources.v2.GraftDataSource.storeIdentityToken(root) == t0)
-        cache.put(key, res)
-      res
-    }
-  }
 }

@@ -21,13 +21,19 @@ import scala.jdk.CollectionConverters._
  *  "stats":{"n_groups":1,"columns":{
  *     "url":{"n_nulls":0,"str_min":"https://a/","str_max":"https://b/"},
  *     "warc_ts":{"n_nulls":0,"min":1700000000000000,"max":1700000999000000},
- *     "lang":{"n_nulls":0,"str_min":"de","str_max":"ru","str_dict":["de","en","ru"]}}},
+ *     "warc_ts":{"n_nulls":0,"min":1700000000000000,"max":1700000999000000,
+ *                "sum":4250001248750000000},
+ *     "lang":{"n_nulls":0,"str_min":"de","str_max":"ru","str_dict":["de","en","ru"],
+ *             "str_dict_counts":[700,1500,300]},
+ *     "html":{"n_nulls":0}}},
  *  "codecs":{"url":"str_fsst","warc_ts":"delta(eg(k=3))"}}
  * }}}
  * `stats` ([[PartStats]]) is optional: lines written before it existed parse
  * to `stats = None`, which planning reads as unbounded. Inside it every
- * bound, `str_dict`, and a whole column may be absent, each meaning
- * unbounded. Strings are JSON-escaped, so bounds may hold any text.
+ * bound, `sum`, `str_dict`, `str_dict_counts` and a whole column may be
+ * absent, each meaning unknown; lines written before `sum` and
+ * `str_dict_counts` existed parse them as absent. Strings are JSON-escaped,
+ * so bounds may hold any text.
  *
  * A killed job leaves at most an orphaned data dir (never referenced by any
  * manifest): re-running resumes from the last committed snapshot's part set.
@@ -39,20 +45,29 @@ object SnapshotStore {
     * (or a string bound is longer than [[PartStats.MaxStringBound]]), and
     * None always reads as unbounded. `nNulls` is the exact sum of the
     * blocks' `n_nulls`; `dict` the union of the blocks' `block_str_dict`,
-    * kept only while it has at most [[PartStats.MaxDictValues]] values. */
+    * kept only while it has at most [[PartStats.MaxDictValues]] values.
+    * `sum` is the int column's summed `block_sum` (None when a block with a
+    * non-null value lacks one, or the part's total leaves the i64 range);
+    * `dictCounts` holds each `dict` value's row count, present only when
+    * every block carried `block_str_dict_counts`. Together they answer
+    * metadata aggregates ([[graft.sources.v2.GraftUngroupedAgg]],
+    * [[graft.sources.v2.GraftGroupedAgg]]). */
   final case class ColumnStats(
       min: Option[Long] = None,
       max: Option[Long] = None,
       strMin: Option[String] = None,
       strMax: Option[String] = None,
       nNulls: Long = 0L,
-      dict: Option[Seq[String]] = None)
+      dict: Option[Seq[String]] = None,
+      sum: Option[Long] = None,
+      dictCounts: Option[Seq[Long]] = None)
 
   /** Per-part planning stats rolled up at commit time from the part's block
     * metadata ([[graft.jobs.PartRollup]]): the part's block-group count and,
-    * per column whose blocks carry bounds, the [[ColumnStats]]. Lets the
-    * driver prune whole parts from the manifest before any block file is
-    * read (level 1 of [[graft.jobs.DecodeJob.planPrunedKeys]]). */
+    * per column, the [[ColumnStats]]. Lets the driver prune whole parts from
+    * the manifest before any block file is read (level 1 of
+    * [[graft.jobs.DecodeJob.planPrunedKeys]]) and answer metadata aggregates
+    * without a Spark job. */
   final case class PartStats(nGroups: Int, columns: Map[String, ColumnStats])
 
   object PartStats {
@@ -97,9 +112,15 @@ object SnapshotStore {
         cs.max.foreach(g.writeNumberField("max", _))
         cs.strMin.foreach(g.writeStringField("str_min", _))
         cs.strMax.foreach(g.writeStringField("str_max", _))
+        cs.sum.foreach(g.writeNumberField("sum", _))
         cs.dict.foreach { vs =>
           g.writeArrayFieldStart("str_dict")
           vs.foreach(g.writeString)
+          g.writeEndArray()
+        }
+        cs.dictCounts.foreach { ks =>
+          g.writeArrayFieldStart("str_dict_counts")
+          ks.foreach(g.writeNumber)
           g.writeEndArray()
         }
         g.writeEndObject()
@@ -119,10 +140,10 @@ object SnapshotStore {
       val v = c.getValue
       def long(k: String) = Option(v.get(k)).filter(_.isIntegralNumber).map(_.asLong)
       def str(k: String) = Option(v.get(k)).filter(_.isTextual).map(_.asText)
+      def array(k: String) = Option(v.get(k)).filter(_.isArray).map(_.elements().asScala.toVector)
       c.getKey -> ColumnStats(long("min"), long("max"), str("str_min"), str("str_max"),
-        v.path("n_nulls").asLong(0L),
-        Option(v.get("str_dict")).filter(_.isArray)
-          .map(_.elements().asScala.map(_.asText).toVector))
+        v.path("n_nulls").asLong(0L), array("str_dict").map(_.map(_.asText)), long("sum"),
+        array("str_dict_counts").map(_.map(_.asLong)))
     }.toMap
     PartStats(n.path("n_groups").asInt(0), columns)
   }
@@ -181,11 +202,12 @@ object SnapshotStore {
     else None
   }
 
-  def currentEntries(root: String): Seq[PartEntry] =
-    currentSnapshotId(root) match {
-      case None => Seq.empty
-      case Some(id) => entriesAt(root, id)
-    }
+  def currentEntries(root: String): Seq[PartEntry] = entriesOf(root, None).getOrElse(Seq.empty)
+
+  /** Entries of `snapshotId`, or of the current snapshot when None; None
+    * when `root` has no snapshot pointer, i.e. is not a store. */
+  def entriesOf(root: String, snapshotId: Option[Long]): Option[Seq[PartEntry]] =
+    snapshotId.orElse(currentSnapshotId(root)).map(entriesAt(root, _))
 
   /**
    * Entries of a SPECIFIC committed snapshot (time travel). Manifests are

@@ -182,27 +182,6 @@ object GraftDataSource {
   def planStatsFor(root: String): Option[PlanStats] =
     planStatsByRoot.synchronized(Option(planStatsByRoot.get(root)))
 
-  /** Store-identity token: the SNAPSHOT pointer file's (inode fileKey, mtime)
-    * folded into one long; it keys the memo of
-    * [[graft.plans.GroupedAggMetadataRule]], its only user. A store dropped
-    * and recreated at the same path restarts snapshot ids at 1, so (root, id)
-    * alone could serve a PREVIOUS store's cached answer — every commit
-    * rewrites the pointer via a fresh tmp file + ATOMIC_MOVE, which allocates
-    * a NEW inode, so the fileKey changes per commit even when the kernel's
-    * coarse mtime clock has not ticked (mtime alone was review-flagged: ns
-    * UNITS are not ns RESOLUTION). -1 = no pointer — the memo must BYPASS it,
-    * never cache. */
-  private[graft] def storeIdentityToken(root: String): Long =
-    try {
-      val p = graft.sources.SnapshotStore.snapshotPointer(root)
-      val attrs = java.nio.file.Files.readAttributes(p,
-        classOf[java.nio.file.attribute.BasicFileAttributes])
-      val mtime = attrs.lastModifiedTime.to(java.util.concurrent.TimeUnit.NANOSECONDS)
-      val fk = attrs.fileKey()
-      val token = mtime * 1000003L ^ (if (fk == null) 0L else fk.hashCode().toLong << 21)
-      if (token == -1L) -2L else token // keep -1 reserved for "no pointer"
-    } catch { case _: java.io.IOException => -1L }
-
   /** Per-task parquet In-filter value budget: row-group stats evaluation of an
     * In probes the value set per row group, so a huge set costs more than the
     * IO it saves; past the budget only the part_id component is pushed (still
@@ -629,16 +608,16 @@ final class GraftScanBuilder(root: String, snapshotId: Option[Long],
 
   override def pruneColumns(required: StructType): Unit = requiredSchema = required
 
-  // -------- aggregate pushdown: count(*)/count(col)/min/max from metadata --------
+  // -------- aggregate pushdown: count(*)/count(col)/min/max/sum from the manifest --------
 
-  /** Convertible iff NOTHING was filtered (metadata reflects the unfiltered
-    * table — a pushed predicate would make manifest counts wrong), there is
-    * no grouping, and every aggregate is count(*) / non-distinct count(col) /
-    * min(col) / max(col) of a metadata-bounded column: the int family
-    * (incl. timestamps) carries exact `block_min/max`, strings carry exact
-    * full-value `block_str_min/max`; opaque binary has neither. Whether the
-    * STORE can answer (n_nulls/bounds coverage) is the data-dependent check
-    * in [[supportCompletePushDown]]. */
+  /** Convertible iff NOTHING was filtered (the manifest describes the
+    * unfiltered table — a pushed predicate would make its counts wrong),
+    * there is no grouping, and every aggregate is count(*) / non-distinct
+    * count(col) / min(col) / max(col) of a metadata-bounded column / sum(col)
+    * of an int column: the int family (incl. timestamps) carries exact part
+    * `min/max`, strings exact full-value `strMin/strMax`; opaque binary has
+    * neither. Whether the STORE's manifest can answer (per-part stats
+    * coverage) is the data-dependent check in [[supportCompletePushDown]]. */
   private def convertAgg(agg: aggregate.Aggregation): Option[Seq[GraftDataSource.MetaAgg]] = {
     // incremental (fromSnapshot) scans answer over a snapshot-RANGE delta; the
     // metadata aggregate paths read one snapshot's state — decline, the
@@ -665,13 +644,13 @@ final class GraftScanBuilder(root: String, snapshotId: Option[Long],
     if (fns.nonEmpty && fns.forall(_.isDefined)) Some(fns.flatten) else None
   }
 
-  // -------- GROUPED aggregate pushdown from dict metadata (GraftGroupedAgg) --------
+  // -------- GROUPED aggregate pushdown from the manifest dict counts (GraftGroupedAgg) --------
 
   /** The grouped shape this source can answer from metadata: one bare textual
     * group column with only count(*) / count(<group column>) aggregates (an
     * EMPTY aggregate list = SELECT DISTINCT, also served). Whether the STORE
-    * can answer it exactly is a separate data-dependent check (dict+counts
-    * coverage) performed in [[supportCompletePushDown]]. */
+    * can answer it exactly is a separate data-dependent check (manifest
+    * dict + counts coverage) performed in [[supportCompletePushDown]]. */
   private def convertGroupedAgg(agg: aggregate.Aggregation)
       : Option[(String, Seq[GroupedAggKind])] = {
     import org.apache.spark.sql.connector.expressions.NamedReference
@@ -706,25 +685,25 @@ final class GraftScanBuilder(root: String, snapshotId: Option[Long],
   private var groupedAccepted = false
   private var ungroupedAccepted = false
 
+  /** The manifest entries both aggregate pushdowns answer from: one read per
+    * builder; None when `root` is not a store (decline, the scan then fails
+    * loudly). */
+  private lazy val stateEntries = SnapshotStore.entriesOf(root, snapshotId)
+
   override def supportCompletePushDown(agg: aggregate.Aggregation): Boolean =
+    // data-dependent gate: every part's manifest stats must cover the asked
+    // stat — the store answers from the manifest or not at all (a partial or
+    // approximate answer is never served; see pushAggregation)
     (convertAgg(agg) match {
       case Some(as) =>
-        // data-dependent gate, mirrored from the grouped path: every block of
-        // a min/max column must carry bounds (or be all-null with exact
-        // n_nulls), every count(col) column exact n_nulls — the store answers
-        // from metadata or not at all (a partial/approximate answer is never
-        // served; see pushAggregation)
-        GraftUngroupedAgg.compute(SparkSession.active, root, snapshotId, as,
-            tableSchema) match {
+        stateEntries.flatMap(GraftUngroupedAgg.compute(_, as, tableSchema)) match {
           case Some(vals) => pushedUngrouped = Some((as, vals)); true
           case None => false
         }
       case None => false
     }) || (convertGroupedAgg(agg) match {
       case Some((c, kinds)) =>
-        // data-dependent gate: every live block of c must carry dict+counts
-        // (or be all-null) — the store answers from metadata or not at all
-        GraftGroupedAgg.compute(SparkSession.active, root, snapshotId, c) match {
+        stateEntries.flatMap(GraftGroupedAgg.compute(_, c)) match {
           case Some(rows) => pushedGrouped = Some((c, kinds, rows)); true
           case None => false
         }
@@ -734,8 +713,8 @@ final class GraftScanBuilder(root: String, snapshotId: Option[Long],
   override def pushAggregation(agg: aggregate.Aggregation): Boolean = {
     // both forms are accepted only as the COMPLETE pushdown prepared above,
     // for the SAME aggregate shape — Spark also probes pushAggregation on its
-    // PARTIAL pushdown path (supportCompletePushDown false), and per-block
-    // metadata cannot serve Spark's partial agg row shape
+    // PARTIAL pushdown path (supportCompletePushDown false), and per-part
+    // stats cannot serve Spark's partial agg row shape
     val ungroupedMatches = pushedUngrouped.exists(p => convertAgg(agg).contains(p._1))
     if (ungroupedMatches) { ungroupedAccepted = true; true }
     else {
@@ -764,15 +743,12 @@ final class GraftScanBuilder(root: String, snapshotId: Option[Long],
 
 /**
  * Complete aggregate pushdown: `SELECT count(*), count(col), min(col),
- * max(col)` over the graft table is answered WITHOUT decoding anything —
- * count(*) from the manifest's per-part row counts (driver arithmetic, zero
- * file IO), count(col) from exact per-block `n_nulls`, and min/max from the
- * exact per-block bounds (int family via `block_min/max`, strings via the
- * full-value `block_str_min/max`) — one column-pruned metadata scan that
- * never touches `encoded`. The values were computed (and coverage-gated) at
- * PUSHDOWN time ([[GraftUngroupedAgg]]); execution serves the one metadata
- * row. Exact: bounds/null counts are exact, and nulls don't participate in
- * SQL min/max.
+ * max(col), sum(col)` over the graft table is answered WITHOUT reading a
+ * block — driver arithmetic over the manifest's per-part row counts, exact
+ * null counts, bounds and sums. The values were computed (and
+ * coverage-gated) at PUSHDOWN time ([[GraftUngroupedAgg]]); execution serves
+ * the one row from memory. Exact: the part stats are exact, and nulls take no
+ * part in SQL min/max/sum.
  */
 final class GraftAggScan(root: String, snapshotId: Option[Long],
                          aggs: Seq[GraftDataSource.MetaAgg],
@@ -861,13 +837,15 @@ final class GraftScan(root: String, snapshotId: Option[Long],
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering {
 
-  /** Metadata-answer scope for plan-level rules
-    * ([[graft.plans.GroupedAggMetadataRule]]): (root, snapshotId) when this
-    * scan reads ONE snapshot's full state — the state block metadata
-    * describes; None for incremental scans (a range delta is not that) and
-    * for scans restricted to some parts. */
-  private[graft] def metadataScope: Option[(String, Option[Long])] =
-    if (incremental.isDefined || partIds.isDefined) None else Some((root, snapshotId))
+  /** The pinned entries plan-level rules answer from
+    * ([[graft.plans.GroupedAggMetadataRule]]) when this scan reads ONE
+    * snapshot's full state — the state the manifest stats describe; None for
+    * incremental scans (a range delta is not that), for scans restricted to
+    * some parts, and when `root` is not a store. */
+  private[graft] def metadataEntries: Option[Seq[SnapshotStore.PartEntry]] =
+    if (incremental.isDefined || partIds.isDefined ||
+        (snapshotId.isEmpty && SnapshotStore.currentSnapshotId(root).isEmpty)) None
+    else Some(pinnedEntries)
 
   /** Compile-time predicates + any runtime (DPP-style) In-filters Spark
     * delivers just before execution. */
@@ -922,10 +900,7 @@ final class GraftScan(root: String, snapshotId: Option[Long],
           s"reconstruct range ($f, $t], but it is gone — expired. Widen " +
           "SnapshotStore.expireSnapshots(keepLast) to cover your consumption lag, " +
           "or read the full table and re-baseline.", e))
-      case None => snapshotId match {
-        case Some(id) => SnapshotStore.entriesAt(root, id)
-        case None => SnapshotStore.currentEntries(root)
-      }
+      case None => SnapshotStore.entriesOf(root, snapshotId).getOrElse(Seq.empty)
     }
     partIds.fold(all)(ids => all.filter(e => ids(e.partId)))
   }

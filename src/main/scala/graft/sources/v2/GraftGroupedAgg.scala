@@ -1,219 +1,135 @@
 package graft.sources.v2
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.jobs.DecodeJob
-import graft.sources.SnapshotStore
+import graft.sources.SnapshotStore.{ColumnStats, PartEntry}
+
+/** One column's manifest stats in every non-empty part, or None when a part
+  * lacks them (committed before per-part stats, or before this column had
+  * stats). The one coverage gate of both metadata aggregates. */
+private object PartColumns {
+  def of(entries: Seq[PartEntry], column: String): Option[Seq[(ColumnStats, Long)]] = {
+    val found = entries.filter(_.nRows > 0)
+      .map(e => e.stats.flatMap(_.columns.get(column)).map(_ -> e.nRows))
+    if (found.forall(_.isDefined)) Some(found.flatten) else None
+  }
+}
 
 /**
- * GROUPED aggregate pushdown from dictionary metadata — the north-star
- * "predicate-push onto dictionary metadata" extended to the aggregate surface:
- * `SELECT lang, count(*) [, count(lang)] FROM graft GROUP BY lang` is answered
- * WITHOUT decoding a single block. Every block of a dict-covered string column
- * carries its distinct values (`block_str_dict`) AND their per-block occurrence
- * counts (`block_str_dict_counts`, written since r6), so the group counts are
- * one column-pruned metadata scan: explode the (value, count) pairs, sum per
- * value, plus the NULL group from the exact per-block `n_nulls`.
+ * GROUPED aggregate pushdown from the manifest:
+ * `SELECT lang, count(*) [, count(lang)] FROM graft GROUP BY lang` is driver
+ * arithmetic over the scan's pinned [[PartEntry]]s. Each part's
+ * [[ColumnStats]] carries the column's distinct values (`dict`) with their
+ * row counts (`dictCounts`) and its exact null count, so the groups are the
+ * summed counts per value plus the NULL group from `nNulls`. No Spark job
+ * runs and no block file is opened.
  *
  * Exactness gate (decline -> Spark computes normally, identical results):
- *  - single GROUP BY key, a bare textual string column (url/text/lang);
- *  - aggregates only count(*) and count(<group column>) — a count/min/max of a
- *    DIFFERENT column cannot be attributed across a multi-value block;
- *  - NO pushed filters (metadata reflects the unfiltered table);
- *  - EVERY live block of the column either carries dict+counts (aligned) or
- *    holds only nulls (n == n_nulls) — one old-format or high-cardinality
- *    block declines the whole pushdown;
- *  - at most [[GraftGroupedAgg.MaxGroups]] distinct values (`take(max+1)`,
- *    never an unbounded driver collect — url/text realistically decline via
- *    the per-block dict cap long before this).
+ *  - single GROUP BY key, a bare textual string column;
+ *  - aggregates only count(*) and count(<group column>) — a count/min/max of
+ *    a DIFFERENT column cannot be attributed to a value;
+ *  - NO pushed filters (the manifest describes the unfiltered table);
+ *  - EVERY non-empty part carries dict + counts for the column or holds
+ *    nulls only. A part without them (committed before per-part stats or
+ *    counts, a dict past [[graft.sources.SnapshotStore.PartStats.MaxDictValues]]
+ *    values, or a block that voided the part's dict) declines the whole
+ *    answer; it never falls back to reading blocks.
  */
 object GraftGroupedAgg {
-
-  /** Distinct-group driver ceiling; `private[v2]` var for tests. */
-  private[v2] var MaxGroups = 65536
 
   /** One result row: group value (null = the SQL NULL group), count(*) value,
     * count(col) value. */
   final case class GroupRow(value: String, countStar: Long, countCol: Long)
 
-  /** Compute the grouped counts from block metadata, or None when the store's
-    * metadata cannot answer exactly (coverage gate above). Factored over a
-    * blocks DataFrame so tests can drive the legacy-store shape directly. */
-  private[v2] def fromBlocks(blocksDf: org.apache.spark.sql.DataFrame,
-                             column: String): Option[Seq[GroupRow]] = {
-    if (!blocksDf.columns.contains("block_str_dict_counts") ||
-        !blocksDf.columns.contains("n_nulls")) return None // pre-r6 / pre-r5 store
-    val meta = blocksDf.where(col("column") === column)
-      .select(col("n").cast("long").as("n"), col("n_nulls").cast("long").as("nn"),
-        col("block_str_dict").as("d"), col("block_str_dict_counts").as("k"))
-    // one metadata job: coverage violations + the NULL group total. A null
-    // n_nulls (mixed-in legacy file) is uncovered outright — its null count is
-    // unknown, and the `n =!= nn` all-null rescue would three-value to false
-    val uncovered = col("nn").isNull || ((col("d").isNull || col("k").isNull ||
-      size(col("d")) =!= size(col("k"))) && col("n") =!= col("nn"))
-    val head = meta.agg(
-      sum(when(uncovered, 1L).otherwise(0L)).as("bad"),
-      sum(col("nn")).as("nulls"),
-      count(lit(1)).as("blocks")).collect()(0)
-    if (head.getAs[Long]("blocks") == 0L) return Some(Seq.empty) // empty store: zero groups
-    if (head.getAs[Long]("bad") != 0L) return None
-    val nulls = head.getAs[Long]("nulls")
-    // second metadata job: per-value sums from the zipped dict+counts
-    val rows = meta.where(col("d").isNotNull)
-      .select(explode(arrays_zip(col("d"), col("k"))).as("z"))
-      .groupBy(col("z.d").as("v")).agg(sum(col("z.k")).as("cnt"))
-      .take(MaxGroups + 1)
-    if (rows.length > MaxGroups) return None
-    val out = rows.iterator.map { r =>
-      GroupRow(r.getString(0), r.getLong(1), r.getLong(1))
-    }.toSeq
-    // the SQL NULL group exists iff null rows exist; count(col) of it is 0
-    Some(if (nulls > 0) out :+ GroupRow(null, nulls, 0L) else out)
-  }
-
-  /** [[fromBlocks]] over a store snapshot (one manifest read). */
-  private[graft] def compute(spark: SparkSession, root: String,
-                          snapshotId: Option[Long], column: String): Option[Seq[GroupRow]] = {
-    val entries = snapshotId match {
-      case Some(id) => SnapshotStore.entriesAt(root, id)
-      case None =>
-        if (SnapshotStore.currentSnapshotId(root).isEmpty) return None // not a store: decline, scan fails loudly
-        SnapshotStore.currentEntries(root)
+  /** The grouped counts of `column` over `entries`, or None when a part
+    * cannot answer (gate above). */
+  private[graft] def compute(entries: Seq[PartEntry], column: String): Option[Seq[GroupRow]] = {
+    val parts = PartColumns.of(entries, column).getOrElse(return None)
+    val counts = scala.collection.mutable.TreeMap.empty[String, Long]
+    for ((s, nRows) <- parts if s.nNulls != nRows) (s.dict, s.dictCounts) match {
+      case (Some(vs), Some(ks)) if ks.sum + s.nNulls == nRows =>
+        vs.iterator.zip(ks.iterator).foreach { case (v, k) =>
+          counts(v) = counts.getOrElse(v, 0L) + k }
+      case _ => return None
     }
-    fromBlocks(DecodeJob.fromEntries(spark, root, entries), column)
+    val nulls = parts.map(_._1.nNulls).sum
+    val rows = counts.iterator.map { case (v, k) => GroupRow(v, k, k) }.toSeq
+    // the SQL NULL group exists iff null rows exist; count(col) of it is 0
+    Some(if (nulls > 0) rows :+ GroupRow(null, nulls, 0L) else rows)
   }
 }
 
 /**
  * UNGROUPED metadata aggregates — `count(*)` / `count(col)` / `min(col)` /
- * `max(col)` computed exactly from the manifest and per-block metadata at
- * pushdown time, for ANY column the metadata bounds: the int family
- * (timestamps as epoch micros) via exact `block_min/max`, strings via the
- * exact full-value `block_str_min/max` (unsigned-byte order — identical to
- * Spark's UTF8String ordering), null counts via exact `n_nulls`.
+ * `max(col)` / `sum(col)` as driver arithmetic over the scan's pinned
+ * [[PartEntry]]s: count(*) from `nRows`, count(col) from the exact `nNulls`,
+ * min/max from the part bounds (the int family, timestamps as epoch micros,
+ * via `min/max`; strings via the full-value `strMin/strMax` in unsigned-byte
+ * order, which is Spark's UTF8String order), sum from the part `sum`. No
+ * Spark job runs and no block file is opened.
  *
  * Coverage gate (None -> the pushdown declines, Spark computes normally):
- * every block of a min/max column must carry bounds or be provably all-null
- * (`n == n_nulls` with n_nulls present); every count(col) column must carry
- * `n_nulls` in every block; per-column block row totals must account for
- * every table row. Values return in INTERNAL representation ready for the
- * scan's one metadata row.
+ * every non-empty part carries the column's stats, and every part holding a
+ * non-null value carries the needed bound or sum (a part of nulls only is
+ * skipped: nulls take no part in min/max/sum). A sum whose total leaves the
+ * i64 range declines, so Spark applies its own overflow semantics. Values
+ * return in INTERNAL representation, ready for the scan's one row.
  */
-private[v2] object GraftUngroupedAgg {
+private[graft] object GraftUngroupedAgg {
   import GraftDataSource.{AggCountCol, AggCountStar, AggMax, AggMin, AggSum, MetaAgg}
 
-  def compute(spark: SparkSession, root: String, snapshotId: Option[Long],
-              aggs: Seq[MetaAgg], schema: StructType): Option[Array[Any]] = {
-    val entries = snapshotId match {
-      case Some(id) => SnapshotStore.entriesAt(root, id)
-      case None =>
-        if (SnapshotStore.currentSnapshotId(root).isEmpty) return None // not a store
-        SnapshotStore.currentEntries(root)
-    }
-    val totalRows = entries.map(_.nRows).sum
-    val cols = aggs.collect {
-      case AggCountCol(c) => c
-      case AggMin(c) => c
-      case AggMax(c) => c
-      case AggSum(c) => c
-    }.distinct
-    // count(*)-only: pure manifest arithmetic, zero Spark jobs, zero file IO
-    if (cols.isEmpty)
-      return Some(aggs.toArray.map(_ => java.lang.Long.valueOf(totalRows): Any))
-    if (totalRows == 0L)
-      // empty store: counts are 0, min/max/sum are SQL NULL — exact, no blocks
-      return Some(aggs.toArray.map {
-        case AggCountStar | AggCountCol(_) => java.lang.Long.valueOf(0L): Any
-        case _ => null
-      })
-    val blocksDf = DecodeJob.fromEntries(spark, root, entries)
-    if (!blocksDf.columns.contains("n_nulls")) return None // pre-r5 store
-    val hasSums = blocksDf.columns.contains("block_sum")
-    if (!hasSums && aggs.exists(_.isInstanceOf[AggSum])) return None // pre-sum store
-    // one column-pruned metadata job over the involved columns' block rows.
-    // Block sums aggregate as DECIMAL(38,0): the metadata job itself must
-    // never overflow (ANSI would fail the QUERY where the design is to
-    // DECLINE); the long-range check happens driver-side below.
-    val allNull = col("nn").isNotNull && col("n") === col("nn")
-    val bsum = if (hasSums) col("block_sum") else lit(null).cast("long")
-    val stats = blocksDf.where(col("column").isin(cols: _*))
-      .select(col("column"), col("n").cast("long").as("n"),
-        col("n_nulls").cast("long").as("nn"),
-        col("block_min").as("imin"), col("block_max").as("imax"),
-        col("block_str_min").as("smin"), col("block_str_max").as("smax"),
-        bsum.as("bsum"))
-      .groupBy(col("column")).agg(
-        sum(col("n")).as("rows"),
-        sum(col("nn")).as("nulls"),
-        sum(when(col("nn").isNull, 1L).otherwise(0L)).as("nn_missing"),
-        sum(when(col("imin").isNull && !allNull, 1L).otherwise(0L)).as("int_missing"),
-        // the two string bounds are INDEPENDENTLY absent (each is None when
-        // that bound string alone exceeds StrBoundMaxLen) — min and max must
-        // gate on their OWN side, or a short-min/long-max block silently
-        // excludes the true maximum
-        sum(when(col("smin").isNull && !allNull, 1L).otherwise(0L)).as("smin_missing"),
-        sum(when(col("smax").isNull && !allNull, 1L).otherwise(0L)).as("smax_missing"),
-        sum(when(col("bsum").isNull && !allNull, 1L).otherwise(0L)).as("sum_missing"),
-        min(col("imin")).as("imin"), max(col("imax")).as("imax"),
-        min(col("smin")).as("smin"), max(col("smax")).as("smax"),
-        sum(col("bsum").cast("decimal(38,0)")).as("bsum"))
-      .collect().iterator.map(r => r.getString(0) -> r).toMap
-    def internal(c: String, raw: Any): Any = raw match {
-      case null => null
-      case s: String => org.apache.spark.unsafe.types.UTF8String.fromString(s)
-      case l: Long => schema(c).dataType match {
-        case TimestampType | LongType => java.lang.Long.valueOf(l)
-        case IntegerType => java.lang.Integer.valueOf(l.toInt)
-        case ShortType => java.lang.Short.valueOf(l.toShort)
-        case ByteType => java.lang.Byte.valueOf(l.toByte)
-        case _ => return NotCoverable // unreachable: convertAgg gated the types
+  def compute(entries: Seq[PartEntry], aggs: Seq[MetaAgg],
+              schema: StructType): Option[Array[Any]] = {
+    /** `stat` of every part holding a non-null value of `c`, or None when one
+      * of them lacks it. */
+    def nonNull[T](c: String)(stat: ColumnStats => Option[T]): Option[Seq[T]] =
+      PartColumns.of(entries, c).flatMap { parts =>
+        val vs = parts.collect { case (s, nRows) if s.nNulls != nRows => stat(s) }
+        if (vs.forall(_.isDefined)) Some(vs.flatten) else None
       }
-      case _ => NotCoverable
-    }
-    val out = aggs.toArray.map {
-      case AggCountStar => java.lang.Long.valueOf(totalRows): Any
-      case AggCountCol(c) =>
-        val r = stats.getOrElse(c, return None)
-        if (r.getAs[Long]("nn_missing") != 0L || r.getAs[Long]("rows") != totalRows)
-          return None
-        java.lang.Long.valueOf(totalRows - r.getAs[Long]("nulls")): Any
-      case AggMin(c) =>
-        val r = stats.getOrElse(c, return None)
-        if (r.getAs[Long]("rows") != totalRows) return None
-        val isStr = schema(c).dataType == StringType
-        if (r.getAs[Long](if (isStr) "smin_missing" else "int_missing") != 0L) return None
-        internal(c, r.getAs[Any](if (isStr) "smin" else "imin"))
-      case AggMax(c) =>
-        val r = stats.getOrElse(c, return None)
-        if (r.getAs[Long]("rows") != totalRows) return None
-        val isStr = schema(c).dataType == StringType
-        if (r.getAs[Long](if (isStr) "smax_missing" else "int_missing") != 0L) return None
-        internal(c, r.getAs[Any](if (isStr) "smax" else "imax"))
-      case AggSum(c) =>
-        val r = stats.getOrElse(c, return None)
-        if (r.getAs[Long]("rows") != totalRows ||
-            r.getAs[Long]("sum_missing") != 0L) return None
-        val total = r.getAs[java.math.BigDecimal]("bsum")
-        if (total == null) null // all blocks all-null: SQL sum is NULL
-        else {
-          // a true total outside i64 declines: Spark then computes the sum
-          // itself with its own overflow semantics (ANSI error / wrap)
-          val bi = total.toBigIntegerExact
-          if (bi.bitLength() >= 64) return None
-          java.lang.Long.valueOf(bi.longValueExact()): Any
+    def bound(c: String, isMin: Boolean): Option[Any] = schema(c).dataType match {
+      case StringType =>
+        nonNull(c)(s => if (isMin) s.strMin else s.strMax).map { vs =>
+          val us = vs.map(UTF8String.fromString)
+          if (us.isEmpty) null
+          else us.reduce((a, b) => if ((a.compareTo(b) < 0) == isMin) a else b)
+        }
+      case t =>
+        nonNull(c)(s => if (isMin) s.min else s.max).map { vs =>
+          if (vs.isEmpty) null else internalInt(t, if (isMin) vs.min else vs.max)
         }
     }
-    if (out.contains(NotCoverable)) None else Some(out)
+    val totalRows = entries.map(_.nRows).sum
+    Some(aggs.toArray.map {
+      case AggCountStar => java.lang.Long.valueOf(totalRows): Any
+      case AggCountCol(c) =>
+        val parts = PartColumns.of(entries, c).getOrElse(return None)
+        java.lang.Long.valueOf(totalRows - parts.map(_._1.nNulls).sum): Any
+      case AggMin(c) => bound(c, isMin = true).getOrElse(return None)
+      case AggMax(c) => bound(c, isMin = false).getOrElse(return None)
+      case AggSum(c) =>
+        val sums = nonNull(c)(_.sum).getOrElse(return None)
+        if (sums.isEmpty) null // no non-null value: SQL sum is NULL
+        else {
+          val total = sums.foldLeft(BigInt(0))(_ + _)
+          if (!total.isValidLong) return None
+          java.lang.Long.valueOf(total.toLong): Any
+        }
+    })
   }
 
-  /** Sentinel for an unconvertible metadata value (declines the pushdown). */
-  private object NotCoverable
+  /** An int-family bound in Spark's internal form for the column type
+    * ([[GraftScanBuilder]]'s shape gate admits no other type here). */
+  private def internalInt(t: DataType, v: Long): Any = t match {
+    case IntegerType => java.lang.Integer.valueOf(v.toInt)
+    case ShortType => java.lang.Short.valueOf(v.toShort)
+    case ByteType => java.lang.Byte.valueOf(v.toByte)
+    case _ => java.lang.Long.valueOf(v) // LongType, TimestampType (epoch micros)
+  }
 }
 
 /** The aggregate kinds a grouped pushdown serves. */
@@ -225,8 +141,8 @@ private[v2] case object GroupedCountCol extends GroupedAggKind
  * Complete grouped-aggregate scan: rows are (group value, agg values...) in
  * the positional layout Spark expects from a complete pushdown (group columns
  * first, then aggregate expressions). The result was computed at PUSHDOWN time
- * from block metadata ([[GraftGroupedAgg]]); execution serves it from one
- * metadata partition with zero file IO.
+ * from the manifest ([[GraftGroupedAgg]]); execution serves it from one
+ * in-memory partition with zero file IO.
  */
 final class GraftGroupedAggScan(root: String, column: String,
                                 kinds: Seq[GroupedAggKind],

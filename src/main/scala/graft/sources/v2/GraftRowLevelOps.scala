@@ -164,29 +164,19 @@ final class GraftCowScan(root: String, op: GraftRowLevelOperation,
 
   /** Manifest entries + statically affected parts, computed ONCE per
     * statement: `BatchScanExec` plans twice (eagerly before runtime filters,
-    * again after `filter()` delivered them), and the metadata-pruning Spark
-    * job plus the manifest read depend only on immutable inputs — re-running
-    * them on the second planning would double driver-side planning cost for
-    * nothing. (Also keeps both plannings on ONE snapshot: a compaction
+    * again after `filter()` delivered them), and the part pruning (a Spark
+    * job when level 1 cannot answer) plus the manifest read depend only on
+    * immutable inputs — re-running them on the second planning would double
+    * driver-side planning cost for nothing. (Also keeps both plannings on ONE snapshot: a compaction
     * committing between them could otherwise shift the entry set.) */
   private lazy val staticPlan: (Seq[SnapshotStore.PartEntry], Set[Int]) = {
-    val spark = SparkSession.active
     val entries = SnapshotStore.currentEntries(root)
-    // part-level pruning via the metadata-only block scan: collect is bounded
-    // by the PART count (manifest-scale), never the block count
-    val staticAffected: Set[Int] =
-      if (entries.isEmpty) Set.empty // e.g. MERGE used as a first load
-      else if (predicates.isEmpty) entries.map(_.partId).toSet
-      else {
-        import spark.implicits._
-        // key scan over the PINNED entries, not a manifest re-read: a
-        // compaction committing between two reads could hand back re-homed
-        // part ids this plan's entry list doesn't contain — zero rows would
-        // be rewritten yet the commit would tombstone them (silent row loss)
-        DecodeJob.matchingGroupKeysOf(spark, root, entries, predicates)
-          .select($"part_id").distinct().as[Int].collect().toSet
-      }
-    (entries, staticAffected)
+    // part-level pruning over the PINNED entries, not a manifest re-read: a
+    // compaction committing between two reads could hand back re-homed part
+    // ids this plan's entry list doesn't contain — zero rows would be
+    // rewritten yet the commit would tombstone them (silent row loss). An
+    // empty entry list (e.g. MERGE used as a first load) affects nothing.
+    (entries, DecodeJob.affectedParts(SparkSession.active, root, entries, predicates))
   }
 
   override def planInputPartitions(): Array[InputPartition] = {

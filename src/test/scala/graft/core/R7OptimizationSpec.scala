@@ -103,22 +103,6 @@ class R7OptimizationSpec extends AnyFunSuite {
     assert("ffffffff" < t && "00000000" < t)
   }
 
-  test("storeIdentityToken changes across a same-path store recreation (memo-staleness guard)") {
-    val root = java.nio.file.Files.createTempDirectory("r7-token-").toString
-    def token = graft.sources.v2.GraftDataSource.storeIdentityToken(root)
-    assert(token == -1L, "no SNAPSHOT pointer => sentinel (never cacheable)")
-    graft.sources.SnapshotStore.writeSidecar(root, "SNAPSHOT", "1")
-    val t1 = token
-    assert(t1 != -1L)
-    // no sleep: the token folds in the pointer's inode fileKey, and every
-    // writeSidecar goes through a fresh tmp file + ATOMIC_MOVE (new inode),
-    // so the token changes even within one coarse mtime clock tick
-    graft.sources.SnapshotStore.writeSidecar(root, "SNAPSHOT", "1")
-    assert(token != t1,
-      "a rewritten SNAPSHOT pointer must change the identity token — " +
-      "otherwise (root, snapshotId) caches could serve the old store's state")
-  }
-
   test("countAndUrlBoundaries: exact count, sorted in-range boundaries, deterministic") {
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master("local[4]")

@@ -20,7 +20,10 @@ import graft.sources.SnapshotStore.{ColumnStats, PartEntry, PartStats}
  *    two-level key plan equals the block-level one, on random small stores
  *    written by both writers;
  *  - property: part stats survive manifest serialise -> parse -> carry-forward
- *    commit unchanged, whatever their strings hold.
+ *    commit unchanged, whatever their strings hold, and lines written before
+ *    `sum` / `str_dict_counts` existed parse them as absent;
+ *  - property: the manifest aggregate answers ([[GraftUngroupedAgg]],
+ *    [[GraftGroupedAgg]]) either decline or equal Spark's own aggregates.
  * Properties run with fixed seeds.
  */
 class TwoLevelPlanningSpec extends AnyFunSuite {
@@ -62,7 +65,8 @@ class TwoLevelPlanningSpec extends AnyFunSuite {
     assert(s.nGroups == 2 && e.nRows == 20)
     assert(s.columns("url") == ColumnStats(None, None, Some("a"), Some("d"), 2L,
       Some(Vector("a", "b", "d"))))
-    assert(!s.columns.contains("ts"), "one bound-less block makes the part unbounded")
+    assert(s.columns("ts") == ColumnStats(nNulls = 0L),
+      "one bound-less block makes the part unbounded; the column still carries its null count")
     assert(s.columns("long") == ColumnStats(None, None, None, Some("y"), 0L, None),
       "string bounds over 256 chars are not stored")
     // UTF-8 byte order, not UTF-16: U+1D11E (a surrogate pair) sorts ABOVE U+FFFD
@@ -82,6 +86,42 @@ class TwoLevelPlanningSpec extends AnyFunSuite {
     val whole = bs.foldLeft(new PartRollup)(_ add _).entry(1, "d")
     val reversed = bs.reverse.foldLeft(new PartRollup)(_ add _).entry(1, "d")
     assert(whole == reversed)
+  }
+
+  private def intBlock(n: Int, nulls: Int, sum: Option[Long], seq: Int): BlockRow =
+    BlockRow(1, seq, "v", "i64", "eg", n, nulls, None, None, sum, None,
+      None, None, None, None, 80L, 8L, null)
+
+  private def langBlock(counts: Seq[(String, Long)], seq: Int,
+      withCounts: Boolean = true): BlockRow =
+    BlockRow(1, seq, "lang", "str", "str_plain", counts.map(_._2).sum.toInt, 0, None, None,
+      None, None, Some(counts.head._1), Some(counts.last._1),
+      Some(counts.map(_._1).toArray), if (withCounts) Some(counts.map(_._2).toArray) else None,
+      10L, 5L, null)
+
+  test("PartRollup: sums and dict counts fold; an all-null int block adds 0; overflow drops the sum") {
+    def fold(bs: BlockRow*) = bs.foldLeft(new PartRollup)(_ add _).entry(1, "d").stats.get.columns
+    assert(fold(intBlock(10, 0, Some(7L), 0), intBlock(10, 10, None, 1),
+      intBlock(10, 2, Some(-3L), 2))("v").sum.contains(4L))
+    assert(fold(intBlock(10, 0, Some(7L), 0), intBlock(10, 1, None, 1))("v").sum.isEmpty,
+      "a block with values but no block_sum makes the part sum unknown")
+    assert(fold(intBlock(1, 0, Some(Long.MaxValue), 0), intBlock(1, 0, Some(1L), 1))("v")
+      .sum.isEmpty, "a part total past i64 is absent")
+    // the fold is order-free even across an intermediate overflow
+    val bs = Seq(intBlock(1, 0, Some(Long.MaxValue), 0), intBlock(1, 0, Some(1L), 1),
+      intBlock(1, 0, Some(-1L), 2))
+    assert(fold(bs: _*)("v").sum.contains(Long.MaxValue) &&
+      fold(bs.reverse: _*)("v").sum.contains(Long.MaxValue))
+    val lang = fold(langBlock(Seq("de" -> 2L, "en" -> 5L), 0),
+      langBlock(Seq("en" -> 1L, "fr" -> 4L), 1))("lang")
+    assert(lang.dict.contains(Vector("de", "en", "fr")) &&
+      lang.dictCounts.contains(Vector(2L, 6L, 4L)))
+    val noCounts = fold(langBlock(Seq("de" -> 2L), 0),
+      langBlock(Seq("en" -> 1L), 1, withCounts = false))("lang")
+    assert(noCounts.dict.isDefined && noCounts.dictCounts.isEmpty,
+      "one block without counts leaves the part without counts")
+    val wide = fold((0 until 70).map(i => langBlock(Seq(f"v$i%02d" -> 1L), i)): _*)("lang")
+    assert(wide.dict.isEmpty && wide.dictCounts.isEmpty, "counts drop with the dict")
   }
 
   // ---------------- property (a): level 1 is a superset of level 2 ----------------
@@ -195,7 +235,10 @@ class TwoLevelPlanningSpec extends AnyFunSuite {
     smin <- Gen.option(strGen); smax <- Gen.option(strGen)
     nulls <- Gen.choose(0L, Long.MaxValue)
     dict <- Gen.option(Gen.listOf(strGen).map(_.take(5)))
-  } yield ColumnStats(mn, mx, smin, smax, nulls, dict)
+    sum <- Gen.option(longGen)
+    counts <- dict.fold(Gen.const(Option.empty[List[Long]]))(d =>
+      Gen.option(Gen.listOfN(d.size, Gen.choose(0L, Long.MaxValue))))
+  } yield ColumnStats(mn, mx, smin, smax, nulls, dict, sum, counts)
 
   private val entryGen: Gen[PartEntry] = for {
     dir <- strGen
@@ -220,6 +263,84 @@ class TwoLevelPlanningSpec extends AnyFunSuite {
       SnapshotStore.entriesAt(root, first) == Seq(a) &&
         SnapshotStore.entriesAt(root, second) == Seq(a, b)
     }, cases = 200)
+  }
+
+  test("a manifest line written before sum and str_dict_counts parses them as absent") {
+    val root = Files.createTempDirectory("graft-manifest-old-").toString
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root, "manifests"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(root, "manifests", "1.jsonl"),
+      ("""{"part_id":3,"data_dir":"data/u","n_rows":5,"orig_bytes":9,"enc_bytes":4,""" +
+        """"stats":{"n_groups":1,"columns":{"lang":{"n_nulls":1,"str_min":"de",""" +
+        """"str_max":"en","str_dict":["de","en"]},"warc_ts":{"n_nulls":0,"min":1,"max":8}}},""" +
+        """"codecs":{"lang":"str_plain"}}""" + "\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val cols = SnapshotStore.entriesAt(root, 1L).head.stats.get.columns
+    assert(cols("lang") == ColumnStats(None, None, Some("de"), Some("en"), 1L,
+      Some(Seq("de", "en")), None, None))
+    assert(cols("warc_ts") == ColumnStats(Some(1L), Some(8L), nNulls = 0L))
+  }
+
+  // ------ property (c): manifest aggregate answers decline or are exact ------
+
+  /** A store spec whose `column` is null in every row (planted nulls in the
+    * other columns come from [[pageGen]]). */
+  private val answerStoreGen: Gen[(StoreSpec, String)] = for {
+    s <- storeGen
+    column <- Gen.oneOf("url", "warc_ts", "text", "lang")
+  } yield {
+    def blank(p: WebPage) = column match {
+      case "url" => p.copy(url = null)
+      case "warc_ts" => p.copy(warc_ts = null)
+      case "text" => p.copy(text = null)
+      case _ => p.copy(lang = null)
+    }
+    (s.copy(batch = s.batch.map(blank), appended = s.appended.map(blank)), column)
+  }
+
+  test("property: manifest aggregate answers are None or equal Spark's aggregates") {
+    import org.apache.spark.sql.functions._
+    import graft.sources.v2.{GraftDataSource, GraftGroupedAgg, GraftUngroupedAgg}
+    import GraftDataSource.{AggCountCol, AggCountStar, AggMax, AggMin, AggSum}
+    val schema = GraftDataSource.PageSchema
+    def internal(v: Any): Any = v match {
+      case s: String => org.apache.spark.unsafe.types.UTF8String.fromString(s)
+      case other => other
+    }
+    check("manifest answers", Prop.forAllNoShrink(answerStoreGen) { case (s, blank) =>
+      import spark.implicits._
+      val root = writeStore(s)
+      val fresh = SnapshotStore.currentEntries(root)
+      // one entry as a part committed before per-part stats existed
+      val stripped = fresh.updated(0, fresh.head.copy(stats = None))
+      val pages = spark.createDataset(s.batch ++ s.appended).toDF()
+        .withColumn("warc_ts", unix_micros(col("warc_ts")))
+      val cols = Seq("url", "warc_ts", "text", "lang")
+      val aggs = AggCountStar +: cols.flatMap(c => Seq(AggCountCol(c), AggMin(c), AggMax(c))) :+
+        AggCountCol("html") :+ AggSum("warc_ts")
+      val want = pages.agg(count(lit(1)), cols.flatMap(c =>
+        Seq(count(col(c)), min(col(c)), max(col(c)))) :+ count(col("html")) :+
+        sum(col("warc_ts")): _*).head().toSeq.map(internal)
+      val ok = Seq(fresh, stripped).forall { entries =>
+        // each aggregate alone: one uncovered aggregate must not hide the others
+        aggs.zip(want).forall { case (a, w) =>
+          GraftUngroupedAgg.compute(entries, Seq(a), schema).forall(_.toSeq == Seq(w)) &&
+            (a match { // non-vacuity: every column's null count is in the manifest
+              case AggCountStar | AggCountCol(_) if entries eq fresh =>
+                GraftUngroupedAgg.compute(entries, Seq(a), schema).isDefined
+              case _ => true
+            })
+        } && Seq("url", "text", "lang").forall { c =>
+          val got = GraftGroupedAgg.compute(entries, c)
+            .map(_.map(g => (g.value, g.countStar, g.countCol)).toSet)
+          got.forall(_ == pages.groupBy(col(c)).agg(count(lit(1)), count(col(c)))
+            .as[(String, Long, Long)].collect().toSet)
+        }
+      }
+      val declined = stripped.head.nRows == 0 || aggs.tail.forall(a =>
+        GraftUngroupedAgg.compute(stripped, Seq(a), schema).isEmpty)
+      if (!ok || !declined) println(s"counterexample $root (all-null $blank)")
+      ok && declined
+    }, cases = 6)
   }
 
   test("a truncated manifest line still fails loudly") {

@@ -256,12 +256,23 @@ class V2SourceSpec extends AnyFunSuite {
       "SELECT lang, count(url) AS cu FROM graft_gagg_d GROUP BY lang")
     assert(!otherCol.queryExecution.executedPlan.toString.contains("(metadata-only)"))
 
-    // legacy store (no counts column) declines at the blocks level
-    val legacy = DecodeJob.blocks(spark, root).drop("block_str_dict_counts")
-    assert(GraftGroupedAgg.fromBlocks(legacy, "lang").isEmpty,
-      "a pre-counts store must decline grouped pushdown")
-    // and a store answering normally yields the same counts as the decode
-    val viaMeta = GraftGroupedAgg.fromBlocks(DecodeJob.blocks(spark, root), "lang")
+    // one part committed before per-part stats: the manifest cannot answer,
+    // the pushdown declines and the scan stays exact
+    val r2 = Files.createTempDirectory("graft-v2-gagg-legacy-").toString
+    val pages = Webtext.generate(spark, 2000L, 4).toDF()
+    EncodeJob.run(spark, Webtext.generate(spark, 2000L, 4), r2, parts = 4)
+    val oneLegacy = statsStrippedCopy(r2, firstOnly = true)
+    val legacyEntries = graft.sources.SnapshotStore.currentEntries(oneLegacy)
+    assert(legacyEntries.count(_.stats.isEmpty) == 1 && legacyEntries.size == 4)
+    assert(GraftGroupedAgg.compute(legacyEntries, "lang").isEmpty,
+      "a stats-less part must decline grouped pushdown")
+    val legacyQ = spark.read.format("graft").load(oneLegacy)
+      .groupBy(col("lang")).agg(count(lit(1)).as("cnt"))
+    assert(!legacyQ.queryExecution.executedPlan.toString.contains("(metadata-only)"))
+    assert(sortedRows(legacyQ) ==
+      sortedRows(pages.groupBy(col("lang")).agg(count(lit(1)).as("cnt"))))
+    // and a store answering normally yields the same counts as the data
+    val viaMeta = GraftGroupedAgg.compute(graft.sources.SnapshotStore.currentEntries(root), "lang")
     assert(viaMeta.isDefined)
     val wantMap = written.groupBy(col("lang")).count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -808,8 +819,9 @@ class V2SourceSpec extends AnyFunSuite {
   }
 
   /** A byte-for-byte copy of a store whose manifest lines lack `stats` — what
-    * every store committed before per-part stats existed looks like. */
-  private def statsStrippedCopy(src: String): String = {
+    * every store committed before per-part stats existed looks like. With
+    * `firstOnly`, only each manifest's first line loses them. */
+  private def statsStrippedCopy(src: String, firstOnly: Boolean = false): String = {
     import scala.jdk.CollectionConverters._
     val dst = Files.createTempDirectory("graft-v2-nostats-")
     val srcPath = java.nio.file.Paths.get(src)
@@ -822,11 +834,13 @@ class V2SourceSpec extends AnyFunSuite {
     val json = new com.fasterxml.jackson.databind.ObjectMapper()
     val mfs = Files.list(dst.resolve("manifests"))
     try mfs.iterator().asScala.filter(_.toString.endsWith(".jsonl")).foreach { mf =>
-      val lines = Files.readAllLines(mf).asScala.filter(_.nonEmpty).map { line =>
-        val node = json.readTree(line).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-        assert(node.has("stats"), s"fresh stores must carry part stats: $line")
-        node.remove("stats")
-        json.writeValueAsString(node)
+      val lines = Files.readAllLines(mf).asScala.filter(_.nonEmpty).zipWithIndex.map {
+        case (line, i) if firstOnly && i > 0 => line
+        case (line, _) =>
+          val node = json.readTree(line).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+          assert(node.has("stats"), s"fresh stores must carry part stats: $line")
+          node.remove("stats")
+          json.writeValueAsString(node)
       }
       Files.write(mf, lines.asJava)
     } finally mfs.close()
@@ -866,6 +880,67 @@ class V2SourceSpec extends AnyFunSuite {
       assert(GraftDataSource.planStatsFor(legacy).get.prunedGroupKeys == kept,
         s"query $i: level 2 must keep the groups level 1 kept")
     }
+  }
+
+  test("metadata aggregates plan from the manifest with no Spark job") {
+    graftTable.createOrReplaceTempView("graft_agg_jobs")
+    graftTable.count() // the shared store is written before any window opens
+    val queries = Seq(
+      "SELECT count(*), min(warc_ts), max(warc_ts), count(lang), min(url), max(url) " +
+        "FROM graft_agg_jobs" -> "(metadata-only)",
+      "SELECT lang, count(*), count(lang) FROM graft_agg_jobs GROUP BY lang" ->
+        "(metadata-only)",
+      "SELECT lang, count(*) FROM graft_agg_jobs WHERE lang <> 'en' GROUP BY lang" ->
+        "LocalTableScan")
+    val want = Seq(
+      written.agg(count(lit(1)), min(col("warc_ts")), max(col("warc_ts")), count(col("lang")),
+        min(col("url")), max(col("url"))),
+      written.groupBy(col("lang")).agg(count(lit(1)), count(col("lang"))),
+      written.where(col("lang") =!= "en").groupBy(col("lang")).agg(count(lit(1))))
+    queries.zip(want).foreach { case ((q, marker), w) =>
+      val (plan, planned) = jobsDuring(spark.sql(q).queryExecution.executedPlan.toString)
+      assert(plan.contains(marker), s"$q must answer from the manifest:\n$plan")
+      assert(planned == 0, s"$q: planning ran $planned Spark jobs")
+      val (rows, ran) = jobsDuring(spark.sql(q).collect().map(_.toString).sorted.toSeq)
+      assert(rows == sortedRows(w), q)
+      // a LocalTableScan collects on the driver; a BatchScan, even of one
+      // in-memory row, is collected through one one-task job
+      assert(ran == (if (marker == "LocalTableScan") 0 else 1), s"$q: the query ran $ran jobs")
+    }
+  }
+
+  test("a DELETE whose predicate no part's stats admit runs no Spark job") {
+    import graft.sources.SnapshotStore
+    val r = Files.createTempDirectory("graft-v2-delete-none-").toString
+    EncodeJob.run(spark, Webtext.generate(spark, 2000L, 4), r, parts = 4)
+    val snap = SnapshotStore.currentSnapshotId(r)
+    val (res, jobs) = jobsDuring(graft.jobs.DeleteJob.deleteWhere(spark, r,
+      col("lang") === "zz", Seq(DecodeJob.StrEq("lang", "zz"))))
+    assert(jobs == 0, s"planning the affected parts ran $jobs Spark jobs")
+    assert(res.partsRewritten == 0 && SnapshotStore.currentSnapshotId(r) == snap)
+  }
+
+  test("a store dropped and recreated at the same path answers with the new store's counts") {
+    import spark.implicits._
+    val r = Files.createTempDirectory("graft-v2-recreate-").toString
+    def recreate(pages: org.apache.spark.sql.Dataset[graft.sources.WebPage]): Unit = {
+      graft.jobs.LocalSession.deleteRecursively(new java.io.File(r))
+      EncodeJob.run(spark, pages, r, parts = 2)
+      // snapshot ids restart, so (path, snapshot id) names both stores
+      assert(graft.sources.SnapshotStore.currentSnapshotId(r).contains(1L))
+      spark.read.format("graft").load(r).createOrReplaceTempView("graft_recreated")
+      val all = spark.sql("SELECT lang, count(*) FROM graft_recreated GROUP BY lang")
+      assert(all.queryExecution.executedPlan.toString.contains("(metadata-only)"))
+      assert(sortedRows(all) == sortedRows(pages.toDF().groupBy(col("lang")).count()))
+      val filtered = spark.sql(
+        "SELECT lang, count(*) FROM graft_recreated WHERE lang <> 'zz' GROUP BY lang")
+      assert(filtered.queryExecution.executedPlan.toString.contains("LocalTableScan"))
+      assert(sortedRows(filtered) == sortedRows(pages.toDF()
+        .where(col("lang") =!= "zz").groupBy(col("lang")).count()))
+    }
+    recreate(Webtext.generate(spark, 1000L, 4))
+    recreate(Webtext.generate(spark, 3000L, 4).map(p =>
+      if (p.url.endsWith("1")) p.copy(lang = "ru") else p))
   }
 
   test("scan, append, scan, DELETE, scan: every scan sees its snapshot's rows and parts") {
