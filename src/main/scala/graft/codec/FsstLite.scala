@@ -19,15 +19,11 @@ object FsstLite {
   val MaxSymbolLen = 8
   private val MaxSymbols = 255
 
-  /** A trained table: symbols(code) = byte sequence. */
+  /** A trained table: symbols(code) = byte sequence. Decoding reads only
+    * `symPacked` and `symLen`; the encode dispatch (`code1`, `code2`,
+    * `longCands`, `symMask`) is built on the first [[compress]], so a table
+    * deserialized for decoding never allocates its 65,536-slot arrays. */
   final class Table(val symbols: Array[Array[Byte]]) extends Serializable {
-    // plain new + Arrays.fill: Array.fill evaluates its closure per element
-    // (65536 calls for code2), which showed up in the encode-job profile —
-    // tables are rebuilt per training generation per block
-    private[FsstLite] val code1 = new Array[Int](256)
-    private[FsstLite] val code2 = new Array[Int](65536)
-    java.util.Arrays.fill(code1, -1)
-    java.util.Arrays.fill(code2, -1)
     // symbol bytes left-aligned into a big-endian long + a length mask, so one
     // XOR+AND compares a whole candidate against 8 loaded input bytes (the
     // byte-at-a-time `matches` loop was a top-3 encode hotspot)
@@ -37,12 +33,27 @@ object FsstLite {
       while (j < s.length) { v |= (s(j) & 0xffL) << (56 - 8 * j); j += 1 }
       v
     }
-    private[FsstLite] val symMask: Array[Long] =
-      symbols.map(s => -1L << (64 - 8 * s.length))
     private[FsstLite] val symLen: Array[Int] = symbols.map(_.length)
+    private[FsstLite] lazy val encoder: Encoder = new Encoder(symbols)
+
+    def serialize(out: ByteWriter): Unit = {
+      out.u8(symbols.length)
+      symbols.foreach { s => out.u8(s.length); out.bytes(s) }
+    }
+  }
+
+  /** The encode dispatch of a [[Table]]. */
+  private[FsstLite] final class Encoder(symbols: Array[Array[Byte]]) extends Serializable {
+    // plain new + Arrays.fill: Array.fill evaluates its closure per element
+    // (65536 calls for code2), which showed up in the encode-job profile
+    val code1 = new Array[Int](256)
+    val code2 = new Array[Int](65536)
+    java.util.Arrays.fill(code1, -1)
+    java.util.Arrays.fill(code2, -1)
+    val symMask: Array[Long] = symbols.map(s => -1L << (64 - 8 * s.length))
     // codes of symbols with len >= 3, grouped by their first-2-byte prefix,
     // each group sorted longest-first for greedy longest match
-    private[FsstLite] val longCands: Array[Array[Int]] = {
+    val longCands: Array[Array[Int]] = {
       val groups = new java.util.HashMap[Integer, java.util.ArrayList[Integer]]()
       var c = 0
       while (c < symbols.length) {
@@ -64,11 +75,6 @@ object FsstLite {
         arr(p) = codes.sortBy(cc => -symbols(cc).length)
       }
       arr
-    }
-
-    def serialize(out: ByteWriter): Unit = {
-      out.u8(symbols.length)
-      symbols.foreach { s => out.u8(s.length); out.bytes(s) }
     }
   }
 
@@ -342,7 +348,7 @@ object FsstLite {
       symbols = chosen.map(e => unpackBE(e(0), e(1).toInt))
       g += 1
     }
-    // the full dispatch Table is built ONCE, for the table that compress uses
+    // ONE Table, for compress; its encode dispatch is built on first use
     new Table(symbols)
   }
 
@@ -359,11 +365,12 @@ object FsstLite {
   /** Compress one string with longest-match against the table. */
   def compress(table: Table, s: Array[Byte], out: ByteWriter): Unit = {
     val symbols = table.symbols
-    val code1 = table.code1
-    val code2 = table.code2
-    val longCands = table.longCands
+    val enc = table.encoder
+    val code1 = enc.code1
+    val code2 = enc.code2
+    val longCands = enc.longCands
     val symPacked = table.symPacked
-    val symMask = table.symMask
+    val symMask = enc.symMask
     val symLen = table.symLen
     val n = s.length
     // worst case 2 bytes out per byte in (all escapes): reserve once, write with

@@ -10,12 +10,11 @@ import org.apache.spark.sql.catalyst.expressions.{DirectShufflePartitionID, Gene
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.codec.{IntBlockCodec, StringBlockCodec}
 import graft.core.PhysicalIntType
 import graft.sources.{SnapshotStore, WebPage, Webtext}
-import graft.sources.v2.{GraftDataWriter, GraftWriteLayout, GraftWriterCommitMessage}
+import graft.sources.v2.{GraftDataWriter, GraftWriteLayout, GraftWriterCommitMessage, HadoopSettings}
 import graft.sources.v2.GraftDataSource.PageSchema
 
 /**
@@ -471,10 +470,10 @@ object EncodeJob {
     val rows = prepared.repartition(width, slot).sortWithinPartitions(col("url"))
       .select((PageSchema.fieldNames.map(col) :+ col("part_id")).toIndexedSeq: _*)
     val (relDir, absDir) = SnapshotStore.newDataDir(root)
-    val conf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
+    val settings = HadoopSettings(spark)
     val jt0 = System.nanoTime()
     val msgs = rows.queryExecution.toRdd.mapPartitionsWithIndex { (i, it) =>
-      encodeTask(absDir, conf, maxBlockBytes, i, TaskContext.get().taskAttemptId(), it)
+      encodeTask(absDir, settings, maxBlockBytes, i, TaskContext.get().taskAttemptId(), it)
     }.collect()
     val secs = (System.nanoTime() - jt0) / 1e9
     GraftWriteLayout.publish(absDir, msgs)
@@ -490,14 +489,14 @@ object EncodeJob {
     * nothing for an empty task. A failed attempt deletes its staging; an
     * attempt whose result the driver drops never becomes readable, because
     * only the driver promotes staged files. */
-  private[graft] def encodeTask(absDir: String, conf: SerializableConfiguration,
+  private[graft] def encodeTask(absDir: String, settings: HadoopSettings,
       maxBlockBytes: Long, partitionId: Int, attemptId: Long,
       rows: Iterator[InternalRow]): Iterator[GraftWriterCommitMessage] = {
     if (!rows.hasNext) return Iterator.empty
     val first = rows.next()
     val partId = first.getInt(PartIdOrdinal)
     val w = new GraftDataWriter(absDir, partId, attemptId,
-      conf, PageSchema, maxBlockBytes)
+      settings, PageSchema, maxBlockBytes)
     try {
       w.write(first)
       // a frame whose ids span more than `numParts` would mix parts here

@@ -16,7 +16,6 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.InputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.MessageType
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -30,7 +29,6 @@ import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.codec.{IntBlockCodec, StringBlockCodec}
 import graft.jobs.DecodeJob
@@ -197,32 +195,36 @@ object GraftDataSource {
    * within one dir, whose sorted live part ids gate the reader exactly.
    * Shared by the batch [[GraftScan]], the copy-on-write [[GraftCowScan]] and
    * the [[GraftMicroBatchStream]] (which passes only the parts NEW in its
-   * offset range). Listing runs at planning time with a plain session
-   * Hadoop conf; the partitions carry no conf, since the readers get theirs
-   * from the scan's one broadcast ([[GraftReaderFactory]]). Returns
-   * (partitions, total file count).
+   * offset range).
+   *
+   * `keys` are the scan's planned `(part_id, block_seq)` group keys, or None
+   * for no pruning. Each partition carries the keys of its own files' parts
+   * only, so its payload is bounded by its files' groups however many groups
+   * the whole scan keeps. Directories are listed with `conf`, the scan's one
+   * conf; the partitions carry none. Returns (partitions, total file count).
    */
   private[v2] def packPartitions(spark: SparkSession, root: String,
       entries: Seq[SnapshotStore.PartEntry], readSchema: StructType,
-      refColumn: String,
-      keyParts: Option[Set[Int]],
-      keysBc: org.apache.spark.broadcast.Broadcast[Array[Long]],
+      refColumn: String, keys: Option[Array[(Int, Int)]], conf: Configuration,
       columnar: Boolean, limit: Int): (Array[InputPartition], Int) = {
     val liveByDir: Map[String, Array[Int]] = entries.groupBy(_.dataDir)
       .map { case (d, es) => d -> es.map(_.partId).sorted.toArray }
+    val keyParts: Option[Set[Int]] = keys.map(_.iterator.map(_._1).toSet)
+    val packedKeys = keys.map(_.map(k => DecodeJob.packKey(k._1, k._2)).sorted)
     def wanted(d: String, pid: Int): Boolean =
       java.util.Arrays.binarySearch(liveByDir(d), pid) >= 0 && keyParts.forall(_(pid))
     // manifest-level file pruning: skip whole data dirs owning no surviving part
     val dirs = entries.map(_.dataDir).distinct
       .filter(d => keyParts.forall(kp => liveByDir(d).exists(kp)))
-    val conf = spark.sessionState.newHadoopConf()
     val sqlConf = spark.sessionState.conf
     val maxBytes = sqlConf.filesMaxPartitionBytes
     val openCost = sqlConf.filesOpenCostInBytes
-    // PARALLEL dir listing: a long-streamed store holds one data dir per
-    // epoch; serial listStatus (one RPC per dir) would put minutes of
-    // driver-side planning in front of a scan over thousands of epochs on
-    // object storage. Bounded pool; listing order is restored by the map.
+    // PARALLEL dir listing past MaxSerialListingDirs: a long-streamed store
+    // holds one data dir per epoch, and serial listStatus (one RPC per dir)
+    // would put minutes of driver-side planning in front of a scan over
+    // thousands of epochs on object storage. Below it, starting the pool's
+    // threads costs more than the listings they overlap. Bounded pool;
+    // listing order is restored by the map.
     val allFiles: Seq[(String, Array[(String, Long)])] = {
       def list(d: String): Array[(String, Long)] = {
         val dirPath = new Path(new Path(root), d)
@@ -235,7 +237,7 @@ object GraftDataSource {
             GraftDataWriter.partIdOf(st.getPath.getName).forall(wanted(d, _)))
           .map(st => (st.getPath.toString, st.getLen))
       }
-      if (dirs.size <= 1) dirs.map(d => d -> list(d))
+      if (dirs.size <= MaxSerialListingDirs) dirs.map(d => d -> list(d))
       else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(dirs.size, 16))
         try {
@@ -263,10 +265,40 @@ object GraftDataSource {
         bin += path; binBytes += len + openCost
       }
       if (bin.nonEmpty) bins += bin
-      bins.map(b => GraftInputPartition(b.toArray, readSchema, refColumn,
-        liveByDir(d), keysBc, columnar, limit): InputPartition)
+      bins.map { b =>
+        val pids = b.map(f => GraftDataWriter.partIdOf(new Path(f).getName))
+        // a file named without its part id may hold any live part of the dir
+        val binParts =
+          if (pids.forall(_.isDefined)) pids.flatten.distinct.sorted.toArray else liveByDir(d)
+        GraftInputPartition(b.toArray, readSchema, refColumn, liveByDir(d),
+          packedKeys.map(keysOfParts(_, binParts)).orNull, columnar, limit): InputPartition
+      }
     }.toArray
     (partitions, allFiles.iterator.map(_._2.length).sum)
+  }
+
+  /** Up to this many data dirs a scan lists them one by one, as Spark's file
+    * index does up to 32 paths. */
+  private val MaxSerialListingDirs = 32
+
+  /** The keys of `parts` (ascending) out of the sorted packed `keys`: each
+    * part's keys form one contiguous run, found by two binary searches. */
+  private def keysOfParts(keys: Array[Long], parts: Array[Int]): Array[Long] = {
+    def lowerBound(target: Long): Int = {
+      var lo = 0; var hi = keys.length
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (keys(mid) < target) lo = mid + 1 else hi = mid
+      }
+      lo
+    }
+    val out = Array.newBuilder[Long]
+    parts.foreach { pid =>
+      val lo = lowerBound(pid.toLong << 32)
+      val hi = if (pid == Int.MaxValue) keys.length else lowerBound((pid.toLong + 1) << 32)
+      out.addAll(keys, lo, hi - lo)
+    }
+    out.result()
   }
 
   /** Aggregates answerable from store metadata alone (see [[GraftAggScan]]). */
@@ -823,8 +855,10 @@ object GraftAggReaderFactory extends PartitionReaderFactory {
  *  2. otherwise a column-pruned block-metadata job over the surviving parts
  *     only picks the surviving groups.
  * Parts committed before per-part stats existed are unbounded at level 1, so
- * such stores plan through level 2 exactly as before. The keys ride one
- * broadcast; every file bin reads only its own parts' keys.
+ * such stores plan through level 2 exactly as before. Planning makes no
+ * broadcast: each input partition carries the keys of its own files' parts,
+ * and the reader factory carries the session's programmatic Hadoop settings
+ * ([[HadoopSettings]]).
  */
 final class GraftScan(root: String, snapshotId: Option[Long],
                       requiredSchema: StructType,
@@ -907,44 +941,19 @@ final class GraftScan(root: String, snapshotId: Option[Long],
 
   private def snapshotEntries(): Seq[SnapshotStore.PartEntry] = pinnedEntries
 
-  // ---- pruned-key plan, memoized per predicate set: runtime-filtered scans
-  // plan TWICE (pre- and post-filter()), and without this each planning pass
-  // left one more driver-held broadcast to the ContextCleaner (slow
-  // accumulation in a long-lived driver running many selective scans). Same
-  // predicates -> the whole metadata-scan plan is reused; changed predicates
-  // (a runtime In landed) -> the superseded broadcast is destroyed before the
-  // new one is built (its partitions never execute: Spark re-plans from this
-  // same Batch and only the final partitions run). ----
+  // ---- the partition plan, memoized per predicate set: Spark plans one scan
+  // more than once (before and after runtime filters, and again when
+  // adaptive execution re-plans the query). The same predicates reuse the
+  // whole plan: level 2 is a Spark job, and the listing one round trip per
+  // data dir. Changed predicates (a runtime In landed) re-plan ----
   private val planLock = new Object
-  private var cachedPreds: Seq[DecodeJob.BlockPredicate] = null
-  private var cachedKeys: Option[Array[(Int, Int)]] = None
-  private var cachedKeysBc: org.apache.spark.broadcast.Broadcast[Array[Long]] = null
+  private var planned: (Seq[DecodeJob.BlockPredicate],
+    (Array[InputPartition], GraftDataSource.PlanStats)) = null
 
-  private def plannedKeys(spark: SparkSession, preds: Seq[DecodeJob.BlockPredicate],
-      entries: Seq[SnapshotStore.PartEntry])
-      : (Option[Array[(Int, Int)]], org.apache.spark.broadcast.Broadcast[Array[Long]]) =
-    planLock.synchronized {
-      if (cachedPreds != null && cachedPreds == preds) return (cachedKeys, cachedKeysBc)
-      val keysOpt: Option[Array[(Int, Int)]] =
-        if (preds.nonEmpty)
-          DecodeJob.planPrunedKeys(spark, root, entries, preds,
-            Some(tableSchema.fieldNames.toSet))
-        // top-n prefix pruning only when NO predicate of any kind arrived (a
-        // runtime filter landing via filter() makes per-group row counts stop
-        // bounding the MATCHING rows — same reason pushTopN refuses filters)
-        else pushedTopN.flatMap { t =>
-          val intBounds = tableSchema.fields.find(_.name == t.column)
-            .map(_.dataType != StringType)
-          DecodeJob.planTopNKeys(spark, root, entries,
-            t.column, t.asc, t.nullsFirst, t.limit, intBounds)
-        }
-      if (cachedKeysBc != null) cachedKeysBc.destroy()
-      cachedPreds = preds
-      cachedKeys = keysOpt
-      cachedKeysBc = keysOpt.map(ks => spark.sparkContext.broadcast(
-        ks.map(k => DecodeJob.packKey(k._1, k._2)).sorted)).orNull
-      (cachedKeys, cachedKeysBc)
-    }
+  /** The session's Hadoop settings, read once per scan; [[listingConf]] is
+    * the one conf this scan builds from them, for its directory listing. */
+  private lazy val settings = HadoopSettings(SparkSession.active)
+  private lazy val listingConf = settings.conf()
 
   override def readSchema(): StructType = requiredSchema
 
@@ -975,7 +984,6 @@ final class GraftScan(root: String, snapshotId: Option[Long],
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val spark = SparkSession.active
     val entries = snapshotEntries()
     if (entries.isEmpty) {
       // an empty-ENTRIES snapshot (created-but-unloaded table, truncate,
@@ -986,20 +994,41 @@ final class GraftScan(root: String, snapshotId: Option[Long],
         s"no committed snapshot under $root")
       return Array.empty
     }
+    val (partitions, stats) = planLock.synchronized {
+      val preds = predicates
+      if (planned == null || planned._1 != preds) planned = (preds, plan(preds, entries))
+      planned._2
+    }
+    GraftDataSource.recordPlanStats(root, stats)
+    partitions
+  }
 
+  private def plan(preds: Seq[DecodeJob.BlockPredicate],
+      entries: Seq[SnapshotStore.PartEntry])
+      : (Array[InputPartition], GraftDataSource.PlanStats) = {
+    val spark = SparkSession.active
     // gated two-level Iceberg-style planning: manifest part stats, then (only
     // if it can prune more) a metadata-only scan of the surviving parts, yield
     // the surviving group keys, or None when the predicate is not selective
     // (past the MaxPrunedKeyCollect / half-the-groups gate — the residuals
-    // still make results exact). The key set ships as a BROADCAST and each
-    // task slices out its own dir's contiguous runs, so the per-task payload no longer
-    // bounds pruning depth: the SQL surface now prunes as deep as the
-    // decodeWhere API (10^6 keys), where r4 silently dropped ALL pruning past
-    // 4096 surviving groups because the whole array rode every InputPartition.
-    // Cached per predicate set (see plannedKeys): the double planning around
-    // runtime filters neither re-plans nor leaks broadcasts.
-    val (keysOpt, keysBc) = plannedKeys(spark, predicates, entries)
-    val keyParts: Option[Set[Int]] = keysOpt.map(_.map(_._1).toSet)
+    // still make results exact). Each partition carries only its own files'
+    // keys, so no task payload grows with the scan's survivor count: the SQL
+    // surface prunes as deep as the decodeWhere API (10^6 keys), where r4
+    // dropped ALL pruning past 4096 surviving groups because the whole array
+    // rode every InputPartition.
+    val keys: Option[Array[(Int, Int)]] =
+      if (preds.nonEmpty)
+        DecodeJob.planPrunedKeys(spark, root, entries, preds,
+          Some(tableSchema.fieldNames.toSet))
+      // top-n prefix pruning only when NO predicate of any kind arrived (a
+      // runtime filter landing via filter() makes per-group row counts stop
+      // bounding the MATCHING rows — same reason pushTopN refuses filters)
+      else pushedTopN.flatMap { t =>
+        val intBounds = tableSchema.fields.find(_.name == t.column)
+          .map(_.dataType != StringType)
+        DecodeJob.planTopNKeys(spark, root, entries,
+          t.column, t.asc, t.nullsFirst, t.limit, intBounds)
+      }
     val columnar = spark.conf.getOption("spark.graft.v2.columnar") match {
       case None => false
       case Some(v) if v.equalsIgnoreCase("true") => true
@@ -1008,20 +1037,13 @@ final class GraftScan(root: String, snapshotId: Option[Long],
         s"spark.graft.v2.columnar must be true or false, got '$v'")
     }
     val (partitions, fileCount) = GraftDataSource.packPartitions(spark, root, entries,
-      requiredSchema, tableSchema.fields.head.name, keyParts, keysBc, columnar,
+      requiredSchema, tableSchema.fields.head.name, keys, listingConf, columnar,
       pushedLimit.getOrElse(-1))
-    GraftDataSource.recordPlanStats(root, GraftDataSource.PlanStats(
-      partitions.length, fileCount,
-      predicates.size, keysOpt.map(_.length), pushedLimit, pushedTopN))
-    partitions
+    (partitions, GraftDataSource.PlanStats(partitions.length, fileCount,
+      preds.size, keys.map(_.length), pushedLimit, pushedTopN))
   }
 
-  /** One conf broadcast per scan, made on first use: a scan planned twice
-    * around runtime filters, or asked for its factory more than once, reuses
-    * it. */
-  private lazy val readerFactory = GraftReaderFactory(SparkSession.active)
-
-  override def createReaderFactory(): PartitionReaderFactory = readerFactory
+  override def createReaderFactory(): PartitionReaderFactory = GraftReaderFactory(settings)
 
   /** Micro-batch streaming read over the snapshot-id sequence (see
     * [[GraftMicroBatchStream]]); pushed predicates prune each batch's delta
@@ -1041,18 +1063,18 @@ final class GraftScan(root: String, snapshotId: Option[Long],
 }
 
 /** A bin of whole block parquet files from ONE data dir; groups are whole
-  * within each file by construction. It carries no Hadoop conf: Spark
-  * serializes every partition once per task, and the session conf is
-  * ~110 KB, so the conf rides the scan's one broadcast in the
-  * [[GraftReaderFactory]] instead. */
+  * within each file by construction. Spark serializes every partition once
+  * per task, so it holds only what its files need: the scan's planned keys of
+  * its own files' parts, and no Hadoop conf (the settings ride the
+  * [[GraftReaderFactory]]). */
 final case class GraftInputPartition(
     files: Array[String],
     readSchema: StructType,          // required output columns + types, in order
     refColumn: String,               // store's first column: the count-only reference
     liveParts: Array[Int],           // sorted live part ids of the files' dir
-    // broadcast of ALL surviving sorted (part_id<<32|seq) keys, or null = no
-    // pruning; each task slices its dir's runs out (bounded per-task payload)
-    keysBc: org.apache.spark.broadcast.Broadcast[Array[Long]],
+    // sorted planned (part_id<<32|seq) keys of the files' parts, or null = no
+    // pruning
+    keys: Array[Long],
     columnar: Boolean,
     limit: Int = -1) extends InputPartition { // pushed per-task row cap; -1 = none
   def columns: Array[String] = readSchema.fieldNames
@@ -1083,14 +1105,16 @@ private final class BlockFileReaderBuilder(file: InputFile, cols: Seq[String])
 }
 
 /** The reader factory of every block-file scan ([[GraftScan]],
-  * [[GraftCowScan]], [[GraftMicroBatchStream]]). It holds the session Hadoop
-  * conf as ONE broadcast per scan, the way Spark's `ParquetScan` does: each
-  * executor fetches it once, tasks share it, and every block file opens from
-  * it ([[BlockFileReaderBuilder]]). */
-final case class GraftReaderFactory(conf: Broadcast[SerializableConfiguration])
+  * [[GraftCowScan]], [[GraftMicroBatchStream]]). It carries the session's
+  * programmatic Hadoop settings ([[HadoopSettings]]), a few entries, not a
+  * broadcast: each reader opens its block files ([[BlockFileReaderBuilder]])
+  * from Spark's per-JVM Hadoop conf when that already holds them, else from
+  * one overlaid copy per task. Settings from XML resources are the
+  * executor's own, as for any Hadoop client. */
+final case class GraftReaderFactory(settings: HadoopSettings)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new GraftPartitionReader(partition.asInstanceOf[GraftInputPartition], conf.value.value)
+    new GraftPartitionReader(partition.asInstanceOf[GraftInputPartition], settings.conf())
 
   // columnar is a per-scan choice (spark.graft.v2.columnar): copying multi-KB
   // text/html blobs into ColumnVectors measurably LOSES to the row path's
@@ -1105,21 +1129,16 @@ final case class GraftReaderFactory(conf: Broadcast[SerializableConfiguration])
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new GraftColumnarReader(partition.asInstanceOf[GraftInputPartition], conf.value.value)
-}
-
-object GraftReaderFactory {
-  /** A factory over a fresh broadcast of the session's Hadoop conf. */
-  def apply(spark: SparkSession): GraftReaderFactory = GraftReaderFactory(
-    spark.sparkContext.broadcast(new SerializableConfiguration(spark.sessionState.newHadoopConf())))
+    new GraftColumnarReader(partition.asInstanceOf[GraftInputPartition], settings.conf())
 }
 
 /**
  * Streams a bin of whole block files as LIVE complete (part_id, block_seq)
- * groups: parquet-level filters (column ∈ wanted, part/seq ∈ pruned keys) skip
- * row groups by statistics, consecutive records assemble in place, the group
- * buffer flushes at file boundaries (groups are whole per file). Bounded
- * memory: one 64Ki-row group in flight.
+ * groups: parquet-level filters (column ∈ wanted, part/seq ∈ the partition's
+ * planned keys) skip row groups by statistics, consecutive records assemble
+ * in place, the group buffer flushes at file boundaries (groups are whole per
+ * file). The keys arrive already cut to the bin's own parts, so a task does
+ * no slicing. Bounded memory: one 64Ki-row group in flight.
  */
 private final class BlockGroupStream(p: GraftInputPartition, conf: Configuration,
                                      readCols: Array[String], countOnly: Boolean) {
@@ -1135,47 +1154,7 @@ private final class BlockGroupStream(p: GraftInputPartition, conf: Configuration
   private val projNames = Seq("part_id", "block_seq", "column", "n") ++
     (if (countOnly) Seq.empty else Seq("encoded"))
 
-  /** First index in sorted `a` with value >= target. */
-  private def lowerBound(a: Array[Long], target: Long): Int = {
-    var lo = 0; var hi = a.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (a(mid) < target) lo = mid + 1 else hi = mid
-    }
-    lo
-  }
-
-  /** This bin's slice of the globally pruned key set: keys are sorted by
-    * packed (part_id<<32|seq), so each part's keys form one contiguous run —
-    * one lower-bound search per live part of the bin's dir extracts the dir's
-    * share. Per-task work is O(dir keys), independent of the global survivor
-    * count, which is what lifts the r4 per-task 4096-key ceiling. */
-  private val slicedKeys: Array[Long] =
-    if (p.keysBc == null) null
-    else {
-      val all = p.keysBc.value
-      val ranges = new Array[Int](p.liveParts.length * 2)
-      var total = 0
-      var i = 0
-      while (i < p.liveParts.length) {
-        val pid = p.liveParts(i)
-        val lo = lowerBound(all, pid.toLong << 32)
-        val hi = lowerBound(all, (pid.toLong + 1) << 32)
-        ranges(2 * i) = lo; ranges(2 * i + 1) = hi
-        total += hi - lo
-        i += 1
-      }
-      val out = new Array[Long](total)
-      var o = 0
-      i = 0
-      while (i < p.liveParts.length) {
-        val lo = ranges(2 * i); val n = ranges(2 * i + 1) - lo
-        System.arraycopy(all, lo, out, o, n)
-        o += n
-        i += 1
-      }
-      out
-    }
+  private val keys: Array[Long] = p.keys // null = no pruning
 
   private def inFilterMaxKeys: Int = GraftDataSource.InFilterMaxKeys
 
@@ -1183,16 +1162,16 @@ private final class BlockGroupStream(p: GraftInputPartition, conf: Configuration
     var pred: FilterPredicate =
       FilterApi.in(FilterApi.binaryColumn("column"),
         readCols.map(Binary.fromString).toSet.asJava)
-    if (slicedKeys != null && slicedKeys.length > 0 && slicedKeys.length <= inFilterMaxKeys) {
-      val pids = slicedKeys.map(k => Int.box((k >>> 32).toInt)).toSet.asJava
-      val seqs = slicedKeys.map(k => Int.box(k.toInt)).toSet.asJava
+    if (keys != null && keys.length > 0 && keys.length <= inFilterMaxKeys) {
+      val pids = keys.map(k => Int.box((k >>> 32).toInt)).toSet.asJava
+      val seqs = keys.map(k => Int.box(k.toInt)).toSet.asJava
       pred = FilterApi.and(pred,
         FilterApi.and(FilterApi.in(FilterApi.intColumn("part_id"), pids),
           FilterApi.in(FilterApi.intColumn("block_seq"), seqs)))
-    } else if (slicedKeys != null && slicedKeys.length > 0) {
-      val pids = slicedKeys.map(k => Int.box((k >>> 32).toInt)).toSet.asJava
+    } else if (keys != null && keys.length > 0) {
+      val pids = keys.map(k => Int.box((k >>> 32).toInt)).toSet.asJava
       pred = FilterApi.and(pred, FilterApi.in(FilterApi.intColumn("part_id"), pids))
-    } else if (slicedKeys == null && p.liveParts.length <= inFilterMaxKeys) {
+    } else if (keys == null && p.liveParts.length <= inFilterMaxKeys) {
       // NO key pruning (plain scan): still push the LIVE part ids — a
       // metadata-only DELETE/rewrite leaves the replaced parts' files inside
       // dirs the surviving parts keep referenced, and without this filter a
@@ -1233,12 +1212,12 @@ private final class BlockGroupStream(p: GraftInputPartition, conf: Configuration
   private var bufN: Int = 0
   // a dir with zero surviving keys never plans (defensive: empty In-sets are
   // rejected by parquet's FilterApi, so don't build a filter from nothing)
-  private var eof = slicedKeys != null && slicedKeys.length == 0
+  private var eof = keys != null && keys.length == 0
 
   @inline private def liveGroup(packed: Long): Boolean = {
     val pid = (packed >>> 32).toInt
     java.util.Arrays.binarySearch(p.liveParts, pid) >= 0 &&
-      (slicedKeys == null || java.util.Arrays.binarySearch(slicedKeys, packed) >= 0)
+      (keys == null || java.util.Arrays.binarySearch(keys, packed) >= 0)
   }
 
   private def takeBuffered(): GroupData = {

@@ -113,10 +113,6 @@ final class GraftMicroBatchStream(root: String,
   override def commit(end: Offset): Unit = () // offsets live in Spark's checkpoint
 
   override def stop(): Unit = planLock.synchronized {
-    // the FINAL batch's pruned-key broadcast is only destroyed when the NEXT
-    // range plans — on query stop release it (and the memoized plan)
-    // deterministically instead of waiting for the ContextCleaner
-    if (lastKeysBc != null) { lastKeysBc.destroy(); lastKeysBc = null }
     lastRange = null
     lastPlan = null
   }
@@ -171,11 +167,10 @@ final class GraftMicroBatchStream(root: String,
     planLock.synchronized {
       // the engine plans one batch MULTIPLE times (logical planning + physical
       // execution) — memoize per offset range so re-planning reuses the same
-      // partitions/broadcast instead of re-running the manifest walk and
-      // metadata scan (or, worse, destroying a broadcast the first plan's
-      // tasks still reference). The manifest walk (emitEntries) sits INSIDE
-      // the memo: rangeKey does not depend on it, and a memo hit must not
-      // re-parse every manifest in the range.
+      // partitions instead of re-running the manifest walk and metadata scan.
+      // The manifest walk (emitEntries) sits INSIDE the memo: rangeKey does
+      // not depend on it, and a memo hit must not re-parse every manifest in
+      // the range.
       val rangeKey = (s.snapshotId, s.fresh, e, predicates)
       if (lastRange == rangeKey) return lastPlan
       val entries = emitEntries(s, e)
@@ -190,20 +185,12 @@ final class GraftMicroBatchStream(root: String,
         if (predicates.isEmpty || entries.isEmpty) None
         else DecodeJob.planPrunedKeys(spark, root, entries, predicates,
           Some(GraftDataSource.storeSchema(root).fieldNames.toSet))
-      val keyParts = keysOpt.map(_.map(_._1).toSet)
-      val newBc = keysOpt.map(ks => spark.sparkContext.broadcast(
-        ks.map(k => DecodeJob.packKey(k._1, k._2)).sorted)).orNull
-      // the PREVIOUS range's broadcast is done — micro-batches execute
-      // sequentially, so a new range means the old batch's tasks finished;
-      // destroy instead of accumulating one broadcast per filtered batch
-      if (lastKeysBc != null) lastKeysBc.destroy()
-      lastKeysBc = newBc
       val parts: Array[InputPartition] =
         if (entries.isEmpty) Array.empty
         else {
           // row path only (batch-sized ColumnarBatches buy nothing on micro-batches)
           val (p, f) = GraftDataSource.packPartitions(spark, root, entries,
-            readSchema, refColumn, keyParts = keyParts, keysBc = newBc,
+            readSchema, refColumn, keys = keysOpt, conf = listingConf,
             columnar = false, limit = -1)
           GraftDataSource.recordPlanStats(root, GraftDataSource.PlanStats(
             p.length, f, predicates.size, keysOpt.map(_.length)))
@@ -219,10 +206,11 @@ final class GraftMicroBatchStream(root: String,
   private val planLock = new Object
   private var lastRange: (Long, Boolean, Long, Seq[graft.jobs.DecodeJob.BlockPredicate]) = null
   private var lastPlan: Array[InputPartition] = null
-  private var lastKeysBc: org.apache.spark.broadcast.Broadcast[Array[Long]] = null
 
-  // one conf broadcast for the life of the stream, shared by every batch
-  private lazy val readerFactory = GraftReaderFactory(SparkSession.active)
+  // the session's Hadoop settings, read once for the life of the stream and
+  // shared by every batch, and the one conf built from them for listing
+  private lazy val settings = HadoopSettings(SparkSession.active)
+  private lazy val listingConf = settings.conf()
 
-  override def createReaderFactory(): PartitionReaderFactory = readerFactory
+  override def createReaderFactory(): PartitionReaderFactory = GraftReaderFactory(settings)
 }

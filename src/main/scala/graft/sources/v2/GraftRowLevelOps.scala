@@ -188,13 +188,15 @@ final class GraftCowScan(root: String, op: GraftRowLevelOperation,
     val cowEntries = entries.filter(e => affected(e.partId))
     if (cowEntries.isEmpty) return Array.empty
     GraftDataSource.packPartitions(SparkSession.active, root, cowEntries,
-      requiredSchema, "url", None, null, columnar = false, limit = -1)._1
+      requiredSchema, "url", None, listingConf, columnar = false, limit = -1)._1
   }
 
-  // one conf broadcast per statement, however often Spark plans this scan
-  private lazy val readerFactory = GraftReaderFactory(SparkSession.active)
+  // the session's Hadoop settings, read once per statement however often
+  // Spark plans this scan, and the one conf built from them for listing
+  private lazy val settings = HadoopSettings(SparkSession.active)
+  private lazy val listingConf = settings.conf()
 
-  override def createReaderFactory(): PartitionReaderFactory = readerFactory
+  override def createReaderFactory(): PartitionReaderFactory = GraftReaderFactory(settings)
 }
 
 /** Same physical layout contract as [[GraftWrite]] (url range distribution +
@@ -227,9 +229,7 @@ final class GraftCowBatchWrite(root: String, op: GraftRowLevelOperation)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     val base = SnapshotStore.nextRehomeBase(root, info.numPartitions())
-    GraftDataWriterFactory(absDir, base,
-      new org.apache.spark.util.SerializableConfiguration(
-        SparkSession.active.sessionState.newHadoopConf()))
+    GraftDataWriterFactory(absDir, base, HadoopSettings(SparkSession.active))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {

@@ -264,8 +264,7 @@ final class GraftBatchWrite(root: String, replaceAll: Boolean,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     GraftDataWriterFactory(absDir, partOffset,
-      new org.apache.spark.util.SerializableConfiguration(
-        org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()), schema)
+      HadoopSettings(org.apache.spark.sql.SparkSession.active), schema)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     // the store is self-describing from its first commit on: later reads,
@@ -293,11 +292,11 @@ final class GraftBatchWrite(root: String, replaceAll: Boolean,
 }
 
 final case class GraftDataWriterFactory(absDir: String, partOffset: Int,
-    conf: org.apache.spark.util.SerializableConfiguration,
+    settings: HadoopSettings,
     schema: StructType = GraftDataSource.PageSchema)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GraftDataWriter(absDir, partOffset + partitionId, taskId, conf, schema)
+    new GraftDataWriter(absDir, partOffset + partitionId, taskId, settings, schema)
 }
 
 /**
@@ -391,8 +390,7 @@ final class GraftStreamingWrite(root: String,
     if (GraftDataSource.persistedSchema(root).isEmpty)
       GraftDataSource.writeSchemaSidecar(root, schema) // self-describing store
     GraftStreamingDataWriterFactory(root, runUuid, parts,
-      new org.apache.spark.util.SerializableConfiguration(
-        org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()), schema)
+      HadoopSettings(org.apache.spark.sql.SparkSession.active), schema)
   }
 
   private def absDir(epochId: Long): String = Paths.get(root, relDir(epochId)).toString
@@ -463,7 +461,7 @@ final class GraftStreamingWrite(root: String,
 }
 
 final case class GraftStreamingDataWriterFactory(root: String, runUuid: String,
-    parts: Int, conf: org.apache.spark.util.SerializableConfiguration,
+    parts: Int, settings: HadoopSettings,
     schema: StructType = GraftDataSource.PageSchema)
     extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
 
@@ -479,7 +477,7 @@ final case class GraftStreamingDataWriterFactory(root: String, runUuid: String,
     require(partitionId < parts,
       s"writer partition $partitionId exceeds the pinned stream width $parts")
     val absDir = Paths.get(root, s"data/stream-$runUuid-e$epochId").toString
-    new GraftDataWriter(absDir, offset.toInt + partitionId, taskId, conf,
+    new GraftDataWriter(absDir, offset.toInt + partitionId, taskId, settings,
       schema)
   }
 }
@@ -556,7 +554,7 @@ object GraftDataWriter {
  * ([[GraftWriteLayout.publish]]).
  */
 final class GraftDataWriter(absDir: String, partId: Int, taskId: Long,
-    conf: org.apache.spark.util.SerializableConfiguration,
+    settings: HadoopSettings,
     schema: StructType = GraftDataSource.PageSchema,
     maxBlockBytes: Long = EncodeJob.MaxBlockBytes)
     extends DataWriter[InternalRow] {
@@ -583,7 +581,7 @@ final class GraftDataWriter(absDir: String, partId: Int, taskId: Long,
   })
 
   private def openWriter(): Unit = {
-    val c = conf.value
+    val c = settings.conf()
     writer = ExampleParquetWriter.builder(
         org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
           new Path(stagedPath.toString), c))

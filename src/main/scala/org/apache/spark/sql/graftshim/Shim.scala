@@ -27,6 +27,11 @@ object Shim {
   def translateFilter(e: Expression): Option[org.apache.spark.sql.sources.Filter] =
     org.apache.spark.sql.execution.datasources.DataSourceStrategy
       .translateFilter(e, supportNestedPredicatePushdown = false)
+  /** Spark's per-JVM Hadoop conf (`private[spark]` SparkHadoopUtil): the XML
+    * resources plus the `spark.hadoop.*` system properties of this JVM. Shared
+    * by every caller, so it must only be read. */
+  def jvmHadoopConf: org.apache.hadoop.conf.Configuration =
+    org.apache.spark.deploy.SparkHadoopUtil.get.conf
 }
 
 /** `private[sql]` analysis types re-exported for the graft expression layer. */

@@ -7,11 +7,10 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{SnapshotStore, Webtext}
-import graft.sources.v2.{GraftDataWriter, GraftWriteLayout}
+import graft.sources.v2.{GraftDataWriter, GraftWriteLayout, HadoopSettings}
 
 /**
  * The batch encode job writes through the V2 writer's task kernel: one part
@@ -102,7 +101,7 @@ class EncodeWriteSpec extends AnyFunSuite {
   test("exactly-once staging: crashed, aborted and zombie attempts never become readable") {
     val root = freshRoot()
     val (relDir, absDir) = SnapshotStore.newDataDir(root)
-    val conf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
+    val settings = HadoopSettings(spark)
     // task rows: the page columns, then part_id; part 0 = urls 0..119, part 1 = 200..279
     def rows(part: Int, ids: Range): Iterator[InternalRow] = ids.iterator.map { i =>
       new GenericInternalRow(Array[Any](
@@ -114,7 +113,7 @@ class EncodeWriteSpec extends AnyFunSuite {
         part))
     }
     def task(partition: Int, attempt: Long, it: Iterator[InternalRow]) =
-      EncodeJob.encodeTask(absDir, conf, EncodeJob.MaxBlockBytes, partition, attempt, it).toSeq
+      EncodeJob.encodeTask(absDir, settings, EncodeJob.MaxBlockBytes, partition, attempt, it).toSeq
 
     // attempt 1 of partition 0 crashes mid-write (after staging a partial block)
     GraftDataWriter.failNextWriteOnce.set(true)

@@ -528,14 +528,14 @@ class V2SourceSpec extends AnyFunSuite {
     assert(!rowPlan.contains("ColumnarToRow"), s"default must be row-based:\n$rowPlan")
   }
 
-  test("pruning survives >4096 surviving groups (broadcast keys, per-bin slicing)") {
+  test("pruning survives >4096 surviving groups (per-partition key slices)") {
     // r4 regression: the scan dropped ALL pruning past 4096 surviving groups
-    // because the whole packed-key array rode every InputPartition. With
-    // broadcast + per-dir slicing the SQL surface must prune as deep as the
-    // decodeWhere API. Fixture: 1-row block groups (maxBlockBytes=1) make 12k
-    // groups from 12k rows; the byte-bound store under-estimates the manifest
-    // group count, so the break-even FRACTION heuristic (not the mechanism under
-    // test) is widened for the duration.
+    // because the whole packed-key array rode every InputPartition. With each
+    // partition carrying only its own files' keys the SQL surface must prune
+    // as deep as the decodeWhere API. Fixture: 1-row block groups
+    // (maxBlockBytes=1) make 12k groups from 12k rows; the byte-bound store
+    // under-estimates the manifest group count, so the break-even FRACTION
+    // heuristic (not the mechanism under test) is widened for the duration.
     val r2 = Files.createTempDirectory("graft-v2-manykeys-").toString
     val input = Webtext.generate(spark, 12000L, 8)
     EncodeJob.run(spark, input, r2, parts = 8, maxBlockBytes = 1L)
@@ -997,7 +997,19 @@ class V2SourceSpec extends AnyFunSuite {
     }
     val selective = partitions(graftTable
       .where(col("url").startsWith("https://host-1.example.com/")).select(col("url")))
-    assert(selective.forall(_.keysBc != null), "selective scan must prune")
+    val planned = GraftDataSource.planStatsFor(root).get.prunedGroupKeys
+    assert(planned.isDefined, "selective scan must prune")
+    // each partition carries the sorted keys of exactly its own files' parts,
+    // and together the partitions carry every planned key once
+    selective.foreach { p =>
+      assert(p.keys != null && p.keys.sameElements(p.keys.sorted), "a sorted key slice")
+      val fileParts = p.files.flatMap(f =>
+        GraftDataWriter.partIdOf(new org.apache.hadoop.fs.Path(f).getName)).toSet
+      assert(p.keys.map(k => (k >>> 32).toInt).toSet == fileParts,
+        s"keys of parts ${p.keys.map(k => (k >>> 32).toInt).distinct.mkString(",")}, " +
+        s"files of parts ${fileParts.mkString(",")}")
+    }
+    assert(selective.map(_.keys.length).sum == planned.get)
     val full = partitions(
       graftTable.select(col("url"), col("warc_ts"), col("html"), col("text"), col("lang")))
     Seq("selective" -> selective, "full" -> full).foreach { case (name, ps) =>
@@ -1035,6 +1047,102 @@ class V2SourceSpec extends AnyFunSuite {
     } finally {
       spark.conf.unset("fs.file.impl")
       spark.conf.unset("fs.file.impl.disable.cache")
+    }
+  }
+
+  test("a task shares the JVM's Hadoop conf unless a carried setting differs from it") {
+    val jvmConf = org.apache.spark.sql.graftshim.Shim.jvmHadoopConf
+    assert(HadoopSettings(Array.empty[(String, String)]).conf() eq jvmConf)
+    val held = HadoopSettings(Array("fs.defaultFS" -> jvmConf.getRaw("fs.defaultFS")))
+    assert(held.conf() eq jvmConf, "every carried value already held: no copy")
+    val overlaid = HadoopSettings(Array("graft.test.setting" -> "on")).conf()
+    assert(!(overlaid eq jvmConf) && overlaid.get("graft.test.setting") == "on")
+    assert(jvmConf.get("graft.test.setting") == null, "the shared conf is never written")
+    // what a session carries: its own keys, not Spark's or the XML defaults'
+    spark.conf.set("graft.test.session.setting", "1")
+    try {
+      val carried = HadoopSettings(spark).entries.toMap
+      assert(carried.get("graft.test.session.setting").contains("1"))
+      assert(!carried.keys.exists(_.startsWith("spark.")))
+      assert(!carried.contains("fs.defaultFS"), "core-default.xml values stay the executor's")
+    } finally spark.conf.unset("graft.test.session.setting")
+  }
+
+  test("Hadoop settings made on the context's Hadoop conf reach the executor-side reader") {
+    val r = Files.createTempDirectory("graft-v2-hconf-").toString
+    EncodeJob.run(spark, Webtext.generate(spark, 4000L, 8), r, parts = 8)
+    def opensDuring(df: DataFrame): (Int, Int) = {
+      CountingLocalFileSystem.opened.clear()
+      df.collect()
+      val storeOpens = CountingLocalFileSystem.opened.toArray.count(_.toString.contains(r))
+      (storeOpens, GraftDataSource.planStatsFor(r).get.files)
+    }
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.file.impl", classOf[CountingLocalFileSystem].getName)
+    hc.set("fs.file.impl.disable.cache", "true")
+    try {
+      val (fullOpens, fullFiles) = opensDuring(
+        spark.read.format("graft").load(r).select(col("url"), col("lang")))
+      assert(fullFiles == 8 && fullOpens == fullFiles,
+        s"full scan opened $fullOpens block files through the context's file system, " +
+        s"planned $fullFiles")
+      val (selOpens, selFiles) = opensDuring(spark.read.format("graft").load(r)
+        .where(col("url").startsWith("https://host-1.example.com/") && col("lang") === "en")
+        .select(col("url")))
+      assert(selFiles >= 1 && selFiles < 8 && selOpens == selFiles,
+        s"selective scan opened $selOpens block files, planned $selFiles")
+    } finally {
+      hc.unset("fs.file.impl")
+      hc.unset("fs.file.impl.disable.cache")
+    }
+  }
+
+  test("planning a scan makes no broadcast") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.graftshim.BroadcastBlocks
+    // single-group parts: every plan below is answered from the manifest, so
+    // no Spark job (whose task binary is itself a broadcast) runs
+    val r = Files.createTempDirectory("graft-v2-nobc-").toString
+    EncodeJob.run(spark, Webtext.generate(spark, 4000L, 8), r, parts = 8)
+    assert(graft.sources.SnapshotStore.currentEntries(r).forall(_.stats.exists(_.nGroups == 1)))
+    /** Plans with `plan`, which returns the planned partition count, and
+      * checks that no broadcast appeared meanwhile. */
+    def assertNoBroadcast(name: String)(plan: => Int): Unit = {
+      val before = BroadcastBlocks.ids()
+      assert(plan > 0, s"$name: no partitions planned")
+      val made = BroadcastBlocks.ids() -- before
+      assert(made.isEmpty, s"$name planning made broadcasts ${made.mkString(",")}")
+    }
+    def planOf(df: DataFrame): Int =
+      df.queryExecution.executedPlan.collect { case b: BatchScanExec => b }.map { b =>
+        b.batch.createReaderFactory()
+        b.inputPartitions.length
+      }.sum
+    val t = spark.read.format("graft").load(r)
+    val host1 = "https://host-1.example.com/"
+    assertNoBroadcast("selective")(planOf(t.where(col("url").startsWith(host1) &&
+      col("lang") === "en").select(col("url"))))
+    assert(GraftDataSource.planStatsFor(r).get.prunedGroupKeys.isDefined)
+    assertNoBroadcast("full")(planOf(t))
+    assertNoBroadcast("top-n")(planOf(t.orderBy(col("url")).limit(5)))
+    assert(GraftDataSource.planStatsFor(r).get.pushedTopN.isDefined)
+    assertNoBroadcast("copy-on-write") {
+      val op = new GraftRowLevelOperation(r,
+        org.apache.spark.sql.connector.write.RowLevelOperation.Command.UPDATE)
+      val builder = op.newScanBuilder(
+        org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+        .asInstanceOf[GraftCowScanBuilder]
+      builder.pushFilters(Array(org.apache.spark.sql.sources.StringStartsWith("url", host1)))
+      val cow = builder.build().toBatch
+      cow.createReaderFactory()
+      cow.planInputPartitions().length
+    }
+    assertNoBroadcast("micro-batch") {
+      val stream = new GraftMicroBatchStream(r, t.select(col("url")).schema, "url",
+        Seq(DecodeJob.StrPrefix("url", host1)))
+      stream.createReaderFactory()
+      stream.planInputPartitions(stream.initialOffset(),
+        GraftOffset(graft.sources.SnapshotStore.currentSnapshotId(r).get)).length
     }
   }
 
