@@ -436,36 +436,36 @@ object FsstLite {
   private val LongStore = java.lang.invoke.MethodHandles
     .byteArrayViewVarHandle(classOf[Array[Long]], java.nio.ByteOrder.BIG_ENDIAN)
 
-  /**
-   * Decompress `compressedLen` bytes at `off` into a fresh array. Single pass
-   * into a scratch buffer sized at the 8-bytes-per-code ceiling: every symbol is
-   * written as ONE branchless 8-byte packed store (left-aligned; the cursor
-   * advances by the true length, later codes overwrite the slack), escapes as a
-   * single byte — no growable buffer, no per-symbol length loop. This is the
-   * decode job's hottest kernel now that the reassembly shuffle is gone.
-   */
-  /** Above this compressed size, a pre-pass computes the exact output length:
-    * the 8x scratch ceiling on a multi-MB value (one huge html string) would
-    * otherwise allocate hundreds of MB per task. */
-  private val ExactSizeThreshold = 64 * 1024
+  /** The decoded length of the `compressedLen` codes at `off`: the pre-pass
+    * that sizes a decode buffer. A trailing escape counts one byte;
+    * [[decompressInto]] rejects it. */
+  def decodedLength(table: Table, buf: Array[Byte], off: Int, compressedLen: Int): Long = {
+    val symLen = table.symLen
+    val end = off + compressedLen
+    var n = 0L
+    var i = off
+    while (i < end) {
+      val b = buf(i) & 0xff
+      if (b == Escape) { n += 1; i += 2 } else { n += symLen(b); i += 1 }
+    }
+    n
+  }
 
-  def decompress(table: Table, buf: Array[Byte], off: Int, compressedLen: Int): Array[Byte] = {
+  /**
+   * Decompress the `compressedLen` codes at `off` into `out` from `outOff`;
+   * returns the offset after the value. Single pass: every symbol is written
+   * as ONE branchless 8-byte packed store (left-aligned; the cursor advances
+   * by the true length, later codes overwrite the slack), escapes as a single
+   * byte. `out` must hold [[decodedLength]] bytes plus 8 of slack from
+   * `outOff`. This is the read path's hottest kernel: a block decodes all its
+   * values into one buffer ([[StringBlockCodec.decodeSlices]]).
+   */
+  def decompressInto(table: Table, buf: Array[Byte], off: Int, compressedLen: Int,
+      out: Array[Byte], outOff: Int): Int = {
     val symPacked = table.symPacked
     val symLen = table.symLen
     val end = off + compressedLen
-    val cap =
-      if (compressedLen <= ExactSizeThreshold) compressedLen * 8 + 8
-      else {
-        var n = 0
-        var i = off
-        while (i < end) {
-          val b = buf(i) & 0xff
-          if (b == Escape) { n += 1; i += 2 } else { n += symLen(b); i += 1 }
-        }
-        n + 8 // +8 slack keeps the branchless packed store safe at the tail
-      }
-    val tmp = new Array[Byte](cap)
-    var o = 0
+    var o = outOff
     var i = off
     while (i < end) {
       val b = buf(i) & 0xff
@@ -474,13 +474,21 @@ object FsstLite {
         // NEXT string's payload (shared block buffer) — corrupt, must throw
         if (i + 1 >= end)
           throw new IllegalArgumentException("corrupt FSST payload: dangling escape")
-        tmp(o) = buf(i + 1); o += 1; i += 2
+        out(o) = buf(i + 1); o += 1; i += 2
       } else {
-        LongStore.set(tmp, o, symPacked(b))
+        LongStore.set(out, o, symPacked(b))
         o += symLen(b)
         i += 1
       }
     }
-    java.util.Arrays.copyOf(tmp, o)
+    o
+  }
+
+  /** Decompress one value into a fresh array of its exact length. */
+  def decompress(table: Table, buf: Array[Byte], off: Int, compressedLen: Int): Array[Byte] = {
+    val n = decodedLength(table, buf, off, compressedLen)
+    require(n <= Int.MaxValue - 8, s"FSST value of $n bytes exceeds an array")
+    val tmp = new Array[Byte](n.toInt + 8)
+    java.util.Arrays.copyOf(tmp, decompressInto(table, buf, off, compressedLen, tmp, 0))
   }
 }

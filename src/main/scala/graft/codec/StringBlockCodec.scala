@@ -32,6 +32,9 @@ object StringBlockCodec {
 
   private val NullableFlag = 0x80
 
+  /** Payload bytes an FSST decode samples to size its output buffer. */
+  private val SizingSampleBytes = 4096
+
   def encodeStrings(values: Array[String]): Array[Byte] =
     encode(values.map(s => if (s == null) null else s.getBytes(StandardCharsets.UTF_8)))
 
@@ -180,7 +183,29 @@ object StringBlockCodec {
     }
   }
 
-  def decode(block: Array[Byte]): Array[Array[Byte]] =
+  /** A decoded string block as slices of one buffer: value `i` is the
+    * `lens(i)` bytes of `buf` at `offs(i)`, or null when `lens(i)` is
+    * negative. Readers wrap or copy values straight from `buf`. */
+  final class Slices(val buf: Array[Byte], val offs: Array[Int], val lens: Array[Int]) {
+    def length: Int = lens.length
+    /** Value `i` as its own array (null for a null value). */
+    def bytes(i: Int): Array[Byte] =
+      if (lens(i) < 0) null else java.util.Arrays.copyOfRange(buf, offs(i), offs(i) + lens(i))
+  }
+
+  /** Every value of the block as its own array. */
+  def decode(block: Array[Byte]): Array[Array[Byte]] = {
+    val s = decodeSlices(block)
+    val out = new Array[Array[Byte]](s.length)
+    var i = 0
+    while (i < out.length) { out(i) = s.bytes(i); i += 1 }
+    out
+  }
+
+  /** The block's values as [[Slices]]: plain values stay in `block`, a dict
+    * block's values in its dictionary, and an FSST block decodes into one
+    * buffer, sized by a pre-pass over a sample of its codes. */
+  def decodeSlices(block: Array[Byte]): Slices =
     try decodeImpl(block)
     catch {
       case e: IntBlockCodec.CorruptBlockException => throw e
@@ -195,83 +220,108 @@ object StringBlockCodec {
           s"corrupt string block: ${e.getMessage}", e)
     }
 
-  private def decodeImpl(block: Array[Byte]): Array[Array[Byte]] = {
+  private def decodeImpl(block: Array[Byte]): Slices = {
     val c = new ByteCursor(block)
     require(c.u8() == MAGIC0 && c.u8() == MAGIC1, "bad string block magic")
     val codecId = c.u8()
     val n = c.i32()
     if (n < 0 || n > IntBlockCodec.MaxBlockValues)
       throw new IntBlockCodec.CorruptBlockException(s"implausible string block count $n", null)
+    val offs = new Array[Int](n)
+    val lens = new Array[Int](n)
     if ((codecId & NullableFlag) != 0) {
       val (voff, vlen) = c.sizedSlice()
       require(vlen >= (n + 7) / 8, "truncated validity bitmap")
       val (ioff, ilen) = c.sizedSlice()
-      val inner = decode(java.util.Arrays.copyOfRange(c.buf, ioff, ioff + ilen))
-      val out = new Array[Array[Byte]](n)
+      val inner = decodeSlices(java.util.Arrays.copyOfRange(c.buf, ioff, ioff + ilen))
       var j = 0
       var i = 0
       while (i < n) {
-        if (((c.buf(voff + (i >> 3)) >> (i & 7)) & 1) == 1) { out(i) = inner(j); j += 1 }
+        if (((c.buf(voff + (i >> 3)) >> (i & 7)) & 1) == 1) {
+          offs(i) = inner.offs(j); lens(i) = inner.lens(j); j += 1
+        } else lens(i) = -1
         i += 1
       }
-      return out
+      return new Slices(inner.buf, offs, lens)
     }
     codecId match {
       case ID_PLAIN =>
         val (lo, ll) = c.sizedSlice()
         val lengths = IntBlockCodec.decode(java.util.Arrays.copyOfRange(c.buf, lo, lo + ll))
         val (po, plen) = c.sizedSlice()
-        val out = new Array[Array[Byte]](n)
         val payloadEnd = po + plen
         var off = po
         var i = 0
         while (i < n) {
-          val len = lengths(i).toInt
-          // a corrupt length must throw, not zero-pad-allocate past the payload
-          // (Arrays.copyOfRange pads when `to` exceeds the source)
+          val len = lengths(i)
+          // a corrupt length must throw, not slice past the payload
           if (len < 0 || len > payloadEnd - off)
             throw new IntBlockCodec.CorruptBlockException(
               s"corrupt string length $len at payload offset ${off - po}", null)
-          out(i) = java.util.Arrays.copyOfRange(c.buf, off, off + len)
-          off += len
+          offs(i) = off; lens(i) = len.toInt
+          off += len.toInt
           i += 1
         }
-        out
+        new Slices(c.buf, offs, lens)
 
       case ID_DICT =>
         val (doff, dlen) = c.sizedSlice()
-        val dict = decode(java.util.Arrays.copyOfRange(c.buf, doff, doff + dlen))
+        val dict = decodeSlices(java.util.Arrays.copyOfRange(c.buf, doff, doff + dlen))
         val (io, il) = c.sizedSlice()
         val codes = IntBlockCodec.decode(java.util.Arrays.copyOfRange(c.buf, io, io + il))
-        Array.tabulate(n) { i =>
+        var i = 0
+        while (i < n) {
           val code = codes(i)
           // bound-check the LONG (same aliasing hole as the int-dict path:
           // .toInt mapped corrupt codes >= 2^32 onto valid slots silently)
           if (code < 0L || code >= dict.length)
             throw new IntBlockCodec.CorruptBlockException(
               s"corrupt string dict code $code (card ${dict.length})", null)
-          dict(code.toInt)
+          offs(i) = dict.offs(code.toInt); lens(i) = dict.lens(code.toInt)
+          i += 1
         }
+        new Slices(dict.buf, offs, lens)
 
       case ID_FSST =>
         val table = FsstLite.deserializeTable(c)
         val (lo, ll) = c.sizedSlice()
         val compLens = IntBlockCodec.decode(java.util.Arrays.copyOfRange(c.buf, lo, lo + ll))
         val (po, plen) = c.sizedSlice()
-        val out = new Array[Array[Byte]](n)
         val payloadEnd = po + plen
+        // one output buffer, sized by a pre-pass over the payload's first
+        // codes (a pass over all of them cost as much as the decode) and
+        // grown when the rest decodes longer; every value is checked to lie in
+        // the payload first, and a code decodes to at most 8 bytes, so the
+        // buffer stays bounded by 8x the block's own size
+        val sample = math.min(plen, SizingSampleBytes)
+        val sampled = FsstLite.decodedLength(table, c.buf, po, sample)
+        var out = new Array[Byte](
+          math.min(sampled.toDouble / math.max(sample, 1) * 1.25 * plen + 64, plen * 8.0 + 8).toInt)
+        var o = 0
         var off = po
         var i = 0
         while (i < n) {
-          val len = compLens(i).toInt
+          val len = compLens(i)
           if (len < 0 || len > payloadEnd - off)
             throw new IntBlockCodec.CorruptBlockException(
               s"corrupt compressed length $len at payload offset ${off - po}", null)
-          out(i) = FsstLite.decompress(table, c.buf, off, len)
-          off += len
+          // +8: the packed 8-byte symbol store may run past the value's end
+          val need = o + len * 8 + 8
+          if (need > out.length) {
+            if (need > Int.MaxValue - 8)
+              throw new IntBlockCodec.CorruptBlockException(
+                s"string block needs a $need-byte decode buffer, more than one array holds", null)
+            out = java.util.Arrays.copyOf(out,
+              math.max(math.min(out.length * 2L, math.min(plen * 8L + 8, Int.MaxValue - 8L)),
+                need).toInt)
+          }
+          val end = FsstLite.decompressInto(table, c.buf, off, len.toInt, out, o)
+          offs(i) = o; lens(i) = end - o
+          o = end
+          off += len.toInt
           i += 1
         }
-        out
+        new Slices(out, offs, lens)
 
       case other => throw new IllegalArgumentException(s"unknown string codec id $other")
     }

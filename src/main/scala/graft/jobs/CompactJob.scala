@@ -9,7 +9,7 @@ import graft.sources.SnapshotStore
  * ones. Streaming encode gives every micro-batch its own part-id namespace
  * ([[graft.streaming.StreamingEncode.encodeStream]]), so a long-running stream
  * accumulates many sub-block-size parts whose per-part overhead (manifest rows,
- * tiny parquet files, FSST tables per small block) degrades scans.
+ * tiny block files, FSST tables per small block) degrades scans.
  *
  * The job decodes the small parts, re-range-partitions them by url into
  * `ceil(rows / targetRowsPerPart)` new parts, re-encodes with the SAME kernel the

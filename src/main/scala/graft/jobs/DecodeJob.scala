@@ -34,32 +34,44 @@ object DecodeJob {
     else df.join(broadcast(partIds.toDF("part_id")), Seq("part_id"), "left_semi")
   }
 
-  /** Dirs and live part ids must come from ONE manifest read — re-reading the
+  /** The [[BlockRow]]s of `entries`' parts. A native block file is read
+    * through [[NativeBlocksRelation]]: its footer, and its `encoded` bytes
+    * only when the query selects that column, so the level-2 planning jobs
+    * read footers alone. Parts written before native files are read from
+    * their data dirs' parquet files, restricted to the live part ids. Dirs
+    * and live part ids must come from ONE manifest read — re-reading the
     * pointer could mix snapshot N's parts with snapshot N+1's dirs when a
     * concurrent compaction commits between the reads. */
   private[graft] def fromEntries(spark: SparkSession, root: String,
                           entries: Seq[SnapshotStore.PartEntry]) = {
-    if (entries.isEmpty) {
-      // legal empty-ENTRIES snapshot (created-but-unloaded table, truncate,
-      // all-matched DELETE): a correctly-typed empty blocks scan lets every
-      // downstream path (metadata scans, stats) yield its natural
-      // zero-row/zero-count result (spark.read.parquet cannot take zero paths)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.Encoders.product[BlockRow].schema)
-    } else {
-      val dirs = entries.map(_.dataDir).distinct
-        .map(d => java.nio.file.Paths.get(root, d).toString)
-      partsOnly(spark.read.parquet(dirs: _*), entries.map(_.partId))
-    }
+    val (native, legacy) = entries.partition(_.file.isDefined)
+    // native first: a union takes the first side's column order, BlockRow's.
+    // An empty snapshot (created-but-unloaded table, truncate, all-matched
+    // DELETE) reads as the empty relation, correctly typed
+    val nativeDf =
+      if (native.isEmpty && legacy.nonEmpty) None
+      else Some(spark.baseRelationToDataFrame(NativeBlocksRelation(spark.sqlContext,
+        native.map(e => (e.filePath(root).get, e.fileLen, e.partId)).toArray,
+        graft.sources.v2.HadoopSettings(spark))))
+    val legacyDf =
+      if (legacy.isEmpty) None
+      else {
+        val dirs = legacy.map(_.dataDir).distinct
+          .map(d => java.nio.file.Paths.get(root, d).toString)
+        Some(partsOnly(spark.read.parquet(dirs: _*), legacy.map(_.partId)))
+      }
+    (nativeDf ++ legacyDf).reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   /**
-   * Read the current snapshot's blocks as a DataFrame, restricted to the
-   * manifest's LIVE part ids. The restriction is load-bearing, not belt-and-
-   * braces: a partial compaction replaces only some parts of a shared data dir,
-   * so the dir stays referenced via the kept parts — reading it whole would
-   * return the replaced parts' blocks from the old dir AND from the compacted
-   * copy (every such row decoded twice).
+   * Read the current snapshot's blocks as a DataFrame of [[BlockRow]]s,
+   * restricted to the manifest's LIVE part ids. A native block file holds
+   * one part, so this reads exactly the named files; for parts written
+   * before native files the restriction is load-bearing: a partial
+   * compaction replaces only some parts of a shared data dir, so the dir
+   * stays referenced via the kept parts — reading it whole would return the
+   * replaced parts' blocks from the old dir AND from the compacted copy.
+   * Selecting no `encoded` reads only footers.
    */
   def blocks(spark: SparkSession, root: String) = {
     requireStore(root)
@@ -211,7 +223,7 @@ object DecodeJob {
   /**
    * Group keys whose metadata admits ALL predicates — the set of (part_id,
    * block_seq) that must be decoded. A column-pruned metadata-only scan
-   * (parquet reads the small metadata columns, never `encoded`), one key
+   * (block-file footers, never `encoded`), one key
    * DataFrame per predicate, intersected. Manifest-scale output.
    */
   def matchingGroupKeys(spark: SparkSession, root: String,
@@ -587,7 +599,7 @@ object DecodeJob {
    * Metadata-only aggregate fast path — the classic snapshot-store trick:
    * `count(*)` comes from the manifest's per-part `nRows` (pure driver
    * arithmetic, zero file IO) and `min/max(warc_ts)` from the block min/max
-   * metadata columns (a column-pruned parquet scan that NEVER touches the
+   * metadata columns (a column-pruned footer scan that NEVER touches the
    * multi-MB `encoded` column — at 100 TB that is KBs of metadata instead of
    * decompressing every block). One row: (row_count, min_warc_ts_us,
    * max_warc_ts_us), micros so no timezone coupling. Exactness: every committed
@@ -650,8 +662,8 @@ object DecodeJob {
   /**
    * Projected decode: decode ONLY the requested columns. The V2 scan prunes
    * to these columns, so blocks of the others (e.g. multi-KB text/html blocks
-   * when only url+lang are asked for) are skipped by parquet row-group
-   * statistics before any IO or decompression.
+   * when only url+lang are asked for) are never read: the block files'
+   * footers address each column's blocks.
    *
    * Output schema: one field per requested column in request order — `warc_ts`
    * as nullable epoch-micros LongType, `html` as BinaryType (opaque bytes, no
@@ -730,5 +742,58 @@ object DecodeJob {
       println(f"decoded rows=$manifestRows decode_secs_min=${times.min}%.3f")
     }
     spark.stop()
+  }
+}
+
+/** The [[BlockRow]]s of native block files ([[graft.sources.v2.BlockFile]]),
+  * given as (path, manifest length, part id). One task reads a slice of the
+  * files: each file's footer, and its blocks only when the scan selects
+  * `encoded`. Filters on `column` (=, IN) are applied here, exactly, so the
+  * rows of other columns never reach a filter Spark evaluates above. An
+  * empty file list is an empty relation. */
+private[graft] final case class NativeBlocksRelation(
+    sqlContext: org.apache.spark.sql.SQLContext,
+    files: Array[(String, Long, Int)],
+    settings: graft.sources.v2.HadoopSettings)
+    extends org.apache.spark.sql.sources.BaseRelation
+    with org.apache.spark.sql.sources.PrunedFilteredScan {
+  import org.apache.spark.sql.sources.{EqualTo, Filter, In}
+
+  override val schema: org.apache.spark.sql.types.StructType =
+    Encoders.product[BlockRow].schema
+
+  /** The columns a filter restricts `column` to, when this relation handles it. */
+  private def columnsOf(f: Filter): Option[Set[String]] = f match {
+    case EqualTo("column", v: String) => Some(Set(v))
+    case In("column", vs) if vs.forall(_.isInstanceOf[String]) =>
+      Some(vs.iterator.map(_.asInstanceOf[String]).toSet)
+    case _ => None
+  }
+
+  override def unhandledFilters(filters: Array[Filter]): Array[Filter] =
+    filters.filter(columnsOf(_).isEmpty)
+
+  override def buildScan(requiredColumns: Array[String], filters: Array[Filter])
+      : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
+    val fields = requiredColumns.map(schema.fieldIndex)
+    val withEncoded = requiredColumns.contains("encoded")
+    val columns: Option[Set[String]] = filters.flatMap(columnsOf).reduceOption(_ intersect _)
+    val s = settings
+    val sc = sqlContext.sparkContext
+    sc.parallelize(files.toSeq, math.max(1, math.min(files.length, sc.defaultParallelism)))
+      .mapPartitions { it =>
+        val conf = s.conf()
+        it.flatMap { case (path, len, pid) =>
+          graft.sources.v2.BlockFile.readAll(path, len, pid, conf, withEncoded,
+              c => columns.forall(_(c))).iterator
+            .map { b =>
+              val all = b.productIterator.map {
+                case o: Option[_] => o.getOrElse(null)
+                case v => v
+              }.toArray
+              org.apache.spark.sql.Row.fromSeq(fields.map(all(_)).toSeq)
+            }
+        }
+      }
   }
 }

@@ -33,8 +33,8 @@ import graft.sources.v2.GraftDataSource.PageSchema
  *    pruning) needs this to know whether a group can contribute null rows.
  *    Stores written before this column existed read it as null = unknown,
  *    which every consumer must treat as "may contain nulls" (sound).
- * [[graft.plans.BlockMinMaxPruneRule]] conjoins these onto decode filters so parquet
- * row-group stats skip blocks before any decompression.
+ * [[graft.plans.BlockMinMaxPruneRule]] conjoins these onto decode filters so
+ * blocks are skipped by their metadata before any decompression.
  */
 final case class BlockRow(
     part_id: Int,

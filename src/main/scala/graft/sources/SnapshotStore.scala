@@ -11,13 +11,15 @@ import scala.jdk.CollectionConverters._
  * (SURVEY.md §7.1). Behind this interface a real Iceberg catalog can drop in.
  *
  * Layout under `root/`:
- *   data/<commit-uuid>/...parquet      — immutable block data files
+ *   data/<commit-uuid>/p<part>-task-<attempt>.graft — immutable block files
+ *                                        ([[graft.sources.v2.BlockFile]])
  *   manifests/<snapshotId>.jsonl       — full manifest: one line per committed part
  *   SNAPSHOT                           — pointer file, swapped atomically (tmp+rename)
  *
  * A manifest line is one JSON object ([[PartEntry]]):
  * {{{
- * {"part_id":3,"data_dir":"data/<uuid>","n_rows":2500,"orig_bytes":..,"enc_bytes":..,
+ * {"part_id":3,"data_dir":"data/<uuid>","file":"p3-task-17.graft","file_len":901234,
+ *  "n_rows":2500,"orig_bytes":..,"enc_bytes":..,
  *  "stats":{"n_groups":1,"columns":{
  *     "url":{"n_nulls":0,"str_min":"https://a/","str_max":"https://b/"},
  *     "warc_ts":{"n_nulls":0,"min":1700000000000000,"max":1700000999000000},
@@ -34,6 +36,12 @@ import scala.jdk.CollectionConverters._
  * absent, each meaning unknown; lines written before `sum` and
  * `str_dict_counts` existed parse them as absent. Strings are JSON-escaped,
  * so bounds may hold any text.
+ *
+ * `file` and `file_len` name the part's one native block file in `data_dir`
+ * and its length, so a scan plans without listing the dir and opens the file
+ * without a status call. A line without them is a part written before native
+ * block files existed: its parquet files are found by listing `data_dir`
+ * until a compaction rewrites the part.
  *
  * A killed job leaves at most an orphaned data dir (never referenced by any
  * manifest): re-running resumes from the last committed snapshot's part set.
@@ -79,7 +87,10 @@ object SnapshotStore {
 
   /** Per-partition lineage row (one work unit == one part_id). `stats` is
     * None on entries committed before per-part stats existed: no stats =
-    * unbounded, so such parts always survive manifest-level pruning. */
+    * unbounded, so such parts always survive manifest-level pruning. `file`
+    * names the part's native block file in `dataDir`, `fileLen` its length;
+    * None marks a part whose parquet block files predate them (found by
+    * listing `dataDir`). */
   final case class PartEntry(
       partId: Int,
       dataDir: String, // relative to root
@@ -87,7 +98,13 @@ object SnapshotStore {
       origBytes: Long,
       encBytes: Long,
       codecsJson: String,
-      stats: Option[PartStats] = None)
+      stats: Option[PartStats] = None,
+      file: Option[String] = None,
+      fileLen: Long = 0L) {
+    /** The path of the part's native block file under `root`, when named. */
+    def filePath(root: String): Option[String] =
+      file.map(f => s"${root.stripSuffix("/")}/$dataDir/$f")
+  }
 
   private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
 
@@ -98,6 +115,10 @@ object SnapshotStore {
     g.writeStartObject()
     g.writeNumberField("part_id", e.partId)
     g.writeStringField("data_dir", e.dataDir)
+    e.file.foreach { f =>
+      g.writeStringField("file", f)
+      g.writeNumberField("file_len", e.fileLen)
+    }
     g.writeNumberField("n_rows", e.nRows)
     g.writeNumberField("orig_bytes", e.origBytes)
     g.writeNumberField("enc_bytes", e.encBytes)
@@ -164,7 +185,9 @@ object SnapshotStore {
       n.path("n_rows").asLong(0L), n.path("orig_bytes").asLong(0L),
       n.path("enc_bytes").asLong(0L),
       Option(n.get("codecs")).map(_.toString).getOrElse("{}"),
-      Option(n.get("stats")).filter(_.isObject).map(parseStats))
+      Option(n.get("stats")).filter(_.isObject).map(parseStats),
+      Option(n.get("file")).filter(_.isTextual).map(_.asText),
+      n.path("file_len").asLong(0L))
   }
 
   def snapshotPointer(root: String): Path = Paths.get(root, "SNAPSHOT")

@@ -43,11 +43,10 @@ import graft.sources.SnapshotStore
  *
  * What pushes down:
  *  - **Required columns** ([[SupportsPushDownRequiredColumns]]): only the
- *    requested page columns' blocks are read — the `column` In-filter reaches
- *    parquet row-group statistics, so text/html blocks are skipped before any IO
- *    when only `url, lang` are selected. An EMPTY projection (`count(*)`)
- *    reads only the `n` metadata field of one reference column — no `encoded`
- *    bytes at all.
+ *    requested page columns' blocks are read — a native block file's footer
+ *    addresses each block, so text/html bytes never leave disk when only
+ *    `url, lang` are selected. An EMPTY projection (`count(*)`) reads only
+ *    the footers' row counts — no `encoded` bytes at all.
  *  - **Filters** ([[SupportsPushDownFilters]]): EqualTo/In/StringStartsWith on
  *    string columns and =/</<=/>/>= on `warc_ts` map onto the block-metadata
  *    predicates of [[DecodeJob]] (block_str_min/max/dict, block_min/max), pruning
@@ -63,12 +62,12 @@ import graft.sources.SnapshotStore
  *  runs the block-metadata job over the surviving parts only when it can
  *  prune more — and their selectivity gate drops pruning entirely when the
  *  predicate is not selective — no unbounded driver collect. Each
- *  [[InputPartition]] is a bin of whole block parquet files; groups never
- *  straddle files (each write task writes its one part's groups whole), so
- *  the reader assembles consecutive records with zero shuffle and no split
- *  repair, and fails loudly on a group that is not whole
- *  ([[BlockGroupStream]]). The [[DecodeJob]] API is a thin wrapper over this
- *  scan.
+ *  [[InputPartition]] is a bin of whole block files, named by the manifest
+ *  ([[GraftDataSource.packPartitions]]); groups never straddle files (each
+ *  write task writes its one part's groups whole), so the reader needs zero
+ *  shuffle and no split repair, and fails loudly on a group that is not
+ *  whole ([[BlockGroupStream]]). The [[DecodeJob]] API is a thin wrapper
+ *  over this scan.
  */
 class GraftDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft"
@@ -180,7 +179,8 @@ object GraftDataSource {
   def planStatsFor(root: String): Option[PlanStats] =
     planStatsByRoot.synchronized(Option(planStatsByRoot.get(root)))
 
-  /** Per-task parquet In-filter value budget: row-group stats evaluation of an
+  /** Per-task parquet In-filter value budget (files written before native
+    * block files): row-group stats evaluation of an
     * In probes the value set per row group, so a huge set costs more than the
     * IO it saves; past the budget only the part_id component is pushed (still
     * row-group pruning on dead parts) and the reader's exact `liveGroup` check
@@ -189,92 +189,120 @@ object GraftDataSource {
   private[v2] var InFilterMaxKeys = 65536
 
   /**
-   * Bin-pack the data files of `entries` into [[GraftInputPartition]]s using
+   * Bin-pack the block files of `entries` into [[GraftInputPartition]]s using
    * Spark's own file-partition formula (maxSplitBytes/openCost/minPartitionNum
-   * — one task per file measured 3× slower on many-file stores). Bins stay
-   * within one dir, whose sorted live part ids gate the reader exactly.
-   * Shared by the batch [[GraftScan]], the copy-on-write [[GraftCowScan]] and
-   * the [[GraftMicroBatchStream]] (which passes only the parts NEW in its
-   * offset range).
+   * — one task per file measured 3× slower on many-file stores). Shared by the
+   * batch [[GraftScan]], the copy-on-write [[GraftCowScan]] and the
+   * [[GraftMicroBatchStream]] (which passes only the parts NEW in its offset
+   * range).
+   *
+   * An entry that names its native file ([[SnapshotStore.PartEntry.file]])
+   * is planned from the manifest alone: no directory is listed and no conf is
+   * built, and a bin may hold files of several data dirs. Each partition
+   * carries its files' paths, lengths and (in the names) parts, and the
+   * sorted live ids of those parts. Entries written before native files keep
+   * the per-dir listing ([[listLegacy]]), with `settings`' conf, in bins
+   * that stay within one dir.
    *
    * `keys` are the scan's planned `(part_id, block_seq)` group keys, or None
    * for no pruning. Each partition carries the keys of its own files' parts
    * only, so its payload is bounded by its files' groups however many groups
-   * the whole scan keeps. Directories are listed with `conf`, the scan's one
-   * conf; the partitions carry none. Returns (partitions, total file count).
+   * the whole scan keeps. Returns (partitions, total file count).
    */
   private[v2] def packPartitions(spark: SparkSession, root: String,
       entries: Seq[SnapshotStore.PartEntry], readSchema: StructType,
-      refColumn: String, keys: Option[Array[(Int, Int)]], conf: Configuration,
+      refColumn: String, keys: Option[Array[(Int, Int)]], settings: HadoopSettings,
       columnar: Boolean, limit: Int): (Array[InputPartition], Int) = {
-    val liveByDir: Map[String, Array[Int]] = entries.groupBy(_.dataDir)
-      .map { case (d, es) => d -> es.map(_.partId).sorted.toArray }
     val keyParts: Option[Set[Int]] = keys.map(_.iterator.map(_._1).toSet)
     val packedKeys = keys.map(_.map(k => DecodeJob.packKey(k._1, k._2)).sorted)
-    def wanted(d: String, pid: Int): Boolean =
-      java.util.Arrays.binarySearch(liveByDir(d), pid) >= 0 && keyParts.forall(_(pid))
-    // manifest-level file pruning: skip whole data dirs owning no surviving part
-    val dirs = entries.map(_.dataDir).distinct
-      .filter(d => keyParts.forall(kp => liveByDir(d).exists(kp)))
+    val (native, legacy) = entries.partition(_.file.isDefined)
+    // manifest-level file pruning: a part this scan reads no group of is
+    // never opened
+    val nativeFiles = native.filter(e => keyParts.forall(_(e.partId)))
+    val legacyFiles = if (legacy.isEmpty) Seq.empty else listLegacy(root, legacy, keyParts, settings)
     val sqlConf = spark.sessionState.conf
     val maxBytes = sqlConf.filesMaxPartitionBytes
     val openCost = sqlConf.filesOpenCostInBytes
+    val totalBytes = nativeFiles.iterator.map(_.fileLen + openCost).sum +
+      legacyFiles.iterator.flatMap(_._2).map(_._2 + openCost).sum
+    val minPartitionNum = sqlConf.filesMinPartitionNum
+      .getOrElse(spark.sparkContext.defaultParallelism)
+    val bytesPerCore = totalBytes / math.max(minPartitionNum, 1)
+    val target = math.min(maxBytes, math.max(openCost, bytesPerCore))
+    /** Next-fit bins of `files` (largest first) up to `target` bytes each. */
+    def bins[F](files: Seq[F])(len: F => Long): Seq[Seq[F]] = {
+      val out = scala.collection.mutable.ArrayBuffer[Seq[F]]()
+      var bin = Vector.empty[F]
+      var binBytes = 0L
+      files.sortBy(f => -len(f)).foreach { f =>
+        if (binBytes > 0 && binBytes + len(f) + openCost > target) {
+          out += bin; bin = Vector.empty; binBytes = 0L
+        }
+        bin :+= f; binBytes += len(f) + openCost
+      }
+      if (bin.nonEmpty) out += bin
+      out.toSeq
+    }
+    def partition(files: Seq[(String, Long)], parts: Array[Int]): InputPartition =
+      GraftInputPartition(files.map(_._1).toArray, files.map(_._2).toArray, readSchema,
+        refColumn, parts, packedKeys.map(keysOfParts(_, parts)).orNull, columnar, limit)
+    val nativeBins = bins(nativeFiles)(_.fileLen).map { b =>
+      partition(b.map(e => (e.filePath(root).get, e.fileLen)), b.map(_.partId).sorted.toArray)
+    }
+    val legacyBins = legacyFiles.flatMap { case (dirParts, files) =>
+      bins(files.toSeq)(_._2).map { b =>
+        val pids = b.map(f => GraftDataWriter.partIdOf(new Path(f._1).getName))
+        // a file named without its part id may hold any live part of the dir
+        partition(b, if (pids.forall(_.isDefined)) pids.flatten.distinct.sorted.toArray
+          else dirParts)
+      }
+    }
+    ((nativeBins ++ legacyBins).toArray,
+      nativeFiles.length + legacyFiles.iterator.map(_._2.length).sum)
+  }
+
+  /** The parquet block files of `entries` (all written before native block
+    * files), by listing their data dirs: per dir, its sorted live part ids
+    * and its (path, length) files of parts in `keyParts`. A file whose name
+    * carries its part id is skipped unopened when this scan reads no group of
+    * that part. */
+  private def listLegacy(root: String, entries: Seq[SnapshotStore.PartEntry],
+      keyParts: Option[Set[Int]], settings: HadoopSettings)
+      : Seq[(Array[Int], Array[(String, Long)])] = {
+    val liveByDir: Map[String, Array[Int]] = entries.groupBy(_.dataDir)
+      .map { case (d, es) => d -> es.map(_.partId).sorted.toArray }
+    def wanted(d: String, pid: Int): Boolean =
+      java.util.Arrays.binarySearch(liveByDir(d), pid) >= 0 && keyParts.forall(_(pid))
+    // skip whole data dirs owning no surviving part
+    val dirs = entries.map(_.dataDir).distinct
+      .filter(d => keyParts.forall(kp => liveByDir(d).exists(kp)))
+    if (dirs.isEmpty) return Seq.empty
+    val conf = settings.conf()
     // PARALLEL dir listing past MaxSerialListingDirs: a long-streamed store
     // holds one data dir per epoch, and serial listStatus (one RPC per dir)
     // would put minutes of driver-side planning in front of a scan over
     // thousands of epochs on object storage. Below it, starting the pool's
     // threads costs more than the listings they overlap. Bounded pool;
     // listing order is restored by the map.
-    val allFiles: Seq[(String, Array[(String, Long)])] = {
-      def list(d: String): Array[(String, Long)] = {
-        val dirPath = new Path(new Path(root), d)
-        val fs = dirPath.getFileSystem(conf)
-        // a file whose name carries its part id is skipped unopened when this
-        // scan reads no group of that part
-        fs.listStatus(dirPath)
-          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet") &&
-            !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".") &&
-            GraftDataWriter.partIdOf(st.getPath.getName).forall(wanted(d, _)))
-          .map(st => (st.getPath.toString, st.getLen))
-      }
-      if (dirs.size <= MaxSerialListingDirs) dirs.map(d => d -> list(d))
+    def list(d: String): Array[(String, Long)] = {
+      val dirPath = new Path(new Path(root), d)
+      dirPath.getFileSystem(conf).listStatus(dirPath)
+        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet") &&
+          !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".") &&
+          GraftDataWriter.partIdOf(st.getPath.getName).forall(wanted(d, _)))
+        .map(st => (st.getPath.toString, st.getLen))
+    }
+    val listed =
+      if (dirs.size <= MaxSerialListingDirs) dirs.map(d => list(d))
       else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(dirs.size, 16))
         try {
-          val futs = dirs.map(d => d -> pool.submit(
-            new java.util.concurrent.Callable[Array[(String, Long)]] {
-              def call(): Array[(String, Long)] = list(d)
-            }))
-          futs.map { case (d, f) => d -> f.get() }
+          dirs.map(d => pool.submit(new java.util.concurrent.Callable[Array[(String, Long)]] {
+            def call(): Array[(String, Long)] = list(d)
+          })).map(_.get())
         } finally pool.shutdown()
       }
-    }
-    val totalBytes = allFiles.iterator.flatMap(_._2).map(_._2 + openCost).sum
-    val minPartitionNum = sqlConf.filesMinPartitionNum
-      .getOrElse(spark.sparkContext.defaultParallelism)
-    val bytesPerCore = totalBytes / math.max(minPartitionNum, 1)
-    val target = math.min(maxBytes, math.max(openCost, bytesPerCore))
-    val partitions = allFiles.flatMap { case (d, files) =>
-      val bins = scala.collection.mutable.ArrayBuffer[scala.collection.mutable.ArrayBuffer[String]]()
-      var bin = scala.collection.mutable.ArrayBuffer[String]()
-      var binBytes = 0L
-      files.sortBy(-_._2).foreach { case (path, len) =>
-        if (binBytes > 0 && binBytes + len + openCost > target) {
-          bins += bin; bin = scala.collection.mutable.ArrayBuffer[String](); binBytes = 0L
-        }
-        bin += path; binBytes += len + openCost
-      }
-      if (bin.nonEmpty) bins += bin
-      bins.map { b =>
-        val pids = b.map(f => GraftDataWriter.partIdOf(new Path(f).getName))
-        // a file named without its part id may hold any live part of the dir
-        val binParts =
-          if (pids.forall(_.isDefined)) pids.flatten.distinct.sorted.toArray else liveByDir(d)
-        GraftInputPartition(b.toArray, readSchema, refColumn, liveByDir(d),
-          packedKeys.map(keysOfParts(_, binParts)).orNull, columnar, limit): InputPartition
-      }
-    }.toArray
-    (partitions, allFiles.iterator.map(_._2.length).sum)
+    dirs.map(liveByDir).zip(listed)
   }
 
   /** Up to this many data dirs a scan lists them one by one, as Spark's file
@@ -944,16 +972,14 @@ final class GraftScan(root: String, snapshotId: Option[Long],
   // ---- the partition plan, memoized per predicate set: Spark plans one scan
   // more than once (before and after runtime filters, and again when
   // adaptive execution re-plans the query). The same predicates reuse the
-  // whole plan: level 2 is a Spark job, and the listing one round trip per
-  // data dir. Changed predicates (a runtime In landed) re-plan ----
+  // whole plan: level 2 is a Spark job, and a pre-native store's listing one
+  // round trip per data dir. Changed predicates (a runtime In landed) re-plan ----
   private val planLock = new Object
   private var planned: (Seq[DecodeJob.BlockPredicate],
     (Array[InputPartition], GraftDataSource.PlanStats)) = null
 
-  /** The session's Hadoop settings, read once per scan; [[listingConf]] is
-    * the one conf this scan builds from them, for its directory listing. */
+  /** The session's Hadoop settings, read once per scan. */
   private lazy val settings = HadoopSettings(SparkSession.active)
-  private lazy val listingConf = settings.conf()
 
   override def readSchema(): StructType = requiredSchema
 
@@ -1037,7 +1063,7 @@ final class GraftScan(root: String, snapshotId: Option[Long],
         s"spark.graft.v2.columnar must be true or false, got '$v'")
     }
     val (partitions, fileCount) = GraftDataSource.packPartitions(spark, root, entries,
-      requiredSchema, tableSchema.fields.head.name, keys, listingConf, columnar,
+      requiredSchema, tableSchema.fields.head.name, keys, settings, columnar,
       pushedLimit.getOrElse(-1))
     (partitions, GraftDataSource.PlanStats(partitions.length, fileCount,
       preds.size, keys.map(_.length), pushedLimit, pushedTopN))
@@ -1062,16 +1088,19 @@ final class GraftScan(root: String, snapshotId: Option[Long],
   }
 }
 
-/** A bin of whole block parquet files from ONE data dir; groups are whole
-  * within each file by construction. Spark serializes every partition once
-  * per task, so it holds only what its files need: the scan's planned keys of
-  * its own files' parts, and no Hadoop conf (the settings ride the
-  * [[GraftReaderFactory]]). */
+/** A bin of whole block files; groups are whole within each file by
+  * construction. Spark serializes every partition once per task, so it holds
+  * only what its files need: their paths and lengths (a native file's name
+  * carries its part), their live parts, the scan's planned keys of those
+  * parts, and no Hadoop conf (the settings ride the [[GraftReaderFactory]]). */
 final case class GraftInputPartition(
     files: Array[String],
+    fileLens: Array[Long],           // each file's length, from the manifest or the listing
     readSchema: StructType,          // required output columns + types, in order
     refColumn: String,               // store's first column: the count-only reference
-    liveParts: Array[Int],           // sorted live part ids of the files' dir
+    // sorted live part ids: of the native files' parts, or of a parquet
+    // bin's whole dir
+    liveParts: Array[Int],
     // sorted planned (part_id<<32|seq) keys of the files' parts, or null = no
     // pruning
     keys: Array[Long],
@@ -1093,7 +1122,8 @@ private final class ProjectingGroupReadSupport(cols: Seq[String]) extends GroupR
   }
 }
 
-/** Reads one block file, projected by [[ProjectingGroupReadSupport]], with
+/** Reads one parquet block file (a store written before native block
+  * files), projected by [[ProjectingGroupReadSupport]], with
   * the conf of the [[InputFile]] it opens. The `Builder(InputFile)`
   * constructor takes that conf as is; the path-based builder builds and reads
   * a default `Configuration` (a classpath scan and XML parse of
@@ -1107,7 +1137,7 @@ private final class BlockFileReaderBuilder(file: InputFile, cols: Seq[String])
 /** The reader factory of every block-file scan ([[GraftScan]],
   * [[GraftCowScan]], [[GraftMicroBatchStream]]). It carries the session's
   * programmatic Hadoop settings ([[HadoopSettings]]), a few entries, not a
-  * broadcast: each reader opens its block files ([[BlockFileReaderBuilder]])
+  * broadcast: each reader opens its block files ([[BlockGroupStream]])
   * from Spark's per-JVM Hadoop conf when that already holds them, else from
   * one overlaid copy per task. Settings from XML resources are the
   * executor's own, as for any Hadoop client. */
@@ -1134,11 +1164,19 @@ final case class GraftReaderFactory(settings: HadoopSettings)
 
 /**
  * Streams a bin of whole block files as LIVE complete (part_id, block_seq)
- * groups: parquet-level filters (column ∈ wanted, part/seq ∈ the partition's
- * planned keys) skip row groups by statistics, consecutive records assemble
- * in place, the group buffer flushes at file boundaries (groups are whole per
- * file). The keys arrive already cut to the bin's own parts, so a task does
- * no slicing. Bounded memory: one 64Ki-row group in flight.
+ * groups, one group in flight. The keys arrive already cut to the bin's own
+ * parts, so a task does no slicing. Every group must hold exactly the
+ * requested columns, or the read fails with the "corrupt or foreign store
+ * layout" IOException.
+ *
+ * A native file ([[BlockFile]]) is opened once: its footer comes from one
+ * positioned read at the manifest's length, and then, for each group the
+ * keys keep, only the requested columns' blocks are read, one seek per run
+ * of adjacent blocks. A count-only read takes the row counts from the footer
+ * and reads no block. A parquet file (a store written before native files)
+ * is read record by record: parquet-level filters (column ∈ wanted,
+ * part/seq ∈ the keys) skip row groups by statistics, and consecutive
+ * records assemble in place.
  */
 private final class BlockGroupStream(p: GraftInputPartition, conf: Configuration,
                                      readCols: Array[String], countOnly: Boolean) {
@@ -1147,21 +1185,135 @@ private final class BlockGroupStream(p: GraftInputPartition, conf: Configuration
 
   private val expected: Set[String] = readCols.toSet
 
+  private val keys: Array[Long] = p.keys // null = no pruning
+
+  @inline private def liveGroup(packed: Long): Boolean = {
+    val pid = (packed >>> 32).toInt
+    java.util.Arrays.binarySearch(p.liveParts, pid) >= 0 &&
+      (keys == null || java.util.Arrays.binarySearch(keys, packed) >= 0)
+  }
+
+  private def layoutError(file: String, packed: Long, cols: Iterable[String]) =
+    new java.io.IOException(
+      s"block group part_id=${(packed >>> 32).toInt} block_seq=${packed.toInt} in " +
+      s"$file has columns ${cols.toSeq.sorted.mkString(",")}, expected " +
+      s"${expected.toSeq.sorted.mkString(",")}: corrupt or foreign store layout")
+
+  /** The live groups of one file, in file order; null at its end. */
+  private trait FileGroups {
+    def next(): GroupData
+    def close(): Unit
+  }
+
+  private final class NativeGroups(file: String, fileLen: Long) extends FileGroups {
+    private val path = new Path(file)
+    private val partId = GraftDataWriter.partIdOf(path.getName).getOrElse(
+      throw new BlockFile.CorruptBlockFileException(file, "its name carries no part id"))
+    private val in = path.getFileSystem(conf).open(path)
+    private val refs =
+      try BlockFile.readFooter(file, in, fileLen, partId)
+      catch { case t: Throwable => in.close(); throw t }
+    private var i = 0
+    private var lastSeq = -1L
+
+    def next(): GroupData = {
+      while (i < refs.length) {
+        val start = i
+        val seq = refs(i).meta.block_seq
+        // groups are written whole and in ascending order: a group seen twice
+        // would otherwise decode its rows twice
+        if (seq <= lastSeq) throw new BlockFile.CorruptBlockFileException(file,
+          s"block group $seq follows group $lastSeq")
+        lastSeq = seq
+        while (i < refs.length && refs(i).meta.block_seq == seq) i += 1
+        val packed = DecodeJob.packKey(partId, seq)
+        if (liveGroup(packed)) {
+          val wanted = refs.slice(start, i).filter(r => expected(r.meta.column))
+          val cols = wanted.map(_.meta.column)
+          if (cols.length != expected.size || cols.toSet != expected)
+            throw layoutError(file, packed, refs.slice(start, i).map(_.meta.column))
+          if (countOnly) return GroupData(Map.empty, wanted(0).meta.n, partId)
+          val bytes = BlockFile.readBlocks(file, in, wanted.toSeq)
+          return GroupData(cols.iterator.zip(bytes.iterator).toMap, wanted(0).meta.n, partId)
+        }
+      }
+      null
+    }
+
+    def close(): Unit = in.close()
+  }
+
+  private final class ParquetGroups(file: String) extends FileGroups {
+    private val reader = new BlockFileReaderBuilder(
+        HadoopInputFile.fromPath(new Path(file), conf), parquetProjection)
+      .withFilter(parquetFilter)
+      .build()
+
+    // one-group lookahead buffer. Emptiness is an EXPLICIT flag, not a
+    // sentinel key: compacted parts live in a negative id namespace, so packed
+    // keys can be any Long (a `bufKey < 0` empty-check silently dropped every
+    // compacted group — all rows of a compacted store lost on the V2 surface)
+    private var bufKey: Long = 0L
+    private var bufHas = false
+    private var bufCols: Map[String, Array[Byte]] = Map.empty
+    private var bufN: Int = 0
+    private var done = false
+
+    private def takeBuffered(): GroupData = {
+      val out =
+        if (!bufHas || !liveGroup(bufKey)) null
+        else if (!countOnly && bufCols.keySet != expected)
+          throw layoutError(file, bufKey, bufCols.keySet)
+        else GroupData(bufCols, bufN, (bufKey >>> 32).toInt)
+      bufHas = false; bufCols = Map.empty; bufN = 0
+      out
+    }
+
+    def next(): GroupData = {
+      while (!done) {
+        val g = reader.read()
+        if (g == null) {
+          // file end: groups are whole per file, so the buffer flushes here
+          // (the same key cannot legally continue in the next file)
+          done = true
+          val out = takeBuffered()
+          if (out != null) return out
+        } else {
+          val packed = DecodeJob.packKey(g.getInteger("part_id", 0),
+            g.getInteger("block_seq", 0))
+          val colName = g.getBinary("column", 0).toStringUsingUTF8
+          val n = g.getInteger("n", 0)
+          val enc = if (countOnly) null else g.getBinary("encoded", 0).getBytes
+          if (!bufHas || packed != bufKey) {
+            val out = takeBuffered()
+            bufKey = packed
+            bufHas = true
+            bufCols = if (countOnly) Map.empty else Map(colName -> enc)
+            bufN = n
+            if (out != null) return out
+          } else if (!countOnly) {
+            bufCols = bufCols.updated(colName, enc)
+          }
+        }
+      }
+      null
+    }
+
+    def close(): Unit = reader.close()
+  }
+
   // projection built inside ReadSupport.init from the file schema the reader
   // already parsed (`encoded` skipped entirely in count-only mode — parquet
   // never touches those pages); a separate footer pre-read just for the
   // schema would double the per-file open round-trips on object storage
-  private val projNames = Seq("part_id", "block_seq", "column", "n") ++
+  private lazy val parquetProjection = Seq("part_id", "block_seq", "column", "n") ++
     (if (countOnly) Seq.empty else Seq("encoded"))
 
-  private val keys: Array[Long] = p.keys // null = no pruning
-
-  private def inFilterMaxKeys: Int = GraftDataSource.InFilterMaxKeys
-
-  private val filter: FilterCompat.Filter = {
+  private lazy val parquetFilter: FilterCompat.Filter = {
     var pred: FilterPredicate =
       FilterApi.in(FilterApi.binaryColumn("column"),
         readCols.map(Binary.fromString).toSet.asJava)
+    val inFilterMaxKeys = GraftDataSource.InFilterMaxKeys
     if (keys != null && keys.length > 0 && keys.length <= inFilterMaxKeys) {
       val pids = keys.map(k => Int.box((k >>> 32).toInt)).toSet.asJava
       val seqs = keys.map(k => Int.box(k.toInt)).toSet.asJava
@@ -1185,94 +1337,31 @@ private final class BlockGroupStream(p: GraftInputPartition, conf: Configuration
     FilterCompat.get(pred)
   }
 
-  private val fileQueue = p.files.iterator
-  private var curFile: String = _
-  private var reader: ParquetReader[Group] = _
-
-  private def openNext(): Boolean = {
-    if (reader != null) { reader.close(); reader = null }
-    if (!fileQueue.hasNext) false
-    else {
-      curFile = fileQueue.next()
-      reader = new BlockFileReaderBuilder(HadoopInputFile.fromPath(new Path(curFile), conf),
-          projNames)
-        .withFilter(filter)
-        .build()
-      true
-    }
-  }
-
-  // one-group lookahead buffer. Emptiness is an EXPLICIT flag, not a sentinel
-  // key: compacted parts live in a negative id namespace, so packed keys can
-  // be any Long (a `bufKey < 0` empty-check silently dropped every compacted
-  // group — all rows of a compacted store lost on the V2 surface)
-  private var bufKey: Long = 0L
-  private var bufHas = false
-  private var bufCols: Map[String, Array[Byte]] = Map.empty
-  private var bufN: Int = 0
-  // a dir with zero surviving keys never plans (defensive: empty In-sets are
+  private val fileIndex = p.files.indices.iterator
+  private var current: FileGroups = _
+  // a bin with zero surviving keys never plans (defensive: empty In-sets are
   // rejected by parquet's FilterApi, so don't build a filter from nothing)
   private var eof = keys != null && keys.length == 0
-
-  @inline private def liveGroup(packed: Long): Boolean = {
-    val pid = (packed >>> 32).toInt
-    java.util.Arrays.binarySearch(p.liveParts, pid) >= 0 &&
-      (keys == null || java.util.Arrays.binarySearch(keys, packed) >= 0)
-  }
-
-  private def takeBuffered(): GroupData = {
-    val out =
-      if (!bufHas || !liveGroup(bufKey)) null
-      else if (!countOnly && bufCols.keySet != expected)
-        throw new java.io.IOException(
-          s"block group part_id=${(bufKey >>> 32).toInt} block_seq=${bufKey.toInt} in " +
-          s"$curFile has columns ${bufCols.keySet.toSeq.sorted.mkString(",")}, expected " +
-          s"${expected.toSeq.sorted.mkString(",")}: corrupt or foreign store layout")
-      else GroupData(bufCols, bufN, (bufKey >>> 32).toInt)
-    bufHas = false; bufCols = Map.empty; bufN = 0
-    out
-  }
 
   /** The next LIVE complete group, or null at end of the bin. */
   def nextGroup(): GroupData = {
     while (!eof) {
-      if (reader == null) {
-        if (!openNext()) {
-          eof = true
-          val out = takeBuffered()
-          if (out != null) return out
-          return null
-        }
+      if (current == null) {
+        if (!fileIndex.hasNext) { eof = true; return null }
+        val i = fileIndex.next()
+        val f = p.files(i)
+        current =
+          if (f.endsWith(BlockFile.Extension)) new NativeGroups(f, p.fileLens(i))
+          else new ParquetGroups(f)
       }
-      val g = reader.read()
-      if (g == null) {
-        // file boundary: groups are whole per file, so the buffer must flush
-        // before the next file (the same key cannot legally continue there)
-        reader.close(); reader = null
-        val out = takeBuffered()
-        if (out != null) return out
-      } else {
-        val packed = DecodeJob.packKey(g.getInteger("part_id", 0),
-          g.getInteger("block_seq", 0))
-        val colName = g.getBinary("column", 0).toStringUsingUTF8
-        val n = g.getInteger("n", 0)
-        val enc = if (countOnly) null else g.getBinary("encoded", 0).getBytes
-        if (!bufHas || packed != bufKey) {
-          val out = takeBuffered()
-          bufKey = packed
-          bufHas = true
-          bufCols = if (countOnly) Map.empty else Map(colName -> enc)
-          bufN = n
-          if (out != null) return out
-        } else if (!countOnly) {
-          bufCols = bufCols.updated(colName, enc)
-        }
-      }
+      val g = current.next()
+      if (g != null) return g
+      current.close(); current = null
     }
     null
   }
 
-  def close(): Unit = if (reader != null) { reader.close(); reader = null }
+  def close(): Unit = if (current != null) { current.close(); current = null }
 }
 
 /** Row-based reader over [[BlockGroupStream]] — the DEFAULT path (measured
@@ -1304,8 +1393,8 @@ final class GraftPartitionReader(p: GraftInputPartition, conf: Configuration)
     }
     // per-column decode dispatch is TYPE-driven off the read schema (the
     // store's persisted schema pruned to this scan): timestamps and the int
-    // family ride IntBlockCodec as longs, binary stays raw bytes, strings wrap
-    // zero-copy as UTF8String
+    // family ride IntBlockCodec as longs, binary values are copied out as
+    // arrays, strings wrap zero-copy as UTF8String
     val decoded: Array[Int => Any] = p.readSchema.fields.map { f =>
       if (f.name == "_part_id") {
         val v = java.lang.Integer.valueOf(gd.pid)
@@ -1324,11 +1413,13 @@ final class GraftPartitionReader(p: GraftInputPartition, conf: Configuration)
           val (vs, ok) = IntBlockCodec.decodeNullable(gd.cols(f.name))
           (i: Int) => if (ok(i)) java.lang.Byte.valueOf(vs(i).toByte) else null
         case BinaryType =>
-          val vs = StringBlockCodec.decode(gd.cols(f.name))
-          (i: Int) => vs(i)
+          val vs = StringBlockCodec.decodeSlices(gd.cols(f.name))
+          (i: Int) => vs.bytes(i)
         case _ =>
-          val vs = StringBlockCodec.decode(gd.cols(f.name))
-          (i: Int) => if (vs(i) == null) null else UTF8String.fromBytes(vs(i))
+          // values wrap the block's one decode buffer: no per-value copy
+          val vs = StringBlockCodec.decodeSlices(gd.cols(f.name))
+          (i: Int) =>
+            if (vs.lens(i) < 0) null else UTF8String.fromBytes(vs.buf, vs.offs(i), vs.lens(i))
       }
     }
     (0 until gd.n).iterator.map { i =>
@@ -1401,9 +1492,9 @@ final class GraftColumnarReader(p: GraftInputPartition, conf: Configuration)
       case TimestampType | LongType | IntegerType | ShortType | ByteType => true
       case _ => false
     }
-    val decodedStr: Map[String, Array[Array[Byte]]] =
+    val decodedStr: Map[String, StringBlockCodec.Slices] =
       schema.fields.iterator.filterNot(f => isIntFamily(f.dataType))
-        .map(f => f.name -> StringBlockCodec.decode(gd.cols(f.name))).toMap
+        .map(f => f.name -> StringBlockCodec.decodeSlices(gd.cols(f.name))).toMap
     val decodedInt: Map[String, (Array[Long], Array[Boolean])] =
       schema.fields.iterator.filter(f => isIntFamily(f.dataType))
         .map(f => f.name -> IntBlockCodec.decodeNullable(gd.cols(f.name))).toMap
@@ -1411,7 +1502,7 @@ final class GraftColumnarReader(p: GraftInputPartition, conf: Configuration)
     val colBytes: Map[String, Long] =
       decodedStr.map { case (c, vs) =>
         var t = 0L; var i = 0
-        while (i < vs.length) { if (vs(i) != null) t += vs(i).length; i += 1 }
+        while (i < vs.length) { t += math.max(vs.lens(i), 0); i += 1 }
         c -> t
       }
     val maxCol = if (colBytes.isEmpty) 0L else colBytes.values.max
@@ -1431,8 +1522,7 @@ final class GraftColumnarReader(p: GraftInputPartition, conf: Configuration)
           var overflow = false
           var c = 0
           while (c < cols.length && !overflow) {
-            val v = cols(c)(i)
-            if (run(c) + (if (v == null) 0L else v.length.toLong) > maxBatchColumnBytes)
+            if (run(c) + math.max(cols(c).lens(i), 0) > maxBatchColumnBytes)
               overflow = true
             c += 1
           }
@@ -1441,7 +1531,7 @@ final class GraftColumnarReader(p: GraftInputPartition, conf: Configuration)
           }
           c = 0
           while (c < cols.length) {
-            val v = cols(c)(i); run(c) += (if (v == null) 0L else v.length.toLong); c += 1
+            run(c) += math.max(cols(c).lens(i), 0); c += 1
           }
           i += 1
         }
@@ -1475,7 +1565,7 @@ final class GraftColumnarReader(p: GraftInputPartition, conf: Configuration)
             // one upfront child reserve: per-value growth doubles-and-copies
             // the contiguous array ~a dozen times per multi-MB column otherwise
             var total = 0L; var i = 0
-            while (i < n) { if (vs(from + i) != null) total += vs(from + i).length; i += 1 }
+            while (i < n) { total += math.max(vs.lens(from + i), 0); i += 1 }
             // slicing bounds total at max(maxBatchColumnBytes, one row); only a
             // misconfigured >2GiB MaxBatchColumnBytes can breach — fail loudly,
             // a negative toInt here would skip the reserve and corrupt later
@@ -1484,9 +1574,10 @@ final class GraftColumnarReader(p: GraftInputPartition, conf: Configuration)
               "GraftColumnarReader.MaxBatchColumnBytes or use the row path")
             vec.arrayData().reserve(total.toInt)
             i = 0
+            // copied straight from the block's one decode buffer
             while (i < n) {
-              val b = vs(from + i)
-              if (b == null) vec.putNull(i) else vec.putByteArray(i, b)
+              val len = vs.lens(from + i)
+              if (len < 0) vec.putNull(i) else vec.putByteArray(i, vs.buf, vs.offs(from + i), len)
               i += 1
             }
         }

@@ -190,7 +190,7 @@ final class GraftMicroBatchStream(root: String,
         else {
           // row path only (batch-sized ColumnarBatches buy nothing on micro-batches)
           val (p, f) = GraftDataSource.packPartitions(spark, root, entries,
-            readSchema, refColumn, keys = keysOpt, conf = listingConf,
+            readSchema, refColumn, keys = keysOpt, settings = settings,
             columnar = false, limit = -1)
           GraftDataSource.recordPlanStats(root, GraftDataSource.PlanStats(
             p.length, f, predicates.size, keysOpt.map(_.length)))
@@ -208,9 +208,8 @@ final class GraftMicroBatchStream(root: String,
   private var lastPlan: Array[InputPartition] = null
 
   // the session's Hadoop settings, read once for the life of the stream and
-  // shared by every batch, and the one conf built from them for listing
+  // shared by every batch
   private lazy val settings = HadoopSettings(SparkSession.active)
-  private lazy val listingConf = settings.conf()
 
   override def createReaderFactory(): PartitionReaderFactory = GraftReaderFactory(settings)
 }

@@ -23,14 +23,14 @@ import graft.sources.SnapshotStore
  *    filter pushdown and is used ONLY to choose which PARTS to rewrite — a
  *    part none of whose block metadata admits the condition provably holds no
  *    matching row and keeps its files untouched. Every row of every affected
- *    part is emitted (no group-level key slicing, no parquet row filters, no
+ *    part is emitted (no group-level key slicing, no row filters, no
  *    residual evaluation inside the reader): copy-on-write replaces whole
  *    parts, so dropping any unmatched row of an affected part would lose it.
  *    Block pruning being a superset is safe here for the same reason — an
  *    extra part is rewritten byte-identically, never changed.
  *  - **Write side** ([[GraftCowWrite]]): the rewritten rows run the standard
  *    distributed staged-encode pipeline (url range distribution + in-task
- *    sort, one block parquet file per task) into the NEGATIVE rehoming
+ *    sort, one block file per task) into the NEGATIVE rehoming
  *    part-id namespace (below every id ever used — the same namespace as
  *    compaction/DELETE, so a streamed store's upward `batchId*parts` ids are
  *    never poisoned), and the commit atomically replaces exactly the parts
@@ -188,13 +188,12 @@ final class GraftCowScan(root: String, op: GraftRowLevelOperation,
     val cowEntries = entries.filter(e => affected(e.partId))
     if (cowEntries.isEmpty) return Array.empty
     GraftDataSource.packPartitions(SparkSession.active, root, cowEntries,
-      requiredSchema, "url", None, listingConf, columnar = false, limit = -1)._1
+      requiredSchema, "url", None, settings, columnar = false, limit = -1)._1
   }
 
   // the session's Hadoop settings, read once per statement however often
-  // Spark plans this scan, and the one conf built from them for listing
+  // Spark plans this scan
   private lazy val settings = HadoopSettings(SparkSession.active)
-  private lazy val listingConf = settings.conf()
 
   override def createReaderFactory(): PartitionReaderFactory = GraftReaderFactory(settings)
 }

@@ -5,19 +5,13 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 
-import graft.jobs.{BlockRow, EncodeJob}
+import graft.jobs.EncodeJob
 import graft.sources.SnapshotStore
 
 /**
@@ -35,10 +29,11 @@ import graft.sources.SnapshotStore
  *  - **Each task IS an encode kernel** ([[GraftDataWriter]], which the batch
  *    job's tasks run too): the partition's rows stream through the shared
  *    [[graft.jobs.BlockEncoder]] block buffering and codec auto-selection,
- *    and the task writes its own block parquet file (one file per task)
- *    straight into a staged data dir. Commit messages carry the per-part
- *    lineage rollup (rows, orig/enc bytes, per-column codecs, planning stats)
- *    folded in-task by [[graft.jobs.PartRollup]] — no post-write metrics job.
+ *    and the task streams its own native block file ([[BlockFile]], one file
+ *    per task) straight into a staged data dir. Commit messages name the
+ *    file and carry the per-part lineage rollup (rows, orig/enc bytes,
+ *    per-column codecs, planning stats) folded in-task by
+ *    [[graft.jobs.PartRollup]] — no post-write metrics job.
  *  - **Exactly-once commit**: tasks stage attempt-unique files under a
  *    dot-prefixed in-progress name (invisible to all readers) and never
  *    rename them. The driver's [[GraftBatchWrite.commit]] promotes exactly
@@ -158,7 +153,8 @@ private[graft] object GraftWriteLayout {
     }
   }
 
-  /** Manifest entries from the tasks' commit messages (empty tasks dropped). */
+  /** Manifest entries from the tasks' commit messages (empty tasks dropped);
+    * each names its task's file, which lives in `relDir`. */
   def entriesFrom(msgs: Seq[GraftWriterCommitMessage],
                   relDir: String): Seq[SnapshotStore.PartEntry] =
     msgs.iterator.filter(_.entry.nRows > 0).map(_.entry.copy(dataDir = relDir)).toSeq
@@ -184,9 +180,9 @@ final class GraftWrite(root: String, replaceAll: Boolean, arranged: Boolean = fa
     * set `spark.graft.write.partitions` so each task lands ~16-64MB of rows:
     * AQE can only COALESCE a range exchange, never split it, so a 100GB write
     * over the default 32 shuffle partitions would stack GBs of sorted rows
-    * per task on top of the kernel's 64MB block buffer and parquet's
-    * row-group buffer and OOM a lean executor (measured at the 5M-page
-    * checkpoint: 32 × 360MB on an 8g heap died; 512-way, the batch job's own
+    * per task on top of the kernel's 64MB block buffer and OOM a lean
+    * executor (measured at the 5M-page checkpoint, when parquet also buffered
+    * a row group: 32 × 360MB on an 8g heap died; 512-way, the batch job's own
     * sizing, encodes comfortably). This mirrors EncodeJob.run's explicit
     * `parts` — partition count is the one knob an engine cannot infer at
     * write-plan time because the input's size is unknown there. */
@@ -234,8 +230,8 @@ final class GraftWrite(root: String, replaceAll: Boolean, arranged: Boolean = fa
     s"GraftStore root=$root mode=${if (replaceAll) "truncate" else "append"}"
 }
 
-/** A writer task's file and its part's manifest entry (the driver sets the
-  * entry's data dir at commit). */
+/** A writer task's file and its part's manifest entry, which names the file
+  * and its length (the driver sets the entry's data dir at commit). */
 final case class GraftWriterCommitMessage(
     fileName: String, // null when the task saw no rows (no file written)
     entry: SnapshotStore.PartEntry) extends WriterCommitMessage
@@ -492,65 +488,28 @@ object GraftDataWriter {
     * readers skip it (packPartitions and spark.read both ignore "."-files). */
   def stagedName(fileName: String): String = s".$fileName.inprogress"
 
-  /** A block file's readable name. It leads with the file's one part id, so
-    * a scan can drop the files of parts it does not read without opening
-    * them ([[partIdOf]]). */
-  def fileNameFor(partId: Int, taskId: Long): String = s"p$partId-task-$taskId.parquet"
+  /** A block file's readable name. It leads with the file's one part id. */
+  def fileNameFor(partId: Int, taskId: Long): String = s"p$partId-task-$taskId${BlockFile.Extension}"
 
-  private val PartFileName = """p(-?\d+)-task-\d+\.parquet""".r
+  private val PartFileName = """p(-?\d+)-task-\d+\.(?:parquet|graft)""".r
 
-  /** The part id a block file's name carries; None for a file named before
-    * names carried it, which may hold several parts. */
+  /** The part id a block file's name carries; None for a parquet file named
+    * before names carried it, which may hold several parts. */
   def partIdOf(fileName: String): Option[Int] = fileName match {
     case PartFileName(pid) => pid.toIntOption
     case _ => None
   }
-
-  /** The block-file schema: the [[BlockRow]] columns as Spark would write
-    * them (standard 3-level lists, UTF8-annotated strings). */
-  private[v2] val BlockFileSchema: MessageType = MessageTypeParser.parseMessageType(
-    """message spark_schema {
-      |  required int32 part_id;
-      |  required int32 block_seq;
-      |  optional binary column (UTF8);
-      |  optional binary typ (UTF8);
-      |  optional binary codec (UTF8);
-      |  required int32 n;
-      |  required int32 n_nulls;
-      |  optional int64 block_min;
-      |  optional int64 block_max;
-      |  optional int64 block_sum;
-      |  optional group block_dict (LIST) {
-      |    repeated group list {
-      |      required int64 element;
-      |    }
-      |  }
-      |  optional binary block_str_min (UTF8);
-      |  optional binary block_str_max (UTF8);
-      |  optional group block_str_dict (LIST) {
-      |    repeated group list {
-      |      optional binary element (UTF8);
-      |    }
-      |  }
-      |  optional group block_str_dict_counts (LIST) {
-      |    repeated group list {
-      |      required int64 element;
-      |    }
-      |  }
-      |  required int64 orig_bytes;
-      |  required int64 enc_bytes;
-      |  optional binary encoded;
-      |}""".stripMargin)
 }
 
 /**
  * One task's encode kernel, run by every V2 write task and by each
  * [[EncodeJob.stageEncode]] task: the partition's rows (all of part `partId`,
- * sort-key ordered) go through a [[graft.jobs.BlockEncoder]], and each block's
- * column rows are appended to this task's own parquet file as they leave it,
- * while [[graft.jobs.PartRollup]] folds the part's manifest entry. The file
- * is staged under an attempt-unique dot-name and never renamed here: only
- * the driver promotes the files of the results it accepts
+ * sort-key ordered) go through a [[graft.jobs.BlockEncoder]], and each block
+ * streams into this task's native block file ([[BlockFile]]) as it leaves
+ * it, so no more than one block is held in heap. [[graft.jobs.PartRollup]]
+ * folds the part's manifest entry, and the commit message names the file and
+ * its length. The file is staged under an attempt-unique dot-name and never
+ * renamed here: only the driver promotes the files of the results it accepts
  * ([[GraftWriteLayout.publish]]).
  */
 final class GraftDataWriter(absDir: String, partId: Int, taskId: Long,
@@ -563,79 +522,24 @@ final class GraftDataWriter(absDir: String, partId: Int, taskId: Long,
   // driver promotes only files named in the messages it accepts)
   private val fileName = GraftDataWriter.fileNameFor(partId, taskId)
   // a dot-file is invisible to every reader, so a ZOMBIE attempt (stalled
-  // task whose executor dies without abort) flushing parquet bytes after the
+  // task whose executor dies without abort) flushing bytes after the
   // driver's commit can never surface as duplicate groups in a live dir
   private val stagedPath = Paths.get(absDir, GraftDataWriter.stagedName(fileName))
 
-  private var writer: ParquetWriter[Group] = _
-  private val factory = new SimpleGroupFactory(GraftDataWriter.BlockFileSchema)
+  private var file: BlockFile.Writer = _
   private var rows = 0L
 
   // per-part lineage + stats rollup, folded in-task (no metrics job)
   private val rollup = new graft.jobs.PartRollup
 
   private val encoder = new graft.jobs.BlockEncoder(schema, partId, maxBlockBytes)({ b =>
-    if (writer == null) openWriter()
-    writer.write(toGroup(b))
+    if (file == null) {
+      val p = new Path(stagedPath.toString)
+      file = new BlockFile.Writer(p.getFileSystem(settings.conf()).create(p, false), partId)
+    }
+    file.add(b)
     rollup.add(b)
   })
-
-  private def openWriter(): Unit = {
-    val c = settings.conf()
-    writer = ExampleParquetWriter.builder(
-        org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
-          new Path(stagedPath.toString), c))
-      // the task conf: without it the builder loads a default Configuration
-      // (classpath scan and XML parse) for every file
-      .withConf(c)
-      .withType(GraftDataWriter.BlockFileSchema)
-      // `encoded` dominates and is already codec-compressed high-entropy bytes;
-      // snappy over it costs CPU for ~0 size win
-      .withCompressionCodec(CompressionCodecName.UNCOMPRESSED)
-      // bound per-task memory: parquet buffers a whole row group in heap
-      // (uncompressed), and this writer already holds a MaxBlockBytes block
-      // buffer — the 128MB default × many concurrent tasks OOMs a default
-      // executor at web-page row sizes (measured at the 5M-page checkpoint).
-      // Smaller row groups also TIGHTEN read-side pruning: the part/seq
-      // In-filters skip at row-group granularity. Parquet's own
-      // `parquet.block.size` and page-size-check settings still apply when set.
-      .withRowGroupSize(c.getLong(ParquetOutputFormat.BLOCK_SIZE, 32L << 20))
-      .withMinRowCountForPageSizeCheck(ParquetOutputFormat.getMinRowCountForPageSizeCheck(c))
-      .withMaxRowCountForPageSizeCheck(ParquetOutputFormat.getMaxRowCountForPageSizeCheck(c))
-      .build()
-  }
-
-  private def toGroup(b: BlockRow): Group = {
-    val g = factory.newGroup()
-    g.add("part_id", b.part_id)
-    g.add("block_seq", b.block_seq)
-    g.add("column", b.column)
-    g.add("typ", b.typ)
-    g.add("codec", b.codec)
-    g.add("n", b.n)
-    g.add("n_nulls", b.n_nulls)
-    b.block_min.foreach(v => g.add("block_min", v))
-    b.block_max.foreach(v => g.add("block_max", v))
-    b.block_sum.foreach(v => g.add("block_sum", v))
-    b.block_dict.foreach { vs =>
-      val lg = g.addGroup("block_dict")
-      vs.foreach(v => lg.addGroup("list").add("element", v))
-    }
-    b.block_str_min.foreach(v => g.add("block_str_min", v))
-    b.block_str_max.foreach(v => g.add("block_str_max", v))
-    b.block_str_dict.foreach { vs =>
-      val lg = g.addGroup("block_str_dict")
-      vs.foreach(v => lg.addGroup("list").add("element", v))
-    }
-    b.block_str_dict_counts.foreach { vs =>
-      val lg = g.addGroup("block_str_dict_counts")
-      vs.foreach(v => lg.addGroup("list").add("element", v))
-    }
-    g.add("orig_bytes", b.orig_bytes)
-    g.add("enc_bytes", b.enc_bytes)
-    g.add("encoded", org.apache.parquet.io.api.Binary.fromConstantByteArray(b.encoded))
-    g
-  }
 
   override def write(row: InternalRow): Unit = {
     encoder.add(row)
@@ -646,20 +550,24 @@ final class GraftDataWriter(absDir: String, partId: Int, taskId: Long,
     }
   }
 
-  /** Flush and close the staged file; the message names it (null when the
-    * task saw no rows) for the driver to promote. */
+  /** Flush and finish the staged file; the message names it and its length
+    * (null when the task saw no rows) for the driver to promote. */
   override def commit(): GraftWriterCommitMessage = {
     encoder.flush()
-    if (writer != null) { writer.close(); writer = null }
     val e = rollup.entry(partId, dataDir = "")
-    GraftWriterCommitMessage(if (e.nRows > 0) fileName else null, e)
+    if (file == null) GraftWriterCommitMessage(null, e)
+    else {
+      val len = file.finish()
+      file = null
+      GraftWriterCommitMessage(fileName, e.copy(file = Some(fileName), fileLen = len))
+    }
   }
 
   override def abort(): Unit = {
-    if (writer != null) { writer.close(); writer = null }
+    close()
     Files.deleteIfExists(stagedPath)
   }
 
   override def close(): Unit =
-    if (writer != null) { writer.close(); writer = null }
+    if (file != null) { file.close(); file = null }
 }

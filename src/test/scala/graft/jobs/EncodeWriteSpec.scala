@@ -93,8 +93,10 @@ class EncodeWriteSpec extends AnyFunSuite {
       val dirOf = committed.map(e => e.partId -> e.dataDir).toMap
       val folded = PartRollup.foldByPart(got.iterator).toSeq.sortBy(_._1)
         .map { case (pid, r) => r.entry(pid, dirOf(pid)) }
-      assert(folded == committed)
+      // the fold knows no file: the writer adds its file's name and length
+      assert(folded == committed.map(_.copy(file = None, fileLen = 0L)))
       assert(committed.forall(_.stats.isDefined))
+      assert(committed.forall(e => e.file.exists(_.endsWith(".graft")) && e.fileLen > 0))
     }
   }
 
@@ -147,7 +149,7 @@ class EncodeWriteSpec extends AnyFunSuite {
       "the zombie really staged its file")
     SnapshotStore.commit(root, GraftWriteLayout.entriesFrom(msgs, relDir))
 
-    val visible = SnapshotStore.listFileNames(Paths.get(absDir)).filter(_.endsWith(".parquet"))
+    val visible = SnapshotStore.listFileNames(Paths.get(absDir)).filter(_.endsWith(".graft"))
     assert(visible.sorted == msgs.map(_.fileName).sorted,
       s"one readable file per part, and only the accepted attempts': $visible")
     assert(SnapshotStore.currentEntries(root).map(e => e.partId -> e.nRows).sorted ==

@@ -280,19 +280,10 @@ class PipelineSpec extends AnyFunSuite {
     val root = freshRoot()
     val n = 20000L
     val pages = Webtext.generate(spark, n, 8)
-    // small logical blocks + tiny parquet row groups: many groups and row
-    // groups per file, so a reader planning Spark file splits would cut files
-    // mid-group once maxPartitionBytes shrinks below the file size
-    val hc = spark.sparkContext.hadoopConfiguration
-    hc.setInt("parquet.block.size", 4096)
-    hc.setInt("parquet.page.size.row.check.min", 2)
-    hc.setInt("parquet.page.size.row.check.max", 2)
-    try EncodeJob.run(spark, pages, root, parts = 2, maxBlockBytes = 256 * 1024)
-    finally {
-      hc.unset("parquet.block.size")
-      hc.unset("parquet.page.size.row.check.min")
-      hc.unset("parquet.page.size.row.check.max")
-    }
+    // small blocks: many block groups per file, so a reader planning Spark
+    // file splits would cut files mid-group once maxPartitionBytes shrinks
+    // below the file size
+    EncodeJob.run(spark, pages, root, parts = 2, maxBlockBytes = 16 * 1024)
     assert(DecodeJob.blocks(spark, root).select("part_id", "block_seq").distinct().count() > 20,
       "need many groups per file for the split scenario")
 
@@ -320,13 +311,25 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  /** Fails unless `read` throws, somewhere in its causes, the layout IOException. */
+  private def layoutError(read: => Any): Unit = {
+    val e = intercept[Exception](read)
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => t.isInstanceOf[java.io.IOException] &&
+        t.getMessage.contains("corrupt or foreign store layout")), s"not the layout error: $e")
+  }
+
   test("a block group that is not whole in its file fails both read surfaces") {
     import spark.implicits._
-    val root = freshRoot()
-    EncodeJob.run(spark, Webtext.generate(spark, 300, 4), root, parts = 1)
-    val dir = java.nio.file.Paths.get(root, SnapshotStore.currentEntries(root).head.dataDir)
-    val Seq(file) = SnapshotStore.listFileNames(dir).filter(_.endsWith(".parquet"))
-    // rewrite the part's one file without the html block of group 0
+    // a store written before native block files: its parquet reader
+    val root = graft.HeadFormatStore.copy()
+    val live = SnapshotStore.currentEntries(root).map(_.partId).toSet
+    val (dir, file) = SnapshotStore.currentEntries(root).map(_.dataDir).distinct.iterator
+      .map(d => java.nio.file.Paths.get(root, d))
+      .flatMap(d => SnapshotStore.listFileNames(d).filter(f => f.endsWith(".parquet") &&
+        graft.sources.v2.GraftDataWriter.partIdOf(f).exists(live)).map(d -> _))
+      .next()
+    // rewrite a live part's one file without the html block of group 0
     val tmp = java.nio.file.Paths.get(freshRoot(), "rewritten").toString
     spark.read.parquet(dir.resolve(file).toString)
       .where(!($"block_seq" === 0 && $"column" === "html"))
@@ -336,12 +339,34 @@ class PipelineSpec extends AnyFunSuite {
     Files.delete(dir.resolve(file))
     Files.move(java.nio.file.Paths.get(tmp, rewritten), dir.resolve("rewritten.parquet"))
 
-    def layoutError(read: => Any): Unit = {
-      val e = intercept[Exception](read)
-      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .exists(t => t.isInstanceOf[java.io.IOException] &&
-          t.getMessage.contains("corrupt or foreign store layout")), s"not the layout error: $e")
-    }
+    layoutError(DecodeJob.decode(spark, root).collect())
+    layoutError(DecodeJob.decodedRows(DecodeJob.decode(spark, root)))
+    layoutError(spark.read.format("graft").load(root).collect())
+    layoutError(DecodeJob.decodedRows(spark.read.format("graft").load(root)))
+  }
+
+  test("a native block file that lacks one column's block fails both read surfaces") {
+    val root = freshRoot()
+    EncodeJob.run(spark, Webtext.generate(spark, 300, 4), root, parts = 1)
+    val Seq(e) = SnapshotStore.currentEntries(root)
+    val path = java.nio.file.Paths.get(root, e.dataDir, e.file.get)
+    // rewrite the part's file without the html block of group 0: the same
+    // blocks and footer entries, minus that one
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val blocks = graft.sources.v2.BlockFile.readAll(path.toString, e.fileLen, e.partId, conf,
+      withEncoded = true).filterNot(b => b.block_seq == 0 && b.column == "html")
+    val out = org.apache.hadoop.fs.FileSystem.getLocal(conf).getRawFileSystem
+      .create(new org.apache.hadoop.fs.Path(path.toString), true)
+    val w = new graft.sources.v2.BlockFile.Writer(out, e.partId)
+    blocks.foreach(w.add)
+    val len = w.finish()
+    // the manifest line names the new length
+    val mf = java.nio.file.Paths.get(root, "manifests",
+      s"${SnapshotStore.currentSnapshotId(root).get}.jsonl")
+    Files.write(mf, new String(Files.readAllBytes(mf), "UTF-8")
+      .replace(s""""file_len":${e.fileLen}""", s""""file_len":$len""").getBytes("UTF-8"))
+    assert(SnapshotStore.currentEntries(root).head.fileLen == len)
+
     layoutError(DecodeJob.decode(spark, root).collect())
     layoutError(DecodeJob.decodedRows(DecodeJob.decode(spark, root)))
     layoutError(spark.read.format("graft").load(root).collect())

@@ -246,11 +246,15 @@ class TwoLevelPlanningSpec extends AnyFunSuite {
     groups <- Gen.choose(0, 1000)
     stats <- Gen.option(Gen.const(PartStats(groups, cols)))
     codecCols <- Gen.listOf(strGen).map(_.take(3))
+    file <- Gen.option(strGen)
+    fileLen <- Gen.choose(0L, Long.MaxValue)
   } yield {
     val codecs = new java.util.TreeMap[String, String]()
     codecCols.foreach(c => codecs.put(c, "str_fsst+str_plain"))
+    // a line names its file and that file's length together, or neither
     PartEntry(0, "data/" + dir, 7L, 70L, 20L,
-      new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(codecs), stats)
+      new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(codecs), stats,
+      file, if (file.isDefined) fileLen else 0L)
   }
 
   test("property: part stats survive serialise -> parse -> carry-forward commit unchanged") {

@@ -554,12 +554,26 @@ class V2SourceSpec extends AnyFunSuite {
       assert(stats.prunedGroupKeys.exists(_ > R4TaskKeyCeiling),
         s"scan must prune past the old 4096 ceiling: $stats")
       // over the per-task In-filter budget: only part_id pushes to parquet, the
-      // exact liveGroup check keeps rows identical
+      // exact liveGroup check keeps rows identical. Parquet block files are
+      // read only in stores written before native block files, so this runs
+      // over such a store, with a budget below its bins' key counts
       val savedBudget = GraftDataSource.InFilterMaxKeys
       try {
-        GraftDataSource.InFilterMaxKeys = 16
-        val capped = spark.read.format("graft").load(r2).where(pred).select(col("url"))
-        assert(sortedRows(capped) == want, "over-budget In-filter must stay exact")
+        GraftDataSource.InFilterMaxKeys = 2
+        import spark.implicits._
+        val head = graft.HeadFormatStore.copy()
+        val headPred = col("url") >= "https://host-5"
+        val headWant = sortedRows(graft.HeadFormatStore.pages.toDS().toDF()
+          .where(headPred).select(col("url")))
+        val capped = spark.read.format("graft").load(head).where(headPred).select(col("url"))
+        val overBudget = capped.queryExecution.executedPlan.collect {
+          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.inputPartitions
+        }.flatten.map(_.asInstanceOf[GraftInputPartition])
+          .filter(p => p.keys != null && p.keys.length > GraftDataSource.InFilterMaxKeys)
+        assert(overBudget.nonEmpty && overBudget.forall(_.files.forall(_.endsWith(".parquet"))),
+          "a parquet bin must hold more keys than the In-filter budget")
+        assert(headWant.nonEmpty && sortedRows(capped) == headWant,
+          "over-budget In-filter must stay exact")
       } finally GraftDataSource.InFilterMaxKeys = savedBudget
     } finally DecodeJob.PruneFractionCutoff = savedCutoff
   }
@@ -1182,17 +1196,47 @@ class V2SourceSpec extends AnyFunSuite {
   }
 }
 
-/** A local file system that records every path opened through it. Registered
+/** A local file system that records every block file opened through it,
+  * every directory listed, and the bytes read from block files. Registered
   * as `fs.file.impl` with the cache disabled, it shows which conf a reader
-  * opened its files with. */
+  * opened its files with and what I/O a scan made. */
 class CountingLocalFileSystem extends org.apache.hadoop.fs.LocalFileSystem {
   override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int)
       : org.apache.hadoop.fs.FSDataInputStream = {
-    if (f.getName.endsWith(".parquet")) CountingLocalFileSystem.opened.add(f.toString)
-    super.open(f, bufferSize)
+    val in = super.open(f, bufferSize)
+    if (f.getName.endsWith(".parquet") || f.getName.endsWith(".graft")) {
+      CountingLocalFileSystem.opened.add(f.toString)
+      new org.apache.hadoop.fs.FSDataInputStream(new CountingLocalFileSystem.CountingInput(in))
+    } else in
+  }
+
+  override def listStatus(f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    CountingLocalFileSystem.listings.add(f.toString)
+    super.listStatus(f)
   }
 }
 
 object CountingLocalFileSystem {
   val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  val listings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  val bytesRead = new java.util.concurrent.atomic.AtomicLong()
+
+  def reset(): Unit = { opened.clear(); listings.clear(); bytesRead.set(0L) }
+
+  /** A block file's stream that adds every byte it returns to [[bytesRead]]. */
+  final class CountingInput(in: org.apache.hadoop.fs.FSDataInputStream)
+      extends org.apache.hadoop.fs.FSInputStream {
+    private def counted(n: Int): Int = { if (n > 0) bytesRead.addAndGet(n); n }
+    override def read(): Int = { val b = in.read(); if (b >= 0) bytesRead.incrementAndGet(); b }
+    override def read(b: Array[Byte], off: Int, len: Int): Int = counted(in.read(b, off, len))
+    override def read(pos: Long, b: Array[Byte], off: Int, len: Int): Int =
+      counted(in.read(pos, b, off, len))
+    override def readFully(pos: Long, b: Array[Byte], off: Int, len: Int): Unit = {
+      in.readFully(pos, b, off, len); bytesRead.addAndGet(len)
+    }
+    override def seek(pos: Long): Unit = in.seek(pos)
+    override def getPos: Long = in.getPos
+    override def seekToNewSource(target: Long): Boolean = in.seekToNewSource(target)
+    override def close(): Unit = in.close()
+  }
 }

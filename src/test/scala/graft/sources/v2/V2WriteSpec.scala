@@ -47,7 +47,7 @@ class V2WriteSpec extends AnyFunSuite {
     assert(entries.map(_.nRows).sum == 5000L)
     // one block file per commit message / part entry, no strays
     val dir = Paths.get(root, entries.head.dataDir)
-    val files = SnapshotStore.listFileNames(dir).filter(_.endsWith(".parquet"))
+    val files = SnapshotStore.listFileNames(dir).filter(_.endsWith(".graft"))
     assert(files.size == entries.size, s"files $files vs entries ${entries.size}")
   }
 
@@ -146,7 +146,7 @@ class V2WriteSpec extends AnyFunSuite {
     val entries = SnapshotStore.currentEntries(root)
     assert(entries.map(_.nRows).sum == 200L, s"exactly-once rows: $entries")
     val dir = Paths.get(root, entries.head.dataDir)
-    val files = SnapshotStore.listFileNames(dir).filter(_.endsWith(".parquet"))
+    val files = SnapshotStore.listFileNames(dir).filter(_.endsWith(".graft"))
     assert(files.size == 2,
       s"crash/zombie staged files must not survive the commit: $files")
     assert(DecodeJob.decodedRows(DecodeJob.decode(spark, root)) == 200L)
@@ -287,9 +287,7 @@ class V2WriteSpec extends AnyFunSuite {
 
     // 3. arranged stores keep tight url bounds: blocks are url-sorted inside
     //    bucket runs, so prefix pruning must still skip most groups
-    val blocks = spark.read.parquet(
-      SnapshotStore.currentEntries(arrangedRoot).map(e =>
-        java.nio.file.Paths.get(arrangedRoot, e.dataDir).toString).distinct: _*)
+    val blocks = DecodeJob.blocks(spark, arrangedRoot)
       .where(col("column") === "url")
       .select(col("block_str_min"), col("block_str_max")).collect()
     assert(blocks.nonEmpty)
