@@ -1,5 +1,7 @@
 package graft.codec
 
+import org.apache.spark.unsafe.Platform
+
 /**
  * Simplified FSST symbol-table string compression (public algorithm: Boncz,
  * Neumann, Leis — "FSST: Fast Random Access String Compression", VLDB 2020).
@@ -9,32 +11,47 @@ package graft.codec
  * (n-grams scored by freq*(len-1), remaining slots filled with frequent single bytes
  * so escape doubling stays rare).
  *
- * Encode dispatch is array-based, FSST-style: a 256-entry single-byte code table, a
- * 65536-entry two-byte code table, and per-two-byte-prefix candidate lists for longer
- * symbols (checked longest-first) — no hashing or boxing in the hot loop.
+ * Encode dispatch is flat and built in O(symbols) by [[fillDispatch]]:
+ *  - one combined short-code table of 65,536 + 256 ints. The entry of a 2-byte
+ *    prefix holds the code|len of that pair's symbol and the offset and count
+ *    of the run of longer symbols starting with it; the entry at 65,536 + b
+ *    holds the code|len of the single-byte symbol b. Zero means "no symbol", so
+ *    a fresh array is an empty table and only the symbols' own entries are
+ *    written.
+ *  - `runs`: the symbols of 3..8 bytes as (packed bytes, mask, code|len)
+ *    triples, contiguous per 2-byte prefix and longest first.
+ * Each position makes one unboxed 8-byte load; its top two bytes index the
+ * short-code table, and each run candidate is one XOR+AND against the load.
+ * A miss falls back to the pair, then the single byte, then the escape.
+ *
+ * Training ([[train]]) encodes its sample with the same dispatch, counts
+ * candidates in open-addressing counters that visit and clear only their
+ * occupied slots, and keeps the 255 best with a bounded heap of counter slots
+ * that allocates nothing per candidate.
  */
 object FsstLite {
 
   val Escape = 0xFF
   val MaxSymbolLen = 8
   private val MaxSymbols = 255
+  /** Bytes of sample a table is trained on. */
+  private val SampleBudget = 32 * 1024
+
+  // the combined short-code table: pair entries at 0..65535, single-byte
+  // entries from SingleBase. An entry packs code<<4|len (bits 0..11), the run
+  // count (bits 12..19) and the run's offset into `runs` (bits 20..29).
+  private val SingleBase = 1 << 16
+  private val ShortSlots = SingleBase + 256
 
   /** A trained table: symbols(code) = byte sequence. Decoding reads only
-    * `symPacked` and `symLen`; the encode dispatch (`code1`, `code2`,
-    * `longCands`, `symMask`) is built on the first [[compress]], so a table
-    * deserialized for decoding never allocates its 65,536-slot arrays. */
+    * `symPacked` and `symLen`; the encode dispatch is built on the first
+    * [[compress]], so a table deserialized for decoding never allocates it. */
   final class Table(val symbols: Array[Array[Byte]]) extends Serializable {
-    // symbol bytes left-aligned into a big-endian long + a length mask, so one
-    // XOR+AND compares a whole candidate against 8 loaded input bytes (the
-    // byte-at-a-time `matches` loop was a top-3 encode hotspot)
-    private[FsstLite] val symPacked: Array[Long] = symbols.map { s =>
-      var v = 0L
-      var j = 0
-      while (j < s.length) { v |= (s(j) & 0xffL) << (56 - 8 * j); j += 1 }
-      v
-    }
+    require(symbols.length <= MaxSymbols, s"an FSST table holds at most $MaxSymbols symbols")
+    // symbol bytes left-aligned into a big-endian long: decode stores one per code
+    private[FsstLite] val symPacked: Array[Long] = symbols.map(s => packLeftBE(s, 0, s.length))
     private[FsstLite] val symLen: Array[Int] = symbols.map(_.length)
-    private[FsstLite] lazy val encoder: Encoder = new Encoder(symbols)
+    @transient private[FsstLite] lazy val dispatch: Dispatch = buildDispatch(symbols)
 
     def serialize(out: ByteWriter): Unit = {
       out.u8(symbols.length)
@@ -42,41 +59,92 @@ object FsstLite {
     }
   }
 
-  /** The encode dispatch of a [[Table]]. */
-  private[FsstLite] final class Encoder(symbols: Array[Array[Byte]]) extends Serializable {
-    // plain new + Arrays.fill: Array.fill evaluates its closure per element
-    // (65536 calls for code2), which showed up in the encode-job profile
-    val code1 = new Array[Int](256)
-    val code2 = new Array[Int](65536)
-    java.util.Arrays.fill(code1, -1)
-    java.util.Arrays.fill(code2, -1)
-    val symMask: Array[Long] = symbols.map(s => -1L << (64 - 8 * s.length))
-    // codes of symbols with len >= 3, grouped by their first-2-byte prefix,
-    // each group sorted longest-first for greedy longest match
-    val longCands: Array[Array[Int]] = {
-      val groups = new java.util.HashMap[Integer, java.util.ArrayList[Integer]]()
-      var c = 0
-      while (c < symbols.length) {
-        val s = symbols(c)
-        s.length match {
-          case 1 => code1(s(0) & 0xff) = c
-          case 2 => code2(((s(0) & 0xff) << 8) | (s(1) & 0xff)) = c
-          case _ =>
-            val p = ((s(0) & 0xff) << 8) | (s(1) & 0xff)
-            groups.computeIfAbsent(p, _ => new java.util.ArrayList[Integer]()).add(c)
-        }
-        c += 1
+  /** The encode dispatch of a [[Table]]: see the object's doc. */
+  private[FsstLite] final class Dispatch(val short: Array[Int], val runs: Array[Long])
+
+  private def buildDispatch(symbols: Array[Array[Byte]]): Dispatch = {
+    val short = new Array[Int](ShortSlots)
+    val runs = new Array[Long](3 * symbols.count(_.length > 2))
+    fillDispatch(symbols, short, runs)
+    new Dispatch(short, runs)
+  }
+
+  /** Writes the dispatch of `symbols` into `short`, which must be all zero, and
+    * `runs`, 3 slots per symbol longer than 2 bytes. O(symbols): only the
+    * entries of the symbols' own prefixes and bytes are written, and
+    * [[clearDispatch]] zeroes exactly those. A repeated 1- or 2-byte symbol
+    * keeps its last code, a repeated longer one its first. */
+  private def fillDispatch(symbols: Array[Array[Byte]], short: Array[Int], runs: Array[Long]): Unit = {
+    // the longer symbols as prefix<<16 | (8-len)<<8 | code: sorted, runs are
+    // contiguous per prefix, longest first, so the first match is the longest
+    val keys = new Array[Long](symbols.length)
+    var nLong = 0
+    var c = 0
+    while (c < symbols.length) {
+      val s = symbols(c)
+      if (s.length == 1) short(SingleBase | (s(0) & 0xff)) = (c << 4) | 1
+      else {
+        val p = ((s(0) & 0xff) << 8) | (s(1) & 0xff)
+        if (s.length == 2) short(p) = (short(p) & ~0xfff) | (c << 4) | 2
+        else { keys(nLong) = (p.toLong << 16) | ((MaxSymbolLen - s.length) << 8) | c; nLong += 1 }
       }
-      val arr = new Array[Array[Int]](65536)
-      groups.forEach { (p, list) =>
-        val codes = new Array[Int](list.size())
-        var i = 0
-        while (i < codes.length) { codes(i) = list.get(i); i += 1 }
-        arr(p) = codes.sortBy(cc => -symbols(cc).length)
-      }
-      arr
+      c += 1
+    }
+    java.util.Arrays.sort(keys, 0, nLong)
+    var k = 0
+    while (k < nLong) {
+      val code = (keys(k) & 0xff).toInt
+      val p = (keys(k) >>> 16).toInt
+      val s = symbols(code)
+      val r = 3 * k
+      runs(r) = packLeftBE(s, 0, s.length)
+      runs(r + 1) = -1L << (64 - 8 * s.length)
+      runs(r + 2) = (code << 4) | s.length
+      if (((short(p) >>> 12) & 0xff) == 0) short(p) |= r << 20
+      short(p) += 1 << 12
+      k += 1
     }
   }
+
+  private def clearDispatch(symbols: Array[Array[Byte]], short: Array[Int]): Unit = {
+    var c = 0
+    while (c < symbols.length) {
+      val s = symbols(c)
+      if (s.length == 1) short(SingleBase | (s(0) & 0xff)) = 0
+      else short(((s(0) & 0xff) << 8) | (s(1) & 0xff)) = 0
+      c += 1
+    }
+  }
+
+  /** The code<<4|len of the longest symbol at a position, or 0 for an escape.
+    * `w` holds the position's next 8 bytes, zero past the value's end, and
+    * `rem` counts the value's bytes from the position. */
+  @inline private def longestMatch(short: Array[Int], runs: Array[Long], w: Long, rem: Int): Int = {
+    if (rem >= 2) {
+      val e = short((w >>> 48).toInt)
+      var r = e >>> 20
+      val end = r + 3 * ((e >>> 12) & 0xff)
+      while (r < end) {
+        val cl = runs(r + 2).toInt
+        if (((w ^ runs(r)) & runs(r + 1)) == 0L && (cl & 0xf) <= rem) return cl
+        r += 3
+      }
+      if ((e & 0xf) != 0) return e & 0xfff
+    }
+    short(SingleBase | (w >>> 56).toInt)
+  }
+
+  private val BigEndian = java.nio.ByteOrder.nativeOrder() == java.nio.ByteOrder.BIG_ENDIAN
+
+  /** The 8 bytes of `s` from `i` as a big-endian long, zero past its end.
+    * Before `tailStart` = max(length - 8, 0) that is one unboxed load, which is
+    * unchecked and so stays inside `s`; from it on, `tail`, the packed bytes
+    * from `tailStart` to the end, shifted. */
+  @inline private def wordAt(s: Array[Byte], i: Int, tailStart: Int, tail: Long): Long =
+    if (i < tailStart) {
+      val v = Platform.getLong(s, Platform.BYTE_ARRAY_OFFSET.toLong + i)
+      if (BigEndian) v else java.lang.Long.reverseBytes(v)
+    } else tail << ((i - tailStart) << 3)
 
   def deserializeTable(c: ByteCursor): Table = {
     val n = c.u8()
@@ -94,11 +162,11 @@ object FsstLite {
 
   /**
    * Open-addressing counter keyed by a (left-aligned big-endian packed bytes, len)
-   * symbol candidate. The String-keyed HashMap it replaces allocated a String per
-   * sample position per generation — a top-5 encode-job hotspot at small blocks.
-   * Key order (packed unsigned, then len) equals the old ISO-8859-1 string order
-   * (zero-padding only ties when one candidate prefixes another, broken by len),
-   * so selection tiebreaks are unchanged.
+   * symbol candidate. Key order (packed unsigned, then len) equals ISO-8859-1
+   * string order (zero-padding only ties when one candidate prefixes another,
+   * broken by len), so selection tiebreaks match a string-keyed counter.
+   * `used` lists the occupied slots, so a generation visits and clears only
+   * those.
    */
   private final class CandCounter(capPow2: Int) {
     private val mask = capPow2 - 1
@@ -108,31 +176,35 @@ object FsstLite {
     val packed = new Array[Long](capPow2)
     val lens = new Array[Byte](capPow2) // 0 = empty slot
     val counts = new Array[Long](capPow2)
+    val used = new Array[Int](maxSize)
     var size = 0
 
     @inline private def slot(p: Long, len: Int): Int = {
-      var h = (java.lang.Long.rotateLeft(p * 0x9E3779B97F4A7C15L, 27) ^ len).toInt & mask
+      // a full 64-bit mix: a pair's key has only its top 16 bits set
+      var x = p ^ len
+      x = (x ^ (x >>> 33)) * 0xff51afd7ed558ccdL
+      x = (x ^ (x >>> 33)) * 0xc4ceb9fe1a85ec53L
+      var h = (x ^ (x >>> 33)).toInt & mask
       while (lens(h) != 0 && (lens(h) != len || packed(h) != p)) h = (h + 1) & mask
       h
     }
+    @inline private def insert(h: Int, p: Long, len: Int, v: Long): Unit = {
+      packed(h) = p; lens(h) = len.toByte; counts(h) = v
+      used(size) = h; size += 1
+    }
     def add(p: Long, len: Int, inc: Long): Unit = {
       val h = slot(p, len)
-      if (lens(h) == 0) {
-        if (size >= maxSize) return // drop new candidates at capacity, never hang
-        packed(h) = p; lens(h) = len.toByte; counts(h) = inc; size += 1
-      }
-      else counts(h) += inc
+      if (lens(h) != 0) counts(h) += inc
+      else if (size < maxSize) insert(h, p, len, inc) // drop new candidates at capacity, never hang
     }
     def max(p: Long, len: Int, v: Long): Unit = {
       val h = slot(p, len)
-      if (lens(h) == 0) {
-        if (size >= maxSize) return
-        packed(h) = p; lens(h) = len.toByte; counts(h) = v; size += 1
-      }
-      else if (v > counts(h)) counts(h) = v
+      if (lens(h) != 0) { if (v > counts(h)) counts(h) = v }
+      else if (size < maxSize) insert(h, p, len, v)
     }
     def clear(): Unit = {
-      java.util.Arrays.fill(lens, 0.toByte)
+      var k = 0
+      while (k < size) { lens(used(k)) = 0; k += 1 }
       size = 0
     }
   }
@@ -151,10 +223,57 @@ object FsstLite {
     out
   }
 
-  /** (packed, len) candidate order == old ISO-8859-1 lexicographic symbol order. */
+  /** (packed, len) candidate order == ISO-8859-1 lexicographic symbol order. */
   @inline private def keyCompare(pa: Long, la: Int, pb: Long, lb: Int): Int = {
     val c = java.lang.Long.compareUnsigned(pa, pb)
     if (c != 0) c else Integer.compare(la, lb)
+  }
+
+  /**
+   * Per-thread training scratch: the candidate counters, the dispatch arrays
+   * and the selection heap are reused by every training this thread runs.
+   * Training is single-threaded per block, so thread confinement is exactly
+   * the required discipline.
+   */
+  private final class TrainScratch {
+    // 2^16 slots: at 3/4 load they hold 49,152 candidates, more than a sample
+    // of SampleBudget bytes can make (at most 32,767 pairs plus 255 symbols),
+    // so no input makes a counter drop a candidate
+    val pairCount = new CandCounter(1 << 16)
+    val cand = new CandCounter(1 << 16)
+    val short = new Array[Int](ShortSlots)
+    val runs = new Array[Long](3 * MaxSymbols)
+    val heap = new Array[Int](MaxSymbols)
+  }
+  private val trainScratchTL = new ThreadLocal[TrainScratch] {
+    override def initialValue(): TrainScratch = new TrainScratch
+  }
+
+  /** Whether candidate slot `a` leaves the top 255 before slot `b`: lower gain
+    * first, then the larger key, so among equal gains the lexicographically
+    * smaller symbols survive. */
+  @inline private def evictsBefore(c: CandCounter, a: Int, b: Int): Boolean = {
+    val g = java.lang.Long.compare(c.counts(a), c.counts(b))
+    if (g != 0) g < 0 else keyCompare(c.packed(a), c.lens(a), c.packed(b), c.lens(b)) > 0
+  }
+
+  private def siftUp(c: CandCounter, heap: Array[Int], at: Int): Unit = {
+    val x = heap(at)
+    var i = at
+    while (i > 0 && evictsBefore(c, x, heap((i - 1) >> 1))) { heap(i) = heap((i - 1) >> 1); i = (i - 1) >> 1 }
+    heap(i) = x
+  }
+
+  private def siftDown(c: CandCounter, heap: Array[Int], size: Int): Unit = {
+    val x = heap(0)
+    var i = 0
+    var child = 1
+    while (child < size) {
+      if (child + 1 < size && evictsBefore(c, heap(child + 1), heap(child))) child += 1
+      if (evictsBefore(c, heap(child), x)) { heap(i) = heap(child); i = child; child = 2 * i + 1 }
+      else child = size
+    }
+    heap(i) = x
   }
 
   /**
@@ -165,50 +284,15 @@ object FsstLite {
    * count * (len - 1); singles gain their escape-avoidance). Longer symbols emerge
    * as concatenations of proven shorter ones instead of raw n-gram guesses.
    */
-  /**
-   * Per-thread training scratch (r7): the candidate counters and the
-   * per-generation symbol-dispatch maps are large zero-initialized arrays, and
-   * allocating them per train() call (5 intermediate Tables + 2 counters, a
-   * few MB each) dominated training cost in the encode-job profile — ~GBs of
-   * zeroing per job. Stamp-based invalidation makes the generation switch
-   * O(symbols) instead of O(map size), and the arrays are reused across every
-   * training this thread ever runs. Training is single-threaded per block, so
-   * thread confinement is exactly the required discipline.
-   */
-  private final class TrainScratch {
-    // 2^17 slots comfortably holds the <=32K distinct pairs of a 32KB sample
-    val pairCount = new CandCounter(1 << 17)
-    val cand = new CandCounter(1 << 17)
-    // stamped dispatch: entry valid iff its stamp equals the current generation
-    val code1 = new Array[Int](256); val stamp1 = new Array[Int](256)
-    val code2 = new Array[Int](65536); val stamp2 = new Array[Int](65536)
-    // symbols of len >= 3 chained per 2-byte prefix; longNext indexed by code
-    val longHead = new Array[Int](65536); val stampL = new Array[Int](65536)
-    val longNext = new Array[Int](MaxSymbols + 1)
-    var gen = 0
-    def nextGen(): Int = {
-      if (gen == Int.MaxValue) { // stamp wrap: reset everything once per 2^31 gens
-        java.util.Arrays.fill(stamp1, 0); java.util.Arrays.fill(stamp2, 0)
-        java.util.Arrays.fill(stampL, 0); gen = 0
-      }
-      gen += 1
-      gen
-    }
-  }
-  private val trainScratchTL = new ThreadLocal[TrainScratch] {
-    override def initialValue(): TrainScratch = new TrainScratch
-  }
-
   def train(sample: Iterator[Array[Byte]]): Table = {
-    val budget = 32 * 1024
     var used = 0
     val bufB = scala.collection.mutable.ArrayBuffer[Array[Byte]]()
-    while (sample.hasNext && used < budget) {
+    while (sample.hasNext && used < SampleBudget) {
       // truncate to the REMAINING budget: a single multi-MB value (a whole html
       // page as the first sample) used to be ingested whole, and its distinct
       // <=8-byte candidates could overflow the fixed-capacity counters
       val s0 = sample.next()
-      val s = if (s0.length <= budget - used) s0 else java.util.Arrays.copyOf(s0, budget - used)
+      val s = if (s0.length <= SampleBudget - used) s0 else java.util.Arrays.copyOf(s0, SampleBudget - used)
       bufB += s
       used += s.length
     }
@@ -227,80 +311,42 @@ object FsstLite {
     val sc = trainScratchTL.get()
     val pairCount = sc.pairCount
     val cand = sc.cand
+    val heap = sc.heap
     val generations = 4
     var g = 0
     while (g < generations) {
-      // ---- stamped dispatch maps for this generation's symbol set ----
-      // (same structure Table builds, without its allocation: singles/pairs as
-      // direct-index maps, len>=3 chained per 2-byte prefix. Chains are pushed
-      // in ASCENDING length so traversal is longest-first; equal-length
-      // symbols are byte-identical when both match, so within-length order
-      // cannot change the greedy choice.)
-      val gen = sc.nextGen()
-      var L = 3
-      while (L <= MaxSymbolLen) {
-        var c = 0
-        while (c < symbols.length) {
-          val s = symbols(c)
-          if (s.length == L) {
-            val p = ((s(0) & 0xff) << 8) | (s(1) & 0xff)
-            if (sc.stampL(p) != gen) { sc.stampL(p) = gen; sc.longNext(c) = -1 }
-            else sc.longNext(c) = sc.longHead(p)
-            sc.longHead(p) = c
-          }
-          c += 1
-        }
-        L += 1
-      }
-      var c0 = 0
-      while (c0 < symbols.length) {
-        val s = symbols(c0)
-        if (s.length == 1) {
-          val b = s(0) & 0xff; sc.stamp1(b) = gen; sc.code1(b) = c0
-        } else if (s.length == 2) {
-          val p = ((s(0) & 0xff) << 8) | (s(1) & 0xff)
-          sc.stamp2(p) = gen; sc.code2(p) = c0
-        }
-        c0 += 1
-      }
-
+      // greedy-encode the sample with compress's own dispatch, counting each
+      // symbol and each adjacent pair that fits in one symbol
       val symCount = new Array[Long](symbols.length)
       pairCount.clear()
-      bi = 0
-      while (bi < buf.length) {
-        val s = buf(bi)
-        var prev = -1
-        var i = 0
-        val n = s.length
-        while (i < n) {
-          // greedy longest match (same dispatch as compress)
-          var code = -1
-          var len = 1
-          if (i + 1 < n) {
-            val p = ((s(i) & 0xff) << 8) | (s(i + 1) & 0xff)
-            if (sc.stampL(p) == gen && i + 2 < n) {
-              var c = sc.longHead(p)
-              while (code < 0 && c >= 0) {
-                val sym = symbols(c)
-                if (i + sym.length <= n && matches(s, i, sym)) { code = c; len = sym.length }
-                else c = sc.longNext(c)
-              }
-            }
-            if (code < 0 && sc.stamp2(p) == gen) { code = sc.code2(p); len = 2 }
+      fillDispatch(symbols, sc.short, sc.runs)
+      try {
+        bi = 0
+        while (bi < buf.length) {
+          val s = buf(bi)
+          val n = s.length
+          val tailStart = math.max(n - 8, 0)
+          val tail = packLeftBE(s, tailStart, n - tailStart)
+          var prevLen = 0 // 0: no symbol precedes (value start or an escape)
+          var prevW = 0L
+          var i = 0
+          while (i < n) {
+            val w = wordAt(s, i, tailStart, tail)
+            val cl = longestMatch(sc.short, sc.runs, w, n - i)
+            if (cl != 0) {
+              val len = cl & 0xf
+              symCount(cl >>> 4) += 1
+              val concatLen = prevLen + len
+              // prevW's first concatLen bytes are the previous and this symbol
+              if (prevLen != 0 && concatLen <= MaxSymbolLen)
+                pairCount.add(prevW & (-1L << (64 - 8 * concatLen)), concatLen, 1L)
+              prevLen = len; prevW = w
+              i += len
+            } else { prevLen = 0; i += 1 }
           }
-          if (code < 0 && sc.stamp1(s(i) & 0xff) == gen) code = sc.code1(s(i) & 0xff)
-          if (code >= 0) symCount(code) += 1
-          if (prev >= 0 && code >= 0) {
-            val prevLen = symbols(prev).length
-            val concatLen = prevLen + len
-            if (concatLen <= MaxSymbolLen)
-              pairCount.add(packLeftBE(s, i - prevLen, concatLen), concatLen, 1L)
-          }
-          prev = code
-          i += len
+          bi += 1
         }
-        bi += 1
-      }
+      } finally clearDispatch(symbols, sc.short)
       // candidates: current symbols + adjacent concatenations, scored by bytes saved
       cand.clear()
       var c = 0
@@ -312,121 +358,57 @@ object FsstLite {
         if (gain > 0) cand.max(packLeftBE(sym, 0, sym.length), sym.length, gain)
         c += 1
       }
-      var h = 0
-      while (h < pairCount.lens.length) {
-        val len = pairCount.lens(h)
-        if (len != 0) {
-          val gain = pairCount.counts(h) * (len - 1)
-          if (gain > 8) cand.max(pairCount.packed(h), len, gain)
-        }
-        h += 1
+      var k = 0
+      while (k < pairCount.size) {
+        val h = pairCount.used(k)
+        val gain = pairCount.counts(h) * (pairCount.lens(h) - 1)
+        if (gain > 8) cand.max(pairCount.packed(h), pairCount.lens(h), gain)
+        k += 1
       }
-      // top 255 by gain; min-heap evicts (lower gain, then LARGER key) first, so
-      // among equal gains the lexicographically smaller symbols survive — the same
-      // deterministic tiebreak as the previous string-keyed implementation
-      val heap = new java.util.PriorityQueue[Array[Long]](MaxSymbols + 1,
-        (a: Array[Long], b: Array[Long]) => {
-          val cc = java.lang.Long.compare(a(2), b(2))
-          if (cc != 0) cc else keyCompare(b(0), b(1).toInt, a(0), a(1).toInt)
-        })
-      h = 0
-      while (h < cand.lens.length) {
-        if (cand.lens(h) != 0) {
-          heap.offer(Array(cand.packed(h), cand.lens(h).toLong, cand.counts(h)))
-          if (heap.size() > MaxSymbols) heap.poll()
-        }
-        h += 1
+      // top 255: a candidate replaces the heap's root only when the root would
+      // leave first, which is what offering it and polling the minimum does
+      var hs = 0
+      k = 0
+      while (k < cand.size) {
+        val h = cand.used(k)
+        if (hs < MaxSymbols) { heap(hs) = h; siftUp(cand, heap, hs); hs += 1 }
+        else if (evictsBefore(cand, heap(0), h)) { heap(0) = h; siftDown(cand, heap, hs) }
+        k += 1
       }
-      val chosen = new Array[Array[Long]](heap.size())
-      var ci = 0
-      while (!heap.isEmpty) { chosen(ci) = heap.poll(); ci += 1 }
-      // gain desc, then key asc — identical final ordering to the old sortBy
-      java.util.Arrays.sort(chosen, (a: Array[Long], b: Array[Long]) => {
-        val cc = java.lang.Long.compare(b(2), a(2))
-        if (cc != 0) cc else keyCompare(a(0), a(1).toInt, b(0), b(1).toInt)
-      })
-      symbols = chosen.map(e => unpackBE(e(0), e(1).toInt))
+      // pop in eviction order from the back: gain descending, then key ascending
+      val chosen = new Array[Array[Byte]](hs)
+      while (hs > 0) {
+        val top = heap(0)
+        chosen(hs - 1) = unpackBE(cand.packed(top), cand.lens(top))
+        hs -= 1
+        heap(0) = heap(hs)
+        siftDown(cand, heap, hs)
+      }
+      symbols = chosen
       g += 1
     }
     // ONE Table, for compress; its encode dispatch is built on first use
     new Table(symbols)
   }
 
-  @inline private def matches(s: Array[Byte], i: Int, sym: Array[Byte]): Boolean = {
-    // first two bytes already matched via the prefix index
-    var j = 2
-    while (j < sym.length) {
-      if (s(i + j) != sym(j)) return false
-      j += 1
-    }
-    true
-  }
-
   /** Compress one string with longest-match against the table. */
   def compress(table: Table, s: Array[Byte], out: ByteWriter): Unit = {
-    val symbols = table.symbols
-    val enc = table.encoder
-    val code1 = enc.code1
-    val code2 = enc.code2
-    val longCands = enc.longCands
-    val symPacked = table.symPacked
-    val symMask = enc.symMask
-    val symLen = table.symLen
+    val d = table.dispatch
+    val short = d.short
+    val runs = d.runs
     val n = s.length
     // worst case 2 bytes out per byte in (all escapes): reserve once, write with
     // a local cursor — the per-byte ensure() was measurable in the hot loop
     var o = out.reserve(2 * n)
     val ob = out.rawBuffer
+    val tailStart = math.max(n - 8, 0)
+    val tail = packLeftBE(s, tailStart, n - tailStart)
     var i = 0
     while (i < n) {
-      val b0 = s(i) & 0xff
-      var emitted = false
-      if (i + 1 < n) {
-        val p = (b0 << 8) | (s(i + 1) & 0xff)
-        val cands = longCands(p)
-        if (cands != null && i + 2 < n) {
-          if (i + 8 <= n) {
-            // fast path: one 8-byte load, one XOR+AND per candidate
-            val sl = BytePack.loadLongBE(s, i)
-            var ci = 0
-            while (!emitted && ci < cands.length) {
-              val c = cands(ci)
-              if (((sl ^ symPacked(c)) & symMask(c)) == 0L) {
-                ob(o) = c.toByte; o += 1
-                i += symLen(c)
-                emitted = true
-              }
-              ci += 1
-            }
-          } else {
-            var ci = 0
-            while (!emitted && ci < cands.length) {
-              val c = cands(ci)
-              val sym = symbols(c)
-              if (i + sym.length <= n && matches(s, i, sym)) {
-                ob(o) = c.toByte; o += 1
-                i += sym.length
-                emitted = true
-              }
-              ci += 1
-            }
-          }
-        }
-        if (!emitted) {
-          val c2 = code2(p)
-          if (c2 >= 0) {
-            ob(o) = c2.toByte; o += 1
-            i += 2
-            emitted = true
-          }
-        }
-      }
-      if (!emitted) {
-        val c1 = code1(b0)
-        if (c1 >= 0) { ob(o) = c1.toByte; o += 1 }
-        else { ob(o) = Escape.toByte; ob(o + 1) = b0.toByte; o += 2 }
-        i += 1
-      }
+      val w = wordAt(s, i, tailStart, tail)
+      val cl = longestMatch(short, runs, w, n - i)
+      if (cl != 0) { ob(o) = (cl >>> 4).toByte; o += 1; i += cl & 0xf }
+      else { ob(o) = Escape.toByte; ob(o + 1) = (w >>> 56).toByte; o += 2; i += 1 }
     }
     out.advanceTo(o)
   }

@@ -371,17 +371,20 @@ object DecodeJob {
     * [[MaxPrunedKeyCollect]] cap — this fraction is purely a break-even
     * heuristic, so it must not gate small stores where a 50%-selective
     * predicate still meaningfully prunes. `private[graft] var` so tests can
-    * widen it: [[estimatedGroups]] under-estimates byte-bound toy stores, and
-    * exercising the many-thousand-key pruning path at test scale needs the
-    * heuristic (not the mechanism) out of the way. */
+    * widen it: exercising the many-thousand-key pruning path at test scale
+    * needs the heuristic (not the mechanism) out of the way. */
   private[graft] var PruneFractionCutoff = 0.5
 
-  /** Total block groups estimated from the manifest alone (per-part
-    * ceil(nRows/BlockSize)) — zero file IO. UNDER-estimates stores whose
-    * fat-row blocks flushed on the byte bound, which only tightens the gate's
-    * fraction threshold (less pruning, never wrong results). */
+  /** Total block groups from the manifest alone — zero file IO: each part's
+    * stats carry its exact `n_groups`. A part committed without stats counts
+    * ceil(nRows/BlockSize), which UNDER-estimates parts whose fat-row blocks
+    * flushed on the byte bound and so only tightens the gate's fraction
+    * threshold (less pruning, never wrong results). */
   private[graft] def estimatedGroups(entries: Seq[SnapshotStore.PartEntry]): Long =
-    entries.map(e => math.max(1L, (e.nRows + EncodeJob.BlockSize - 1) / EncodeJob.BlockSize)).sum
+    entries.map { e =>
+      e.stats.map(_.nGroups.toLong).filter(_ > 0)
+        .getOrElse(math.max(1L, (e.nRows + EncodeJob.BlockSize - 1) / EncodeJob.BlockSize))
+    }.sum
 
   /**
    * GATED two-level planning of the pruned-group key set over ONE pinned

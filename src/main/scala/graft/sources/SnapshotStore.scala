@@ -502,13 +502,14 @@ object SnapshotStore {
     // aged in-progress debris INSIDE kept data dirs: a zombie V2 write attempt
     // can flush its dot-prefixed staging file after the driver's commit sweep;
     // it is invisible to readers but would otherwise leak disk for the life of
-    // the store (kept dirs are never whole-deleted)
+    // the store (kept dirs are never whole-deleted). Staging written through a
+    // checksummed file system also left a `..<name>.inprogress.crc` beside it.
     keptDirs.foreach { d =>
       val dir = Paths.get(root, d)
       if (Files.isDirectory(dir)) listDir(dir)
         .filter { p =>
           val n = p.getFileName.toString
-          n.startsWith(".") && n.endsWith(".inprogress") &&
+          n.startsWith(".") && (n.endsWith(".inprogress") || n.endsWith(".inprogress.crc")) &&
             now - mtimeOrNow(p) >= orphanGraceMs // zombie-rename race: stays in grace
         }
         .foreach { p => removedBytes += Files.size(p); Files.deleteIfExists(p) }

@@ -3,7 +3,9 @@ package graft.sources.v2
 import java.io.{EOFException, IOException}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FSDataInputStream, FSDataOutputStream, FileSystem, LocalFileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 
 import graft.codec.ByteWriter
 import graft.jobs.BlockRow
@@ -37,6 +39,26 @@ import graft.jobs.BlockRow
  */
 object BlockFile {
   val Extension = ".graft"
+
+  /** The file system block files are written and opened with. A checksummed
+    * `LocalFileSystem` hands over its raw one: no CRC32 pass over every byte,
+    * no `.crc` sidecar on write and no probe for one on open (the footer's
+    * magics and bounds already reject a torn file). A subclass that overrides
+    * `open` or `create` keeps its own behaviour. */
+  def fileSystem(p: Path, conf: Configuration): FileSystem = p.getFileSystem(conf) match {
+    case l: LocalFileSystem if checksumsOnly(l.getClass) => l.getRawFileSystem
+    case fs => fs
+  }
+
+  /** Whether `c` opens and creates files through `ChecksumFileSystem`'s own
+    * methods, so that its raw file system differs from it only by checksums
+    * (Hive's `ProxyLocalFileSystem`, which Spark may resolve `file:` to,
+    * overrides only `rename`). */
+  private def checksumsOnly(c: Class[_]): Boolean =
+    c.getMethod("open", classOf[Path], classOf[Int]).getDeclaringClass == classOf[ChecksumFileSystem] &&
+      c.getMethod("create", classOf[Path], classOf[FsPermission], classOf[Boolean], classOf[Int],
+        classOf[Short], classOf[Long], classOf[Progressable]).getDeclaringClass == classOf[ChecksumFileSystem]
+
   private val Magic = 0x47524654 // "GRFT"
   private val Version = 1
   private val TrailerBytes = 8
@@ -236,7 +258,7 @@ object BlockFile {
   def readAll(path: String, fileLen: Long, partId: Int, conf: Configuration,
       withEncoded: Boolean, keep: String => Boolean = _ => true): Array[BlockRow] = {
     val p = new Path(path)
-    val in = p.getFileSystem(conf).open(p)
+    val in = fileSystem(p, conf).open(p)
     try {
       val refs = readFooter(path, in, fileLen, partId).filter(r => keep(r.meta.column))
       if (!withEncoded) refs.map(_.meta)

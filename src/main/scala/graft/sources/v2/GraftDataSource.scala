@@ -1209,7 +1209,7 @@ private final class BlockGroupStream(p: GraftInputPartition, conf: Configuration
     private val path = new Path(file)
     private val partId = GraftDataWriter.partIdOf(path.getName).getOrElse(
       throw new BlockFile.CorruptBlockFileException(file, "its name carries no part id"))
-    private val in = path.getFileSystem(conf).open(path)
+    private val in = BlockFile.fileSystem(path, conf).open(path)
     private val refs =
       try BlockFile.readFooter(file, in, fileLen, partId)
       catch { case t: Throwable => in.close(); throw t }

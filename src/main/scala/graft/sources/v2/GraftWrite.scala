@@ -535,7 +535,7 @@ final class GraftDataWriter(absDir: String, partId: Int, taskId: Long,
   private val encoder = new graft.jobs.BlockEncoder(schema, partId, maxBlockBytes)({ b =>
     if (file == null) {
       val p = new Path(stagedPath.toString)
-      file = new BlockFile.Writer(p.getFileSystem(settings.conf()).create(p, false), partId)
+      file = new BlockFile.Writer(BlockFile.fileSystem(p, settings.conf()).create(p, false), partId)
     }
     file.add(b)
     rollup.add(b)

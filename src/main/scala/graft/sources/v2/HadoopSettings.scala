@@ -19,7 +19,9 @@ import org.apache.spark.sql.graftshim.Shim
  * `spark.*` keys are dropped: neither Hadoop's FileSystem nor parquet-mr
  * reads them. Settings that come from XML resources (`core-default.xml`,
  * `core-site.xml`, ...) are not carried: a task reads those from its own
- * JVM's resources, as any Hadoop client does.
+ * JVM's resources, as any Hadoop client does. Nor are the keys Spark sets by
+ * itself, with the values it gives them ([[HadoopSettings.setBySpark]]), so
+ * a default session's tasks share their JVM's conf instead of copying it.
  */
 final case class HadoopSettings(entries: Array[(String, String)]) {
 
@@ -38,16 +40,31 @@ final case class HadoopSettings(entries: Array[(String, String)]) {
 }
 
 object HadoopSettings {
+  /** Hadoop keys Spark sets by itself, with the values it gives them: the
+    * `spark.hadoop.*` defaults `SparkContext` adds when they are missing
+    * (Spark 4.1: the S3A vectored-read sizes), and the metastore warehouse
+    * dir `SharedState` copies from `spark.sql.warehouse.dir`. A task's JVM
+    * conf never holds them, so carrying them would make every task copy its
+    * conf, and no block-file read or write consults them: block files are
+    * read by positioned reads, not vectored ones. A user's own value for such
+    * a key is still carried. */
+  private def setBySpark(spark: SparkSession): Map[String, String] =
+    Map("fs.s3a.vectored.read.min.seek.size" -> "128K",
+      "fs.s3a.vectored.read.max.merged.size" -> "2M") ++
+      spark.conf.getOption("spark.sql.warehouse.dir").map("hive.metastore.warehouse.dir" -> _)
+
   /** The programmatic Hadoop settings of `spark`'s session, with the session
     * conf overriding the context's Hadoop conf as in Spark's own
     * `SessionState.newHadoopConf`. */
   def apply(spark: SparkSession): HadoopSettings = {
     val out = new java.util.LinkedHashMap[String, String]()
     val hc = spark.sparkContext.hadoopConfiguration
+    val bySpark = setBySpark(spark)
     hc.iterator().asScala.foreach { e =>
       val sources = hc.getPropertySources(e.getKey)
       if (!e.getKey.startsWith("spark.") &&
-          (sources == null || !sources.exists(_.endsWith(".xml"))))
+          (sources == null || !sources.exists(_.endsWith(".xml"))) &&
+          !bySpark.get(e.getKey).contains(e.getValue))
         out.put(e.getKey, e.getValue)
     }
     spark.sessionState.conf.getAllConfs.foreach { case (k, v) =>

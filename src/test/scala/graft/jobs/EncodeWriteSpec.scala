@@ -158,6 +158,15 @@ class EncodeWriteSpec extends AnyFunSuite {
     assert(DecodeJob.decodedRows(decoded) == 200L)
     assert(decoded.agg(countDistinct(col("url"))).collect()(0).getLong(0) == 200L,
       "no duplicated rows from lost or zombie attempts")
+    // block files bypass the local file system's checksums: no `.crc` sidecars
+    val dir = Paths.get(absDir)
+    assert(!SnapshotStore.listFileNames(dir).exists(_.endsWith(".crc")))
+    // expiry reclaims the zombie's staging, and the checksum sidecar a staged
+    // file written through the checksummed file system left beside it
+    Files.write(dir.resolve("." + GraftDataWriter.stagedName(GraftDataWriter.fileNameFor(1, 99L)) + ".crc"),
+      Array[Byte](1))
+    SnapshotStore.expireSnapshots(root, orphanGraceMs = 0L)
+    assert(SnapshotStore.listFileNames(dir).sorted == msgs.map(_.fileName).sorted)
   }
 
   /** Jobs started while `body` runs, in order: (job id, stage count, tasks of

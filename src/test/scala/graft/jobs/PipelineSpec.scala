@@ -262,6 +262,11 @@ class PipelineSpec extends AnyFunSuite {
       val group = java.util.UUID.randomUUID().toString
       sc.setJobGroup(group, "marker")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      // the status store learns of the job through the listener bus, which
+      // may still be behind when count() returns
+      val deadline = System.currentTimeMillis() + 30000L
+      while (sc.statusTracker.getJobIdsForGroup(group).isEmpty && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
       sc.statusTracker.getJobIdsForGroup(group).head
     }
     sc.addSparkListener(l)

@@ -73,21 +73,17 @@ class NativeBlockFileSpec extends AnyFunSuite {
     assert(entries.exists(_.file.isEmpty) && entries.exists(_.file.isDefined), "a mixed store")
     val all = pagesDf(HeadFormatStore.pages ++ extra)
     assert(sortedRows(graftDf(root)) == sortedRows(all))
-    // the manifest's group estimate undercounts these byte-bound blocks, so
-    // the break-even heuristic is widened to let the pruned path plan
-    val savedCutoff = DecodeJob.PruneFractionCutoff
-    DecodeJob.PruneFractionCutoff = 1e9
-    try {
-      val prefix = "https://host-1."
-      val pruned = col("url").startsWith(prefix) && col("lang") === "en"
-      assert(sortedRows(graftDf(root).where(pruned).select("url")) ==
-        sortedRows(all.where(pruned).select("url")))
-      val kept = GraftDataSource.planStatsFor(root).get.prunedGroupKeys
-      assert(kept.exists(k => k >= 1 && k < entries.map(_.stats.get.nGroups).sum), s"kept $kept")
-      assert(sortedRows(DecodeJob.decodeWhere(spark, root,
-        Seq(DecodeJob.StrPrefix("url", prefix))).toDF()) ==
-        sortedRows(all.where(col("url").startsWith(prefix))))
-    } finally DecodeJob.PruneFractionCutoff = savedCutoff
+    // planned at the default break-even cutoff: the gate counts each part's
+    // groups from its manifest stats
+    val prefix = "https://host-1."
+    val pruned = col("url").startsWith(prefix) && col("lang") === "en"
+    assert(sortedRows(graftDf(root).where(pruned).select("url")) ==
+      sortedRows(all.where(pruned).select("url")))
+    val kept = GraftDataSource.planStatsFor(root).get.prunedGroupKeys
+    assert(kept.exists(k => k >= 1 && k < entries.map(_.stats.get.nGroups).sum), s"kept $kept")
+    assert(sortedRows(DecodeJob.decodeWhere(spark, root,
+      Seq(DecodeJob.StrPrefix("url", prefix))).toDF()) ==
+      sortedRows(all.where(col("url").startsWith(prefix))))
     val lo = new java.sql.Timestamp(extra.map(_.warc_ts.getTime).min)
     val hi = new java.sql.Timestamp(lo.getTime + 3L * 86400000L)
     val pushed = col("warc_ts").between(lo, hi)

@@ -1082,6 +1082,21 @@ class V2SourceSpec extends AnyFunSuite {
     } finally spark.conf.unset("graft.test.session.setting")
   }
 
+  test("a default session's tasks share the JVM's Hadoop conf; a user's value for a Spark default is carried") {
+    val jvmConf = org.apache.spark.sql.graftshim.Shim.jvmHadoopConf
+    val settings = HadoopSettings(spark)
+    assert(settings.conf() eq jvmConf, s"carried: ${settings.entries.mkString(", ")}")
+    val hc = spark.sparkContext.hadoopConfiguration
+    val key = "fs.s3a.vectored.read.min.seek.size"
+    val saved = Option(hc.getRaw(key))
+    hc.set(key, "256K")
+    try assert(HadoopSettings(spark).entries.toMap.get(key).contains("256K"))
+    finally saved match {
+      case Some(v) => hc.set(key, v)
+      case None => hc.unset(key)
+    }
+  }
+
   test("Hadoop settings made on the context's Hadoop conf reach the executor-side reader") {
     val r = Files.createTempDirectory("graft-v2-hconf-").toString
     EncodeJob.run(spark, Webtext.generate(spark, 4000L, 8), r, parts = 8)
