@@ -898,7 +898,7 @@ object SparkEntry {
         s.readStream.schema(pages.schema).parquet(src), store, parts = 4, ckpt)
         .awaitTermination()
       // restart on the same checkpoint: nothing new to process; a replayed batch
-      // would be dropped by the manifest anti-join (exactly-once commits)
+      // would be dropped by the sink's epoch commit (exactly-once commits)
       StreamingEncode.encodeStream(
         s.readStream.schema(pages.schema).parquet(src), store, parts = 4, ckpt)
         .awaitTermination()

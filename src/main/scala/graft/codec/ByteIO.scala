@@ -22,9 +22,16 @@ final class ByteWriter(initialCapacity: Int = 256) {
   def bytes(bs: Array[Byte]): Unit = { ensure(bs.length); System.arraycopy(bs, 0, buf, len, bs.length); len += bs.length }
   /** int32 length prefix + bytes. */
   def sized(bs: Array[Byte]): Unit = { i32(bs.length); bytes(bs) }
+  /** int32 length prefix + the bytes written to `w`, copied from its buffer. */
+  def sized(w: ByteWriter): Unit = {
+    i32(w.len); ensure(w.len); System.arraycopy(w.buf, 0, buf, len, w.len); len += w.len
+  }
 
   def length: Int = len
-  def toByteArray: Array[Byte] = Arrays.copyOf(buf, len)
+  /** The bytes written. A writer filled to its exact capacity hands back its
+    * buffer without a copy: later writes grow into a new buffer first, so the
+    * returned bytes never change. */
+  def toByteArray: Array[Byte] = if (len == buf.length) buf else Arrays.copyOf(buf, len)
 
   // ---- bulk-writer escape hatch: reserve capacity once, write with a local
   // cursor (no per-byte ensure), then commit. Used by hot codec inner loops. ----

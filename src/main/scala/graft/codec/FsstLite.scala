@@ -53,6 +53,9 @@ object FsstLite {
     private[FsstLite] val symLen: Array[Int] = symbols.map(_.length)
     @transient private[FsstLite] lazy val dispatch: Dispatch = buildDispatch(symbols)
 
+    /** Bytes [[serialize]] writes. */
+    def serializedSize: Int = 1 + symbols.length + symLen.sum
+
     def serialize(out: ByteWriter): Unit = {
       out.u8(symbols.length)
       symbols.foreach { s => out.u8(s.length); out.bytes(s) }

@@ -114,11 +114,6 @@ object StringBlockCodec {
   private def encodeFsst(values: Array[Array[Byte]], table: FsstLite.Table): Array[Byte] = {
     var totalIn = 0
     values.foreach(totalIn += _.length)
-    val out = new ByteWriter(totalIn / 2 + 4096)
-    out.u8(MAGIC0); out.u8(MAGIC1)
-    out.u8(ID_FSST)
-    out.i32(values.length)
-    table.serialize(out)
     val payload = new ByteWriter(totalIn / 2 + 4096)
     val compLens = new Array[Long](values.length)
     var i = 0
@@ -128,8 +123,16 @@ object StringBlockCodec {
       compLens(i) = (payload.length - before).toLong
       i += 1
     }
-    out.sized(IntBlockCodec.encode(compLens, PhysicalIntType.U32))
-    out.sized(payload.toByteArray)
+    val lens = IntBlockCodec.encode(compLens, PhysicalIntType.U32)
+    // sized exactly, so the payload is copied once, straight into the block
+    // that toByteArray hands back
+    val out = new ByteWriter(3 + 4 + table.serializedSize + 4 + lens.length + 4 + payload.length)
+    out.u8(MAGIC0); out.u8(MAGIC1)
+    out.u8(ID_FSST)
+    out.i32(values.length)
+    table.serialize(out)
+    out.sized(lens)
+    out.sized(payload)
     out.toByteArray
   }
 

@@ -20,7 +20,10 @@ final class BlockEncoder(schema: StructType, partId: Int, maxBlockBytes: Long)(
   import EncodeJob.BlockSize
 
   private val fields = schema.fields
-  // per field: a byte-array buffer (string/binary) OR a long+valid buffer (ints)
+  // per field: a byte-array buffer (string/binary) OR a long+valid buffer
+  // (ints). Buffers start small and grow with the block up to BlockSize rows,
+  // so a writer of a small part never zeroes a full block's worth.
+  private var intCap = math.min(1024, BlockSize)
   private val strBufs = new Array[java.util.ArrayList[Array[Byte]]](fields.length)
   private val textual = new Array[Boolean](fields.length)
   private val longBufs = new Array[Array[Long]](fields.length)
@@ -28,13 +31,13 @@ final class BlockEncoder(schema: StructType, partId: Int, maxBlockBytes: Long)(
   private val intKind = new Array[PhysicalIntType](fields.length)
   fields.zipWithIndex.foreach { case (f, i) =>
     def ints(t: PhysicalIntType): Unit = {
-      longBufs(i) = new Array[Long](BlockSize); validBufs(i) = new Array[Boolean](BlockSize)
+      longBufs(i) = new Array[Long](intCap); validBufs(i) = new Array[Boolean](intCap)
       intKind(i) = t
     }
     f.dataType match {
       case StringType =>
-        strBufs(i) = new java.util.ArrayList[Array[Byte]](BlockSize); textual(i) = true
-      case BinaryType => strBufs(i) = new java.util.ArrayList[Array[Byte]](BlockSize)
+        strBufs(i) = new java.util.ArrayList[Array[Byte]](); textual(i) = true
+      case BinaryType => strBufs(i) = new java.util.ArrayList[Array[Byte]]()
       case TimestampType | LongType => ints(PhysicalIntType.I64)
       case IntegerType => ints(PhysicalIntType.I32)
       case ShortType => ints(PhysicalIntType.I16)
@@ -48,6 +51,7 @@ final class BlockEncoder(schema: StructType, partId: Int, maxBlockBytes: Long)(
   private var bufBytes = 0L
 
   def add(row: InternalRow): Unit = {
+    if (n == intCap) growInts()
     var i = 0
     while (i < fields.length) {
       if (strBufs(i) != null) {
@@ -75,6 +79,18 @@ final class BlockEncoder(schema: StructType, partId: Int, maxBlockBytes: Long)(
     n += 1
     bufBytes += 8L
     if (n == BlockSize || bufBytes >= maxBlockBytes) flush()
+  }
+
+  private def growInts(): Unit = {
+    intCap = math.min(intCap * 2, BlockSize)
+    var i = 0
+    while (i < fields.length) {
+      if (longBufs(i) != null) {
+        longBufs(i) = java.util.Arrays.copyOf(longBufs(i), intCap)
+        validBufs(i) = java.util.Arrays.copyOf(validBufs(i), intCap)
+      }
+      i += 1
+    }
   }
 
   /** Emit the buffered rows as one block (no-op when empty). */

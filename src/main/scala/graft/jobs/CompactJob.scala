@@ -1,13 +1,13 @@
 package graft.jobs
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Encoders, SparkSession}
 
 import graft.sources.SnapshotStore
 
 /**
  * OPTIMIZE-style store maintenance: merge fragmented small parts into full-size
- * ones. Streaming encode gives every micro-batch its own part-id namespace
- * ([[graft.streaming.StreamingEncode.encodeStream]]), so a long-running stream
+ * ones. The streaming sink gives every micro-batch its own part-id namespace
+ * ([[graft.sources.v2.GraftStreamingWrite]]), so a long-running stream
  * accumulates many sub-block-size parts whose per-part overhead (manifest rows,
  * tiny block files, FSST tables per small block) degrades scans.
  *
@@ -21,7 +21,7 @@ import graft.sources.SnapshotStore
  *    deleted, pre-compaction snapshots stay readable.
  *  - Resume/exactly-once: compacted parts get ids in a NEGATIVE namespace (below
  *    every batch/wave id, which are always >= 0), so a replayed streaming batch
- *    can never collide with a compacted part in the manifest anti-join.
+ *    can never collide with a compacted part in the sink's replay check.
  *  - Bounded memory: the rewrite is the standard shuffle-once encode pipeline —
  *    no per-part driver materialization.
  */
@@ -56,10 +56,9 @@ object CompactJob {
     val pages = DecodeJob.decodePartsOf(spark, root, curSnap, smallIds)
     // fresh boundaries for the compacted subset; the store-level BOUNDARIES file
     // (the batch job's work-unit definition) is deliberately left untouched.
-    // totalRows comes from the manifest: pages is a full DECODE, so the
-    // boundary sampler's count() fallback would decompress everything once
-    // more for a number the manifest already has
-    val boundaries = EncodeJob.computeBoundaries(pages, newParts, Some(totalRows))
+    // The sample reads only the url column of the parts.
+    val boundaries = EncodeJob.computeUrlBoundaries(
+      pages.select("url").as(Encoders.STRING), newParts)
     val prepared = EncodeJob.withPartIds(pages.toDF(), boundaries, base)
     val (_, newEntries, _) = EncodeJob.stageEncode(spark, prepared, newParts, root)
 

@@ -72,11 +72,12 @@ object DeleteJob {
     }
 
     // re-encode the survivors (CompactJob's shape): affectedRows is a cheap
-    // manifest-derived UPPER bound for the sampler — an exact survivor count
-    // would cost one extra full decode+filter pass
+    // manifest-derived UPPER bound for the part count — an exact survivor
+    // count would cost one extra full decode+filter pass
     val newParts = math.max(1L, (affectedRows + EncodeJob.BlockSize - 1) / EncodeJob.BlockSize).toInt
     val base = SnapshotStore.nextRehomeBase(root, newParts)
-    val boundaries = EncodeJob.computeBoundaries(survivors, newParts, Some(affectedRows))
+    val boundaries = EncodeJob.computeUrlBoundaries(
+      survivors.select("url").as(Encoders.STRING), newParts)
     val prepared = EncodeJob.withPartIds(survivors.toDF(), boundaries, base)
     val (_, newEntries, _) = EncodeJob.stageEncode(spark, prepared, newParts, root)
 

@@ -107,38 +107,23 @@ object EncodeJob {
   // ---------------- range boundaries (deterministic, persisted) ----------------
 
   /**
-   * Deterministic sample of urls -> parts-1 sorted boundary strings.
-   * The sampling rate adapts to the row count (parquet count() is metadata-only, so
-   * this costs no data scan) and the sample is a pure hash filter — unbiased across
-   * the whole input, unlike limit(), which would only see the first files read and
-   * skew every boundary at scale.
-   */
-  def computeBoundaries(pages: Dataset[WebPage], parts: Int,
-                        knownTotal: Option[Long] = None): Array[String] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    computeUrlBoundaries(pages.select($"url").as[String], parts, knownTotal)
-  }
-
-  /**
-   * ONE-pass (row count, partition count, range boundaries) for the V2
-   * write-arrange rule (r7, closing the r6 verdict item: the separate
-   * `count()` job computed the write's child a second time — for a child
-   * where column pruning cannot cheapen the url projection, a third full
-   * compute on top of the sample and the write itself).
+   * ONE-pass (row count, partition count, range boundaries): the store's one
+   * url sampler, behind the batch job, compaction, delete and the V2
+   * write-arrange rule. The count rides in the same pass, so no separate
+   * `count()` job computes the input a second time.
    *
    * Per partition: exact row count + a deterministic uniform reservoir of
-   * SAMPLEABLE urls (exclusions identical to [[computeUrlBoundaries]]: null,
-   * empty, and newline-holding urls can never become split points — they
-   * still bucket fine as data). Driver side: the caller's sizing function
-   * turns the exact total into the partition count, then boundaries are
-   * weighted quantiles over the merged reservoirs (each sampled url stands
-   * for eligible_i/|sample_i| rows — the public RangePartitioner scheme).
+   * SAMPLEABLE urls. Null, empty and newline-holding urls never become split
+   * points (they still bucket fine as data): a null buckets as "" (always
+   * part 0), a "" boundary vanishes in the persisted file's split/filter
+   * round-trip, and an embedded newline splits into two bogus boundaries, so
+   * a resumed run would re-bucket rows under a different layout than the one
+   * committed. Driver side: the caller's sizing function turns the exact
+   * total into the partition count, then boundaries are weighted quantiles
+   * over the merged reservoirs (each sampled url stands for
+   * eligible_i/|sample_i| rows — the public RangePartitioner scheme).
    * Deterministic for a given input partitioning: the reservoir PRNG is
-   * seeded per partition index. Boundary QUALITY matches the hash-threshold
-   * sampler (~200+ candidates per split point at the default sizes); the
-   * exact split points differ, which only moves block-range edges — content,
-   * ordering guarantees, and prefix pruning are unaffected.
+   * seeded per partition index.
    */
   def countAndUrlBoundaries(urls: Dataset[String],
                             partsFor: Long => Int): (Long, Int, Array[String]) = {
@@ -146,8 +131,8 @@ object EncodeJob {
     // driver-collect bound (review finding): a many-thousand-partition input
     // must not collect 4096 urls PER partition — scale the per-partition
     // reservoir so the total candidate collect stays ~2^18 strings at any
-    // width (the old hash-threshold sampler's 200k bound, same order), with
-    // a floor so every partition still contributes weighted candidates
+    // width, with a floor so every partition still contributes weighted
+    // candidates
     val ReservoirPerPartition =
       math.max(16, math.min(4096, (1 << 18) / math.max(1, rdd.getNumPartitions)))
     val partials = rdd.mapPartitionsWithIndex { (idx, it) =>
@@ -174,8 +159,8 @@ object EncodeJob {
     val parts = partsFor(total)
     val eligibleTotal = partials.iterator.map(_._2).sum
     if (parts <= 1 || eligibleTotal == 0) return (total, parts, Array.empty)
-    // weighted candidates, sorted by url (the same String ordering
-    // computeUrlBoundaries' `.sorted` uses, which RangeBucketId mirrors)
+    // weighted candidates, sorted by url (the String ordering RangeBucketId
+    // mirrors)
     val candidates = new scala.collection.mutable.ArrayBuffer[(String, Double)](
       partials.iterator.map(_._3.length).sum)
     partials.foreach { case (_, elig, sample) =>
@@ -215,54 +200,15 @@ object EncodeJob {
     bounds.toArray
   }
 
-  /** Boundary computation over a bare url column — shared by the batch job
-    * (above) and the V2 write-arrange rule ([[graft.plans.GraftWriteArrangeRule]]),
-    * whose input is an arbitrary resolved query, not a WebPage dataset. */
-  def computeUrlBoundaries(urlsCol: Dataset[String], parts: Int,
-                           knownTotal: Option[Long] = None): Array[String] = {
-    if (parts <= 1) return Array.empty
-    val spark = urlsCol.sparkSession
-    import spark.implicits._
-    val targetSample = math.min(parts * 200L, 200000L)
-    // knownTotal skips the count() pass — for PARQUET inputs count is
-    // metadata-only, but compaction's input is a full decode, where an extra
-    // count() decompresses every block again
-    val total = math.max(knownTotal.getOrElse(urlsCol.count()), 1L)
-    val rateDenom = 1000000L
-    val threshold = math.min((targetSample * rateDenom) / total + 1, rateDenom)
-    // null urls are excluded from the SAMPLE only: a null can never be a split
-    // point (RangeBucketId buckets null as "", i.e. always part 0), and
-    // xxhash64(null)'s sampling behavior would otherwise decide whether this
-    // sort NPEs — stores with null urls were un-encodable depending on which
-    // rows the hash picked
-    // empty and newline-holding urls are excluded from the SAMPLE only (they
-    // still bucket fine as data): a "" boundary vanishes in the persisted
-    // file's split/filter round-trip and an embedded newline splits into two
-    // bogus boundaries — a resumed run would re-bucket rows under a DIFFERENT
-    // layout than the one committed, which the resume filter then turns into
-    // silently dropped or duplicated rows. Any sampled url is just a split
-    // point, so narrowing the sample never hurts correctness.
-    val urls = urlsCol
-      .where($"url".isNotNull && $"url" =!= "" && !$"url".contains("\n") &&
-        pmod(xxhash64($"url"), lit(rateDenom)) < lit(threshold))
-      .collect().sorted
-    if (urls.isEmpty) Array.empty
-    else Array.tabulate(parts - 1) { i =>
-      urls(((i + 1).toLong * urls.length / parts).toInt.min(urls.length - 1))
-    }.distinct
-  }
+  /** The `parts - 1` url range boundaries of `urls` (see
+    * [[countAndUrlBoundaries]]): the sampler behind the batch job, compaction
+    * and delete. */
+  def computeUrlBoundaries(urls: Dataset[String], parts: Int): Array[String] =
+    countAndUrlBoundaries(urls, _ => parts)._3
 
-  def loadOrCreateBoundaries(root: String, pages: Dataset[WebPage], parts: Int,
-                             boundariesFile: String = "BOUNDARIES"): Array[String] = {
-    val p = Paths.get(root, boundariesFile)
-    if (Files.exists(p)) {
-      new String(Files.readAllBytes(p), StandardCharsets.UTF_8).split("\n").filter(_.nonEmpty)
-    } else {
-      // r7: ONE url-only pass (count folded into the reservoir sample) — the
-      // previous computeBoundaries ran a count() job AND a sample job over the
-      // input before the encode itself, a fixed per-run cost at every
-      // parallelism level. Resume determinism is unchanged: boundaries are
-      // persisted below and re-read, never recomputed.
+  def loadOrCreateBoundaries(root: String, pages: Dataset[WebPage], parts: Int): Array[String] = {
+    val p = Paths.get(root, "BOUNDARIES")
+    if (!Files.exists(p)) {
       // Assumes deterministic upstream row order: the reservoir is seeded per
       // input partition index, so the same input yields the same boundaries
       // only when each partition delivers its rows in a fixed order (a file
@@ -271,14 +217,13 @@ object EncodeJob {
       // reads the persisted file, so this bears on reproducibility only.
       val spark = pages.sparkSession
       import spark.implicits._
-      val (_, _, bs) = countAndUrlBoundaries(pages.select($"url").as[String], _ => parts)
-      SnapshotStore.writeSidecar(root, boundariesFile, bs.mkString("\n"))
-      // return what a RESUMED run will parse back, not the in-memory array:
-      // create and resume must bucket identically or the resume filter
-      // drops/duplicates rows (the sample filter above makes the round-trip
-      // lossless; this is belt and braces against future boundary sources)
-      new String(Files.readAllBytes(p), StandardCharsets.UTF_8).split("\n").filter(_.nonEmpty)
+      val bs = computeUrlBoundaries(pages.select($"url").as[String], parts)
+      SnapshotStore.writeSidecar(root, "BOUNDARIES", bs.mkString("\n"))
     }
+    // a fresh run returns what a RESUMED run will parse back, not the
+    // in-memory array: create and resume must bucket identically or the
+    // resume filter drops/duplicates rows
+    new String(Files.readAllBytes(p), StandardCharsets.UTF_8).split("\n").filter(_.nonEmpty)
   }
 
   /** part_id = range bucket of url (pure function of url + persisted boundaries).
@@ -519,27 +464,20 @@ object EncodeJob {
    * committed checkpoint. `maxWaves` exists for kill/resume tests.
    */
   def run(spark: SparkSession, pages: Dataset[WebPage], root: String, parts: Int,
-          waves: Int = 1, maxWaves: Int = Int.MaxValue, partOffset: Long = 0L,
-          maxBlockBytes: Long = MaxBlockBytes,
-          boundariesFile: String = "BOUNDARIES"): RunResult = {
-    // part ids are Int: a streaming batchId*parts namespace past Int.MaxValue
-    // would wrap NEGATIVE (colliding with the compaction namespace and earlier
-    // batches) and silently drop work in the resume filter — fail fast
-    require(partOffset >= 0 && partOffset + parts <= Int.MaxValue.toLong,
-      s"part-id namespace [$partOffset, ${partOffset + parts}) exceeds the Int range")
+          waves: Int = 1, maxWaves: Int = Int.MaxValue,
+          maxBlockBytes: Long = MaxBlockBytes): RunResult = {
     Files.createDirectories(Paths.get(root))
-    val boundaries = loadOrCreateBoundaries(root, pages, parts, boundariesFile)
+    val boundaries = loadOrCreateBoundaries(root, pages, parts)
     // a smaller `parts` than the persisted range layout would leave buckets
-    // >= partOffset+parts outside every wave's pending set: rows bucketed there
-    // would be SILENTLY skipped (never encoded, never an error). Boundaries
-    // define bucket count for the life of the store — fail fast instead.
+    // >= parts outside every wave's pending set: rows bucketed there would be
+    // SILENTLY skipped (never encoded, never an error). Boundaries define
+    // bucket count for the life of the store — fail fast instead.
     require(parts >= boundaries.length + 1,
       s"store at $root is range-partitioned into ${boundaries.length + 1} buckets " +
-      s"($boundariesFile); parts=$parts would silently skip buckets " +
-      s"${partOffset + parts}..${partOffset + boundaries.length} — " +
-      s"pass parts >= ${boundaries.length + 1}")
+      s"(BOUNDARIES); parts=$parts would silently skip buckets " +
+      s"$parts..${boundaries.length} — pass parts >= ${boundaries.length + 1}")
 
-    val withPart = withPartIds(pages.toDF(), boundaries, partOffset.toInt)
+    val withPart = withPartIds(pages.toDF(), boundaries, 0)
 
     // RESUME: drop work units already committed (a narrow part-id filter per
     // wave; manifest rows ≪ data at any scale). Only REACHABLE ids can
@@ -548,8 +486,7 @@ object EncodeJob {
     // count can never produce a row — treating them as pending would re-scan
     // the whole input on every call to a fully-encoded store, forever.
     val committed = SnapshotStore.committedPartIds(root)
-    val reachable = partOffset.toInt until (partOffset + boundaries.length + 1).toInt
-    val pendingParts = reachable.filterNot(committed)
+    val pendingParts = (0 to boundaries.length).filterNot(committed)
     val waveSize = math.max(1, (pendingParts.size + waves - 1) / math.max(waves, 1))
     val groups = pendingParts.grouped(waveSize).take(maxWaves).toSeq
 

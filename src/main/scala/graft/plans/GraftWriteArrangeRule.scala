@@ -23,7 +23,7 @@ import org.apache.spark.sql.types.StringType
  *
  * The arranged plan is the batch job's, expressed over the write's child:
  *
- *  1. one url-ONLY boundary-sample job ([[graft.jobs.EncodeJob.computeUrlBoundaries]]
+ *  1. one url-ONLY count-and-sample job ([[graft.jobs.EncodeJob.countAndUrlBoundaries]]
  *     — column-pruned through the child query, so it reads ~the url bytes, not
  *     the full rows);
  *  2. a pass-through exchange — `DirectShufflePartitionID(RangeBucketId(url))`

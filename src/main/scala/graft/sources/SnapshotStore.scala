@@ -302,28 +302,6 @@ object SnapshotStore {
       }.sum
   }
 
-  /** Tombstoned ids INTERSECTING `[lo, hi)` at a snapshot, without
-    * materializing the full set: O(sidecar lines) range-overlap scan yielding
-    * only the in-window ids (bounded by the window width). The per-batch
-    * replay verification asks "were any of MY namespace's parts rehomed?" on
-    * every stream trigger — expanding a multi-million-id accumulated set to
-    * answer it would box the whole store's compaction history each batch. */
-  def tombstonesInRange(root: String, snapshotId: Long, lo: Long, hi: Long): Set[Int] = {
-    val p = Paths.get(root, "manifests", s"$snapshotId.tombstones")
-    if (!Files.exists(p)) Set.empty
-    else Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-      .filter(_.nonEmpty).iterator.flatMap { line =>
-        val t = line.trim
-        val dash = t.indexOf('-', 1) // from 1: skips a negative id's sign (see tombstonesAt)
-        val (a, b) =
-          if (dash < 0) { val v = t.toLong; (v, v) }
-          else (t.substring(0, dash).toLong, t.substring(dash + 1).toLong)
-        val from = math.max(a, lo)
-        val to = math.min(b, hi - 1)
-        if (from > to) Iterator.empty else (from.toInt to to.toInt).iterator
-      }.toSet
-  }
-
   /** Merge sorted ids into "a-b" range lines: tombstones accumulate monotonically
     * across every compaction, and streaming part ids come in contiguous
     * per-batch runs, so range encoding keeps the sidecar (re-read and rewritten
@@ -362,10 +340,6 @@ object SnapshotStore {
     * guard on every later run (permanently un-compactable store). */
   def nextRehomeBase(root: String, newParts: Int): Int =
     (committedPartIds(root) + 0).min - newParts // the `+ 0` bounds min at <= 0
-
-  /** Absolute paths of all committed data dirs (the snapshot's readable file set). */
-  def dataDirs(root: String): Seq[String] =
-    currentEntries(root).map(_.dataDir).distinct.map(d => Paths.get(root, d).toString)
 
   /** Allocate a fresh staging data dir (not visible until committed). */
   def newDataDir(root: String): (String, String) = {
@@ -481,10 +455,9 @@ object SnapshotStore {
     // sidecar crash debris: ONE generic predicate matching writeSidecar's
     // `.name.tmp.uuid` convention (a hard-coded per-sidecar whitelist here
     // silently leaked every NEWLY added sidecar's stranded tmps), swept in the
-    // root AND the manifests dir; plus aged per-batch streaming boundary files
-    // (BOUNDARIES.b<N> is a determinism CACHE — a replayed batch recomputes
-    // identical boundaries from its identical checkpointed input, so sweeping
-    // old ones is safe and bounds root-dir growth on long streams)
+    // root AND the manifests dir; plus aged per-batch boundary files
+    // (BOUNDARIES.b<N>: only stores streamed before `encodeStream` became a
+    // wrapper over the native sink hold them, and nothing reads them now)
     def staleIn(dir: Path, rel: String => String): Seq[String] =
       if (!Files.isDirectory(dir)) Seq.empty
       else listDir(dir).iterator

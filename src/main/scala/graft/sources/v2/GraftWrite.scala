@@ -49,9 +49,10 @@ import graft.sources.SnapshotStore
  * committed (and tombstoned) id — appends never collide with prior work
  * units. Writer-mixing rules, enforced: a streaming-encoded store REFUSES SQL
  * appends (they would occupy future batches' ids — see the require in
- * [[GraftBatchWrite]]), and streaming refuses non-fresh stores
- * (StreamingEncode.checkStreamParts). `EncodeJob.run` on a SQL-grown store is
- * safe but inert for ids it considers committed (resume-by-part-id semantics).
+ * [[GraftBatchWrite]]), and the streaming sink refuses non-fresh stores
+ * ([[graft.streaming.StreamingEncode.checkStreamParts]]). `EncodeJob.run` on
+ * a SQL-grown store is safe but inert for ids it considers committed
+ * (resume-by-part-id semantics).
  */
 final class GraftWriteBuilder(root: String, info: LogicalWriteInfo)
     extends WriteBuilder with SupportsTruncate {
@@ -241,8 +242,8 @@ final class GraftBatchWrite(root: String, replaceAll: Boolean,
 
   // a streaming-encoded store reserves the WHOLE upward id space as its
   // batchId*parts namespace: a SQL append at max+1 would occupy a future
-  // batch's ids and that batch would be silently dropped by the resume
-  // anti-join — refuse loudly instead (the reverse direction is guarded in
+  // batch's ids and the sink would take that batch for a replay — refuse
+  // loudly instead (the reverse direction is guarded in
   // StreamingEncode.checkStreamParts)
   require(!java.nio.file.Files.exists(Paths.get(root, "STREAM_PARTS")),
     s"store at $root is written by a streaming encode (STREAM_PARTS pins its " +
@@ -295,22 +296,6 @@ final case class GraftDataWriterFactory(absDir: String, partOffset: Int,
     new GraftDataWriter(absDir, partOffset + partitionId, taskId, settings, schema)
 }
 
-/**
- * Native Structured Streaming sink: `df.writeStream.format("graft")
- * .start(root)` — each epoch (micro-batch) runs the same per-task encode
- * kernels and ends in one atomic manifest commit, exactly-once:
- *
- *  - The part-id namespace is `epochId * parts + partitionId` with `parts`
- *    PINNED in the STREAM_PARTS sidecar (the same contract as
- *    [[graft.streaming.StreamingEncode.encodeStream]], and the writer count is
- *    enforced via [[RequiresDistributionAndOrdering.requiredNumPartitions]]).
- *  - A REPLAYED epoch (engine restart after a commit) re-stages into a fresh
- *    dir, and [[GraftStreamingWrite.commit]] detects its part ids already in
- *    the manifest — the duplicate staging is dropped, nothing double-commits.
- *  - Task attempts stage dot-named `.inprogress` files, and the epoch commit
- *    promotes only the files its messages name (the batch writer's zombie
- *    discipline), sweeping the rest before the manifest swap.
- */
 /** Per-epoch original row totals, persisted at commit (`EPOCH_ROWS` sidecar:
   * one `"<epochId> <rows>"` line per committed epoch). This is what keeps
   * replay verification EXACT for the life of the store: the manifest-based
@@ -346,8 +331,8 @@ private[graft] object EpochRows {
   /** The epoch's committed ORIGINAL row total for namespace [lo, hi): the
     * sidecar when present, else the oldest retained manifest still listing the
     * epoch's ids un-tombstoned (a manifest that already tombstoned part of the
-    * epoch lists only a PARTIAL total — unusable). Shared by BOTH streaming
-    * sinks' replay verification; callers should [[record]] a recovered total
+    * epoch lists only a PARTIAL total — unusable). The sink's replay
+    * verification reads it; callers should [[record]] a recovered total
     * back (a crash between manifest commit and record() otherwise leaves the
     * verification window open until compaction+expiry erase the evidence). */
   def originalTotal(root: String, epochId: Long, lo: Long, hi: Long): Option[Long] =
@@ -365,6 +350,23 @@ private[graft] object EpochRows {
     }
 }
 
+/**
+ * Native Structured Streaming sink: `df.writeStream.format("graft")
+ * .start(root)`, which [[graft.streaming.StreamingEncode.encodeStream]]
+ * wraps — each epoch (micro-batch) runs the same per-task encode kernels and
+ * ends in one atomic manifest commit, exactly-once:
+ *
+ *  - The part-id namespace is `epochId * parts + partitionId` with `parts`
+ *    PINNED in the STREAM_PARTS sidecar, and the writer count is enforced via
+ *    [[RequiresDistributionAndOrdering.requiredNumPartitions]].
+ *  - A REPLAYED epoch (engine restart after a commit) re-stages into a fresh
+ *    dir, and [[GraftStreamingWrite.commit]] finds ids of its namespace
+ *    already committed — once the row totals agree the duplicate staging is
+ *    dropped, nothing double-commits.
+ *  - Task attempts stage dot-named `.inprogress` files, and the epoch commit
+ *    promotes only the files its messages name (the batch writer's zombie
+ *    discipline), sweeping the rest before the manifest swap.
+ */
 final class GraftStreamingWrite(root: String,
     schema: StructType = GraftDataSource.PageSchema)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
@@ -399,26 +401,28 @@ final class GraftStreamingWrite(root: String,
       GraftWriteLayout.sweepStrays(absDir(epochId), Set.empty, dropDirIfEmpty = true)
       return
     }
-    // replayed epoch: its deterministic ids are already in the manifest — the
-    // rows are committed, so the duplicate staging is dropped. But an id
-    // overlap alone does NOT prove a replay: a FRESH checkpoint over a grown
-    // source re-delivers committed data MIXED WITH NEW ROWS inside the same
-    // epoch namespace, and dropping that would silently lose the new rows.
-    // Verify by row count: each epoch is one atomic commit, so equal totals =
-    // replay (the range exchange may re-split the same rows differently, so
-    // ids/per-part counts can drift; the SUM cannot). The original total comes
+    // replayed epoch: ids of its namespace are already in the manifest — the
+    // rows are committed, so the duplicate staging is dropped. The whole
+    // namespace is checked, not only the staged ids: the range exchange may
+    // re-split the same rows differently (a different sample, or a store
+    // streamed with another bucketing), so ids and per-part counts can drift;
+    // the SUM cannot. But an id overlap alone does NOT prove a replay: a
+    // FRESH checkpoint over a grown source re-delivers committed data MIXED
+    // WITH NEW ROWS inside the same epoch namespace, and dropping that would
+    // silently lose the new rows. Verify by row count: each epoch is one
+    // atomic commit, so equal totals = replay. The original total comes
     // from the EPOCH_ROWS sidecar (exact for the life of the store); stores
     // streamed before the sidecar existed fall back to the oldest surviving
     // manifest holding the epoch's ids — entries are immutable until
     // tombstoned, so that manifest lists the original total unless a
     // compaction already rewrote it.
+    val parts = graft.streaming.StreamingEncode.pinnedStreamParts(root)
+      .getOrElse(throw new IllegalStateException(
+        s"store at $root streams an epoch but has no STREAM_PARTS sidecar"))
+    val lo = epochId * parts
+    val hi = lo + parts
     val committed = SnapshotStore.committedPartIds(root)
-    if (entries.exists(e => committed(e.partId))) {
-      val parts = graft.streaming.StreamingEncode.pinnedStreamParts(root)
-        .getOrElse(throw new IllegalStateException(
-          s"store at $root has committed stream epochs but no STREAM_PARTS sidecar"))
-      val lo = epochId * parts
-      val hi = lo + parts
+    if ((lo until hi).exists(id => committed(id.toInt))) {
       val stagedRows = entries.iterator.map(_.nRows).sum
       EpochRows.originalTotal(root, epochId, lo, hi) match {
         case Some(origRows) =>
@@ -464,7 +468,7 @@ final case class GraftStreamingDataWriterFactory(root: String, runUuid: String,
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] = {
     // deterministic epoch namespace (the replay-idempotence key); guard the
-    // Int range like EncodeJob.run — a wrapped id would collide silently
+    // Int range — a wrapped id would collide silently
     val offset = epochId * parts
     require(offset >= 0 && offset + parts <= Int.MaxValue.toLong,
       s"stream epoch namespace [$offset, ${offset + parts}) exceeds the Int range")

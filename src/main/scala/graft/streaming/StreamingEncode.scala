@@ -1,21 +1,22 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
-import graft.jobs.EncodeJob
-import graft.sources.WebPage
+import graft.sources.v2.GraftDataSource.PageSchema
 
 /**
  * Streaming surface. The codec core is explicitly single-pass with O(1) state
  * (reference: README.md:5-6, src/golomb.h:173-175), so the batch kernels slot into
  * Structured Streaming unchanged:
  *
- *  - [[encodeStream]]: readStream -> foreachBatch -> the SAME EncodeJob.run used in
- *    batch. Each micro-batch ends in an atomic snapshot commit; Spark's streaming
- *    checkpoint + the store's manifest give end-to-end exactly-once block commits
- *    (a replayed batch re-encodes only parts missing from the manifest).
+ *  - [[encodeStream]]: readStream -> the native graft sink
+ *    ([[graft.sources.v2.GraftStreamingWrite]]), whose writer tasks run the
+ *    same block kernel as the batch job. Each micro-batch ends in an atomic
+ *    snapshot commit; Spark's streaming checkpoint + the store's manifest give
+ *    end-to-end exactly-once block commits (a replayed batch's staging is
+ *    dropped once its row total matches the committed one).
  *  - [[windowedLangCounts]]: watermarked event-time windows over page arrivals —
  *    late data beyond the watermark is dropped by Spark, counts are append-mode.
  *  - [[dedupStream]]: stateful exact dedup by content fingerprint via
@@ -23,129 +24,23 @@ import graft.sources.WebPage
  */
 object StreamingEncode {
 
-  /** Encode a streaming pages source into the snapshot store, one commit per batch. */
+  /** Encode a streaming pages source into the snapshot store, one commit per
+    * batch: `pages` (the page columns, by name) through
+    * `writeStream.format("graft")` with `parts` writer tasks per batch. */
   def encodeStream(pages: DataFrame, root: String, parts: Int,
                    checkpointDir: String): StreamingQuery = {
     // the exactly-once namespace is batchId*parts — a RESTART with a different
-    // `parts` would re-home a replayed batch into fresh (uncommitted) ids and
-    // the manifest anti-join could no longer drop it (duplicate rows). Pin the
-    // stream's parts in a sidecar and refuse a mismatch.
+    // `parts` would re-home a replayed batch into fresh (uncommitted) ids.
+    // Pinning it here, before the query starts, makes a mismatch (or a
+    // non-fresh store) fail at call time; the sink then asks Spark for
+    // exactly the pinned width.
     checkStreamParts(root, parts)
-    pages.writeStream
-      .outputMode(OutputMode.Append)
+    pages.select(PageSchema.fieldNames.toIndexedSeq.map(col): _*)
+      .writeStream
+      .format("graft")
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import batch.sparkSession.implicits._
-        // distinct work-unit namespace per micro-batch: appends get fresh part ids,
-        // while a REPLAYED batch reuses its ids and is dropped by the resume
-        // anti-join -> exactly-once block commits. Boundaries are PER BATCH:
-        // one global file sampled from micro-batch 0 would skew every later
-        // batch's work units whenever the first file is unrepresentative (e.g.
-        // one host's pages under maxFilesPerTrigger=1); replay determinism
-        // holds either way — the per-batch file is persisted, and recomputing
-        // it from the same replayed batch yields identical boundaries.
-        // persist: a streaming batch is NOT a parquet scan with metadata-only
-        // count — unpersisted, the boundary count, the boundary sample, and
-        // the encode job each recompute the source (3x scan per trigger)
-        batch.persist()
-        try {
-          val res = EncodeJob.run(batch.sparkSession, batch.as[WebPage], root, parts,
-            partOffset = batchId * parts, boundariesFile = s"BOUNDARIES.b$batchId")
-          val lo = batchId * parts
-          val hi = lo + parts
-          if (res.partsEncoded > 0) {
-            // record THE BATCH's committed total (manifest-read, covers a
-            // partial-crash resume that encoded only some waves) in the same
-            // EPOCH_ROWS sidecar as the native sink — the evidence that keeps
-            // replay verification exact after compaction rewrites history.
-            // The CURRENT manifest alone is not enough when a compaction ran
-            // between the pre-crash partial commit and this resume: the
-            // crashed waves' parts are rehomed OUT of [lo, hi), and summing
-            // current entries would permanently record an under-count (a
-            // later genuine replay would then crash-loop on the row check
-            // below). In-range tombstones detect that case; the parts' true
-            // rows are recovered from the retained manifest that still holds
-            // them (part rows are immutable once committed), or — if expiry
-            // removed every such manifest — the total is honestly
-            // unverifiable and NO line is recorded (warn, window stays open).
-            val curId = graft.sources.SnapshotStore.currentSnapshotId(root)
-            val cur = graft.sources.SnapshotStore.currentEntries(root)
-              .filter(e => e.partId >= lo && e.partId < hi)
-            // bounded O(sidecar lines) overlap scan — never the full
-            // multi-million-id accumulated set just to test one window
-            val tombsInRange = curId.map(id => graft.sources.SnapshotStore
-              .tombstonesInRange(root, id, lo, hi)).getOrElse(Set.empty)
-            if (tombsInRange.isEmpty) {
-              graft.sources.v2.EpochRows.record(root, batchId,
-                cur.iterator.map(_.nRows).sum)
-            } else {
-              val seen = scala.collection.mutable.Map.empty[Int, Long]
-              cur.foreach(e => seen.getOrElseUpdate(e.partId, e.nRows))
-              // oldest-first walk of RETAINED manifests for the rehomed parts'
-              // original rows; stop as soon as every tombstoned id resolved,
-              // skip the current manifest (cur already covered it), and treat
-              // a manifest vanishing under a concurrent expiry as simply not
-              // retained (the unresolved ids then fall to the honest warn) —
-              // a post-commit bookkeeping walk must never kill the query
-              val ids = graft.sources.SnapshotStore.snapshotIds(root).iterator
-                .filter(sid => !curId.contains(sid))
-              while (ids.hasNext && !tombsInRange.forall(id => seen.contains(id))) {
-                val sid = ids.next()
-                try graft.sources.SnapshotStore.entriesAt(root, sid).foreach(e =>
-                  if (e.partId >= lo && e.partId < hi)
-                    seen.getOrElseUpdate(e.partId, e.nRows))
-                catch {
-                  case _: IllegalArgumentException | _: java.nio.file.NoSuchFileException => ()
-                }
-              }
-              val lost = tombsInRange.filterNot(id => seen.contains(id))
-              if (lost.isEmpty)
-                graft.sources.v2.EpochRows.record(root, batchId, seen.values.sum)
-              else
-                org.slf4j.LoggerFactory.getLogger(getClass).warn(
-                  s"stream batch $batchId committed, but parts ${lost.toSeq.sorted.take(5)} " +
-                  "of its namespace were compacted AND their original manifests " +
-                  "expired before the total could be recorded — replay " +
-                  "verification for this batch stays manifest-based")
-            }
-          } else {
-            // nothing pended: a genuine replay of a committed batch — OR a
-            // FRESH checkpoint over a grown source packing NEW rows into a
-            // committed batch id, which the anti-join would silently drop.
-            // Distinguish by row total, exactly like the native sink — with
-            // the sink's manifest fallback too (a crash between the original
-            // commit and EpochRows.record leaves no sidecar line, and the
-            // lookup-only check would silently drop a grown batch here).
-            val staged = batch.count()
-            if (staged > 0) {
-              graft.sources.v2.EpochRows.originalTotal(root, batchId, lo, hi) match {
-                case Some(orig) =>
-                  if (staged != orig) throw new IllegalStateException(
-                    s"stream batch $batchId carries $staged rows but its committed " +
-                    s"namespace [$lo, $hi) holds $orig — this checkpoint does not " +
-                    "match the store (a fresh checkpoint over a grown source packs " +
-                    "new rows into already-committed batches, and dropping them " +
-                    "would silently lose data). Restart from the original " +
-                    "checkpoint, or stream into a fresh store")
-                  // verified: backfill so compaction+expiry cannot reopen the window
-                  graft.sources.v2.EpochRows.record(root, batchId, orig)
-                case None =>
-                  // pre-sidecar store whose batch entries were already
-                  // compacted/expired: the total is gone — flag the
-                  // unverifiable drop instead of silently doing nothing
-                  org.slf4j.LoggerFactory.getLogger(getClass).warn(
-                    s"stream batch $batchId replays ids in [$lo, $hi) whose " +
-                    "committed entries were compacted/expired and which predate " +
-                    "the EPOCH_ROWS sidecar; dropping the batch UNVERIFIED " +
-                    s"($staged staged rows assumed already committed)")
-              }
-            }
-          }
-        } finally batch.unpersist()
-        ()
-      }
-      .start()
+      .start(root)
   }
 
   /** The stream width pinned in the STREAM_PARTS sidecar, if this store has
@@ -161,10 +56,10 @@ object StreamingEncode {
       java.nio.charset.StandardCharsets.UTF_8).trim.toInt)
   }
 
-  /** Shared with the native V2 streaming write ([[graft.sources.v2.GraftStreamingWrite]]):
-    * both pin the batchId*parts namespace through the same sidecar. */
+  /** Pins (or validates) the batchId*parts namespace in the STREAM_PARTS
+    * sidecar: [[encodeStream]] calls it before starting, and the sink
+    * ([[graft.sources.v2.GraftStreamingWrite]]) on each run's first epoch. */
   private[graft] def checkStreamParts(root: String, parts: Int): Unit = {
-    val p = java.nio.file.Paths.get(root, "STREAM_PARTS")
     pinnedStreamParts(root) match {
       case Some(prev) =>
         require(prev == parts,
@@ -173,8 +68,8 @@ object StreamingEncode {
           "original value or start a fresh store+checkpoint")
       case None =>
         // a store already holding batch/SQL-written parts cannot become a stream
-        // target: streaming batch 0 would reuse ids 0..parts-1, which the resume
-        // anti-join sees as committed — that batch's rows silently never encode.
+        // target: streaming batch 0 would reuse ids 0..parts-1, which the sink
+        // takes for an already-committed batch — its rows would never encode.
         // (The reverse direction is guarded in GraftBatchWrite.)
         val preexisting = graft.sources.SnapshotStore.committedPartIds(root)
           .filter(_ >= 0)
@@ -206,7 +101,7 @@ object StreamingEncode {
     * field. Spark's state-schema check rejects a restart of a PRE-change
     * checkpoint against the new shape — dedup streams checkpointed on the old
     * schema need a fresh checkpoint directory (the store itself is unaffected:
-    * its exactly-once guarantee is the manifest anti-join, not this state). */
+    * its exactly-once guarantee is the sink's epoch commit, not this state). */
   final case class SeenState(seen: Boolean)
   final case class DedupIn(fp: Long, url: String)
 

@@ -525,7 +525,7 @@ class PipelineSpec extends AnyFunSuite {
   test("part-id expression stays in whole-stage codegen (no UDF in encode projection)") {
     import spark.implicits._
     val pages = Webtext.generate(spark, 1000, 4)
-    val b = EncodeJob.computeBoundaries(pages, 4)
+    val b = EncodeJob.computeUrlBoundaries(pages.map(_.url), 4)
     val partIdCol = org.apache.spark.sql.graftshim.Shim.column(
       graft.functions.RangeBucketId(
         org.apache.spark.sql.graftshim.Shim.expression(col("url")), b, 0))

@@ -42,6 +42,50 @@ class StreamingSpec extends AnyFunSuite {
     assert(DecodeJob.verifyAgainst(Webtext.generate(spark, n, 3), decoded) == 0L)
   }
 
+  test("encodeStream and writeStream.format(graft) commit the same store, and share checkpoints") {
+    val n = 3000L
+    val src = tmp()
+    Webtext.generate(spark, n, 3).write.parquet(src)
+    def stream = spark.readStream.schema(spark.read.parquet(src).schema)
+      .option("maxFilesPerTrigger", "1").parquet(src)
+    // returns the source rows the query read (the range exchange's sample
+    // pass reads each batch once more)
+    def viaSink(root: String, ckpt: String): Long = {
+      val q = stream.writeStream.format("graft")
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start(root)
+      try assert(q.awaitTermination(120000)) finally if (q.isActive) q.stop()
+      q.recentProgress.map(_.numInputRows).sum
+    }
+    val rootA = tmp(); val ckptA = tmp()
+    assert(StreamingEncode.encodeStream(stream, rootA, parts = 2, ckptA).awaitTermination(120000))
+    val rootB = tmp()
+    spark.conf.set("spark.graft.write.partitions", "2")
+    try viaSink(rootB, tmp())
+    finally spark.conf.unset("spark.graft.write.partitions")
+
+    def partIds(root: String) = SnapshotStore.currentEntries(root).map(_.partId).sorted
+    def epochRows(root: String) = new String(
+      Files.readAllBytes(java.nio.file.Paths.get(root, "EPOCH_ROWS")), "UTF-8")
+    assert(partIds(rootA) == (0 until 6) && partIds(rootB) == partIds(rootA))
+    assert(epochRows(rootA).linesIterator.size == 3)
+    assert(epochRows(rootB) == epochRows(rootA))
+    val a = DecodeJob.decode(spark, rootA).toDF()
+    val b = DecodeJob.decode(spark, rootB).toDF()
+    assert(DecodeJob.decodedRows(DecodeJob.decode(spark, rootA)) == n)
+    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+
+    // restart A's checkpoint through the sink with its last batch uncommitted
+    // in the checkpoint: the batch replays, and the store drops it
+    val snap = SnapshotStore.currentSnapshotId(rootA)
+    Seq("2", ".2.crc").foreach(f =>
+      Files.deleteIfExists(java.nio.file.Paths.get(ckptA, "commits", f)))
+    assert(viaSink(rootA, ckptA) > 0L, "the last batch must replay")
+    assert(SnapshotStore.currentSnapshotId(rootA) == snap)
+    assert(DecodeJob.decodedRows(DecodeJob.decode(spark, rootA)) == n)
+  }
+
   test("lost-checkpoint streaming replay after compaction stays exactly-once") {
     import spark.implicits._
     val n = 4000L
