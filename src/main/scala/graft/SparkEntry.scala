@@ -435,7 +435,7 @@ object SparkEntry {
     // StringStartsWith, mapped onto block_str_min/max group pruning; lang = 'en'
     // becomes a StrEq over the lang dict metadata. The in-query require proves
     // groups were actually pruned during planning; exactness comes from the
-    // residual filters Spark re-evaluates on decoded rows.
+    // scan evaluating both filters on each surviving group's decoded rows.
     "q_dsv2_pushdown" -> ((s, d) => {
       val root = encodedDocsStore(s, d)
       s.read.format("graft").load(root).createOrReplaceTempView("graft_store_v2")
@@ -540,7 +540,7 @@ object SparkEntry {
     }),
 
     // FILTERED grouped aggregate from dict metadata: the V2 contract cannot
-    // push an aggregate past a residual filter, so GroupedAggMetadataRule
+    // push an aggregate past a residual filter (`<>`, LIKE), so GroupedAggMetadataRule
     // answers `GROUP BY lang WHERE <cond on lang>` at plan level — the whole
     // subtree becomes a LocalTableScan (zero store IO, plan-proven in-query),
     // with the condition evaluated exactly per dict value

@@ -572,8 +572,8 @@ object DecodeJob {
    * the north-star "predicate-push onto dictionary and FoR metadata" surfaced on
    * the decoded-view API users actually write. The predicates' exact row forms
    * ([[rowCond]]) push into the V2 scan, which plans the surviving groups from
-   * one pinned manifest read and keeps every filter as a residual, so results
-   * equal `decode(...).filter(...)`.
+   * one pinned manifest read and evaluates each filter exactly, itself or as a
+   * Spark residual, so results equal `decode(...).filter(...)`.
    */
   def decodeWhere(spark: SparkSession, root: String,
                   predicates: Seq[BlockPredicate]): Dataset[WebPage] = {

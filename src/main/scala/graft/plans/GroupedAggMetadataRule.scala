@@ -15,11 +15,13 @@ import graft.sources.v2.{GraftGroupedAgg, GraftScan, GraftTable}
 /**
  * FILTERED grouped-aggregate answering from the manifest — the shape the
  * DataSource V2 pushdown contract cannot express: Spark only attempts
- * aggregate pushdown when NO post-scan filters remain, and this source keeps
- * every filter as a residual (block pruning is inexact), so
- * `SELECT lang, count(*) FROM graft WHERE lang <> 'en' GROUP BY lang` always
- * decoded the store even though the unfiltered variant answers from the
- * manifest ([[graft.sources.v2.GraftGroupedAgg]], the V2 complete pushdown).
+ * aggregate pushdown when NO post-scan filters remain. A filter the scan
+ * claims leaves none, but the scan then declines the aggregate (the manifest
+ * counts the unfiltered rows), and a `Not`/`Or`/LIKE condition stays a
+ * residual, so `SELECT lang, count(*) FROM graft WHERE lang <> 'en' GROUP BY
+ * lang` always decoded the store even though the unfiltered variant answers
+ * from the manifest ([[graft.sources.v2.GraftGroupedAgg]], the V2 complete
+ * pushdown).
  *
  * This optimizer rule closes that gap one level up, where the whole subtree
  * is visible: an `Aggregate(group = c)(Filter(cond)(graft relation))` whose
@@ -51,7 +53,9 @@ import graft.sources.v2.{GraftGroupedAgg, GraftScan, GraftTable}
  * snapshot) and in `experimental.extraOptimizations` (runs last — sees the
  * built [[DataSourceV2ScanRelation]], and answers from the scan's pinned
  * entries). Incremental (fromSnapshot) scans are excluded in both forms: a
- * range delta is not the state the manifest describes. The unfiltered shape
+ * range delta is not the state the manifest describes. So is a built scan
+ * holding claimed filters: its rows are already filtered, and no `Filter`
+ * node shows by what ([[GraftScan.metadataEntries]]). The unfiltered shape
  * is deliberately NOT matched here — it already rides the V2 complete
  * pushdown with its plan-visible `PushedAggregates`.
  */

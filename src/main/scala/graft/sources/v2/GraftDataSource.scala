@@ -52,8 +52,9 @@ import graft.sources.SnapshotStore
  *    predicates of [[DecodeJob]] (block_str_min/max/dict, block_min/max), pruning
  *    whole 64Ki-row block groups BEFORE decompression — the north-star
  *    "predicate-push onto dictionary and FoR metadata". Pruning is block-level
- *    (inexact), so every filter is also returned as a residual for Spark to
- *    evaluate on the decoded rows: results are exact regardless of metadata.
+ *    (inexact), so the scan also evaluates, exactly, every filter it claims
+ *    ([[FilterConversion.toExactFilters]]) on each surviving group's decoded
+ *    columns, and returns only the others as residuals for Spark.
  *
  * Planning runs on the driver (Iceberg-style): one manifest read pins the
  *  snapshot, then [[DecodeJob.planPrunedKeys]] / [[DecodeJob.planTopNKeys]]
@@ -428,7 +429,7 @@ final class GraftTable(root: String) extends Table with SupportsRead
 
   /** Accept only conditions expressible EXACTLY over the decoded view — an
     * inexact condition would delete wrong rows (pruning, by contrast, is free
-    * to be a superset because residual filters restore exactness on reads). */
+    * to be a superset because reads evaluate every filter exactly after it). */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
     isWebtext && // the metadata-only DELETE rides the webtext decode job
       filters.forall(f => FilterConversion.toExactColumn(f, tableSchema).isDefined)
@@ -509,12 +510,86 @@ private[graft] object FilterConversion {
     case _ => None
   }
 
+  /** 1900-01-01 in the JVM's local time, the zone `java.sql.Timestamp` reads
+    * in: from here on a timestamp literal is not rebased between calendars. */
+  private val ExactTsFloor = java.sql.Timestamp.valueOf("1900-01-01 00:00:00")
+
+  /** Epoch micros of a timestamp literal only when they are exactly the micros
+    * Spark compared: an `Instant` always maps back; a `java.sql.Timestamp`
+    * (Spark made it from the micros, through the hybrid calendar) only from
+    * 1900 on and when it round-trips. */
+  private def exactTsMicros(v: Any): Option[Long] =
+    try v match {
+      case i: java.time.Instant => Some(DateTimeUtils.instantToMicros(i))
+      case t: java.sql.Timestamp if !t.before(ExactTsFloor) =>
+        val us = DateTimeUtils.fromJavaTimestamp(t)
+        if (DateTimeUtils.toJavaTimestamp(us) == t) Some(us) else None
+      case _ => None
+    } catch { case _: ArithmeticException => None }
+
+  /**
+   * The leaves the scan evaluates exactly for a filter, or None when it stays
+   * a residual for Spark: `EqualTo`, `In`, `<`, `<=`, `>`, `>=`, `IsNull`,
+   * `IsNotNull` and `StringStartsWith` on top-level string, int-family and
+   * timestamp columns, and `And` of those. `Or`, `Not`, binary columns and
+   * literals of another type are not claimed. The scan then needs no
+   * `Filter` node above it, so its plan's code does not change with the
+   * literal.
+   */
+  def toExactFilters(f: Filter, schema: StructType): Option[Seq[ExactFilter]] = {
+    def typeOf(c: String): Option[DataType] = schema.fields.find(_.name == c).map(_.dataType)
+    def isStr(c: String) = typeOf(c).contains(StringType)
+    def isInt(c: String) = typeOf(c).exists {
+      case TimestampType | LongType | IntegerType | ShortType | ByteType => true
+      case _ => false
+    }
+    def longOf(c: String, v: Any): Option[Long] = typeOf(c) match {
+      case Some(TimestampType) => exactTsMicros(v)
+      case Some(LongType | IntegerType | ShortType | ByteType) => intVal(v)
+      case _ => None
+    }
+    def str(c: String, lo: Option[String], loStrict: Boolean, hi: Option[String],
+        hiStrict: Boolean) = Some(Seq(ExactFilter.StrRange(c, lo, loStrict, hi, hiStrict)))
+    def int(c: String, v: Any)(range: Long => (Long, Long)) =
+      longOf(c, v).map { x => val (lo, hi) = range(x); Seq(ExactFilter.IntRange(c, lo, hi)) }
+    f match {
+      case sources.And(l, r) =>
+        for { a <- toExactFilters(l, schema); b <- toExactFilters(r, schema) } yield a ++ b
+      case sources.EqualTo(c, v: String) if isStr(c) => str(c, Some(v), false, Some(v), false)
+      case sources.GreaterThan(c, v: String) if isStr(c) => str(c, Some(v), true, None, false)
+      case sources.GreaterThanOrEqual(c, v: String) if isStr(c) => str(c, Some(v), false, None, false)
+      case sources.LessThan(c, v: String) if isStr(c) => str(c, None, false, Some(v), true)
+      case sources.LessThanOrEqual(c, v: String) if isStr(c) => str(c, None, false, Some(v), false)
+      case sources.StringStartsWith(c, p) if isStr(c) => Some(Seq(ExactFilter.StrPrefix(c, p)))
+      // a null in the list matches no row; filtering drops "unknown" as false
+      case sources.In(c, vs) if isStr(c) && vs.forall(v => v == null || v.isInstanceOf[String]) =>
+        Some(Seq(ExactFilter.StrIn(c, vs.toSeq.collect { case s: String => s }.distinct)))
+      case sources.In(c, vs) if isInt(c) =>
+        val ls = vs.toSeq.filter(_ != null).map(longOf(c, _))
+        if (ls.forall(_.isDefined)) Some(Seq(ExactFilter.IntIn(c, ls.flatten.distinct))) else None
+      case sources.EqualTo(c, v) => int(c, v)(x => (x, x))
+      // an empty range (lo > hi) at the Long extremes matches nothing
+      case sources.GreaterThan(c, v) =>
+        int(c, v)(x => if (x == Long.MaxValue) (1L, 0L) else (x + 1, Long.MaxValue))
+      case sources.GreaterThanOrEqual(c, v) => int(c, v)(x => (x, Long.MaxValue))
+      case sources.LessThan(c, v) =>
+        int(c, v)(x => if (x == Long.MinValue) (1L, 0L) else (Long.MinValue, x - 1))
+      case sources.LessThanOrEqual(c, v) => int(c, v)(x => (Long.MinValue, x))
+      case sources.IsNull(c) if isStr(c) || isInt(c) =>
+        Some(Seq(ExactFilter.NullTest(c, isNull = true, isStr(c))))
+      case sources.IsNotNull(c) if isStr(c) || isInt(c) =>
+        Some(Seq(ExactFilter.NullTest(c, isNull = false, isStr(c))))
+      case _ => None
+    }
+  }
+
   /** Block predicates a filter implies over a store of the given SCHEMA
     * (conjuncts; empty = not convertible). String columns prune via string
     * bounds/dicts; timestamp columns via epoch-micros block min/max; the
     * integer family via raw block min/max. Soundness: each returned predicate
-    * is a SUPERSET condition of the filter, and the filter itself always runs
-    * as a residual on decoded rows. */
+    * is a SUPERSET condition of the filter; the filter itself is evaluated
+    * exactly on the decoded rows, by the scan ([[toExactFilters]]) or by
+    * Spark as a residual. */
   def toBlockPredicates(f: Filter,
       schema: StructType = GraftDataSource.PageSchema): Seq[DecodeJob.BlockPredicate] = {
     val strCols = schema.fields.iterator
@@ -608,6 +683,7 @@ final class GraftScanBuilder(root: String, snapshotId: Option[Long],
   private var requiredSchema: StructType = tableSchema
   private var pushed: Array[Filter] = Array.empty
   private var predicates: Seq[DecodeJob.BlockPredicate] = Seq.empty
+  private var exact: Seq[ExactFilter] = Seq.empty
   private var sawFilters = false
   private var pushedLimit: Option[Int] = None
   private var pushedTopN: Option[GraftDataSource.TopN] = None
@@ -617,7 +693,9 @@ final class GraftScanBuilder(root: String, snapshotId: Option[Long],
     * pulling and decoding block groups once it has produced `limit` rows —
     * `SELECT * FROM graft LIMIT n` stops after ~one group per launched task
     * instead of decoding the store — and Spark's own GlobalLimit still trims
-    * the cross-task union exactly. */
+    * the cross-task union exactly. Spark offers a limit only when no residual
+    * filter is left, and the rows a task produces have passed the filters the
+    * scan claimed, so the cap counts matching rows. */
   override def pushLimit(limit: Int): Boolean = {
     pushedLimit = Some(limit)
     true
@@ -629,9 +707,9 @@ final class GraftScanBuilder(root: String, snapshotId: Option[Long],
     * url, the exact int block_min/max for warc_ts, plus exact per-block null
     * counts), so the scan reads ~n rows instead of the store; Spark's retained
     * Sort+Limit (isPartiallyPushed) trims exactly. Only the filterless
-    * single-key shape on a metadata-bounded column is accepted: with residual
-    * filters the per-group row counts no longer bound the MATCHING rows, so a
-    * count-based prefix could cut off true top-n rows. */
+    * single-key shape on a metadata-bounded column is accepted: with any
+    * filter, residual or claimed, the per-group row counts no longer bound the
+    * MATCHING rows, so a count-based prefix could cut off true top-n rows. */
   override def pushTopN(orders: Array[org.apache.spark.sql.connector.expressions.SortOrder],
                         limit: Int): Boolean = {
     import org.apache.spark.sql.connector.expressions.{NullOrdering, SortDirection}
@@ -652,16 +730,19 @@ final class GraftScanBuilder(root: String, snapshotId: Option[Long],
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val converted = filters.map(f => f -> FilterConversion.toBlockPredicates(f, tableSchema))
+    val claimed = filters.map(f => f -> FilterConversion.toExactFilters(f, tableSchema))
     // `_part_id` filters restrict the scan to those parts' manifest entries
     val partFilters = filters.flatMap(f => FilterConversion.partIdsOf(f).map(f -> _))
     partIds = partFilters.map(_._2).reduceOption(_ intersect _)
-    pushed = converted.collect { case (f, ps) if ps.nonEmpty => f } ++ partFilters.map(_._1)
+    pushed = (converted.collect { case (f, ps) if ps.nonEmpty => f } ++
+      claimed.collect { case (f, Some(_)) => f } ++ partFilters.map(_._1)).distinct
     predicates = converted.flatMap(_._2).toSeq
+    exact = claimed.iterator.flatMap(_._2).flatten.toSeq
     sawFilters = filters.nonEmpty
-    // block pruning is inexact (a surviving block still holds non-matching
-    // rows) — return EVERY filter as a residual so Spark evaluates it exactly
-    // on the decoded rows; the pruning benefit is unchanged
-    filters
+    // block pruning is inexact (a surviving group still holds non-matching
+    // rows): the scan evaluates the claimed filters exactly on each group's
+    // decoded columns, and only the others go back to Spark as residuals
+    claimed.collect { case (f, None) => f }
   }
 
   override def pushedFilters(): Array[Filter] = pushed
@@ -671,7 +752,9 @@ final class GraftScanBuilder(root: String, snapshotId: Option[Long],
   // -------- aggregate pushdown: count(*)/count(col)/min/max/sum from the manifest --------
 
   /** Convertible iff NOTHING was filtered (the manifest describes the
-    * unfiltered table — a pushed predicate would make its counts wrong),
+    * unfiltered table — a pushed predicate would make its counts wrong, and
+    * Spark offers aggregates over scans whose filters were all claimed; an
+    * `IsNotNull` makes no block predicate),
     * there is no grouping, and every aggregate is count(*) / non-distinct
     * count(col) / min(col) / max(col) of a metadata-bounded column / sum(col)
     * of an int column: the int family (incl. timestamps) carries exact part
@@ -683,7 +766,7 @@ final class GraftScanBuilder(root: String, snapshotId: Option[Long],
     // metadata aggregate paths read one snapshot's state — decline, the
     // ordinary scan + Spark's aggregate stay exact over the delta rows
     if (incremental.isDefined) return None
-    if (pushed.nonEmpty || predicates.nonEmpty || agg.groupByExpressions.nonEmpty) return None
+    if (sawFilters || agg.groupByExpressions.nonEmpty) return None
     def colOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
       GraftDataSource.singleColumnOf(e)
     def bounded(c: String): Boolean = GraftDataSource.metadataBounded(tableSchema, c)
@@ -715,7 +798,7 @@ final class GraftScanBuilder(root: String, snapshotId: Option[Long],
       : Option[(String, Seq[GroupedAggKind])] = {
     import org.apache.spark.sql.connector.expressions.NamedReference
     if (incremental.isDefined) return None // see convertAgg: delta != state
-    if (pushed.nonEmpty || predicates.nonEmpty) return None
+    if (sawFilters) return None // see convertAgg
     if (agg.groupByExpressions.length != 1) return None
     val gcol = GraftDataSource.singleColumnOf(agg.groupByExpressions()(0))
       .getOrElse(return None)
@@ -796,7 +879,7 @@ final class GraftScanBuilder(root: String, snapshotId: Option[Long],
         // truncating its url-ordered duty under top-n could drop true top-n rows)
         new GraftScan(root, snapshotId, requiredSchema, predicates,
           if (pushedTopN.isDefined) None else pushedLimit, pushedTopN, tableSchema,
-          incremental, partIds)
+          incremental, partIds, exact)
     }
   }
 }
@@ -886,7 +969,9 @@ object GraftAggReaderFactory extends PartitionReaderFactory {
  * such stores plan through level 2 exactly as before. Planning makes no
  * broadcast: each input partition carries the keys of its own files' parts,
  * and the reader factory carries the session's programmatic Hadoop settings
- * ([[HadoopSettings]]).
+ * ([[HadoopSettings]]) and the filters the scan claimed
+ * ([[FilterConversion.toExactFilters]]), which the readers evaluate on each
+ * surviving group.
  */
 final class GraftScan(root: String, snapshotId: Option[Long],
                       requiredSchema: StructType,
@@ -895,7 +980,8 @@ final class GraftScan(root: String, snapshotId: Option[Long],
                       pushedTopN: Option[GraftDataSource.TopN] = None,
                       tableSchema: StructType = GraftDataSource.PageSchema,
                       incremental: Option[(Long, Long)] = None,
-                      partIds: Option[Set[Int]] = None)
+                      partIds: Option[Set[Int]] = None,
+                      exactFilters: Seq[ExactFilter] = Nil)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering {
 
@@ -903,9 +989,10 @@ final class GraftScan(root: String, snapshotId: Option[Long],
     * ([[graft.plans.GroupedAggMetadataRule]]) when this scan reads ONE
     * snapshot's full state — the state the manifest stats describe; None for
     * incremental scans (a range delta is not that), for scans restricted to
-    * some parts, and when `root` is not a store. */
+    * some parts, for scans holding claimed filters (their rows are a subset
+    * no plan node above shows), and when `root` is not a store. */
   private[graft] def metadataEntries: Option[Seq[SnapshotStore.PartEntry]] =
-    if (incremental.isDefined || partIds.isDefined ||
+    if (incremental.isDefined || partIds.isDefined || exactFilters.nonEmpty ||
         (snapshotId.isEmpty && SnapshotStore.currentSnapshotId(root).isEmpty)) None
     else Some(pinnedEntries)
 
@@ -981,6 +1068,24 @@ final class GraftScan(root: String, snapshotId: Option[Long],
   /** The session's Hadoop settings, read once per scan. */
   private lazy val settings = HadoopSettings(SparkSession.active)
 
+  /** `spark.graft.v2.columnar`, read once per scan. */
+  private lazy val columnar: Boolean =
+    SparkSession.active.conf.getOption("spark.graft.v2.columnar") match {
+      case None => false
+      case Some(v) if v.equalsIgnoreCase("true") => true
+      case Some(v) if v.equalsIgnoreCase("false") => false
+      case Some(v) => throw new IllegalArgumentException(
+        s"spark.graft.v2.columnar must be true or false, got '$v'")
+    }
+
+  /** Decided by the conf, not by the planned partitions, so a scan whose
+    * pruning keeps no group plans the same way as one that keeps some. The
+    * metadata column rides the row path ([[GraftReaderFactory.supportColumnarReads]]). */
+  override def columnarSupportMode(): Scan.ColumnarSupportMode =
+    if (columnar && !requiredSchema.fieldNames.contains("_part_id"))
+      Scan.ColumnarSupportMode.SUPPORTED
+    else Scan.ColumnarSupportMode.UNSUPPORTED
+
   override def readSchema(): StructType = requiredSchema
 
   override def description(): String = {
@@ -991,15 +1096,17 @@ final class GraftScan(root: String, snapshotId: Option[Long],
     val lim = pushedLimit.map(n => s" PushedLimit: $n").getOrElse("")
     val topn = pushedTopN.map(t => s" PushedTopN: [$t] (partial)").getOrElse("")
     val parts = partIds.map(p => s" PushedPartIds: ${p.size}").getOrElse("")
-    s"GraftStore root=$root$snap$inc columns=[$cols] PushedBlockPredicates: [$preds]$lim$topn$parts"
+    s"GraftStore root=$root$snap$inc columns=[$cols] PushedBlockPredicates: [$preds] " +
+      s"ExactFilters: [${exactFilters.mkString(", ")}]$lim$topn$parts"
   }
 
   override def toBatch: Batch = this
 
   override def estimateStatistics(): Statistics = {
     // manifest rollup: decoded (original) byte size + exact row count; both are
-    // metadata-only. Filter selectivity is left to Spark's own estimation on
-    // the residual filters.
+    // metadata-only. They bound the scan's output from above: neither the
+    // filters the scan claims nor pruning is estimated, and Spark estimates
+    // the residual filters above the scan.
     val entries = snapshotEntries()
     val rows = entries.map(_.nRows).sum
     val bytes = entries.map(_.origBytes).sum
@@ -1036,9 +1143,10 @@ final class GraftScan(root: String, snapshotId: Option[Long],
     // gated two-level Iceberg-style planning: manifest part stats, then (only
     // if it can prune more) a metadata-only scan of the surviving parts, yield
     // the surviving group keys, or None when the predicate is not selective
-    // (past the MaxPrunedKeyCollect / half-the-groups gate — the residuals
-    // still make results exact). Each partition carries only its own files'
-    // keys, so no task payload grows with the scan's survivor count: the SQL
+    // (past the MaxPrunedKeyCollect / half-the-groups gate — the claimed and
+    // residual filters still make results exact). Each partition carries only
+    // its own files' keys, so no task payload grows with the scan's survivor
+    // count: the SQL
     // surface prunes as deep as the decodeWhere API (10^6 keys), where r4
     // dropped ALL pruning past 4096 surviving groups because the whole array
     // rode every InputPartition.
@@ -1055,13 +1163,6 @@ final class GraftScan(root: String, snapshotId: Option[Long],
         DecodeJob.planTopNKeys(spark, root, entries,
           t.column, t.asc, t.nullsFirst, t.limit, intBounds)
       }
-    val columnar = spark.conf.getOption("spark.graft.v2.columnar") match {
-      case None => false
-      case Some(v) if v.equalsIgnoreCase("true") => true
-      case Some(v) if v.equalsIgnoreCase("false") => false
-      case Some(v) => throw new IllegalArgumentException(
-        s"spark.graft.v2.columnar must be true or false, got '$v'")
-    }
     val (partitions, fileCount) = GraftDataSource.packPartitions(spark, root, entries,
       requiredSchema, tableSchema.fields.head.name, keys, settings, columnar,
       pushedLimit.getOrElse(-1))
@@ -1069,7 +1170,8 @@ final class GraftScan(root: String, snapshotId: Option[Long],
       preds.size, keys.map(_.length), pushedLimit, pushedTopN))
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = GraftReaderFactory(settings)
+  override def createReaderFactory(): PartitionReaderFactory =
+    GraftReaderFactory(settings, exactFilters)
 
   /** Micro-batch streaming read over the snapshot-id sequence (see
     * [[GraftMicroBatchStream]]); pushed predicates prune each batch's delta
@@ -1140,11 +1242,13 @@ private final class BlockFileReaderBuilder(file: InputFile, cols: Seq[String])
   * broadcast: each reader opens its block files ([[BlockGroupStream]])
   * from Spark's per-JVM Hadoop conf when that already holds them, else from
   * one overlaid copy per task. Settings from XML resources are the
-  * executor's own, as for any Hadoop client. */
-final case class GraftReaderFactory(settings: HadoopSettings)
+  * executor's own, as for any Hadoop client. `filters` are the batch scan's
+  * claimed filters; the copy-on-write and streaming scans claim none. */
+final case class GraftReaderFactory(settings: HadoopSettings, filters: Seq[ExactFilter] = Nil)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new GraftPartitionReader(partition.asInstanceOf[GraftInputPartition], settings.conf())
+    new GraftPartitionReader(partition.asInstanceOf[GraftInputPartition], settings.conf(),
+      filters)
 
   // columnar is a per-scan choice (spark.graft.v2.columnar): copying multi-KB
   // text/html blobs into ColumnVectors measurably LOSES to the row path's
@@ -1159,7 +1263,8 @@ final case class GraftReaderFactory(settings: HadoopSettings)
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new GraftColumnarReader(partition.asInstanceOf[GraftInputPartition], settings.conf())
+    new GraftColumnarReader(partition.asInstanceOf[GraftInputPartition], settings.conf(),
+      filters)
 }
 
 /**
@@ -1364,22 +1469,47 @@ private final class BlockGroupStream(p: GraftInputPartition, conf: Configuration
   def close(): Unit = if (current != null) { current.close(); current = null }
 }
 
+private object BlockGroupStream {
+  /** The columns a reader of `p` reads, and whether it reads only row counts:
+    * the output's stored columns and the filter columns (Spark prunes a
+    * column that only a claimed filter uses out of the read schema). With
+    * neither (`count(*)`, `SELECT _part_id`), the store's first column is
+    * read for its row counts alone: its `encoded` bytes never leave disk. */
+  def readColumns(p: GraftInputPartition, filters: Seq[ExactFilter]): (Array[String], Boolean) = {
+    // `_part_id` is a METADATA column (constant per block group, known from
+    // the group key): it has no stored blocks
+    val cols = (p.columns.filter(_ != "_part_id") ++ filters.map(_.column)).distinct
+    if (cols.isEmpty) (Array(p.refColumn), true) else (cols, false)
+  }
+
+  /** A group's columns, each decoded once, on first use: the filters and the
+    * output share one decode per column. */
+  final class Decoded(cols: Map[String, Array[Byte]]) {
+    private val strs = scala.collection.mutable.HashMap.empty[String, StringBlockCodec.Slices]
+    private val ints =
+      scala.collection.mutable.HashMap.empty[String, (Array[Long], Array[Boolean])]
+    def strings(c: String): StringBlockCodec.Slices =
+      strs.getOrElseUpdate(c, StringBlockCodec.decodeSlices(cols(c)))
+    def longs(c: String): (Array[Long], Array[Boolean]) =
+      ints.getOrElseUpdate(c, IntBlockCodec.decodeNullable(cols(c)))
+    /** The rows passing `filters`, ascending; null = every row. */
+    def select(filters: Seq[ExactFilter], n: Int): Array[Int] =
+      ExactFilter.select(filters, n, strings, longs)
+  }
+}
+
 /** Row-based reader over [[BlockGroupStream]] — the DEFAULT path (measured
   * 2× faster than columnar on blob-heavy scans via zero-copy UTF8String;
-  * [[GraftColumnarReader]] is the opt-in alternative). */
-final class GraftPartitionReader(p: GraftInputPartition, conf: Configuration)
-    extends PartitionReader[InternalRow] {
+  * [[GraftColumnarReader]] is the opt-in alternative). Each group's filter
+  * columns are decoded first; a group with no matching row is skipped before
+  * any other column is decoded, and rows are built for the matches only. */
+final class GraftPartitionReader(p: GraftInputPartition, conf: Configuration,
+    filters: Seq[ExactFilter] = Nil) extends PartitionReader[InternalRow] {
 
-  // `_part_id` is a METADATA column (constant per block group, known from the
-  // group key): it has no stored blocks, so it never reaches the parquet read
-  private val dataCols: Array[String] = p.columns.filter(_ != "_part_id")
-  // empty DATA projection (count(*), or a metadata-only one like
-  // `SELECT _part_id`): only (group key, row count) is needed, and the stream's
-  // count-only mode reads exactly that — the `encoded` pages of the reference
-  // column (the store's first column, present in every group) never leave disk
-  private val metaOnly = dataCols.isEmpty
-  private val readCols: Array[String] = if (metaOnly) Array(p.refColumn) else dataCols
-  private val stream = new BlockGroupStream(p, conf, readCols, countOnly = metaOnly)
+  private val stream = {
+    val (readCols, countOnly) = BlockGroupStream.readColumns(p, filters)
+    new BlockGroupStream(p, conf, readCols, countOnly)
+  }
 
   private var current: InternalRow = _
   private var pending: Iterator[InternalRow] = Iterator.empty
@@ -1387,10 +1517,14 @@ final class GraftPartitionReader(p: GraftInputPartition, conf: Configuration)
   private var produced = 0L
 
   private def decodeGroup(gd: BlockGroupStream#GroupData): Iterator[InternalRow] = {
+    val cols = new BlockGroupStream.Decoded(gd.cols)
+    val sel = cols.select(filters, gd.n)
+    val n = if (sel == null) gd.n else sel.length
     if (p.columns.isEmpty) { // count(*): zero-width rows
       val empty: InternalRow = new GenericInternalRow(0)
-      return Iterator.fill(gd.n)(empty)
+      return Iterator.fill(n)(empty)
     }
+    if (n == 0) return Iterator.empty
     // per-column decode dispatch is TYPE-driven off the read schema (the
     // store's persisted schema pruned to this scan): timestamps and the int
     // family ride IntBlockCodec as longs, binary values are copied out as
@@ -1401,28 +1535,29 @@ final class GraftPartitionReader(p: GraftInputPartition, conf: Configuration)
         (_: Int) => v: Any
       } else f.dataType match {
         case TimestampType | LongType =>
-          val (us, ok) = IntBlockCodec.decodeNullable(gd.cols(f.name))
+          val (us, ok) = cols.longs(f.name)
           (i: Int) => if (ok(i)) java.lang.Long.valueOf(us(i)) else null
         case IntegerType =>
-          val (vs, ok) = IntBlockCodec.decodeNullable(gd.cols(f.name))
+          val (vs, ok) = cols.longs(f.name)
           (i: Int) => if (ok(i)) java.lang.Integer.valueOf(vs(i).toInt) else null
         case ShortType =>
-          val (vs, ok) = IntBlockCodec.decodeNullable(gd.cols(f.name))
+          val (vs, ok) = cols.longs(f.name)
           (i: Int) => if (ok(i)) java.lang.Short.valueOf(vs(i).toShort) else null
         case ByteType =>
-          val (vs, ok) = IntBlockCodec.decodeNullable(gd.cols(f.name))
+          val (vs, ok) = cols.longs(f.name)
           (i: Int) => if (ok(i)) java.lang.Byte.valueOf(vs(i).toByte) else null
         case BinaryType =>
-          val vs = StringBlockCodec.decodeSlices(gd.cols(f.name))
+          val vs = cols.strings(f.name)
           (i: Int) => vs.bytes(i)
         case _ =>
           // values wrap the block's one decode buffer: no per-value copy
-          val vs = StringBlockCodec.decodeSlices(gd.cols(f.name))
+          val vs = cols.strings(f.name)
           (i: Int) =>
             if (vs.lens(i) < 0) null else UTF8String.fromBytes(vs.buf, vs.offs(i), vs.lens(i))
       }
     }
-    (0 until gd.n).iterator.map { i =>
+    (0 until n).iterator.map { k =>
+      val i = if (sel == null) k else sel(k)
       val row = new GenericInternalRow(decoded.length)
       var j = 0
       while (j < decoded.length) { row.update(j, decoded(j)(i)); j += 1 }
@@ -1453,7 +1588,8 @@ final class GraftPartitionReader(p: GraftInputPartition, conf: Configuration)
  * Columnar reader: each 64Ki-row block group becomes ONE ColumnarBatch —
  * decoded column arrays fill OnHeapColumnVectors directly (no per-row
  * InternalRow/boxing), and Spark's ColumnarToRow/WholeStageCodegen consumes
- * the batch with vectorized access.
+ * the batch with vectorized access. As in the row reader, the claimed
+ * filters select a group's rows first, and only those fill the vectors.
  */
 object GraftColumnarReader {
   /** Per-batch byte ceiling per column — `private[v2]` var so tests can force
@@ -1461,14 +1597,16 @@ object GraftColumnarReader {
   private[v2] var MaxBatchColumnBytes: Long = 256L << 20
 }
 
-final class GraftColumnarReader(p: GraftInputPartition, conf: Configuration)
+final class GraftColumnarReader(p: GraftInputPartition, conf: Configuration,
+    filters: Seq[ExactFilter] = Nil)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
   import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 
-  private val countOnly = p.columns.isEmpty
-  private val readCols: Array[String] = if (countOnly) Array(p.refColumn) else p.columns
-  private val stream = new BlockGroupStream(p, conf, readCols, countOnly)
+  private val stream = {
+    val (readCols, countOnly) = BlockGroupStream.readColumns(p, filters)
+    new BlockGroupStream(p, conf, readCols, countOnly)
+  }
   // single source of truth for field types: the scan's read schema (pruned
   // from the store's persisted schema)
   private val schema: StructType = p.readSchema
@@ -1486,56 +1624,63 @@ final class GraftColumnarReader(p: GraftInputPartition, conf: Configuration)
   /** Decode a group into one or more batches (split when any column's decoded
     * bytes would exceed [[MaxBatchColumnBytes]] in one contiguous child). */
   private def toBatches(gd: BlockGroupStream#GroupData): Iterator[ColumnarBatch] = {
-    if (countOnly)
-      return Iterator.single(new ColumnarBatch(Array.empty[ColumnVector], gd.n))
+    val cols = new BlockGroupStream.Decoded(gd.cols)
+    val sel = cols.select(filters, gd.n)
+    // output position k holds the group's row `row(k)`
+    val rows = if (sel == null) gd.n else sel.length
+    @inline def row(k: Int): Int = if (sel == null) k else sel(k)
+    if (rows == 0) return Iterator.empty
+    if (p.columns.isEmpty)
+      return Iterator.single(new ColumnarBatch(Array.empty[ColumnVector], rows))
     @inline def isIntFamily(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
       case TimestampType | LongType | IntegerType | ShortType | ByteType => true
       case _ => false
     }
     val decodedStr: Map[String, StringBlockCodec.Slices] =
       schema.fields.iterator.filterNot(f => isIntFamily(f.dataType))
-        .map(f => f.name -> StringBlockCodec.decodeSlices(gd.cols(f.name))).toMap
+        .map(f => f.name -> cols.strings(f.name)).toMap
     val decodedInt: Map[String, (Array[Long], Array[Boolean])] =
       schema.fields.iterator.filter(f => isIntFamily(f.dataType))
-        .map(f => f.name -> IntBlockCodec.decodeNullable(gd.cols(f.name))).toMap
+        .map(f => f.name -> cols.longs(f.name)).toMap
     // worst per-row byte estimate over string/binary columns drives the split
     val colBytes: Map[String, Long] =
       decodedStr.map { case (c, vs) =>
-        var t = 0L; var i = 0
-        while (i < vs.length) { t += math.max(vs.lens(i), 0); i += 1 }
+        var t = 0L; var k = 0
+        while (k < rows) { t += math.max(vs.lens(row(k)), 0); k += 1 }
         c -> t
       }
     val maxCol = if (colBytes.isEmpty) 0L else colBytes.values.max
     val slices: Seq[(Int, Int)] =
-      if (maxCol <= maxBatchColumnBytes) Seq((0, gd.n))
+      if (maxCol <= maxBatchColumnBytes) Seq((0, rows))
       else {
         // slice on ACTUAL per-row bytes, not the mean: a skewed group (one run
         // of giant blobs among small rows) sliced by maxCol/n can still pack
         // >2GiB into one slice — total.toInt then goes negative, the reserve is
         // skipped, and putByteArray growth dies at the 2GiB child-array limit
-        val cols = decodedStr.values.toArray
+        val strCols = decodedStr.values.toArray
         val out = scala.collection.mutable.ArrayBuffer[(Int, Int)]()
-        val run = new Array[Long](cols.length)
+        val run = new Array[Long](strCols.length)
         var start = 0
-        var i = 0
-        while (i < gd.n) {
+        var k = 0
+        while (k < rows) {
+          val i = row(k)
           var overflow = false
           var c = 0
-          while (c < cols.length && !overflow) {
-            if (run(c) + math.max(cols(c).lens(i), 0) > maxBatchColumnBytes)
+          while (c < strCols.length && !overflow) {
+            if (run(c) + math.max(strCols(c).lens(i), 0) > maxBatchColumnBytes)
               overflow = true
             c += 1
           }
-          if (overflow && i > start) { // a single over-ceiling row still gets its own slice
-            out += ((start, i)); start = i; java.util.Arrays.fill(run, 0L)
+          if (overflow && k > start) { // a single over-ceiling row still gets its own slice
+            out += ((start, k)); start = k; java.util.Arrays.fill(run, 0L)
           }
           c = 0
-          while (c < cols.length) {
-            run(c) += math.max(cols(c).lens(i), 0); c += 1
+          while (c < strCols.length) {
+            run(c) += math.max(strCols(c).lens(i), 0); c += 1
           }
-          i += 1
+          k += 1
         }
-        out += ((start, gd.n))
+        out += ((start, rows))
         out.toSeq
       }
     slices.iterator.map { case (from, until) =>
@@ -1556,7 +1701,8 @@ final class GraftColumnarReader(p: GraftInputPartition, conf: Configuration)
             }
             var i = 0
             while (i < n) {
-              if (ok(from + i)) put(i, vals(from + i)) else vec.putNull(i)
+              val r = row(from + i)
+              if (ok(r)) put(i, vals(r)) else vec.putNull(i)
               i += 1
             }
           case _ =>
@@ -1565,7 +1711,7 @@ final class GraftColumnarReader(p: GraftInputPartition, conf: Configuration)
             // one upfront child reserve: per-value growth doubles-and-copies
             // the contiguous array ~a dozen times per multi-MB column otherwise
             var total = 0L; var i = 0
-            while (i < n) { total += math.max(vs.lens(from + i), 0); i += 1 }
+            while (i < n) { total += math.max(vs.lens(row(from + i)), 0); i += 1 }
             // slicing bounds total at max(maxBatchColumnBytes, one row); only a
             // misconfigured >2GiB MaxBatchColumnBytes can breach — fail loudly,
             // a negative toInt here would skip the reserve and corrupt later
@@ -1576,8 +1722,9 @@ final class GraftColumnarReader(p: GraftInputPartition, conf: Configuration)
             i = 0
             // copied straight from the block's one decode buffer
             while (i < n) {
-              val len = vs.lens(from + i)
-              if (len < 0) vec.putNull(i) else vec.putByteArray(i, vs.buf, vs.offs(from + i), len)
+              val r = row(from + i)
+              val len = vs.lens(r)
+              if (len < 0) vec.putNull(i) else vec.putByteArray(i, vs.buf, vs.offs(r), len)
               i += 1
             }
         }

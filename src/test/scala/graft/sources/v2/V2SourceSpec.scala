@@ -92,6 +92,30 @@ class V2SourceSpec extends AnyFunSuite {
       "pushed predicate must be visible in the scan description")
   }
 
+  test("EXPLAIN shows the filters the scan claims as ExactFilters; only residuals keep a Filter") {
+    import org.apache.spark.sql.execution.{ExplainMode, FilterExec}
+    val prefix = "https://host-1.example.com/"
+    val hi = new java.sql.Timestamp(1735689600000L + 48L * 3600L * 1000L)
+    def cond(t: DataFrame) = t.where(col("url").startsWith(prefix) && col("lang") === "en" &&
+      col("warc_ts") < hi)
+    val claimed = cond(graftTable).select(col("url"))
+    val explained = claimed.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    assert(explained.contains("ExactFilters: [") &&
+      explained.contains(s"startswith(url, '$prefix')") && explained.contains("lang = 'en'") &&
+      explained.contains("warc_ts <= "), s"claimed filters must show in EXPLAIN:\n$explained")
+    assert(claimed.queryExecution.executedPlan.collect { case f: FilterExec => f }.isEmpty,
+      s"every filter is claimed, so no Filter node is left:\n$explained")
+    assert(sortedRows(claimed) == sortedRows(cond(written).select(col("url"))))
+    // a Not stays a Spark residual beside the claimed prefix
+    val mixed = graftTable.where(col("url").startsWith(prefix) && col("lang") =!= "en")
+      .select(col("url"))
+    val plan = mixed.queryExecution.executedPlan
+    assert(plan.collect { case f: FilterExec => f }.nonEmpty &&
+      plan.toString.contains(s"startswith(url, '$prefix')"), plan.toString)
+    assert(sortedRows(mixed) == sortedRows(written.where(col("url").startsWith(prefix) &&
+      col("lang") =!= "en").select(col("url"))))
+  }
+
   test("warc_ts range filter prunes and returns exact rows") {
     // host-0 pages sit at the very bottom of the ts domain (base + 0*3600s)
     val hi = new java.sql.Timestamp(1735689600000L + 3600L * 1000L)
@@ -589,8 +613,8 @@ class V2SourceSpec extends AnyFunSuite {
       "pushed limit must be visible in the scan description")
     // limit larger than the table is exact too
     assert(graftTable.limit((N + 5).toInt).count() == N)
-    // a RESIDUAL filter blocks limit pushdown (pushing through a post-scan
-    // filter would under-produce) — results must still be exact
+    // a filter the scan claims: the pushed cap counts the rows that passed
+    // it, so results must still be exact
     val filtered = graftTable.where(col("lang") === "en").limit(50)
     assert(filtered.count() == 50)
     // columnar path honors the cap at batch granularity
