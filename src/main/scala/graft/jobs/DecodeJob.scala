@@ -22,57 +22,22 @@ import graft.sources.{SnapshotStore, WebPage}
  */
 object DecodeJob {
 
-  /** Restrict a blocks scan to the given part ids. Small sets become an `isin`
-    * (pushed to parquet as an In filter); large ones a broadcast semi-join —
-    * both are shuffle-free and preserve per-partition row order. */
-  private def partsOnly(df: org.apache.spark.sql.DataFrame,
-                        partIds: Seq[Int]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val spark = df.sparkSession
-    import spark.implicits._
-    if (partIds.size <= 256) df.where(col("part_id").isin(partIds.map(Int.box): _*))
-    else df.join(broadcast(partIds.toDF("part_id")), Seq("part_id"), "left_semi")
-  }
-
-  /** The [[BlockRow]]s of `entries`' parts. A native block file is read
-    * through [[NativeBlocksRelation]]: its footer, and its `encoded` bytes
-    * only when the query selects that column, so the level-2 planning jobs
-    * read footers alone. Parts written before native files are read from
-    * their data dirs' parquet files, restricted to the live part ids. Dirs
-    * and live part ids must come from ONE manifest read — re-reading the
-    * pointer could mix snapshot N's parts with snapshot N+1's dirs when a
-    * concurrent compaction commits between the reads. */
+  /** The [[BlockRow]]s of `entries`' parts, read through
+    * [[NativeBlocksRelation]]: each named file's footer, and its `encoded`
+    * bytes only when the query selects that column, so the level-2 planning
+    * jobs read footers alone. A part that names no file is refused
+    * ([[SnapshotStore.PartEntry.filePath]]). An empty snapshot
+    * (created-but-unloaded table, truncate, all-matched DELETE) reads as the
+    * empty relation, correctly typed. */
   private[graft] def fromEntries(spark: SparkSession, root: String,
-                          entries: Seq[SnapshotStore.PartEntry]) = {
-    val (native, legacy) = entries.partition(_.file.isDefined)
-    // native first: a union takes the first side's column order, BlockRow's.
-    // An empty snapshot (created-but-unloaded table, truncate, all-matched
-    // DELETE) reads as the empty relation, correctly typed
-    val nativeDf =
-      if (native.isEmpty && legacy.nonEmpty) None
-      else Some(spark.baseRelationToDataFrame(NativeBlocksRelation(spark.sqlContext,
-        native.map(e => (e.filePath(root).get, e.fileLen, e.partId)).toArray,
-        graft.sources.v2.HadoopSettings(spark))))
-    val legacyDf =
-      if (legacy.isEmpty) None
-      else {
-        val dirs = legacy.map(_.dataDir).distinct
-          .map(d => java.nio.file.Paths.get(root, d).toString)
-        Some(partsOnly(spark.read.parquet(dirs: _*), legacy.map(_.partId)))
-      }
-    (nativeDf ++ legacyDf).reduce(_.unionByName(_, allowMissingColumns = true))
-  }
+                          entries: Seq[SnapshotStore.PartEntry]) =
+    spark.baseRelationToDataFrame(NativeBlocksRelation(spark.sqlContext,
+      entries.map(e => (e.filePath(root), e.fileLen, e.partId)).toArray,
+      graft.sources.v2.HadoopSettings(spark)))
 
-  /**
-   * Read the current snapshot's blocks as a DataFrame of [[BlockRow]]s,
-   * restricted to the manifest's LIVE part ids. A native block file holds
-   * one part, so this reads exactly the named files; for parts written
-   * before native files the restriction is load-bearing: a partial
-   * compaction replaces only some parts of a shared data dir, so the dir
-   * stays referenced via the kept parts — reading it whole would return the
-   * replaced parts' blocks from the old dir AND from the compacted copy.
-   * Selecting no `encoded` reads only footers.
-   */
+  /** Read the current snapshot's blocks as a DataFrame of [[BlockRow]]s: the
+    * block files its manifest names, one part each. Selecting no `encoded`
+    * reads only footers. */
   def blocks(spark: SparkSession, root: String) = {
     requireStore(root)
     fromEntries(spark, root, SnapshotStore.currentEntries(root))
@@ -637,8 +602,7 @@ object DecodeJob {
     * `SnapshotStore.entriesAt(root, snapshotId)`, so the choice and the read
     * come from one immutable manifest: a compaction committing in between
     * cannot re-home the chosen rows. The `_part_id` filter reaches the scan,
-    * which plans only those parts and never opens a file named by another
-    * part ([[graft.sources.v2.GraftDataWriter.partIdOf]]). The ids go in as
+    * which plans only the files those parts' manifest lines name. The ids go in as
     * one `InSet` node: an `isin` of 100k literals costs ~4 s of driver
     * analysis, an `InSet` of them ~nothing. */
   private[graft] def decodePartsOf(spark: SparkSession, root: String,

@@ -6,9 +6,10 @@ import graft.sources.SnapshotStore
 
 /**
  * Operational maintenance entrypoint (spark-submit): OPTIMIZE-style compaction of
- * fragmented small parts, then snapshot expiry + orphan sweep. The two run in this
- * order on purpose — compaction is what strands old data dirs, so expiring after
- * it is when space is actually reclaimed.
+ * fragmented small parts (after [[CompactJob.upgrade]] copies the blocks of a
+ * store written before native block files), then snapshot expiry + orphan
+ * sweep. The two run in this order on purpose — compaction is what strands
+ * old data dirs, so expiring after it is when space is actually reclaimed.
  *
  * Usage: StoreMaintenance <storeRoot> [minRows] [keepSnapshots]
  */

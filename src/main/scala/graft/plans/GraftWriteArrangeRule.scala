@@ -45,12 +45,12 @@ import org.apache.spark.sql.types.StringType
  * AQE-coalesce-only, so an unset conf could OOM fat tasks).
  *
  * Scope: batch `AppendData`/`OverwriteByExpression` (df.write + INSERT INTO /
- * INSERT OVERWRITE, path- or catalog-based). Streaming epochs and CTAS keep
- * the ordered-distribution fallback: a stream's micro-batches are deltas (the
- * double-compute is small and per-epoch), and CTAS plans its write inside
- * V2 CreateTableAsSelect exec where no analyzer hook sees the query. The rule
- * degrades safely: any sampling failure logs and leaves the command unchanged
- * (ordered-distribution path, correct but slower).
+ * INSERT OVERWRITE, path- or catalog-based, and CTAS, whose exec appends
+ * through an analyzed `AppendData`). Streaming epochs keep the
+ * ordered-distribution fallback: a stream's micro-batches are deltas (the
+ * double-compute is small and per-epoch). The rule degrades safely: any
+ * sampling failure logs and leaves the command unchanged (ordered-distribution
+ * path, correct but slower).
  *
  * Known cost, accepted: ONE url-only boundary pass (r7: count and sample
  * FOLDED into a single job — [[graft.jobs.EncodeJob.countAndUrlBoundaries]])
@@ -116,8 +116,6 @@ case class GraftWriteArrangeRule(spark: SparkSession) extends Rule[LogicalPlan] 
   }
 
   private def arrange(query: LogicalPlan, keyName: Option[String]): Option[LogicalPlan] = {
-    // operational kill switch
-    if (spark.conf.get("spark.graft.write.arrange", "true") == "false") return None
     val url = keyName.flatMap(k => query.output.find(_.name.equalsIgnoreCase(k)))
       .filter(_.dataType == StringType)
       .getOrElse(return None) // no string sort key / mismatch: ordered fallback

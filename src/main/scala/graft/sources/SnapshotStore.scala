@@ -40,8 +40,9 @@ import scala.jdk.CollectionConverters._
  * `file` and `file_len` name the part's one native block file in `data_dir`
  * and its length, so a scan plans without listing the dir and opens the file
  * without a status call. A line without them is a part written before native
- * block files existed: its parquet files are found by listing `data_dir`
- * until a compaction rewrites the part.
+ * block files existed, as parquet block files. No reader reads those:
+ * [[PartEntry.filePath]] refuses such a part, and one compaction
+ * ([[graft.jobs.CompactJob.run]]) copies its blocks into a native file.
  *
  * A killed job leaves at most an orphaned data dir (never referenced by any
  * manifest): re-running resumes from the last committed snapshot's part set.
@@ -89,8 +90,8 @@ object SnapshotStore {
     * None on entries committed before per-part stats existed: no stats =
     * unbounded, so such parts always survive manifest-level pruning. `file`
     * names the part's native block file in `dataDir`, `fileLen` its length;
-    * None marks a part whose parquet block files predate them (found by
-    * listing `dataDir`). */
+    * None marks a part written before native block files, which every reader
+    * refuses ([[filePath]]) until a compaction copies its blocks. */
   final case class PartEntry(
       partId: Int,
       dataDir: String, // relative to root
@@ -101,9 +102,17 @@ object SnapshotStore {
       stats: Option[PartStats] = None,
       file: Option[String] = None,
       fileLen: Long = 0L) {
-    /** The path of the part's native block file under `root`, when named. */
-    def filePath(root: String): Option[String] =
-      file.map(f => s"${root.stripSuffix("/")}/$dataDir/$f")
+    /** The path of the part's block file under `root`. Every reader resolves
+      * its files here, so a part that names no file fails before any
+      * directory is listed or any file is opened. */
+    def filePath(root: String): String = file match {
+      case Some(f) => s"${root.stripSuffix("/")}/$dataDir/$f"
+      case None => throw new IllegalStateException(
+        s"part $partId of the graft store at $root was written before native block " +
+        "files and names no block file; upgrade the store once with " +
+        s"graft.jobs.CompactJob.run(spark, \"$root\") or " +
+        s"CALL graftcat.system.compact('$root'), which copies its blocks unchanged")
+    }
   }
 
   private val Json = new com.fasterxml.jackson.databind.ObjectMapper()

@@ -2,20 +2,8 @@ package graft.sources.v2
 
 import java.util.OptionalLong
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.filter2.compat.FilterCompat
-import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.InputFile
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -157,10 +145,6 @@ object GraftDataSource {
       prunedGroupKeys: Option[Int], pushedLimit: Option[Int] = None,
       pushedTopN: Option[TopN] = None)
 
-  /** Single-query convenience only — concurrent V2 scans clobber it (use
-    * [[planStatsFor]] whenever more than one graft scan can be in flight). */
-  @volatile var lastPlanStats: Option[PlanStats] = None
-
   /** Per-root plan stats, bounded LRU (mirrors `Dedup.capReports`): concurrent
     * scans over DIFFERENT stores no longer race each other's assertions; two
     * concurrent scans of the SAME root last-write-win, which is inherent to a
@@ -171,23 +155,12 @@ object GraftDataSource {
           e: java.util.Map.Entry[String, PlanStats]): Boolean = size > 64
     }
 
-  private[v2] def recordPlanStats(root: String, s: PlanStats): Unit = {
-    lastPlanStats = Some(s)
+  private[v2] def recordPlanStats(root: String, s: PlanStats): Unit =
     planStatsByRoot.synchronized { planStatsByRoot.put(root, s); () }
-  }
 
   /** Planning stats of the most recent scan over `root`. */
   def planStatsFor(root: String): Option[PlanStats] =
     planStatsByRoot.synchronized(Option(planStatsByRoot.get(root)))
-
-  /** Per-task parquet In-filter value budget (files written before native
-    * block files): row-group stats evaluation of an
-    * In probes the value set per row group, so a huge set costs more than the
-    * IO it saves; past the budget only the part_id component is pushed (still
-    * row-group pruning on dead parts) and the reader's exact `liveGroup` check
-    * keeps results identical. `private[v2]` var so tests can force the
-    * over-budget branch without a 65k-group fixture. */
-  private[v2] var InFilterMaxKeys = 65536
 
   /**
    * Bin-pack the block files of `entries` into [[GraftInputPartition]]s using
@@ -197,13 +170,11 @@ object GraftDataSource {
    * [[GraftMicroBatchStream]] (which passes only the parts NEW in its offset
    * range).
    *
-   * An entry that names its native file ([[SnapshotStore.PartEntry.file]])
-   * is planned from the manifest alone: no directory is listed and no conf is
-   * built, and a bin may hold files of several data dirs. Each partition
-   * carries its files' paths, lengths and (in the names) parts, and the
-   * sorted live ids of those parts. Entries written before native files keep
-   * the per-dir listing ([[listLegacy]]), with `settings`' conf, in bins
-   * that stay within one dir.
+   * Every entry names its block file ([[SnapshotStore.PartEntry.filePath]],
+   * which refuses a part that names none before anything is opened), so the
+   * plan comes from the manifest alone: no directory is listed and no conf
+   * is built, and a bin may hold files of several data dirs. Each partition
+   * carries its files' paths and lengths; a file's name carries its part.
    *
    * `keys` are the scan's planned `(part_id, block_seq)` group keys, or None
    * for no pruning. Each partition carries the keys of its own files' parts
@@ -212,103 +183,39 @@ object GraftDataSource {
    */
   private[v2] def packPartitions(spark: SparkSession, root: String,
       entries: Seq[SnapshotStore.PartEntry], readSchema: StructType,
-      refColumn: String, keys: Option[Array[(Int, Int)]], settings: HadoopSettings,
+      refColumn: String, keys: Option[Array[(Int, Int)]],
       columnar: Boolean, limit: Int): (Array[InputPartition], Int) = {
     val keyParts: Option[Set[Int]] = keys.map(_.iterator.map(_._1).toSet)
     val packedKeys = keys.map(_.map(k => DecodeJob.packKey(k._1, k._2)).sorted)
-    val (native, legacy) = entries.partition(_.file.isDefined)
     // manifest-level file pruning: a part this scan reads no group of is
-    // never opened
-    val nativeFiles = native.filter(e => keyParts.forall(_(e.partId)))
-    val legacyFiles = if (legacy.isEmpty) Seq.empty else listLegacy(root, legacy, keyParts, settings)
+    // never opened (but every part is refused if it names no file)
+    val files = entries.map(e => (e, e.filePath(root))).filter(f => keyParts.forall(_(f._1.partId)))
     val sqlConf = spark.sessionState.conf
     val maxBytes = sqlConf.filesMaxPartitionBytes
     val openCost = sqlConf.filesOpenCostInBytes
-    val totalBytes = nativeFiles.iterator.map(_.fileLen + openCost).sum +
-      legacyFiles.iterator.flatMap(_._2).map(_._2 + openCost).sum
+    val totalBytes = files.iterator.map(_._1.fileLen + openCost).sum
     val minPartitionNum = sqlConf.filesMinPartitionNum
       .getOrElse(spark.sparkContext.defaultParallelism)
     val bytesPerCore = totalBytes / math.max(minPartitionNum, 1)
     val target = math.min(maxBytes, math.max(openCost, bytesPerCore))
-    /** Next-fit bins of `files` (largest first) up to `target` bytes each. */
-    def bins[F](files: Seq[F])(len: F => Long): Seq[Seq[F]] = {
-      val out = scala.collection.mutable.ArrayBuffer[Seq[F]]()
-      var bin = Vector.empty[F]
-      var binBytes = 0L
-      files.sortBy(f => -len(f)).foreach { f =>
-        if (binBytes > 0 && binBytes + len(f) + openCost > target) {
-          out += bin; bin = Vector.empty; binBytes = 0L
-        }
-        bin :+= f; binBytes += len(f) + openCost
+    // next-fit bins of the files (largest first) up to `target` bytes each
+    val bins = scala.collection.mutable.ArrayBuffer[Seq[(SnapshotStore.PartEntry, String)]]()
+    var bin = Vector.empty[(SnapshotStore.PartEntry, String)]
+    var binBytes = 0L
+    files.sortBy(-_._1.fileLen).foreach { f =>
+      if (binBytes > 0 && binBytes + f._1.fileLen + openCost > target) {
+        bins += bin; bin = Vector.empty; binBytes = 0L
       }
-      if (bin.nonEmpty) out += bin
-      out.toSeq
+      bin :+= f; binBytes += f._1.fileLen + openCost
     }
-    def partition(files: Seq[(String, Long)], parts: Array[Int]): InputPartition =
-      GraftInputPartition(files.map(_._1).toArray, files.map(_._2).toArray, readSchema,
-        refColumn, parts, packedKeys.map(keysOfParts(_, parts)).orNull, columnar, limit)
-    val nativeBins = bins(nativeFiles)(_.fileLen).map { b =>
-      partition(b.map(e => (e.filePath(root).get, e.fileLen)), b.map(_.partId).sorted.toArray)
-    }
-    val legacyBins = legacyFiles.flatMap { case (dirParts, files) =>
-      bins(files.toSeq)(_._2).map { b =>
-        val pids = b.map(f => GraftDataWriter.partIdOf(new Path(f._1).getName))
-        // a file named without its part id may hold any live part of the dir
-        partition(b, if (pids.forall(_.isDefined)) pids.flatten.distinct.sorted.toArray
-          else dirParts)
-      }
-    }
-    ((nativeBins ++ legacyBins).toArray,
-      nativeFiles.length + legacyFiles.iterator.map(_._2.length).sum)
+    if (bin.nonEmpty) bins += bin
+    val partitions: Array[InputPartition] = bins.map { b =>
+      GraftInputPartition(b.map(_._2).toArray, b.map(_._1.fileLen).toArray, readSchema,
+        refColumn, packedKeys.map(keysOfParts(_, b.map(_._1.partId).sorted.toArray)).orNull,
+        columnar, limit)
+    }.toArray
+    (partitions, files.length)
   }
-
-  /** The parquet block files of `entries` (all written before native block
-    * files), by listing their data dirs: per dir, its sorted live part ids
-    * and its (path, length) files of parts in `keyParts`. A file whose name
-    * carries its part id is skipped unopened when this scan reads no group of
-    * that part. */
-  private def listLegacy(root: String, entries: Seq[SnapshotStore.PartEntry],
-      keyParts: Option[Set[Int]], settings: HadoopSettings)
-      : Seq[(Array[Int], Array[(String, Long)])] = {
-    val liveByDir: Map[String, Array[Int]] = entries.groupBy(_.dataDir)
-      .map { case (d, es) => d -> es.map(_.partId).sorted.toArray }
-    def wanted(d: String, pid: Int): Boolean =
-      java.util.Arrays.binarySearch(liveByDir(d), pid) >= 0 && keyParts.forall(_(pid))
-    // skip whole data dirs owning no surviving part
-    val dirs = entries.map(_.dataDir).distinct
-      .filter(d => keyParts.forall(kp => liveByDir(d).exists(kp)))
-    if (dirs.isEmpty) return Seq.empty
-    val conf = settings.conf()
-    // PARALLEL dir listing past MaxSerialListingDirs: a long-streamed store
-    // holds one data dir per epoch, and serial listStatus (one RPC per dir)
-    // would put minutes of driver-side planning in front of a scan over
-    // thousands of epochs on object storage. Below it, starting the pool's
-    // threads costs more than the listings they overlap. Bounded pool;
-    // listing order is restored by the map.
-    def list(d: String): Array[(String, Long)] = {
-      val dirPath = new Path(new Path(root), d)
-      dirPath.getFileSystem(conf).listStatus(dirPath)
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet") &&
-          !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".") &&
-          GraftDataWriter.partIdOf(st.getPath.getName).forall(wanted(d, _)))
-        .map(st => (st.getPath.toString, st.getLen))
-    }
-    val listed =
-      if (dirs.size <= MaxSerialListingDirs) dirs.map(d => list(d))
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(dirs.size, 16))
-        try {
-          dirs.map(d => pool.submit(new java.util.concurrent.Callable[Array[(String, Long)]] {
-            def call(): Array[(String, Long)] = list(d)
-          })).map(_.get())
-        } finally pool.shutdown()
-      }
-    dirs.map(liveByDir).zip(listed)
-  }
-
-  /** Up to this many data dirs a scan lists them one by one, as Spark's file
-    * index does up to 32 paths. */
-  private val MaxSerialListingDirs = 32
 
   /** The keys of `parts` (ascending) out of the sorted packed `keys`: each
     * part's keys form one contiguous run, found by two binary searches. */
@@ -330,7 +237,6 @@ object GraftDataSource {
     out.result()
   }
 
-  /** Aggregates answerable from store metadata alone (see [[GraftAggScan]]). */
   /** See [[GraftTable.metadataColumns]]. */
   object PartIdMetadataColumn extends org.apache.spark.sql.connector.catalog.MetadataColumn {
     override def name(): String = "_part_id"
@@ -1059,8 +965,8 @@ final class GraftScan(root: String, snapshotId: Option[Long],
   // ---- the partition plan, memoized per predicate set: Spark plans one scan
   // more than once (before and after runtime filters, and again when
   // adaptive execution re-plans the query). The same predicates reuse the
-  // whole plan: level 2 is a Spark job, and a pre-native store's listing one
-  // round trip per data dir. Changed predicates (a runtime In landed) re-plan ----
+  // whole plan: level 2 is a Spark job. Changed predicates (a runtime In
+  // landed) re-plan ----
   private val planLock = new Object
   private var planned: (Seq[DecodeJob.BlockPredicate],
     (Array[InputPartition], GraftDataSource.PlanStats)) = null
@@ -1164,7 +1070,7 @@ final class GraftScan(root: String, snapshotId: Option[Long],
           t.column, t.asc, t.nullsFirst, t.limit, intBounds)
       }
     val (partitions, fileCount) = GraftDataSource.packPartitions(spark, root, entries,
-      requiredSchema, tableSchema.fields.head.name, keys, settings, columnar,
+      requiredSchema, tableSchema.fields.head.name, keys, columnar,
       pushedLimit.getOrElse(-1))
     (partitions, GraftDataSource.PlanStats(partitions.length, fileCount,
       preds.size, keys.map(_.length), pushedLimit, pushedTopN))
@@ -1190,50 +1096,22 @@ final class GraftScan(root: String, snapshotId: Option[Long],
   }
 }
 
-/** A bin of whole block files; groups are whole within each file by
+/** A bin of whole native block files; groups are whole within each file by
   * construction. Spark serializes every partition once per task, so it holds
-  * only what its files need: their paths and lengths (a native file's name
-  * carries its part), their live parts, the scan's planned keys of those
-  * parts, and no Hadoop conf (the settings ride the [[GraftReaderFactory]]). */
+  * only what its files need: their paths and manifest lengths (a file's name
+  * carries its one part), the scan's planned keys of those parts, and no
+  * Hadoop conf (the settings ride the [[GraftReaderFactory]]). */
 final case class GraftInputPartition(
     files: Array[String],
-    fileLens: Array[Long],           // each file's length, from the manifest or the listing
+    fileLens: Array[Long],           // each file's length, from the manifest
     readSchema: StructType,          // required output columns + types, in order
     refColumn: String,               // store's first column: the count-only reference
-    // sorted live part ids: of the native files' parts, or of a parquet
-    // bin's whole dir
-    liveParts: Array[Int],
     // sorted planned (part_id<<32|seq) keys of the files' parts, or null = no
     // pruning
     keys: Array[Long],
     columnar: Boolean,
     limit: Int = -1) extends InputPartition { // pushed per-task row cap; -1 = none
   def columns: Array[String] = readSchema.fieldNames
-}
-
-/** GroupReadSupport whose requested schema is a named-field projection of the
-  * file's own schema nodes (exact repetition/type match by construction). */
-private final class ProjectingGroupReadSupport(cols: Seq[String]) extends GroupReadSupport {
-  override def init(conf: Configuration,
-      keyValueMetaData: java.util.Map[String, String],
-      fileSchema: MessageType): ReadSupport.ReadContext = {
-    val fields: Array[org.apache.parquet.schema.Type] =
-      cols.map(n => fileSchema.getType(Array(n): _*)).toArray
-    new ReadSupport.ReadContext(
-      new MessageType(fileSchema.getName, fields: _*))
-  }
-}
-
-/** Reads one parquet block file (a store written before native block
-  * files), projected by [[ProjectingGroupReadSupport]], with
-  * the conf of the [[InputFile]] it opens. The `Builder(InputFile)`
-  * constructor takes that conf as is; the path-based builder builds and reads
-  * a default `Configuration` (a classpath scan and XML parse of
-  * `core-default.xml`) for every file before `withConf` replaces it. */
-private final class BlockFileReaderBuilder(file: InputFile, cols: Seq[String])
-    extends ParquetReader.Builder[Group](file) {
-  override protected def getReadSupport(): ReadSupport[Group] =
-    new ProjectingGroupReadSupport(cols)
 }
 
 /** The reader factory of every block-file scan ([[GraftScan]],
@@ -1268,35 +1146,28 @@ final case class GraftReaderFactory(settings: HadoopSettings, filters: Seq[Exact
 }
 
 /**
- * Streams a bin of whole block files as LIVE complete (part_id, block_seq)
- * groups, one group in flight. The keys arrive already cut to the bin's own
- * parts, so a task does no slicing. Every group must hold exactly the
- * requested columns, or the read fails with the "corrupt or foreign store
- * layout" IOException.
+ * Streams a bin of whole native block files ([[BlockFile]]) as the complete
+ * (part_id, block_seq) groups its keys keep, one group in flight. The keys
+ * arrive already cut to the bin's own parts, so a task does no slicing.
+ * Every group must hold exactly the requested columns, or the read fails
+ * with the "corrupt or foreign store layout" IOException.
  *
- * A native file ([[BlockFile]]) is opened once: its footer comes from one
- * positioned read at the manifest's length, and then, for each group the
- * keys keep, only the requested columns' blocks are read, one seek per run
- * of adjacent blocks. A count-only read takes the row counts from the footer
- * and reads no block. A parquet file (a store written before native files)
- * is read record by record: parquet-level filters (column ∈ wanted,
- * part/seq ∈ the keys) skip row groups by statistics, and consecutive
- * records assemble in place.
+ * Each file is opened once: its footer comes from one positioned read at the
+ * manifest's length, and then, for each group the keys keep, only the
+ * requested columns' blocks are read, one seek per run of adjacent blocks. A
+ * count-only read takes the row counts from the footer and reads no block.
  */
 private final class BlockGroupStream(p: GraftInputPartition, conf: Configuration,
                                      readCols: Array[String], countOnly: Boolean) {
-  /** One live, complete block group (encoded bytes per requested column). */
+  /** One complete block group (encoded bytes per requested column). */
   final case class GroupData(cols: Map[String, Array[Byte]], n: Int, pid: Int)
 
   private val expected: Set[String] = readCols.toSet
 
   private val keys: Array[Long] = p.keys // null = no pruning
 
-  @inline private def liveGroup(packed: Long): Boolean = {
-    val pid = (packed >>> 32).toInt
-    java.util.Arrays.binarySearch(p.liveParts, pid) >= 0 &&
-      (keys == null || java.util.Arrays.binarySearch(keys, packed) >= 0)
-  }
+  @inline private def liveGroup(packed: Long): Boolean =
+    keys == null || java.util.Arrays.binarySearch(keys, packed) >= 0
 
   private def layoutError(file: String, packed: Long, cols: Iterable[String]) =
     new java.io.IOException(
@@ -1304,13 +1175,8 @@ private final class BlockGroupStream(p: GraftInputPartition, conf: Configuration
       s"$file has columns ${cols.toSeq.sorted.mkString(",")}, expected " +
       s"${expected.toSeq.sorted.mkString(",")}: corrupt or foreign store layout")
 
-  /** The live groups of one file, in file order; null at its end. */
-  private trait FileGroups {
-    def next(): GroupData
-    def close(): Unit
-  }
-
-  private final class NativeGroups(file: String, fileLen: Long) extends FileGroups {
+  /** The kept groups of one file, in file order. */
+  private final class NativeGroups(file: String, fileLen: Long) {
     private val path = new Path(file)
     private val partId = GraftDataWriter.partIdOf(path.getName).getOrElse(
       throw new BlockFile.CorruptBlockFileException(file, "its name carries no part id"))
@@ -1321,6 +1187,7 @@ private final class BlockGroupStream(p: GraftInputPartition, conf: Configuration
     private var i = 0
     private var lastSeq = -1L
 
+    /** The next kept group; null at the file's end. */
     def next(): GroupData = {
       while (i < refs.length) {
         val start = i
@@ -1348,116 +1215,18 @@ private final class BlockGroupStream(p: GraftInputPartition, conf: Configuration
     def close(): Unit = in.close()
   }
 
-  private final class ParquetGroups(file: String) extends FileGroups {
-    private val reader = new BlockFileReaderBuilder(
-        HadoopInputFile.fromPath(new Path(file), conf), parquetProjection)
-      .withFilter(parquetFilter)
-      .build()
-
-    // one-group lookahead buffer. Emptiness is an EXPLICIT flag, not a
-    // sentinel key: compacted parts live in a negative id namespace, so packed
-    // keys can be any Long (a `bufKey < 0` empty-check silently dropped every
-    // compacted group — all rows of a compacted store lost on the V2 surface)
-    private var bufKey: Long = 0L
-    private var bufHas = false
-    private var bufCols: Map[String, Array[Byte]] = Map.empty
-    private var bufN: Int = 0
-    private var done = false
-
-    private def takeBuffered(): GroupData = {
-      val out =
-        if (!bufHas || !liveGroup(bufKey)) null
-        else if (!countOnly && bufCols.keySet != expected)
-          throw layoutError(file, bufKey, bufCols.keySet)
-        else GroupData(bufCols, bufN, (bufKey >>> 32).toInt)
-      bufHas = false; bufCols = Map.empty; bufN = 0
-      out
-    }
-
-    def next(): GroupData = {
-      while (!done) {
-        val g = reader.read()
-        if (g == null) {
-          // file end: groups are whole per file, so the buffer flushes here
-          // (the same key cannot legally continue in the next file)
-          done = true
-          val out = takeBuffered()
-          if (out != null) return out
-        } else {
-          val packed = DecodeJob.packKey(g.getInteger("part_id", 0),
-            g.getInteger("block_seq", 0))
-          val colName = g.getBinary("column", 0).toStringUsingUTF8
-          val n = g.getInteger("n", 0)
-          val enc = if (countOnly) null else g.getBinary("encoded", 0).getBytes
-          if (!bufHas || packed != bufKey) {
-            val out = takeBuffered()
-            bufKey = packed
-            bufHas = true
-            bufCols = if (countOnly) Map.empty else Map(colName -> enc)
-            bufN = n
-            if (out != null) return out
-          } else if (!countOnly) {
-            bufCols = bufCols.updated(colName, enc)
-          }
-        }
-      }
-      null
-    }
-
-    def close(): Unit = reader.close()
-  }
-
-  // projection built inside ReadSupport.init from the file schema the reader
-  // already parsed (`encoded` skipped entirely in count-only mode — parquet
-  // never touches those pages); a separate footer pre-read just for the
-  // schema would double the per-file open round-trips on object storage
-  private lazy val parquetProjection = Seq("part_id", "block_seq", "column", "n") ++
-    (if (countOnly) Seq.empty else Seq("encoded"))
-
-  private lazy val parquetFilter: FilterCompat.Filter = {
-    var pred: FilterPredicate =
-      FilterApi.in(FilterApi.binaryColumn("column"),
-        readCols.map(Binary.fromString).toSet.asJava)
-    val inFilterMaxKeys = GraftDataSource.InFilterMaxKeys
-    if (keys != null && keys.length > 0 && keys.length <= inFilterMaxKeys) {
-      val pids = keys.map(k => Int.box((k >>> 32).toInt)).toSet.asJava
-      val seqs = keys.map(k => Int.box(k.toInt)).toSet.asJava
-      pred = FilterApi.and(pred,
-        FilterApi.and(FilterApi.in(FilterApi.intColumn("part_id"), pids),
-          FilterApi.in(FilterApi.intColumn("block_seq"), seqs)))
-    } else if (keys != null && keys.length > 0) {
-      val pids = keys.map(k => Int.box((k >>> 32).toInt)).toSet.asJava
-      pred = FilterApi.and(pred, FilterApi.in(FilterApi.intColumn("part_id"), pids))
-    } else if (keys == null && p.liveParts.length <= inFilterMaxKeys) {
-      // NO key pruning (plain scan): still push the LIVE part ids — a
-      // metadata-only DELETE/rewrite leaves the replaced parts' files inside
-      // dirs the surviving parts keep referenced, and without this filter a
-      // plain SELECT reads and decompresses ALL of that dead data on every
-      // scan (until compaction) only for liveGroup to drop it. Row-group
-      // statistics skip the dead parts' groups at near-zero cost; exactness
-      // is unchanged (liveGroup already requires part ∈ liveParts).
-      val pids = p.liveParts.map(Int.box).toSet.asJava
-      pred = FilterApi.and(pred, FilterApi.in(FilterApi.intColumn("part_id"), pids))
-    }
-    FilterCompat.get(pred)
-  }
-
   private val fileIndex = p.files.indices.iterator
-  private var current: FileGroups = _
-  // a bin with zero surviving keys never plans (defensive: empty In-sets are
-  // rejected by parquet's FilterApi, so don't build a filter from nothing)
+  private var current: NativeGroups = _
+  // a bin with zero surviving keys never plans
   private var eof = keys != null && keys.length == 0
 
-  /** The next LIVE complete group, or null at end of the bin. */
+  /** The next kept complete group, or null at end of the bin. */
   def nextGroup(): GroupData = {
     while (!eof) {
       if (current == null) {
         if (!fileIndex.hasNext) { eof = true; return null }
         val i = fileIndex.next()
-        val f = p.files(i)
-        current =
-          if (f.endsWith(BlockFile.Extension)) new NativeGroups(f, p.fileLens(i))
-          else new ParquetGroups(f)
+        current = new NativeGroups(p.files(i), p.fileLens(i))
       }
       val g = current.next()
       if (g != null) return g

@@ -190,8 +190,7 @@ final class GraftMicroBatchStream(root: String,
         else {
           // row path only (batch-sized ColumnarBatches buy nothing on micro-batches)
           val (p, f) = GraftDataSource.packPartitions(spark, root, entries,
-            readSchema, refColumn, keys = keysOpt, settings = settings,
-            columnar = false, limit = -1)
+            readSchema, refColumn, keys = keysOpt, columnar = false, limit = -1)
           GraftDataSource.recordPlanStats(root, GraftDataSource.PlanStats(
             p.length, f, predicates.size, keysOpt.map(_.length)))
           p

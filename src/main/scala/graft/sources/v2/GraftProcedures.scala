@@ -83,7 +83,8 @@ object GraftProcedures {
   }
 
   /** `compact(path, min_rows, target_rows)`: merge fragmented small parts
-    * ([[CompactJob]]) — the OPTIMIZE verb for long-streamed stores. */
+    * ([[CompactJob]]) — the OPTIMIZE verb for long-streamed stores. It first
+    * upgrades a store written before native block files ([[CompactJob.upgrade]]). */
   object Compact extends GraftProcedure("compact",
       "merge committed parts smaller than min_rows into ~target_rows parts " +
       "(rows re-homed in the negative id namespace; streams skip the commit)") {

@@ -124,9 +124,8 @@ final class GraftCowScanBuilder(root: String, op: GraftRowLevelOperation)
 }
 
 /** Whole-part scan of the parts the condition might touch. Emits every row of
-  * every affected part (liveParts on each input partition is restricted to
-  * the affected ids — the reader's existing per-group liveness check then
-  * skips foreign groups sharing the same files).
+  * every affected part: each part's block file holds that part alone, so the
+  * scan plans exactly the affected parts' files.
   *
   * Runtime group filtering: Spark's `RowLevelOperationRuntimeGroupFiltering`
   * optimizer rule plans a subquery for the matching rows (through the
@@ -188,7 +187,7 @@ final class GraftCowScan(root: String, op: GraftRowLevelOperation,
     val cowEntries = entries.filter(e => affected(e.partId))
     if (cowEntries.isEmpty) return Array.empty
     GraftDataSource.packPartitions(SparkSession.active, root, cowEntries,
-      requiredSchema, "url", None, settings, columnar = false, limit = -1)._1
+      requiredSchema, "url", None, columnar = false, limit = -1)._1
   }
 
   // the session's Hadoop settings, read once per statement however often

@@ -489,16 +489,15 @@ object GraftDataWriter {
   private[graft] val failNextWriteOnce = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** The dot-prefixed in-progress name a task stages `fileName` under;
-    * readers skip it (packPartitions and spark.read both ignore "."-files). */
+    * no manifest names it, so no reader opens it. */
   def stagedName(fileName: String): String = s".$fileName.inprogress"
 
   /** A block file's readable name. It leads with the file's one part id. */
   def fileNameFor(partId: Int, taskId: Long): String = s"p$partId-task-$taskId${BlockFile.Extension}"
 
-  private val PartFileName = """p(-?\d+)-task-\d+\.(?:parquet|graft)""".r
+  private val PartFileName = """p(-?\d+)-task-\d+\.graft""".r
 
-  /** The part id a block file's name carries; None for a parquet file named
-    * before names carried it, which may hold several parts. */
+  /** The part id a block file's name carries; None for any other name. */
   def partIdOf(fileName: String): Option[Int] = fileName match {
     case PartFileName(pid) => pid.toIntOption
     case _ => None

@@ -7,7 +7,8 @@ import graft.sources.{WebPage, Webtext}
 /**
  * A store written before native block files, kept under
  * `src/test/resources/head-format-store`: parquet block files, manifest lines
- * without `file`/`file_len`. It was written by this sequence:
+ * without `file`/`file_len`. Readers refuse it until `CompactJob.run` copies
+ * its blocks into native files. It was written by this sequence:
  *  1. `EncodeJob.run` of `Webtext.generate(spark, 300, 2)` into 2 parts with
  *     `maxBlockBytes` = 32 KiB, so each part holds about ten block groups;
  *  2. a V2 append of `Webtext.page(1000 until 1040)` with

@@ -324,53 +324,58 @@ class PipelineSpec extends AnyFunSuite {
         t.getMessage.contains("corrupt or foreign store layout")), s"not the layout error: $e")
   }
 
-  test("a block group that is not whole in its file fails both read surfaces") {
-    import spark.implicits._
-    // a store written before native block files: its parquet reader
-    val root = graft.HeadFormatStore.copy()
-    val live = SnapshotStore.currentEntries(root).map(_.partId).toSet
-    val (dir, file) = SnapshotStore.currentEntries(root).map(_.dataDir).distinct.iterator
-      .map(d => java.nio.file.Paths.get(root, d))
-      .flatMap(d => SnapshotStore.listFileNames(d).filter(f => f.endsWith(".parquet") &&
-        graft.sources.v2.GraftDataWriter.partIdOf(f).exists(live)).map(d -> _))
-      .next()
-    // rewrite a live part's one file without the html block of group 0
-    val tmp = java.nio.file.Paths.get(freshRoot(), "rewritten").toString
-    spark.read.parquet(dir.resolve(file).toString)
-      .where(!($"block_seq" === 0 && $"column" === "html"))
-      .coalesce(1).write.parquet(tmp)
-    val Seq(rewritten) = SnapshotStore.listFileNames(java.nio.file.Paths.get(tmp))
-      .filter(f => f.endsWith(".parquet") && !f.startsWith("."))
-    Files.delete(dir.resolve(file))
-    Files.move(java.nio.file.Paths.get(tmp, rewritten), dir.resolve("rewritten.parquet"))
-
-    layoutError(DecodeJob.decode(spark, root).collect())
-    layoutError(DecodeJob.decodedRows(DecodeJob.decode(spark, root)))
-    layoutError(spark.read.format("graft").load(root).collect())
-    layoutError(DecodeJob.decodedRows(spark.read.format("graft").load(root)))
-  }
-
-  test("a native block file that lacks one column's block fails both read surfaces") {
-    val root = freshRoot()
-    EncodeJob.run(spark, Webtext.generate(spark, 300, 4), root, parts = 1)
-    val Seq(e) = SnapshotStore.currentEntries(root)
+  /** Rewrites the one-part store's block file with `blocks`, in this order,
+    * and its manifest line's length to match. */
+  private def rewriteFile(root: String, e: SnapshotStore.PartEntry,
+      blocks: Seq[BlockRow]): Unit = {
     val path = java.nio.file.Paths.get(root, e.dataDir, e.file.get)
-    // rewrite the part's file without the html block of group 0: the same
-    // blocks and footer entries, minus that one
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val blocks = graft.sources.v2.BlockFile.readAll(path.toString, e.fileLen, e.partId, conf,
-      withEncoded = true).filterNot(b => b.block_seq == 0 && b.column == "html")
-    val out = org.apache.hadoop.fs.FileSystem.getLocal(conf).getRawFileSystem
-      .create(new org.apache.hadoop.fs.Path(path.toString), true)
+    val out = org.apache.hadoop.fs.FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
+      .getRawFileSystem.create(new org.apache.hadoop.fs.Path(path.toString), true)
     val w = new graft.sources.v2.BlockFile.Writer(out, e.partId)
     blocks.foreach(w.add)
     val len = w.finish()
-    // the manifest line names the new length
     val mf = java.nio.file.Paths.get(root, "manifests",
       s"${SnapshotStore.currentSnapshotId(root).get}.jsonl")
     Files.write(mf, new String(Files.readAllBytes(mf), "UTF-8")
       .replace(s""""file_len":${e.fileLen}""", s""""file_len":$len""").getBytes("UTF-8"))
     assert(SnapshotStore.currentEntries(root).head.fileLen == len)
+  }
+
+  /** A one-part store of several groups: (root, its entry, its blocks in file order). */
+  private def onePartStore(maxBlockBytes: Long): (String, SnapshotStore.PartEntry, Seq[BlockRow]) = {
+    val root = freshRoot()
+    EncodeJob.run(spark, Webtext.generate(spark, 300, 4), root, parts = 1,
+      maxBlockBytes = maxBlockBytes)
+    val Seq(e) = SnapshotStore.currentEntries(root)
+    (root, e, graft.sources.v2.BlockFile.readAll(
+      java.nio.file.Paths.get(root, e.dataDir, e.file.get).toString, e.fileLen, e.partId,
+      new org.apache.hadoop.conf.Configuration(), withEncoded = true).toSeq)
+  }
+
+  test("a block group that is not whole in its file fails both read surfaces") {
+    val (root, e, blocks) = onePartStore(maxBlockBytes = 64L * 1024)
+    assert(blocks.map(_.block_seq).distinct.size > 2, "several groups")
+    // group 0's html block moves behind group 1: group 0 lies in two runs
+    val (moved, rest) = blocks.partition(b => b.block_seq == 0 && b.column == "html")
+    val (first, later) = rest.span(_.block_seq <= 1)
+    rewriteFile(root, e, first ++ moved ++ later)
+
+    layoutError(DecodeJob.decode(spark, root).collect())
+    layoutError(DecodeJob.decodedRows(DecodeJob.decode(spark, root)))
+    layoutError(spark.read.format("graft").load(root).collect())
+    layoutError(DecodeJob.decodedRows(spark.read.format("graft").load(root)))
+    // a read without html meets group 0 again after group 1
+    val err = intercept[Exception](spark.read.format("graft").load(root).select("url").collect())
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(t => t.isInstanceOf[graft.sources.v2.BlockFile.CorruptBlockFileException] &&
+        t.getMessage.contains("block group 0 follows group 1")), s"not the split-group error: $err")
+  }
+
+  test("a native block file that lacks one column's block fails both read surfaces") {
+    val (root, e, blocks) = onePartStore(maxBlockBytes = EncodeJob.MaxBlockBytes)
+    // rewrite the part's file without the html block of group 0: the same
+    // blocks and footer entries, minus that one
+    rewriteFile(root, e, blocks.filterNot(b => b.block_seq == 0 && b.column == "html"))
 
     layoutError(DecodeJob.decode(spark, root).collect())
     layoutError(DecodeJob.decodedRows(DecodeJob.decode(spark, root)))

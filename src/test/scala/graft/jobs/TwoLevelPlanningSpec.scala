@@ -20,8 +20,9 @@ import graft.sources.SnapshotStore.{ColumnStats, PartEntry, PartStats}
  *    two-level key plan equals the block-level one, on random small stores
  *    written by both writers;
  *  - property: part stats survive manifest serialise -> parse -> carry-forward
- *    commit unchanged, whatever their strings hold, and lines written before
- *    `sum` / `str_dict_counts` existed parse them as absent;
+ *    commit and the upgrade's commit ([[CompactJob.commitUpgrade]]) unchanged,
+ *    whatever their strings hold, and lines written before `sum` /
+ *    `str_dict_counts` existed parse them as absent;
  *  - property: the manifest aggregate answers ([[GraftUngroupedAgg]],
  *    [[GraftGroupedAgg]]) either decline or equal Spark's own aggregates.
  * Properties run with fixed seeds.
@@ -264,8 +265,27 @@ class TwoLevelPlanningSpec extends AnyFunSuite {
       val root = Files.createTempDirectory("graft-manifest-prop-").toString
       val first = SnapshotStore.commit(root, Seq(a))
       val second = SnapshotStore.commit(root, Seq(b)) // carries `a` forward
+      // the upgrade's commit: a part that names no file takes a new id and
+      // its copied file, and keeps the rest of its line; `b` is carried
+      val old = SnapshotStore.entriesAt(root, second).filter(_.file.isEmpty)
+      val targets = CompactJob.upgradeTargets(root, old)
+      val (relDir, absDir) = SnapshotStore.newDataDir(root)
+      Files.createDirectories(java.nio.file.Paths.get(absDir))
+      val copied = old.map { e =>
+        val t = targets(e.partId)
+        val name = graft.sources.v2.GraftDataWriter.fileNameFor(t.partId, 0L)
+        Files.write(java.nio.file.Paths.get(absDir,
+          graft.sources.v2.GraftDataWriter.stagedName(name)), Array[Byte](1, 2, 3))
+        (e.partId, e.nRows, graft.sources.v2.GraftWriterCommitMessage(name,
+          t.copy(file = Some(name), fileLen = 3L)))
+      }
+      val third = CompactJob.commitUpgrade(root, old, copied, relDir, absDir)
+      val upgraded = old.map(e => e.copy(partId = targets(e.partId).partId, dataDir = relDir,
+        file = copied.find(_._1 == e.partId).map(_._3.fileName), fileLen = 3L))
       SnapshotStore.entriesAt(root, first) == Seq(a) &&
-        SnapshotStore.entriesAt(root, second) == Seq(a, b)
+        SnapshotStore.entriesAt(root, second) == Seq(a, b) &&
+        SnapshotStore.entriesAt(root, third) == Seq(a, b).filter(_.file.isDefined) ++ upgraded &&
+        SnapshotStore.isRehomedCommit(root, third)
     }, cases = 200)
   }
 

@@ -12,10 +12,10 @@ import graft.jobs.{CompactJob, DecodeJob, EncodeJob}
 import graft.sources.{SnapshotStore, WebPage, Webtext}
 
 /**
- * Native block files ([[BlockFile]]): stores written before them stay
- * readable and writable beside them, corrupt or truncated files fail with a
- * typed IOException that names the file, and the I/O a scan makes is what
- * the manifest and the footers say it needs.
+ * Native block files ([[BlockFile]]): a store written before them is refused
+ * until one compaction copies its blocks into them unchanged, corrupt or
+ * truncated files fail with a typed IOException that names the file, and the
+ * I/O a scan makes is what the manifest and the footers say it needs.
  */
 class NativeBlockFileSpec extends AnyFunSuite {
 
@@ -45,87 +45,68 @@ class NativeBlockFileSpec extends AnyFunSuite {
 
   // ---------------- stores written before native block files ----------------
 
-  test("a HEAD-format store reads identically through V2 SQL and DecodeJob") {
+  /** (column, SHA-256 of `encoded`, n, codec) of every block, as a sorted list. */
+  private def blockDigests(blocks: DataFrame): Seq[String] =
+    blocks.select(col("column"), sha2(col("encoded"), 256), col("n"), col("codec"))
+      .collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  /** What a manifest line says of its part's rows, besides where they live. */
+  private def partFacts(e: SnapshotStore.PartEntry) =
+    (e.nRows, e.origBytes, e.encBytes, e.codecsJson, e.stats)
+
+  test("CompactJob upgrades a HEAD-format store by copying its blocks unchanged") {
     val root = HeadFormatStore.copy()
-    assert(SnapshotStore.currentEntries(root).forall(_.file.isEmpty), "fixture lines name no file")
+    val before = SnapshotStore.currentEntries(root)
+    assert(before.nonEmpty && before.forall(_.file.isEmpty), "fixture lines name no file")
+    // the fixture's live parquet rows: the DELETE's replaced part still has
+    // its file in a dir another part references
+    val parquetDigests = blockDigests(spark.read.parquet(before.map(_.dataDir).distinct
+      .map(d => Paths.get(root, d).toString): _*).where(col("part_id").isin(before.map(_.partId): _*)))
+    val snap = SnapshotStore.currentSnapshotId(root).get
+    val res = CompactJob.run(spark, root, minRows = 0L)
+    assert(res.snapshotId == snap + 1 && res.partsCompacted == 0)
+    assert(SnapshotStore.isRehomedCommit(root, res.snapshotId), "streams skip the upgrade")
+    val after = SnapshotStore.currentEntries(root)
+    assert(after.size == before.size && after.forall(e => e.file.exists(_.endsWith(".graft"))))
+    after.foreach { e =>
+      assert(Files.size(Paths.get(root, e.dataDir, e.file.get)) == e.fileLen)
+    }
+    assert(after.map(partFacts).sortBy(_.toString) == before.map(partFacts).sortBy(_.toString),
+      "each part keeps its row count, byte counts, codecs and stats")
+    assert(blockDigests(DecodeJob.blocks(spark, root)) == parquetDigests)
+    val blockParts = DecodeJob.blocks(spark, root).select("part_id").distinct()
+      .collect().map(_.getInt(0)).toSet
+    assert(blockParts == after.map(_.partId).toSet)
+    assert(DecodeJob.blocks(spark, root).where(col("column") === "url").count() ==
+      after.map(_.stats.get.nGroups).sum)
     val want = sortedRows(pagesDf(HeadFormatStore.pages))
     assert(want.size == 339)
     assert(sortedRows(graftDf(root)) == want)
     assert(sortedRows(DecodeJob.decode(spark, root).toDF()) == want)
-    // the block metadata of the live parts only: the DELETE's replaced part
-    // still has its file in a dir another part references
-    val live = SnapshotStore.currentEntries(root).map(_.partId).toSet
-    val blockParts = DecodeJob.blocks(spark, root).select("part_id").distinct()
-      .collect().map(_.getInt(0)).toSet
-    assert(blockParts == live)
-    assert(DecodeJob.blocks(spark, root).where(col("column") === "url").count() ==
-      SnapshotStore.currentEntries(root).map(_.stats.get.nGroups).sum)
+    // every part names a file now: no job, no commit
+    assert(CompactJob.run(spark, root, minRows = 0L).snapshotId == res.snapshotId)
+    assert(SnapshotStore.currentSnapshotId(root).contains(res.snapshotId))
   }
 
-  test("a HEAD-format store takes a native append; pruned, pushed and top-n reads stay exact") {
-    import spark.implicits._
-    val root = HeadFormatStore.copy()
-    val extra = (2000L until 2400L).map(Webtext.page)
-    spark.conf.set("spark.graft.write.partitions", "2")
-    try extra.toDS().write.format("graft").mode("append").save(root)
-    finally spark.conf.unset("spark.graft.write.partitions")
-    val entries = SnapshotStore.currentEntries(root)
-    assert(entries.exists(_.file.isEmpty) && entries.exists(_.file.isDefined), "a mixed store")
-    val all = pagesDf(HeadFormatStore.pages ++ extra)
-    assert(sortedRows(graftDf(root)) == sortedRows(all))
-    // planned at the default break-even cutoff: the gate counts each part's
-    // groups from its manifest stats
-    val prefix = "https://host-1."
-    val pruned = col("url").startsWith(prefix) && col("lang") === "en"
-    assert(sortedRows(graftDf(root).where(pruned).select("url")) ==
-      sortedRows(all.where(pruned).select("url")))
-    val kept = GraftDataSource.planStatsFor(root).get.prunedGroupKeys
-    assert(kept.exists(k => k >= 1 && k < entries.map(_.stats.get.nGroups).sum), s"kept $kept")
-    assert(sortedRows(DecodeJob.decodeWhere(spark, root,
-      Seq(DecodeJob.StrPrefix("url", prefix))).toDF()) ==
-      sortedRows(all.where(col("url").startsWith(prefix))))
-    val lo = new java.sql.Timestamp(extra.map(_.warc_ts.getTime).min)
-    val hi = new java.sql.Timestamp(lo.getTime + 3L * 86400000L)
-    val pushed = col("warc_ts").between(lo, hi)
-    assert(sortedRows(graftDf(root).where(pushed).select("url", "warc_ts")) ==
-      sortedRows(all.where(pushed).select("url", "warc_ts")))
-    val topN = graftDf(root).orderBy(col("url")).limit(25).select("url").collect().map(_.getString(0))
-    assert(topN.toSeq == all.orderBy(col("url")).limit(25).select("url").collect()
-      .map(_.getString(0)).toSeq)
-    assert(GraftDataSource.planStatsFor(root).get.pushedTopN.isDefined)
-    // block metadata spans both layouts
-    assert(DecodeJob.blocks(spark, root).where(col("column") === "url").count() ==
-      entries.map(_.stats.get.nGroups).sum)
-  }
-
-  test("UPDATE, MERGE and DELETE work on a HEAD-format store") {
+  test("a part that names no file is refused before any listing or open") {
     val root = HeadFormatStore.copy()
     spark.conf.set("spark.sql.catalog.graftcat", classOf[GraftCatalog].getName)
-    val v = s"graftcat.`$root`"
-    var want = pagesDf(HeadFormatStore.pages)
-    val some = HeadFormatStore.pages.map(_.url).sorted
-    spark.sql(s"UPDATE $v SET lang = 'xx' WHERE url <= '${some(40)}'")
-    want = want.withColumn("lang", when(col("url") <= some(40), lit("xx")).otherwise(col("lang")))
-    assert(sortedRows(graftDf(root)) == sortedRows(want))
-
-    import spark.implicits._
-    Seq(some(100), some(200), "zzz://new/1").toDF("url").createOrReplaceTempView("head_merge_src")
-    spark.sql(
-      s"""MERGE INTO $v t USING head_merge_src s ON t.url = s.url
-         |WHEN MATCHED THEN UPDATE SET text = 'merged'
-         |WHEN NOT MATCHED THEN INSERT (url, warc_ts, html, text, lang)
-         |  VALUES (s.url, timestamp'2020-01-01 00:00:00', cast('h' as binary), 'new', 'nw')
-         |""".stripMargin)
-    want = want.withColumn("text",
-        when(col("url").isin(some(100), some(200)), lit("merged")).otherwise(col("text")))
-      .unionByName(Seq(("zzz://new/1", java.sql.Timestamp.valueOf("2020-01-01 00:00:00"),
-        "h".getBytes("UTF-8"), "new", "nw")).toDF("url", "warc_ts", "html", "text", "lang"))
-    assert(sortedRows(graftDf(root)) == sortedRows(want))
-
-    spark.sql(s"DELETE FROM $v WHERE lang = 'de'")
-    want = want.where(!(col("lang") <=> lit("de")))
-    assert(sortedRows(graftDf(root)) == sortedRows(want))
-    assert(sortedRows(DecodeJob.decode(spark, root).toDF()) == sortedRows(want))
+    def refused(read: => Any): Unit = {
+      val e = intercept[Exception](read)
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toSeq
+      assert(msgs.exists(m => m.contains(s"store at $root") && m.contains("part ") &&
+        m.contains("CompactJob.run") && m.contains("CALL graftcat.system.compact")),
+        s"not the refusal: $e")
+    }
+    counting {
+      refused(graftDf(root).collect())
+      refused(DecodeJob.decode(spark, root).collect())
+      refused(spark.sql(s"DELETE FROM graftcat.`$root` WHERE lang = 'de'"))
+      assert(CountingLocalFileSystem.listings.isEmpty,
+        s"listed ${CountingLocalFileSystem.listings}")
+      assert(CountingLocalFileSystem.opened.isEmpty, s"opened ${CountingLocalFileSystem.opened}")
+    }
   }
 
   test("CompactJob leaves a HEAD-format store with native files only") {
@@ -278,7 +259,7 @@ class NativeBlockFileSpec extends AnyFunSuite {
       GraftDataSource.PageSchema.fields.filter(f => cols.contains(f.name)))
     def readAll(cols: org.apache.spark.sql.types.StructType): Int = {
       val r = new GraftPartitionReader(GraftInputPartition(Array(f.toString), Array(len), cols,
-        "url", Array(e.partId), null, columnar = false), conf)
+        "url", null, columnar = false), conf)
       try { var n = 0; while (r.next()) n += 1; n } finally r.close()
     }
     val err = intercept[java.io.IOException](readAll(only("url", "lang")))
@@ -312,7 +293,7 @@ class NativeBlockFileSpec extends AnyFunSuite {
     r
   }
 
-  test("planning a native store lists no directory; a HEAD-format store still lists") {
+  test("planning a native store lists no directory") {
     val r = fiveColumnStore
     counting {
       val full = plannedFiles(graftDf(r))
@@ -320,11 +301,6 @@ class NativeBlockFileSpec extends AnyFunSuite {
       assert(full.size == 4 && sel.nonEmpty)
       assert(CountingLocalFileSystem.listings.isEmpty,
         s"native planning listed ${CountingLocalFileSystem.listings}")
-    }
-    val head = HeadFormatStore.copy()
-    counting {
-      assert(plannedFiles(graftDf(head)).nonEmpty)
-      assert(CountingLocalFileSystem.listings.size() > 0, "the HEAD-format store is listed")
     }
   }
 

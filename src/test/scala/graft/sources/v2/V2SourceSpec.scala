@@ -63,7 +63,7 @@ class V2SourceSpec extends AnyFunSuite {
       s"SELECT url, lang FROM graft_pages_v2 WHERE url = '${one.url}'").collect()
     assert(out.length == 1 && out(0).getString(1) == one.lang)
     // an exact-url StrEq must have pruned groups during planning
-    val stats = GraftDataSource.lastPlanStats.get
+    val stats = GraftDataSource.planStatsFor(root).get
     assert(stats.predicates >= 1)
     assert(stats.prunedGroupKeys.exists(_ <= 2),
       s"exact-url predicate should prune to ~1 group: $stats")
@@ -84,7 +84,7 @@ class V2SourceSpec extends AnyFunSuite {
       written.where(col("url").startsWith(prefix))
         .select(col("url")))
     assert(got == want && got.nonEmpty)
-    val stats = GraftDataSource.lastPlanStats.get
+    val stats = GraftDataSource.planStatsFor(root).get
     val totalGroups = DecodeJob.blocks(spark, root).where(col("column") === "url").count()
     assert(stats.prunedGroupKeys.exists(k => k > 0 && k < totalGroups),
       s"prefix must prune block groups: $stats of $totalGroups groups")
@@ -123,7 +123,7 @@ class V2SourceSpec extends AnyFunSuite {
     val want = sortedRows(written
       .where(col("warc_ts") <= hi).select(col("url")))
     assert(sortedRows(df) == want && want.nonEmpty)
-    assert(GraftDataSource.lastPlanStats.get.predicates >= 1)
+    assert(GraftDataSource.planStatsFor(root).get.predicates >= 1)
   }
 
   test("empty projection (count(*)) never reads the encoded column") {
@@ -140,7 +140,7 @@ class V2SourceSpec extends AnyFunSuite {
     val got = df.count()
     val want = written.where(col("lang") === "en").count()
     assert(got == want)
-    val stats = GraftDataSource.lastPlanStats.get
+    val stats = GraftDataSource.planStatsFor(root).get
     assert(stats.prunedGroupKeys.isEmpty,
       s"non-selective predicate must skip pruning: $stats")
   }
@@ -471,7 +471,7 @@ class V2SourceSpec extends AnyFunSuite {
       val viaV2 = graftTable.select(col("url"), unix_micros(col("warc_ts")).as("ts"),
         col("lang"))
       val got = sortedRows(viaV2) // materialize through GraftScan (not the agg scan)
-      val stats = GraftDataSource.lastPlanStats.get
+      val stats = GraftDataSource.planStatsFor(root).get
       assert(stats.partitions < stats.files && stats.files >= 2,
         s"bins must pack multiple files under minPartitionNum=1: $stats")
       val want = sortedRows(written
@@ -488,7 +488,7 @@ class V2SourceSpec extends AnyFunSuite {
     scan.filter(Array[org.apache.spark.sql.sources.Filter](
       org.apache.spark.sql.sources.In("url", urls.toArray[Any])))
     scan.planInputPartitions()
-    val stats = GraftDataSource.lastPlanStats.get
+    val stats = GraftDataSource.planStatsFor(root).get
     val totalGroups = DecodeJob.blocks(spark, root).where(col("column") === "url").count()
     assert(stats.prunedGroupKeys.exists(k => k > 0 && k < totalGroups),
       s"runtime In-filter must prune groups: $stats of $totalGroups")
@@ -497,7 +497,7 @@ class V2SourceSpec extends AnyFunSuite {
     scan2.filter(Array[org.apache.spark.sql.sources.Filter](
       org.apache.spark.sql.sources.In("url", Array.tabulate(20000)(i => s"u$i": Any))))
     scan2.planInputPartitions()
-    assert(GraftDataSource.lastPlanStats.get.prunedGroupKeys.isEmpty)
+    assert(GraftDataSource.planStatsFor(root).get.prunedGroupKeys.isEmpty)
     // end-to-end: broadcast join over the V2 table returns exact rows
     import spark.implicits._
     val small = urls.toDF("url")
@@ -577,28 +577,6 @@ class V2SourceSpec extends AnyFunSuite {
       val stats = GraftDataSource.planStatsFor(r2).get
       assert(stats.prunedGroupKeys.exists(_ > R4TaskKeyCeiling),
         s"scan must prune past the old 4096 ceiling: $stats")
-      // over the per-task In-filter budget: only part_id pushes to parquet, the
-      // exact liveGroup check keeps rows identical. Parquet block files are
-      // read only in stores written before native block files, so this runs
-      // over such a store, with a budget below its bins' key counts
-      val savedBudget = GraftDataSource.InFilterMaxKeys
-      try {
-        GraftDataSource.InFilterMaxKeys = 2
-        import spark.implicits._
-        val head = graft.HeadFormatStore.copy()
-        val headPred = col("url") >= "https://host-5"
-        val headWant = sortedRows(graft.HeadFormatStore.pages.toDS().toDF()
-          .where(headPred).select(col("url")))
-        val capped = spark.read.format("graft").load(head).where(headPred).select(col("url"))
-        val overBudget = capped.queryExecution.executedPlan.collect {
-          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.inputPartitions
-        }.flatten.map(_.asInstanceOf[GraftInputPartition])
-          .filter(p => p.keys != null && p.keys.length > GraftDataSource.InFilterMaxKeys)
-        assert(overBudget.nonEmpty && overBudget.forall(_.files.forall(_.endsWith(".parquet"))),
-          "a parquet bin must hold more keys than the In-filter budget")
-        assert(headWant.nonEmpty && sortedRows(capped) == headWant,
-          "over-budget In-filter must stay exact")
-      } finally GraftDataSource.InFilterMaxKeys = savedBudget
     } finally DecodeJob.PruneFractionCutoff = savedCutoff
   }
 

@@ -257,14 +257,17 @@ class V2WriteSpec extends AnyFunSuite {
     pages(4000L).write.format("graft").mode("append").save(arrangedRoot)
     assert(GraftWriteArrangeRule.arranged.get() > n0, "arrange rule did not fire")
 
-    // 2. kill switch: the ordered-distribution fallback still works and the two
-    //    paths produce content-identical stores
+    // 2. a write the rule does not arrange (the streaming sink's epochs) takes
+    //    the ordered-distribution path, and the two paths produce
+    //    content-identical stores
     val orderedRoot = freshRoot()
-    spark.conf.set("spark.graft.write.arrange", "false")
+    val src = Paths.get(freshRoot(), "src").toString
+    pages(4000L).write.parquet(src)
     val n1 = GraftWriteArrangeRule.arranged.get()
-    try pages(4000L).write.format("graft").mode("append").save(orderedRoot)
-    finally spark.conf.unset("spark.graft.write.arrange")
-    assert(GraftWriteArrangeRule.arranged.get() == n1, "kill switch ignored")
+    graft.streaming.StreamingEncode.encodeStream(
+      spark.readStream.schema(spark.read.parquet(src).schema).parquet(src), orderedRoot,
+      parts = 4, Paths.get(freshRoot(), "ckpt").toString).awaitTermination()
+    assert(GraftWriteArrangeRule.arranged.get() == n1, "a streamed epoch must take the ordered path")
     def contentHash(root: String): Array[org.apache.spark.sql.Row] =
       DecodeJob.decode(spark, root)
         .agg(org.apache.spark.sql.functions.bit_xor(
