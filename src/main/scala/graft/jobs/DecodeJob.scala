@@ -18,14 +18,16 @@ import graft.sources.{SnapshotStore, WebPage}
  * split repair. Block predicates become exact row filters; the scan pushes
  * them down and prunes groups with [[planPrunedKeys]], and Spark still runs
  * them on the decoded rows. Building a decode runs no Spark job; the scan is
- * planned at the first action.
+ * planned at the first action, on the driver: from the manifest's part stats,
+ * then from the footers of the surviving multi-group parts, one read per
+ * file. Planning runs no Spark job either.
  */
 object DecodeJob {
 
   /** The [[BlockRow]]s of `entries`' parts, read through
     * [[NativeBlocksRelation]]: each named file's footer, and its `encoded`
-    * bytes only when the query selects that column, so the level-2 planning
-    * jobs read footers alone. A part that names no file is refused
+    * bytes only when the query selects that column, so a metadata query
+    * reads footers alone. A part that names no file is refused
     * ([[SnapshotStore.PartEntry.filePath]]). An empty snapshot
     * (created-but-unloaded table, truncate, all-matched DELETE) reads as the
     * empty relation, correctly typed. */
@@ -124,41 +126,6 @@ object DecodeJob {
     else Some(prefix.substring(0, i) + (prefix.charAt(i) + 1).toChar)
   }
 
-  /** Can a block with this metadata row contain a match? (null metadata => yes) */
-  private def metaCond(p: BlockPredicate): org.apache.spark.sql.Column = p match {
-    case StrEq(_, v) =>
-      (col("block_str_min").isNull || col("block_str_min") <= v) &&
-      (col("block_str_max").isNull || col("block_str_max") >= v) &&
-      (col("block_str_dict").isNull || array_contains(col("block_str_dict"), v))
-    case StrIn(_, vs) =>
-      val arr = typedLit(vs)
-      (col("block_str_min").isNull || col("block_str_min") <= array_max(arr)) &&
-      (col("block_str_max").isNull || col("block_str_max") >= array_min(arr)) &&
-      (col("block_str_dict").isNull || arrays_overlap(col("block_str_dict"), arr))
-    case StrPrefix(_, p) =>
-      // matches s satisfy p <= s < successor(p); a block overlaps that interval
-      // iff max >= p and min < successor(p) (when the successor exists)
-      (col("block_str_max").isNull || col("block_str_max") >= p) &&
-      prefixSuccessor(p).map(succ =>
-        col("block_str_min").isNull || col("block_str_min") < succ).getOrElse(lit(true)) &&
-      (col("block_str_dict").isNull ||
-        exists(col("block_str_dict"), v => v.startsWith(p)))
-    case StrRange(_, lo, hi) =>
-      hi.map(h => col("block_str_min").isNull || col("block_str_min") <= h)
-        .getOrElse(lit(true)) &&
-      lo.map(l => col("block_str_max").isNull || col("block_str_max") >= l)
-        .getOrElse(lit(true)) &&
-      (col("block_str_dict").isNull ||
-        exists(col("block_str_dict"), v =>
-          lo.map(v >= _).getOrElse(lit(true)) && hi.map(v <= _).getOrElse(lit(true))))
-    case TsRange(lo, hi) =>
-      (col("block_min").isNull || col("block_min") <= hi) &&
-      (col("block_max").isNull || col("block_max") >= lo)
-    case IntRange(_, lo, hi) =>
-      (col("block_min").isNull || col("block_min") <= hi) &&
-      (col("block_max").isNull || col("block_max") >= lo)
-  }
-
   /** 1900-01-01T00:00:00Z in epoch micros. */
   private val PushableTsFloorMicros = -2208988800L * 1000000L
 
@@ -187,47 +154,30 @@ object DecodeJob {
 
   /**
    * Group keys whose metadata admits ALL predicates — the set of (part_id,
-   * block_seq) that must be decoded. A column-pruned metadata-only scan
-   * (block-file footers, never `encoded`), one key
-   * DataFrame per predicate, intersected. Manifest-scale output.
+   * block_seq) that must be decoded — planned on the driver over the current
+   * manifest ([[planPrunedKeys]]), as a local DataFrame.
    */
   def matchingGroupKeys(spark: SparkSession, root: String,
-                        predicates: Seq[BlockPredicate]): org.apache.spark.sql.DataFrame =
-    matchingKeysOf(blocks(spark, root), predicates)
+                        predicates: Seq[BlockPredicate]): org.apache.spark.sql.DataFrame = {
+    requireStore(root)
+    import spark.implicits._
+    planPrunedKeys(spark, root, SnapshotStore.currentEntries(root), predicates).toSeq
+      .toDF("part_id", "block_seq")
+  }
 
   /** The parts of the PINNED `entries` that may hold a row matching all
     * `predicates` (every part when there are none) — the parts a
-    * copy-on-write DELETE or MERGE rewrites. Level 1 first
-    * ([[partsMayMatch]]); when every survivor is one block group with stats
-    * the survivors are the answer and no Spark job runs, otherwise the
-    * block-metadata job runs over the survivors only. Callers keep planning
-    * AND the later rewrite/commit on ONE manifest read: deriving affected
-    * parts from a re-read manifest while holding an older entry list lets a
-    * concurrent compaction slip between the two, and a commit that then
-    * tombstones parts it never rewrote is silent row loss. */
+    * copy-on-write DELETE or MERGE rewrites: those of the groups
+    * [[planPrunedKeys]] keeps. Callers keep planning AND the later
+    * rewrite/commit on ONE manifest read: deriving affected parts from a
+    * re-read manifest while holding an older entry list lets a concurrent
+    * compaction slip between the two, and a commit that then tombstones parts
+    * it never rewrote is silent row loss. */
   private[graft] def affectedParts(spark: SparkSession, root: String,
       entries: Seq[SnapshotStore.PartEntry],
-      predicates: Seq[BlockPredicate]): Set[Int] = {
-    if (predicates.isEmpty || entries.isEmpty) return entries.map(_.partId).toSet
-    requireValidPredicates(predicates, None)
-    val survivors = partsMayMatch(entries, predicates)
-    if (survivors.forall(_.stats.exists(_.nGroups == 1))) survivors.map(_.partId).toSet
-    else {
-      import spark.implicits._
-      matchingKeysOf(fromEntries(spark, root, survivors), predicates)
-        .select($"part_id").distinct().as[Int].collect().toSet
-    }
-  }
-
-  private def matchingKeysOf(blocksDf: org.apache.spark.sql.DataFrame,
-                             predicates: Seq[BlockPredicate],
-                             allowed: Option[Set[String]] = None): org.apache.spark.sql.DataFrame = {
-    requireValidPredicates(predicates, allowed)
-    predicates.map { p =>
-      blocksDf.where(col("column") === p.column && metaCond(p))
-        .select(col("part_id"), col("block_seq"))
-    }.reduce((a, c) => a.join(c, Seq("part_id", "block_seq")))
-  }
+      predicates: Seq[BlockPredicate]): Set[Int] =
+    if (predicates.isEmpty || entries.isEmpty) entries.map(_.partId).toSet
+    else planPrunedKeys(spark, root, entries, predicates).iterator.map(_._1).toSet
 
   private def requireValidPredicates(predicates: Seq[BlockPredicate],
                                      allowed: Option[Set[String]]): Unit = {
@@ -253,18 +203,18 @@ object DecodeJob {
     }
   }
 
-  // ---------------- level 1: manifest part stats, on the driver ----------------
+  // ------- planning on the driver: part stats, then the groups' footers -------
 
   private def u8(s: String): UTF8String = UTF8String.fromString(s)
 
-  /** [[metaCond]] as a test of a part's rolled-up column stats (min of the
-    * blocks' mins, max of their maxes, dict union) instead of one block's
-    * metadata, with the same null-means-pass rule and Spark's string order
-    * (UTF-8 bytes). A part passes whenever ANY of its blocks could, because
-    * every part bound is no tighter than each block's — so level 1 never
-    * prunes a part holding a block that [[metaCond]] keeps. Literals are
+  /** Can a part or block group whose column has these stats hold a row
+    * matching `p`? Absent stats pass (soundness), and strings compare in
+    * Spark's order (UTF-8 bytes). A part's stats are the rollup of its
+    * blocks' (min of the mins, max of the maxes, dict union), no tighter than
+    * any block's, so a part passes whenever ANY of its groups could: level 1
+    * never prunes a part holding a group level 2 keeps. Literals are
     * converted once per predicate: a runtime In-filter can carry thousands
-    * of values and the test runs once per part. */
+    * of values and the test runs once per part and group. */
   private def statsTest(p: BlockPredicate): SnapshotStore.ColumnStats => Boolean = {
     def le(a: Option[String], b: UTF8String) = a.forall(x => u8(x).compareTo(b) <= 0)
     def ge(a: Option[String], b: UTF8String) = a.forall(x => u8(x).compareTo(b) >= 0)
@@ -279,6 +229,8 @@ object DecodeJob {
         val (lo, hi, set) = (us.min, us.max, us.toSet)
         s => le(s.strMin, hi) && ge(s.strMax, lo) && dictHas(s)(set)
       case StrPrefix(_, pre) =>
+        // matches s satisfy pre <= s < successor(pre): the stats must overlap
+        // that interval (only its lower end when there is no successor)
         val x = u8(pre)
         val succ = prefixSuccessor(pre).map(u8)
         s => ge(s.strMax, x) && succ.forall(su => s.strMin.forall(u8(_).compareTo(su) < 0)) &&
@@ -292,27 +244,76 @@ object DecodeJob {
     }
   }
 
-  /** Level-1 survivors: the parts whose manifest stats admit ALL predicates
-    * (parts without stats, or without stats for a predicate's column, are
-    * unbounded and always survive). */
-  private[graft] def partsMayMatch(entries: Seq[SnapshotStore.PartEntry],
-      predicates: Seq[BlockPredicate]): Seq[SnapshotStore.PartEntry] = {
+  /** Do per-column stats admit ALL predicates? A column without stats is
+    * unbounded and admits. */
+  private def admitsAll(predicates: Seq[BlockPredicate])
+      : Map[String, SnapshotStore.ColumnStats] => Boolean = {
     val tests = predicates.map(p => (p.column, statsTest(p)))
-    entries.filter(e => tests.forall { case (c, t) =>
-      e.stats.flatMap(_.columns.get(c)).forall(t) })
+    cols => tests.forall { case (c, t) => cols.get(c).forall(t) }
   }
 
-  /** Level 1 is exact when every survivor is ONE block group with stats: its
-    * part stats are then that group's block metadata, so the survivors'
-    * `(part_id, 0)` are exactly the keys level 2 would collect — through the
-    * same gate, with no Spark job. Otherwise `level2` (the block-metadata
-    * job over the survivors only) plans the keys. */
-  private def twoLevelKeys(survivors: Seq[SnapshotStore.PartEntry],
-      totalGroupsEstimate: Long)(level2: => Option[Array[(Int, Int)]])
-      : Option[Array[(Int, Int)]] =
-    if (!survivors.forall(_.stats.exists(_.nGroups == 1))) level2
-    else if (survivors.size > keyCollectThreshold(totalGroupsEstimate)) None
-    else Some(survivors.iterator.map(e => (e.partId, 0)).toArray)
+  /** Level-1 survivors: the parts whose manifest stats admit ALL predicates
+    * (parts without stats are unbounded and always survive). */
+  private[graft] def partsMayMatch(entries: Seq[SnapshotStore.PartEntry],
+      predicates: Seq[BlockPredicate]): Seq[SnapshotStore.PartEntry] = {
+    val admits = admitsAll(predicates)
+    entries.filter(_.stats.forall(s => admits(s.columns)))
+  }
+
+  /** One unit of level-2 planning: a block group, its row count and its
+    * per-column stats. */
+  private final case class Group(partId: Int, seq: Int, rows: Long,
+      columns: Map[String, SnapshotStore.ColumnStats])
+
+  /** A group's stats for one column, straight from the column's footer
+    * entry. They are not cut to [[SnapshotStore.PartStats.MaxStringBound]]
+    * or `MaxDictValues` as a part's are: a group prunes on its whole
+    * metadata. */
+  private def groupStats(b: BlockRow): SnapshotStore.ColumnStats =
+    SnapshotStore.ColumnStats(b.block_min, b.block_max, b.block_str_min, b.block_str_max,
+      b.n_nulls.toLong, b.block_str_dict.map(_.toSeq))
+
+  /** Footers of more files than this are read through [[footerPool]]. */
+  private val SerialFooterReads = 4
+
+  /** The driver's footer readers: a fixed pool of daemon threads, made at
+    * the first planning that needs it. */
+  private lazy val footerPool = scala.concurrent.ExecutionContext.fromExecutorService(
+    java.util.concurrent.Executors.newFixedThreadPool(8, (r: Runnable) => {
+      val t = new Thread(r, "graft-footer-reader")
+      t.setDaemon(true)
+      t
+    }))
+
+  /** The block groups of `parts`. A part with stats and one group is that
+    * group, with its manifest stats. Any other part (several groups, or
+    * committed without stats) yields its groups from its file's footer, read
+    * on the driver with the session's Hadoop settings: one positioned read
+    * per file at its manifest length, no block bytes. */
+  private def groupsOf(spark: SparkSession, root: String,
+      parts: Seq[SnapshotStore.PartEntry]): Seq[Group] = {
+    val (single, multi) = parts.partition(_.stats.exists(_.nGroups == 1))
+    val fromStats = single.map(e => Group(e.partId, 0, e.nRows, e.stats.get.columns))
+    if (multi.isEmpty) return fromStats
+    val conf = graft.sources.v2.HadoopSettings(spark).conf()
+    def read(e: SnapshotStore.PartEntry, path: String): Seq[Group] =
+      graft.sources.v2.BlockFile.readAll(path, e.fileLen, e.partId, conf, withEncoded = false)
+        .groupBy(_.block_seq).iterator.map { case (seq, bs) =>
+          Group(e.partId, seq, bs.head.n.toLong,
+            bs.iterator.map(b => b.column -> groupStats(b)).toMap)
+        }.toSeq
+    // paths are resolved first, so a part that names no file fails here
+    val files = multi.map(e => (e, e.filePath(root)))
+    val fromFooters =
+      if (files.size <= SerialFooterReads) files.flatMap { case (e, p) => read(e, p) }
+      else {
+        import scala.concurrent.{Await, Future, duration}
+        implicit val ec: scala.concurrent.ExecutionContext = footerPool
+        Await.result(Future.traverse(files) { case (e, p) => Future(read(e, p)) },
+          duration.Duration.Inf).flatten
+      }
+    fromStats ++ fromFooters
+  }
 
   /** One packed block-group key: `(part_id << 32) | block_seq` — the V2
     * scan's broadcast key format ([[graft.sources.v2.GraftDataSource]]); one
@@ -322,78 +323,24 @@ object DecodeJob {
     (pid.toLong << 32) | (seq.toLong & 0xffffffffL)
 
   /**
-   * Driver-side key-collect ceiling: above this many surviving groups the
-   * predicate simply is not selective and Iceberg-style manifest planning stops
-   * paying — the collect itself (and the broadcast built from it) becomes the
-   * bottleneck. `private[jobs]` var so tests can force the ungated branch.
-   */
-  private[graft] var MaxPrunedKeyCollect = 1000000
-
-  /** Fraction of total groups above which pruning is skipped: past half the
-    * groups the key filters buy little IO (survivors sit in ~every file) while
-    * the metadata collect and the pushed In-lists still cost; below it pruning
-    * at least halves the decode. The driver-memory guard is the ABSOLUTE
-    * [[MaxPrunedKeyCollect]] cap — this fraction is purely a break-even
-    * heuristic, so it must not gate small stores where a 50%-selective
-    * predicate still meaningfully prunes. `private[graft] var` so tests can
-    * widen it: exercising the many-thousand-key pruning path at test scale
-    * needs the heuristic (not the mechanism) out of the way. */
-  private[graft] var PruneFractionCutoff = 0.5
-
-  /** Total block groups from the manifest alone — zero file IO: each part's
-    * stats carry its exact `n_groups`. A part committed without stats counts
-    * ceil(nRows/BlockSize), which UNDER-estimates parts whose fat-row blocks
-    * flushed on the byte bound and so only tightens the gate's fraction
-    * threshold (less pruning, never wrong results). */
-  private[graft] def estimatedGroups(entries: Seq[SnapshotStore.PartEntry]): Long =
-    entries.map { e =>
-      e.stats.map(_.nGroups.toLong).filter(_ > 0)
-        .getOrElse(math.max(1L, (e.nRows + EncodeJob.BlockSize - 1) / EncodeJob.BlockSize))
-    }.sum
-
-  /**
-   * GATED two-level planning of the pruned-group key set over ONE pinned
-   * manifest read (`entries`). Level 1 runs on the driver: each part's
-   * manifest stats ([[SnapshotStore.PartStats]]) are tested against every
-   * predicate ([[partsMayMatch]]), and when every survivor is a single block
-   * group the survivors ARE the keys — no Spark job. Otherwise level 2 runs
-   * the column-pruned block-metadata job over the surviving parts only (parts
-   * committed without stats always survive, so pre-stats stores plan exactly
-   * as before). Either way the keys pass one gate: the store is sized from
-   * the MANIFEST, and past min([[MaxPrunedKeyCollect]],
-   * [[PruneFractionCutoff]]·total) surviving groups the caller gets None and
-   * falls back to decode-everything + exact filter — identical rows by
-   * construction, no unbounded driver collect at any table size.
+   * Two-level planning of the pruned-group keys over ONE pinned manifest read
+   * (`entries`), on the driver, with no Spark job. Level 1 tests each part's
+   * manifest stats ([[SnapshotStore.PartStats]]) against every predicate
+   * ([[partsMayMatch]]). Level 2 applies the same test ([[statsTest]]) to
+   * each group of the surviving parts ([[groupsOf]]): a single-group part's
+   * stats are its group's, any other part's groups are read from its
+   * footer. Every surviving key is returned, however many: each input
+   * partition carries only its own parts' keys, and a part without one is
+   * never opened.
    */
   private[graft] def planPrunedKeys(spark: SparkSession, root: String,
                                     entries: Seq[SnapshotStore.PartEntry],
                                     predicates: Seq[BlockPredicate],
-                                    allowed: Option[Set[String]] = None): Option[Array[(Int, Int)]] = {
+                                    allowed: Option[Set[String]] = None): Array[(Int, Int)] = {
     requireValidPredicates(predicates, allowed)
-    val survivors = partsMayMatch(entries, predicates)
-    val total = estimatedGroups(entries)
-    twoLevelKeys(survivors, total)(gatedKeyCollect(
-      matchingKeysOf(fromEntries(spark, root, survivors), predicates, allowed),
-      keyCollectThreshold(total)))
-  }
-
-  /** Surviving-group ceiling of the ONE driver-collect gate shared by every
-    * group-key planner ([[planPrunedKeys]], [[planTopNKeys]], both levels):
-    * min([[MaxPrunedKeyCollect]], [[PruneFractionCutoff]]·total). Shared so a
-    * future tuning cannot give the planners different pruning ceilings. */
-  private def keyCollectThreshold(totalGroupsEstimate: Long): Int =
-    math.min(MaxPrunedKeyCollect.toLong,
-      math.max(1L, (totalGroupsEstimate * PruneFractionCutoff).toLong)).toInt
-
-  /** Level-2 collect: `take(threshold + 1)` so a non-selective plan never
-    * materializes an unbounded key list; None past the threshold. */
-  private def gatedKeyCollect(survivors: org.apache.spark.sql.DataFrame,
-                              threshold: Int): Option[Array[(Int, Int)]] = {
-    val spark = survivors.sparkSession
-    import spark.implicits._
-    val keys = survivors.select($"part_id", $"block_seq").as[(Int, Int)]
-      .take(threshold + 1)
-    if (keys.length > threshold) None else Some(keys)
+    val admits = admitsAll(predicates)
+    groupsOf(spark, root, partsMayMatch(entries, predicates)).iterator
+      .filter(g => admits(g.columns)).map(g => (g.partId, g.seq)).toArray
   }
 
   /** The webtext columns a pushed top-n can plan a prefix over: url via the
@@ -402,27 +349,45 @@ object DecodeJob {
     * ([[graft.sources.v2.GraftScanBuilder.pushTopN]]). */
   private[graft] val TopNColumns = Set("url", "warc_ts")
 
+  /** A unit of the top-n prefix search (a part or a block group): its near
+    * and far bound in the query's order (None = unbounded), the rows it is
+    * sure to place within the prefix ending at its far bound, and whether it
+    * may hold nulls. */
+  private final case class TopNUnit[K](key: K, near: Option[Any], far: Option[Any],
+      countable: Long, mayHoldNulls: Boolean)
+
+  /** The units that can hold a row of the top-`limit` in order `dir`, or None
+    * when the bounded units cannot fill the quota. Sorted by far bound, the
+    * units' countable rows reach `limit` at a threshold `u`; a unit survives
+    * when its near bound is unknown or within `u`, or, when nulls sort first,
+    * when it may hold nulls. */
+  private def topNPrefix[K](units: Seq[TopNUnit[K]], dir: Ordering[Any],
+      nullsFirst: Boolean, limit: Int): Option[Seq[K]] = {
+    var acc = 0L
+    units.flatMap(u => u.far.map(_ -> u.countable)).sortBy(_._1)(dir).iterator
+      .find { case (_, c) => acc += c; acc >= limit }
+      .map { case (cut, _) =>
+        units.collect { case u if u.near.forall(dir.lteq(_, cut)) ||
+          (nullsFirst && u.mayHoldNulls) => u.key }
+      }
+  }
+
   /**
    * ORDER BY <column> LIMIT n planning for a metadata-bounded column (`url`
    * via block_str_min/max, `warc_ts` via the exact int block_min/max): the
    * (part_id, block_seq) groups that can contain a row of the global
    * top-`limit` under the given ordering — an ordered PREFIX of the store's
-   * groups, found from metadata alone. Sound with nulls: groups that may
-   * hold nulls (`n_nulls` > 0, or unknown on stores written before that column
-   * existed) always survive when nulls sort first, and never count toward the
-   * prefix quota when nulls sort last (their null rows cannot push a non-null
-   * row out of the top-n).
+   * groups, found from metadata alone ([[topNPrefix]]). Sound with nulls:
+   * units that may hold nulls always survive when nulls sort first, and
+   * count only their non-null rows toward the quota when nulls sort last
+   * (their null rows cannot push a non-null row out of the top-n).
    *
-   * Two levels, like [[planPrunedKeys]]: level 1 runs the prefix search below
-   * over the manifest's part stats on the driver and keeps the parts that can
-   * reach the prefix; if they are all single-group parts with stats those are
-   * the keys, else level 2 runs the same search over the survivors' block
-   * metadata ([[topNKeysOf]]). The part-level threshold is never below the
-   * block-level one (a part's far bound bounds all its blocks'), so level 1
-   * only drops parts level 2 would drop too. None (caller scans everything —
-   * always sound) when the quota is unreachable from bounded groups, the
-   * threshold search exceeds [[MaxPrunedKeyCollect]] groups, or the survivor
-   * set exceeds the collect gate.
+   * Two levels, like [[planPrunedKeys]]: the search runs over the manifest's
+   * part stats and keeps the parts that can reach the prefix (all of them
+   * when part stats cannot fill the quota), then over those parts' groups
+   * ([[groupsOf]]). A part's far bound bounds all its groups', so level 1
+   * only drops parts level 2 would drop too. None (the caller scans
+   * everything — always sound) when the groups cannot fill the quota.
    */
   private[graft] def planTopNKeys(spark: SparkSession, root: String,
                                   entries: Seq[SnapshotStore.PartEntry],
@@ -430,40 +395,23 @@ object DecodeJob {
                                   asc: Boolean, nullsFirst: Boolean, limit: Int,
                                   intBounds: Option[Boolean] = None): Option[Array[(Int, Int)]] = {
     require(limit > 0, s"pushed top-n limit must be positive, got $limit")
-    val isTs = topNIsInt(column, intBounds)
-    // a part's near and far bound in the query's order (None = unbounded):
-    // min/max for ASC, max/min for DESC, over the column's int or string stats
+    val isInt = topNIsInt(column, intBounds)
+    // int bounds as longs, string bounds as UTF8String (Spark's order)
     val ord: Ordering[Any] =
-      if (isTs) Ordering.Long.asInstanceOf[Ordering[Any]]
-      else Ordering.by[Any, UTF8String](v => u8(v.asInstanceOf[String]))
+      if (isInt) Ordering.Long.asInstanceOf[Ordering[Any]]
+      else (a: Any, b: Any) => a.asInstanceOf[UTF8String].compareTo(b.asInstanceOf[UTF8String])
     val dir = if (asc) ord else ord.reverse
-    def lo(s: SnapshotStore.ColumnStats): Option[Any] = if (isTs) s.min else s.strMin
-    def hi(s: SnapshotStore.ColumnStats): Option[Any] = if (isTs) s.max else s.strMax
-    def near(s: SnapshotStore.ColumnStats) = if (asc) lo(s) else hi(s)
-    def far(s: SnapshotStore.ColumnStats) = if (asc) hi(s) else lo(s)
-    val colStats = entries.map(e => e -> e.stats.flatMap(_.columns.get(column)))
-    // a part's rows guaranteed to sort within the prefix ending at its far
-    // bound (see topNKeysOf); part stats always carry the exact null count
-    val ordered = colStats.iterator.flatMap { case (e, so) =>
-      so.flatMap(s => far(s).map(_ -> (if (nullsFirst) e.nRows else e.nRows - s.nNulls)))
-    }.toSeq.sortBy(_._1)(dir)
-    var u: Any = null
-    var acc = 0L
-    val it = ordered.iterator.take(MaxPrunedKeyCollect)
-    while (u == null && it.hasNext) {
-      val (b, c) = it.next()
-      acc += c
-      if (acc >= limit) u = b
-    }
-    val survivors =
-      if (u == null) entries // quota unreachable from part stats: level 2 decides
-      else colStats.collect {
-        case (e, so) if so.flatMap(near).forall(dir.lteq(_, u)) ||
-            (nullsFirst && so.forall(_.nNulls > 0)) => e
-      }
-    val total = estimatedGroups(entries)
-    twoLevelKeys(survivors, total)(topNKeysOf(fromEntries(spark, root, survivors),
-      column, asc, nullsFirst, limit, total, Some(isTs)))
+    def lo(s: SnapshotStore.ColumnStats): Option[Any] = if (isInt) s.min else s.strMin.map(u8)
+    def hi(s: SnapshotStore.ColumnStats): Option[Any] = if (isInt) s.max else s.strMax.map(u8)
+    def unit[K](key: K, rows: Long, so: Option[SnapshotStore.ColumnStats]) = TopNUnit(key,
+      so.flatMap(s => if (asc) lo(s) else hi(s)), so.flatMap(s => if (asc) hi(s) else lo(s)),
+      so.fold(0L)(s => if (nullsFirst) rows else rows - s.nNulls), so.forall(_.nNulls > 0))
+    val parts = topNPrefix(entries.map(e =>
+        unit(e, e.nRows, e.stats.flatMap(_.columns.get(column)))), dir, nullsFirst, limit)
+      .getOrElse(entries)
+    topNPrefix(groupsOf(spark, root, parts).map(g =>
+        unit((g.partId, g.seq), g.rows, g.columns.get(column))), dir, nullsFirst, limit)
+      .map(_.toArray)
   }
 
   private def topNIsInt(column: String, intBounds: Option[Boolean]): Boolean =
@@ -474,61 +422,6 @@ object DecodeJob {
         s"top-n planning needs a metadata-bounded column ($TopNColumns), got $column")
       column == "warc_ts"
     }
-
-  /**
-   * Level 2 of [[planTopNKeys]] over a blocks scan. Mechanics: a DISTRIBUTED
-   * sort of the manifest-scale block metadata by the prefix-establishing
-   * bound (far bound: max for ASC, min for DESC — a group's rows are all
-   * within the prefix ending at its far bound); the driver streams the sorted
-   * pairs partition-by-partition (`toLocalIterator`, so only the needed prefix
-   * is ever fetched) until the guaranteed-in-prefix row count reaches
-   * `limit`, yielding the threshold value `u`; survivors are then collected
-   * through the planners' shared gate.
-   */
-  private[graft] def topNKeysOf(blocksDf: org.apache.spark.sql.DataFrame,
-                                column: String,
-                                asc: Boolean, nullsFirst: Boolean, limit: Int,
-                                totalGroupsEstimate: Long,
-                                intBounds: Option[Boolean] = None): Option[Array[(Int, Int)]] = {
-    val isTs = topNIsInt(column, intBounds)
-    val spark = blocksDf.sparkSession
-    import spark.implicits._
-    val nn = if (blocksDf.columns.contains("n_nulls")) col("n_nulls").cast("long")
-             else lit(null).cast("long") // pre-n_nulls store: nulls unknown
-    val (mnCol, mxCol) =
-      if (isTs) (col("block_min"), col("block_max"))
-      else (col("block_str_min"), col("block_str_max"))
-    val meta = blocksDf.where(col("column") === column)
-      .select(col("part_id"), col("block_seq"), col("n").cast("long").as("n"),
-        mnCol.as("mn"), mxCol.as("mx"), nn.as("nn"))
-    // rows of a group GUARANTEED to sort within the prefix ending at its own
-    // far bound: all n when nulls sort first (any null precedes everything),
-    // else only its known-non-null rows (unknown null count -> contributes 0)
-    val countable =
-      if (nullsFirst) col("n")
-      else when(col("nn").isNotNull, col("n") - col("nn")).otherwise(lit(0L))
-    val boundCol = if (asc) col("mx") else col("mn")
-    val ordered = meta.where(boundCol.isNotNull)
-      .select(boundCol.as("b"), countable.as("c"))
-      .sort(if (asc) col("b").asc else col("b").desc)
-    var u: Any = null
-    var acc = 0L
-    var pulled = 0L
-    val it = ordered.toLocalIterator()
-    while (u == null && it.hasNext && pulled < MaxPrunedKeyCollect) {
-      val r = it.next(); pulled += 1
-      acc += r.getLong(1)
-      if (acc >= limit) u = r.get(0)
-    }
-    if (u == null) return None
-    // a group survives when it may contain a non-null row within the prefix
-    // (near bound unknown or within u) — or any null row, when nulls sort first
-    val within =
-      if (asc) col("mn").isNull || col("mn") <= lit(u)
-      else col("mx").isNull || col("mx") >= lit(u)
-    val survivor = if (nullsFirst) within || col("nn").isNull || col("nn") > 0 else within
-    gatedKeyCollect(meta.where(survivor), keyCollectThreshold(totalGroupsEstimate))
-  }
 
   /**
    * Decode ONLY the pages that can satisfy `predicates`: block groups whose

@@ -24,7 +24,7 @@ import graft.sources.v2.{FilterConversion, GraftMicroBatchStream}
  * conjuncts through Spark's own `DataSourceStrategy.translateFilter`, and
  * hands the resulting block predicates to the [[GraftMicroBatchStream]] —
  * whose next `planInputPartitions` prunes the batch's delta groups through
- * the same gated metadata planning as the batch scan. The Filter node itself
+ * the same driver-side metadata planning as the batch scan. The Filter node itself
  * is NEVER removed (pruning is block-level and inexact; the residual keeps
  * results exact), so the rule rewrites nothing and is trivially sound: at
  * worst no predicate converts and the stream scans the whole delta, exactly

@@ -76,7 +76,10 @@ object SnapshotStore {
     * per column, the [[ColumnStats]]. Lets the driver prune whole parts from
     * the manifest before any block file is read (level 1 of
     * [[graft.jobs.DecodeJob.planPrunedKeys]]) and answer metadata aggregates
-    * without a Spark job. */
+    * without a Spark job. A part with one group needs nothing more: its
+    * stats are that group's, so level 2 tests them in place of its footer.
+    * Level 2 reads the footers of the other surviving parts, whose groups
+    * the part's rollup cannot tell apart. */
   final case class PartStats(nGroups: Int, columns: Map[String, ColumnStats])
 
   object PartStats {

@@ -46,11 +46,10 @@ import graft.sources.SnapshotStore
  *
  * Planning runs on the driver (Iceberg-style): one manifest read pins the
  *  snapshot, then [[DecodeJob.planPrunedKeys]] / [[DecodeJob.planTopNKeys]]
- *  prune in two levels — level 1 tests the manifest's per-part stats on the
- *  driver (single-group survivors are the keys, with no Spark job), level 2
- *  runs the block-metadata job over the surviving parts only when it can
- *  prune more — and their selectivity gate drops pruning entirely when the
- *  predicate is not selective — no unbounded driver collect. Each
+ *  prune in two levels with no Spark job — level 1 tests the manifest's
+ *  per-part stats, level 2 the same test on each group of the surviving
+ *  parts (a single-group part's stats are its group's; other parts' groups
+ *  come from their footers, read on the driver). Each
  *  [[InputPartition]] is a bin of whole block files, named by the manifest
  *  ([[GraftDataSource.packPartitions]]); groups never straddle files (each
  *  write task writes its one part's groups whole), so the reader needs zero
@@ -862,17 +861,17 @@ object GraftAggReaderFactory extends PartitionReaderFactory {
 
 /**
  * The batch scan. It reads the manifest ONCE and pins those entries for
- * statistics, planning and execution. Pruning is planned in two levels from
- * the pinned entries ([[DecodeJob.planPrunedKeys]] for pushed and runtime
- * predicates, [[DecodeJob.planTopNKeys]] for a filterless top-n):
- *  1. on the driver, each part's manifest stats (per-column bounds, null
- *     count, small dict) drop the parts no predicate can match; when every
- *     survivor is one block group, its `(part_id, 0)` are the keys and no
- *     Spark job runs;
- *  2. otherwise a column-pruned block-metadata job over the surviving parts
- *     only picks the surviving groups.
- * Parts committed before per-part stats existed are unbounded at level 1, so
- * such stores plan through level 2 exactly as before. Planning makes no
+ * statistics, planning and execution. Pruning is planned on the driver, with
+ * no Spark job, in two levels from the pinned entries
+ * ([[DecodeJob.planPrunedKeys]] for pushed and runtime predicates,
+ * [[DecodeJob.planTopNKeys]] for a filterless top-n):
+ *  1. each part's manifest stats (per-column bounds, null count, small dict)
+ *     drop the parts no predicate can match;
+ *  2. the same test then runs on each group of the surviving parts: a
+ *     single-group part's stats are its group's, any other part's groups
+ *     come from its block file's footer.
+ * Parts committed before per-part stats existed are unbounded at level 1 and
+ * plan from their footers. Planning makes no
  * broadcast: each input partition carries the keys of its own files' parts,
  * and the reader factory carries the session's programmatic Hadoop settings
  * ([[HadoopSettings]]) and the filters the scan claimed
@@ -907,9 +906,9 @@ final class GraftScan(root: String, snapshotId: Option[Long],
   @volatile private var predicates: Seq[DecodeJob.BlockPredicate] = initialPredicates
 
   /** Runtime-filter value-list ceiling: a broadcast join key set larger than
-    * this prunes little per value while bloating the metadata scan's In-list —
-    * ignore it (a no-op runtime filter is always sound; the join still
-    * evaluates exactly). */
+    * this prunes little per value while every part and group of the plan
+    * tests each value — ignore it (a no-op runtime filter is always sound;
+    * the join still evaluates exactly). */
   private val MaxRuntimeInValues = 10000
 
   // ---- SupportsRuntimeFiltering: a broadcast-join build side over the
@@ -965,8 +964,8 @@ final class GraftScan(root: String, snapshotId: Option[Long],
   // ---- the partition plan, memoized per predicate set: Spark plans one scan
   // more than once (before and after runtime filters, and again when
   // adaptive execution re-plans the query). The same predicates reuse the
-  // whole plan: level 2 is a Spark job. Changed predicates (a runtime In
-  // landed) re-plan ----
+  // whole plan, so the surviving parts' footers are read once. Changed
+  // predicates (a runtime In landed) re-plan ----
   private val planLock = new Object
   private var planned: (Seq[DecodeJob.BlockPredicate],
     (Array[InputPartition], GraftDataSource.PlanStats)) = null
@@ -1046,20 +1045,15 @@ final class GraftScan(root: String, snapshotId: Option[Long],
       entries: Seq[SnapshotStore.PartEntry])
       : (Array[InputPartition], GraftDataSource.PlanStats) = {
     val spark = SparkSession.active
-    // gated two-level Iceberg-style planning: manifest part stats, then (only
-    // if it can prune more) a metadata-only scan of the surviving parts, yield
-    // the surviving group keys, or None when the predicate is not selective
-    // (past the MaxPrunedKeyCollect / half-the-groups gate — the claimed and
-    // residual filters still make results exact). Each partition carries only
-    // its own files' keys, so no task payload grows with the scan's survivor
-    // count: the SQL
-    // surface prunes as deep as the decodeWhere API (10^6 keys), where r4
-    // dropped ALL pruning past 4096 surviving groups because the whole array
-    // rode every InputPartition.
+    // two-level planning on the driver (manifest part stats, then the
+    // surviving multi-group parts' footers) yields every surviving group key.
+    // Each partition carries only its own files' keys, so no task payload
+    // grows with the scan's survivor count, and a part with no surviving
+    // group is never opened.
     val keys: Option[Array[(Int, Int)]] =
       if (preds.nonEmpty)
-        DecodeJob.planPrunedKeys(spark, root, entries, preds,
-          Some(tableSchema.fieldNames.toSet))
+        Some(DecodeJob.planPrunedKeys(spark, root, entries, preds,
+          Some(tableSchema.fieldNames.toSet)))
       // top-n prefix pruning only when NO predicate of any kind arrived (a
       // runtime filter landing via filter() makes per-group row counts stop
       // bounding the MATCHING rows — same reason pushTopN refuses filters)

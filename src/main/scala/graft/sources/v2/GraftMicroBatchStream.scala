@@ -175,16 +175,15 @@ final class GraftMicroBatchStream(root: String,
       if (lastRange == rangeKey) return lastPlan
       val entries = emitEntries(s, e)
       // pushed predicates prune THIS BATCH's delta groups through the same
-      // gated two-level planning as the batch scan (planPrunedKeys over the
-      // emitted entries only) — the normal incremental-consumer shape (new
-      // crawl snapshots -> filter lang -> dedup) decodes only matching groups
-      // instead of every new part. Residual filters keep results exact; a
-      // None plan (non-selective) scans the delta whole, same as before.
+      // driver-side two-level planning as the batch scan (planPrunedKeys over
+      // the emitted entries only) — the normal incremental-consumer shape
+      // (new crawl snapshots -> filter lang -> dedup) decodes only matching
+      // groups instead of every new part. Residual filters keep results exact.
       import graft.jobs.DecodeJob
       val keysOpt: Option[Array[(Int, Int)]] =
         if (predicates.isEmpty || entries.isEmpty) None
-        else DecodeJob.planPrunedKeys(spark, root, entries, predicates,
-          Some(GraftDataSource.storeSchema(root).fieldNames.toSet))
+        else Some(DecodeJob.planPrunedKeys(spark, root, entries, predicates,
+          Some(GraftDataSource.storeSchema(root).fieldNames.toSet)))
       val parts: Array[InputPartition] =
         if (entries.isEmpty) Array.empty
         else {

@@ -104,43 +104,36 @@ class R7OptimizationSpec extends AnyFunSuite {
   }
 
   test("countAndUrlBoundaries: exact count, sorted in-range boundaries, deterministic") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .appName("r7-cab-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
-      import spark.implicits._
-      val n = 20000
-      val urls = spark.range(n).map(i => f"doc://${(i * 2654435761L) % n}%08d")
-      def run() = graft.jobs.EncodeJob.countAndUrlBoundaries(urls, total => {
-        assert(total == n, "one-pass count must be exact")
-        16
-      })
-      val (total, parts, bounds) = run()
-      assert(total == n && parts == 16)
-      assert(bounds.length > 0 && bounds.length <= 15)
-      assert(bounds.toSeq == bounds.toSeq.sorted && bounds.distinct.length == bounds.length,
-        "boundaries must be strictly increasing")
-      // deterministic across runs on the same input partitioning
-      val (_, _, bounds2) = run()
-      assert(bounds.toSeq == bounds2.toSeq, "boundaries must be deterministic")
-      // rough balance: each bucket within 4x of ideal (reservoir-quantile quality)
-      val bs = bounds
-      val counts = new Array[Long](bs.length + 1)
-      urls.collect().foreach { u =>
-        val b = graft.functions.RangeBucketId.bucket(bs, u)
-        counts(b) += 1
-      }
-      val ideal = n.toDouble / counts.length
-      counts.foreach(c => assert(c < ideal * 4, s"bucket sizes $ideal vs ${counts.mkString(",")}"))
-      // null/empty/newline urls are never split points but still count
-      val dirty = spark.range(100).map(i =>
-        if (i % 3 == 0) null else if (i % 3 == 1) "" else s"a\nb")
-      val (dTotal, _, dBounds) = graft.jobs.EncodeJob.countAndUrlBoundaries(dirty, _ => 8)
-      assert(dTotal == 100 && dBounds.isEmpty)
-    } finally spark.stop()
+    val spark = graft.TestSession.spark()
+    import spark.implicits._
+    val n = 20000
+    val urls = spark.range(n).map(i => f"doc://${(i * 2654435761L) % n}%08d")
+    def run() = graft.jobs.EncodeJob.countAndUrlBoundaries(urls, total => {
+      assert(total == n, "one-pass count must be exact")
+      16
+    })
+    val (total, parts, bounds) = run()
+    assert(total == n && parts == 16)
+    assert(bounds.length > 0 && bounds.length <= 15)
+    assert(bounds.toSeq == bounds.toSeq.sorted && bounds.distinct.length == bounds.length,
+      "boundaries must be strictly increasing")
+    // deterministic across runs on the same input partitioning
+    val (_, _, bounds2) = run()
+    assert(bounds.toSeq == bounds2.toSeq, "boundaries must be deterministic")
+    // rough balance: each bucket within 4x of ideal (reservoir-quantile quality)
+    val bs = bounds
+    val counts = new Array[Long](bs.length + 1)
+    urls.collect().foreach { u =>
+      val b = graft.functions.RangeBucketId.bucket(bs, u)
+      counts(b) += 1
+    }
+    val ideal = n.toDouble / counts.length
+    counts.foreach(c => assert(c < ideal * 4, s"bucket sizes $ideal vs ${counts.mkString(",")}"))
+    // null/empty/newline urls are never split points but still count
+    val dirty = spark.range(100).map(i =>
+      if (i % 3 == 0) null else if (i % 3 == 1) "" else s"a\nb")
+    val (dTotal, _, dBounds) = graft.jobs.EncodeJob.countAndUrlBoundaries(dirty, _ => 8)
+    assert(dTotal == 100 && dBounds.isEmpty)
   }
 
   test("weightedQuantiles: a heavy reservoir candidate consumes every quantile it crosses") {

@@ -21,14 +21,7 @@ import graft.sources.v2.{GraftDataWriter, GraftWriteLayout, HadoopSettings}
  */
 class EncodeWriteSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("encode-write-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark()
 
   private def freshRoot(): String = Files.createTempDirectory("graft-encode-write-").toString
 

@@ -15,24 +15,10 @@ import graft.sources.{SnapshotStore, Webtext}
  */
 class PipelineSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("pipeline-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark()
 
   private def freshRoot(): String =
     Files.createTempDirectory("graft-store-").toString
-
-  /** getOrCreate may hand back another suite's session (no GraftExtensions), so
-    * inject the rule the same way the driver-facing queries do. */
-  private def ensurePruneRule(): Unit =
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.BlockMinMaxPruneRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.BlockMinMaxPruneRule
 
   test("encode -> snapshot -> decode round-trips 20k pages byte-identically") {
     val root = freshRoot()
@@ -121,7 +107,6 @@ class PipelineSpec extends AnyFunSuite {
       "binary html must not get string bounds")
 
     // prune rule on the real store: warc_ts range filter reaches the parquet scan
-    ensurePruneRule()
     GraftFunctions.registerAll(spark)
     val mn = ts.agg(min($"block_min")).as[Long].head()
     val q = ts.where(array_contains(GraftFunctions.graft_decode($"encoded"), lit(mn)))
@@ -606,7 +591,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("block min/max pruning rule rewrites decode-filters onto metadata") {
-    ensurePruneRule()
     GraftFunctions.registerAll(spark)
     import spark.implicits._
     // a blocks table with FoR metadata columns
@@ -650,38 +634,27 @@ class PipelineSpec extends AnyFunSuite {
     assert(q2.collect().map(_.getInt(0)).toSeq == Seq(2))
   }
 
-  test("planPrunedKeys gates non-selective predicates; decodeWhere stays exact") {
+  test("planPrunedKeys keeps all groups of a non-selective predicate, exact") {
     import spark.implicits._
     val root = freshRoot()
     val n = 8000L
     EncodeJob.run(spark, Webtext.generate(spark, n, 8), root, parts = 8)
-    val blocksDf = DecodeJob.blocks(spark, root)
     val entries = SnapshotStore.currentEntries(root)
+    val total = DecodeJob.blocks(spark, root).where($"column" === "url").count()
 
-    // an all-matching predicate must NOT materialize keys on the driver
+    // an all-matching predicate keeps every group: each part's file is read
     assert(DecodeJob.planPrunedKeys(spark, root, entries,
-      Seq(DecodeJob.TsRange(Long.MinValue, Long.MaxValue))).isEmpty,
-      "all-matching predicate must be gated (None), not collected")
-    // ... and decodeWhere through the gate still returns the exact row set
+      Seq(DecodeJob.TsRange(Long.MinValue, Long.MaxValue))).length == total)
+    // ... and decodeWhere returns the exact row set
     assert(DecodeJob.decodedRows(DecodeJob.decodeWhere(spark, root,
       Seq(DecodeJob.TsRange(Long.MinValue, Long.MaxValue)))) == n)
 
-    // a selective predicate still collects (Some) and prunes
+    // a selective predicate prunes
     val someUrl = Webtext.page(7L).url
     val keys = DecodeJob.planPrunedKeys(spark, root, entries, Seq(DecodeJob.StrEq("url", someUrl)))
-    assert(keys.exists(_.length >= 1))
-    val total = blocksDf.where($"column" === "url").count()
-    assert(keys.get.length < total)
-
-    // forced tiny collect ceiling: even a selective predicate gates off
-    val saved = DecodeJob.MaxPrunedKeyCollect
-    try {
-      DecodeJob.MaxPrunedKeyCollect = 0
-      assert(DecodeJob.planPrunedKeys(spark, root, entries,
-        Seq(DecodeJob.StrEq("url", someUrl))).isEmpty)
-      assert(DecodeJob.decodedRows(DecodeJob.decodeWhere(spark, root,
-        Seq(DecodeJob.StrEq("url", someUrl)))) == 1L, "gated path stays exact")
-    } finally DecodeJob.MaxPrunedKeyCollect = saved
+    assert(keys.length >= 1 && keys.length < total)
+    assert(DecodeJob.decodedRows(DecodeJob.decodeWhere(spark, root,
+      Seq(DecodeJob.StrEq("url", someUrl)))) == 1L)
   }
 
   test("url prefix and string range predicates prune via block bounds") {
@@ -851,7 +824,6 @@ class PipelineSpec extends AnyFunSuite {
 
   test("prune rule binds metadata per leaf relation (joins of two block tables)") {
     import spark.implicits._
-    ensurePruneRule()
     GraftFunctions.registerAll(spark)
     def mk(dir: String, shift: Long): Unit =
       Seq((1, 0L + shift, 99L + shift,

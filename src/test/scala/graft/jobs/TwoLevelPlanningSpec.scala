@@ -3,7 +3,9 @@ package graft.jobs
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,10 +17,12 @@ import graft.sources.SnapshotStore.{ColumnStats, PartEntry, PartStats}
  * Per-part manifest stats and the two-level planning built on them:
  *  - the shared fold ([[PartRollup]]): absent bounds absorb, the dict union
  *    and long string bounds are capped;
- *  - property: level 1 (manifest part stats) never prunes a part that level 2
- *    (the block-metadata job, [[DecodeJob.matchingGroupKeys]]) keeps, and the
- *    two-level key plan equals the block-level one, on random small stores
- *    written by both writers;
+ *  - property: level 1 (manifest part stats) never prunes a part that a
+ *    block-metadata test keeps, the two-level key plan
+ *    ([[DecodeJob.planPrunedKeys]]) equals that test's keys, and every part
+ *    holding a matching decoded row is planned, on random small stores
+ *    written by both writers. The block-metadata test is a Spark `Column`
+ *    over [[DecodeJob.blocks]] kept here, apart from the planner;
  *  - property: part stats survive manifest serialise -> parse -> carry-forward
  *    commit and the upgrade's commit ([[CompactJob.commitUpgrade]]) unchanged,
  *    whatever their strings hold, and lines written before `sum` /
@@ -29,13 +33,7 @@ import graft.sources.SnapshotStore.{ColumnStats, PartEntry, PartStats}
  */
 class TwoLevelPlanningSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("two-level-planning-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark()
 
   private def check(name: String, p: Prop, cases: Int): Unit = {
     val params = Test.Parameters.default
@@ -196,28 +194,94 @@ class TwoLevelPlanningSpec extends AnyFunSuite {
     root
   }
 
+  /** The block-metadata test as a Spark `Column` over [[DecodeJob.blocks]]
+    * rows: a form written apart from the planner's, for the property to check
+    * it against. Null metadata admits. */
+  private def metaCond(p: DecodeJob.BlockPredicate): Column = p match {
+    case DecodeJob.StrEq(_, v) =>
+      (col("block_str_min").isNull || col("block_str_min") <= v) &&
+      (col("block_str_max").isNull || col("block_str_max") >= v) &&
+      (col("block_str_dict").isNull || array_contains(col("block_str_dict"), v))
+    case DecodeJob.StrIn(_, vs) =>
+      val arr = typedLit(vs)
+      (col("block_str_min").isNull || col("block_str_min") <= array_max(arr)) &&
+      (col("block_str_max").isNull || col("block_str_max") >= array_min(arr)) &&
+      (col("block_str_dict").isNull || arrays_overlap(col("block_str_dict"), arr))
+    case DecodeJob.StrPrefix(_, p) =>
+      // matches s satisfy p <= s < successor(p); a block overlaps that interval
+      // iff max >= p and min < successor(p) (when the successor exists)
+      (col("block_str_max").isNull || col("block_str_max") >= p) &&
+      DecodeJob.prefixSuccessor(p).map(succ =>
+        col("block_str_min").isNull || col("block_str_min") < succ).getOrElse(lit(true)) &&
+      (col("block_str_dict").isNull ||
+        exists(col("block_str_dict"), v => v.startsWith(p)))
+    case DecodeJob.StrRange(_, lo, hi) =>
+      hi.map(h => col("block_str_min").isNull || col("block_str_min") <= h)
+        .getOrElse(lit(true)) &&
+      lo.map(l => col("block_str_max").isNull || col("block_str_max") >= l)
+        .getOrElse(lit(true)) &&
+      (col("block_str_dict").isNull ||
+        exists(col("block_str_dict"), v =>
+          lo.map(v >= _).getOrElse(lit(true)) && hi.map(v <= _).getOrElse(lit(true))))
+    case DecodeJob.TsRange(lo, hi) =>
+      (col("block_min").isNull || col("block_min") <= hi) &&
+      (col("block_max").isNull || col("block_max") >= lo)
+    case DecodeJob.IntRange(_, lo, hi) =>
+      (col("block_min").isNull || col("block_min") <= hi) &&
+      (col("block_max").isNull || col("block_max") >= lo)
+  }
+
+  /** The group keys whose block metadata admits every predicate, by
+    * [[metaCond]] over the store's blocks: one key set per predicate,
+    * intersected. */
+  private def blockKeys(root: String, preds: Seq[DecodeJob.BlockPredicate]): Set[(Int, Int)] = {
+    import spark.implicits._
+    val blocks = DecodeJob.blocks(spark, root)
+    preds.map(p => blocks.where(col("column") === p.column && metaCond(p))
+      .select(col("part_id"), col("block_seq")).as[(Int, Int)].collect().toSet)
+      .reduce(_ intersect _)
+  }
+
+  /** Does a decoded row (url, text, lang, `ts` in epoch micros) match `p`?
+    * Strings compare as Spark compares them, by UTF-8 bytes. */
+  private def rowMatches(p: DecodeJob.BlockPredicate, r: Row): Boolean = {
+    def u(s: String) = UTF8String.fromString(s)
+    def str(c: String) = Option(r.getAs[String](c)).map(u)
+    p match {
+      case DecodeJob.StrEq(c, v) => str(c).contains(u(v))
+      case DecodeJob.StrIn(c, vs) => str(c).exists(x => vs.exists(u(_) == x))
+      case DecodeJob.StrPrefix(c, pre) => str(c).exists(_.startsWith(u(pre)))
+      case DecodeJob.StrRange(c, lo, hi) => str(c).exists(x =>
+        lo.forall(l => x.compareTo(u(l)) >= 0) && hi.forall(h => x.compareTo(u(h)) <= 0))
+      case DecodeJob.TsRange(lo, hi) =>
+        Option(r.getAs[java.lang.Long]("ts")).exists(t => t >= lo && t <= hi)
+      case p => throw new IllegalArgumentException(s"no row form for $p")
+    }
+  }
+
   test("property: level-1 survivors cover every part level 2 keeps; two-level keys equal block keys") {
-    val savedCutoff = DecodeJob.PruneFractionCutoff
-    DecodeJob.PruneFractionCutoff = 1e6 // compare the key sets, not the gate
-    try check("level 1 superset", Prop.forAllNoShrink(
+    check("level 1 superset", Prop.forAllNoShrink(
         storeGen.flatMap(s => Gen.listOfN(12, Gen.nonEmptyListOf(predicateGen(s)).map(_.take(2)))
           .map(ps => (s, ps)))) { case (s, predLists) =>
         val root = writeStore(s)
         val entries = SnapshotStore.currentEntries(root)
         assert(entries.forall(_.stats.isDefined), "both writers commit part stats")
+        // every row, with its part, read with no filter: no pruning applies
+        val rows = spark.read.format("graft").load(root).select(col("_part_id"), col("url"),
+          col("text"), col("lang"), unix_micros(col("warc_ts")).as("ts")).collect()
         predLists.forall { preds =>
-          import spark.implicits._
-          val level2 = DecodeJob.matchingGroupKeys(spark, root, preds)
-            .as[(Int, Int)].collect().toSet
+          val reference = blockKeys(root, preds)
           val level1 = DecodeJob.partsMayMatch(entries, preds).map(_.partId).toSet
-          val planned = DecodeJob.planPrunedKeys(spark, root, entries, preds)
-          val ok = level2.map(_._1).subsetOf(level1) && planned.map(_.toSet).contains(level2)
-          if (!ok) println(s"counterexample $root $preds: level1=$level1 level2=$level2 " +
-            s"planned=${planned.map(_.toSeq)}")
+          val planned = DecodeJob.planPrunedKeys(spark, root, entries, preds).toSet
+          val matchingParts = rows.filter(r => preds.forall(rowMatches(_, r)))
+            .map(_.getAs[Int]("_part_id")).toSet
+          val ok = reference.map(_._1).subsetOf(level1) && planned == reference &&
+            matchingParts.subsetOf(planned.map(_._1))
+          if (!ok) println(s"counterexample $root $preds: level1=$level1 " +
+            s"reference=$reference planned=$planned matching parts=$matchingParts")
           ok
         }
       }, cases = 4)
-    finally DecodeJob.PruneFractionCutoff = savedCutoff
   }
 
   // ------------- property (b): stats survive the manifest round trip -------------

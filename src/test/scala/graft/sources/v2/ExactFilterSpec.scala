@@ -29,14 +29,7 @@ import graft.sources.{WebPage, Webtext}
 class ExactFilterSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   import ExactFilterSpec._
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("exact-filter-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark()
 
   private def rowsOf(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
 

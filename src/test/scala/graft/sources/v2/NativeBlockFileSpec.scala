@@ -19,14 +19,7 @@ import graft.sources.{SnapshotStore, WebPage, Webtext}
  */
 class NativeBlockFileSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("native-block-file-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark()
 
   private def freshRoot(): String = Files.createTempDirectory("graft-native-").toString
 

@@ -37,6 +37,17 @@ import graft.sources.Webtext
  * Defaults: 20 rounds after 5 warm-ups. Prints, per template and literal
  * mode, the median and quartiles of each phase in ms and the mean compiles
  * per query.
+ *
+ *   sbt "Test/runMain graft.sources.v2.QueryTiming plan [rounds] [warmups]"
+ *
+ * runs the plan probe instead: 40,000 pages in 8 parts, stored once with the
+ * default block byte bound (one group per part) and once with 2 MiB (several
+ * groups per part). Each round draws one query per template and plans it on
+ * both stores, in alternating order. Per template and store it prints the
+ * p50 and min plan time (the executed plan and the scans' input partitions)
+ * and the Spark jobs started while planning; then the driver's time to plan
+ * an all-admitting predicate over 1,000 multi-group parts, which reads every
+ * part's footer.
  */
 object QueryTiming extends AdaptiveSparkPlanHelper {
   private val Langs = Array("en", "zh", "de", "es", "fr", "ru", "ja", "pt", "it", "nl")
@@ -94,21 +105,97 @@ object QueryTiming extends AdaptiveSparkPlanHelper {
     (v, (System.nanoTime() - t0) / 1e6)
   }
 
+  private def session(dir: String): SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .appName("query-timing")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.warehouse.dir", s"$dir/warehouse")
+    .getOrCreate()
+
+  private def percentile(xs: Seq[Double], f: Double): Double = {
+    val s = xs.sorted
+    s(math.min(s.length - 1, (f * (s.length - 1)).round.toInt))
+  }
+
+  /** The plan probe (see the object doc). */
+  private def planProbe(rounds: Int, warmups: Int): Unit = {
+    val dir = Files.createTempDirectory("graft-plan-probe-").toString
+    val spark = session(dir)
+    try {
+      val pages = Webtext.generate(spark, 40000L, 8)
+      val stores = Seq(("default", EncodeJob.MaxBlockBytes), ("2 MiB", 2L << 20)).map {
+        case (name, bytes) =>
+          val root = s"$dir/${name.replace(' ', '_')}"
+          EncodeJob.run(spark, pages, root, parts = 8, maxBlockBytes = bytes)
+          val groups = graft.sources.SnapshotStore.currentEntries(root).map(_.stats.get.nGroups)
+          println(s"store $name: groups per part ${groups.mkString(",")}")
+          (name, root)
+      }
+      val ms = mutable.Map[(Int, Int), mutable.ArrayBuffer[Double]]()
+      val jobGroups = mutable.Map[(Int, Int), mutable.ArrayBuffer[String]]()
+      val draws = new java.util.Random(7L)
+      var unique = 1L
+      var group = 0
+      for (round <- 0 until warmups + rounds; t <- Templates.indices) {
+        unique += 1
+        val q = sql(t, draws, unique)
+        val order = if (round % 2 == 0) stores.indices else stores.indices.reverse
+        for (s <- order) {
+          spark.read.format("graft").load(stores(s)._2).createOrReplaceTempView("pages")
+          val df = spark.sql(q)
+          df.queryExecution.optimizedPlan
+          group += 1
+          spark.sparkContext.setJobGroup(s"p$group", q, interruptOnCancel = false)
+          val (_, plan) = timed {
+            collect(df.queryExecution.executedPlan) { case b: BatchScanExec => b }
+              .foreach(_.inputPartitions)
+          }
+          spark.sparkContext.clearJobGroup()
+          df.collect()
+          if (round >= warmups) {
+            ms.getOrElseUpdate((t, s), mutable.ArrayBuffer[Double]()) += plan
+            jobGroups.getOrElseUpdate((t, s), mutable.ArrayBuffer[String]()) += s"p$group"
+          }
+        }
+      }
+      Thread.sleep(2000) // the status tracker learns of jobs through the listener bus
+      println(s"rounds=$rounds warmups=$warmups store=40000 pages in 8 parts local[4]")
+      for (t <- Templates.indices; s <- stores.indices) {
+        val b = ms((t, s))
+        val jobs = jobGroups((t, s)).map(g =>
+          spark.sparkContext.statusTracker.getJobIdsForGroup(g).length)
+        println(f"${Templates(t)}%-20s ${stores(s)._1}%-8s plan p50 ${percentile(b.toSeq, 0.5)}%.1f ms " +
+          f"min ${b.min}%.1f ms  jobs/plan ${jobs.sum.toDouble / jobs.size}%.2f")
+      }
+
+      // footer reads: 1,000 multi-group parts, every one surviving
+      val many = s"$dir/many"
+      EncodeJob.run(spark, pages, many, parts = 1000, maxBlockBytes = 16L << 10)
+      val entries = graft.sources.SnapshotStore.currentEntries(many)
+      val all = Seq(graft.jobs.DecodeJob.TsRange(Long.MinValue, Long.MaxValue))
+      val times = (0 until 7).map { _ =>
+        timed(graft.jobs.DecodeJob.planPrunedKeys(spark, many, entries, all))
+      }
+      println(f"footer reads: ${entries.size} parts, ${times.head._1.length} groups kept, " +
+        f"plan p50 ${percentile(times.map(_._2), 0.5)}%.1f ms min ${times.map(_._2).min}%.1f ms " +
+        "(7 runs, the first cold)")
+    } finally {
+      spark.stop()
+      LocalSession.deleteRecursively(new java.io.File(dir))
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     def arg(i: Int, default: Int) = if (args.length > i) args(i).toInt else default
+    if (args.headOption.contains("plan")) return planProbe(arg(1, 10), arg(2, 3))
     val rounds = arg(0, 20)
     val warmups = arg(1, 5)
 
     val dir = Files.createTempDirectory("graft-query-timing-").toString
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("query-timing")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", s"$dir/warehouse")
-      .getOrCreate()
+    val spark = session(dir)
     val listener = new StageWall
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -160,8 +247,7 @@ object QueryTiming extends AdaptiveSparkPlanHelper {
       for (t <- Templates.indices; repeated <- Seq(false, true)) {
         val key = (t, repeated)
         val phases = Phases.zip(ms(key)).map { case (p, b) =>
-          val s = b.sorted
-          def q(f: Double) = s(math.min(s.length - 1, (f * (s.length - 1)).round.toInt))
+          def q(f: Double) = percentile(b.toSeq, f)
           f"$p ${q(0.5)}%.1f [${q(0.25)}%.1f, ${q(0.75)}%.1f]"
         }
         val c = compiles(key)

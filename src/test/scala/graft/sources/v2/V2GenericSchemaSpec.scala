@@ -16,14 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class V2GenericSchemaSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("v2-generic-schema-spec")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.TestSession.spark()
     s.conf.set("spark.sql.catalog.graftcat", classOf[GraftCatalog].getName)
     s
   }

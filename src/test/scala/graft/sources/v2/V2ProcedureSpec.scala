@@ -15,14 +15,7 @@ import graft.sources.{SnapshotStore, Webtext}
  */
 class V2ProcedureSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("v2-procedure-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark()
 
   private def fragmentedStore(n: Long, parts: Int): String = {
     spark.conf.set("spark.sql.catalog.graftcat", classOf[GraftCatalog].getName)

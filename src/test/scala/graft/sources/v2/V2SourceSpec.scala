@@ -19,14 +19,7 @@ import graft.sources.Webtext
  */
 class V2SourceSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("v2-source-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark()
 
   private val N = 20000L
   /** One shared store for the suite (encode once). */
@@ -133,16 +126,18 @@ class V2SourceSpec extends AnyFunSuite {
       written.where(col("lang").isNotNull).count())
   }
 
-  test("non-selective pushed filter falls back to no pruning but stays exact") {
-    // lang='en' is in every block's dict (55% of rows) — the gate must refuse
-    // to prune (None) and the residual filter must still produce exact rows
+  test("non-selective pushed filter keeps every group and stays exact") {
+    // lang='en' is in every block's dict (55% of rows): planning keeps every
+    // group, and the scan's own filter still produces exact rows
     val df = graftTable.where(col("lang") === "en").select(col("url"))
     val got = df.count()
     val want = written.where(col("lang") === "en").count()
     assert(got == want)
     val stats = GraftDataSource.planStatsFor(root).get
-    assert(stats.prunedGroupKeys.isEmpty,
-      s"non-selective predicate must skip pruning: $stats")
+    val groups = DecodeJob.blocks(spark, root).where(col("column") === "url").count().toInt
+    assert(stats.prunedGroupKeys.contains(groups) &&
+      stats.files == graft.sources.SnapshotStore.currentEntries(root).size,
+      s"non-selective predicate must keep all $groups groups: $stats")
   }
 
   test("string >=/< filters push OPEN-ENDED ranges and stay exact") {
@@ -557,27 +552,21 @@ class V2SourceSpec extends AnyFunSuite {
     // because the whole packed-key array rode every InputPartition. With each
     // partition carrying only its own files' keys the SQL surface must prune
     // as deep as the decodeWhere API. Fixture: 1-row block groups
-    // (maxBlockBytes=1) make 12k groups from 12k rows; the byte-bound store
-    // under-estimates the manifest group count, so the break-even FRACTION
-    // heuristic (not the mechanism under test) is widened for the duration.
+    // (maxBlockBytes=1) make 12k groups from 12k rows.
     val r2 = Files.createTempDirectory("graft-v2-manykeys-").toString
     val input = Webtext.generate(spark, 12000L, 8)
     EncodeJob.run(spark, input, r2, parts = 8, maxBlockBytes = 1L)
     val R4TaskKeyCeiling = 4096
-    val savedCutoff = DecodeJob.PruneFractionCutoff
-    try {
-      DecodeJob.PruneFractionCutoff = 1e9
-      val pred = col("url") < "https://host-2" // ~37% of zipf-hosted urls
-      val want = sortedRows(input.toDF()
-        .where(pred).select(col("url")))
-      assert(want.length > R4TaskKeyCeiling,
-        s"fixture must survive in >4096 groups, got ${want.length}")
-      val df = spark.read.format("graft").load(r2).where(pred).select(col("url"))
-      assert(sortedRows(df) == want)
-      val stats = GraftDataSource.planStatsFor(r2).get
-      assert(stats.prunedGroupKeys.exists(_ > R4TaskKeyCeiling),
-        s"scan must prune past the old 4096 ceiling: $stats")
-    } finally DecodeJob.PruneFractionCutoff = savedCutoff
+    val pred = col("url") < "https://host-2" // ~37% of zipf-hosted urls
+    val want = sortedRows(input.toDF()
+      .where(pred).select(col("url")))
+    assert(want.length > R4TaskKeyCeiling,
+      s"fixture must survive in >4096 groups, got ${want.length}")
+    val df = spark.read.format("graft").load(r2).where(pred).select(col("url"))
+    assert(sortedRows(df) == want)
+    val stats = GraftDataSource.planStatsFor(r2).get
+    assert(stats.prunedGroupKeys.exists(_ > R4TaskKeyCeiling),
+      s"scan must prune past the old 4096 ceiling: $stats")
   }
 
   test("limit pushdown: scan carries the limit, tasks stop early, counts exact") {
@@ -639,9 +628,8 @@ class V2SourceSpec extends AnyFunSuite {
     import org.apache.spark.sql.expressions.Window
     // a store whose warc_ts CORRELATES with the url layout (a time-partitioned
     // crawl): per-block ts bounds are then narrow/disjoint and the prefix plan
-    // prunes. On the suite's shared store ts is random per block, every group
-    // survives, and the fraction gate correctly yields a full scan — covered
-    // at the end of this test.
+    // prunes. On the suite's shared store ts is random per block and most
+    // groups survive — covered at the end of this test.
     val r2 = Files.createTempDirectory("graft-v2-topn-ts-").toString
     val pages = Webtext.generate(spark, 8000L, 8).toDF()
       .withColumn("rk", row_number().over(Window.orderBy(col("url"))))
@@ -674,18 +662,19 @@ class V2SourceSpec extends AnyFunSuite {
       t.column == "warc_ts" && !t.asc))
     assert(GraftDataSource.planStatsFor(r2).get.prunedGroupKeys.exists(_ <= 3))
 
-    // shared store: ts does NOT correlate with the url layout — every group
-    // survives, the gate trips, the scan stays full and results exact (the ts
-    // multiset is deterministic even with ties at the cut)
+    // shared store: ts does NOT correlate with the url layout — most groups
+    // survive, the scan reads them and results stay exact (the ts multiset
+    // is deterministic even with ties at the cut)
     val gotShared = graftTable.orderBy(col("warc_ts")).limit(40).select(col("warc_ts"))
       .collect().map(_.toString).sorted.toSeq
     val wantShared = written.orderBy(col("warc_ts"))
       .limit(40).select(col("warc_ts")).collect().map(_.toString).sorted.toSeq
     assert(gotShared == wantShared)
     val sharedStats = GraftDataSource.planStatsFor(root).get
+    val sharedGroups = DecodeJob.blocks(spark, root).where(col("column") === "url").count()
     assert(sharedStats.pushedTopN.exists(_.column == "warc_ts") &&
-      sharedStats.prunedGroupKeys.isEmpty,
-      s"uncorrelated ts must fall back to a full (sound) scan: $sharedStats")
+      sharedStats.prunedGroupKeys.exists(k => k > sharedGroups / 2 && k <= sharedGroups),
+      s"uncorrelated ts must keep most of the $sharedGroups groups: $sharedStats")
   }
 
   test("top-n pushdown on warc_ts with planted NULLs stays exact under both orderings") {
@@ -745,23 +734,53 @@ class V2SourceSpec extends AnyFunSuite {
     assert(sortedRows(gotLast) == sortedRows(wantLast))
     assert(gotLast.collect().forall(!_.isNullAt(0)))
     assert(GraftDataSource.planStatsFor(r2).get.pushedTopN.exists(!_.nullsFirst))
+  }
 
-    // pre-n_nulls stores (column absent -> null count UNKNOWN) must not prune
-    // unsoundly: nulls-first keeps every possibly-null group (gate -> None),
-    // nulls-last can never establish the quota (countable rows are 0) -> None
-    val legacy = DecodeJob.blocks(spark, r2).drop("n_nulls")
-    assert(DecodeJob.topNKeysOf(legacy, "url", asc = true, nullsFirst = false, 15, 4L).isEmpty,
-      "unknown null counts must yield no nulls-last pruning")
-    // nulls-first on a legacy store keeps EVERY group (each may hold nulls):
-    // a wide gate (estimate 1000 -> threshold 500) proves the survivor set is
-    // genuinely all 4 url groups, not a coincidence of the gate tripping...
-    val legacyKeys = DecodeJob.topNKeysOf(legacy, "url", asc = true, nullsFirst = true, 15, 1000L)
-    assert(legacyKeys.exists(_.length == 4), s"legacy nulls-first must keep ALL groups: " +
-      s"${legacyKeys.map(_.length)}")
-    // ...and at the store's REAL size the 4-of-4 survivor set trips the
-    // fraction gate (threshold 2), so the caller scans everything — sound
-    assert(DecodeJob.topNKeysOf(legacy, "url", asc = true, nullsFirst = true, 15, 4L).isEmpty,
-      "an all-groups survivor set must trip the fraction gate")
+  test("property: top-n over multi-group parts equals parquet in every order") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import spark.implicits._
+    val r2 = Files.createTempDirectory("graft-v2-topn-multi-").toString
+    val pq = Files.createTempDirectory("graft-v2-topn-parquet-").toString + "/pages"
+    // null urls and null timestamps, in parts of several groups each
+    val pages = Webtext.generate(spark, 4000L, 8).map { p =>
+      val id = p.url.substring(p.url.lastIndexOf('/') + 1)
+      if (id.endsWith("17")) p.copy(url = null)
+      else if (id.endsWith("3")) p.copy(warc_ts = null)
+      else p
+    }
+    EncodeJob.run(spark, pages, r2, parts = 4, maxBlockBytes = 64L << 10)
+    assert(graft.sources.SnapshotStore.currentEntries(r2).forall(_.stats.exists(_.nGroups >= 4)))
+    pages.toDF().write.parquet(pq)
+    def top(df: DataFrame, c: String, asc: Boolean, nullsFirst: Option[Boolean],
+        n: Int): Seq[String] = {
+      val order = (asc, nullsFirst) match {
+        case (true, None) => col(c).asc
+        case (true, Some(true)) => col(c).asc_nulls_first
+        case (true, Some(false)) => col(c).asc_nulls_last
+        case (false, None) => col(c).desc
+        case (false, Some(true)) => col(c).desc_nulls_first
+        case (false, Some(false)) => col(c).desc_nulls_last
+      }
+      df.orderBy(order).limit(n).select(col(c)).collect().map(r => String.valueOf(r.get(0))).toSeq
+    }
+    val shapes = for {
+      c <- Gen.oneOf("url", "warc_ts")
+      asc <- Gen.oneOf(true, false)
+      nullsFirst <- Gen.oneOf(None, Some(true), Some(false))
+      n <- Gen.choose(1, 400)
+    } yield (c, asc, nullsFirst, n)
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(24)
+        .withInitialSeed(org.scalacheck.rng.Seed(20261020L)).withWorkers(1),
+      Prop.forAllNoShrink(shapes) { case (c, asc, nullsFirst, n) =>
+        val got = top(spark.read.format("graft").load(r2), c, asc, nullsFirst, n)
+        val pushed = GraftDataSource.planStatsFor(r2).get.pushedTopN
+        val ok = got == top(spark.read.parquet(pq), c, asc, nullsFirst, n) &&
+          pushed.exists(t => t.column == c && t.limit == n)
+        if (!ok) println(s"counterexample ORDER BY $c asc=$asc nullsFirst=$nullsFirst " +
+          s"LIMIT $n: pushed $pushed")
+        ok
+      })
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
   }
 
   test("V2 scan reads compacted (negative part-id) stores completely") {
@@ -863,13 +882,33 @@ class V2SourceSpec extends AnyFunSuite {
     dst.toString
   }
 
+  /** 16,000 pages in 16 parts, written with the block byte bound `maxBlockBytes`. */
+  private def coldStore(maxBlockBytes: Long): String = {
+    val r = Files.createTempDirectory("graft-v2-cold-").toString
+    EncodeJob.run(spark, Webtext.generate(spark, 16000L, 8), r, parts = 16,
+      maxBlockBytes = maxBlockBytes)
+    r
+  }
+  private def groupsPerPart(r: String): Seq[Int] =
+    graft.sources.SnapshotStore.currentEntries(r).map(_.stats.get.nGroups)
+
+  /** The cold-planning pages with one block group per part. */
+  private lazy val singleGroupStore: String = {
+    val r = coldStore(EncodeJob.MaxBlockBytes)
+    assert(groupsPerPart(r).forall(_ == 1), s"groups per part: ${groupsPerPart(r)}")
+    r
+  }
+
+  /** The same pages with at least 4 block groups per part: the byte bound is
+    * a sixth of the smallest part's input bytes. */
+  private lazy val multiGroupStore: String = {
+    val r = coldStore(graft.sources.SnapshotStore.currentEntries(singleGroupStore)
+      .map(_.origBytes).min / 6)
+    assert(groupsPerPart(r).forall(_ >= 4), s"groups per part: ${groupsPerPart(r)}")
+    r
+  }
+
   test("cold selective planning runs no Spark job; a stats-less copy prunes via block metadata") {
-    val fresh = Files.createTempDirectory("graft-v2-cold-").toString
-    EncodeJob.run(spark, Webtext.generate(spark, 16000L, 8), fresh, parts = 16)
-    val entries = graft.sources.SnapshotStore.currentEntries(fresh)
-    assert(entries.forall(_.stats.exists(_.nGroups == 1)), "one block group per part")
-    val legacy = statsStrippedCopy(fresh)
-    assert(graft.sources.SnapshotStore.currentEntries(legacy).forall(_.stats.isEmpty))
     val base = 1735689600000000L // Webtext's warc_ts origin
     val queries: Seq[String => DataFrame] = Seq(
       r => spark.read.format("graft").load(r)
@@ -883,18 +922,24 @@ class V2SourceSpec extends AnyFunSuite {
         .select(col("url"), unix_micros(col("warc_ts"))),
       r => spark.read.format("graft").load(r).orderBy(col("url")).limit(40)
         .select(col("url"), col("lang")))
-    queries.zipWithIndex.foreach { case (q, i) =>
-      val (rows, jobs) = planJobs(q(fresh))
-      assert(jobs == 0, s"query $i: cold planning on a stats-carrying store ran $jobs jobs")
-      val kept = GraftDataSource.planStatsFor(fresh).get.prunedGroupKeys
-      assert(kept.exists(k => k >= 1 && k < entries.size),
-        s"query $i must prune through level 1: $kept of ${entries.size}")
-      // no stats: the same rows and the same pruning, planned by level 2
-      val (legacyRows, legacyJobs) = planJobs(q(legacy))
-      assert(legacyRows == rows && rows.nonEmpty, s"query $i: stats-less copy differs")
-      assert(legacyJobs > 0, s"query $i: a stats-less store plans through the block job")
-      assert(GraftDataSource.planStatsFor(legacy).get.prunedGroupKeys == kept,
-        s"query $i: level 2 must keep the groups level 1 kept")
+    for (multiGroup <- Seq(false, true)) {
+      val fresh = if (multiGroup) multiGroupStore else singleGroupStore
+      val groups = groupsPerPart(fresh).sum
+      // no stats: parts plan from their footers
+      val legacy = statsStrippedCopy(fresh)
+      assert(graft.sources.SnapshotStore.currentEntries(legacy).forall(_.stats.isEmpty))
+      queries.zipWithIndex.foreach { case (q, i) =>
+        val store = s"query $i, ${if (multiGroup) "multi-group" else "single-group"} parts"
+        val (rows, jobs) = planJobs(q(fresh))
+        assert(jobs == 0, s"$store: cold planning ran $jobs jobs")
+        val kept = GraftDataSource.planStatsFor(fresh).get.prunedGroupKeys
+        assert(kept.exists(k => k >= 1 && k < groups), s"$store must prune: $kept of $groups")
+        val (legacyRows, legacyJobs) = planJobs(q(legacy))
+        assert(legacyRows == rows && rows.nonEmpty, s"$store: stats-less copy differs")
+        assert(legacyJobs == 0, s"$store: the stats-less copy's planning ran $legacyJobs jobs")
+        assert(GraftDataSource.planStatsFor(legacy).get.prunedGroupKeys == kept,
+          s"$store: footers must keep the groups the part stats kept")
+      }
     }
   }
 
@@ -927,13 +972,29 @@ class V2SourceSpec extends AnyFunSuite {
 
   test("a DELETE whose predicate no part's stats admit runs no Spark job") {
     import graft.sources.SnapshotStore
+    def deleteNothing(r: String, cond: org.apache.spark.sql.Column,
+        pred: DecodeJob.BlockPredicate): Unit = {
+      val snap = SnapshotStore.currentSnapshotId(r)
+      val (res, jobs) = jobsDuring(graft.jobs.DeleteJob.deleteWhere(spark, r, cond, Seq(pred)))
+      assert(jobs == 0, s"planning the affected parts of $pred ran $jobs Spark jobs")
+      assert(res.partsRewritten == 0 && SnapshotStore.currentSnapshotId(r) == snap, s"$pred")
+    }
     val r = Files.createTempDirectory("graft-v2-delete-none-").toString
     EncodeJob.run(spark, Webtext.generate(spark, 2000L, 4), r, parts = 4)
-    val snap = SnapshotStore.currentSnapshotId(r)
-    val (res, jobs) = jobsDuring(graft.jobs.DeleteJob.deleteWhere(spark, r,
-      col("lang") === "zz", Seq(DecodeJob.StrEq("lang", "zz"))))
-    assert(jobs == 0, s"planning the affected parts ran $jobs Spark jobs")
-    assert(res.partsRewritten == 0 && SnapshotStore.currentSnapshotId(r) == snap)
+    deleteNothing(r, col("lang") === "zz", DecodeJob.StrEq("lang", "zz"))
+
+    // multi-group parts: a url between two groups of one part is admitted by
+    // the part's stats, and only the groups' footers rule it out
+    val multi = multiGroupStore
+    deleteNothing(multi, col("lang") === "zz", DecodeJob.StrEq("lang", "zz"))
+    val e = SnapshotStore.currentEntries(multi).head
+    val firstMax = DecodeJob.blocks(spark, multi)
+      .where(col("part_id") === e.partId && col("block_seq") === 0 && col("column") === "url")
+      .select(col("block_str_max")).head().getString(0)
+    val between = firstMax + "\u0000"
+    assert(DecodeJob.partsMayMatch(Seq(e), Seq(DecodeJob.StrEq("url", between))).nonEmpty,
+      "the part's stats admit the url")
+    deleteNothing(multi, col("url") === between, DecodeJob.StrEq("url", between))
   }
 
   test("a store dropped and recreated at the same path answers with the new store's counts") {

@@ -18,14 +18,7 @@ import graft.sources.{SnapshotStore, Webtext}
  */
 class V2WriteSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("v2-write-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark()
 
   private def pages(n: Long): DataFrame = Webtext.generate(spark, n, 8).toDF()
 

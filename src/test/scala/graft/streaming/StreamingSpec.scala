@@ -10,14 +10,7 @@ import graft.sources.{SnapshotStore, Webtext}
 
 class StreamingSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("streaming-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark()
 
   private def tmp(): String = Files.createTempDirectory("graft-stream-").toString + "/d"
 

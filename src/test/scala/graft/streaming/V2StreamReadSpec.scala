@@ -19,14 +19,7 @@ import graft.sources.v2.GraftOffset
  */
 class V2StreamReadSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("v2-stream-read-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark()
 
   private def tmp(): String = Files.createTempDirectory("graft-sread-").toString + "/d"
 
