@@ -288,14 +288,16 @@ object DecodeJob {
   /** The block groups of `parts`. A part with stats and one group is that
     * group, with its manifest stats. Any other part (several groups, or
     * committed without stats) yields its groups from its file's footer, read
-    * on the driver with the session's Hadoop settings: one positioned read
-    * per file at its manifest length, no block bytes. */
+    * on the driver with `settings` (the session's Hadoop settings when
+    * None): one positioned read per file at its manifest length, no block
+    * bytes. */
   private def groupsOf(spark: SparkSession, root: String,
-      parts: Seq[SnapshotStore.PartEntry]): Seq[Group] = {
+      parts: Seq[SnapshotStore.PartEntry],
+      settings: Option[graft.sources.v2.HadoopSettings]): Seq[Group] = {
     val (single, multi) = parts.partition(_.stats.exists(_.nGroups == 1))
     val fromStats = single.map(e => Group(e.partId, 0, e.nRows, e.stats.get.columns))
     if (multi.isEmpty) return fromStats
-    val conf = graft.sources.v2.HadoopSettings(spark).conf()
+    val conf = settings.getOrElse(graft.sources.v2.HadoopSettings(spark)).conf()
     def read(e: SnapshotStore.PartEntry, path: String): Seq[Group] =
       graft.sources.v2.BlockFile.readAll(path, e.fileLen, e.partId, conf, withEncoded = false)
         .groupBy(_.block_seq).iterator.map { case (seq, bs) =>
@@ -336,10 +338,12 @@ object DecodeJob {
   private[graft] def planPrunedKeys(spark: SparkSession, root: String,
                                     entries: Seq[SnapshotStore.PartEntry],
                                     predicates: Seq[BlockPredicate],
-                                    allowed: Option[Set[String]] = None): Array[(Int, Int)] = {
+                                    allowed: Option[Set[String]] = None,
+                                    settings: Option[graft.sources.v2.HadoopSettings] = None)
+      : Array[(Int, Int)] = {
     requireValidPredicates(predicates, allowed)
     val admits = admitsAll(predicates)
-    groupsOf(spark, root, partsMayMatch(entries, predicates)).iterator
+    groupsOf(spark, root, partsMayMatch(entries, predicates), settings).iterator
       .filter(g => admits(g.columns)).map(g => (g.partId, g.seq)).toArray
   }
 
@@ -393,7 +397,9 @@ object DecodeJob {
                                   entries: Seq[SnapshotStore.PartEntry],
                                   column: String,
                                   asc: Boolean, nullsFirst: Boolean, limit: Int,
-                                  intBounds: Option[Boolean] = None): Option[Array[(Int, Int)]] = {
+                                  intBounds: Option[Boolean] = None,
+                                  settings: Option[graft.sources.v2.HadoopSettings] = None)
+      : Option[Array[(Int, Int)]] = {
     require(limit > 0, s"pushed top-n limit must be positive, got $limit")
     val isInt = topNIsInt(column, intBounds)
     // int bounds as longs, string bounds as UTF8String (Spark's order)
@@ -409,7 +415,7 @@ object DecodeJob {
     val parts = topNPrefix(entries.map(e =>
         unit(e, e.nRows, e.stats.flatMap(_.columns.get(column)))), dir, nullsFirst, limit)
       .getOrElse(entries)
-    topNPrefix(groupsOf(spark, root, parts).map(g =>
+    topNPrefix(groupsOf(spark, root, parts, settings).map(g =>
         unit((g.partId, g.seq), g.rows, g.columns.get(column))), dir, nullsFirst, limit)
       .map(_.toArray)
   }

@@ -970,7 +970,8 @@ final class GraftScan(root: String, snapshotId: Option[Long],
   private var planned: (Seq[DecodeJob.BlockPredicate],
     (Array[InputPartition], GraftDataSource.PlanStats)) = null
 
-  /** The session's Hadoop settings, read once per scan. */
+  /** The session's Hadoop settings, read once per scan: planning reads
+    * footers with them, and the readers open block files with them. */
   private lazy val settings = HadoopSettings(SparkSession.active)
 
   /** `spark.graft.v2.columnar`, read once per scan. */
@@ -1053,7 +1054,7 @@ final class GraftScan(root: String, snapshotId: Option[Long],
     val keys: Option[Array[(Int, Int)]] =
       if (preds.nonEmpty)
         Some(DecodeJob.planPrunedKeys(spark, root, entries, preds,
-          Some(tableSchema.fieldNames.toSet)))
+          Some(tableSchema.fieldNames.toSet), Some(settings)))
       // top-n prefix pruning only when NO predicate of any kind arrived (a
       // runtime filter landing via filter() makes per-group row counts stop
       // bounding the MATCHING rows — same reason pushTopN refuses filters)
@@ -1061,7 +1062,7 @@ final class GraftScan(root: String, snapshotId: Option[Long],
         val intBounds = tableSchema.fields.find(_.name == t.column)
           .map(_.dataType != StringType)
         DecodeJob.planTopNKeys(spark, root, entries,
-          t.column, t.asc, t.nullsFirst, t.limit, intBounds)
+          t.column, t.asc, t.nullsFirst, t.limit, intBounds, Some(settings))
       }
     val (partitions, fileCount) = GraftDataSource.packPartitions(spark, root, entries,
       requiredSchema, tableSchema.fields.head.name, keys, columnar,
