@@ -161,7 +161,8 @@ object DecodeJob {
                         predicates: Seq[BlockPredicate]): org.apache.spark.sql.DataFrame = {
     requireStore(root)
     import spark.implicits._
-    planPrunedKeys(spark, root, SnapshotStore.currentEntries(root), predicates).toSeq
+    planPrunedKeys(graft.sources.v2.HadoopSettings(spark), root,
+      SnapshotStore.currentEntries(root), predicates).toSeq
       .toDF("part_id", "block_seq")
   }
 
@@ -177,7 +178,8 @@ object DecodeJob {
       entries: Seq[SnapshotStore.PartEntry],
       predicates: Seq[BlockPredicate]): Set[Int] =
     if (predicates.isEmpty || entries.isEmpty) entries.map(_.partId).toSet
-    else planPrunedKeys(spark, root, entries, predicates).iterator.map(_._1).toSet
+    else planPrunedKeys(graft.sources.v2.HadoopSettings(spark), root, entries, predicates)
+      .iterator.map(_._1).toSet
 
   private def requireValidPredicates(predicates: Seq[BlockPredicate],
                                      allowed: Option[Set[String]]): Unit = {
@@ -288,16 +290,14 @@ object DecodeJob {
   /** The block groups of `parts`. A part with stats and one group is that
     * group, with its manifest stats. Any other part (several groups, or
     * committed without stats) yields its groups from its file's footer, read
-    * on the driver with `settings` (the session's Hadoop settings when
-    * None): one positioned read per file at its manifest length, no block
-    * bytes. */
-  private def groupsOf(spark: SparkSession, root: String,
-      parts: Seq[SnapshotStore.PartEntry],
-      settings: Option[graft.sources.v2.HadoopSettings]): Seq[Group] = {
+    * on the driver with the caller's Hadoop `settings`: one positioned read
+    * per file at its manifest length, no block bytes. */
+  private def groupsOf(settings: graft.sources.v2.HadoopSettings, root: String,
+      parts: Seq[SnapshotStore.PartEntry]): Seq[Group] = {
     val (single, multi) = parts.partition(_.stats.exists(_.nGroups == 1))
     val fromStats = single.map(e => Group(e.partId, 0, e.nRows, e.stats.get.columns))
     if (multi.isEmpty) return fromStats
-    val conf = settings.getOrElse(graft.sources.v2.HadoopSettings(spark)).conf()
+    val conf = settings.conf()
     def read(e: SnapshotStore.PartEntry, path: String): Seq[Group] =
       graft.sources.v2.BlockFile.readAll(path, e.fileLen, e.partId, conf, withEncoded = false)
         .groupBy(_.block_seq).iterator.map { case (seq, bs) =>
@@ -335,15 +335,14 @@ object DecodeJob {
    * partition carries only its own parts' keys, and a part without one is
    * never opened.
    */
-  private[graft] def planPrunedKeys(spark: SparkSession, root: String,
+  private[graft] def planPrunedKeys(settings: graft.sources.v2.HadoopSettings, root: String,
                                     entries: Seq[SnapshotStore.PartEntry],
                                     predicates: Seq[BlockPredicate],
-                                    allowed: Option[Set[String]] = None,
-                                    settings: Option[graft.sources.v2.HadoopSettings] = None)
+                                    allowed: Option[Set[String]] = None)
       : Array[(Int, Int)] = {
     requireValidPredicates(predicates, allowed)
     val admits = admitsAll(predicates)
-    groupsOf(spark, root, partsMayMatch(entries, predicates), settings).iterator
+    groupsOf(settings, root, partsMayMatch(entries, predicates)).iterator
       .filter(g => admits(g.columns)).map(g => (g.partId, g.seq)).toArray
   }
 
@@ -393,12 +392,11 @@ object DecodeJob {
    * only drops parts level 2 would drop too. None (the caller scans
    * everything — always sound) when the groups cannot fill the quota.
    */
-  private[graft] def planTopNKeys(spark: SparkSession, root: String,
+  private[graft] def planTopNKeys(settings: graft.sources.v2.HadoopSettings, root: String,
                                   entries: Seq[SnapshotStore.PartEntry],
                                   column: String,
                                   asc: Boolean, nullsFirst: Boolean, limit: Int,
-                                  intBounds: Option[Boolean] = None,
-                                  settings: Option[graft.sources.v2.HadoopSettings] = None)
+                                  intBounds: Option[Boolean] = None)
       : Option[Array[(Int, Int)]] = {
     require(limit > 0, s"pushed top-n limit must be positive, got $limit")
     val isInt = topNIsInt(column, intBounds)
@@ -415,7 +413,7 @@ object DecodeJob {
     val parts = topNPrefix(entries.map(e =>
         unit(e, e.nRows, e.stats.flatMap(_.columns.get(column)))), dir, nullsFirst, limit)
       .getOrElse(entries)
-    topNPrefix(groupsOf(spark, root, parts, settings).map(g =>
+    topNPrefix(groupsOf(settings, root, parts).map(g =>
         unit((g.partId, g.seq), g.rows, g.columns.get(column))), dir, nullsFirst, limit)
       .map(_.toArray)
   }

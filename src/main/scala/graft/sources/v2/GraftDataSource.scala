@@ -1053,16 +1053,16 @@ final class GraftScan(root: String, snapshotId: Option[Long],
     // group is never opened.
     val keys: Option[Array[(Int, Int)]] =
       if (preds.nonEmpty)
-        Some(DecodeJob.planPrunedKeys(spark, root, entries, preds,
-          Some(tableSchema.fieldNames.toSet), Some(settings)))
+        Some(DecodeJob.planPrunedKeys(settings, root, entries, preds,
+          Some(tableSchema.fieldNames.toSet)))
       // top-n prefix pruning only when NO predicate of any kind arrived (a
       // runtime filter landing via filter() makes per-group row counts stop
       // bounding the MATCHING rows — same reason pushTopN refuses filters)
       else pushedTopN.flatMap { t =>
         val intBounds = tableSchema.fields.find(_.name == t.column)
           .map(_.dataType != StringType)
-        DecodeJob.planTopNKeys(spark, root, entries,
-          t.column, t.asc, t.nullsFirst, t.limit, intBounds, Some(settings))
+        DecodeJob.planTopNKeys(settings, root, entries,
+          t.column, t.asc, t.nullsFirst, t.limit, intBounds)
       }
     val (partitions, fileCount) = GraftDataSource.packPartitions(spark, root, entries,
       requiredSchema, tableSchema.fields.head.name, keys, columnar,

@@ -182,7 +182,7 @@ final class GraftMicroBatchStream(root: String,
       import graft.jobs.DecodeJob
       val keysOpt: Option[Array[(Int, Int)]] =
         if (predicates.isEmpty || entries.isEmpty) None
-        else Some(DecodeJob.planPrunedKeys(spark, root, entries, predicates,
+        else Some(DecodeJob.planPrunedKeys(settings, root, entries, predicates,
           Some(GraftDataSource.storeSchema(root).fieldNames.toSet)))
       val parts: Array[InputPartition] =
         if (entries.isEmpty) Array.empty
@@ -206,7 +206,8 @@ final class GraftMicroBatchStream(root: String,
   private var lastPlan: Array[InputPartition] = null
 
   // the session's Hadoop settings, read once for the life of the stream and
-  // shared by every batch
+  // shared by every batch: planning reads footers with them, and the
+  // readers open block files with them
   private lazy val settings = HadoopSettings(SparkSession.active)
 
   override def createReaderFactory(): PartitionReaderFactory = GraftReaderFactory(settings)

@@ -643,7 +643,7 @@ class PipelineSpec extends AnyFunSuite {
     val total = DecodeJob.blocks(spark, root).where($"column" === "url").count()
 
     // an all-matching predicate keeps every group: each part's file is read
-    assert(DecodeJob.planPrunedKeys(spark, root, entries,
+    assert(DecodeJob.planPrunedKeys(graft.sources.v2.HadoopSettings(spark), root, entries,
       Seq(DecodeJob.TsRange(Long.MinValue, Long.MaxValue))).length == total)
     // ... and decodeWhere returns the exact row set
     assert(DecodeJob.decodedRows(DecodeJob.decodeWhere(spark, root,
@@ -651,7 +651,8 @@ class PipelineSpec extends AnyFunSuite {
 
     // a selective predicate prunes
     val someUrl = Webtext.page(7L).url
-    val keys = DecodeJob.planPrunedKeys(spark, root, entries, Seq(DecodeJob.StrEq("url", someUrl)))
+    val keys = DecodeJob.planPrunedKeys(graft.sources.v2.HadoopSettings(spark), root, entries,
+      Seq(DecodeJob.StrEq("url", someUrl)))
     assert(keys.length >= 1 && keys.length < total)
     assert(DecodeJob.decodedRows(DecodeJob.decodeWhere(spark, root,
       Seq(DecodeJob.StrEq("url", someUrl)))) == 1L)

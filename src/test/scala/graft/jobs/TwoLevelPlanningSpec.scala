@@ -272,7 +272,8 @@ class TwoLevelPlanningSpec extends AnyFunSuite {
         predLists.forall { preds =>
           val reference = blockKeys(root, preds)
           val level1 = DecodeJob.partsMayMatch(entries, preds).map(_.partId).toSet
-          val planned = DecodeJob.planPrunedKeys(spark, root, entries, preds).toSet
+          val planned = DecodeJob.planPrunedKeys(graft.sources.v2.HadoopSettings(spark), root,
+            entries, preds).toSet
           val matchingParts = rows.filter(r => preds.forall(rowMatches(_, r)))
             .map(_.getAs[Int]("_part_id")).toSet
           val ok = reference.map(_._1).subsetOf(level1) && planned == reference &&

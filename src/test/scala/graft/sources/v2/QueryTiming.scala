@@ -177,7 +177,7 @@ object QueryTiming extends AdaptiveSparkPlanHelper {
       val entries = graft.sources.SnapshotStore.currentEntries(many)
       val all = Seq(graft.jobs.DecodeJob.TsRange(Long.MinValue, Long.MaxValue))
       val times = (0 until 7).map { _ =>
-        timed(graft.jobs.DecodeJob.planPrunedKeys(spark, many, entries, all))
+        timed(graft.jobs.DecodeJob.planPrunedKeys(HadoopSettings(spark), many, entries, all))
       }
       println(f"footer reads: ${entries.size} parts, ${times.head._1.length} groups kept, " +
         f"plan p50 ${percentile(times.map(_._2), 0.5)}%.1f ms min ${times.map(_._2).min}%.1f ms " +
