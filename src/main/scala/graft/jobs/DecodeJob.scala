@@ -7,6 +7,7 @@ import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sources.{SnapshotStore, WebPage}
+import graft.sources.v2.ExactFilter
 
 /**
  * Decode job: the typed and projected decode API over a committed snapshot,
@@ -15,12 +16,13 @@ import graft.sources.{SnapshotStore, WebPage}
  * Every decode here is the V2 scan (`spark.read.format("graft")`,
  * [[graft.sources.v2.GraftScan]]): each task reads whole block files, so a
  * block group never straddles a task and the scan needs no shuffle and no
- * split repair. Block predicates become exact row filters; the scan pushes
- * them down and prunes groups with [[planPrunedKeys]], and Spark still runs
- * them on the decoded rows. Building a decode runs no Spark job; the scan is
- * planned at the first action, on the driver: from the manifest's part stats,
- * then from the footers of the surviving multi-group parts, one read per
- * file. Planning runs no Spark job either.
+ * split repair. A predicate is an [[ExactFilter]] leaf; its row form goes to
+ * the scan as an ordinary filter, which the scan converts back to the same
+ * leaf, prunes groups with ([[planPrunedKeys]]) and evaluates itself on the
+ * decoded rows. Building a decode runs no Spark job; the scan is planned at
+ * the first action, on the driver: from the manifest's part stats, then from
+ * the footers of the surviving multi-group parts, one read per file.
+ * Planning runs no Spark job either.
  */
 object DecodeJob {
 
@@ -73,83 +75,56 @@ object DecodeJob {
 
   // ---------------- predicate-pushed decode (decoded-view API) ----------------
 
-  /** A pushable predicate over a decoded page column, evaluated twice: against
-    * block METADATA to prune whole groups before any decompression, and exactly
-    * against the decoded rows. Absent metadata always passes (soundness). */
-  sealed trait BlockPredicate { def column: String }
-  /** Equality on a UTF-8 string column with bounds/dict metadata (url/text/lang). */
-  final case class StrEq(column: String, value: String) extends BlockPredicate
+  /** Equality on a string column (url/text/lang). */
+  def StrEq(column: String, value: String): ExactFilter =
+    ExactFilter.StrRange(column, Some(value), false, Some(value), false)
   /** Membership on a string column. */
-  final case class StrIn(column: String, values: Seq[String]) extends BlockPredicate
+  def StrIn(column: String, values: Seq[String]): ExactFilter = ExactFilter.StrIn(column, values)
   /** Prefix match on a string column — the most common web-archive access
     * pattern (`url LIKE 'https://host/%'`). Prunes via block_str_min/max
     * overlap with [prefix, successor(prefix)). */
-  final case class StrPrefix(column: String, prefix: String) extends BlockPredicate
+  def StrPrefix(column: String, prefix: String): ExactFilter = ExactFilter.StrPrefix(column, prefix)
   /** Inclusive lexicographic range on a string column; None = open-ended on
     * that side. A finite stand-in bound (e.g. a run of U+FFFF) would be
     * UNSOUND: strings can sort above any finite string, and a pruned block is
-    * never decoded, so the residual filter could not resurrect its rows. */
-  final case class StrRange(column: String, lo: Option[String], hi: Option[String])
-      extends BlockPredicate
-  object StrRange {
-    /** Closed-range convenience (both bounds finite). */
-    def apply(column: String, lo: String, hi: String): StrRange =
-      StrRange(column, Some(lo), Some(hi))
-  }
+    * never decoded, so the exact filter could not resurrect its rows. */
+  def StrRange(column: String, lo: Option[String], hi: Option[String]): ExactFilter =
+    ExactFilter.StrRange(column, lo, false, hi, false)
+  /** Closed-range convenience (both bounds finite). */
+  def StrRange(column: String, lo: String, hi: String): ExactFilter =
+    StrRange(column, Some(lo), Some(hi))
   /** Inclusive epoch-micros range on `warc_ts`. */
-  final case class TsRange(loMicros: Long, hiMicros: Long) extends BlockPredicate {
-    def column: String = "warc_ts"
-  }
-  /** Inclusive raw-value range on ANY integer-family column (generalized
-    * schemas: bigint/int/smallint/tinyint, and timestamps as epoch micros) —
-    * prunes via the same exact block_min/max as [[TsRange]]. */
-  final case class IntRange(column: String, lo: Long, hi: Long) extends BlockPredicate
-
-  /**
-   * Smallest string greater than EVERY string with the given prefix, under
-   * Spark's UTF8 binary ordering: the prefix with its last rankable char
-   * incremented. A char is dropped first only when its increment is not a
-   * valid non-surrogate scalar: U+FFFF (no in-char successor) and
-   * U+D7FF..U+DFFF (U+D7FF increments into the surrogate range; surrogates
-   * themselves — possibly halves of a supplementary pair — cannot be
-   * incremented byte-order-soundly). Everything else increments: UTF-8 is
-   * monotone in scalar value and encodings are never byte-prefixes of each
-   * other, so `prefix[0..i-1] + (c+1)` bounds every prefixed string. None =
-   * no finite successor (pruning then uses only the lower bound, still sound).
-   */
-  private[jobs] def prefixSuccessor(prefix: String): Option[String] = {
-    @inline def noSuccessor(c: Char): Boolean =
-      c == 0xFFFF.toChar || (c >= 0xD7FF.toChar && c <= 0xDFFF.toChar)
-    var i = prefix.length - 1
-    while (i >= 0 && noSuccessor(prefix.charAt(i))) i -= 1
-    if (i < 0) None
-    else Some(prefix.substring(0, i) + (prefix.charAt(i) + 1).toChar)
-  }
+  def TsRange(loMicros: Long, hiMicros: Long): ExactFilter =
+    ExactFilter.IntRange("warc_ts", loMicros, hiMicros)
+  /** Inclusive raw-value range on an integer-family column (timestamps as
+    * epoch micros); on this API's webtext stores that is `warc_ts`. */
+  def IntRange(column: String, lo: Long, hi: Long): ExactFilter =
+    ExactFilter.IntRange(column, lo, hi)
 
   /** 1900-01-01T00:00:00Z in epoch micros. */
   private val PushableTsFloorMicros = -2208988800L * 1000000L
 
-  /** Exact row-level form of a predicate over decoded pages. */
-  private def rowCond(p: BlockPredicate): org.apache.spark.sql.Column = p match {
-    case StrEq(c, v) => col(c) === v
-    case StrIn(c, vs) => col(c).isin(vs: _*)
-    case StrPrefix(c, p) => col(c).startsWith(p)
-    case StrRange(c, lo, hi) =>
-      lo.map(col(c) >= _).getOrElse(lit(true)) && hi.map(col(c) <= _).getOrElse(lit(true))
+  /** Exact row-level form of a predicate over decoded pages, whose one
+    * int-family column is the `warc_ts` timestamp ([[requireValidPredicates]]). */
+  private def rowCond(p: ExactFilter): org.apache.spark.sql.Column = p match {
+    case ExactFilter.StrRange(c, Some(l), false, Some(h), false) if l == h => col(c) === l
+    case ExactFilter.StrRange(c, lo, loStrict, hi, hiStrict) =>
+      lo.map(l => if (loStrict) col(c) > l else col(c) >= l).getOrElse(lit(true)) &&
+        hi.map(h => if (hiStrict) col(c) < h else col(c) <= h).getOrElse(lit(true))
+    case ExactFilter.StrIn(c, vs) => col(c).isin(vs: _*)
+    case ExactFilter.StrPrefix(c, p) => col(c).startsWith(p)
     // exact on micros; the timestamp comparisons are what the V2 scan can
     // push. They are kept to bounds Spark hands the scan unchanged: before
     // 1900 it may rebase a timestamp literal between calendars, and near the
     // Long extremes that conversion overflows
-    case TsRange(lo, hi) =>
+    case ExactFilter.IntRange(_, lo, hi) =>
       def pushable(us: Long) = us >= PushableTsFloorMicros
       val ts = col("warc_ts")
       unix_micros(ts).between(lo, hi) &&
         (if (pushable(lo)) ts >= timestamp_micros(lit(lo)) else lit(true)) &&
         (if (pushable(hi)) ts <= timestamp_micros(lit(hi)) else lit(true))
-    // raw stored value (timestamp columns of generalized stores decode as
-    // epoch-micros longs on the V2 surface, where residuals are Spark-side
-    // anyway; this row form serves the int-typed decode API columns)
-    case IntRange(c, lo, hi) => col(c).between(lo, hi)
+    case ExactFilter.IntIn(_, vs) => unix_micros(col("warc_ts")).isin(vs: _*)
+    case ExactFilter.NullTest(c, isNull, _) => if (isNull) col(c).isNull else col(c).isNotNull
   }
 
   /**
@@ -158,7 +133,7 @@ object DecodeJob {
    * manifest ([[planPrunedKeys]]), as a local DataFrame.
    */
   def matchingGroupKeys(spark: SparkSession, root: String,
-                        predicates: Seq[BlockPredicate]): org.apache.spark.sql.DataFrame = {
+                        predicates: Seq[ExactFilter]): org.apache.spark.sql.DataFrame = {
     requireStore(root)
     import spark.implicits._
     planPrunedKeys(graft.sources.v2.HadoopSettings(spark), root,
@@ -176,32 +151,32 @@ object DecodeJob {
     * it never rewrote is silent row loss. */
   private[graft] def affectedParts(spark: SparkSession, root: String,
       entries: Seq[SnapshotStore.PartEntry],
-      predicates: Seq[BlockPredicate]): Set[Int] =
+      predicates: Seq[ExactFilter]): Set[Int] =
     if (predicates.isEmpty || entries.isEmpty) entries.map(_.partId).toSet
     else planPrunedKeys(graft.sources.v2.HadoopSettings(spark), root, entries, predicates)
       .iterator.map(_._1).toSet
 
-  private def requireValidPredicates(predicates: Seq[BlockPredicate],
+  private def requireValidPredicates(predicates: Seq[ExactFilter],
                                      allowed: Option[Set[String]]): Unit = {
     require(predicates.nonEmpty, "no predicates")
-    // a predicate naming a column the store does not have matches ZERO block
-    // rows — the intersection would prune EVERYTHING and silently return
-    // empty. The V2 surface passes its table schema's columns (`allowed`);
-    // the webtext decode API keeps the fixed-page-column typo guard.
+    // a predicate naming a column the store does not have would test stats
+    // that are never there, so it would admit every group instead of failing.
+    // The V2 surface passes its table schema's columns (`allowed`); the
+    // webtext decode API keeps the fixed-page-column typo guard.
     allowed match {
       case Some(cols) =>
         require(predicates.forall(p => cols(p.column)),
           s"predicates must target store columns ${cols.toSeq.sorted.mkString(",")}; got " +
           predicates.map(_.column).distinct.mkString(","))
       case None =>
+        require(predicates.forall(p => PageColumns(p.column) && p.column != "html"),
+          "predicates must target url/warc_ts/text/lang (html is opaque binary: no metadata)")
+        // warc_ts, an epoch-micros timestamp, is the one int column
         require(predicates.forall {
-          case _: IntRange => true // generalized-schema predicates: schema-validated upstream
-          case p => PageColumns(p.column) && p.column != "html"
-        }, "predicates must target url/warc_ts/text/lang (html is opaque binary: no metadata)")
-        require(predicates.forall {
-          case _: TsRange | _: IntRange => true
+          case _: ExactFilter.NullTest => true
+          case p @ (_: ExactFilter.IntRange | _: ExactFilter.IntIn) => p.column == "warc_ts"
           case p => p.column != "warc_ts" // string bounds are meaningless on an i64 column
-        }, "warc_ts predicates must be TsRange")
+        }, "warc_ts predicates must be TsRange, and only warc_ts takes int predicates")
     }
   }
 
@@ -209,55 +184,18 @@ object DecodeJob {
 
   private def u8(s: String): UTF8String = UTF8String.fromString(s)
 
-  /** Can a part or block group whose column has these stats hold a row
-    * matching `p`? Absent stats pass (soundness), and strings compare in
-    * Spark's order (UTF-8 bytes). A part's stats are the rollup of its
-    * blocks' (min of the mins, max of the maxes, dict union), no tighter than
-    * any block's, so a part passes whenever ANY of its groups could: level 1
-    * never prunes a part holding a group level 2 keeps. Literals are
-    * converted once per predicate: a runtime In-filter can carry thousands
-    * of values and the test runs once per part and group. */
-  private def statsTest(p: BlockPredicate): SnapshotStore.ColumnStats => Boolean = {
-    def le(a: Option[String], b: UTF8String) = a.forall(x => u8(x).compareTo(b) <= 0)
-    def ge(a: Option[String], b: UTF8String) = a.forall(x => u8(x).compareTo(b) >= 0)
-    def dictHas(s: SnapshotStore.ColumnStats)(f: UTF8String => Boolean) =
-      s.dict.forall(_.exists(v => f(u8(v))))
-    p match {
-      case StrEq(_, v) =>
-        val x = u8(v)
-        s => le(s.strMin, x) && ge(s.strMax, x) && dictHas(s)(_ == x)
-      case StrIn(_, vs) =>
-        val us = vs.map(u8)
-        val (lo, hi, set) = (us.min, us.max, us.toSet)
-        s => le(s.strMin, hi) && ge(s.strMax, lo) && dictHas(s)(set)
-      case StrPrefix(_, pre) =>
-        // matches s satisfy pre <= s < successor(pre): the stats must overlap
-        // that interval (only its lower end when there is no successor)
-        val x = u8(pre)
-        val succ = prefixSuccessor(pre).map(u8)
-        s => ge(s.strMax, x) && succ.forall(su => s.strMin.forall(u8(_).compareTo(su) < 0)) &&
-          dictHas(s)(_.startsWith(x))
-      case StrRange(_, lo, hi) =>
-        val (l, h) = (lo.map(u8), hi.map(u8))
-        s => h.forall(le(s.strMin, _)) && l.forall(ge(s.strMax, _)) &&
-          dictHas(s)(v => l.forall(v.compareTo(_) >= 0) && h.forall(v.compareTo(_) <= 0))
-      case TsRange(lo, hi) => s => s.min.forall(_ <= hi) && s.max.forall(_ >= lo)
-      case IntRange(_, lo, hi) => s => s.min.forall(_ <= hi) && s.max.forall(_ >= lo)
-    }
-  }
-
   /** Do per-column stats admit ALL predicates? A column without stats is
     * unbounded and admits. */
-  private def admitsAll(predicates: Seq[BlockPredicate])
+  private def admitsAll(predicates: Seq[ExactFilter])
       : Map[String, SnapshotStore.ColumnStats] => Boolean = {
-    val tests = predicates.map(p => (p.column, statsTest(p)))
+    val tests = predicates.map(p => (p.column, p.statsTest))
     cols => tests.forall { case (c, t) => cols.get(c).forall(t) }
   }
 
   /** Level-1 survivors: the parts whose manifest stats admit ALL predicates
     * (parts without stats are unbounded and always survive). */
   private[graft] def partsMayMatch(entries: Seq[SnapshotStore.PartEntry],
-      predicates: Seq[BlockPredicate]): Seq[SnapshotStore.PartEntry] = {
+      predicates: Seq[ExactFilter]): Seq[SnapshotStore.PartEntry] = {
     val admits = admitsAll(predicates)
     entries.filter(_.stats.forall(s => admits(s.columns)))
   }
@@ -271,7 +209,7 @@ object DecodeJob {
     * entry. They are not cut to [[SnapshotStore.PartStats.MaxStringBound]]
     * or `MaxDictValues` as a part's are: a group prunes on its whole
     * metadata. */
-  private def groupStats(b: BlockRow): SnapshotStore.ColumnStats =
+  private[graft] def groupStats(b: BlockRow): SnapshotStore.ColumnStats =
     SnapshotStore.ColumnStats(b.block_min, b.block_max, b.block_str_min, b.block_str_max,
       b.n_nulls.toLong, b.block_str_dict.map(_.toSeq))
 
@@ -328,7 +266,8 @@ object DecodeJob {
    * Two-level planning of the pruned-group keys over ONE pinned manifest read
    * (`entries`), on the driver, with no Spark job. Level 1 tests each part's
    * manifest stats ([[SnapshotStore.PartStats]]) against every predicate
-   * ([[partsMayMatch]]). Level 2 applies the same test ([[statsTest]]) to
+   * ([[partsMayMatch]]). Level 2 applies the same test (each leaf's
+   * [[ExactFilter.statsTest]]) to
    * each group of the surviving parts ([[groupsOf]]): a single-group part's
    * stats are its group's, any other part's groups are read from its
    * footer. Every surviving key is returned, however many: each input
@@ -337,7 +276,7 @@ object DecodeJob {
    */
   private[graft] def planPrunedKeys(settings: graft.sources.v2.HadoopSettings, root: String,
                                     entries: Seq[SnapshotStore.PartEntry],
-                                    predicates: Seq[BlockPredicate],
+                                    predicates: Seq[ExactFilter],
                                     allowed: Option[Set[String]] = None)
       : Array[(Int, Int)] = {
     requireValidPredicates(predicates, allowed)
@@ -438,7 +377,7 @@ object DecodeJob {
    * Spark residual, so results equal `decode(...).filter(...)`.
    */
   def decodeWhere(spark: SparkSession, root: String,
-                  predicates: Seq[BlockPredicate]): Dataset[WebPage] = {
+                  predicates: Seq[ExactFilter]): Dataset[WebPage] = {
     if (predicates.isEmpty) return decode(spark, root) // no filter = plain decode
     requireValidPredicates(predicates, None)
     decode(spark, root).where(predicates.map(rowCond).reduce(_ && _))
@@ -453,7 +392,7 @@ object DecodeJob {
    * BinaryType).
    */
   def decodeColumnsWhere(spark: SparkSession, root: String, wanted: Seq[String],
-                         predicates: Seq[BlockPredicate]): org.apache.spark.sql.DataFrame = {
+                         predicates: Seq[ExactFilter]): org.apache.spark.sql.DataFrame = {
     requireColumns(wanted)
     if (predicates.isEmpty) return decodeColumns(spark, root, wanted) // projection-only
     requireValidPredicates(predicates, None)

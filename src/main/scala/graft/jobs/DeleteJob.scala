@@ -31,11 +31,11 @@ object DeleteJob {
   /**
    * Delete the rows of the current snapshot matching `cond`.
    * `prunePredicates` (possibly empty) is a SUPERSET condition of `cond` in
-   * [[DecodeJob.BlockPredicate]] form: parts none of whose block metadata
+   * [[graft.sources.v2.ExactFilter]] leaves: parts none of whose block metadata
    * admits them are provably match-free and skip the rewrite entirely.
    */
   def deleteWhere(spark: SparkSession, root: String, cond: Column,
-                  prunePredicates: Seq[DecodeJob.BlockPredicate]): DeleteResult = {
+                  prunePredicates: Seq[graft.sources.v2.ExactFilter]): DeleteResult = {
     DecodeJob.requireWebtext(root) // the COW rewrite decodes/re-encodes WebPage rows
     import spark.implicits._
     // ONE pointer read: the affected parts are chosen from, and decoded at,

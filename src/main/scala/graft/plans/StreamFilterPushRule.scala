@@ -22,7 +22,8 @@ import graft.sources.v2.{FilterConversion, GraftMicroBatchStream}
  * [[StreamingDataSourceV2ScanRelation]] (PushDownPredicates has already
  * pushed filters through any projections by this point), translates the
  * conjuncts through Spark's own `DataSourceStrategy.translateFilter`, and
- * hands the resulting block predicates to the [[GraftMicroBatchStream]] —
+ * hands the resulting [[graft.sources.v2.ExactFilter]] leaves
+ * ([[graft.sources.v2.FilterConversion.toLeaves]]) to the [[GraftMicroBatchStream]] —
  * whose next `planInputPartitions` prunes the batch's delta groups through
  * the same driver-side metadata planning as the batch scan. The Filter node itself
  * is NEVER removed (pruning is block-level and inexact; the residual keeps
@@ -62,7 +63,7 @@ object StreamFilterPushRule extends Rule[LogicalPlan] with PredicateHelper {
             r.output.map(a => org.apache.spark.sql.types.StructField(a.name, a.dataType, a.nullable)))
           val preds = splitConjunctivePredicates(cond)
             .flatMap(e => Shim.translateFilter(e))
-            .flatMap(f => FilterConversion.toBlockPredicates(f, schema))
+            .flatMap(f => FilterConversion.toLeaves(f, schema)._1)
           stream.setPushedPredicates(preds)
           pushed += stream
         }

@@ -2,14 +2,27 @@ package graft.sources.v2
 
 import java.nio.charset.StandardCharsets.UTF_8
 
+import org.apache.spark.unsafe.types.UTF8String
+
 import graft.codec.StringBlockCodec
+import graft.sources.SnapshotStore.ColumnStats
 
 /**
- * A pushed filter leaf the batch scan evaluates itself, exactly, on the
- * decoded columns of each block group ([[FilterConversion.toExactFilters]]
- * claims them). Claimed leaves are not handed back to Spark, so the plan
- * holds no `Filter` node with the literal, and its whole-stage code is the
- * same for every literal.
+ * A predicate leaf over one column: the one form a pushed filter takes
+ * ([[FilterConversion.toLeaves]] converts each filter once) and the form the
+ * decode API's predicates take ([[graft.jobs.DecodeJob.StrEq]] and the other
+ * constructors there). A leaf is evaluated two ways:
+ *  - [[statsTest]]: may a part or block group whose column has these stats
+ *    hold a matching row? Planning prunes with it on the driver, on the
+ *    manifest's part stats and then on each surviving group's footer
+ *    metadata ([[graft.jobs.DecodeJob.planPrunedKeys]]).
+ *  - [[ExactFilter.select]]: exactly, on a group's decoded columns. The batch
+ *    scan evaluates the leaves of every filter it claims, so the plan holds no
+ *    `Filter` node with the literal, and its whole-stage code is the same for
+ *    every literal.
+ * The decode API turns a leaf into a Spark `Column` (`DecodeJob.rowCond`);
+ * that form is kept there because it depends on the webtext schema, whose one
+ * int-family column is the `warc_ts` timestamp.
  *
  * Every leaf is false on a null value except [[ExactFilter.NullTest]], and
  * only conjunctions of leaves are claimed, so "false" and SQL's "unknown"
@@ -19,6 +32,12 @@ import graft.codec.StringBlockCodec
  */
 sealed trait ExactFilter extends Serializable {
   def column: String
+
+  /** Can a part or block group whose column has these stats hold a row this
+    * leaf keeps? Absent stats admit (soundness). Built once per leaf, on the
+    * driver where planning runs, and never serialized: a runtime `In` can
+    * carry thousands of values, and the test runs once per part and group. */
+  @transient lazy val statsTest: ColumnStats => Boolean = ExactFilter.statsTestOf(this)
 }
 
 object ExactFilter {
@@ -77,6 +96,78 @@ object ExactFilter {
   final case class NullTest(column: String, isNull: Boolean, stringColumn: Boolean)
       extends ExactFilter {
     override def toString: String = s"$column IS ${if (isNull) "" else "NOT "}NULL"
+  }
+
+  /**
+   * Smallest string greater than EVERY string with the given prefix, under
+   * Spark's UTF8 binary ordering: the prefix with its last rankable char
+   * incremented. A char is dropped first only when its increment is not a
+   * valid non-surrogate scalar: U+FFFF (no in-char successor) and
+   * U+D7FF..U+DFFF (U+D7FF increments into the surrogate range; surrogates
+   * themselves — possibly halves of a supplementary pair — cannot be
+   * incremented byte-order-soundly). Everything else increments: UTF-8 is
+   * monotone in scalar value and encodings are never byte-prefixes of each
+   * other, so `prefix[0..i-1] + (c+1)` bounds every prefixed string. None =
+   * no finite successor (pruning then uses only the lower bound, still sound).
+   */
+  private[graft] def prefixSuccessor(prefix: String): Option[String] = {
+    @inline def noSuccessor(c: Char): Boolean =
+      c == 0xFFFF.toChar || (c >= 0xD7FF.toChar && c <= 0xDFFF.toChar)
+    var i = prefix.length - 1
+    while (i >= 0 && noSuccessor(prefix.charAt(i))) i -= 1
+    if (i < 0) None
+    else Some(prefix.substring(0, i) + (prefix.charAt(i) + 1).toChar)
+  }
+
+  private def u8(s: String): UTF8String = UTF8String.fromString(s)
+
+  /** The [[ExactFilter.statsTest]] of a leaf. Strings compare in Spark's
+    * order (UTF-8 bytes): a string leaf admits when the stats' bounds overlap
+    * the values it keeps and, when the stats carry a dictionary, a dictionary
+    * value passes. A part's stats are the rollup of its blocks' (min of the
+    * mins, max of the maxes, dict union, summed null counts), no tighter than
+    * any block's, so a part passes whenever ANY of its groups could: level 1
+    * never prunes a part holding a group level 2 keeps. Literals are converted
+    * once per leaf. */
+  private def statsTestOf(f: ExactFilter): ColumnStats => Boolean = {
+    def dictHas(s: ColumnStats)(p: UTF8String => Boolean) = s.dict.forall(_.exists(v => p(u8(v))))
+    f match {
+      case StrRange(_, lo, loStrict, hi, hiStrict) =>
+        val (l, h) = (lo.map(u8), hi.map(u8))
+        def aboveLo(v: UTF8String) = l.forall { x =>
+          val c = v.compareTo(x)
+          if (loStrict) c > 0 else c >= 0
+        }
+        def belowHi(v: UTF8String) = h.forall { x =>
+          val c = v.compareTo(x)
+          if (hiStrict) c < 0 else c <= 0
+        }
+        s => s.strMax.forall(m => aboveLo(u8(m))) && s.strMin.forall(m => belowHi(u8(m))) &&
+          dictHas(s)(v => aboveLo(v) && belowHi(v))
+      case StrIn(_, vs) if vs.isEmpty => _ => false
+      case StrIn(_, vs) =>
+        val us = vs.map(u8)
+        val (lo, hi, set) = (us.min, us.max, us.toSet)
+        s => s.strMin.forall(u8(_).compareTo(hi) <= 0) && s.strMax.forall(u8(_).compareTo(lo) >= 0) &&
+          dictHas(s)(set)
+      case StrPrefix(_, pre) =>
+        // matches s satisfy pre <= s < successor(pre): the stats must overlap
+        // that interval (only its lower end when there is no successor)
+        val x = u8(pre)
+        val succ = prefixSuccessor(pre).map(u8)
+        s => s.strMax.forall(u8(_).compareTo(x) >= 0) &&
+          succ.forall(su => s.strMin.forall(u8(_).compareTo(su) < 0)) &&
+          dictHas(s)(_.startsWith(x))
+      case IntRange(_, lo, hi) if lo > hi => _ => false
+      case IntRange(_, lo, hi) => s => s.min.forall(_ <= hi) && s.max.forall(_ >= lo)
+      // an IN prunes on its values' range
+      case f: IntIn if f.sorted.isEmpty => _ => false
+      case f: IntIn =>
+        val (lo, hi) = (f.sorted.head, f.sorted.last)
+        s => s.min.forall(_ <= hi) && s.max.forall(_ >= lo)
+      // null counts are exact; a group of nulls only is not told apart
+      case NullTest(_, isNull, _) => if (isNull) _.nNulls > 0 else _ => true
+    }
   }
 
   /** Unsigned lexicographic byte order, then length: `UTF8String.compareTo`. */

@@ -35,14 +35,17 @@ import graft.sources.SnapshotStore
  *    addresses each block, so text/html bytes never leave disk when only
  *    `url, lang` are selected. An EMPTY projection (`count(*)`) reads only
  *    the footers' row counts — no `encoded` bytes at all.
- *  - **Filters** ([[SupportsPushDownFilters]]): EqualTo/In/StringStartsWith on
- *    string columns and =/</<=/>/>= on `warc_ts` map onto the block-metadata
- *    predicates of [[DecodeJob]] (block_str_min/max/dict, block_min/max), pruning
- *    whole 64Ki-row block groups BEFORE decompression — the north-star
- *    "predicate-push onto dictionary and FoR metadata". Pruning is block-level
- *    (inexact), so the scan also evaluates, exactly, every filter it claims
- *    ([[FilterConversion.toExactFilters]]) on each surviving group's decoded
- *    columns, and returns only the others as residuals for Spark.
+ *  - **Filters** ([[SupportsPushDownFilters]]): =, IN, <, <=, >, >=, IS NULL
+ *    and IS NOT NULL on string, int-family and timestamp columns, and
+ *    StringStartsWith on string columns, each become [[ExactFilter]] leaves
+ *    ([[FilterConversion.toLeaves]]; an `And` is split into its conjuncts).
+ *    Each leaf's stats test prunes whole block groups on their metadata
+ *    (string bounds and dictionary, int bounds, null counts) BEFORE
+ *    decompression — the north-star "predicate-push onto dictionary and FoR
+ *    metadata". Pruning is block-level (inexact), so the scan also evaluates,
+ *    exactly, every filter whose conjuncts all convert exactly on each
+ *    surviving group's decoded columns, and returns only the others as
+ *    residuals for Spark.
  *
  * Planning runs on the driver (Iceberg-style): one manifest read pins the
  *  snapshot, then [[DecodeJob.planPrunedKeys]] / [[DecodeJob.planTopNKeys]]
@@ -346,7 +349,7 @@ final class GraftTable(root: String) extends Table with SupportsRead
     // AND of all top-level filters; DELETE with no condition = truncate
     val cond = cols.reduceOption(_ && _)
       .getOrElse(org.apache.spark.sql.functions.lit(true))
-    val prune = filters.toSeq.flatMap(f => FilterConversion.toBlockPredicates(f, tableSchema))
+    val prune = filters.toSeq.flatMap(f => FilterConversion.toLeaves(f, tableSchema)._1)
     graft.jobs.DeleteJob.deleteWhere(SparkSession.active, root, cond, prune)
     ()
   }
@@ -389,22 +392,30 @@ final class GraftTable(root: String) extends Table with SupportsRead
   }
 }
 
-/** Filter conversions shared by the scan builder (pruning predicates) and the
-  * DELETE path (pruning + EXACT row conditions). */
+/** Filter conversions shared by the scans (pruning leaves and the filters
+  * the batch scan claims) and the DELETE path (pruning leaves and EXACT row
+  * conditions). */
 private[graft] object FilterConversion {
 
   /** Epoch micros of a pushed-down timestamp literal (either external form),
-    * converted back the way Spark made it: a `java.sql.Timestamp` is in the
+    * converted back the way Spark made it (a `java.sql.Timestamp` is in the
     * hybrid Julian/Gregorian calendar, so a literal before 1582 is rebased to
-    * the proleptic Gregorian micros the store holds. */
-  private def tsMicros(v: Any): Option[Long] = v match {
-    case t: java.sql.Timestamp => Some(DateTimeUtils.fromJavaTimestamp(t))
-    case i: java.time.Instant => Some(DateTimeUtils.instantToMicros(i))
-    case _ => None
-  }
+    * the proleptic Gregorian micros the store holds), and whether they are
+    * exactly the micros Spark compared: always for an `Instant`; for a
+    * `java.sql.Timestamp` (Spark made it from the micros, through the hybrid
+    * calendar) only from 1900 on and when it round-trips. */
+  private def tsMicros(v: Any): Option[(Long, Boolean)] =
+    try v match {
+      case i: java.time.Instant => Some((DateTimeUtils.instantToMicros(i), true))
+      case t: java.sql.Timestamp =>
+        val us = DateTimeUtils.fromJavaTimestamp(t)
+        Some((us, !t.before(ExactTsFloor) && DateTimeUtils.toJavaTimestamp(us) == t))
+      case _ => None
+    } catch { case _: ArithmeticException => None }
 
-  private def satMinus(us: Long): Long = if (us == Long.MinValue) us else us - 1
-  private def satPlus(us: Long): Long = if (us == Long.MaxValue) us else us + 1
+  /** 1900-01-01 in the JVM's local time, the zone `java.sql.Timestamp` reads
+    * in: from here on a timestamp literal is not rebased between calendars. */
+  private val ExactTsFloor = java.sql.Timestamp.valueOf("1900-01-01 00:00:00")
 
   /** The raw long of an integral pushed-down literal. */
   private def intVal(v: Any): Option[Long] = v match {
@@ -415,63 +426,56 @@ private[graft] object FilterConversion {
     case _ => None
   }
 
-  /** 1900-01-01 in the JVM's local time, the zone `java.sql.Timestamp` reads
-    * in: from here on a timestamp literal is not rebased between calendars. */
-  private val ExactTsFloor = java.sql.Timestamp.valueOf("1900-01-01 00:00:00")
-
-  /** Epoch micros of a timestamp literal only when they are exactly the micros
-    * Spark compared: an `Instant` always maps back; a `java.sql.Timestamp`
-    * (Spark made it from the micros, through the hybrid calendar) only from
-    * 1900 on and when it round-trips. */
-  private def exactTsMicros(v: Any): Option[Long] =
-    try v match {
-      case i: java.time.Instant => Some(DateTimeUtils.instantToMicros(i))
-      case t: java.sql.Timestamp if !t.before(ExactTsFloor) =>
-        val us = DateTimeUtils.fromJavaTimestamp(t)
-        if (DateTimeUtils.toJavaTimestamp(us) == t) Some(us) else None
-      case _ => None
-    } catch { case _: ArithmeticException => None }
-
   /**
-   * The leaves the scan evaluates exactly for a filter, or None when it stays
-   * a residual for Spark: `EqualTo`, `In`, `<`, `<=`, `>`, `>=`, `IsNull`,
-   * `IsNotNull` and `StringStartsWith` on top-level string, int-family and
-   * timestamp columns, and `And` of those. `Or`, `Not`, binary columns and
-   * literals of another type are not claimed. The scan then needs no
-   * `Filter` node above it, so its plan's code does not change with the
-   * literal.
+   * The one conversion of a pushed filter over a store of the given schema:
+   * the leaves of its convertible conjuncts (`And` is split), and whether
+   * they are the whole filter, exactly. Every leaf prunes, and only an exact
+   * filter is claimed: the batch scan evaluates its leaves on each surviving
+   * group and hands it no longer back to Spark as a residual.
+   *
+   * Converted: `EqualTo`, `In`, `<`, `<=`, `>`, `>=`, `IsNull`, `IsNotNull`
+   * and `StringStartsWith` on top-level string, int-family and timestamp
+   * columns. `Or`, `Not`, binary columns and literals of another type make
+   * no leaf. A timestamp literal whose micros are not exactly the ones Spark
+   * compared ([[tsMicros]]) still prunes, but is not exact.
    */
-  def toExactFilters(f: Filter, schema: StructType): Option[Seq[ExactFilter]] = {
+  def toLeaves(f: Filter, schema: StructType): (Seq[ExactFilter], Boolean) = {
     def typeOf(c: String): Option[DataType] = schema.fields.find(_.name == c).map(_.dataType)
     def isStr(c: String) = typeOf(c).contains(StringType)
     def isInt(c: String) = typeOf(c).exists {
       case TimestampType | LongType | IntegerType | ShortType | ByteType => true
       case _ => false
     }
-    def longOf(c: String, v: Any): Option[Long] = typeOf(c) match {
-      case Some(TimestampType) => exactTsMicros(v)
-      case Some(LongType | IntegerType | ShortType | ByteType) => intVal(v)
+    def longOf(c: String, v: Any): Option[(Long, Boolean)] = typeOf(c) match {
+      case Some(TimestampType) => tsMicros(v)
+      case Some(LongType | IntegerType | ShortType | ByteType) => intVal(v).map((_, true))
       case _ => None
     }
+    def exact(leaf: ExactFilter) = (Seq(leaf), true)
     def str(c: String, lo: Option[String], loStrict: Boolean, hi: Option[String],
-        hiStrict: Boolean) = Some(Seq(ExactFilter.StrRange(c, lo, loStrict, hi, hiStrict)))
-    def int(c: String, v: Any)(range: Long => (Long, Long)) =
-      longOf(c, v).map { x => val (lo, hi) = range(x); Seq(ExactFilter.IntRange(c, lo, hi)) }
+        hiStrict: Boolean) = exact(ExactFilter.StrRange(c, lo, loStrict, hi, hiStrict))
+    def int(c: String, v: Any)(range: Long => (Long, Long)) = longOf(c, v) match {
+      case Some((x, ex)) => val (lo, hi) = range(x); (Seq(ExactFilter.IntRange(c, lo, hi)), ex)
+      case None => (Nil, false)
+    }
     f match {
       case sources.And(l, r) =>
-        for { a <- toExactFilters(l, schema); b <- toExactFilters(r, schema) } yield a ++ b
+        val ((a, ea), (b, eb)) = (toLeaves(l, schema), toLeaves(r, schema))
+        (a ++ b, ea && eb)
       case sources.EqualTo(c, v: String) if isStr(c) => str(c, Some(v), false, Some(v), false)
       case sources.GreaterThan(c, v: String) if isStr(c) => str(c, Some(v), true, None, false)
       case sources.GreaterThanOrEqual(c, v: String) if isStr(c) => str(c, Some(v), false, None, false)
       case sources.LessThan(c, v: String) if isStr(c) => str(c, None, false, Some(v), true)
       case sources.LessThanOrEqual(c, v: String) if isStr(c) => str(c, None, false, Some(v), false)
-      case sources.StringStartsWith(c, p) if isStr(c) => Some(Seq(ExactFilter.StrPrefix(c, p)))
+      case sources.StringStartsWith(c, p) if isStr(c) => exact(ExactFilter.StrPrefix(c, p))
       // a null in the list matches no row; filtering drops "unknown" as false
       case sources.In(c, vs) if isStr(c) && vs.forall(v => v == null || v.isInstanceOf[String]) =>
-        Some(Seq(ExactFilter.StrIn(c, vs.toSeq.collect { case s: String => s }.distinct)))
+        exact(ExactFilter.StrIn(c, vs.toSeq.collect { case s: String => s }.distinct))
       case sources.In(c, vs) if isInt(c) =>
         val ls = vs.toSeq.filter(_ != null).map(longOf(c, _))
-        if (ls.forall(_.isDefined)) Some(Seq(ExactFilter.IntIn(c, ls.flatten.distinct))) else None
+        if (ls.forall(_.isDefined))
+          (Seq(ExactFilter.IntIn(c, ls.flatten.map(_._1).distinct)), ls.forall(_.get._2))
+        else (Nil, false)
       case sources.EqualTo(c, v) => int(c, v)(x => (x, x))
       // an empty range (lo > hi) at the Long extremes matches nothing
       case sources.GreaterThan(c, v) =>
@@ -481,60 +485,17 @@ private[graft] object FilterConversion {
         int(c, v)(x => if (x == Long.MinValue) (1L, 0L) else (Long.MinValue, x - 1))
       case sources.LessThanOrEqual(c, v) => int(c, v)(x => (Long.MinValue, x))
       case sources.IsNull(c) if isStr(c) || isInt(c) =>
-        Some(Seq(ExactFilter.NullTest(c, isNull = true, isStr(c))))
+        exact(ExactFilter.NullTest(c, isNull = true, isStr(c)))
       case sources.IsNotNull(c) if isStr(c) || isInt(c) =>
-        Some(Seq(ExactFilter.NullTest(c, isNull = false, isStr(c))))
-      case _ => None
+        exact(ExactFilter.NullTest(c, isNull = false, isStr(c)))
+      case _ => (Nil, false)
     }
   }
 
-  /** Block predicates a filter implies over a store of the given SCHEMA
-    * (conjuncts; empty = not convertible). String columns prune via string
-    * bounds/dicts; timestamp columns via epoch-micros block min/max; the
-    * integer family via raw block min/max. Soundness: each returned predicate
-    * is a SUPERSET condition of the filter; the filter itself is evaluated
-    * exactly on the decoded rows, by the scan ([[toExactFilters]]) or by
-    * Spark as a residual. */
-  def toBlockPredicates(f: Filter,
-      schema: StructType = GraftDataSource.PageSchema): Seq[DecodeJob.BlockPredicate] = {
-    val strCols = schema.fields.iterator
-      .filter(_.dataType == StringType).map(_.name).toSet
-    def boundsOf(c: String, v: Any): Option[Long] =
-      schema.fields.find(_.name == c).map(_.dataType) match {
-        case Some(TimestampType) => tsMicros(v)
-        case Some(LongType | IntegerType | ShortType | ByteType) => intVal(v)
-        case _ => None
-      }
-    f match {
-      case sources.And(l, r) => toBlockPredicates(l, schema) ++ toBlockPredicates(r, schema)
-      case sources.EqualTo(c, v: String) if strCols(c) => Seq(DecodeJob.StrEq(c, v))
-      case sources.In(c, vs) if strCols(c) && vs.nonEmpty && vs.forall(_.isInstanceOf[String]) =>
-        Seq(DecodeJob.StrIn(c, vs.toSeq.map(_.asInstanceOf[String])))
-      case sources.StringStartsWith(c, p) if strCols(c) => Seq(DecodeJob.StrPrefix(c, p))
-      // open-ended ranges (a finite stand-in top bound would prune unsoundly —
-      // strings sort above any finite string); strict </> push the closed
-      // superset range, the residual filter restores strictness
-      case sources.GreaterThanOrEqual(c, v: String) if strCols(c) =>
-        Seq(DecodeJob.StrRange(c, Some(v), None))
-      case sources.GreaterThan(c, v: String) if strCols(c) =>
-        Seq(DecodeJob.StrRange(c, Some(v), None))
-      case sources.LessThanOrEqual(c, v: String) if strCols(c) =>
-        Seq(DecodeJob.StrRange(c, None, Some(v)))
-      case sources.LessThan(c, v: String) if strCols(c) =>
-        Seq(DecodeJob.StrRange(c, None, Some(v)))
-      case sources.EqualTo(c, v) =>
-        boundsOf(c, v).map(x => DecodeJob.IntRange(c, x, x)).toSeq
-      case sources.GreaterThan(c, v) =>
-        boundsOf(c, v).map(x => DecodeJob.IntRange(c, satPlus(x), Long.MaxValue)).toSeq
-      case sources.GreaterThanOrEqual(c, v) =>
-        boundsOf(c, v).map(x => DecodeJob.IntRange(c, x, Long.MaxValue)).toSeq
-      case sources.LessThan(c, v) =>
-        boundsOf(c, v).map(x => DecodeJob.IntRange(c, Long.MinValue, satMinus(x))).toSeq
-      case sources.LessThanOrEqual(c, v) =>
-        boundsOf(c, v).map(x => DecodeJob.IntRange(c, Long.MinValue, x)).toSeq
-      case _ => Seq.empty
-    }
-  }
+  /** The leaves of a filter the batch scan claims ([[toLeaves]]), or None
+    * when it stays a residual for Spark. */
+  def toExactFilters(f: Filter, schema: StructType): Option[Seq[ExactFilter]] =
+    Some(toLeaves(f, schema)).collect { case (leaves, true) => leaves }
 
   /** The part ids a filter on the `_part_id` metadata column admits; None
     * for any other filter (or one whose values are not all ints). */
@@ -587,7 +548,7 @@ final class GraftScanBuilder(root: String, snapshotId: Option[Long],
 
   private var requiredSchema: StructType = tableSchema
   private var pushed: Array[Filter] = Array.empty
-  private var predicates: Seq[DecodeJob.BlockPredicate] = Seq.empty
+  private var predicates: Seq[ExactFilter] = Seq.empty
   private var exact: Seq[ExactFilter] = Seq.empty
   private var sawFilters = false
   private var pushedLimit: Option[Int] = None
@@ -634,20 +595,19 @@ final class GraftScanBuilder(root: String, snapshotId: Option[Long],
   override def isPartiallyPushed: Boolean = true
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val converted = filters.map(f => f -> FilterConversion.toBlockPredicates(f, tableSchema))
-    val claimed = filters.map(f => f -> FilterConversion.toExactFilters(f, tableSchema))
+    val converted = filters.map(f => (f, FilterConversion.toLeaves(f, tableSchema)))
     // `_part_id` filters restrict the scan to those parts' manifest entries
     val partFilters = filters.flatMap(f => FilterConversion.partIdsOf(f).map(f -> _))
     partIds = partFilters.map(_._2).reduceOption(_ intersect _)
-    pushed = (converted.collect { case (f, ps) if ps.nonEmpty => f } ++
-      claimed.collect { case (f, Some(_)) => f } ++ partFilters.map(_._1)).distinct
-    predicates = converted.flatMap(_._2).toSeq
-    exact = claimed.iterator.flatMap(_._2).flatten.toSeq
+    pushed = (converted.collect { case (f, (ls, _)) if ls.nonEmpty => f } ++
+      partFilters.map(_._1)).distinct
+    predicates = converted.flatMap(_._2._1).toSeq
+    exact = converted.collect { case (_, (ls, true)) => ls }.flatten.toSeq
     sawFilters = filters.nonEmpty
     // block pruning is inexact (a surviving group still holds non-matching
     // rows): the scan evaluates the claimed filters exactly on each group's
     // decoded columns, and only the others go back to Spark as residuals
-    claimed.collect { case (f, None) => f }
+    converted.collect { case (f, (_, false)) => f }
   }
 
   override def pushedFilters(): Array[Filter] = pushed
@@ -658,8 +618,7 @@ final class GraftScanBuilder(root: String, snapshotId: Option[Long],
 
   /** Convertible iff NOTHING was filtered (the manifest describes the
     * unfiltered table — a pushed predicate would make its counts wrong, and
-    * Spark offers aggregates over scans whose filters were all claimed; an
-    * `IsNotNull` makes no block predicate),
+    * Spark offers aggregates over scans whose filters were all claimed),
     * there is no grouping, and every aggregate is count(*) / non-distinct
     * count(col) / min(col) / max(col) of a metadata-bounded column / sum(col)
     * of an int column: the int family (incl. timestamps) carries exact part
@@ -874,13 +833,13 @@ object GraftAggReaderFactory extends PartitionReaderFactory {
  * plan from their footers. Planning makes no
  * broadcast: each input partition carries the keys of its own files' parts,
  * and the reader factory carries the session's programmatic Hadoop settings
- * ([[HadoopSettings]]) and the filters the scan claimed
- * ([[FilterConversion.toExactFilters]]), which the readers evaluate on each
+ * ([[HadoopSettings]]) and the leaves of the filters the scan claimed
+ * ([[FilterConversion.toLeaves]]), which the readers evaluate on each
  * surviving group.
  */
 final class GraftScan(root: String, snapshotId: Option[Long],
                       requiredSchema: StructType,
-                      initialPredicates: Seq[DecodeJob.BlockPredicate],
+                      initialPredicates: Seq[ExactFilter],
                       pushedLimit: Option[Int] = None,
                       pushedTopN: Option[GraftDataSource.TopN] = None,
                       tableSchema: StructType = GraftDataSource.PageSchema,
@@ -903,7 +862,7 @@ final class GraftScan(root: String, snapshotId: Option[Long],
 
   /** Compile-time predicates + any runtime (DPP-style) In-filters Spark
     * delivers just before execution. */
-  @volatile private var predicates: Seq[DecodeJob.BlockPredicate] = initialPredicates
+  @volatile private var predicates: Seq[ExactFilter] = initialPredicates
 
   /** Runtime-filter value-list ceiling: a broadcast join key set larger than
     * this prunes little per value while every part and group of the plan
@@ -924,15 +883,12 @@ final class GraftScan(root: String, snapshotId: Option[Long],
     else Array.empty
 
   override def filter(filters: Array[Filter]): Unit = {
-    val extra = filters.toSeq.flatMap {
-      case sources.In(c, vs)
-          if c == sortKeyName && vs.nonEmpty && vs.length <= MaxRuntimeInValues &&
-            vs.forall(_.isInstanceOf[String]) =>
-        Seq(DecodeJob.StrIn(c, vs.toSeq.map(_.asInstanceOf[String])))
-      case sources.EqualTo(c, v: String) if c == sortKeyName =>
-        Seq(DecodeJob.StrEq(c, v))
-      case _ => Seq.empty // unconvertible runtime filter: scan stays a superset
-    }
+    val extra = filters.toSeq.filter {
+      case sources.In(c, vs) => c == sortKeyName && vs.nonEmpty && vs.length <= MaxRuntimeInValues
+      case sources.EqualTo(c, _) => c == sortKeyName
+      case _ => false
+    }.flatMap(f => FilterConversion.toLeaves(f, tableSchema)._1)
+    // an unconvertible runtime filter adds nothing: the scan stays a superset
     if (extra.nonEmpty) predicates = predicates ++ extra
   }
 
@@ -967,7 +923,7 @@ final class GraftScan(root: String, snapshotId: Option[Long],
   // whole plan, so the surviving parts' footers are read once. Changed
   // predicates (a runtime In landed) re-plan ----
   private val planLock = new Object
-  private var planned: (Seq[DecodeJob.BlockPredicate],
+  private var planned: (Seq[ExactFilter],
     (Array[InputPartition], GraftDataSource.PlanStats)) = null
 
   /** The session's Hadoop settings, read once per scan: planning reads
@@ -1002,7 +958,7 @@ final class GraftScan(root: String, snapshotId: Option[Long],
     val lim = pushedLimit.map(n => s" PushedLimit: $n").getOrElse("")
     val topn = pushedTopN.map(t => s" PushedTopN: [$t] (partial)").getOrElse("")
     val parts = partIds.map(p => s" PushedPartIds: ${p.size}").getOrElse("")
-    s"GraftStore root=$root$snap$inc columns=[$cols] PushedBlockPredicates: [$preds] " +
+    s"GraftStore root=$root$snap$inc columns=[$cols] PruningPredicates: [$preds] " +
       s"ExactFilters: [${exactFilters.mkString(", ")}]$lim$topn$parts"
   }
 
@@ -1042,7 +998,7 @@ final class GraftScan(root: String, snapshotId: Option[Long],
     partitions
   }
 
-  private def plan(preds: Seq[DecodeJob.BlockPredicate],
+  private def plan(preds: Seq[ExactFilter],
       entries: Seq[SnapshotStore.PartEntry])
       : (Array[InputPartition], GraftDataSource.PlanStats) = {
     val spark = SparkSession.active

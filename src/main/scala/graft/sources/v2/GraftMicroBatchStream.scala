@@ -62,19 +62,19 @@ object GraftOffset {
 final class GraftMicroBatchStream(root: String,
     readSchema: org.apache.spark.sql.types.StructType,
     refColumn: String,
-    initialPredicates: Seq[graft.jobs.DecodeJob.BlockPredicate] = Seq.empty)
+    initialPredicates: Seq[ExactFilter] = Seq.empty)
     extends MicroBatchStream with SupportsTriggerAvailableNow {
 
-  /** Pushed block predicates for per-batch group pruning. Spark's
+  /** Pushed predicate leaves for per-batch group pruning. Spark's
     * MicroBatchExecution performs NO pushdown when building stream scans, so
     * these arrive from [[graft.plans.StreamFilterPushRule]] during each
     * micro-batch's optimization (always before that batch's
     * planInputPartitions; the query's filters are static, so every batch sets
     * the same value). Pruning-only — the plan keeps the Filter residual. */
-  @volatile private var predicates: Seq[graft.jobs.DecodeJob.BlockPredicate] =
+  @volatile private var predicates: Seq[ExactFilter] =
     initialPredicates
 
-  private[graft] def setPushedPredicates(ps: Seq[graft.jobs.DecodeJob.BlockPredicate]): Unit =
+  private[graft] def setPushedPredicates(ps: Seq[ExactFilter]): Unit =
     predicates = ps
 
   // pinned at prepareForTriggerAvailableNow: the AvailableNow run drains up to
@@ -202,7 +202,7 @@ final class GraftMicroBatchStream(root: String,
 
   // per-range plan memo (see planInputPartitions)
   private val planLock = new Object
-  private var lastRange: (Long, Boolean, Long, Seq[graft.jobs.DecodeJob.BlockPredicate]) = null
+  private var lastRange: (Long, Boolean, Long, Seq[ExactFilter]) = null
   private var lastPlan: Array[InputPartition] = null
 
   // the session's Hadoop settings, read once for the life of the stream and

@@ -107,11 +107,12 @@ final class GraftCowScanBuilder(root: String, op: GraftRowLevelOperation)
 
   private var requiredSchema: StructType = GraftDataSource.PageSchema
   private var pushed: Array[Filter] = Array.empty
-  private var predicates: Seq[DecodeJob.BlockPredicate] = Seq.empty
+  private var predicates: Seq[ExactFilter] = Seq.empty
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val converted = filters.map(f => f -> FilterConversion.toBlockPredicates(f))
-    pushed = converted.collect { case (f, ps) if ps.nonEmpty => f }
+    val converted =
+      filters.map(f => f -> FilterConversion.toLeaves(f, GraftDataSource.PageSchema)._1)
+    pushed = converted.collect { case (f, ls) if ls.nonEmpty => f }
     predicates = converted.flatMap(_._2).toSeq
     filters
   }
@@ -135,7 +136,7 @@ final class GraftCowScanBuilder(root: String, op: GraftRowLevelOperation)
   * `length(text) % 3` predicate — from rewriting every part: only parts that
   * actually HOLD a matching row are read, rewritten, and replaced. */
 final class GraftCowScan(root: String, op: GraftRowLevelOperation,
-    requiredSchema: StructType, predicates: Seq[DecodeJob.BlockPredicate])
+    requiredSchema: StructType, predicates: Seq[ExactFilter])
     extends Scan with Batch
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
 

@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.GraftFunctions
 import graft.sources.{SnapshotStore, Webtext}
+import graft.sources.v2.ExactFilter
 
 /**
  * Spark end-to-end coverage (SURVEY.md §5.2 item 4): encode job → snapshot store →
@@ -387,7 +388,9 @@ class PipelineSpec extends AnyFunSuite {
     // the predicate reaches the scan, which reads only the surviving groups
     // and stays shuffle-free
     val plan = hit.queryExecution.executedPlan.toString()
-    assert(plan.contains("PushedBlockPredicates: [StrEq(url,") && !plan.contains("Exchange"),
+    val pruning = "PruningPredicates: \\[(.*?)\\] ExactFilters".r.findFirstMatchIn(plan)
+    assert(pruning.exists(m => s", ${m.group(1)}, ".contains(s", url = '$someUrl', ")) &&
+      !plan.contains("Exchange"),
       s"pruned decode must push its predicate to the scan and not shuffle:\n$plan")
     val rows = hit.collect()
     assert(rows.length == 1 && rows.head.url == someUrl)
@@ -447,7 +450,7 @@ class PipelineSpec extends AnyFunSuite {
       .as[(Long, Long)].head()
     val rnd = new scala.util.Random(11)
     for (_ <- 0 until 8) {
-      val preds = scala.collection.mutable.ArrayBuffer[DecodeJob.BlockPredicate]()
+      val preds = scala.collection.mutable.ArrayBuffer[ExactFilter]()
       if (rnd.nextBoolean()) preds += DecodeJob.StrEq("lang", langs(rnd.nextInt(langs.length)))
       if (rnd.nextBoolean()) {
         val a = tsBounds._1 + (rnd.nextDouble() * (tsBounds._2 - tsBounds._1)).toLong
@@ -460,11 +463,12 @@ class PipelineSpec extends AnyFunSuite {
         .select($"url").as[String].collect().sorted.toSeq
       val want = preds.foldLeft(full) { (df, p) =>
         df.where(p match {
-          case DecodeJob.StrEq(c, v) => col(c) === v
-          case DecodeJob.StrIn(c, vs) => col(c).isin(vs: _*)
-          case DecodeJob.StrPrefix(c, pre) => col(c).startsWith(pre)
-          case DecodeJob.StrRange(c, lo, hi) => col(c).between(lo, hi)
-          case DecodeJob.TsRange(lo, hi) => unix_micros(col("warc_ts")).between(lo, hi)
+          case ExactFilter.StrRange(c, Some(v), false, Some(w), false) if v == w => col(c) === v
+          case ExactFilter.StrIn(c, vs) => col(c).isin(vs: _*)
+          case ExactFilter.StrPrefix(c, pre) => col(c).startsWith(pre)
+          case ExactFilter.StrRange(c, Some(lo), false, Some(hi), false) => col(c).between(lo, hi)
+          case ExactFilter.IntRange("warc_ts", lo, hi) => unix_micros(col("warc_ts")).between(lo, hi)
+          case p => throw new IllegalArgumentException(s"no reference form for $p")
         })
       }.select($"url").as[String].collect().sorted.toSeq
       assert(got == want, s"decodeWhere mismatch for $preds: got ${got.size}, want ${want.size}")
@@ -699,29 +703,29 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("prefixSuccessor bounds every prefixed string and nothing less") {
-    assert(DecodeJob.prefixSuccessor("abc").contains("abd"))
-    assert(DecodeJob.prefixSuccessor("a\u00ff").contains("a\u0100"))
+    assert(ExactFilter.prefixSuccessor("abc").contains("abd"))
+    assert(ExactFilter.prefixSuccessor("a\u00ff").contains("a\u0100"))
     // only genuinely unrankable trailing chars are dropped before
     // incrementing: U+FFFF and U+D7FF..U+DFFF (increment would land in or
     // start from the surrogate range)
-    assert(DecodeJob.prefixSuccessor("ab\uffff").contains("ac"))
-    assert(DecodeJob.prefixSuccessor("\uffff\uffff").isEmpty)
-    assert(DecodeJob.prefixSuccessor("").isEmpty)
-    assert(DecodeJob.prefixSuccessor("a\ud7fe").contains("a\ud7ff"),
+    assert(ExactFilter.prefixSuccessor("ab\uffff").contains("ac"))
+    assert(ExactFilter.prefixSuccessor("\uffff\uffff").isEmpty)
+    assert(ExactFilter.prefixSuccessor("").isEmpty)
+    assert(ExactFilter.prefixSuccessor("a\ud7fe").contains("a\ud7ff"),
       "Hangul-range chars below U+D7FF must increment, not drop")
-    assert(DecodeJob.prefixSuccessor("a\ud7ff").contains("b"),
+    assert(ExactFilter.prefixSuccessor("a\ud7ff").contains("b"),
       "U+D7FF increments into surrogates: drop it, rank the previous char")
-    assert(DecodeJob.prefixSuccessor("a\ue000").contains("a\ue001"),
+    assert(ExactFilter.prefixSuccessor("a\ue000").contains("a\ue001"),
       "private-use chars above the surrogates must increment")
-    assert(DecodeJob.prefixSuccessor("a\ufffe").contains("a\uffff"))
+    assert(ExactFilter.prefixSuccessor("a\ufffe").contains("a\uffff"))
     // a supplementary char (surrogate pair) drops whole, then ranks 'a'
-    assert(DecodeJob.prefixSuccessor("a" + new String(Character.toChars(0x10400)))
+    assert(ExactFilter.prefixSuccessor("a" + new String(Character.toChars(0x10400)))
       .contains("b"))
     val rnd = new scala.util.Random(7)
     for (_ <- 0 until 500) {
       val p = rnd.alphanumeric.take(1 + rnd.nextInt(8)).mkString
       val s = p + rnd.alphanumeric.take(rnd.nextInt(6)).mkString
-      val succ = DecodeJob.prefixSuccessor(p).get
+      val succ = ExactFilter.prefixSuccessor(p).get
       assert(p <= s && s < succ, s"successor must bound '$s' for prefix '$p'")
     }
   }

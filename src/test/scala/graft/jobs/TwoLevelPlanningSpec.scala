@@ -12,6 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{SnapshotStore, WebPage}
 import graft.sources.SnapshotStore.{ColumnStats, PartEntry, PartStats}
+import graft.sources.v2.ExactFilter
 
 /**
  * Per-part manifest stats and the two-level planning built on them:
@@ -157,7 +158,7 @@ class TwoLevelPlanningSpec extends AnyFunSuite {
     appended <- Gen.listOfN(m, pageGen)
   } yield StoreSpec(batch, parts, blockBytes, appended)
 
-  private def predicateGen(s: StoreSpec): Gen[DecodeJob.BlockPredicate] = {
+  private def predicateGen(s: StoreSpec): Gen[ExactFilter] = {
     val pages = s.batch ++ s.appended
     def valueOf(c: String): Gen[String] = {
       val seen = pages.flatMap(p => Option(c match {
@@ -181,7 +182,16 @@ class TwoLevelPlanningSpec extends AnyFunSuite {
         yield DecodeJob.StrPrefix(c, v.take(k)),
       for (c <- strCol; lo <- Gen.option(valueOf(c)); hi <- Gen.option(valueOf(c)))
         yield DecodeJob.StrRange(c, lo, hi),
-      for (a <- tsGen; b <- tsGen) yield DecodeJob.TsRange(math.min(a, b), math.max(a, b)))
+      for (a <- tsGen; b <- tsGen) yield DecodeJob.TsRange(math.min(a, b), math.max(a, b)),
+      for (c <- strCol; lo <- Gen.option(valueOf(c)); ls <- Gen.oneOf(false, true);
+           hi <- Gen.option(valueOf(c)); hs <- Gen.oneOf(false, true))
+        yield ExactFilter.StrRange(c, lo, ls, hi, hs),
+      strCol.map(ExactFilter.StrIn(_, Nil)),
+      for (vs <- Gen.choose(1, 3).flatMap(Gen.listOfN(_, tsGen)))
+        yield ExactFilter.IntIn("warc_ts", vs),
+      Gen.const(ExactFilter.IntIn("warc_ts", Nil)),
+      for (c <- Gen.oneOf("url", "lang", "text", "warc_ts"); isNull <- Gen.oneOf(false, true))
+        yield ExactFilter.NullTest(c, isNull, c != "warc_ts"))
   }
 
   private def writeStore(s: StoreSpec): String = {
@@ -197,25 +207,26 @@ class TwoLevelPlanningSpec extends AnyFunSuite {
   /** The block-metadata test as a Spark `Column` over [[DecodeJob.blocks]]
     * rows: a form written apart from the planner's, for the property to check
     * it against. Null metadata admits. */
-  private def metaCond(p: DecodeJob.BlockPredicate): Column = p match {
-    case DecodeJob.StrEq(_, v) =>
+  private def metaCond(p: ExactFilter): Column = p match {
+    case ExactFilter.StrRange(_, Some(v), false, Some(w), false) if v == w =>
       (col("block_str_min").isNull || col("block_str_min") <= v) &&
       (col("block_str_max").isNull || col("block_str_max") >= v) &&
       (col("block_str_dict").isNull || array_contains(col("block_str_dict"), v))
-    case DecodeJob.StrIn(_, vs) =>
+    case ExactFilter.StrIn(_, Seq()) => lit(false)
+    case ExactFilter.StrIn(_, vs) =>
       val arr = typedLit(vs)
       (col("block_str_min").isNull || col("block_str_min") <= array_max(arr)) &&
       (col("block_str_max").isNull || col("block_str_max") >= array_min(arr)) &&
       (col("block_str_dict").isNull || arrays_overlap(col("block_str_dict"), arr))
-    case DecodeJob.StrPrefix(_, p) =>
+    case ExactFilter.StrPrefix(_, p) =>
       // matches s satisfy p <= s < successor(p); a block overlaps that interval
       // iff max >= p and min < successor(p) (when the successor exists)
       (col("block_str_max").isNull || col("block_str_max") >= p) &&
-      DecodeJob.prefixSuccessor(p).map(succ =>
+      ExactFilter.prefixSuccessor(p).map(succ =>
         col("block_str_min").isNull || col("block_str_min") < succ).getOrElse(lit(true)) &&
       (col("block_str_dict").isNull ||
         exists(col("block_str_dict"), v => v.startsWith(p)))
-    case DecodeJob.StrRange(_, lo, hi) =>
+    case ExactFilter.StrRange(_, lo, false, hi, false) =>
       hi.map(h => col("block_str_min").isNull || col("block_str_min") <= h)
         .getOrElse(lit(true)) &&
       lo.map(l => col("block_str_max").isNull || col("block_str_max") >= l)
@@ -223,18 +234,31 @@ class TwoLevelPlanningSpec extends AnyFunSuite {
       (col("block_str_dict").isNull ||
         exists(col("block_str_dict"), v =>
           lo.map(v >= _).getOrElse(lit(true)) && hi.map(v <= _).getOrElse(lit(true))))
-    case DecodeJob.TsRange(lo, hi) =>
+    // a strict bound keeps only values past it: the block's far bound must be too
+    case ExactFilter.StrRange(_, lo, loStrict, hi, hiStrict) =>
+      def above(x: Column, l: String) = if (loStrict) x > l else x >= l
+      def below(x: Column, h: String) = if (hiStrict) x < h else x <= h
+      hi.map(h => col("block_str_min").isNull || below(col("block_str_min"), h))
+        .getOrElse(lit(true)) &&
+      lo.map(l => col("block_str_max").isNull || above(col("block_str_max"), l))
+        .getOrElse(lit(true)) &&
+      (col("block_str_dict").isNull ||
+        exists(col("block_str_dict"), v =>
+          lo.map(above(v, _)).getOrElse(lit(true)) && hi.map(below(v, _)).getOrElse(lit(true))))
+    case ExactFilter.IntRange(_, lo, hi) =>
       (col("block_min").isNull || col("block_min") <= hi) &&
       (col("block_max").isNull || col("block_max") >= lo)
-    case DecodeJob.IntRange(_, lo, hi) =>
-      (col("block_min").isNull || col("block_min") <= hi) &&
-      (col("block_max").isNull || col("block_max") >= lo)
+    case ExactFilter.IntIn(_, Seq()) => lit(false)
+    case ExactFilter.IntIn(_, vs) =>
+      (col("block_min").isNull || col("block_min") <= vs.max) &&
+      (col("block_max").isNull || col("block_max") >= vs.min)
+    case ExactFilter.NullTest(_, isNull, _) => if (isNull) col("n_nulls") > 0 else lit(true)
   }
 
   /** The group keys whose block metadata admits every predicate, by
     * [[metaCond]] over the store's blocks: one key set per predicate,
     * intersected. */
-  private def blockKeys(root: String, preds: Seq[DecodeJob.BlockPredicate]): Set[(Int, Int)] = {
+  private def blockKeys(root: String, preds: Seq[ExactFilter]): Set[(Int, Int)] = {
     import spark.implicits._
     val blocks = DecodeJob.blocks(spark, root)
     preds.map(p => blocks.where(col("column") === p.column && metaCond(p))
@@ -244,17 +268,25 @@ class TwoLevelPlanningSpec extends AnyFunSuite {
 
   /** Does a decoded row (url, text, lang, `ts` in epoch micros) match `p`?
     * Strings compare as Spark compares them, by UTF-8 bytes. */
-  private def rowMatches(p: DecodeJob.BlockPredicate, r: Row): Boolean = {
+  private def rowMatches(p: ExactFilter, r: Row): Boolean = {
     def u(s: String) = UTF8String.fromString(s)
     def str(c: String) = Option(r.getAs[String](c)).map(u)
+    def ts = Option(r.getAs[java.lang.Long]("ts")).map(_.longValue)
     p match {
-      case DecodeJob.StrEq(c, v) => str(c).contains(u(v))
-      case DecodeJob.StrIn(c, vs) => str(c).exists(x => vs.exists(u(_) == x))
-      case DecodeJob.StrPrefix(c, pre) => str(c).exists(_.startsWith(u(pre)))
-      case DecodeJob.StrRange(c, lo, hi) => str(c).exists(x =>
+      case ExactFilter.StrRange(c, Some(v), false, Some(w), false) if v == w =>
+        str(c).contains(u(v))
+      case ExactFilter.StrIn(c, vs) => str(c).exists(x => vs.exists(u(_) == x))
+      case ExactFilter.StrPrefix(c, pre) => str(c).exists(_.startsWith(u(pre)))
+      case ExactFilter.StrRange(c, lo, false, hi, false) => str(c).exists(x =>
         lo.forall(l => x.compareTo(u(l)) >= 0) && hi.forall(h => x.compareTo(u(h)) <= 0))
-      case DecodeJob.TsRange(lo, hi) =>
-        Option(r.getAs[java.lang.Long]("ts")).exists(t => t >= lo && t <= hi)
+      case ExactFilter.StrRange(c, lo, loStrict, hi, hiStrict) => str(c).exists { x =>
+        lo.forall(l => if (loStrict) x.compareTo(u(l)) > 0 else x.compareTo(u(l)) >= 0) &&
+        hi.forall(h => if (hiStrict) x.compareTo(u(h)) < 0 else x.compareTo(u(h)) <= 0)
+      }
+      case ExactFilter.IntRange("warc_ts", lo, hi) => ts.exists(t => t >= lo && t <= hi)
+      case ExactFilter.IntIn("warc_ts", vs) => ts.exists(vs.contains)
+      case ExactFilter.NullTest("warc_ts", isNull, _) => ts.isEmpty == isNull
+      case ExactFilter.NullTest(c, isNull, _) => str(c).isEmpty == isNull
       case p => throw new IllegalArgumentException(s"no row form for $p")
     }
   }

@@ -15,7 +15,8 @@ import graft.sources.{WebPage, Webtext}
 
 /**
  * The filters the batch scan claims ([[FilterConversion.toExactFilters]]) and
- * evaluates itself on each group's decoded columns:
+ * evaluates itself on each group's decoded columns, and the stats test each
+ * leaf prunes with:
  *  - property: random conjunctions of claimed and residual leaves give the
  *    rows the same SQL gives over a parquet copy of the pages, through the
  *    row reader, the columnar reader, `count(*)`, `LIMIT n` and
@@ -23,8 +24,10 @@ import graft.sources.{WebPage, Webtext}
  *  - a query that differs from the last only in its literals compiles no
  *    code, and its plan holds no `FilterExec`;
  *  - metadata answers (manifest aggregates, [[graft.plans.GroupedAggMetadataRule]])
- *    stay exact beside claimed filters.
- * The property runs with a fixed seed.
+ *    stay exact beside claimed filters;
+ *  - property: whenever a leaf keeps a row of a block, its stats test admits
+ *    the block's group stats and its part's stats.
+ * The properties run with fixed seeds.
  */
 class ExactFilterSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   import ExactFilterSpec._
@@ -318,6 +321,81 @@ class ExactFilterSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
+  // ---------------- stats soundness ----------------
+
+  /** UTF-8 edge characters: a high single byte, U+FFFF, a surrogate pair,
+    * NUL, DEL and CJK. */
+  private val edgeChars = Seq("a", "b", "ÿ", "\uffff", "😀", "\u0000", "\u007f", "中")
+  private val edgeString: Gen[String] =
+    Gen.choose(0, 3).flatMap(Gen.listOfN(_, Gen.oneOf(edgeChars))).map(_.mkString)
+  private val edgeLong: Gen[Long] = Gen.frequency(
+    2 -> Gen.oneOf(Long.MinValue, Long.MinValue + 1, -1L, 0L, 1L, Long.MaxValue - 1, Long.MaxValue),
+    1 -> Gen.choose(-3L, 3L))
+
+  private val statsSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("s", org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField("i", org.apache.spark.sql.types.LongType)))
+
+  /** A pushed filter on `s` or `i` of every shape the converter makes a leaf
+    * of, with literals drawn like the values. */
+  private def filterGen(string: Boolean): Gen[org.apache.spark.sql.sources.Filter] = {
+    import org.apache.spark.sql.sources._
+    val c = if (string) "s" else "i"
+    val v: Gen[Any] = if (string) edgeString else edgeLong
+    val shapes: Seq[Gen[Filter]] = Seq(
+      v.map(EqualTo(c, _)), v.map(GreaterThan(c, _)), v.map(GreaterThanOrEqual(c, _)),
+      v.map(LessThan(c, _)), v.map(LessThanOrEqual(c, _)),
+      // IN lists: empty, or holding a NULL
+      for (k <- Gen.choose(0, 3); vs <- Gen.listOfN(k, v); nul <- Gen.oneOf(false, true))
+        yield In(c, (if (nul) vs :+ null else vs).toArray),
+      Gen.const(IsNull(c)), Gen.const(IsNotNull(c))) ++
+      (if (string) Seq(edgeString.map(StringStartsWith(c, _))) else Nil)
+    Gen.oneOf(shapes).flatMap(identity)
+  }
+
+  test("property: a leaf's stats test admits every group and part holding a row it keeps") {
+    import graft.jobs.{BlockRow, EncodeJob, PartRollup}
+    val caseGen = for {
+      string <- Gen.oneOf(false, true)
+      blocks <- Gen.choose(1, 3).flatMap(Gen.listOfN(_, Gen.choose(1, 8).flatMap(Gen.listOfN(_,
+        Gen.frequency(4 -> (if (string) edgeString else edgeLong).map(Some(_)),
+          1 -> Gen.const(None))))))
+      f <- filterGen(string)
+    } yield (string, blocks, f)
+    val params = Test.Parameters.default
+      .withMinSuccessfulTests(400)
+      .withInitialSeed(Seed(20261021L))
+      .withWorkers(1)
+    val res = Test.check(params, Prop.forAllNoShrink(caseGen) { case (string, blocks, f) =>
+      val c = if (string) "s" else "i"
+      val rows: Seq[BlockRow] = blocks.zipWithIndex.map { case (vs, seq) =>
+        if (string) {
+          val buf = new java.util.ArrayList[Array[Byte]]()
+          vs.foreach(v => buf.add(v.map(_.asInstanceOf[String].getBytes("UTF-8")).orNull))
+          EncodeJob.strBlockRow(0, seq, c, buf, textual = true)
+        } else EncodeJob.intBlockRow(0, seq, c, vs.map(_.fold(0L)(_.asInstanceOf[Long])).toArray,
+          vs.map(_.isDefined).toArray, vs.size, graft.core.PhysicalIntType.I64)
+      }
+      val rollup = new PartRollup()
+      rows.foreach(rollup.add)
+      val part = rollup.entry(0, "d").stats.get.columns(c)
+      val (leaves, _) = FilterConversion.toLeaves(f, statsSchema)
+      leaves.nonEmpty && leaves.forall { leaf =>
+        rows.forall { b =>
+          val kept = ExactFilter.select(Seq(leaf), b.n,
+            _ => graft.codec.StringBlockCodec.decodeSlices(b.encoded),
+            _ => graft.codec.IntBlockCodec.decodeNullable(b.encoded))
+          val ok = kept.isEmpty ||
+            (leaf.statsTest(DecodeJob.groupStats(b)) && leaf.statsTest(part))
+          if (!ok) println(s"counterexample $f -> $leaf keeps rows $kept of block ${b.block_seq} " +
+            s"of $blocks; group ${DecodeJob.groupStats(b)}, part $part")
+          ok
+        }
+      }
+    })
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
+
   // ---------------- literal-stable code ----------------
 
   private lazy val lookupRoot: String = {
@@ -380,10 +458,10 @@ class ExactFilterSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 }
 
 object ExactFilterSpec {
-  /** One conjunct: its SQL, whether the scan claims it, and its
-    * [[DecodeJob.BlockPredicate]] form when it has one. */
+  /** One conjunct: its SQL, whether the scan claims it, and its decode-API
+    * form ([[DecodeJob.StrEq]] and the others) when it has one. */
   final case class Leaf(sql: String, claimed: Boolean,
-      block: Option[DecodeJob.BlockPredicate] = None) {
+      block: Option[ExactFilter] = None) {
     override def toString: String = sql
   }
 
