@@ -16,12 +16,12 @@ import graft.sources.v2.ExactFilter
  * Every decode here is the V2 scan (`spark.read.format("graft")`,
  * [[graft.sources.v2.GraftScan]]): each task reads whole block files, so a
  * block group never straddles a task and the scan needs no shuffle and no
- * split repair. A predicate is an [[ExactFilter]] leaf; its row form goes to
- * the scan as an ordinary filter, which the scan converts back to the same
- * leaf, prunes groups with ([[planPrunedKeys]]) and evaluates itself on the
- * decoded rows. Building a decode runs no Spark job; the scan is planned at
- * the first action, on the driver: from the manifest's part stats, then from
- * the footers of the surviving multi-group parts, one read per file.
+ * split repair. A predicate is an [[ExactFilter]] leaf. Its Spark `Column`
+ * form filters the scan, which converts the pushed filters back into leaves,
+ * prunes groups with them ([[planPrunedKeys]]) and evaluates them itself on
+ * the decoded rows. Building a decode runs no Spark job; the scan is planned
+ * at the first action, on the driver: from the manifest's part stats, then
+ * from the footers of the surviving multi-group parts, one read per file.
  * Planning runs no Spark job either.
  */
 object DecodeJob {
