@@ -455,26 +455,20 @@ object SparkEntry {
       df
     }),
 
-    // the opt-in COLUMNAR V2 read path, driver-oracled: batches fill
-    // OnHeapColumnVectors per block group and feed ColumnarToRow (plan-proven
-    // in-query); rows are materialized inside the conf scope and returned as a
-    // local relation so the driver's write replans nothing under the flag
+    // the V2 row reader, driver-oracled: the scan claims the url prefix
+    // (ExactFilters), so no Filter node evaluates it above the scan; the
+    // prefix bounds the read to 100 rows at any sf
     "q_dsv2_columnar" -> ((s, d) => {
-      import s.implicits._
       val root = encodedDocsStore(s, d)
-      s.conf.set("spark.graft.v2.columnar", "true")
-      try {
-        // BOUNDED driver materialization (100 rows at any sf): rows must be
-        // collected inside the conf scope, and an unfiltered collect would be
-        // the one unbounded driver pull in the whole contract
-        val df = s.read.format("graft").load(root)
-          .where(col("url").startsWith("doc://000001"))
-          .select(col("url"), unix_seconds(col("warc_ts")).as("ts_s"), col("lang"))
-        require(df.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-          "columnar conf must route the scan through ColumnarBatches")
-        df.collect().toSeq.map(r => (r.getString(0), r.getLong(1), r.getString(2)))
-          .toDF("url", "ts_s", "lang")
-      } finally s.conf.unset("spark.graft.v2.columnar")
+      val df = s.read.format("graft").load(root)
+        .where(col("url").startsWith("doc://000001"))
+        .select(col("url"), unix_seconds(col("warc_ts")).as("ts_s"), col("lang"))
+      val plan = df.queryExecution.executedPlan
+      val claimed = "ExactFilters: \\[(.*?)\\]".r.findFirstMatchIn(plan.toString).map(_.group(1))
+      require(claimed.exists(_.contains("startswith(url, 'doc://000001')")) &&
+        plan.collect { case f: org.apache.spark.sql.execution.FilterExec => f }.isEmpty,
+        s"the scan must claim the url prefix, leaving no Filter above it:\n$plan")
+      df
     }),
 
     // url-prefix block pruning on the decoded-view API (the most common

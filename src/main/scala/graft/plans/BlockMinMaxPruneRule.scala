@@ -21,8 +21,11 @@ import graft.functions.{GraftDecode, GraftDecodeStr}
  *    string blocks (e.g. `lang`)
  *
  * For a filter conjunct of the shape `array_contains(graft_decode(encoded), lit)`
- * (or `graft_decode_str`), this rule conjoins the matching metadata bounds, which
- * Parquet then prunes with row-group statistics BEFORE any block is decompressed.
+ * (or `graft_decode_str`), this rule conjoins the matching metadata bounds ahead of
+ * it, so a block whose bounds exclude the literal fails the cheap conjunct and
+ * `And` skips its decode. The block view (`DecodeJob.blocks`, a
+ * `NativeBlocksRelation`) applies only `column` filters and still reads every
+ * selected block: the conjuncts save decode work, not I/O.
  *
  * Soundness: every added conjunct is null-safe — a null bound (missing metadata)
  * passes via IsNull, so the rewrite is purely pruning (value ∈ block ⇒ value within
@@ -91,7 +94,7 @@ object BlockMinMaxPruneRule extends Rule[LogicalPlan] with PredicateHelper {
         if (extra.isEmpty) f
         // PREPEND the cheap metadata conjuncts: And evaluates left-to-right, so a
         // metadata miss short-circuits before the original predicate decompresses
-        // the block (rows not pruned by parquet row-group stats still skip decode)
+        // the block
         else Filter(extra.foldRight(cond)((e, acc) => And(e, acc)), child)
       }
   }

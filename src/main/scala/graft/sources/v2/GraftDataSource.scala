@@ -186,7 +186,7 @@ object GraftDataSource {
   private[v2] def packPartitions(spark: SparkSession, root: String,
       entries: Seq[SnapshotStore.PartEntry], readSchema: StructType,
       refColumn: String, keys: Option[Array[(Int, Int)]],
-      columnar: Boolean, limit: Int): (Array[InputPartition], Int) = {
+      limit: Int): (Array[InputPartition], Int) = {
     val keyParts: Option[Set[Int]] = keys.map(_.iterator.map(_._1).toSet)
     val packedKeys = keys.map(_.map(k => DecodeJob.packKey(k._1, k._2)).sorted)
     // manifest-level file pruning: a part this scan reads no group of is
@@ -214,7 +214,7 @@ object GraftDataSource {
     val partitions: Array[InputPartition] = bins.map { b =>
       GraftInputPartition(b.map(_._2).toArray, b.map(_._1.fileLen).toArray, readSchema,
         refColumn, packedKeys.map(keysOfParts(_, b.map(_._1.partId).sorted.toArray)).orNull,
-        columnar, limit)
+        limit)
     }.toArray
     (partitions, files.length)
   }
@@ -319,7 +319,7 @@ final class GraftTable(root: String) extends Table with SupportsRead
 
   // ---- SQL UPDATE / MERGE INTO / inexpressible DELETE: group-based
   // copy-on-write ReplaceData (see GraftRowLevelOps.scala). Exact DELETEs are
-  // converted BACK to the metadata-only deleteWhere path below by Spark's
+  // converted BACK to the deleteWhere path below by Spark's
   // OptimizeMetadataOnlyDeleteFromTable rule ----
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
@@ -333,13 +333,14 @@ final class GraftTable(root: String) extends Table with SupportsRead
     () => new GraftRowLevelOperation(root, info.command())
   }
 
-  // ---- metadata-only DELETE (SupportsDelete): see graft.jobs.DeleteJob ----
+  // ---- DELETE (SupportsDelete): graft.jobs.DeleteJob picks the affected
+  // parts from metadata, then decodes and re-encodes their surviving rows ----
 
   /** Accept only conditions expressible EXACTLY over the decoded view — an
     * inexact condition would delete wrong rows (pruning, by contrast, is free
     * to be a superset because reads evaluate every filter exactly after it). */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    isWebtext && // the metadata-only DELETE rides the webtext decode job
+    isWebtext && // DeleteJob rewrites parts through the webtext decode job
       filters.forall(f => FilterConversion.toExactColumn(f, tableSchema).isDefined)
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
@@ -930,23 +931,11 @@ final class GraftScan(root: String, snapshotId: Option[Long],
     * footers with them, and the readers open block files with them. */
   private lazy val settings = HadoopSettings(SparkSession.active)
 
-  /** `spark.graft.v2.columnar`, read once per scan. */
-  private lazy val columnar: Boolean =
-    SparkSession.active.conf.getOption("spark.graft.v2.columnar") match {
-      case None => false
-      case Some(v) if v.equalsIgnoreCase("true") => true
-      case Some(v) if v.equalsIgnoreCase("false") => false
-      case Some(v) => throw new IllegalArgumentException(
-        s"spark.graft.v2.columnar must be true or false, got '$v'")
-    }
-
-  /** Decided by the conf, not by the planned partitions, so a scan whose
-    * pruning keeps no group plans the same way as one that keeps some. The
-    * metadata column rides the row path ([[GraftReaderFactory.supportColumnarReads]]). */
+  /** Always row-based. Spark's default, `PARTITION_DEFINED`, makes
+    * `DataSourceV2ScanExecBase.supportsColumnar` ask every input partition,
+    * which would plan the partitions before runtime filters arrive. */
   override def columnarSupportMode(): Scan.ColumnarSupportMode =
-    if (columnar && !requiredSchema.fieldNames.contains("_part_id"))
-      Scan.ColumnarSupportMode.SUPPORTED
-    else Scan.ColumnarSupportMode.UNSUPPORTED
+    Scan.ColumnarSupportMode.UNSUPPORTED
 
   override def readSchema(): StructType = requiredSchema
 
@@ -1021,8 +1010,7 @@ final class GraftScan(root: String, snapshotId: Option[Long],
           t.column, t.asc, t.nullsFirst, t.limit, intBounds)
       }
     val (partitions, fileCount) = GraftDataSource.packPartitions(spark, root, entries,
-      requiredSchema, tableSchema.fields.head.name, keys, columnar,
-      pushedLimit.getOrElse(-1))
+      requiredSchema, tableSchema.fields.head.name, keys, pushedLimit.getOrElse(-1))
     (partitions, GraftDataSource.PlanStats(partitions.length, fileCount,
       preds.size, keys.map(_.length), pushedLimit, pushedTopN))
   }
@@ -1047,11 +1035,12 @@ final class GraftScan(root: String, snapshotId: Option[Long],
   }
 }
 
-/** A bin of whole native block files; groups are whole within each file by
-  * construction. Spark serializes every partition once per task, so it holds
-  * only what its files need: their paths and manifest lengths (a file's name
-  * carries its one part), the scan's planned keys of those parts, and no
-  * Hadoop conf (the settings ride the [[GraftReaderFactory]]). */
+/** A bin of whole native block files, read by one [[GraftPartitionReader]];
+  * groups are whole within each file by construction. Spark serializes every
+  * partition once per task, so it holds only what its files need: their paths
+  * and manifest lengths (a file's name carries its one part), the scan's
+  * planned keys of those parts, and no Hadoop conf (the settings ride the
+  * [[GraftReaderFactory]]). */
 final case class GraftInputPartition(
     files: Array[String],
     fileLens: Array[Long],           // each file's length, from the manifest
@@ -1060,7 +1049,6 @@ final case class GraftInputPartition(
     // sorted planned (part_id<<32|seq) keys of the files' parts, or null = no
     // pruning
     keys: Array[Long],
-    columnar: Boolean,
     limit: Int = -1) extends InputPartition { // pushed per-task row cap; -1 = none
   def columns: Array[String] = readSchema.fieldNames
 }
@@ -1071,28 +1059,13 @@ final case class GraftInputPartition(
   * broadcast: each reader opens its block files ([[BlockGroupStream]])
   * from Spark's per-JVM Hadoop conf when that already holds them, else from
   * one overlaid copy per task. Settings from XML resources are the
-  * executor's own, as for any Hadoop client. `filters` are the batch scan's
-  * claimed filters; the copy-on-write and streaming scans claim none. */
+  * executor's own, as for any Hadoop client. Every partition is read by a
+  * [[GraftPartitionReader]]. `filters` are the batch scan's claimed filters;
+  * the copy-on-write and streaming scans claim none. */
 final case class GraftReaderFactory(settings: HadoopSettings, filters: Seq[ExactFilter] = Nil)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new GraftPartitionReader(partition.asInstanceOf[GraftInputPartition], settings.conf(),
-      filters)
-
-  // columnar is a per-scan choice (spark.graft.v2.columnar): copying multi-KB
-  // text/html blobs into ColumnVectors measurably LOSES to the row path's
-  // zero-copy UTF8String wrapping on this workload, while narrow projections
-  // are comparable — see BASELINE.md round-4 notes
-  override def supportColumnarReads(partition: InputPartition): Boolean = {
-    val p = partition.asInstanceOf[GraftInputPartition]
-    // the metadata column rides the row path (constant-per-group; not worth a
-    // dedicated vector fill in the opt-in columnar reader)
-    p.columnar && !p.columns.contains("_part_id")
-  }
-
-  override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new GraftColumnarReader(partition.asInstanceOf[GraftInputPartition], settings.conf(),
       filters)
 }
 
@@ -1218,10 +1191,9 @@ private object BlockGroupStream {
   }
 }
 
-/** Row-based reader over [[BlockGroupStream]] — the DEFAULT path (measured
-  * 2× faster than columnar on blob-heavy scans via zero-copy UTF8String;
-  * [[GraftColumnarReader]] is the opt-in alternative). Each group's filter
-  * columns are decoded first; a group with no matching row is skipped before
+/** The reader of every block-file scan: rows over [[BlockGroupStream]], with
+  * string values wrapping the decode buffer as zero-copy `UTF8String`s.
+  * Each group's filter columns are decoded first; a group with no matching row is skipped before
   * any other column is decoded, and rows are built for the matches only. */
 final class GraftPartitionReader(p: GraftInputPartition, conf: Configuration,
     filters: Seq[ExactFilter] = Nil) extends PartitionReader[InternalRow] {
@@ -1302,176 +1274,4 @@ final class GraftPartitionReader(p: GraftInputPartition, conf: Configuration,
 
   override def get(): InternalRow = current
   override def close(): Unit = stream.close()
-}
-
-/**
- * Columnar reader: each 64Ki-row block group becomes ONE ColumnarBatch —
- * decoded column arrays fill OnHeapColumnVectors directly (no per-row
- * InternalRow/boxing), and Spark's ColumnarToRow/WholeStageCodegen consumes
- * the batch with vectorized access. As in the row reader, the claimed
- * filters select a group's rows first, and only those fill the vectors.
- */
-object GraftColumnarReader {
-  /** Per-batch byte ceiling per column — `private[v2]` var so tests can force
-    * the group-splitting path without a multi-GB fixture. */
-  private[v2] var MaxBatchColumnBytes: Long = 256L << 20
-}
-
-final class GraftColumnarReader(p: GraftInputPartition, conf: Configuration,
-    filters: Seq[ExactFilter] = Nil)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
-
-  private val stream = {
-    val (readCols, countOnly) = BlockGroupStream.readColumns(p, filters)
-    new BlockGroupStream(p, conf, readCols, countOnly)
-  }
-  // single source of truth for field types: the scan's read schema (pruned
-  // from the store's persisted schema)
-  private val schema: StructType = p.readSchema
-
-  /** Per-batch byte ceiling per column: OnHeapColumnVector backs variable-width
-    * values with ONE contiguous byte array (hard ~2GB JVM limit), so a 64Ki-row
-    * group of huge blobs must split across batches. */
-  private def maxBatchColumnBytes: Long = GraftColumnarReader.MaxBatchColumnBytes
-
-  private var current: ColumnarBatch = _
-  private var pendingBatches: Iterator[ColumnarBatch] = Iterator.empty
-  private var done = false
-  private var produced = 0L
-
-  /** Decode a group into one or more batches (split when any column's decoded
-    * bytes would exceed [[MaxBatchColumnBytes]] in one contiguous child). */
-  private def toBatches(gd: BlockGroupStream#GroupData): Iterator[ColumnarBatch] = {
-    val cols = new BlockGroupStream.Decoded(gd.cols)
-    val sel = cols.select(filters, gd.n)
-    // output position k holds the group's row `row(k)`
-    val rows = if (sel == null) gd.n else sel.length
-    @inline def row(k: Int): Int = if (sel == null) k else sel(k)
-    if (rows == 0) return Iterator.empty
-    if (p.columns.isEmpty)
-      return Iterator.single(new ColumnarBatch(Array.empty[ColumnVector], rows))
-    @inline def isIntFamily(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-      case TimestampType | LongType | IntegerType | ShortType | ByteType => true
-      case _ => false
-    }
-    val decodedStr: Map[String, StringBlockCodec.Slices] =
-      schema.fields.iterator.filterNot(f => isIntFamily(f.dataType))
-        .map(f => f.name -> cols.strings(f.name)).toMap
-    val decodedInt: Map[String, (Array[Long], Array[Boolean])] =
-      schema.fields.iterator.filter(f => isIntFamily(f.dataType))
-        .map(f => f.name -> cols.longs(f.name)).toMap
-    // worst per-row byte estimate over string/binary columns drives the split
-    val colBytes: Map[String, Long] =
-      decodedStr.map { case (c, vs) =>
-        var t = 0L; var k = 0
-        while (k < rows) { t += math.max(vs.lens(row(k)), 0); k += 1 }
-        c -> t
-      }
-    val maxCol = if (colBytes.isEmpty) 0L else colBytes.values.max
-    val slices: Seq[(Int, Int)] =
-      if (maxCol <= maxBatchColumnBytes) Seq((0, rows))
-      else {
-        // slice on ACTUAL per-row bytes, not the mean: a skewed group (one run
-        // of giant blobs among small rows) sliced by maxCol/n can still pack
-        // >2GiB into one slice — total.toInt then goes negative, the reserve is
-        // skipped, and putByteArray growth dies at the 2GiB child-array limit
-        val strCols = decodedStr.values.toArray
-        val out = scala.collection.mutable.ArrayBuffer[(Int, Int)]()
-        val run = new Array[Long](strCols.length)
-        var start = 0
-        var k = 0
-        while (k < rows) {
-          val i = row(k)
-          var overflow = false
-          var c = 0
-          while (c < strCols.length && !overflow) {
-            if (run(c) + math.max(strCols(c).lens(i), 0) > maxBatchColumnBytes)
-              overflow = true
-            c += 1
-          }
-          if (overflow && k > start) { // a single over-ceiling row still gets its own slice
-            out += ((start, k)); start = k; java.util.Arrays.fill(run, 0L)
-          }
-          c = 0
-          while (c < strCols.length) {
-            run(c) += math.max(strCols(c).lens(i), 0); c += 1
-          }
-          k += 1
-        }
-        out += ((start, rows))
-        out.toSeq
-      }
-    slices.iterator.map { case (from, until) =>
-      val n = until - from
-      val vectors = OnHeapColumnVector.allocateColumns(n, schema)
-      var j = 0
-      while (j < p.columns.length) {
-        val vec = vectors(j)
-        val f = schema.fields(j)
-        f.dataType match {
-          case TimestampType | LongType | IntegerType | ShortType | ByteType =>
-            val (vals, ok) = decodedInt(f.name)
-            val put: (Int, Long) => Unit = f.dataType match {
-              case IntegerType => (i, v) => vec.putInt(i, v.toInt)
-              case ShortType => (i, v) => vec.putShort(i, v.toShort)
-              case ByteType => (i, v) => vec.putByte(i, v.toByte)
-              case _ => (i, v) => vec.putLong(i, v)
-            }
-            var i = 0
-            while (i < n) {
-              val r = row(from + i)
-              if (ok(r)) put(i, vals(r)) else vec.putNull(i)
-              i += 1
-            }
-          case _ =>
-            val c = f.name
-            val vs = decodedStr(c)
-            // one upfront child reserve: per-value growth doubles-and-copies
-            // the contiguous array ~a dozen times per multi-MB column otherwise
-            var total = 0L; var i = 0
-            while (i < n) { total += math.max(vs.lens(row(from + i)), 0); i += 1 }
-            // slicing bounds total at max(maxBatchColumnBytes, one row); only a
-            // misconfigured >2GiB MaxBatchColumnBytes can breach — fail loudly,
-            // a negative toInt here would skip the reserve and corrupt later
-            require(total <= Int.MaxValue, s"columnar batch column '$c' needs " +
-              s"$total contiguous bytes (> 2GiB JVM array limit); lower " +
-              "GraftColumnarReader.MaxBatchColumnBytes or use the row path")
-            vec.arrayData().reserve(total.toInt)
-            i = 0
-            // copied straight from the block's one decode buffer
-            while (i < n) {
-              val r = row(from + i)
-              val len = vs.lens(r)
-              if (len < 0) vec.putNull(i) else vec.putByteArray(i, vs.buf, vs.offs(r), len)
-              i += 1
-            }
-        }
-        j += 1
-      }
-      new ColumnarBatch(vectors.map(v => v: ColumnVector), n)
-    }
-  }
-
-  override def next(): Boolean = {
-    if (current != null) { current.close(); current = null }
-    // pushed limit: whole batches only (the limit is partial — Spark trims)
-    if (p.limit >= 0 && produced >= p.limit) return false
-    while (!pendingBatches.hasNext) {
-      if (done) return false
-      val gd = stream.nextGroup()
-      if (gd == null) { done = true; return false }
-      pendingBatches = toBatches(gd)
-    }
-    current = pendingBatches.next()
-    produced += current.numRows()
-    true
-  }
-
-  override def get(): ColumnarBatch = current
-  override def close(): Unit = {
-    if (current != null) { current.close(); current = null }
-    stream.close()
-  }
 }

@@ -187,9 +187,8 @@ final class GraftMicroBatchStream(root: String,
       val parts: Array[InputPartition] =
         if (entries.isEmpty) Array.empty
         else {
-          // row path only (batch-sized ColumnarBatches buy nothing on micro-batches)
           val (p, f) = GraftDataSource.packPartitions(spark, root, entries,
-            readSchema, refColumn, keys = keysOpt, columnar = false, limit = -1)
+            readSchema, refColumn, keys = keysOpt, limit = -1)
           GraftDataSource.recordPlanStats(root, GraftDataSource.PlanStats(
             p.length, f, predicates.size, keysOpt.map(_.length)))
           p

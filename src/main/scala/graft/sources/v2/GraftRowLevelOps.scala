@@ -14,7 +14,7 @@ import graft.sources.SnapshotStore
 
 /**
  * Group-based copy-on-write row-level operations (Iceberg-style COW): SQL
- * `UPDATE`, `MERGE INTO`, and `DELETE FROM` with conditions the metadata-only
+ * `UPDATE`, `MERGE INTO`, and `DELETE FROM` with conditions the
  * [[graft.jobs.DeleteJob]] path cannot express exactly.
  *
  * Spark rewrites the command into a `ReplaceData` plan:
@@ -50,8 +50,9 @@ import graft.sources.SnapshotStore
  *
  * Exactness: DELETE with a condition expressible exactly over the decoded
  * view never reaches this path — Spark's `OptimizeMetadataOnlyDeleteFromTable`
- * converts it back to [[GraftTable.deleteWhere]] (the metadata-only DeleteJob
- * fast path). UPDATE/MERGE and inexpressible DELETEs run the full
+ * converts it back to [[GraftTable.deleteWhere]] ([[graft.jobs.DeleteJob]]:
+ * the affected parts are chosen from metadata, and their surviving rows are
+ * decoded and re-encoded). UPDATE/MERGE and inexpressible DELETEs run the full
  * read-rewrite-replace cycle below.
  */
 final class GraftRowLevelOperation(root: String,
@@ -164,10 +165,11 @@ final class GraftCowScan(root: String, op: GraftRowLevelOperation,
 
   /** Manifest entries + statically affected parts, computed ONCE per
     * statement: `BatchScanExec` plans twice (eagerly before runtime filters,
-    * again after `filter()` delivered them), and the part pruning (a Spark
-    * job when level 1 cannot answer) plus the manifest read depend only on
-    * immutable inputs — re-running them on the second planning would double
-    * driver-side planning cost for nothing. (Also keeps both plannings on ONE snapshot: a compaction
+    * again after `filter()` delivered them), and the part pruning (planned
+    * on the driver from manifest stats and, for multi-group parts, their
+    * footers) plus the manifest read depend only on immutable inputs —
+    * re-running them on the second planning would double driver-side
+    * planning cost for nothing. (Also keeps both plannings on ONE snapshot: a compaction
     * committing between them could otherwise shift the entry set.) */
   private lazy val staticPlan: (Seq[SnapshotStore.PartEntry], Set[Int]) = {
     val entries = SnapshotStore.currentEntries(root)
@@ -188,7 +190,7 @@ final class GraftCowScan(root: String, op: GraftRowLevelOperation,
     val cowEntries = entries.filter(e => affected(e.partId))
     if (cowEntries.isEmpty) return Array.empty
     GraftDataSource.packPartitions(SparkSession.active, root, cowEntries,
-      requiredSchema, "url", None, columnar = false, limit = -1)._1
+      requiredSchema, "url", None, limit = -1)._1
   }
 
   // the session's Hadoop settings, read once per statement however often

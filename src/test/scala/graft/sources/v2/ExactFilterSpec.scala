@@ -19,8 +19,7 @@ import graft.sources.{WebPage, Webtext}
  * leaf prunes with:
  *  - property: random conjunctions of claimed and residual leaves give the
  *    rows the same SQL gives over a parquet copy of the pages, through the
- *    row reader, the columnar reader, `count(*)`, `LIMIT n` and
- *    [[DecodeJob.decodeWhere]];
+ *    scan's row reader, `count(*)`, `LIMIT n` and [[DecodeJob.decodeWhere]];
  *  - a query that differs from the last only in its literals compiles no
  *    code, and its plan holds no `FilterExec`;
  *  - metadata answers (manifest aggregates, [[graft.plans.GroupedAggMetadataRule]])
@@ -192,7 +191,7 @@ class ExactFilterSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private val Cols = "url, unix_micros(warc_ts) AS ts, text, lang"
 
-  /** The five read forms of one case, each against the parquet copy; the
+  /** The four read forms of one case, each against the parquet copy; the
     * failures, empty when the case holds. */
   private def failures(c: Case): Seq[String] = withConf(
       "spark.sql.datetime.java8API.enabled" -> c.java8.toString,
@@ -209,16 +208,6 @@ class ExactFilterSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     if (c.leaves.forall(_.claimed))
       expect("no residual", filterExecs(rowRead).isEmpty,
         s"every leaf is claimed, yet the plan filters:\n${rowRead.queryExecution.executedPlan}")
-
-    withConf("spark.graft.v2.columnar" -> "true") {
-      val df = spark.sql(s"SELECT $Cols FROM g WHERE ${c.cond}")
-      // (Spark may fold a contradiction into an empty relation: no scan then)
-      val plan = df.queryExecution.executedPlan.toString
-      expect("columnar plan", !plan.contains("BatchScan") || plan.contains("ColumnarToRow"),
-        s"no ColumnarToRow:\n${df.queryExecution.executedPlan}")
-      val got = rowsOf(df)
-      expect("columnar reader", got == want, s"${got.size} rows, parquet ${want.size}")
-    }
 
     val count = spark.sql(s"SELECT count(*) FROM g WHERE ${c.cond}").head().getLong(0)
     expect("count(*)", count == want.size, s"$count, parquet ${want.size}")
@@ -313,9 +302,6 @@ class ExactFilterSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     for (cond <- conds) {
       val want = rowsOf(spark.sql(s"SELECT * FROM pq_int WHERE $cond"))
       assert(rowsOf(spark.sql(s"SELECT * FROM $t WHERE $cond")) == want, cond)
-      withConf("spark.graft.v2.columnar" -> "true") {
-        assert(rowsOf(spark.sql(s"SELECT * FROM $t WHERE $cond")) == want, s"columnar: $cond")
-      }
       assert(spark.sql(s"SELECT count(*) FROM $t WHERE $cond").head().getLong(0) == want.size,
         s"count: $cond")
     }

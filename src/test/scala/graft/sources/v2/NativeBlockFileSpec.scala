@@ -252,7 +252,7 @@ class NativeBlockFileSpec extends AnyFunSuite {
       GraftDataSource.PageSchema.fields.filter(f => cols.contains(f.name)))
     def readAll(cols: org.apache.spark.sql.types.StructType): Int = {
       val r = new GraftPartitionReader(GraftInputPartition(Array(f.toString), Array(len), cols,
-        "url", null, columnar = false), conf)
+        "url", null), conf)
       try { var n = 0; while (r.next()) n += 1; n } finally r.close()
     }
     val err = intercept[java.io.IOException](readAll(only("url", "lang")))

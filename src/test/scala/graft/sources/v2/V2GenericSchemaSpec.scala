@@ -182,7 +182,7 @@ class V2GenericSchemaSpec extends AnyFunSuite {
       spark.sql("SELECT count(big) AS c, max(big) AS m FROM generic_ov_src").collect()(0))
   }
 
-  test("columnar read path serves generic int/short/byte columns exactly") {
+  test("row reader serves generic int/short/byte columns exactly") {
     val root = tmp()
     spark.sql(s"CREATE TABLE graftcat.`$root` " +
       "(host string, id bigint, score int, tiny tinyint, small smallint) USING graft")
@@ -194,12 +194,9 @@ class V2GenericSchemaSpec extends AnyFunSuite {
       .createOrReplaceTempView("generic_col_src")
     spark.sql(s"INSERT INTO graftcat.`$root` SELECT * FROM generic_col_src")
     val want = spark.table("generic_col_src").collect().map(_.toString).sorted.toSeq
-    spark.conf.set("spark.graft.v2.columnar", "true")
-    try {
-      val got = spark.sql(s"SELECT host, id, score, tiny, small FROM graftcat.`$root`")
-        .collect().map(_.toString).sorted.toSeq
-      assert(got == want, "columnar decode must equal the source for every int width")
-    } finally spark.conf.unset("spark.graft.v2.columnar")
+    val got = spark.sql(s"SELECT host, id, score, tiny, small FROM graftcat.`$root`")
+      .collect().map(_.toString).sorted.toSeq
+    assert(got == want, "the decode must equal the source for every int width")
   }
 
   test("a schema with NO string column lays out on its first (int) column") {

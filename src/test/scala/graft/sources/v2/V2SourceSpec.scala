@@ -518,39 +518,27 @@ class V2SourceSpec extends AnyFunSuite {
     assert(row.length == 1 && row(0).getString(0) == one.lang)
   }
 
-  test("opt-in COLUMNAR scans: batches feed ColumnarToRow, values stay exact") {
-    // columnar is opt-in (measured: copying multi-KB blobs into vectors loses
-    // 2x to zero-copy row wrapping on full scans; narrow projections are ~even)
-    spark.conf.set("spark.graft.v2.columnar", "true")
+  test("row reader: exact values, never ColumnarToRow") {
     graftTable.createOrReplaceTempView("graft_count_cols_v2")
-    try {
-      val df = graftTable.select(col("url"), col("lang"))
+    def full(t: DataFrame) = t.select(col("url"), unix_micros(col("warc_ts")).as("ts"),
+      md5(col("html")).as("h"), col("text"))
+    // equality incl. the nullable warc_ts and the binary html column
+    val want = sortedRows(full(written))
+    assert(sortedRows(full(graftTable)) == want)
+    // a zero-width projection (constant select) counts every row
+    assert(spark.sql("SELECT 1 FROM graft_count_cols_v2").count() == N)
+    // every graft scan is row-based, and the removed columnar key is inert
+    def rowBased(): Unit = Seq(graftTable.select(col("url")), full(graftTable),
+        spark.sql("SELECT 1 FROM graft_count_cols_v2")).foreach { df =>
       val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("ColumnarToRow"),
-        s"scan must produce ColumnarBatches consumed via ColumnarToRow:\n$plan")
-      // equality through the columnar path incl. nullable warc_ts + binary html
-      val full = graftTable.select(col("url"), unix_micros(col("warc_ts")).as("ts"),
-        md5(col("html")).as("h"), col("text"))
-      val want = sortedRows(written
-        .select(col("url"), unix_micros(col("warc_ts")).as("ts"),
-          md5(col("html")).as("h"), col("text")))
-      assert(sortedRows(full) == want)
-      // empty-projection (constant select) through the zero-column batch path
-      assert(spark.sql("SELECT 1 FROM graft_count_cols_v2").count() == N)
-      // forced group splitting: a tiny per-column byte ceiling must slice every
-      // group into many batches with identical results (the 2GB-contiguous
-      // OnHeapColumnVector guard at scale)
-      val saved = GraftColumnarReader.MaxBatchColumnBytes
-      try {
-        GraftColumnarReader.MaxBatchColumnBytes = 4096L
-        val sliced = graftTable.select(col("url"), unix_micros(col("warc_ts")).as("ts"),
-          md5(col("html")).as("h"), col("text"))
-        assert(sortedRows(sliced) == want, "split batches must lose/duplicate nothing")
-      } finally GraftColumnarReader.MaxBatchColumnBytes = saved
+      assert(!plan.contains("ColumnarToRow"), s"graft scans must be row-based:\n$plan")
+    }
+    rowBased()
+    spark.conf.set("spark.graft.v2.columnar", "true")
+    try {
+      rowBased()
+      assert(sortedRows(full(graftTable)) == want)
     } finally spark.conf.unset("spark.graft.v2.columnar")
-    // default stays ROW-based (no ColumnarToRow over the graft scan)
-    val rowPlan = graftTable.select(col("url")).queryExecution.executedPlan.toString
-    assert(!rowPlan.contains("ColumnarToRow"), s"default must be row-based:\n$rowPlan")
   }
 
   test("pruning survives >4096 surviving groups (per-partition key slices)") {
@@ -590,10 +578,6 @@ class V2SourceSpec extends AnyFunSuite {
     // it, so results must still be exact
     val filtered = graftTable.where(col("lang") === "en").limit(50)
     assert(filtered.count() == 50)
-    // columnar path honors the cap at batch granularity
-    spark.conf.set("spark.graft.v2.columnar", "true")
-    try assert(graftTable.limit(777).count() == 777)
-    finally spark.conf.unset("spark.graft.v2.columnar")
   }
 
   test("top-n pushdown: ORDER BY url LIMIT n prunes to a url-prefix of groups") {
